@@ -194,7 +194,7 @@ def entry(spark: SparkSession) -> DataFrame:
 #: table-side consumer: rel=canonical alias families collapsed in one
 #: keyed aggregate with a conditional-MIN keeper election and planted
 #: missing-canonical fallbacks) takes the slot of q_dedup_containment
-#: (untouched, driver-green r07; its shared `_pair_intersections_from`
+#: (untouched, oracle-green since r07; its shared `_pair_intersections`
 #: candidate core stays double-gated via q_minhash_calibration and
 #: q_minhash_band_tuning). q_postings_compression (LEB128 delta-gap
 #: index-size audit per df power-of-two class — the shared

@@ -53,7 +53,7 @@ def dedup_rates(spark, docs):
         .distinct()
         .count()
     )
-    shingles = _persist(_shingles_from(docs.select("doc_id", "text")))
+    shingles = _shingles_from(docs.select("doc_id", "text"))
     vpairs = _persist(_verified_pairs_from(shingles))
     n_pairs = vpairs.count()
     near_docs = (

@@ -70,7 +70,7 @@ def curate(
             & (F.col("alpha_ratio") >= min_alpha)
         ).drop("alpha_ratio")
     )
-    shingles = _persist(_shingles_from(gated.select("doc_id", "text")))
+    shingles = _shingles_from(gated.select("doc_id", "text"))
     vpairs = _verified_pairs_from(shingles)
     labels = _connected_components(spark, vpairs.select("a", "b"))
     labeled = gated.join(

@@ -125,14 +125,13 @@ def near_dup_keep_best(spark, docs):
     BEST-QUALITY keeper per cluster (longest cleaned doc, doc_id
     tie-break) — the q_dedup_clusters_best rule on the job's cleaned
     text."""
-    from readembedability_spark.queries import _persist
     from readembedability_spark.textops import (
         _connected_components,
         _shingles_from,
         _verified_pairs_from,
     )
 
-    shingles = _persist(_shingles_from(docs.select("doc_id", "text")))
+    shingles = _shingles_from(docs.select("doc_id", "text"))
     vpairs = _verified_pairs_from(shingles)
     labels = _connected_components(spark, vpairs.select("a", "b"))
     labeled = docs.join(

@@ -190,6 +190,19 @@ def _shingles_df(spark, sf_dir):
 #: keeper) while keeping output linear in bucket size beyond the cap.
 _MAX_BUCKET_IDS = 64
 
+#: Oracle CTE pair `hashes(doc_id, i, mh)` → `bands(doc_id, band,
+#: band_sig)` over `shingles`: the hash family and band split the
+#: Spark side computes in _minhash_minima + _lsh_bands.
+_MINHASH_BANDS_SQL = f"""hashes AS (
+      SELECT doc_id, i,
+             MIN(substr(md5(sh), i * 4 + 1, 4)) AS mh
+      FROM shingles CROSS JOIN generate_series(0, {_N_MINHASH - 1}) t(i)
+      GROUP BY doc_id, i),
+    bands AS (
+      SELECT doc_id, i // {_N_MINHASH // _N_BANDS} AS band,
+             string_agg(mh, ',' ORDER BY i) AS band_sig
+      FROM hashes GROUP BY doc_id, band)"""
+
 #: Reusable CTE chain ending in `cand(a, b)` — the capped MinHash-LSH
 #: candidate pairs (consumed by q_minhash_lsh and q_dedup_lsh_verified).
 #: The ranked/ROW_NUMBER formulation is value-equivalent to the Spark
@@ -199,15 +212,7 @@ _MAX_BUCKET_IDS = 64
 def _minhash_cand_sql(src: str) -> str:
     return f"""
     {_shingles_sql(src)},
-    hashes AS (
-      SELECT doc_id, i,
-             MIN(substr(md5(sh), i * 4 + 1, 4)) AS mh
-      FROM shingles CROSS JOIN generate_series(0, {_N_MINHASH - 1}) t(i)
-      GROUP BY doc_id, i),
-    bands AS (
-      SELECT doc_id, i // {_N_MINHASH // _N_BANDS} AS band,
-             string_agg(mh, ',' ORDER BY i) AS band_sig
-      FROM hashes GROUP BY doc_id, band),
+    {_MINHASH_BANDS_SQL},
     ranked AS (
       SELECT doc_id, band, band_sig,
              ROW_NUMBER() OVER (PARTITION BY band, band_sig
@@ -239,67 +244,55 @@ def q_minhash_lsh(spark, sf_dir):
     degenerate-bucket cap (_MAX_BUCKET_IDS). Hash family = the 8
     4-hex-char slices of ONE md5(shingle) digest — engine portable,
     deterministic, and 8× cheaper than a per-family digest."""
-    return _minhash_pairs_df(spark, sf_dir)
+    return _lsh_candidates(_minhash_minima(_shingles_df(spark, sf_dir)))
 
 
-def _minhash_pairs_df(spark, sf_dir):
-    return _minhash_pairs_from(_shingles_df(spark, sf_dir))
+def _minhash_minima(shingles, *extra_aggs):
+    """(doc_id, *extra_aggs, m0..m{N-1}) — the MinHash core: ONE
+    doc-keyed aggregate over a (doc_id, sh) shingle DF yielding the
+    _N_MINHASH component minima as longs.
 
-
-def _minhash_sigs_from(shingles):
-    """(doc_id, mh0..mh{{N-1}}) wide MinHash component signatures.
-
-    The hash family is compile-time constant (_N_MINHASH members), so
-    all minima are computed as parallel aggregate expressions in ONE
-    groupBy(doc_id) — no broadcast row-expansion join, no second
-    shuffle (the crossJoin(range(N)) formulation costs an N× row blowup
-    plus a groupBy(doc_id, i) AND a groupBy(doc_id, band) exchange).
     Hash family = 4-hex-char SLICES of ONE md5 per shingle (the
     digest's chunks are independent uniform 16-bit hashes — standard
-    trick): 1 digest instead of _N_MINHASH per shingle row, which is
-    the dominant CPU of the shingle stage at 100 TB. The md5 column is
-    projected BEFORE the aggregate so it is evaluated once per row.
-    Shared by _band_sigs_from (banding) and q_minhash_calibration
-    (component-level estimator audit).
+    trick): 1 digest instead of _N_MINHASH per shingle row, projected
+    BEFORE the aggregate so it is evaluated once per row. All minima
+    are parallel aggregate expressions of the same groupBy(doc_id) —
+    no crossJoin(range(N)) row blowup, no groupBy(doc_id, i) pass.
 
-    The minima are taken over LONG-decoded slices, not the hex strings
-    (r9): MIN(string) carries a string aggregation buffer, which
-    demotes the whole aggregate to SortAggregate — two full sorts of
-    the corpus-sized shingle table, one per side of the exchange.
-    Fixed-length lowercase hex is order-isomorphic to its numeric
-    value ('0'<…<'9'<'a'<…<'f' in ASCII), so MIN over the decoded long
-    is the SAME minimum; re-hexing with %04x restores the identical
-    string. Plan: SortAggregate + 2 Sorts → map-side-combining
-    HashAggregate, no sort."""
-    hashed = shingles.select("doc_id", F.md5(F.encode("sh", "UTF-8")).alias("h"))
-    parts = hashed.select(
-        "doc_id",
-        *[
-            F.conv(F.substring("h", i * 4 + 1, 4), 16, 10)
-            .cast("long")
-            .alias(f"v{i}")
-            for i in range(_N_MINHASH)
-        ],
+    The minima are taken over LONG-decoded slices, not the hex
+    strings (r9): MIN(string) carries a string aggregation buffer,
+    which demotes the aggregate to SortAggregate — two full sorts of
+    the corpus-sized shingle table. Fixed-length lowercase hex is
+    order-isomorphic to its numeric value, so the decoded minimum IS
+    the hex minimum; _lsh_bands re-hexes it with %04x. With the decode
+    inline in MIN (not a pre-projected column), Catalyst sees only
+    duplicate-insensitive aggregates over the shingle DISTINCT and
+    drops that distinct's corpus-sized shuffle on the lean path.
+
+    `extra_aggs` ride the same fold: the per-doc dedup profile
+    (_doc_profiles_from) passes the shingle array and its size; the
+    lean banding path (q_minhash_lsh, q_lsh_bucket_stats,
+    q_dedup_incremental) passes none, so no shingle arrays are
+    collected."""
+    hashed = shingles.select(
+        "doc_id", "sh", F.md5(F.encode("sh", "UTF-8")).alias("h")
     )
-    mins = parts.groupBy("doc_id").agg(
-        *[F.min(f"v{i}").alias(f"v{i}") for i in range(_N_MINHASH)]
-    )
-    return mins.select(
-        "doc_id",
+    return hashed.groupBy("doc_id").agg(
+        *extra_aggs,
         *[
-            F.format_string("%04x", F.col(f"v{i}")).alias(f"mh{i}")
+            F.min(F.conv(F.substring("h", i * 4 + 1, 4), 16, 10).cast("long"))
+            .alias(f"m{i}")
             for i in range(_N_MINHASH)
         ],
     )
 
 
-def _band_sigs_from(shingles):
-    """(doc_id, band, band_sig) LSH band signatures from a shingle DF —
-    the _minhash_sigs_from component table folded into per-band
-    concatenated signatures. Shared by _minhash_pairs_from (candidate
-    generation) and q_lsh_bucket_stats (banding-skew audit)."""
+def _lsh_bands(df):
+    """(doc_id, band, band_sig) LSH band signatures from any DF carrying
+    _minhash_minima's m0..m{N-1}: _N_BANDS bands of consecutive
+    components, each band_sig the %04x re-hexed minima joined by ','
+    — byte-identical to the oracle's string_agg over hex-slice MINs."""
     rows_per_band = _N_MINHASH // _N_BANDS
-    mh = _minhash_sigs_from(shingles)
     band_structs = F.array(
         *[
             F.struct(
@@ -307,7 +300,9 @@ def _band_sigs_from(shingles):
                 F.concat_ws(
                     ",",
                     *[
-                        F.col(f"mh{b * rows_per_band + j}")
+                        F.format_string(
+                            "%04x", F.col(f"m{b * rows_per_band + j}")
+                        )
                         for j in range(rows_per_band)
                     ],
                 ).alias("band_sig"),
@@ -315,18 +310,17 @@ def _band_sigs_from(shingles):
             for b in range(_N_BANDS)
         ]
     )
-    bands = mh.select("doc_id", F.explode(band_structs).alias("bs")).select(
+    return df.select("doc_id", F.explode(band_structs).alias("bs")).select(
         "doc_id", "bs.band", "bs.band_sig"
     )
-    return bands
 
 
-def _minhash_pairs_from(shingles):
-    # pair generation via bucket groupBy instead of a self-join: one pass
-    # over the band table (a self-join would recompute the whole minhash
-    # pipeline for each side), and the bucket is the shuffle key — the
-    # scale-out shape for LSH candidate generation.
-    buckets = _band_sigs_from(shingles).groupBy("band", "band_sig").agg(
+def _lsh_candidates(df):
+    """Capped LSH candidate pairs (a, b) from any DF carrying the
+    MinHash minima. Pair generation is a bucket groupBy, not a
+    self-join: one pass over the band table, and the bucket is the
+    shuffle key — the scale-out shape for LSH candidate generation."""
+    buckets = _lsh_bands(df).groupBy("band", "band_sig").agg(
         F.array_sort(F.collect_list("doc_id")).alias("ids")
     )
     return _capped_bucket_pairs(buckets)
@@ -412,134 +406,71 @@ def q_dedup_lsh_verified(spark, sf_dir):
 
 
 def _verified_pairs_df(spark, sf_dir):
-    # The shingle table feeds FOUR subtrees (minhash candidates, both
-    # sides of the intersection join, the size table); without an
-    # explicit persist Catalyst recomputes it per reference — measured
-    # 10 scans of the documents parquet in one plan. At 100 TB you
-    # materialize the shingle table once (cache/table), never 4×.
-    # Tracked for release_caches (caller frees after materializing).
-    shingles = _persist(_shingles_df(spark, sf_dir))
-    return _verified_pairs_from(shingles)
+    return _verified_pairs_from(_shingles_df(spark, sf_dir))
 
 
 def _doc_profiles_from(shingles):
     """Persisted per-doc dedup profile (doc_id, shs, sz, m0..m{N-1}):
-    the doc's distinct-shingle array, its size, and the _N_MINHASH
-    long-decoded MinHash component minima — ONE doc-keyed fold over
-    the shingle table, shared by the verify core
-    (_pair_intersections_from) and q_minhash_calibration so the
-    corpus-sized signature aggregate runs exactly once per query.
-    Tracked for release_caches (caller frees after materializing)."""
-    hashed = shingles.select(
-        "doc_id", "sh", F.md5(F.encode("sh", "UTF-8")).alias("h")
-    )
+    the doc's distinct-shingle array and its size riding the
+    _minhash_minima fold — ONE doc-keyed aggregate over the shingle
+    table, shared by candidate generation, verify, sizes and the
+    estimator audit, so the corpus-sized signature pass runs exactly
+    once per query. The profile is the shingle table's only reader, so
+    the shingles themselves need no persist. Tracked for
+    release_caches (caller frees after materializing)."""
     return _persist(
-        hashed.groupBy("doc_id").agg(
+        _minhash_minima(
+            shingles,
             F.collect_list("sh").alias("shs"),
             F.count("*").alias("sz"),
-            *[
-                F.min(
-                    F.conv(F.substring("h", i * 4 + 1, 4), 16, 10).cast(
-                        "long"
-                    )
-                ).alias(f"m{i}")
-                for i in range(_N_MINHASH)
-            ],
         )
     )
 
 
-def _profile_cand_from(prof):
-    """Capped LSH candidate pairs (a, b) from a per-doc profile's
-    component minima. Re-hexing the long minima with %04x restores
-    byte-identical band signatures (hex is order/value-isomorphic to
-    the decoded longs), so the candidate set equals
-    _minhash_pairs_from's exactly."""
-    rows_per_band = _N_MINHASH // _N_BANDS
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                F.concat_ws(
-                    ",",
-                    *[
-                        F.format_string(
-                            "%04x", F.col(f"m{b * rows_per_band + j}")
-                        )
-                        for j in range(rows_per_band)
-                    ],
-                ).alias("band_sig"),
-            )
-            for b in range(_N_BANDS)
-        ]
-    )
-    bands = prof.select(
-        "doc_id", F.explode(band_structs).alias("bs")
-    ).select("doc_id", "bs.band", "bs.band_sig")
-    buckets = bands.groupBy("band", "band_sig").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("ids")
-    )
-    return _capped_bucket_pairs(buckets)
+def _pair_intersections(prof):
+    """inter(a, b, i, sza, szb, a0..a{N-1}, b0..b{N-1}) — exact
+    shingle-intersection counts for the capped MinHash-LSH candidate
+    pairs of a per-doc profile (_doc_profiles_from), with both sides'
+    sizes and component minima attached. The shared verify core,
+    consumed by _verified_pairs_from (Jaccard ≥ 0.2),
+    q_dedup_containment, q_dedup_recall, q_minhash_calibration and
+    q_minhash_band_tuning, so every dup detector walks the SAME
+    candidate universe and a cap/banding change reaches all of them;
+    columns a consumer does not select are pruned from the joins.
 
+    Each candidate pair's intersection is computed ROW-LOCALLY with
+    array_intersect over the two profile rows — never a
+    shingle×shingle self-join, no postings shuffle by (doc_id, sh).
+    Counts equal the join form because per-doc shingles are distinct;
+    pairs with an empty intersection carry i=0, which every consumer
+    handles (the oracles' COALESCE / >= filters)."""
+    def side(k):
+        return prof.select(
+            F.col("doc_id").alias(k),
+            F.col("shs").alias(f"sh{k}"),
+            F.col("sz").alias(f"sz{k}"),
+            *[F.col(f"m{i}").alias(f"{k}{i}") for i in range(_N_MINHASH)],
+        )
 
-def _pair_intersections_from(shingles):
-    """inter(a, b, i, sza, szb) — exact shingle-intersection counts
-    for the capped MinHash-LSH candidate pairs, with both side sizes
-    attached. The shared verify core: candidate-keyed equi-joins only,
-    never a shingle×shingle self-join. Consumed by _verified_pairs_from
-    (Jaccard ≥ 0.2 filter) and q_dedup_containment (containment
-    filter), so the two dup detectors provably walk the SAME candidate
-    universe and a cap/banding change reaches both."""
-    # r9: ONE doc-keyed fold over the shingle table produces a per-doc
-    # profile carrying the shingle array, its size AND the 8
-    # long-decoded MinHash component minima. The banding/candidate
-    # path re-hexes the minima (byte-identical band signatures — hex
-    # is order/value-isomorphic to the decoded longs), so the separate
-    # signature aggregate pass over the corpus disappears; every
-    # candidate pair's intersection is then computed ROW-LOCALLY with
-    # array_intersect. vs the pre-r9 shape this removes the second
-    # signature rollup, the postings shuffles by doc_id and
-    # (doc_id, sh), the |pairs|x|shingles/doc| (a, b) re-aggregate and
-    # the separate sizes rollup + two joins. Intersection counts are
-    # identical because per-doc shingles are distinct; pairs with an
-    # empty intersection now carry i=0 instead of being absent, which
-    # every consumer already handles (COALESCE / >= filters).
-    return _pair_intersections_with_profiles(_doc_profiles_from(shingles))
-
-
-def _pair_intersections_with_profiles(prof):
-    """The verify core over an ALREADY-persisted per-doc profile —
-    callers that need the profile for other subtrees too (sizes,
-    component minima) build it once with _doc_profiles_from and share
-    it here, so the corpus-sized fold never runs twice."""
-    cand = _profile_cand_from(prof)
-    da = prof.select(
-        F.col("doc_id").alias("a"),
-        F.col("shs").alias("sha"),
-        F.col("sz").alias("sza"),
-    )
-    db = prof.select(
-        F.col("doc_id").alias("b"),
-        F.col("shs").alias("shb"),
-        F.col("sz").alias("szb"),
-    )
     return (
-        cand.join(da, "a")
-        .join(db, "b")
+        _lsh_candidates(prof)
+        .join(side("a"), "a")
+        .join(side("b"), "b")
         .select(
             "a",
             "b",
             F.size(F.array_intersect("sha", "shb")).cast("long").alias("i"),
             "sza",
             "szb",
+            *[f"{k}{i}" for k in "ab" for i in range(_N_MINHASH)],
         )
     )
 
 
 def _verified_pairs_from(shingles):
-    """vpairs(a, b, jaccard ≥ 0.2) from a (pre-persisted) shingle DF:
-    capped MinHash-LSH candidates → exact Jaccard on candidates only."""
-    inter = _pair_intersections_from(shingles)
+    """vpairs(a, b, jaccard ≥ 0.2) from a shingle DF: capped
+    MinHash-LSH candidates → exact Jaccard on candidates only."""
+    inter = _pair_intersections(_doc_profiles_from(shingles))
     jac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
     return inter.filter(jac >= 0.2).select(
         "a", "b", F.round(jac, 4).alias("jaccard")
@@ -642,10 +573,9 @@ def q_dedup_recall(spark, sf_dir):
     exact = (
         pint.join(za, "a").join(zb, "b").filter(jac >= 0.2).select("a", "b")
     )
-    inter = _pair_intersections_with_profiles(prof)
-    vjac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
     lsh = (
-        inter.filter(vjac >= 0.2)
+        _pair_intersections(prof)
+        .filter(jac >= 0.2)
         .filter((F.col("a") < p) | (F.col("b") < p))
         .select("a", "b")
     )
@@ -857,54 +787,12 @@ def q_dedup_incremental(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     new_sh = _shingles_from(docs.filter(F.col("doc_id") % 10 == 9))
     idx_sh = _shingles_from(docs.filter(F.col("doc_id") % 10 != 9))
-
-    def bands_of(shingles):
-        hashed = shingles.select(
-            "doc_id", F.md5(F.encode("sh", "UTF-8")).alias("h")
-        )
-        rows_per_band = _N_MINHASH // _N_BANDS
-        # long-decoded mins + re-hex, same rationale as _minhash_sigs_from
-        # (hex↔numeric order isomorphism keeps values identical): the
-        # string-buffered MIN would demote this to SortAggregate.
-        parts = hashed.select(
-            "doc_id",
-            *[
-                F.conv(F.substring("h", i * 4 + 1, 4), 16, 10)
-                .cast("long")
-                .alias(f"v{i}")
-                for i in range(_N_MINHASH)
-            ],
-        )
-        mh = parts.groupBy("doc_id").agg(
-            *[F.min(f"v{i}").alias(f"v{i}") for i in range(_N_MINHASH)]
-        ).select(
-            "doc_id",
-            *[
-                F.format_string("%04x", F.col(f"v{i}")).alias(f"mh{i}")
-                for i in range(_N_MINHASH)
-            ],
-        )
-        band_structs = F.array(
-            *[
-                F.struct(
-                    F.lit(b).cast("long").alias("band"),
-                    F.concat_ws(
-                        ",",
-                        *[
-                            F.col(f"mh{b * rows_per_band + j}")
-                            for j in range(rows_per_band)
-                        ],
-                    ).alias("band_sig"),
-                )
-                for b in range(_N_BANDS)
-            ]
-        )
-        return mh.select("doc_id", F.explode(band_structs).alias("bs")).select(
-            "doc_id", "bs.band", "bs.band_sig"
-        )
-
-    nb = bands_of(new_sh).withColumnRenamed("doc_id", "new_doc")
-    ib = bands_of(idx_sh).withColumnRenamed("doc_id", "index_doc")
+    nb = _lsh_bands(_minhash_minima(new_sh)).withColumnRenamed(
+        "doc_id", "new_doc"
+    )
+    ib = _lsh_bands(_minhash_minima(idx_sh)).withColumnRenamed(
+        "doc_id", "index_doc"
+    )
     # No explicit broadcast hint: a production daily batch is unbounded
     # and force-broadcasting it would OOM the driver (ADVICE r03). AQE
     # broadcasts the probe side when it measures small and falls back
@@ -3764,18 +3652,6 @@ def q_multimodal_meta(spark, sf_dir):
     )
 
 
-def decode_image_stub(payload: bytes) -> dict:
-    """Placeholder for a real image decode (PIL/opencv unavailable).
-
-    At deployment, replace with a Pandas-UDF-wrapped decoder; the
-    pipeline plumbing (binary column in, struct metadata out, Arrow
-    batching) is exercised by q_multimodal_meta.
-    """
-    raise NotImplementedError(
-        "image decode requires an imaging library not present in this sandbox"
-    )
-
-
 # ---------------------------------------------------------------------------
 # O-9: oEmbed providers broadcast join (the A-16 registry as a dim table)
 # ---------------------------------------------------------------------------
@@ -4191,7 +4067,7 @@ def q_curation_pipeline_lsh(spark, sf_dir):
         .filter((F.col("n_tokens") >= 30) & (F.col("alpha_ratio") >= 0.6))
         .drop("alpha_ratio")
     )
-    shingles = _persist(_shingles_from(gated.select("doc_id", "text")))
+    shingles = _shingles_from(gated.select("doc_id", "text"))
     vpairs = _verified_pairs_from(shingles)
     labels = _connected_components(spark, vpairs.select("a", "b"))
     labeled = gated.join(
@@ -8596,15 +8472,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     "q_lsh_bucket_stats",
     f"""
     WITH {_SHINGLES_SQL},
-    hashes AS (
-      SELECT doc_id, i,
-             MIN(substr(md5(sh), i * 4 + 1, 4)) AS mh
-      FROM shingles CROSS JOIN generate_series(0, {_N_MINHASH - 1}) t(i)
-      GROUP BY doc_id, i),
-    bands AS (
-      SELECT doc_id, i // {_N_MINHASH // _N_BANDS} AS band,
-             string_agg(mh, ',' ORDER BY i) AS band_sig
-      FROM hashes GROUP BY doc_id, band),
+    {_MINHASH_BANDS_SQL},
     bsz AS (
       SELECT band, band_sig, CAST(COUNT(*) AS BIGINT) AS k
       FROM bands GROUP BY band, band_sig),
@@ -8640,13 +8508,13 @@ def q_lsh_bucket_stats(spark, sf_dir):
     single bucket whose uncapped pair count would dominate the whole
     job, and the emitted column proves the cap holds output linear.
 
-    Plan/scale: the shared _band_sigs_from signature pass (one
+    Plan/scale: the shared lean _minhash_minima + _lsh_bands pass (one
     groupBy(doc_id) with parallel min aggregates), then a COUNT-only
     groupBy(band, band_sig) — crucially NOT the collect_list bucket
     materialization the pair generator needs, so the audit runs on
     corpora whose largest bucket would not fit an executor — and a
     ≤64-key class rollup. All counts exact integers."""
-    bands = _band_sigs_from(_shingles_df(spark, sf_dir))
+    bands = _lsh_bands(_minhash_minima(_shingles_df(spark, sf_dir)))
     bsz = bands.groupBy("band", "band_sig").agg(
         F.count("*").cast("long").alias("k")
     )
@@ -8964,8 +8832,8 @@ def q_dedup_containment(spark, sf_dir):
     recall path for those is the ExactSubstr family
     (q_dedup_substring), while this query catches the
     moderate-asymmetry regime the bands do surface."""
-    shingles = _persist(_shingles_df(spark, sf_dir))
-    inter = _pair_intersections_from(shingles)
+    prof = _doc_profiles_from(_shingles_df(spark, sf_dir))
+    inter = _pair_intersections(prof)
     mn = F.least("sza", "szb")
     uni = F.col("sza") + F.col("szb") - F.col("i")
     return (
@@ -9371,54 +9239,25 @@ def q_minhash_calibration(spark, sf_dir):
     hash identically — no float-summation order anywhere; est/8 in
     micro units is the exact integer est_m·125000.
 
-    Plan/scale: reuses the single-md5-pass component table
-    (_minhash_sigs_from — the same one banding folds up) joined to
-    the capped candidate set on each side (candidate-keyed equi-
-    joins, linear in candidates), the shared exact-intersection
-    rollup, then ONE ≤{_N_MINHASH}+1-key combining rollup. No new
+    Plan/scale: reuses the shared verify core (_pair_intersections
+    over the persisted per-doc profile — the same minima banding
+    re-hexes), then ONE ≤{_N_MINHASH}+1-key combining rollup. No new
     corpus-sized exchange beyond the verify pass it audits."""
-    shingles = _persist(_shingles_df(spark, sf_dir))
-    # ONE per-doc profile row carries the shingle array, its size AND
-    # the 8 long-decoded MinHash component minima (r9): the estimator
-    # only compares components for equality, so the longs never need
-    # re-hexing, and the candidate set is joined twice total (once per
-    # side) instead of four times (sigs x2 + arrays x2); the separate
-    # signature aggregate pass disappears. Intersections are row-local
-    # array_intersect (the _pair_intersections_from shape); absent
-    # intersections surface as i=0 — the value the old COALESCE gave.
-    # The profile is PERSISTED and the candidate pairs derive from its
-    # minima (_profile_cand_from), so the corpus-sized signature fold
-    # runs once — the pre-fix plan re-aggregated it three times (the
-    # separate _minhash_pairs_from path + each unpersisted join side).
-    prof = _doc_profiles_from(shingles)
-    cand = _profile_cand_from(prof)
-    pa = prof.select(
-        F.col("doc_id").alias("a"), F.col("shs").alias("sha"),
-        F.col("sz").alias("sza"),
-        *[F.col(f"m{i}").alias(f"a{i}") for i in range(_N_MINHASH)],
-    )
-    pb = prof.select(
-        F.col("doc_id").alias("b"), F.col("shs").alias("shb"),
-        F.col("sz").alias("szb"),
-        *[F.col(f"m{i}").alias(f"b{i}") for i in range(_N_MINHASH)],
-    )
+    # the verify core carries both sides' component minima: the
+    # estimator only compares them for equality, so the longs never
+    # need re-hexing; absent intersections surface as i=0 — the value
+    # the oracle's COALESCE gives
+    prof = _doc_profiles_from(_shingles_df(spark, sf_dir))
     est = sum(
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
         for i in range(_N_MINHASH)
     ).cast("long")
-    i0 = F.size(F.array_intersect("sha", "shb"))
-    pj = (
-        cand.join(pa, "a")
-        .join(pb, "b")
-        .select(
-            est.alias("est_m"),
-            F.round(
-                i0 * F.lit(1000000.0)
-                / (F.col("sza") + F.col("szb") - i0)
-            )
-            .cast("long")
-            .alias("jac_micro"),
-        )
+    i0 = F.col("i")
+    pj = _pair_intersections(prof).select(
+        est.alias("est_m"),
+        F.round(i0 * F.lit(1000000.0) / (F.col("sza") + F.col("szb") - i0))
+        .cast("long")
+        .alias("jac_micro"),
     )
     agg = pj.groupBy("est_m").agg(
         F.count("*").cast("long").alias("n_pairs"),
@@ -10494,11 +10333,11 @@ def q_minhash_band_tuning(spark, sf_dir):
     core (the verify pass it tunes), then ONE pass over the pair
     table computing all four configs' micro sums in parallel
     aggregates — no per-config rescan, no new corpus-sized shuffle."""
-    shingles = _persist(_shingles_df(spark, sf_dir))
-    # the fused verify core (r9) already yields every capped candidate
-    # pair with its exact intersection (i=0 for empty — the value the
-    # old LEFT JOIN + COALESCE produced) and both sizes in one pass
-    inter = _pair_intersections_from(shingles)
+    # the fused verify core already yields every capped candidate pair
+    # with its exact intersection (i=0 for empty — the value the
+    # oracle's LEFT JOIN + COALESCE produces) and both sizes in one pass
+    prof = _doc_profiles_from(_shingles_df(spark, sf_dir))
+    inter = _pair_intersections(prof)
     i0 = F.col("i")
     ps = inter.select(
         (
@@ -11360,8 +11199,8 @@ def q_redirect_resolve(spark, sf_dir):
            CAST(SUM(CASE WHEN boiler THEN df * tok ELSE 0 END) AS BIGINT)
              AS boiler_tokens,
            CAST(SUM(df * tok) AS BIGINT) AS total_tokens,
-           SUM(CASE WHEN boiler THEN df * tok ELSE 0 END) * 1000000
-             // SUM(df * tok) AS boiler_token_ppm
+           CAST(SUM(CASE WHEN boiler THEN df * tok ELSE 0 END) * 1000000
+                // SUM(df * tok) AS BIGINT) AS boiler_token_ppm
     FROM flagged GROUP BY host
     """,
 )
@@ -11796,7 +11635,8 @@ def _varint_bytes_sql(v: str) -> str:
            CAST(SUM(df) AS BIGINT) AS n_postings,
            CAST(SUM(vbytes) AS BIGINT) AS varint_bytes,
            CAST(SUM(df) * 8 AS BIGINT) AS fixed_bytes,
-           SUM(vbytes) * 1000000 // (SUM(df) * 8) AS compression_ppm
+           CAST(SUM(vbytes) * 1000000 // (SUM(df) * 8) AS BIGINT)
+             AS compression_ppm
     FROM term GROUP BY df_class
     """,
 )

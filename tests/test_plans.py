@@ -256,3 +256,63 @@ def test_dom_nesting_shares_doc_exchange(spark):
     c = _op_counts(_plan(df))
     assert c["Exchange"] == 2 and c["Window"] == 1
     assert c["SortMergeJoin"] == 0 and c["BroadcastHashJoin"] == 0
+
+
+def _doc_keyed_folds(plan: str) -> list:
+    """Final-mode aggregates keyed by doc_id alone that a physical plan
+    computes. A cached relation's plan is printed once per reference
+    but computed once, so an aggregate under an InMemoryRelation counts
+    once per distinct text; any other occurrence counts every time."""
+    import re
+
+    found, cached_depths = {}, []
+    for n, line in enumerate(plan.splitlines()):
+        node = line.lstrip(" :+-")
+        depth = len(line) - len(node)
+        while cached_depths and depth <= cached_depths[-1]:
+            cached_depths.pop()
+        if node.startswith("InMemoryRelation"):
+            cached_depths.append(depth)
+        elif re.match(
+            r"\w*Aggregate\(keys=\[doc_id#\d+L?\], functions=\[(?!partial_)",
+            node,
+        ):
+            found[node if cached_depths else (n, node)] = node
+    return list(found.values())
+
+
+@pytest.mark.parametrize(
+    "name", ["q_minhash_lsh", "q_dedup_clusters", "q_minhash_calibration"]
+)
+def test_minhash_core_single_hash_aggregate(spark, monkeypatch, name):
+    """The MinHash core stays ONE doc-keyed hash aggregate per query:
+    no SortAggregate (string MIN buffers would demote it), exactly one
+    doc-keyed fold and it carries the minima (the profile is shared,
+    never re-aggregated per reader), and no cache of the bare
+    (doc_id, sh) shingle table, whose only reader is that fold."""
+    import re
+
+    from readembedability_spark import textops
+    from readembedability_spark.queries import release_caches
+    from test_oracle_parity import SF_DIR
+
+    # connected components runs eagerly; a lazy stand-in keeps the
+    # verified-pair subtree in the returned plan
+    monkeypatch.setattr(
+        textops,
+        "_connected_components",
+        lambda spark, edges: edges.select(
+            F.col("a").alias("node"), F.col("b").alias("label")
+        ),
+    )
+    # start from an empty cache: a table an earlier query left cached
+    # would be substituted into this plan
+    release_caches(spark)
+    df = textops.REGISTRY[name].spark(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
+    release_caches(spark)
+    assert "SortAggregate" not in plan
+    folds = _doc_keyed_folds(plan)
+    assert len(folds) == 1, folds
+    assert "min(cast(conv(substring(" in folds[0]
+    assert not re.search(r"InMemoryRelation \[doc_id#\d+L?, sh#\d+\]", plan)

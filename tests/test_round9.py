@@ -3,14 +3,16 @@ changed this round gets a boundary/equivalence probe beyond the
 whole-query oracle parity tier.
 
 Covered internals:
-- _minhash_sigs_from: long-decoded mins re-hexed (%04x) must equal the
-  naive MIN(string) over the hex slices (order isomorphism).
+- _minhash_minima + _lsh_bands: long-decoded mins re-hexed (%04x) must
+  equal the naive MIN(string) over the hex slices (order isomorphism).
+- _lsh_candidates: the lean minima and the per-doc profile yield the
+  same capped candidate pairs, including the degenerate-bucket cap.
 - _connected_components: the star-forest convergence probe must still
   produce exact component minima on shapes that need >1 contraction
   round (long chains), and on already-star inputs.
 - q_cdc_chunks' array-land chunking: digests/boundaries on degenerate
   docs (shorter than the 4-gram window, empty text) match the oracle.
-- _pair_intersections_from: i=0 pairs surface (not dropped) and counts
+- _pair_intersections: i=0 pairs surface (not dropped) and counts
   equal the join-based intersection.
 """
 
@@ -33,13 +35,14 @@ def _release(spark):
 
 
 def test_minhash_long_min_equals_string_min(spark):
-    """%04x over MIN(long-decoded slice) == MIN(hex-string slice)."""
+    """Band signatures from %04x over MIN(long-decoded slice) ==
+    ','-joined MIN(hex-string slice) per band."""
     docs = spark.createDataFrame(
         [(i, " ".join(f"w{i}x{j}" for j in range(12))) for i in range(30)],
         "doc_id long, text string",
     )
     shingles = textops._shingles_from(docs)
-    fast = textops._minhash_sigs_from(shingles)
+    fast = textops._lsh_bands(textops._minhash_minima(shingles))
     hashed = shingles.select(
         "doc_id", F.md5(F.encode("sh", "UTF-8")).alias("h")
     )
@@ -49,10 +52,47 @@ def test_minhash_long_min_equals_string_min(spark):
             for i in range(textops._N_MINHASH)
         ]
     )
-    cols = ["doc_id"] + [f"mh{i}" for i in range(textops._N_MINHASH)]
-    assert sorted(map(tuple, fast.select(cols).collect())) == sorted(
-        map(tuple, naive.select(cols).collect())
-    )
+    rows = textops._N_MINHASH // textops._N_BANDS
+    expected = {
+        (r["doc_id"], b, ",".join(r[f"mh{b * rows + j}"] for j in range(rows)))
+        for r in naive.collect()
+        for b in range(textops._N_BANDS)
+    }
+    got = {tuple(r) for r in fast.select("doc_id", "band", "band_sig").collect()}
+    assert len(got) == 30 * textops._N_BANDS
+    assert got == expected
+
+
+def test_lsh_candidates_lean_equals_profile(spark):
+    """The lean minima and the persisted per-doc profile feed
+    _lsh_candidates the same minima, so the capped pair sets are equal
+    — including a bucket larger than _MAX_BUCKET_IDS (head pairs plus
+    star pairs to the bucket minimum)."""
+    cap = textops._MAX_BUCKET_IDS
+    n_dup = cap + 6
+    base = [f"tok{j}" for j in range(24)]
+    texts = [(i, " ".join(["same"] + base)) for i in range(n_dup)]
+    # planted near-dups: one word changed at the tail of a long doc
+    for k in range(4):
+        words = [f"nd{k}w{j}" for j in range(40)]
+        texts.append((1000 + 2 * k, " ".join(words)))
+        texts.append((1001 + 2 * k, " ".join(words[:-1] + ["changed"])))
+    texts += [(2000 + i, " ".join(f"u{i}v{j}" for j in range(15)))
+              for i in range(20)]
+    docs = spark.createDataFrame(texts, "doc_id long, text string")
+    shingles = textops._shingles_from(docs)
+
+    def pairs(df):
+        return {(r["a"], r["b"]) for r in df.collect()}
+
+    lean = pairs(textops._lsh_candidates(textops._minhash_minima(shingles)))
+    prof = pairs(textops._lsh_candidates(textops._doc_profiles_from(shingles)))
+    assert lean == prof
+    head = [(a, b) for a in range(cap) for b in range(a + 1, cap)]
+    star = [(0, t) for t in range(cap, n_dup)]
+    assert {p for p in lean if p[1] < n_dup} == set(head + star)
+    planted = {(1000 + 2 * k, 1001 + 2 * k) for k in range(4)}
+    assert lean & planted
 
 
 def _brute_cc(edges):
@@ -131,7 +171,7 @@ def test_pair_intersections_match_join_form(spark):
         list(texts.items()), "doc_id long, text string"
     )
     shingles = textops._shingles_from(docs)
-    got = textops._pair_intersections_from(shingles)
+    got = textops._pair_intersections(textops._doc_profiles_from(shingles))
     rows = {(r["a"], r["b"]): (r["i"], r["sza"], r["szb"]) for r in got.collect()}
     sh = {
         d: {
