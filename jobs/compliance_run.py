@@ -36,7 +36,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
-from pyspark.sql import SparkSession  # noqa: E402
+
+from _session import job_session  # noqa: E402
 
 
 def rulesets(spark):
@@ -113,13 +114,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("compliance-run")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = job_session("compliance-run", args.master)
     from readembedability_spark.queries import _persist, release_caches
     from readembedability_spark.textops import (
         politeness_from,

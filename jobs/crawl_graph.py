@@ -33,8 +33,10 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from _session import job_session  # noqa: E402
+
 
 #: generic host pattern (the registry queries use the synthesis-shaped
 #: variant; a production url table needs the general form)
@@ -168,13 +170,7 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("crawl-graph")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = job_session("crawl-graph", args.master)
     from readembedability_spark.queries import _persist, release_caches
     from readembedability_spark.textops import _link_pages, _pagerank
 

@@ -39,9 +39,9 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
+from _session import job_session  # noqa: E402
 from crawl_graph import (  # noqa: E402
     HOST_RE,
     frontier,
@@ -191,13 +191,7 @@ def main() -> None:
     ap.add_argument("--n-shards", type=int, default=8)
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("full-pipeline")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = job_session("full-pipeline", args.master)
     from readembedability_spark.queries import _persist, release_caches
     from readembedability_spark.textops import _link_pages, _pagerank
 

@@ -36,9 +36,11 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
+
+from _session import job_session  # noqa: E402
+
 
 #: content blocklist — production supplies its own; the default
 #: matches q_badwords_filter so the job smoke-checks on the synthetic
@@ -316,13 +318,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    builder = SparkSession.builder.appName("pretrain-prep")
-    if args.master:
-        builder = builder.master(args.master).config(
-            "spark.sql.shuffle.partitions", "8"
-        )
-    spark = builder.config("spark.sql.adaptive.enabled", "true").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = job_session("pretrain-prep", args.master)
     from readembedability_spark.queries import release_caches
 
     t0 = time.time()

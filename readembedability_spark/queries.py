@@ -39,9 +39,14 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 REGISTRY: dict[str, QueryDef] = {}
 
-#: DFs persisted inside registry queries, tracked so callers can free
-#: executor storage between queries (see release_caches).
-_PERSISTED: list[DataFrame] = []
+#: Storage anchors pinned by registry queries, each held by its own
+#: handle: a _persist anchor as its DataFrame, a _local_checkpoint
+#: anchor as the JVM RDD behind the returned plan. release_caches frees
+#: exactly these, so application caches and checkpoints (whose
+#: truncated lineage cannot be recomputed, ADVICE r03) are never
+#: touched, and a loop that frees a round early (_unpin) frees only
+#: that round, even while other queries run in the same thread pool.
+_PERSISTED: list = []
 
 
 def _persist(df: DataFrame) -> DataFrame:
@@ -57,23 +62,28 @@ def _persist(df: DataFrame) -> DataFrame:
     return df
 
 
-#: RDD ids of localCheckpoint blocks created by registry queries via
-#: _local_checkpoint — the only ids release_caches may unpersist at the
-#: RDD layer (ADVICE r03: a blanket getPersistentRDDs sweep would also
-#: kill application-created checkpoints whose truncated lineage cannot
-#: be recomputed).
-_TRACKED_RDD_IDS: set = set()
+def _checkpoint_rdd(df: DataFrame):
+    """The JVM RDD holding a localCheckpoint'ed DataFrame's blocks: the
+    LogicalRDD behind its plan, for eager and lazy checkpoints alike."""
+    return df._jdf.logicalPlan().rdd()
 
 
 def _local_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
-    """localCheckpoint with storage tracking (snapshot-delta of
-    persistent RDD ids) so release_caches frees ONLY registry-created
-    checkpoint blocks, never application caches."""
-    spark = df.sparkSession
-    before = _persistent_rdd_ids(spark)
+    """localCheckpoint an intra-query anchor AND track its RDD for
+    release (same caller contract as _persist)."""
     out = df.localCheckpoint(eager=eager)
-    _TRACKED_RDD_IDS.update(_persistent_rdd_ids(spark) - before)
+    _PERSISTED.append(_checkpoint_rdd(out))
     return out
+
+
+def _unpin(anchor) -> None:
+    """Free one anchor's storage blocks without blocking. A persisted
+    DataFrame and a checkpoint's JVM RDD both take ``unpersist(False)``;
+    an anchor left over from a stopped session has nothing to free."""
+    try:
+        anchor.unpersist(False)
+    except Exception:
+        pass
 
 
 #: Iteration-loop sizing (VERDICT r04 #3): target rows per partition
@@ -108,47 +118,17 @@ def _resize(df: DataFrame, parts: int) -> DataFrame:
     return df
 
 
-def _scala_iter(obj):
-    it = obj.iterator()
-    while it.hasNext():
-        yield it.next()
-
-
-def _persistent_rdd_ids(spark: SparkSession) -> set:
-    """Ids of all persisted RDDs (incl. localCheckpoint blocks)."""
-    return set(
-        _scala_iter(spark.sparkContext._jsc.sc().getPersistentRDDs().keySet())
-    )
-
-
-def _unpersist_rdd_ids(spark: SparkSession, ids) -> None:
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    for rid in ids:
-        opt = jmap.get(rid)
-        if not opt.isEmpty():
-            opt.get().unpersist(False)
-
-
 def release_caches(spark: SparkSession) -> None:
-    """Free executor storage pinned by registry queries: tracked
-    persist() anchors, the SQL cache (NOTE: clearCache is session-wide;
+    """Free executor storage pinned by registry queries: every tracked
+    anchor, then the SQL cache (NOTE: clearCache is session-wide;
     application DataFrame caches are dropped too, but their lineage is
-    intact so they recompute — only a perf cost), and the
-    registry-tracked localCheckpoint RDD blocks (which clearCache does
-    NOT touch). Untracked checkpoints created by the application are
-    left alone — their truncated lineage cannot be recomputed (ADVICE
-    r03). Only call after the query's result DataFrame is fully
+    intact so they recompute — only a perf cost). clearCache does NOT
+    touch checkpoint blocks, which is why checkpoints are tracked by
+    handle. Only call after the query's result DataFrame is fully
     materialized."""
     while _PERSISTED:
-        df = _PERSISTED.pop()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
+        _unpin(_PERSISTED.pop())
     spark.catalog.clearCache()
-    live = _persistent_rdd_ids(spark)
-    _unpersist_rdd_ids(spark, _TRACKED_RDD_IDS & live)
-    _TRACKED_RDD_IDS.clear()
 
 
 def q(name: str, sql: Optional[str]):

@@ -31,13 +31,13 @@ from pyspark.sql import functions as F
 
 from readembedability_spark.queries import (
     REGISTRY,
+    _checkpoint_rdd,
     _local_checkpoint,
     _parts_for,
     _persist,
-    _persistent_rdd_ids,
     _resize,
     _t,
-    _unpersist_rdd_ids,
+    _unpin,
     q,
     q_baseline,
 )
@@ -683,7 +683,6 @@ def _connected_components(spark, edges):
     every node appearing in `edges` (columns a, b). Alternating
     large-star/small-star; exact edge-set-equality fixpoint; prior
     rounds' localCheckpoint storage freed eagerly."""
-    before0 = _persistent_rdd_ids(spark)
     cur = (
         edges.filter(F.col("a") != F.col("b"))
         .distinct()
@@ -692,7 +691,6 @@ def _connected_components(spark, edges):
         # freeze it so each contraction round doesn't replay the whole
         # MinHash pipeline
     )
-    cur_ids = _persistent_rdd_ids(spark) - before0
     # one count does double duty (r9): it is the emptiness probe AND
     # the carried edge count, so each round runs ONE count job (on nxt)
     # instead of recounting the already-counted cur a second time.
@@ -702,11 +700,9 @@ def _connected_components(spark, edges):
     global _CC_LAST_ROUNDS
     converged = False
     for rounds in range(1, _CC_MAX_ROUNDS + 1):
-        before = _persistent_rdd_ids(spark)
         # eager=False: the count below materializes the checkpoint in
         # the same job instead of paying a separate result-stage job
         nxt = _local_checkpoint(_small_star(_large_star(cur)), eager=False)
-        created = _persistent_rdd_ids(spark) - before
         # convergence = nxt IS a star forest (no node is both a child
         # and a parent) — the exact fixpoint of the alternating
         # contraction (a star forest is invariant under both star
@@ -719,8 +715,8 @@ def _connected_components(spark, edges):
         same = nxt.join(
             nxt.select(F.col("b").alias("a")).distinct(), "a", "left_semi"
         ).isEmpty()
-        _unpersist_rdd_ids(spark, cur_ids)
-        cur, cur_ids = nxt, created
+        _unpin(_checkpoint_rdd(cur))
+        cur = nxt
         if same:
             _CC_LAST_ROUNDS = rounds
             converged = True
@@ -1841,31 +1837,50 @@ def q_profile_documents(spark, sf_dir):
 _PR_ITERS = 3
 _PR_DAMP = 0.85
 
-#: one unrolled PageRank iteration: rank = (1-d)/N + d * Σ_in rank/deg
-_PR_ITER_SQL = """
-    dm{t} AS (
+#: one unrolled PageRank iteration, parameterized by table names so
+#: the same update serves the plain graph (_pr_iters_sql) and both
+#: phases of q_pagerank_incremental:
+#: rank = (1-d)/N + d * (Σ_in rank/deg + dangling_mass/N).
+_PR_GEN_ITER_SQL = """
+    {dm}{t} AS (
       SELECT COALESCE(SUM(rp.r), 0) AS m
-      FROM r{p} rp JOIN sinks USING (v)),
-    r{t} AS (
-      SELECT nodes.v,
-             {teleport} / nn.n
-               + {damp} * (COALESCE(SUM(rp.r / deg.d), 0)
-                           + MAX(dm{t}.m) / nn.n)
+      FROM {r}{p} rp JOIN {sinks} USING (v)),
+    {r}{t} AS (
+      SELECT {nodes}.v,
+             {teleport} / {nn}.n
+               + {damp} * (COALESCE(SUM(rp.r / {deg}.d), 0)
+                           + MAX({dm}{t}.m) / {nn}.n)
                AS r
-      FROM nodes CROSS JOIN nn CROSS JOIN dm{t}
-      LEFT JOIN edges ON edges.dst = nodes.v
-      LEFT JOIN r{p} rp ON rp.v = edges.src
-      LEFT JOIN deg ON deg.src = edges.src
-      GROUP BY nodes.v, nn.n)
+      FROM {nodes} CROSS JOIN {nn} CROSS JOIN {dm}{t}
+      LEFT JOIN {edges} ON {edges}.dst = {nodes}.v
+      LEFT JOIN {r}{p} rp ON rp.v = {edges}.src
+      LEFT JOIN {deg} ON {deg}.src = {edges}.src
+      GROUP BY {nodes}.v, {nn}.n)
 """
 
 
-def _pr_iters_sql() -> str:
+def _pr_gen_iters(iters, r, dm, nodes, nn, edges, deg, sinks) -> str:
     return ",".join(
-        _PR_ITER_SQL.format(
-            t=t, p=t - 1, teleport=round(1 - _PR_DAMP, 2), damp=_PR_DAMP
+        _PR_GEN_ITER_SQL.format(
+            t=t,
+            p=t - 1,
+            r=r,
+            dm=dm,
+            nodes=nodes,
+            nn=nn,
+            edges=edges,
+            deg=deg,
+            sinks=sinks,
+            teleport=round(1 - _PR_DAMP, 2),
+            damp=_PR_DAMP,
         )
-        for t in range(1, _PR_ITERS + 1)
+        for t in range(1, iters + 1)
+    )
+
+
+def _pr_iters_sql() -> str:
+    return _pr_gen_iters(
+        _PR_ITERS, "r", "dm", "nodes", "nn", "edges", "deg", "sinks"
     )
 
 
@@ -2099,9 +2114,9 @@ def _pagerank_loop(spark, edges, seeds=None, iters=_PR_ITERS, init=None):
 
 
 #: one unrolled TrustRank iteration: rank = (1-d)·s(v) + d·(Σ_in r/deg
-#: + dangling_mass·s(v)) — identical to _PR_ITER_SQL except both the
-#: teleport and the dangling return are weighted by the personalized
-#: seed share s(v) instead of the uniform 1/n.
+#: + dangling_mass·s(v)) — identical to _PR_GEN_ITER_SQL except both
+#: the teleport and the dangling return are weighted by the
+#: personalized seed share s(v) instead of the uniform 1/n.
 _TR_ITER_SQL = """
     tdm{t} AS (
       SELECT COALESCE(SUM(rp.r), 0) AS m
@@ -6747,7 +6762,7 @@ def _lrn_train(spark, sf_dir):
     w_rows = sorted(
         (r["b"], 0) for r in feats.select("b").distinct().collect()
     )
-    feats0.unpersist()
+    _unpin(feats0)
     n_lit = F.lit(float(n_docs))
     # NOTE (r9): chaining all rounds into one lazy plan was tried and
     # reverted — w feeds two subtrees per round, so the un-collected
@@ -9523,45 +9538,6 @@ def q_bm25_eval(spark, sf_dir):
 #: far fewer power iterations than a cold restart — that gap is the
 #: entire economics of per-batch authority updates.
 _PR_INC_ITERS = 2
-
-#: table-name-parameterized unrolled PageRank iteration — the same
-#: update as _PR_ITER_SQL, reused for BOTH the warm phase (o*-prefixed
-#: prior-graph tables) and the incremental phase (full-graph tables).
-_PR_GEN_ITER_SQL = """
-    {dm}{t} AS (
-      SELECT COALESCE(SUM(rp.r), 0) AS m
-      FROM {r}{p} rp JOIN {sinks} USING (v)),
-    {r}{t} AS (
-      SELECT {nodes}.v,
-             {teleport} / {nn}.n
-               + {damp} * (COALESCE(SUM(rp.r / {deg}.d), 0)
-                           + MAX({dm}{t}.m) / {nn}.n)
-               AS r
-      FROM {nodes} CROSS JOIN {nn} CROSS JOIN {dm}{t}
-      LEFT JOIN {edges} ON {edges}.dst = {nodes}.v
-      LEFT JOIN {r}{p} rp ON rp.v = {edges}.src
-      LEFT JOIN {deg} ON {deg}.src = {edges}.src
-      GROUP BY {nodes}.v, {nn}.n)
-"""
-
-
-def _pr_gen_iters(iters, r, dm, nodes, nn, edges, deg, sinks) -> str:
-    return ",".join(
-        _PR_GEN_ITER_SQL.format(
-            t=t,
-            p=t - 1,
-            r=r,
-            dm=dm,
-            nodes=nodes,
-            nn=nn,
-            edges=edges,
-            deg=deg,
-            sinks=sinks,
-            teleport=round(1 - _PR_DAMP, 2),
-            damp=_PR_DAMP,
-        )
-        for t in range(1, iters + 1)
-    )
 
 
 @q(

@@ -16,6 +16,7 @@ import readembedability_spark.textops as textops
 from readembedability_spark.queries import (
     _PERSISTED,
     REGISTRY,
+    _persist,
     release_caches,
 )
 from readembedability_spark.textops import (
@@ -160,6 +161,31 @@ def test_cc_raises_on_round_exhaustion(spark, monkeypatch):
     release_caches(spark)
 
 
+def test_cc_keeps_upstream_persist_anchor(spark):
+    """An unmaterialized _persist anchor upstream of the CC loop gets
+    cached inside the loop's first lazy checkpoint (AQE runs the
+    upstream stages there). The loop frees only its own round
+    checkpoints, so the anchor's cache survives for later readers of
+    the same table, and release_caches then frees everything."""
+    chain = [(i, i + 1) for i in range(16)]
+    edges = _persist(spark.createDataFrame(chain, "a long, b long"))
+    _connected_components(spark, edges).collect()
+    jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+    builder = (
+        spark._jsparkSession.sharedState()  # noqa: SLF001
+        .cacheManager()
+        .lookupCachedData(edges._jdf)  # noqa: SLF001
+        .get()
+        .cachedRepresentation()
+        .cacheBuilder()
+    )
+    assert builder.isCachedColumnBuffersLoaded()
+    anchor_rdd = builder.cachedColumnBuffers().id()
+    assert jsc.getPersistentRDDs().contains(anchor_rdd)
+    release_caches(spark)
+    assert jsc.getPersistentRDDs().size() == 0
+
+
 # ---------------------------------------------------------------------------
 # Edit-distance blocking on a skewed ("the ...") corpus
 # ---------------------------------------------------------------------------
@@ -248,6 +274,8 @@ _PINNING_QUERIES = [
     "q_hard_negatives",
     "q_bigram_lm_bits",
     "q_dedup_embedding_clusters",
+    "q_pagerank",
+    "q_crawl_plan",
 ]
 
 
