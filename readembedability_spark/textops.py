@@ -971,11 +971,120 @@ def q_simhash_pairs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Similarity search over embeddings
 # ---------------------------------------------------------------------------
+#
+# The family's one core: _embeddings (the scan), _cosine, _top_k,
+# _probe_sims (brute force), _rerank (candidate pairs -> exact cosine
+# top-k), _mean_vectors (per-cell mean), _hyperplane_bits (LSH
+# signatures) and _adc_shortlist (PQ asymmetric-distance shortlist).
+
+#: the probe (query) side of every probe-side ANN query: vec_id < 10
+_N_PROBES = 10
 
 
 def _dot(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+    )
+
+
+def _embeddings(spark, sf_dir, *extra, norm=False):
+    """(vec_id, *extra, v[, n]): the embeddings table with every vector
+    cast to array<double>. norm=True adds the L2 norm n, computed once
+    per vector instead of once per scored pair."""
+    emb = _t(spark, sf_dir, "embeddings").select(
+        "vec_id", *extra, F.col("embedding").cast("array<double>").alias("v")
+    )
+    if norm:
+        emb = emb.withColumn("n", F.sqrt(_dot(F.col("v"), F.col("v"))))
+    return emb
+
+
+def _probes(df):
+    return df.filter(F.col("vec_id") < _N_PROBES)
+
+
+def _side(emb, id_col, tag):
+    """emb's (vec_id, v[, n]) as (id_col, {tag}v[, {tag}n]): one side of
+    a pair join."""
+    cols = [F.col("vec_id").alias(id_col), F.col("v").alias(f"{tag}v")]
+    if "n" in emb.columns:
+        cols.append(F.col("n").alias(f"{tag}n"))
+    return emb.select(*cols)
+
+
+def _cosine(a, b, na=None, nb=None):
+    """Cosine of the array columns a and b, NULL when either norm is
+    zero — the oracles' value (DuckDB divides by zero to NULL, a plain
+    Spark division raises under ANSI). na/nb name norm columns the
+    caller already carries; otherwise the norms are computed here."""
+
+    def norm(x, n):
+        return F.col(n) if n else F.sqrt(_dot(F.col(x), F.col(x)))
+
+    return F.try_divide(_dot(F.col(a), F.col(b)), norm(a, na) * norm(b, nb))
+
+
+def _top_k(df, k, score="sim", tie="cid", part="qid"):
+    """df's rows ranked <= k (kept as rn) within each `part` by
+    ROUND(score, 6) DESC, tie ASC — the oracles' ROW_NUMBER() window.
+    A NULL score ranks last, as under DuckDB's NULLS LAST."""
+    w = Window.partitionBy(part).orderBy(F.desc(F.round(score, 6)), F.asc(tie))
+    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") <= k)
+
+
+def _top_sims(sims, k):
+    """(qid, cid, sim): the top-k scored pairs per probe, sim reported
+    to 4 places as every oracle reports it."""
+    return _top_k(sims, k).select("qid", "cid", F.round("sim", 4).alias("sim"))
+
+
+def _probe_sims(emb):
+    """(qid, cid, sim): exact cosine of every probe against every other
+    vector, the probe side broadcast — probes × n compares, linear in
+    the table."""
+    probes = F.broadcast(_side(_probes(emb), "qid", "q"))
+    return (
+        _side(emb, "cid", "c")
+        .crossJoin(probes)
+        .filter(F.col("qid") != F.col("cid"))
+        .select("qid", "cid", _cosine("qv", "cv").alias("sim"))
+    )
+
+
+def _rerank(cand, emb, k, where=None):
+    """(qid, cid, sim): the exact-cosine top-k of the candidate pairs
+    (qid, cid) on the original vectors. The probe side is broadcast and
+    the candidate side is an equi-join on cid, so only candidates are
+    scored. With emb's norm column n each norm is computed once per
+    vector, else once per pair. `where` filters the scored pairs before
+    ranking."""
+    norms = ("qn", "cn") if "n" in emb.columns else ()
+    sims = (
+        cand.join(F.broadcast(_side(_probes(emb), "qid", "q")), "qid")
+        .join(_side(emb, "cid", "c"), "cid")
+        .select("qid", "cid", _cosine("qv", "cv", *norms).alias("sim"))
+    )
+    if where is not None:
+        sims = sims.filter(where)
+    return _top_sims(sims, k)
+
+
+def _mean_vectors(df, *keys, rounded=True):
+    """(*keys, c): the mean of df's vectors v per cell — posexplode, one
+    (cell, dim) AVG, re-collected in dim order. rounded: per-coordinate
+    ROUND(…,6), so both engines hold bit-identical centroids."""
+    dims = df.select(*keys, F.posexplode("v").alias("d", "x"))
+    cx = F.round(F.avg("x"), 6) if rounded else F.avg("x")
+    return (
+        dims.groupBy(*keys, "d")
+        .agg(cx.alias("cx"))
+        .groupBy(*keys)
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("d", "cx"))),
+                lambda s: s["cx"],
+            ).alias("c")
+        )
     )
 
 
@@ -1002,34 +1111,7 @@ def _dot(a, b):
 def q_ann_cosine(spark, sf_dir):
     """Brute-force cosine top-5 per query vector (the correctness
     baseline for ANN; the scale path is q_ann_lsh)."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    cs = emb.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-    sims = (
-        qs.crossJoin(F.broadcast(cs))
-        .filter(F.col("qid") != F.col("cid"))
-        .select(
-            "qid",
-            "cid",
-            (
-                _dot(F.col("qe"), F.col("ce"))
-                / (
-                    F.sqrt(_dot(F.col("qe"), F.col("qe")))
-                    * F.sqrt(_dot(F.col("ce"), F.col("ce")))
-                )
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(F.round("sim", 6)), F.asc("cid"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
-    )
+    return _top_sims(_probe_sims(_embeddings(spark, sf_dir)), 5)
 
 
 _N_PLANES = 8
@@ -1072,7 +1154,8 @@ def q_ann_lsh(spark, sf_dir):
     """Random-hyperplane LSH bucketing (8 planes; hyperplane sign for
     (plane, dim) derived from md5 so both engines agree). Bucket stats;
     the actual per-bucket search is q_ann_bucketed."""
-    return _emb_buckets_df(spark, sf_dir).groupBy("bucket").agg(
+    bits = _hyperplane_bits(spark, sf_dir, _N_PLANES)
+    return bits.groupBy(F.col("bits").alias("bucket")).agg(
         F.count("*").alias("n_vectors"),
         F.min("vec_id").alias("min_vec"),
         F.max("vec_id").alias("max_vec"),
@@ -1083,10 +1166,12 @@ def q_ann_lsh(spark, sf_dir):
 _SIGN_MATRICES: dict = {}
 
 
-def _lsh_bits_udf(n_planes: int):
-    """Vectorized hyperplane-LSH bit-string per embedding: an
-    Arrow-batched pandas UDF doing ONE numpy matmul per batch — dense
-    projections are linear algebra, the pandas-UDF sweet spot (built-in
+def _hyperplane_bits(spark, sf_dir, n_planes: int):
+    """(vec_id, bits): the n_planes-bit hyperplane-LSH signature of
+    every embedding — q_ann_lsh's bucket and _emb_bands_df's band
+    source. An Arrow-batched pandas UDF doing ONE numpy matmul per
+    batch: dense projections are linear algebra, the pandas-UDF sweet
+    spot (built-in
     higher-order array functions evaluate interpreted per element,
     measured ~30x slower end-to-end, and building the 32-plane Column
     tree costs seconds of py4j round-trips). sign(p, d) = MSB of
@@ -1124,7 +1209,10 @@ def _lsh_bits_udf(n_planes: int):
         B = np.where(X @ S.T > 0, "1", "0")
         return pd.Series(["".join(row) for row in B])
 
-    return bits
+    emb = _spread(
+        spark, _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    )
+    return emb.select("vec_id", bits("embedding").alias("bits"))
 
 
 def _spread(spark, df):
@@ -1138,21 +1226,6 @@ def _spread(spark, df):
         return df.repartition(target)
     return df
 
-
-def _emb_buckets_df(spark, sf_dir):
-    # (vec_id, bucket): zero-shuffle vectorized bucketing.
-    emb = _spread(
-        spark, _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    return emb.select(
-        "vec_id", _lsh_bits_udf(_N_PLANES)("embedding").alias("bucket")
-    )
-
-
-_COS_SQL = (
-    "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
-    " * sqrt(list_dot_product({b}, {b})))"
-)
 
 #: Banded multi-table hyperplane LSH for embeddings. A single 8-plane
 #: bucket (q_ann_lsh) has recall (1-θ/π)^8 ≈ 0.04 at cosine 0.5 — on
@@ -1193,16 +1266,10 @@ _EMB_BANDS_SQL = f"""
 
 
 def _emb_bands_df(spark, sf_dir):
-    # (vec_id, band, bsig): one vectorized 32-plane bit-string per
-    # vector (zero-shuffle, see _lsh_bits_udf), then the band split as
-    # an explode over substrings. Same md5-derived hyperplane family as
-    # _emb_buckets_df.
-    emb = _spread(
-        spark, _t(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    )
-    sigs = emb.select(
-        "vec_id", _lsh_bits_udf(_N_EMB_PLANES)("embedding").alias("bits")
-    )
+    # (vec_id, band, bsig): one vectorized 64-plane bit-string per
+    # vector (zero-shuffle, see _hyperplane_bits), then the band split
+    # as an explode over substrings.
+    sigs = _hyperplane_bits(spark, sf_dir, _N_EMB_PLANES)
     rpb = _N_EMB_PLANES // _N_EMB_BANDS
     band_structs = F.array(
         *[
@@ -1252,51 +1319,25 @@ def q_ann_bucketed(spark, sf_dir):
     join is an equi-join on (band, bsig) — never a cross join of the
     full embeddings table. Top-1 recall ≈ 1-(1-(1-θ/π)^4)^8 ≈ 0.83 at
     cosine 0.5 vs the brute-force q_ann_cosine baseline."""
+    # norms once per vector, not per pair — cuts 2/3 of the dot products;
+    # persisted: emb anchors BOTH pair sides (the plan audit showed 3
+    # parquet scans of embeddings without it — 3× the IO at 100 TB)
+    emb = _persist(_embeddings(spark, sf_dir, norm=True))
+    return _rerank(_band_candidates(spark, sf_dir), emb, 5)
+
+
+def _band_candidates(spark, sf_dir):
+    """(qid, cid): every vector sharing at least one LSH band with a
+    probe. The probe-side band table (probes × bands rows) is broadcast
+    into an equi-join on (band, bsig)."""
     # bands feeds both the candidate side and the filtered query side
     bands = _persist(_emb_bands_df(spark, sf_dir))
-    qb = bands.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), "band", "bsig"
-    )
-    cand = (
+    qb = _probes(bands).select(F.col("vec_id").alias("qid"), "band", "bsig")
+    return (
         bands.join(F.broadcast(qb), ["band", "bsig"])
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("cid"))
         .distinct()
-    )
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("e"),
-    )
-    # norms once per vector, not per pair — cuts 2/3 of the dot products;
-    # persisted: emb anchors BOTH pair sides (the plan audit showed 3
-    # parquet scans of embeddings without it — 3× the IO at 100 TB)
-    emb = _persist(emb.withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e")))))
-    cq = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"),
-        F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    ct = emb.select(
-        F.col("vec_id").alias("cid"),
-        F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    sims = (
-        cand.join(F.broadcast(cq), "qid")
-        .join(ct, "cid")
-        .select(
-            "qid",
-            "cid",
-            (
-                _dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(F.round("sim", 6)), F.asc("cid"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
     )
 
 
@@ -1351,33 +1392,25 @@ def q_dedup_embedding_bucketed(spark, sf_dir):
 
 
 def _emb_verified_pairs_df(spark, sf_dir):
-    bands = _emb_bands_df(spark, sf_dir)
-    buckets = bands.groupBy("band", "bsig").agg(
+    buckets = _emb_bands_df(spark, sf_dir).groupBy("band", "bsig").agg(
         F.array_sort(F.collect_list("vec_id")).alias("ids")
-    )
-    cand = _capped_bucket_pairs(buckets)
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     # norms once per vector, not per pair — cuts 2/3 of the dot products;
     # persisted: emb anchors both pair sides (2 scans otherwise)
-    emb = _persist(emb.withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e")))))
-    ca = emb.select(
-        F.col("vec_id").alias("a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
+    emb = _persist(_embeddings(spark, sf_dir, norm=True))
+    return _emb_near_dups(
+        _capped_bucket_pairs(buckets)
+        .join(_side(emb, "a", "a"), "a")
+        .join(_side(emb, "b", "b"), "b")
     )
-    cb = emb.select(
-        F.col("vec_id").alias("b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        cand.join(ca, "a")
-        .join(cb, "b")
-        .filter(F.round(sim, 6) >= 0.45)
-        .select("a", "b", F.round(sim, 4).alias("sim"))
+
+
+def _emb_near_dups(pairs):
+    """(a, b, sim): the pairs, carrying both sides' vectors and norms
+    (av, an, bv, bn), whose cosine is at least 0.45."""
+    sim = _cosine("av", "bv", "an", "bn")
+    return pairs.filter(F.round(sim, 6) >= 0.45).select(
+        "a", "b", F.round(sim, 4).alias("sim")
     )
 
 
@@ -1415,6 +1448,7 @@ def q_dedup_embedding_clusters(spark, sf_dir):
     )
 
 
+#: cosine between two DuckDB DOUBLE[] expressions
 _IVF_COS = (
     "list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a}))"
     " * sqrt(list_dot_product({b}, {b})))"
@@ -1464,67 +1498,25 @@ def q_ann_ivf(spark, sf_dir):
     within the probed cells via an equi-join on the cell id."""
     # emb feeds the centroid reduce, the query side, and the candidate
     # join - persist so the base table is scanned once, not per reference
-    emb = _persist(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-        )
-    )
-    dims = emb.select(
-        "vec_id", "label", F.posexplode("e")
-    ).withColumnsRenamed({"pos": "d", "col": "x"})
-    cent = dims.groupBy("label", "d").agg(F.avg("x").alias("cx"))
-    cents = cent.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "cx"))),
-            lambda s: s["cx"],
-        ).alias("c")
-    )
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    cos_qc = _dot(F.col("qe"), F.col("c")) / (
-        F.sqrt(_dot(F.col("qe"), F.col("qe")))
-        * F.sqrt(_dot(F.col("c"), F.col("c")))
-    )
-    w_assign = Window.partitionBy("qid").orderBy(
-        F.desc(F.round(cos_qc, 6)), F.asc("label")
-    )
-    assign = (
-        qs.crossJoin(F.broadcast(cents))
-        .withColumn("rn", F.row_number().over(w_assign))
-        .filter(F.col("rn") <= 2)
-        .select("qid", "label")
-    )
+    emb = _persist(_embeddings(spark, sf_dir, "label"))
+    cents = _mean_vectors(emb, "label", rounded=False)
+    assign = _km_assign(
+        _probes(emb), cents.withColumnRenamed("label", "cid"), nprobe=2
+    ).select(F.col("vec_id").alias("qid"), F.col("cell").alias("label"))
     cands = (
         assign.join(emb, "label")
         .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
+        .select("qid", F.col("vec_id").alias("cid"), F.col("v").alias("cv"))
     )
-    sims = cands.join(F.broadcast(qs), "qid").select(
-        "qid",
-        "cid",
-        (
-            _dot(F.col("qe"), F.col("ce"))
-            / (
-                F.sqrt(_dot(F.col("qe"), F.col("qe")))
-                * F.sqrt(_dot(F.col("ce"), F.col("ce")))
-            )
-        ).alias("sim"),
-    )
-    w_top = Window.partitionBy("qid").orderBy(F.desc(F.round("sim", 6)), F.asc("cid"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
+    sims = cands.join(F.broadcast(_side(_probes(emb), "qid", "q")), "qid")
+    return _top_sims(
+        sims.select("qid", "cid", _cosine("qv", "cv").alias("sim")), 3
     )
 
 
 _KM_K = 8  # k-means cells (at 100 TB: k ≈ sqrt(n))
 _KM_ROUNDS = 2  # fixed Lloyd rounds so the oracle can unroll them
 _KM_NPROBE = 2
-
-#: cosine between two DuckDB DOUBLE[] expressions
-_KM_COS = _IVF_COS
 
 #: one unrolled Lloyd round in SQL: assign every vector to its nearest
 #: centroid (cosine, ROUND(…,6) + centroid-id tie-break), then recompute
@@ -1548,7 +1540,7 @@ _KM_ROUND_SQL = """
 
 
 def _km_rounds_sql() -> str:
-    cos_vc = _KM_COS.format(a="e.v", b="cp.c")
+    cos_vc = _IVF_COS.format(a="e.v", b="cp.c")
     return ",".join(
         _KM_ROUND_SQL.format(r=r, p=r - 1, cos_vc=cos_vc)
         for r in range(1, _KM_ROUNDS + 1)
@@ -1566,7 +1558,7 @@ def _km_rounds_sql() -> str:
       SELECT vec_id, cell FROM (
         SELECT e.vec_id, cp.cid AS cell,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 ROUND({_KM_COS.format(a='e.v', b='cp.c')}, 6) DESC,
+                 ROUND({_IVF_COS.format(a='e.v', b='cp.c')}, 6) DESC,
                  cp.cid) AS rn
         FROM e CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn = 1),
     qv AS (SELECT vec_id AS qid, v AS qe FROM e WHERE vec_id < 10),
@@ -1574,7 +1566,7 @@ def _km_rounds_sql() -> str:
       SELECT qid, cell FROM (
         SELECT qv.qid, cp.cid AS cell,
                ROW_NUMBER() OVER (PARTITION BY qv.qid ORDER BY
-                 ROUND({_KM_COS.format(a='qv.qe', b='cp.c')}, 6) DESC,
+                 ROUND({_IVF_COS.format(a='qv.qe', b='cp.c')}, 6) DESC,
                  cp.cid) AS rn
         FROM qv CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn <= {_KM_NPROBE}),
     cands AS (
@@ -1583,7 +1575,7 @@ def _km_rounds_sql() -> str:
       WHERE f.vec_id <> qa.qid),
     sims AS (
       SELECT cands.qid, cands.cid,
-             {_KM_COS.format(a='qv.qe', b='t.v')} AS sim
+             {_IVF_COS.format(a='qv.qe', b='t.v')} AS sim
       FROM cands
       JOIN qv ON qv.qid = cands.qid
       JOIN e t ON t.vec_id = cands.cid)
@@ -1612,51 +1604,23 @@ def q_ann_ivf_kmeans(spark, sf_dir):
 
 
 def _ann_ivf_kmeans_df(spark, sf_dir, nprobe: int):
-    emb = _persist(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
+    emb = _persist(_embeddings(spark, sf_dir))
+    return _rerank(_ivf_candidates(emb, nprobe), emb, 3)
+
+
+def _ivf_candidates(emb, nprobe: int):
+    """(qid, cid): every vector in the nprobe trained k-means cells
+    nearest each probe — the trained quantizer assigns every vector one
+    cell and each probe its top-nprobe cells, joined on the cell id."""
     cents = _km_train(emb)
-    cells = _km_assign(emb, cents, nprobe=1).select(
-        "vec_id", "cell"
+    cells = _km_assign(emb, cents, nprobe=1)
+    qa = _km_assign(_probes(emb), cents, nprobe=nprobe).select(
+        F.col("vec_id").alias("qid"), "cell"
     )
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qe")
-    )
-    qa = _km_assign(
-        qs.select(F.col("qid").alias("vec_id"), F.col("qe").alias("v")),
-        cents,
-        nprobe=nprobe,
-    ).select(F.col("vec_id").alias("qid"), "cell")
-    cands = (
+    return (
         qa.join(cells, "cell")
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", F.col("vec_id").alias("cid"))
-    )
-    tgt = emb.select(F.col("vec_id").alias("cid"), F.col("v").alias("ce"))
-    sims = (
-        cands.join(F.broadcast(qs), "qid")
-        .join(tgt, "cid")
-        .select(
-            "qid",
-            "cid",
-            (
-                _dot(F.col("qe"), F.col("ce"))
-                / (
-                    F.sqrt(_dot(F.col("qe"), F.col("qe")))
-                    * F.sqrt(_dot(F.col("ce"), F.col("ce")))
-                )
-            ).alias("sim"),
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("sim", 6)), F.asc("cid")
-    )
-    return (
-        sims.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
     )
 
 
@@ -1664,10 +1628,7 @@ def _km_assign(vecs, cents, nprobe: int, keep_v: bool = False):
     """(vec_id, cell[, v]) — nearest-centroid assignment by cosine,
     ROUND(…,6) + centroid-id tie-break; nprobe>1 keeps the top-p cells.
     vecs: (vec_id, v); cents: (cid, c), k rows, broadcast."""
-    cos = _dot(F.col("v"), F.col("c")) / (
-        F.sqrt(_dot(F.col("v"), F.col("v")))
-        * F.sqrt(_dot(F.col("c"), F.col("c")))
-    )
+    cos = _cosine("v", "c")
     scored = vecs.crossJoin(F.broadcast(cents))
     if nprobe == 1:
         # Training-loop hot path (VERDICT r03 #6): max_by is a partial-
@@ -1679,9 +1640,16 @@ def _km_assign(vecs, cents, nprobe: int, keep_v: bool = False):
         # monotonic; subtracting cid (< 2^21 cells) encodes the same
         # lowest-centroid-id tie-break as the window branch. A flat
         # (long,long) buffer keeps the keep_v=False aggregate inside
-        # HashAggregate (struct buffers would force SortAggregate).
+        # HashAggregate (struct buffers would force SortAggregate). A
+        # NULL cosine (zero vector) takes -1_000_001, below every real
+        # cosine, with the same cid tie-break — the window's NULLS LAST;
+        # max_by would otherwise skip it and drop the vector from every
+        # cell.
         ord_ = (
-            F.round(F.round(cos, 6) * F.lit(1_000_000.0), 0).cast("long")
+            F.coalesce(
+                F.round(F.round(cos, 6) * F.lit(1_000_000.0), 0).cast("long"),
+                F.lit(-1_000_001).cast("long"),
+            )
             * F.lit(1 << 21)
             - F.col("cid")
         )
@@ -1695,37 +1663,10 @@ def _km_assign(vecs, cents, nprobe: int, keep_v: bool = False):
         return agg.select(
             "vec_id", F.col("b.cell").alias("cell"), F.col("b.v").alias("v")
         )
-    w = Window.partitionBy("vec_id").orderBy(
-        F.desc(F.round(cos, 6)), F.asc("cid")
-    )
     out_cols = ["vec_id", F.col("cid").alias("cell")] + (
         ["v"] if keep_v else []
     )
-    return (
-        scored
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= nprobe)
-        .select(*out_cols)
-    )
-
-
-def _km_update(assign):
-    """(cid, c) — per-cell mean vector with per-coordinate ROUND(…,6)
-    (cross-engine bit-stability); the distributed k-means reduce."""
-    dims = assign.select("cell", F.posexplode("v")).withColumnsRenamed(
-        {"pos": "d", "col": "x"}
-    )
-    m = dims.groupBy("cell", "d").agg(F.round(F.avg("x"), 6).alias("cx"))
-    return (
-        m.groupBy("cell")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "cx"))),
-                lambda s: s["cx"],
-            ).alias("c")
-        )
-        .select(F.col("cell").alias("cid"), "c")
-    )
+    return _top_k(scored, nprobe, cos, part="vec_id").select(*out_cols)
 
 
 def _km_train(emb):
@@ -1737,7 +1678,8 @@ def _km_train(emb):
         F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
     for _ in range(_KM_ROUNDS):
-        cents = _km_update(_km_assign(emb, cents, nprobe=1, keep_v=True))
+        assign = _km_assign(emb, cents, nprobe=1, keep_v=True)
+        cents = _mean_vectors(assign, "cell").withColumnRenamed("cell", "cid")
     return _local_checkpoint(cents, eager=False)
 
 
@@ -2949,16 +2891,11 @@ def _pq_subspaces(emb):
 def _pq_assign(sub, codebook):
     """(vec_id, s, code, vs): per-subspace nearest codebook entry
     (L2, ROUND(…,6) + code tie-break — the deterministic cross-engine
-    rule)."""
-    w = Window.partitionBy("vec_id", "s").orderBy(
-        F.asc(F.round(_pq_l2("vs", "c"), 6)), F.asc("code")
-    )
-    return (
-        sub.join(F.broadcast(codebook), "s")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "s", "code", "vs")
-    )
+    rule). Nearest is the top-1 negated distance: ROUND is symmetric
+    (half-up), so ROUND(-l2, 6) DESC orders as ROUND(l2, 6) ASC."""
+    scored = sub.join(F.broadcast(codebook), "s")
+    near = _top_k(scored, 1, -_pq_l2("vs", "c"), "code", ["vec_id", "s"])
+    return near.select("vec_id", "s", "code", "vs")
 
 
 def _pq_codebook(sub):
@@ -2971,23 +2908,46 @@ def _pq_codebook(sub):
     c0 = sub.filter(F.col("vec_id") < _PQ_K).select(
         "s", F.col("vec_id").alias("code"), F.col("vs").alias("c")
     )
-    a1 = _pq_assign(sub, c0)
-    d1 = a1.select("s", "code", F.posexplode("vs")).withColumnsRenamed(
-        {"pos": "d", "col": "x"}
+    a1 = _pq_assign(sub, c0).withColumnRenamed("vs", "v")
+    return _local_checkpoint(_mean_vectors(a1, "s", "code"), eager=False)
+
+
+def _pq_index(emb):
+    """(sub, codebook, codes): the trained PQ index of emb — its
+    subspace slices, the codebook, and every vector's per-subspace
+    code as (cid, s, code). Shared by q_ann_pq and q_ann_ivf_pq."""
+    sub = _pq_subspaces(emb)
+    codebook = _pq_codebook(sub)
+    codes = _pq_assign(sub, codebook).select(
+        F.col("vec_id").alias("cid"), "s", "code"
     )
-    m1 = d1.groupBy("s", "code", "d").agg(
-        F.round(F.avg("x"), 6).alias("cx")
-    )
-    return (
-        m1.groupBy("s", "code")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("d", "cx"))),
-                lambda t: t["cx"],
-            ).alias("c")
+    return sub, codebook, codes
+
+
+def _adc_shortlist(sub, codebook, coded, size: int):
+    """(qid, cid): the top-`size` candidates per probe by PQ asymmetric
+    distance. A per-probe lookup table of subspace partial dots against
+    the codebook (probes × m × k rows, broadcast) is summed over each
+    candidate's codes. coded: candidate codes (cid, s, code[, qid]); with
+    a qid column a candidate is scored for that probe only."""
+    lut = (
+        _probes(sub)
+        .join(F.broadcast(codebook), "s")
+        .select(
+            F.col("vec_id").alias("qid"),
+            "s",
+            "code",
+            _dot(F.col("vs"), F.col("c")).alias("part"),
         )
-        .transform(lambda d: _local_checkpoint(d, eager=False))
     )
+    keys = ["qid", "s", "code"] if "qid" in coded.columns else ["s", "code"]
+    scored = (
+        coded.join(F.broadcast(lut), keys)
+        .filter(F.col("cid") != F.col("qid"))
+        .groupBy("qid", "cid")
+        .agg(F.sum("part").alias("score"))
+    )
+    return _top_k(scored, size, "score").select("qid", "cid")
 
 
 @q(
@@ -3072,59 +3032,9 @@ def q_ann_pq(spark, sf_dir):
     worst case): ADC-only top-3 recall 0.23; shortlist-50 + exact
     re-rank 0.80. Every heavy step is an equi-join keyed by subspace or
     (s, code); the codes table is the only corpus-sized state."""
-    emb = _persist(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    sub = _pq_subspaces(emb)
-    c1 = _pq_codebook(sub)
-    codes = _pq_assign(sub, c1).select("vec_id", "s", "code")
-    qsub = sub.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), "s", F.col("vs").alias("qs")
-    )
-    lut = qsub.join(F.broadcast(c1), "s").select(
-        "qid", "s", "code", _dot(F.col("qs"), F.col("c")).alias("part")
-    )
-    scored = (
-        codes.join(F.broadcast(lut), ["s", "code"])
-        .groupBy("qid", F.col("vec_id").alias("cand"))
-        .agg(F.sum("part").alias("score"))
-        .filter(F.col("cand") != F.col("qid"))
-    )
-    w_adc = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("score", 6)), F.asc("cand")
-    )
-    short = (
-        scored.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= 50)
-        .select("qid", "cand")
-    )
-    eq = emb.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
-    ec = emb.select(F.col("vec_id").alias("cand"), F.col("v").alias("cv"))
-    exact = (
-        short.join(F.broadcast(eq.filter(F.col("qid") < 10)), "qid")
-        .join(ec, "cand")
-        .select(
-            "qid",
-            F.col("cand").alias("cid"),
-            (
-                _dot(F.col("qv"), F.col("cv"))
-                / (
-                    F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                    * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                )
-            ).alias("sim"),
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("sim", 6)), F.asc("cid")
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
-    )
+    emb = _persist(_embeddings(spark, sf_dir))
+    sub, codebook, codes = _pq_index(emb)
+    return _rerank(_adc_shortlist(sub, codebook, codes, 50), emb, 3)
 
 
 _IVFPQ_NPROBE = 2
@@ -3142,7 +3052,7 @@ _IVFPQ_SHORTLIST = 30
       SELECT vec_id, cell FROM (
         SELECT e.vec_id, cp.cid AS cell,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 ROUND({_KM_COS.format(a='e.v', b='cp.c')}, 6) DESC,
+                 ROUND({_IVF_COS.format(a='e.v', b='cp.c')}, 6) DESC,
                  cp.cid) AS rn
         FROM e CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn = 1),
     qv AS (SELECT vec_id AS qid, v AS qe FROM e WHERE vec_id < 10),
@@ -3150,7 +3060,7 @@ _IVFPQ_SHORTLIST = 30
       SELECT qid, cell FROM (
         SELECT qv.qid, cp.cid AS cell,
                ROW_NUMBER() OVER (PARTITION BY qv.qid ORDER BY
-                 ROUND({_KM_COS.format(a='qv.qe', b='cp.c')}, 6) DESC,
+                 ROUND({_IVF_COS.format(a='qv.qe', b='cp.c')}, 6) DESC,
                  cp.cid) AS rn
         FROM qv CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn <= {_IVFPQ_NPROBE}),
     sub AS (
@@ -3237,79 +3147,13 @@ def q_ann_ivf_pq(spark, sf_dir):
     the composition is bit-stable across engines. Every corpus-sized
     step is an equi-join keyed by label, (s, code) or vec_id; the
     codebook and per-query LUT broadcast."""
-    emb = _persist(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-    )
-    # coarse quantizer: the SAME trained cells as q_ann_ivf_kmeans
-    cents = _km_train(emb)
-    cells = _km_assign(emb, cents, nprobe=1).select("vec_id", "cell")
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("v").alias("qv")
-    )
-    qa = _km_assign(
-        qs.select(F.col("qid").alias("vec_id"), F.col("qv").alias("v")),
-        cents,
-        nprobe=_IVFPQ_NPROBE,
-    ).select(F.col("vec_id").alias("qid"), "cell")
-    # PQ codebook + codes: the SAME training recipe as q_ann_pq
-    sub = _pq_subspaces(emb)
-    c1 = _pq_codebook(sub)
-    codes = _pq_assign(sub, c1).select("vec_id", "s", "code")
-    # ADC restricted to probed cells
-    cellcands = (
-        qa.join(cells, "cell")
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("cand"))
-    )
-    ccodes = cellcands.join(
-        codes.withColumnsRenamed({"vec_id": "cand"}), "cand"
-    )
-    qsub = sub.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), "s", F.col("vs").alias("qs")
-    )
-    lut = qsub.join(F.broadcast(c1), "s").select(
-        "qid", "s", "code", _dot(F.col("qs"), F.col("c")).alias("part")
-    )
-    scored = (
-        ccodes.join(F.broadcast(lut), ["qid", "s", "code"])
-        .groupBy("qid", "cand")
-        .agg(F.sum("part").alias("score"))
-    )
-    w_adc = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("score", 6)), F.asc("cand")
-    )
-    short = (
-        scored.withColumn("rn", F.row_number().over(w_adc))
-        .filter(F.col("rn") <= _IVFPQ_SHORTLIST)
-        .select("qid", "cand")
-    )
-    eq = emb.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv2"))
-    ec = emb.select(F.col("vec_id").alias("cand"), F.col("v").alias("cv"))
-    exact = (
-        short.join(F.broadcast(eq.filter(F.col("qid") < 10)), "qid")
-        .join(ec, "cand")
-        .select(
-            "qid",
-            F.col("cand").alias("cid"),
-            (
-                _dot(F.col("qv2"), F.col("cv"))
-                / (
-                    F.sqrt(_dot(F.col("qv2"), F.col("qv2")))
-                    * F.sqrt(_dot(F.col("cv"), F.col("cv")))
-                )
-            ).alias("sim"),
-        )
-    )
-    w_top = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("sim", 6)), F.asc("cid")
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w_top))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
-    )
+    emb = _persist(_embeddings(spark, sf_dir))
+    sub, codebook, codes = _pq_index(emb)
+    # ADC restricted to the probed cells of the SAME trained coarse
+    # quantizer as q_ann_ivf_kmeans
+    coded = _ivf_candidates(emb, _IVFPQ_NPROBE).join(codes, "cid")
+    short = _adc_shortlist(sub, codebook, coded, _IVFPQ_SHORTLIST)
+    return _rerank(short, emb, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -3391,38 +3235,8 @@ def q_ann_recall(spark, sf_dir):
     quantizer, q_ann_pq ADC + re-rank, q_ann_ivf_pq composed index), so a parameter tune that
     silently degrades retrieval flips recall/passed and hash-fails
     the gate."""
-    emb = _persist(
-        _t(spark, sf_dir, "embeddings").select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("e")
-        )
-    )
-    qs = emb.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe")
-    )
-    cs = emb.select(F.col("vec_id").alias("cid"), F.col("e").alias("ce"))
-    sims = (
-        cs.crossJoin(F.broadcast(qs))
-        .filter(F.col("qid") != F.col("cid"))
-        .select(
-            "qid",
-            "cid",
-            (
-                _dot(F.col("qe"), F.col("ce"))
-                / (
-                    F.sqrt(_dot(F.col("qe"), F.col("qe")))
-                    * F.sqrt(_dot(F.col("ce"), F.col("ce")))
-                )
-            ).alias("sim"),
-        )
-    )
-    w = Window.partitionBy("qid").orderBy(
-        F.desc(F.round("sim", 6)), F.asc("cid")
-    )
-    gt = _persist(
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 5)
-        .select("qid", "cid", "rn")
-    )
+    emb = _persist(_embeddings(spark, sf_dir))
+    gt = _persist(_top_k(_probe_sims(emb), 5).select("qid", "cid", "rn"))
     # The four method indexes are INDEPENDENT (each trains its own
     # quantizer with eager checkpoint jobs); build them concurrently so
     # one method's training tail back-fills the executors another left
@@ -3801,26 +3615,9 @@ def q_dedup_embedding(spark, sf_dir):
     the all-pairs CORRECTNESS BASELINE (O(n²) compares, measured 67s on
     just 2000 vectors at sf0.1); the scale path is the banded-LSH
     q_dedup_embedding_bucketed. Norms are precomputed per vector."""
-    emb = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    emb = emb.withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
-    a = emb.select(
-        F.col("vec_id").alias("a"),
-        F.col("e").alias("ea"),
-        F.col("nrm").alias("na"),
-    )
-    b = emb.select(
-        F.col("vec_id").alias("b"),
-        F.col("e").alias("eb"),
-        F.col("nrm").alias("nb"),
-    )
-    sim = _dot(F.col("ea"), F.col("eb")) / (F.col("na") * F.col("nb"))
-    return (
-        a.join(F.broadcast(b), F.col("a") < F.col("b"))
-        .filter(F.round(sim, 6) >= 0.45)
-        .select("a", "b", F.round(sim, 4).alias("sim"))
-    )
+    emb = _embeddings(spark, sf_dir, norm=True)
+    a, b = _side(emb, "a", "a"), _side(emb, "b", "b")
+    return _emb_near_dups(a.join(F.broadcast(b), F.col("a") < F.col("b")))
 
 
 # ---------------------------------------------------------------------------
@@ -3941,13 +3738,8 @@ def q_tfidf(spark, sf_dir):
             (F.col("tf") * F.log(F.col("n") / F.col("df"))).alias("tfidf"),
         )
     )
-    w_rank = Window.partitionBy("doc_id").orderBy(
-        F.desc(F.round("tfidf", 6)), F.asc("w")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w_rank))
-        .filter(F.col("rn") <= 3)
-        .select("doc_id", "w", F.round("tfidf", 4).alias("tfidf"))
+    return _top_k(scored, 3, "tfidf", "w", "doc_id").select(
+        "doc_id", "w", F.round("tfidf", 4).alias("tfidf")
     )
 
 
@@ -5873,46 +5665,10 @@ def q_hard_negatives(spark, sf_dir):
     banded-LSH candidate machinery as q_ann_bucketed (equi-join on
     (band, bsig), query side filtered), with the similarity band filter
     applied before the per-query top-3 window."""
-    bands = _persist(_emb_bands_df(spark, sf_dir))
-    qb = bands.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), "band", "bsig"
-    )
-    cand = (
-        bands.join(F.broadcast(qb), ["band", "bsig"])
-        .filter(F.col("vec_id") != F.col("qid"))
-        .select("qid", F.col("vec_id").alias("cid"))
-        .distinct()
-    )
-    emb = _persist(
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
-        .withColumn("nrm", F.sqrt(_dot(F.col("e"), F.col("e"))))
-    )
-    cq = emb.select(
-        F.col("vec_id").alias("qid"), F.col("e").alias("qe"),
-        F.col("nrm").alias("qn"),
-    )
-    ct = emb.select(
-        F.col("vec_id").alias("cid"), F.col("e").alias("ce"),
-        F.col("nrm").alias("cn"),
-    )
-    sims = (
-        cand.join(F.broadcast(cq.filter(F.col("qid") < 10)), "qid")
-        .join(ct, "cid")
-        .select(
-            "qid",
-            "cid",
-            (_dot(F.col("qe"), F.col("ce")) / (F.col("qn") * F.col("cn"))).alias("sim"),
-        )
-    )
-    banded = sims.filter(
-        (F.round("sim", 6) >= 0.2) & (F.round("sim", 6) < 0.45)
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc(F.round("sim", 6)), F.asc("cid"))
-    return (
-        banded.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= 3)
-        .select("qid", "cid", F.round("sim", 4).alias("sim"))
+    emb = _persist(_embeddings(spark, sf_dir, norm=True))
+    sim = F.round("sim", 6)
+    return _rerank(
+        _band_candidates(spark, sf_dir), emb, 3, where=(sim >= 0.2) & (sim < 0.45)
     )
 
 
@@ -12515,12 +12271,12 @@ def q_embedding_drift(spark, sf_dir):
     exchange is keyed by (label, d) — cardinality label×dim, so
     partials absorb the corpus and the shuffle is constant-size; no
     window, no join."""
-    emb = _t(spark, sf_dir, "embeddings")
     dims = (
-        emb.select(
+        _embeddings(spark, sf_dir, "label")
+        .select(
             "label",
             (F.col("vec_id") % 2).alias("batch"),
-            F.posexplode(F.col("embedding").cast("array<double>")),
+            F.posexplode("v"),
         )
         .withColumnsRenamed({"pos": "d0", "col": "x"})
         .select(

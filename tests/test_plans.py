@@ -142,6 +142,8 @@ def _op_counts(p: str):
             "BroadcastExchange",
             "SortMergeJoin",
             "BroadcastHashJoin",
+            "BroadcastNestedLoopJoin",
+            "CartesianProduct",
             "Window",
         )
     }
@@ -316,3 +318,53 @@ def test_minhash_core_single_hash_aggregate(spark, monkeypatch, name):
     assert len(folds) == 1, folds
     assert "min(cast(conv(substring(" in folds[0]
     assert not re.search(r"InMemoryRelation \[doc_id#\d+L?, sh#\d+\]", plan)
+
+
+#: Plan-shape ceilings of the embedding-similarity family at sf0.01,
+#: pinned from the plans before its shared core (textops.py `_cosine`,
+#: `_top_k`, `_rerank`, ...) replaced the per-query copies: shuffle
+#: Exchanges, nested-loop/cartesian joins, Windows, embeddings scans.
+_EMB_PLAN_CEILINGS = {
+    "q_ann_cosine": (1, 1, 1, 2),
+    "q_ann_lsh": (2, 0, 0, 1),
+    "q_ann_bucketed": (3, 0, 1, 2),
+    "q_dedup_embedding_bucketed": (3, 0, 0, 2),
+    "q_dedup_embedding_clusters": (3, 0, 1, 0),
+    "q_ann_ivf": (3, 1, 2, 1),
+    "q_ann_ivf_kmeans": (6, 2, 2, 1),
+    "q_ann_pq": (5, 0, 3, 1),
+    "q_ann_ivf_pq": (10, 2, 4, 1),
+    "q_ann_recall": (37, 9, 12, 2),
+    "q_dedup_embedding": (0, 1, 0, 2),
+    "q_hard_negatives": (3, 0, 1, 2),
+}
+
+
+@pytest.mark.parametrize("name", list(_EMB_PLAN_CEILINGS))
+def test_embedding_family_plan_shape(spark, name):
+    """No embedding-similarity query gains a shuffle, a nested-loop or
+    cartesian join, a window or an embeddings scan over its pinned
+    ceiling."""
+    import re
+
+    from readembedability_spark.queries import (
+        BASELINE_REGISTRY,
+        REGISTRY,
+        release_caches,
+    )
+    from test_oracle_parity import SF_DIR
+
+    # a table an earlier query left cached would be substituted here
+    release_caches(spark)
+    df = {**REGISTRY, **BASELINE_REGISTRY}[name].spark(spark, SF_DIR)
+    plan = _plan(df)
+    release_caches(spark)
+    c = _op_counts(plan)
+    got = (
+        c["Exchange"],
+        c["BroadcastNestedLoopJoin"] + c["CartesianProduct"],
+        c["Window"],
+        len(re.findall(r"^Location: .*embeddings\.parquet\]", plan, re.M)),
+    )
+    ceiling = _EMB_PLAN_CEILINGS[name]
+    assert all(g <= m for g, m in zip(got, ceiling)), (got, ceiling)

@@ -6,6 +6,7 @@ straddler-offset collect stays bounded by the partition count.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from readembedability_spark.textops import (
@@ -391,7 +392,7 @@ def _write_embeddings(d, rows):
     _pq_mod.write_table(tbl, str(d / "embeddings.parquet"))
 
 
-def _oracle_rows_emb(sf_dir, name):
+def _emb_con(sf_dir):
     con = _duckdb.connect()
     import os as _os
 
@@ -401,6 +402,11 @@ def _oracle_rows_emb(sf_dir, name):
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
             )
+    return con
+
+
+def _oracle_rows_emb(sf_dir, name):
+    con = _emb_con(sf_dir)
     return sorted(tuple(r) for r in con.execute(REGISTRY[name].sql).fetchall())
 
 
@@ -430,6 +436,115 @@ def test_ann_recall_null_not_crash_on_single_embedding(spark, tmp_path):
     assert s == _oracle_rows_emb(tmp_path, "q_ann_recall")
     assert len(s) == 4
     assert all(r[1] is None and r[2] is None for r in s)
+
+
+#: every query that scores embeddings by cosine
+_EMB_COSINE_QUERIES = [
+    "q_ann_cosine",
+    "q_ann_bucketed",
+    "q_dedup_embedding_bucketed",
+    "q_dedup_embedding_clusters",
+    "q_ann_ivf",
+    "q_ann_ivf_kmeans",
+    "q_ann_pq",
+    "q_ann_ivf_pq",
+    "q_ann_recall",
+    "q_dedup_embedding",
+    "q_hard_negatives",
+]
+
+_ZERO_VEC = 37
+
+
+@pytest.fixture(scope="module")
+def planted_emb(tmp_path_factory):
+    """The sf0.01 embeddings with vec_id 37 zeroed (cosine undefined:
+    both engines must give NULL, not an ANSI divide-by-zero), and two
+    non-probe, non-seed vectors replaced by 2x and 4x copies of query
+    0's nearest neighbour. Power-of-two scaling is exact, so the copies
+    tie the neighbour's cosine bit-for-bit and only the id tie-break
+    orders them. Returns (dir, neighbour, copy ids)."""
+    import numpy as np
+
+    d = tmp_path_factory.mktemp("planted_emb")
+    tbl = _pq_mod.read_table("/root/testdata/sf0.01/embeddings.parquet")
+    ids = tbl.column("vec_id").to_pylist()
+    vecs = [
+        np.asarray(v, dtype=np.float32)
+        for v in tbl.column("embedding").to_pylist()
+    ]
+    labels = tbl.column("label").to_pylist()
+    by_id = dict(zip(ids, vecs))
+    q0 = by_id[0].astype(np.float64)
+    cos = {
+        i: float(np.dot(q0, v) / (np.linalg.norm(q0) * np.linalg.norm(v)))
+        for i, v in by_id.items()
+        if i != 0
+    }
+    nn = min(cos, key=lambda i: (-round(cos[i], 6), i))
+    copies = sorted(i for i in ids if i >= 10 and i not in (nn, _ZERO_VEC))[-2:]
+    by_id[_ZERO_VEC] = np.zeros_like(by_id[_ZERO_VEC])
+    by_id[copies[0]] = by_id[nn] * np.float32(2.0)
+    by_id[copies[1]] = by_id[nn] * np.float32(4.0)
+    _write_embeddings(
+        d, [(i, by_id[i].tolist(), lab) for i, lab in zip(ids, labels)]
+    )
+    return d, nn, copies
+
+
+def _canon_rows(rows):
+    from test_oracle_parity import _norm
+
+    return sorted(tuple(_norm(x) for x in r) for r in rows)
+
+
+@pytest.mark.parametrize("name", _EMB_COSINE_QUERIES)
+def test_emb_queries_zero_vector_and_exact_ties(spark, planted_emb, name):
+    """Every embedding-cosine query matches its oracle on a table with
+    an all-zero vector and bit-exact cosine ties."""
+    from readembedability_spark.queries import BASELINE_REGISTRY
+
+    qd = {**REGISTRY, **BASELINE_REGISTRY}[name]
+    d, nn, copies = planted_emb
+    got = [tuple(r) for r in qd.spark(spark, str(d)).collect()]
+    release_caches(spark)
+    want = _emb_con(d).execute(qd.sql).fetchall()
+    assert _canon_rows(got) == _canon_rows(want)
+    if name == "q_ann_cosine":
+        top = sorted((r for r in got if r[0] == 0), key=lambda r: r[1])
+        tied = [r for r in top if r[1] in (nn, *copies)]
+        assert [r[1] for r in tied] == sorted([nn, *copies])
+        assert len({r[2] for r in tied}) == 1
+
+
+def test_km_train_matches_oracle_with_zero_vector(spark, planted_emb):
+    """The trained k-means quantizer equals the oracle's last Lloyd
+    round: a zero vector (NULL cosine to every centroid) falls in the
+    lowest cell id, as the oracle's NULLS LAST window puts it, instead
+    of dropping out of every cell's mean."""
+    from readembedability_spark.textops import (
+        _KM_K,
+        _KM_ROUNDS,
+        _km_rounds_sql,
+        _km_train,
+    )
+
+    d = planted_emb[0]
+    emb = spark.read.parquet(f"{d}/embeddings.parquet").select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
+    )
+    got = [(r["cid"], r["c"]) for r in _km_train(emb).collect()]
+    release_caches(spark)
+    want = _emb_con(d).execute(
+        f"""
+        WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+                   FROM embeddings),
+        c0 AS (SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {_KM_K}),
+        {_km_rounds_sql()}
+        SELECT cid, c FROM c{_KM_ROUNDS}
+        """
+    ).fetchall()
+    assert _canon_rows(got) == _canon_rows(want)
 
 
 # ---------------------------------------------------------------------------
