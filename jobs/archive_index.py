@@ -94,6 +94,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = job_session("archive-index", args.master)
+    from readembedability_spark.operators.salt import default_parts
     from readembedability_spark.queries import _persist, release_caches
 
     t0 = time.time()
@@ -116,7 +117,7 @@ def main() -> None:
     idx = surt_index(caps)
     # the archive's range-scan layout: range-cluster by the index key
     # and sort within partitions — the sort rides the SAME exchange
-    parts = max(spark.sparkContext.defaultParallelism * 2, 16)
+    parts = default_parts(spark)
     (
         idx.repartitionByRange(parts, "surt_key")
         .sortWithinPartitions("surt_key")

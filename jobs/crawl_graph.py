@@ -50,14 +50,10 @@ def extract_link_table(spark, pages):
     nofollow/sponsored/ugc links (L-8) are excluded: every consumer
     of this table (authority edges, frontier, schedule) models
     endorsement, which those links don't carry."""
-    from readembedability_spark.operators.extract import extract_stage
-    from readembedability_spark.operators.salt import salt_repartition
+    from readembedability_spark.harness import salted_extract
 
-    pages = salt_repartition(
-        pages, max(spark.sparkContext.defaultParallelism * 2, 16)
-    )
     return (
-        extract_stage(pages)
+        salted_extract(pages)
         .select(
             "url",
             F.explode(F.arrays_zip("links", "link_nofollow")).alias("z"),

@@ -67,16 +67,12 @@ from pretrain_prep import (  # noqa: E402
 AUTH_W = 0.3
 
 
-def extracted_once(spark, pages):
+def extracted_once(pages):
     """The single persisted extraction pass every consumer reads."""
-    from readembedability_spark.operators.extract import extract_stage
-    from readembedability_spark.operators.salt import salt_repartition
+    from readembedability_spark.harness import salted_extract
     from readembedability_spark.queries import _persist
 
-    salted = salt_repartition(
-        pages, max(spark.sparkContext.defaultParallelism * 2, 16)
-    )
-    return _persist(extract_stage(salted))
+    return _persist(salted_extract(pages))
 
 
 def link_table(extracted):
@@ -204,7 +200,7 @@ def main() -> None:
     stats: dict = {"pages": pages.count()}
 
     # ---- the ONE extraction pass --------------------------------------
-    extracted = extracted_once(spark, pages)
+    extracted = extracted_once(pages)
     stats["extracted"] = extracted.count()
 
     # ---- crawl half ---------------------------------------------------

@@ -206,6 +206,7 @@ def main() -> None:
     args = ap.parse_args()
 
     spark = job_session("search-index", args.master)
+    from readembedability_spark.operators.salt import default_parts
     from readembedability_spark.queries import release_caches
 
     t0 = time.time()
@@ -216,7 +217,7 @@ def main() -> None:
         docs = synth_docs(spark, args.docs)
     stats: dict = {"docs": docs.count()}
 
-    parts = max(spark.sparkContext.defaultParallelism * 2, 16)
+    parts = default_parts(spark)
     build_index(spark, docs, out, parts)
     stats["terms"] = spark.read.parquet(str(out / "dictionary")).count()
     stats.update(postings_audit(spark, out))

@@ -41,7 +41,8 @@ from readembedability_spark.extractor.scoring import select_content
 from readembedability_spark.extractor.textify import textify
 
 #: Pages larger than this are quarantined (status='oversize') instead of
-#: risking Arrow-batch memory blowups (SURVEY.md §7 hard part 5).
+#: risking Arrow-batch memory blowups (SURVEY.md §7 hard part 5). The
+#: scan prefilter (sources/pages.py) imports this same limit.
 MAX_HTML_BYTES = 8 << 20  # 8 MiB
 
 

@@ -1,58 +1,32 @@
-"""Flagship query: the full extraction pipeline over a pages table
-synthesized (JVM-side, deterministically) from the driver's documents
-table — so the whole mapInPandas extract stage is oracle-checkable.
-
-The HTML wrapper is intentionally constrained: for
-``<html><head><title>Doc N</title></head><body><div class="content">
-<p>{text}</p></div></body></html>`` the frozen extraction spec provably
-yields ``title = 'Doc N'`` and ``content_text = text`` (single
-paragraph, already whitespace-collapsed, no markup chars in the
-synthetic corpus) — which a DuckDB oracle can state in pure SQL. That
-makes the byte-identity invariant (BASELINE.json:15) machine-checked by
-the driver, not just by pytest.
+"""Flagship query: the full extraction pipeline over the standard
+synthetic page (harness.html_page) of every document, so the whole
+mapInPandas extract stage is oracle-checkable: the frozen extraction
+spec yields ``title = 'Doc N'`` and ``content_text = text``, which the
+DuckDB oracle below states in pure SQL. That makes the byte-identity
+invariant (BASELINE.json:15) machine-checked by the driver, not just
+by pytest.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from readembedability_spark.operators.extract import extract_stage
-from readembedability_spark.operators.salt import salt_repartition
-
-
-def pages_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    url = F.concat(
-        F.lit("https://docs.example.com/d/"), F.col("doc_id").cast("string")
-    )
-    html = F.encode(
-        F.concat(
-            F.lit('<html><head><title>Doc '),
-            F.col("doc_id").cast("string"),
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
-    )
-    return docs.select(
-        url.alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        html.alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
+from readembedability_spark.harness import (
+    doc_url,
+    html_page,
+    salted_extract,
+    synthetic_pages,
+)
+from readembedability_spark.queries import _t
 
 
 def flagship_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """pages(from documents) → salt → mapInPandas extract → key fields."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    pages = pages_from_documents(spark, sf_dir)
-    parallelism = max(spark.sparkContext.defaultParallelism * 2, 16)
-    pages = salt_repartition(pages, parallelism)
-    extracted = extract_stage(pages)
-    return extracted.select("url", "title", "content_text", "status")
+    docs = _t(spark, sf_dir, "documents")
+    pages = synthetic_pages(
+        docs, doc_url("https://docs.example.com/d/"), html_page()
+    )
+    return salted_extract(pages).select("url", "title", "content_text", "status")
 
 
 FLAGSHIP_ORACLE_SQL = """

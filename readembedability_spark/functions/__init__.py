@@ -32,19 +32,3 @@ def salt_col(url: Column | str = "url", num_salts: int = 64) -> Column:
 def bucket_col(url: Column | str = "url", n_buckets: int = N_BUCKETS) -> Column:
     """Checkpoint-resume bucket id (O-31)."""
     return F.pmod(url_hash_col(url), F.lit(n_buckets)).cast("int")
-
-
-def html_kind_col(html: Column | str = "html") -> Column:
-    """Vectorized magic-byte pre-classification (A-1 fast path, O-6).
-
-    Catalyst-side peek at the first bytes so obviously-non-HTML rows can
-    be filtered/routed without entering the Python stage. The Python
-    extractor re-checks authoritatively.
-    """
-    html = F.col(html) if isinstance(html, str) else html
-    head = F.substring(html.cast("string"), 1, 8)
-    return (
-        F.when(html.isNull() | (F.length(html) == 0), F.lit("empty"))
-        .when(head.startswith("%PDF-"), F.lit("pdf"))
-        .otherwise(F.lit("maybe_html"))
-    )

@@ -13,9 +13,3 @@ from pyspark.sql.functions import pandas_udf
 def host_of(urls: pd.Series) -> pd.Series:
     """Vectorized hostname extraction (parity with q_project_host)."""
     return urls.str.extract(r"^https?://([^/:]+)", expand=False).fillna("")
-
-
-@pandas_udf("int")
-def token_count(texts: pd.Series) -> pd.Series:
-    """Whitespace token count, vectorized."""
-    return texts.fillna("").str.split().str.len().astype("int32")

@@ -104,7 +104,7 @@ def make_extract_batches(run_id: str, metrics_dir: str | None):
             urls = pdf["url"].tolist()
             tss = pdf["warc_ts"].tolist()
             htmls = pdf["html"].tolist()
-            salts = pdf["salt"].tolist() if "salt" in pdf.columns else [0] * len(urls)
+            salts = pdf["salt"].tolist()
             cols: dict[str, list] = {c: [] for c in _OUT_COLS}
             for url, ts, html, salt in zip(urls, tss, htmls, salts):
                 if html is not None:

@@ -51,12 +51,6 @@ def resume_filter(pages: DataFrame, done: DataFrame) -> DataFrame:
     return pages.join(done_buckets, on="url_bucket", how="left_anti")
 
 
-def completed_only(pages: DataFrame, done: DataFrame) -> DataFrame:
-    """Audit inverse of resume_filter (left-semi, O-11)."""
-    done_buckets = F.broadcast(done.select("url_bucket").distinct())
-    return pages.join(done_buckets, on="url_bucket", how="left_semi")
-
-
 def mark_buckets_done(
     extracted: DataFrame, checkpoint_dir: str, run_id: str, n_buckets: int = N_BUCKETS
 ) -> None:

@@ -17,9 +17,16 @@ tests/test_plans.py::test_single_heavy_exchange).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 from readembedability_spark.functions import salt_col
+
+
+def default_parts(spark: SparkSession) -> int:
+    """The repo's one partition-count rule: twice the cluster's default
+    parallelism, never below 16, so task counts scale with the
+    executors."""
+    return max(spark.sparkContext.defaultParallelism * 2, 16)
 
 
 def salt_repartition(

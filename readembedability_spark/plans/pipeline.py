@@ -36,7 +36,6 @@ class RunConfig:
     parallelism: int = 32
     num_salts: int = 64
     langs: list | None = None
-    dedup: bool = True
     resume: bool = True
 
 
@@ -51,8 +50,7 @@ def build_extract_df(spark: SparkSession, cfg: RunConfig) -> DataFrame:
     # salted url-hash repartition FIRST: the dedup window clusters by url
     # too, so the heavy html payload crosses exactly one exchange.
     pages = salt_repartition(pages, cfg.parallelism, cfg.num_salts)
-    if cfg.dedup:
-        pages = dedup_latest(pages)
+    pages = dedup_latest(pages)
     return extract_stage(pages, run_id=cfg.run_id, metrics_dir=_metrics_dir(cfg))
 
 

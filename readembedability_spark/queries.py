@@ -21,6 +21,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from readembedability_spark.harness import (
+    doc_url,
+    html_page,
+    salted_extract,
+    synthetic_pages,
+)
+
 
 @dataclass
 class QueryDef:
@@ -1163,29 +1170,8 @@ def q_sessionize(spark, sf_dir):
 
 # ---------------------------------------------------------------------------
 # O-4/O-30 + A-5..A-8 widened: oracle-checked extraction archetypes
+# (pages built and extracted by harness.py)
 # ---------------------------------------------------------------------------
-
-
-def _archetype_pages(spark, docs, url_prefix, html_col, url_col=None):
-    """pages-shaped DF from documents with a synthesized html column;
-    pass ``url_col`` for archetypes whose url is not prefix+doc_id
-    (q_extract_meta embeds a per-doc /YYYY/MM/ date path)."""
-    from readembedability_spark.operators.salt import salt_repartition
-
-    url = (
-        url_col
-        if url_col is not None
-        else F.concat(F.lit(url_prefix), F.col("doc_id").cast("string"))
-    )
-    pages = docs.select(
-        url.alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        html_col.alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
-    parallelism = max(spark.sparkContext.defaultParallelism * 2, 16)
-    return salt_repartition(pages, parallelism)
 
 
 def _pdf_lit(txt: str) -> str:
@@ -1219,31 +1205,23 @@ def q_extract_archetypes(spark, sf_dir):
     1/3 of extractor/textify.py) is still SQL-expressible. Exercises
     A-4..A-8 over block structure the single-paragraph flagship never
     reaches, hash-checked by the driver against pure SQL."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     p2 = F.trim(F.substring("text", 1, 120))
     li1 = F.trim(F.substring("text", 1, 60))
     li2 = F.trim(F.substring("text", 61, 60))
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p><p>"),
+    html = html_page(
+        content=[
+            F.lit("<p>"),
             p2,
             F.lit("</p><ul><li>"),
             li1,
             F.lit("</li><li>"),
             li2,
-            F.lit("</li></ul></div></body></html>"),
-        ),
-        "UTF-8",
+            F.lit("</li></ul>"),
+        ]
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/a/", html)
-    return extract_stage(pages).select("url", "title", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/a/"), html)
+    return salted_extract(pages).select("url", "title", "content_text", "status")
 
 
 @q(
@@ -1267,31 +1245,23 @@ def q_extract_blocks(spark, sf_dir):
     SQL-expressible. Together with the flagship (single <p>) and
     q_extract_archetypes (multi-<p> + <ul>/<li>), the driver now
     hash-checks three distinct block-structure paths through A-4..A-8."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     quote = F.trim(F.substring("text", 1, 80))
     l1 = F.trim(F.substring("text", 1, 50))
     l2 = F.trim(F.substring("text", 51, 50))
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p><blockquote>"),
+    html = html_page(
+        content=[
+            F.lit("<blockquote>"),
             quote,
             F.lit("</blockquote><p>"),
             l1,
             F.lit("<br>"),
             l2,
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
+            F.lit("</p>"),
+        ]
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/b/", html)
-    return extract_stage(pages).select("url", "title", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/b/"), html)
+    return salted_extract(pages).select("url", "title", "content_text", "status")
 
 
 @q(
@@ -1314,30 +1284,22 @@ def q_extract_table(spark, sf_dir):
     over two levels of nested blocks), still SQL-expressible. The four
     archetypes now hash-check single-<p>, multi-<p>+list, blockquote+br
     and heading+table block structures through A-4..A-8."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     c1 = F.trim(F.substring("text", 1, 40))
     c2 = F.trim(F.substring("text", 41, 40))
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p><h2>Section "),
+    html = html_page(
+        content=[
+            F.lit("<h2>Section "),
             F.col("doc_id").cast("string"),
             F.lit("</h2><table><tr><td>"),
             c1,
             F.lit("</td><td>"),
             c2,
-            F.lit("</td></tr></table></div></body></html>"),
-        ),
-        "UTF-8",
+            F.lit("</td></tr></table>"),
+        ]
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/t/", html)
-    return extract_stage(pages).select("url", "title", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/t/"), html)
+    return salted_extract(pages).select("url", "title", "content_text", "status")
 
 
 @q(
@@ -1387,9 +1349,6 @@ def q_extract_meta(spark, sf_dir):
     0). The oracle replays every rule in pure SQL, so a regression in
     any metadata extractor, the date parser's UTC normalization, or
     the author normalizer hash-fails the driver gate."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     month = F.lpad((F.col("doc_id") % 12 + 1).cast("string"), 2, "0")
@@ -1446,25 +1405,11 @@ def q_extract_meta(spark, sf_dir):
             F.lit('.jpg">'),
         ),
     ).otherwise("")
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit("</title>"),
-            og_title,
-            tw_title,
-            author_meta,
-            pub_meta,
-            canon,
-            img,
-            F.lit('</head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
+    html = html_page(
+        head=[og_title, tw_title, author_meta, pub_meta, canon, img]
     )
-    pages = _archetype_pages(spark, docs, None, html, url_col=url)
-    return extract_stage(pages).select(
+    pages = synthetic_pages(docs, url, html)
+    return salted_extract(pages).select(
         "url",
         "title",
         F.array_join("authors", ", ").alias("authors"),
@@ -1505,9 +1450,6 @@ def q_extract_jsonld(spark, sf_dir):
     normalization, and the JSON-LD image-url object form (ids % 3 =
     0). A regression anywhere in the tolerant-JSON parse or the
     Article-type filter hash-fails the gate."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     day = F.lpad((F.col("doc_id") % 28 + 1).cast("string"), 2, "0")
@@ -1523,12 +1465,10 @@ def q_extract_jsonld(spark, sf_dir):
             F.lit('.png"}'),
         ),
     ).otherwise("")
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
+    html = html_page(
+        head=[
             F.lit(
-                '</title><script type="application/ld+json">'
+                '<script type="application/ld+json">'
                 '{"@type":"NewsArticle","headline":"LD Doc '
             ),
             did,
@@ -1537,14 +1477,11 @@ def q_extract_jsonld(spark, sf_dir):
             F.lit('T08:00:00+02:00"'),
             author,
             image,
-            F.lit('}</script></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
+            F.lit("}</script>"),
+        ]
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/j/", html)
-    return extract_stage(pages).select(
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/j/"), html)
+    return salted_extract(pages).select(
         "url",
         "title",
         F.array_join("authors", ", ").alias("authors"),
@@ -1574,9 +1511,6 @@ def q_extract_embed(spark, sf_dir):
     boolean per rule, so a regression in discovery-link matching,
     og:type classification or the iframe heuristic hash-fails the
     driver gate."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     discovery = F.when(
@@ -1602,23 +1536,9 @@ def q_extract_embed(spark, sf_dir):
             F.lit('" width="560" height="315"></iframe>'),
         ),
     ).otherwise("")
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit("</title>"),
-            discovery,
-            og_video,
-            F.lit('</head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div>"),
-            iframe,
-            F.lit("</body></html>"),
-        ),
-        "UTF-8",
-    )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/e/", html)
-    return extract_stage(pages).select("url", "embed", "status")
+    html = html_page(head=[discovery, og_video], after=[iframe])
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/e/"), html)
+    return salted_extract(pages).select("url", "embed", "status")
 
 
 @q(
@@ -1650,9 +1570,6 @@ def q_extract_feeds(spark, sf_dir):
     (mod 4 = 3 → feeds NULL). The oracle states the resolved feed list
     per rule, so a regression in type filtering, resolution,
     normalization or ordered dedup hash-fails the driver gate."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m = F.col("doc_id") % 4
@@ -1705,20 +1622,9 @@ def q_extract_feeds(spark, sf_dir):
         )
         .otherwise("")
     )
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit("</title>"),
-            head_links,
-            F.lit('</head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
-    )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/f/", html)
-    return extract_stage(pages).select(
+    html = html_page(head=[head_links])
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/f/"), html)
+    return salted_extract(pages).select(
         "url", F.array_join("feeds", ",").alias("feeds"), "status"
     )
 
@@ -1747,9 +1653,6 @@ def q_extract_charset(spark, sf_dir):
     fallback). Title and body carry latin-1 accents (é ï ô º), so the
     oracle's plain-text expectation hash-fails any wrong codec,
     precedence order, or BOM leak on every affected row."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m = F.col("doc_id") % 4
@@ -1782,8 +1685,8 @@ def q_extract_charset(spark, sf_dir):
         )
         .otherwise(F.encode(page, "UTF-8"))
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/c/", html)
-    return extract_stage(pages).select("url", "title", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/c/"), html)
+    return salted_extract(pages).select("url", "title", "content_text", "status")
 
 
 @q(
@@ -1812,31 +1715,22 @@ def q_extract_keywords(spark, sf_dir):
     keyword cleaning or the summary precedence rule hash-fails the
     gate. (The text-mining branch has its own driver query,
     q_extract_keywords_text.)"""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit('</title><meta name="keywords" content="Alpha '),
+    html = html_page(
+        head=[
+            F.lit('<meta name="keywords" content="Alpha '),
             did,
             F.lit(", beta  two; GAMMA, alpha "),
             did,
             F.lit('"><meta name="description" content='
                   '"Deterministic description for document '),
             did,
-            F.lit(' long enough to clear the forty character floor.">'
-                  '</head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
+            F.lit(' long enough to clear the forty character floor.">'),
+        ]
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/k/", html)
-    return extract_stage(pages).select(
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/k/"), html)
+    return salted_extract(pages).select(
         "url",
         F.array_join("keywords", ", ").alias("keywords"),
         "summary",
@@ -1921,23 +1815,11 @@ def q_extract_keywords_text(spark, sf_dir):
     module the extractor uses, so the two sides cannot drift. Docs
     whose every candidate is excluded get NULL keywords on both sides
     (left join vs the extractor's empty-list→unset A-22 rule)."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
-    did = F.col("doc_id").cast("string")
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
+    pages = synthetic_pages(
+        docs, doc_url("https://docs.example.com/w/"), html_page()
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/w/", html)
-    return extract_stage(pages).select(
+    return salted_extract(pages).select(
         "url",
         F.array_join("keywords", ", ").alias("keywords"),
         "status",
@@ -1972,9 +1854,6 @@ def q_extract_pdf(spark, sf_dir):
     also sniff the %PDF- magic (A-1 kind dispatch) and quarantine the
     row with status='pdf'; the oracle replays the construction in SQL.
     Compressed filter chains get their own gate (q_extract_pdf_flate)."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     s1 = F.substring("text", 1, 20)
@@ -1996,8 +1875,8 @@ def q_extract_pdf(spark, sf_dir):
         ),
         "UTF-8",
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/p/", pdf)
-    return extract_stage(pages).select("url", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/p/"), pdf)
+    return salted_extract(pages).select("url", "content_text", "status")
 
 
 @q(
@@ -2034,9 +1913,6 @@ def q_extract_pdf_flate(spark, sf_dir):
     one mapInPandas stage."""
     import zlib
 
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
 
     @F.pandas_udf("binary")
@@ -2060,8 +1936,8 @@ def q_extract_pdf_flate(spark, sf_dir):
         return pd.Series(out)
 
     pdf = flate_pdf(F.col("doc_id"), F.col("text"))
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/pf/", pdf)
-    return extract_stage(pages).select("url", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/pf/"), pdf)
+    return salted_extract(pages).select("url", "content_text", "status")
 
 
 @q(
@@ -2090,9 +1966,6 @@ def q_extract_pdf_chain(spark, sf_dir):
     import base64
     import zlib
 
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
 
     @F.pandas_udf("binary")
@@ -2113,8 +1986,8 @@ def q_extract_pdf_chain(spark, sf_dir):
         return pd.Series(out)
 
     pdf = chain_pdf(F.col("doc_id"), F.col("text"))
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/pc/", pdf)
-    return extract_stage(pages).select("url", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/pc/"), pdf)
+    return salted_extract(pages).select("url", "content_text", "status")
 
 
 @q(
@@ -2147,9 +2020,6 @@ def q_extract_pdf_tm(spark, sf_dir):
     stream-order extraction, or an extractor that ignores Tm, would
     hash-fail every row. Pure-SQL synthesis (uncompressed stream, no
     UDF); the oracle replays the construction."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     s1 = F.substring("text", 1, 40)
@@ -2171,8 +2041,8 @@ def q_extract_pdf_tm(spark, sf_dir):
         ),
         "UTF-8",
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/pt/", pdf)
-    return extract_stage(pages).select("url", "content_text", "status")
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/pt/"), pdf)
+    return salted_extract(pages).select("url", "content_text", "status")
 
 
 @q(
@@ -2195,29 +2065,17 @@ def q_metrics_rollup(spark, sf_dir):
     REAL extract stage, then rolls up per-status page counts and
     extracted-char totals — the same aggregation shape the run-level
     metrics table records per partition."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents")
     mod = F.col("doc_id") % 13
-    ok_html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            F.col("doc_id").cast("string"),
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
-    )
+    ok_html = html_page()
     html = (
         F.when(mod == 0, F.lit(None).cast("binary"))
         .when(mod == 1, F.encode(F.lit("GIF89a\x01\x00"), "UTF-8"))
         .when(mod == 2, F.encode(F.lit("%PDF-1.4\n%%EOF"), "UTF-8"))
         .otherwise(ok_html)
     )
-    pages = _archetype_pages(spark, docs, "https://docs.example.com/m/", html)
-    extracted = extract_stage(pages)
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/m/"), html)
+    extracted = salted_extract(pages)
     return extracted.groupBy("status").agg(
         F.count("*").alias("n_pages"),
         F.sum(F.coalesce(F.length("content_text"), F.lit(0)))
@@ -2264,9 +2122,6 @@ def q_extract_clientmeta(spark, sf_dir):
     Plan/scale: identical cost class to every extraction archetype —
     synthesize html row-locally, one salted mapInPandas extract pass,
     project four columns. No join, no window."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m3 = F.col("doc_id") % 3
@@ -2312,24 +2167,9 @@ def q_extract_clientmeta(spark, sf_dir):
         )
         .otherwise(F.lit(""))
     )
-    html = F.encode(
-        F.concat(
-            html_open,
-            F.lit("<head><title>Doc "),
-            did,
-            F.lit("</title>"),
-            lang_meta,
-            refresh_meta,
-            F.lit('</head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
-    )
-    pages = _archetype_pages(
-        spark, docs, "https://docs.example.com/cm/d", html
-    )
-    return extract_stage(pages).select(
+    html = html_page(head=[lang_meta, refresh_meta], html_tag=html_open)
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/cm/d"), html)
+    return salted_extract(pages).select(
         "url", "declared_lang", "refresh_url", "status"
     )
 
@@ -2368,9 +2208,6 @@ def q_extract_robotsmeta(spark, sf_dir):
 
     Plan/scale: the extraction-archetype cost class — row-local
     synthesis, one salted mapInPandas pass, project five columns."""
-    from readembedability_spark.operators.extract import extract_stage
-
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     docs = _t(spark, sf_dir, "documents").filter(F.col("n_chars") >= 200)
     did = F.col("doc_id").cast("string")
     m4 = F.col("doc_id") % 4
@@ -2386,22 +2223,8 @@ def q_extract_robotsmeta(spark, sf_dir):
         F.col("doc_id") % 6 == 0,
         F.concat(F.lit('<link rel="amphtml" href="/amp/d'), did, F.lit('">')),
     ).otherwise(F.lit(""))
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit("</title>"),
-            robots_meta,
-            amp_link,
-            F.lit('</head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit("</p></div></body></html>"),
-        ),
-        "UTF-8",
-    )
-    pages = _archetype_pages(
-        spark, docs, "https://docs.example.com/rm/d", html
-    )
-    return extract_stage(pages).select(
+    html = html_page(head=[robots_meta, amp_link])
+    pages = synthetic_pages(docs, doc_url("https://docs.example.com/rm/d"), html)
+    return salted_extract(pages).select(
         "url", "robots_noindex", "robots_nofollow", "amp_url", "status"
     )

@@ -12,10 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# the extractor's own oversize limit, so the scan prefilter and the
+# extractor's quarantine agree on which rows are too large
+from readembedability_spark.extractor.pipeline import MAX_HTML_BYTES
 from readembedability_spark.schemas import PAGES_SCHEMA
-
-#: Rows above this never enter the Python stage (quarantined upstream).
-MAX_HTML_BYTES = 8 << 20
 
 
 def read_pages(spark: SparkSession, path: str) -> DataFrame:

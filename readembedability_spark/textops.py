@@ -29,6 +29,12 @@ import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from readembedability_spark.harness import (
+    html_page,
+    salted_extract,
+    synthetic_pages,
+)
+from readembedability_spark.operators.salt import default_parts
 from readembedability_spark.queries import (
     REGISTRY,
     _checkpoint_rdd,
@@ -2182,7 +2188,7 @@ def _link_pages(spark, sf_dir):
     frontier, anchor index), one mailto: and one fragment-only (both
     dropped, L-2/L-4) — so the driver gate exercises every L-rule
     through the REAL mapInPandas extractor, the same oracle trick as
-    the flagship wrapper."""
+    the flagship (harness.html_page, anchors after the content div)."""
     docs = _t(spark, sf_dir, "documents")
     did = F.col("doc_id").cast("string")
     src = (F.col("doc_id") % _LINK_HOSTS).cast("string")
@@ -2198,13 +2204,9 @@ def _link_pages(spark, sf_dir):
         .otherwise(F.lit("ugc noopener"))
     )
     url = F.concat(F.lit("https://h"), src, F.lit(".example.com/d/"), did)
-    html = F.encode(
-        F.concat(
-            F.lit("<html><head><title>Doc "),
-            did,
-            F.lit('</title></head><body><div class="content"><p>'),
-            F.col("text"),
-            F.lit('</p></div><a href="/local/'),
+    html = html_page(
+        after=[
+            F.lit('<a href="/local/'),
             did,
             F.lit('">l</a> <a href="https://h'),
             dst,
@@ -2226,32 +2228,18 @@ def _link_pages(spark, sf_dir):
             F.lit(".example.com/ad/"),
             did,
             F.lit('">ad</a> <a href="mailto:u@example.com">m</a>'
-                  ' <a href="#top">t</a></body></html>'),
-        ),
-        "UTF-8",
+                  ' <a href="#top">t</a>'),
+        ]
     )
-    return docs.select(
-        url.alias("url"),
-        F.to_timestamp(F.lit("2025-01-01 00:00:00")).alias("warc_ts"),
-        html.alias("html"),
-        F.col("text"),
-        F.col("lang"),
-    )
+    return synthetic_pages(docs, url, html)
 
 
 def _extracted_links(spark, sf_dir):
     """(url, li, link, nofollow) through the full extraction stage;
     endorsement consumers (edges, frontier, anchor index) filter
     ``~nofollow`` (L-8)."""
-    from readembedability_spark.operators.extract import extract_stage
-    from readembedability_spark.operators.salt import salt_repartition
-
-    pages = salt_repartition(
-        _link_pages(spark, sf_dir),
-        max(spark.sparkContext.defaultParallelism * 2, 16),
-    )
     return (
-        extract_stage(pages)
+        salted_extract(_link_pages(spark, sf_dir))
         .select(
             "url",
             F.posexplode(F.arrays_zip("links", "link_nofollow")),
@@ -2466,16 +2454,9 @@ def q_anchor_text_index(spark, sf_dir):
     with links). At 100 TB: one extraction pass (the column rides the
     existing Arrow batch), one explode, one (host, term)-keyed
     map-side-combining shuffle."""
-    from readembedability_spark.operators.extract import extract_stage
-    from readembedability_spark.operators.salt import salt_repartition
-
-    pages = salt_repartition(
-        _link_pages(spark, sf_dir),
-        max(spark.sparkContext.defaultParallelism * 2, 16),
-    )
     host_re = r"https://(h\d+\.example\.com)/"
     z = (
-        extract_stage(pages)
+        salted_extract(_link_pages(spark, sf_dir))
         .select(
             "url",
             F.explode(
@@ -4220,16 +4201,14 @@ def dsir_weights_from(docs, toks=None):
 def _cumsum_parts(df, parts):
     """Resolve the range-partition count for the cumsum backbone.
     ``parts=None`` (the default everywhere) derives it from the live
-    cluster — the repo's standard ``defaultParallelism * 2`` idiom —
+    cluster (operators.salt.default_parts, the repo's one rule) —
     so the packing/admission stream scales its task count with the
     executors instead of running on a constant 8 partitions (VERDICT
     r07 wrong #1). The offset collect grows only linearly in parts
     (≤ parts rows global, ≤ 2·(parts−1) rows grouped), still trivially
     bounded at thousands of partitions. An explicit integer pins the
     layout for tests."""
-    if parts is not None:
-        return parts
-    return max(df.sparkSession.sparkContext.defaultParallelism * 2, 16)
+    return default_parts(df.sparkSession) if parts is None else parts
 
 
 def _ranked_cumsum(cf, order_cols, val_col="c", parts=None):

@@ -368,3 +368,65 @@ def test_embedding_family_plan_shape(spark, name):
     )
     ceiling = _EMB_PLAN_CEILINGS[name]
     assert all(g <= m for g, m in zip(got, ceiling)), (got, ceiling)
+
+
+#: Plan-shape ceilings of the synthetic-page extraction family at
+#: sf0.01, pinned from the plans before the shared harness
+#: (harness.py: synthetic_pages, html_page, salted_extract) replaced
+#: the per-query copies: shuffle Exchanges, MapInPandas nodes,
+#: documents scans. q_pagerank_links runs its rank loop eagerly, so
+#: its returned plan no longer holds the extraction.
+_EXTRACT_PLAN_CEILINGS = {
+    "q_extract_flagship": (1, 1, 1),
+    "q_extract_archetypes": (1, 1, 1),
+    "q_extract_blocks": (1, 1, 1),
+    "q_extract_table": (1, 1, 1),
+    "q_extract_meta": (1, 1, 1),
+    "q_extract_jsonld": (1, 1, 1),
+    "q_extract_embed": (1, 1, 1),
+    "q_extract_feeds": (1, 1, 1),
+    "q_extract_charset": (1, 1, 1),
+    "q_extract_keywords": (1, 1, 1),
+    "q_extract_keywords_text": (1, 1, 1),
+    "q_extract_pdf": (1, 1, 1),
+    "q_extract_pdf_flate": (1, 1, 1),
+    "q_extract_pdf_chain": (1, 1, 1),
+    "q_extract_pdf_tm": (1, 1, 1),
+    "q_metrics_rollup": (2, 1, 1),
+    "q_extract_clientmeta": (1, 1, 1),
+    "q_extract_robotsmeta": (1, 1, 1),
+    "q_extract_links": (1, 1, 1),
+    "q_pagerank_links": (7, 0, 0),
+    "q_crawl_frontier": (3, 1, 2),
+    "q_anchor_text_index": (2, 1, 1),
+    "q_frontier_schedule": (14, 2, 3),
+    "q_frontier_robots": (5, 2, 4),
+}
+
+
+@pytest.mark.parametrize("name", list(_EXTRACT_PLAN_CEILINGS))
+def test_extraction_family_plan_shape(spark, name):
+    """No synthetic-page extraction query gains a shuffle, a Python
+    boundary or a documents scan over its pinned ceiling."""
+    import re
+
+    from readembedability_spark.flagship import flagship_extract
+    from readembedability_spark.queries import REGISTRY, release_caches
+    from test_oracle_parity import SF_DIR
+
+    build = (
+        flagship_extract
+        if name == "q_extract_flagship"
+        else REGISTRY[name].spark
+    )
+    # a table an earlier query left cached would be substituted here
+    release_caches(spark)
+    plan = _plan(build(spark, SF_DIR))
+    release_caches(spark)
+    got = (
+        _op_counts(plan)["Exchange"],
+        len(re.findall(r"^\(\d+\) MapInPandas\s*$", plan, re.M)),
+        len(re.findall(r"^Location: .*documents\.parquet\]", plan, re.M)),
+    )
+    ceiling = _EXTRACT_PLAN_CEILINGS[name]
+    assert all(g <= m for g, m in zip(got, ceiling)), (got, ceiling)

@@ -1166,21 +1166,6 @@ def test_syndication_singletons_and_primary(spark, tmp_path):
     assert len(_re.findall(r"\(\d+\) Exchange", plan)) == 2, plan
 
 
-def _write_embeddings(d, rows):
-    pdf = _pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    tbl = _pa.Table.from_pandas(
-        pdf,
-        schema=_pa.schema(
-            [
-                ("vec_id", _pa.int64()),
-                ("embedding", _pa.list_(_pa.float32())),
-                ("label", _pa.int32()),
-            ]
-        ),
-    )
-    _pq_mod.write_table(tbl, str(d / "embeddings.parquet"))
-
-
 def test_embedding_drift_identities(spark, tmp_path):
     """Identical batches read cos_sim 1.0 / l2_shift 0.0 exactly (the
     all-integer path has no float noise to blur the fixpoint);
