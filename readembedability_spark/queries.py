@@ -125,6 +125,49 @@ def _resize(df: DataFrame, parts: int) -> DataFrame:
     return df
 
 
+def _iterate(state, step, rounds, parts=None, probe=None):
+    """The one round loop behind every DataFrame fixpoint (graph
+    contraction, rank propagation, BPE merges). Each of at most
+    `rounds` rounds brings the state to `parts` partitions (when
+    given), anchors it with a lazy localCheckpoint, runs `probe` (the
+    round's single action, if any) on the anchored state, and unless
+    the probe returned true applies `step`. Returns (state, stopped):
+    the anchored state when the probe stopped the loop, else the last
+    step's lazy output.
+
+    The anchor is what keeps a loop linear: a step that reads its
+    state twice (a self-join, a sum beside the carry) would otherwise
+    re-derive every earlier round once per reference, doubling the
+    plan each round. A probe must run an action over the whole anchored
+    state: that action materializes the anchor, so the previous round's
+    storage is freed right there. A loop without a probe keeps every
+    round pinned until release_caches, because its final lazy action
+    still reads through all of them."""
+    prev = None
+    for _ in range(rounds):
+        if parts is not None:
+            state = _resize(state, parts)
+        state = _local_checkpoint(state, eager=False)
+        if probe is not None:
+            stop = probe(state)
+            if prev is not None:
+                _unpin(prev)
+            prev = _checkpoint_rdd(state)
+            if stop:
+                return state, True
+        state = step(state)
+    return state, False
+
+
+def _unroll(template: str, rounds: int, **fields) -> str:
+    """The oracle side of a fixed-round loop: `template` formatted for
+    each round t = 1..rounds, with {t} the round and {p} the previous
+    one, comma-joined into consecutive CTEs."""
+    return ",".join(
+        template.format(t=t, p=t - 1, **fields) for t in range(1, rounds + 1)
+    )
+
+
 def release_caches(spark: SparkSession) -> None:
     """Free executor storage pinned by registry queries: every tracked
     anchor, then the SQL cache (NOTE: clearCache is session-wide;

@@ -37,13 +37,14 @@ from readembedability_spark.harness import (
 from readembedability_spark.operators.salt import default_parts
 from readembedability_spark.queries import (
     REGISTRY,
-    _checkpoint_rdd,
+    _iterate,
     _local_checkpoint,
     _parts_for,
     _persist,
     _resize,
     _t,
     _unpin,
+    _unroll,
     q,
     q_baseline,
 )
@@ -679,54 +680,49 @@ def _small_star(edges):
 
 _CC_MAX_ROUNDS = 50
 
-#: rounds taken by the last _connected_components call (telemetry for
-#: the log-convergence pytest; star contraction is O(log n) rounds).
-_CC_LAST_ROUNDS = 0
+
+def _contract(edges):
+    """One large-star + small-star contraction round."""
+    return _small_star(_large_star(edges))
+
+
+def _is_star_forest(edges):
+    """True when no node of the (child a, parent b) edges is both a
+    child and a parent: the exact fixpoint of the alternating
+    contraction (a star forest is invariant under both star operations,
+    and any deeper tree is rewritten). One node-keyed aggregate over
+    both ends of every edge, no checksums."""
+    ends = F.array(
+        F.struct(F.col("a").alias("n"), F.lit(False).alias("parent")),
+        F.struct(F.col("b").alias("n"), F.lit(True).alias("parent")),
+    )
+    return (
+        edges.select(F.inline(ends))
+        .groupBy("n")
+        .agg((F.min("parent") != F.max("parent")).alias("both"))
+        .filter("both")
+        .isEmpty()
+    )
 
 
 def _connected_components(spark, edges):
     """(node, label) rows — label = component-minimum node id — for
     every node appearing in `edges` (columns a, b). Alternating
-    large-star/small-star; exact edge-set-equality fixpoint; prior
-    rounds' localCheckpoint storage freed eagerly."""
-    cur = (
-        edges.filter(F.col("a") != F.col("b"))
-        .distinct()
-        .transform(lambda d: _local_checkpoint(d, eager=False))
-        # pairs table is tiny vs corpus;
-        # freeze it so each contraction round doesn't replay the whole
-        # MinHash pipeline
+    large-star/small-star rounds on the round-loop core until the
+    edges form a star forest; prior rounds' storage freed as each
+    probe materializes the next. The loop starts from the symmetric
+    edge set, whose every node is both a child and a parent: on it the
+    star-forest probe is exactly the emptiness test, and its anchor
+    freezes the input so no round replays the upstream pipeline."""
+    both = F.array(
+        F.struct("a", "b"),
+        F.struct(F.col("b").alias("a"), F.col("a").alias("b")),
     )
-    # one count does double duty (r9): it is the emptiness probe AND
-    # the carried edge count, so each round runs ONE count job (on nxt)
-    # instead of recounting the already-counted cur a second time.
-    cur_n = cur.count()
-    if cur_n == 0:
-        return cur.select(F.col("a").alias("node"), F.col("b").alias("label"))
-    global _CC_LAST_ROUNDS
-    converged = False
-    for rounds in range(1, _CC_MAX_ROUNDS + 1):
-        # eager=False: the count below materializes the checkpoint in
-        # the same job instead of paying a separate result-stage job
-        nxt = _local_checkpoint(_small_star(_large_star(cur)), eager=False)
-        # convergence = nxt IS a star forest (no node is both a child
-        # and a parent) — the exact fixpoint of the alternating
-        # contraction (a star forest is invariant under both star
-        # operations, and any deeper tree is rewritten). Checking the
-        # 2-level property on nxt directly detects convergence one
-        # round EARLIER than the old edge-set-equality probe (which
-        # could only see that the previous round had already
-        # converged), and costs one semi-join probe instead of a
-        # count + exceptAll pair. Still exact — no checksums.
-        same = nxt.join(
-            nxt.select(F.col("b").alias("a")).distinct(), "a", "left_semi"
-        ).isEmpty()
-        _unpin(_checkpoint_rdd(cur))
-        cur = nxt
-        if same:
-            _CC_LAST_ROUNDS = rounds
-            converged = True
-            break
+    sym = edges.filter(F.col("a") != F.col("b")).select(F.inline(both))
+    rounds = _CC_MAX_ROUNDS + 1  # the emptiness round, then the cap
+    cur, converged = _iterate(
+        sym.distinct(), _contract, rounds, probe=_is_star_forest
+    )
     if not converged:
         raise RuntimeError(
             f"connected components did not converge in {_CC_MAX_ROUNDS} "
@@ -1529,28 +1525,25 @@ _KM_NPROBE = 2
 #: each cell's mean vector with per-coordinate ROUND(…,6) so both
 #: engines hold bit-identical centroids going into the next round.
 _KM_ROUND_SQL = """
-    a{r} AS (
+    a{t} AS (
       SELECT vec_id, cell, v FROM (
         SELECT e.vec_id, cp.cid AS cell, e.v,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
                  ROUND({cos_vc}, 6) DESC, cp.cid) AS rn
         FROM e CROSS JOIN c{p} cp) WHERE rn = 1),
-    d{r} AS (
+    d{t} AS (
       SELECT cell, generate_subscripts(v, 1) AS d, unnest(v) AS x
-      FROM a{r}),
-    m{r} AS (SELECT cell, d, ROUND(AVG(x), 6) AS cx
-             FROM d{r} GROUP BY cell, d),
-    c{r} AS (SELECT cell AS cid, list(cx ORDER BY d) AS c
-             FROM m{r} GROUP BY cell)
+      FROM a{t}),
+    m{t} AS (SELECT cell, d, ROUND(AVG(x), 6) AS cx
+             FROM d{t} GROUP BY cell, d),
+    c{t} AS (SELECT cell AS cid, list(cx ORDER BY d) AS c
+             FROM m{t} GROUP BY cell)
 """
 
 
 def _km_rounds_sql() -> str:
     cos_vc = _IVF_COS.format(a="e.v", b="cp.c")
-    return ",".join(
-        _KM_ROUND_SQL.format(r=r, p=r - 1, cos_vc=cos_vc)
-        for r in range(1, _KM_ROUNDS + 1)
-    )
+    return _unroll(_KM_ROUND_SQL, _KM_ROUNDS, cos_vc=cos_vc)
 
 
 @q(
@@ -1808,21 +1801,18 @@ _PR_GEN_ITER_SQL = """
 
 
 def _pr_gen_iters(iters, r, dm, nodes, nn, edges, deg, sinks) -> str:
-    return ",".join(
-        _PR_GEN_ITER_SQL.format(
-            t=t,
-            p=t - 1,
-            r=r,
-            dm=dm,
-            nodes=nodes,
-            nn=nn,
-            edges=edges,
-            deg=deg,
-            sinks=sinks,
-            teleport=round(1 - _PR_DAMP, 2),
-            damp=_PR_DAMP,
-        )
-        for t in range(1, iters + 1)
+    return _unroll(
+        _PR_GEN_ITER_SQL,
+        iters,
+        r=r,
+        dm=dm,
+        nodes=nodes,
+        nn=nn,
+        edges=edges,
+        deg=deg,
+        sinks=sinks,
+        teleport=round(1 - _PR_DAMP, 2),
+        damp=_PR_DAMP,
     )
 
 
@@ -1964,13 +1954,20 @@ def _pagerank_loop(spark, edges, seeds=None, iters=_PR_ITERS, init=None):
     sinks = _persist(
         nodes.join(deg.select(F.col("src").alias("v")), "v", "left_anti")
     )
-    tele = None
+    # every round rebuilds rank over `base`, spreading the teleport and
+    # the dangling mass uniformly (1/n) or, with seeds, by the per-node
+    # teleport share s(v)
+    base = nodes.crossJoin(F.broadcast(nn))
+
+    def spread(x):
+        return x / F.col("n") if seeds is None else x * F.col("s")
+
     if seeds is not None:
         # per-node teleport share s(v) = 1/|seeds| on seeds else 0 —
         # iteration-invariant, node-count-sized, persisted once (it is
         # read twice per iteration: teleport term + dangling return)
         ns = F.broadcast(seeds.agg(F.count("*").alias("ns")))
-        tele = _persist(
+        base = _persist(
             _resize(
                 nodes.join(
                     seeds.select(F.col("v"), F.lit(1).alias("_seed")),
@@ -1989,31 +1986,17 @@ def _pagerank_loop(spark, edges, seeds=None, iters=_PR_ITERS, init=None):
                 rank_parts,
             )
         )
-        r = tele.select("v", F.col("s").alias("r"))
+        r = base.select("v", F.col("s").alias("r"))
     elif init is not None:
-        r = (
-            nodes.crossJoin(F.broadcast(nn))
-            .join(init.select("v", F.col("r").alias("_ri")), "v", "left")
-            .select(
-                "v",
-                F.coalesce(
-                    F.col("_ri"), F.lit(1.0) / F.col("n")
-                ).alias("r"),
-            )
+        r = base.join(
+            init.select("v", F.col("r").alias("_ri")), "v", "left"
+        ).select(
+            "v", F.coalesce(F.col("_ri"), F.lit(1.0) / F.col("n")).alias("r")
         )
     else:
-        r = nodes.crossJoin(F.broadcast(nn)).select(
-            "v", (F.lit(1.0) / F.col("n")).alias("r")
-        )
-    for _ in range(iters):
-        # each iteration reads r TWICE (contrib + dangling mass), so r
-        # is localCheckpoint'ed per round — without it the lazy plan
-        # re-derives r_{t-1} once per reference (2^iters subtree
-        # copies; measured 13× wall at sf0.1). Same shape as the CC
-        # loop; the rank table is node-count-sized and resized to
-        # rank_parts = f(node count) so the checkpoint is one tiny
-        # task here and a proper fan-out on a web graph.
-        r = _local_checkpoint(_resize(r, rank_parts), eager=False)
+        r = base.select("v", (F.lit(1.0) / F.col("n")).alias("r"))
+
+    def step(r):
         contrib = (
             edges.join(r.select(F.col("v").alias("src"), "r"), "src")
             .join(deg, "src")
@@ -2021,44 +2004,27 @@ def _pagerank_loop(spark, edges, seeds=None, iters=_PR_ITERS, init=None):
             .agg(F.sum(F.col("r") / F.col("d")).alias("inflow"))
         )
         # dangling mass: rank sitting on sinks this iteration — a
-        # 1-row aggregate, broadcast and redistributed uniformly
+        # 1-row aggregate, broadcast and redistributed
         dm = r.join(sinks, "v").agg(
             F.coalesce(F.sum("r"), F.lit(0.0)).alias("m")
         )
-        if tele is not None:
-            r = (
-                tele.crossJoin(F.broadcast(dm))
-                .join(contrib, "v", "left")
-                .select(
-                    "v",
-                    (
-                        F.lit(1 - _PR_DAMP) * F.col("s")
-                        + F.lit(_PR_DAMP)
-                        * (
-                            F.coalesce("inflow", F.lit(0.0))
-                            + F.col("m") * F.col("s")
-                        )
-                    ).alias("r"),
-                )
+        inflow = F.coalesce("inflow", F.lit(0.0))
+        return (
+            base.crossJoin(F.broadcast(dm))
+            .join(contrib, "v", "left")
+            .select(
+                "v",
+                (
+                    spread(F.lit(1 - _PR_DAMP))
+                    + F.lit(_PR_DAMP) * (inflow + spread(F.col("m")))
+                ).alias("r"),
             )
-        else:
-            r = (
-                nodes.crossJoin(F.broadcast(nn))
-                .crossJoin(F.broadcast(dm))
-                .join(contrib, "v", "left")
-                .select(
-                    "v",
-                    (
-                        F.lit(1 - _PR_DAMP) / F.col("n")
-                        + F.lit(_PR_DAMP)
-                        * (
-                            F.coalesce("inflow", F.lit(0.0))
-                            + F.col("m") / F.col("n")
-                        )
-                    ).alias("r"),
-                )
-            )
-    return r
+        )
+
+    # each round reads r twice (contrib + dangling mass); the core's
+    # per-round anchor keeps that linear (measured 13x wall at sf0.1
+    # without it), on a rank table sized rank_parts = f(node count)
+    return _iterate(r, step, iters, rank_parts)[0]
 
 
 #: one unrolled TrustRank iteration: rank = (1-d)·s(v) + d·(Σ_in r/deg
@@ -2083,15 +2049,6 @@ _TR_ITER_SQL = """
 """
 
 
-def _tr_iters_sql() -> str:
-    return ",".join(
-        _TR_ITER_SQL.format(
-            t=t, p=t - 1, teleport=round(1 - _PR_DAMP, 2), damp=_PR_DAMP
-        )
-        for t in range(1, _PR_ITERS + 1)
-    )
-
-
 @q(
     "q_trustrank",
     f"""
@@ -2105,7 +2062,8 @@ def _tr_iters_sql() -> str:
                        ELSE 0.0 END AS s
            FROM nodes CROSS JOIN ns),
     s0 AS (SELECT v, s AS r FROM sv),
-    {_tr_iters_sql()}
+    {_unroll(_TR_ITER_SQL, _PR_ITERS, teleport=round(1 - _PR_DAMP, 2),
+             damp=_PR_DAMP)}
     SELECT pr.v AS node, pr.pr, tr.trust,
            CASE WHEN pr.pr > 0
                 THEN ROUND((pr.pr - tr.trust) / pr.pr, 6)
@@ -5930,20 +5888,20 @@ _BPE_D = "\x01"  # symbol delimiter; corpus is space+lowercase-ASCII only
 #: the \x01-delimited lowercase-ASCII seq) as the pattern and '' as
 #: the replacement, making the exhausted round a no-op in both engines.
 _BPE_ROUND_SQL = """
-    p{r} AS MATERIALIZED (
+    p{t} AS MATERIALIZED (
       SELECT l[i] AS a, l[i + 1] AS b, freq FROM (
         SELECT l, freq, unnest(generate_series(2, len(l) - 2)) AS i
         FROM (SELECT string_split(seq, chr(1)) AS l, freq FROM w{p}))),
-    b{r} AS MATERIALIZED (
-      SELECT a, b, SUM(freq) AS cnt FROM p{r} GROUP BY a, b
+    b{t} AS MATERIALIZED (
+      SELECT a, b, SUM(freq) AS cnt FROM p{t} GROUP BY a, b
       ORDER BY cnt DESC, a, b LIMIT 1),
-    w{r} AS MATERIALIZED (
+    w{t} AS MATERIALIZED (
       SELECT word, freq,
              replace(replace(seq,
-               COALESCE((SELECT chr(1) || a || chr(1) || b || chr(1) FROM b{r}), chr(2)),
-               COALESCE((SELECT chr(1) || a || b || chr(1) FROM b{r}), '')),
-               COALESCE((SELECT chr(1) || a || chr(1) || b || chr(1) FROM b{r}), chr(2)),
-               COALESCE((SELECT chr(1) || a || b || chr(1) FROM b{r}), '')) AS seq
+               COALESCE((SELECT chr(1) || a || chr(1) || b || chr(1) FROM b{t}), chr(2)),
+               COALESCE((SELECT chr(1) || a || b || chr(1) FROM b{t}), '')),
+               COALESCE((SELECT chr(1) || a || chr(1) || b || chr(1) FROM b{t}), chr(2)),
+               COALESCE((SELECT chr(1) || a || b || chr(1) FROM b{t}), '')) AS seq
       FROM w{p})"""
 
 #: w0: distinct corpus words with frequency; seq = the word's symbol
@@ -5960,10 +5918,7 @@ _BPE_BASE_SQL = (
 
 
 def _bpe_rounds_sql(merges: int = None) -> str:
-    merges = _BPE_MERGES if merges is None else merges
-    return ",".join(
-        _BPE_ROUND_SQL.format(r=r, p=r - 1) for r in range(1, merges + 1)
-    )
+    return _unroll(_BPE_ROUND_SQL, _BPE_MERGES if merges is None else merges)
 
 
 def _bpe_train_sql(merges: int) -> str:
@@ -6040,18 +5995,20 @@ def _bpe_train_docs(spark, docs, merges: int = None):
     count is DERIVED from its row count (_parts_for — a 10⁹-row web
     vocab fans out, the sandbox vocab stays at 1 low-overhead
     partition; the old coalesce(1) made every round's pair count a
-    single task at any scale), and each round's rewritten seq is
-    localCheckpoint'ed so round r evaluates ONE replace over the
+    single task at any scale), and the round-loop core anchors each
+    round's rewritten vocab so round r evaluates ONE replace over the
     previous round's materialized vocab instead of re-evaluating an
     r-deep lazy replace chain from the base (O(R²) total work — the
     same loop lesson as the PageRank dangling-mass fix, SCALE.md).
-    Per-round checkpoint cost is one vocab-sized write; with it,
-    realistic merge counts (≥1k) stay O(R·vocab)."""
+    Per-round checkpoint cost is one vocab-sized write, and the argmax
+    collect frees the previous round's copy, so realistic merge counts
+    (≥1k) stay O(R·vocab) in work and one vocab in storage."""
     n_rounds = _BPE_MERGES if merges is None else merges
     words = _persist(_bpe_words_from(docs))
-    cur = _local_checkpoint(_resize(words, _parts_for(words.count())), eager=False)
     merges = []
-    for r in range(1, n_rounds + 1):
+
+    def argmax(cur):
+        """Record the round's best pair; stop once no pair is left."""
         syms = F.filter(F.split("seq", _BPE_D), lambda x: x != F.lit(""))
         pairs = (
             cur.select("freq", syms.alias("syms"))
@@ -6067,23 +6024,28 @@ def _bpe_train_docs(spark, docs, merges: int = None):
             .agg(F.sum("freq").alias("cnt"))
         )
         best = pairs.orderBy(F.desc("cnt"), F.asc("a"), F.asc("b")).limit(1).collect()
-        if not best:
-            break
-        row = best[0]
-        merges.append((r, row["a"], row["b"], int(row["cnt"])))
-        pat = _BPE_D + row["a"] + _BPE_D + row["b"] + _BPE_D
-        rep = _BPE_D + row["a"] + row["b"] + _BPE_D
-        cur = _local_checkpoint(
-            cur.withColumn(
-                "seq",
-                F.replace(
-                    F.replace("seq", F.lit(pat), F.lit(rep)),
-                    F.lit(pat),
-                    F.lit(rep),
-                ),
+        if best:
+            row = best[0]
+            merges.append((len(merges) + 1, row["a"], row["b"], int(row["cnt"])))
+        return not best
+
+    def merge(cur):
+        _, a, b, _ = merges[-1]
+        pat = _BPE_D + a + _BPE_D + b + _BPE_D
+        rep = _BPE_D + a + b + _BPE_D
+        return cur.withColumn(
+            "seq",
+            F.replace(
+                F.replace("seq", F.lit(pat), F.lit(rep)), F.lit(pat), F.lit(rep)
             ),
-            eager=False,
         )
+
+    parts = _parts_for(words.count())
+    cur, stopped = _iterate(words, merge, n_rounds, parts, argmax)
+    # like every round, the final vocab is anchored, so its readers
+    # start from a checkpoint scan instead of the last lazy rewrite
+    if not stopped:
+        cur = _local_checkpoint(cur, eager=False)
     return merges, cur.select("word", "freq", "seq")
 
 
@@ -6327,26 +6289,26 @@ _LRN_X = "(CAST({dot} AS DOUBLE) / 1000000000000.0)"
 _LRN_P = "(0.5 + 0.5 * {x} / (1.0 + abs({x})))"
 
 
-def _lrn_round_sql(r: int) -> str:
-    x = _LRN_X.format(dot="d.dot")
-    p = _LRN_P.format(x=x)
-    return f"""
-    d{r} AS MATERIALIZED (
+#: one unrolled gradient round: dot products, fixed-point errors,
+#: per-bucket gradients and the weight update; {sig} is the squash of
+#: the round's dot product.
+_LRN_ROUND_SQL = """
+    d{t} AS MATERIALIZED (
       SELECT f.doc_id, CAST(SUM(f.xq * w.w) AS BIGINT) AS dot
-      FROM feats f JOIN w{r - 1} w USING (b) GROUP BY f.doc_id),
-    e{r} AS MATERIALIZED (
+      FROM feats f JOIN w{p} w USING (b) GROUP BY f.doc_id),
+    e{t} AS MATERIALIZED (
       SELECT l.doc_id,
-             CAST(ROUND(({p} - l.y) * 1000000.0) AS BIGINT) AS errq
-      FROM lab l JOIN d{r} d USING (doc_id)),
-    g{r} AS MATERIALIZED (
+             CAST(ROUND(({sig} - l.y) * 1000000.0) AS BIGINT) AS errq
+      FROM lab l JOIN d{t} d USING (doc_id)),
+    g{t} AS MATERIALIZED (
       SELECT f.b, CAST(SUM(f.xq * e.errq) AS BIGINT) AS g
-      FROM feats f JOIN e{r} e USING (doc_id) GROUP BY f.b),
-    w{r} AS MATERIALIZED (
+      FROM feats f JOIN e{t} e USING (doc_id) GROUP BY f.b),
+    w{t} AS MATERIALIZED (
       SELECT w.b,
-             CAST(w.w - CAST(ROUND(CAST(g.g AS DOUBLE) * {_LRN_RATE}
+             CAST(w.w - CAST(ROUND(CAST(g.g AS DOUBLE) * {rate}
                / (SELECT CAST(n AS DOUBLE) FROM nn)
                / 1000000.0) AS BIGINT) AS BIGINT) AS w
-      FROM w{r - 1} w JOIN g{r} g USING (b))"""
+      FROM w{p} w JOIN g{t} g USING (b))"""
 
 
 #: shared oracle prelude: labels (the gopher pass rule — an existing
@@ -6379,7 +6341,8 @@ _LRN_BASE_SQL = """
 
 
 def _lrn_rounds_sql() -> str:
-    return ",".join(_lrn_round_sql(r) for r in range(1, _LRN_ROUNDS + 1))
+    sig = _LRN_P.format(x=_LRN_X.format(dot="d.dot"))
+    return _unroll(_LRN_ROUND_SQL, _LRN_ROUNDS, sig=sig, rate=_LRN_RATE)
 
 
 def _lrn_feats_labels(spark, sf_dir):
@@ -8440,19 +8403,12 @@ _HITS_ITER_SQL = """
 """
 
 
-def _hits_iters_sql() -> str:
-    return ",".join(
-        _HITS_ITER_SQL.format(t=t, p=t - 1)
-        for t in range(1, _PR_ITERS + 1)
-    )
-
-
 @q(
     "q_hits",
     f"""
     WITH {_PR_GRAPH_SQL},
     h0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn),
-    {_hits_iters_sql()}
+    {_unroll(_HITS_ITER_SQL, _PR_ITERS)}
     SELECT h.v AS node,
            ROUND(h.r, 6) AS hub,
            ROUND(a.r, 6) AS auth
@@ -8686,20 +8642,13 @@ _LP_ITER_SQL = """
 """
 
 
-def _lp_iters_sql() -> str:
-    return ",".join(
-        _LP_ITER_SQL.format(t=t, p=t - 1)
-        for t in range(1, _LP_ROUNDS + 1)
-    )
-
-
 @q(
     "q_label_prop",
     f"""
     WITH {_PR_GRAPH_SQL},
     lp0 AS (
       SELECT v, CASE WHEN v % 5 = 0 THEN v % 3 END AS lab FROM nodes),
-    {_lp_iters_sql()}
+    {_unroll(_LP_ITER_SQL, _LP_ROUNDS)}
     SELECT v AS node,
            CAST(lab AS BIGINT) AS label,
            v % 5 = 0 AS is_seed,
@@ -8731,10 +8680,9 @@ def q_label_prop(spark, sf_dir):
     propagation saturates in a few hops on web graphs."""
     edges, nodes, rank_parts = _graph_nodes(_rule_edges(spark, sf_dir))
     seed_lab = F.when(F.col("v") % 5 == 0, F.col("v") % 3)
-    lp = nodes.select("v", seed_lab.alias("lab"))
     w = Window.partitionBy("v").orderBy(F.desc("c"), F.asc("lab"))
-    for _ in range(_LP_ROUNDS):
-        lp = _local_checkpoint(_resize(lp, rank_parts), eager=False)
+
+    def propagate(lp):
         cnt = (
             edges.join(
                 lp.filter(F.col("lab").isNotNull()).select(
@@ -8750,9 +8698,12 @@ def q_label_prop(spark, sf_dir):
             .filter(F.col("rn") == 1)
             .select("v", F.col("lab").alias("t_lab"))
         )
-        lp = nodes.join(top, "v", "left").select(
+        return nodes.join(top, "v", "left").select(
             "v", F.coalesce(seed_lab, F.col("t_lab")).alias("lab")
         )
+
+    lp0 = nodes.select("v", seed_lab.alias("lab"))
+    lp, _ = _iterate(lp0, propagate, _LP_ROUNDS, rank_parts)
     return lp.select(
         F.col("v").alias("node"),
         F.col("lab").cast("long").alias("label"),
@@ -10837,25 +10788,24 @@ def q_redirect_resolve(spark, sf_dir):
         .filter(F.col("dst").isNotNull())
         .withColumn("hops", F.lit(1).cast("long"))
     )
-    r = edges
-    for _ in range(3):  # covers chains up to 2^3 hops (cap = 8)
-        # checkpoint each round: the self-join references r TWICE, so
-        # without lineage truncation the join tree doubles per round
-        # (2^rounds joins at execution — the classic pointer-jumping
-        # blowup); with it every round is exactly ONE keyed equi-join
-        r = _local_checkpoint(r, eager=False)
+
+    def jump(r):
         b = r.select(
             F.col("src").alias("b_src"),
             F.col("dst").alias("b_dst"),
             F.col("hops").alias("b_hops"),
         )
-        r = r.join(b, F.col("dst") == F.col("b_src"), "left").select(
+        return r.join(b, F.col("dst") == F.col("b_src"), "left").select(
             "src",
             F.coalesce("b_dst", "dst").alias("dst"),
             (F.col("hops") + F.coalesce(F.col("b_hops"), F.lit(0)))
             .cast("long")
             .alias("hops"),
         )
+
+    # the self-join reads r twice; the core's per-round anchor keeps
+    # every round ONE keyed equi-join instead of the doubling join tree
+    r, _ = _iterate(edges, jump, 3)  # covers chains up to 2^3 hops (cap = 8)
     pages = docs.select(_redir_url_expr(i).alias("url"))
     resolved = pages.join(r, pages.url == r.src, "left").select(
         "url",
@@ -13385,20 +13335,21 @@ def q_link_depth(spark, sf_dir):
         F.col("h").alias("src"), (F.col("h") + 3).alias("dst")
     )
     edges = e1.unionAll(e3)
-    dist = hosts.filter(
-        (F.expr("h DIV 10") % 2 == 0) & (r == 0)
-    ).select("h", F.lit(0).cast("long").alias("depth"))
-    for _ in range(4):  # eccentricity bound of the planted graph
-        dist = _local_checkpoint(dist, eager=False)
+
+    def expand(dist):
         nxt = dist.join(edges, dist.h == edges.src).select(
             F.col("dst").alias("h"),
             (F.col("depth") + 1).cast("long").alias("depth"),
         )
-        dist = (
+        return (
             dist.unionAll(nxt)
             .groupBy("h")
             .agg(F.min("depth").cast("long").alias("depth"))
         )
+
+    seeds = hosts.filter((F.expr("h DIV 10") % 2 == 0) & (r == 0))
+    dist0 = seeds.select("h", F.lit(0).cast("long").alias("depth"))
+    dist, _ = _iterate(dist0, expand, 4)  # the planted graph's eccentricity
     return hosts.join(dist, "h", "left").select(
         F.col("h").cast("long").alias("host_id"),
         F.coalesce("depth", F.lit(-1)).cast("long").alias("depth"),

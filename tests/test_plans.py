@@ -430,3 +430,43 @@ def test_extraction_family_plan_shape(spark, name):
     )
     ceiling = _EXTRACT_PLAN_CEILINGS[name]
     assert all(g <= m for g, m in zip(got, ceiling)), (got, ceiling)
+
+
+#: Plan-shape ceilings of the round-loop family at sf0.01, pinned from
+#: the plans before the loops shared one round-loop core (queries.py
+#: `_iterate`): shuffle Exchanges and checkpoint scans (Scan
+#: ExistingRDD). A loop whose rounds lose their anchor re-derives every
+#: earlier round in its returned plan and breaks the Exchange ceiling.
+_LOOP_PLAN_CEILINGS = {
+    "q_pagerank": (7, 6),
+    "q_pagerank_incremental": (10, 6),
+    "q_pagerank_links": (7, 6),
+    "q_trustrank": (22, 12),
+    "q_label_prop": (5, 4),
+    "q_redirect_resolve": (4, 2),
+    "q_link_depth": (4, 2),
+    "q_dedup_clusters": (3, 2),
+    "q_bpe_train": (0, 1),
+    "q_bpe_train64": (0, 1),
+}
+
+
+@pytest.mark.parametrize("name", list(_LOOP_PLAN_CEILINGS))
+def test_loop_family_plan_shape(spark, name):
+    """No round-loop query gains a shuffle or a checkpoint scan over
+    its pinned ceiling."""
+    import re
+
+    from readembedability_spark.queries import REGISTRY, release_caches
+    from test_oracle_parity import SF_DIR
+
+    # a table an earlier query left cached would be substituted here
+    release_caches(spark)
+    plan = _plan(REGISTRY[name].spark(spark, SF_DIR))
+    release_caches(spark)
+    got = (
+        _op_counts(plan)["Exchange"],
+        len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M)),
+    )
+    ceiling = _LOOP_PLAN_CEILINGS[name]
+    assert all(g <= m for g, m in zip(got, ceiling)), (got, ceiling)

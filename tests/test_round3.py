@@ -137,17 +137,20 @@ def test_cc_matches_union_find_random_graphs(spark):
         assert got == _uf_labels(edges)
 
 
-def test_cc_chain_converges_in_log_rounds(spark):
+def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
     """A 64-node chain (worst case for plain min-label propagation:
-    diameter 64) converges in O(log n) star rounds, not O(n)."""
+    diameter 64) converges in O(log n) star rounds, not O(n): with the
+    round cap at 8 the loop still reaches its fixpoint instead of
+    raising."""
+    monkeypatch.setattr(textops, "_CC_MAX_ROUNDS", 8)
     chain = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(chain, "a long, b long")
     got = {
         r["node"]: r["label"] for r in _connected_components(spark, df).collect()
     }
     release_caches(spark)
+    assert got == _uf_labels(chain)
     assert set(got.values()) == {0} and len(got) == 65
-    assert textops._CC_LAST_ROUNDS <= 8, textops._CC_LAST_ROUNDS
 
 
 def test_cc_raises_on_round_exhaustion(spark, monkeypatch):
@@ -184,6 +187,41 @@ def test_cc_keeps_upstream_persist_anchor(spark):
     assert jsc.getPersistentRDDs().contains(anchor_rdd)
     release_caches(spark)
     assert jsc.getPersistentRDDs().size() == 0
+
+
+#: Persistent RDDs each round-loop query may hold between its collect()
+#: and release_caches, at sf0.01: the counts before the loops shared a
+#: round-loop core, except BPE, whose per-round argmax now frees the
+#: previous round's vocab instead of pinning every round. Queries
+#: grouped in one tuple must also pin the same count.
+_LOOP_PINNED_CEILINGS = {
+    ("q_pagerank",): 7,
+    ("q_pagerank_incremental",): 13,
+    ("q_pagerank_links",): 7,
+    ("q_trustrank",): 16,
+    ("q_label_prop",): 5,
+    ("q_redirect_resolve",): 3,
+    ("q_link_depth",): 4,
+    ("q_dedup_clusters",): 2,
+    ("q_bpe_train", "q_bpe_train64"): 4,
+}
+
+
+@pytest.mark.parametrize("names", list(_LOOP_PINNED_CEILINGS), ids="+".join)
+def test_round_loop_storage_bounded(spark, names):
+    """A round loop pins no more storage than its ceiling once its
+    result is collected, and BPE's storage does not grow with the
+    merge count: 64 merges pin exactly what 16 do."""
+    jsc = spark.sparkContext._jsc.sc()  # noqa: SLF001
+    pinned = []
+    for name in names:
+        release_caches(spark)
+        before = jsc.getPersistentRDDs().size()
+        REGISTRY[name].spark(spark, SF_MED).collect()
+        pinned.append(jsc.getPersistentRDDs().size() - before)
+        release_caches(spark)
+    assert max(pinned) <= _LOOP_PINNED_CEILINGS[names], pinned
+    assert len(set(pinned)) == 1, pinned
 
 
 # ---------------------------------------------------------------------------
