@@ -47,14 +47,13 @@ def rulesets(spark):
     construction, exactly like a real curated robots snapshot. Built
     from the SHARED module-level snapshot so the gate query,
     q_robots_diff's before-set and this job can never drift."""
+    from readembedability_spark.schemas import local_table
     from readembedability_spark.textops import (
         ROBOTS_RULES_SCHEMA,
         ROBOTS_RULES_SNAPSHOT,
     )
 
-    return spark.createDataFrame(
-        ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA
-    )
+    return local_table(spark, ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA)
 
 
 def synth_fetch_log(spark, n):

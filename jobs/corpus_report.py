@@ -43,6 +43,7 @@ def dedup_rates(spark, docs):
     production threshold, the q_dedup_lsh_verified plan; docs touched
     by >=1 verified pair count as near-dup). Returns a 1-row DF."""
     from readembedability_spark.queries import _persist
+    from readembedability_spark.schemas import local_table
     from readembedability_spark.textops import (
         _shingles_from,
         _verified_pairs_from,
@@ -63,7 +64,8 @@ def dedup_rates(spark, docs):
         .distinct()
         .count()
     )
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [
             (
                 n_docs,

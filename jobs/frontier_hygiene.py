@@ -48,6 +48,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from _session import job_session  # noqa: E402
 
+from readembedability_spark.schemas import local_table  # noqa: E402
 from readembedability_spark.textops import (  # noqa: E402
     ROBOTS_RULES_SCHEMA,
     ROBOTS_RULES_SNAPSHOT,
@@ -106,10 +107,9 @@ def verdicts_from(spark, frontier):
     """The composed admission pass: the three SHARED cores joined
     back onto the frontier on their natural keys, then the
     precedence verdict (blocked > quarantine > collapse > admit)."""
-    rules = spark.createDataFrame(
-        ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA
-    )
-    brands = spark.createDataFrame(
+    rules = local_table(spark, ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA)
+    brands = local_table(
+        spark,
         [(b,) for b in TYPOSQUAT_BRANDS], "brand string"
     )
     robots = robots_verdicts_from(

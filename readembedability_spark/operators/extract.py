@@ -11,7 +11,7 @@ byte-identity by construction, SURVEY.md §5.2).
 Per-partition lineage/metrics (O-30): on partition completion the worker
 writes one small JSON file keyed by partition id (atomic tmp+rename, so
 task retries are idempotent) into ``metrics_dir``; the driver-side
-``load_metrics`` reads them back as METRICS_SCHEMA rows.
+``load_metrics`` reads them back as a local METRICS_SCHEMA table.
 """
 
 from __future__ import annotations
@@ -24,7 +24,11 @@ from pathlib import Path
 
 import pandas as pd
 
-from readembedability_spark.schemas import EXTRACTED_SCHEMA
+from readembedability_spark.schemas import (
+    EXTRACTED_SCHEMA,
+    METRICS_SCHEMA,
+    local_table,
+)
 
 _OUT_COLS = [f.name for f in EXTRACTED_SCHEMA.fields]
 
@@ -165,10 +169,6 @@ def extract_stage(pages_df, run_id: str = "run", metrics_dir: str | None = None)
 
 def load_metrics(spark, metrics_dir: str):
     """Per-partition metrics JSON files → DataFrame (METRICS_SCHEMA)."""
-    from readembedability_spark.schemas import METRICS_SCHEMA
-
     files = sorted(Path(metrics_dir).glob("part-*.json"))
     rows = [json.loads(p.read_text(encoding="utf-8")) for p in files]
-    return spark.createDataFrame(rows, schema=METRICS_SCHEMA) if rows else (
-        spark.createDataFrame([], schema=METRICS_SCHEMA)
-    )
+    return local_table(spark, rows, METRICS_SCHEMA)

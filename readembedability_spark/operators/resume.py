@@ -24,7 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readembedability_spark.functions import bucket_col
-from readembedability_spark.schemas import CHECKPOINT_SCHEMA, N_BUCKETS
+from readembedability_spark.schemas import (
+    CHECKPOINT_SCHEMA,
+    N_BUCKETS,
+    local_table,
+)
 
 
 def with_bucket(pages: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
@@ -34,13 +38,14 @@ def with_bucket(pages: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
 def load_done_buckets(
     spark: SparkSession, checkpoint_dir: str, run_id: str
 ) -> DataFrame:
-    """Completed buckets for run_id (empty DF if no checkpoint yet)."""
+    """Completed buckets for run_id (an empty local table if no
+    checkpoint yet, which Catalyst folds away with the anti-join)."""
     path = Path(checkpoint_dir)
     has_files = path.exists() and (
         any(path.glob("*.parquet")) or any(path.glob("*/*.parquet"))
     )
     if not has_files:
-        return spark.createDataFrame([], schema=CHECKPOINT_SCHEMA)
+        return local_table(spark, [], CHECKPOINT_SCHEMA)
     df = spark.read.schema(CHECKPOINT_SCHEMA).parquet(str(path))
     return df.filter(F.col("run_id") == run_id)
 
@@ -83,5 +88,5 @@ def mark_bucket_list_done(
     if not buckets:
         return
     rows = [(run_id, int(b), "done", 0) for b in sorted(set(buckets))]
-    marks = spark.createDataFrame(rows, schema=CHECKPOINT_SCHEMA)
+    marks = local_table(spark, rows, CHECKPOINT_SCHEMA)
     marks.write.mode("append").parquet(checkpoint_dir)

@@ -11,6 +11,7 @@ narrow profile is what makes ≥0.8 N→4N scaling efficiency attainable
 
 from __future__ import annotations
 
+import shutil
 from dataclasses import dataclass
 from pathlib import Path
 
@@ -25,6 +26,7 @@ from readembedability_spark.operators.resume import (
     with_bucket,
 )
 from readembedability_spark.operators.salt import salt_repartition
+from readembedability_spark.schemas import EXTRACTED_SCHEMA
 from readembedability_spark.sources.pages import prefilter, read_pages
 
 
@@ -90,6 +92,10 @@ def run_extract(spark: SparkSession, cfg: RunConfig) -> dict:
     # the accumulated output, which costs O(total table) per incremental
     # run at 10^12 rows and would mark prior runs' buckets as this run's
     pending = _pending_buckets(spark, cfg) if cfg.resume else []
+    # the metrics files are keyed by partition id only: clear an earlier
+    # call's under this run_id, or a re-run at lower parallelism would
+    # read its higher-numbered parts back as this call's
+    shutil.rmtree(_metrics_dir(cfg), ignore_errors=True)
     extracted.write.mode("append").parquet(out_path)
     # checkpoint AFTER the output commit (crash before this line → re-run)
     if cfg.resume:
@@ -97,12 +103,11 @@ def run_extract(spark: SparkSession, cfg: RunConfig) -> dict:
     metrics = load_metrics(spark, _metrics_dir(cfg))
     metrics_path = str(Path(cfg.out_dir) / "metrics")
     metrics.write.mode("append").parquet(metrics_path)
-    processed = metrics.groupBy().sum("n_rows").collect()
-    n_processed = (
-        processed[0][0] if processed and processed[0][0] is not None else 0
-    )
-    # cumulative output count is metadata-only (parquet footer row counts)
-    n = spark.read.parquet(out_path).count()
+    # a local table: collected on the driver, no job
+    n_processed = sum(r["n_rows"] for r in metrics.collect())
+    # cumulative output count is metadata-only (parquet footer row
+    # counts); the declared schema spares a schema-inference job
+    n = spark.read.schema(EXTRACTED_SCHEMA).parquet(out_path).count()
     return {
         "rows_out": n,
         "rows_processed": n_processed,

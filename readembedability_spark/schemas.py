@@ -105,3 +105,29 @@ CHECKPOINT_SCHEMA = StructType(
 
 #: Default number of resume buckets (pmod(xxhash64(url), N_BUCKETS)).
 N_BUCKETS = 256
+
+
+def local_table(spark, rows, schema):
+    """Driver-side rows → a DataFrame over a JVM ``LocalRelation``.
+
+    The one way the program builds a table from Python literals. Going
+    through a ``pa.Table`` makes the plan a ``LocalTableScan``:
+    ``spark.createDataFrame(<list>)`` would instead parallelize a Python
+    RDD, and every one of its tasks starts a Python worker task at a
+    fixed ~0.25 CPU-s (SCALE.md). ``rows`` are tuples in schema order or
+    dicts keyed by field name; ``schema`` is a ``StructType`` or a DDL
+    string. The Arrow schema is always explicit, so an empty ``rows``
+    keeps its types.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    cols = {
+        name: [r[name] if isinstance(r, dict) else r[i] for r in rows]
+        for i, name in enumerate(schema.names)
+    }
+    table = pa.table(cols, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema=schema)

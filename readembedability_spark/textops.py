@@ -48,6 +48,7 @@ from readembedability_spark.queries import (
     q,
     q_baseline,
 )
+from readembedability_spark.schemas import local_table
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -3265,7 +3266,8 @@ def q_langid(spark, sf_dir):
     """Language ID by stopword-set voting (n-gram-free deterministic
     heuristic; argmax with lexicographic tie-break, 'und' if no hits)."""
     words = _words_df(spark, sf_dir)
-    lw = spark.createDataFrame(
+    lw = local_table(
+        spark,
         [(lang, w) for lang, ws in _LANG_WORDS for w in ws.split()],
         "lid string, w string",
     )
@@ -3456,7 +3458,8 @@ def q_join_oembed_providers(spark, sf_dir):
     shape of the pipeline's provider lookup at 10^12 rows."""
     from readembedability_spark.extractor.oembed import OEMBED_PROVIDERS
 
-    providers = spark.createDataFrame(
+    providers = local_table(
+        spark,
         [(h, n) for h, n, _ in OEMBED_PROVIDERS], "host string, provider string"
     )
     ev = _t(spark, sf_dir, "events")
@@ -5462,7 +5465,7 @@ def q_mixture_weights(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     counts = docs.groupBy("lang").agg(F.count("*").alias("n"))
     tot = counts.agg(F.sum("n").alias("t"))
-    targets = spark.createDataFrame(_MIX_TARGETS, "lang string, share double")
+    targets = local_table(spark, _MIX_TARGETS, "lang string, share double")
     return (
         docs.select("doc_id", "lang")
         .join(F.broadcast(targets), "lang")
@@ -6056,8 +6059,8 @@ def q_bpe_train(spark, sf_dir):
     rounds as MATERIALIZED DuckDB CTEs — training is integer-exact, so
     the tables match hash-for-hash with no rounding."""
     merges, _ = _bpe_train(spark, sf_dir)
-    return spark.createDataFrame(
-        merges, "merge_rank long, lhs string, rhs string, pair_freq long"
+    return local_table(
+        spark, merges, "merge_rank long, lhs string, rhs string, pair_freq long"
     )
 
 
@@ -6073,8 +6076,8 @@ def q_bpe_train64(spark, sf_dir):
     (Spark breaks out of the loop, the oracle's COALESCE guard makes
     later rounds no-ops with empty b_r outputs)."""
     merges, _ = _bpe_train(spark, sf_dir, 64)
-    return spark.createDataFrame(
-        merges, "merge_rank long, lhs string, rhs string, pair_freq long"
+    return local_table(
+        spark, merges, "merge_rank long, lhs string, rhs string, pair_freq long"
     )
 
 
@@ -6468,7 +6471,7 @@ def _lrn_train(spark, sf_dir):
     # dangling-mass lesson). The bounded ≤258-row collect per round is
     # the lineage cut.
     for _ in range(_LRN_ROUNDS):
-        w = spark.createDataFrame(w_rows, "b string, w long")
+        w = local_table(spark, w_rows, "b string, w long")
         dots = (
             feats.join(F.broadcast(w), "b")
             .groupBy("doc_id")
@@ -6509,7 +6512,7 @@ def _lrn_train(spark, sf_dir):
             .collect()
         ]
         w_rows.sort()
-    return feats, lab, spark.createDataFrame(w_rows, "b string, w long")
+    return feats, lab, local_table(spark, w_rows, "b string, w long")
 
 
 @q(
@@ -10443,9 +10446,7 @@ def q_token_budget_mixture(spark, sf_dir):
         F.sum(F.size(F.split("text", " "))).cast("long").alias("avail"),
     )
     tot = tok.agg(F.sum("avail").cast("long").alias("t"))
-    targets = spark.createDataFrame(
-        _MIX_TARGETS, "lang string, share double"
-    )
+    targets = local_table(spark, _MIX_TARGETS, "lang string, share double")
     alloc = (
         tok.join(F.broadcast(targets), "lang")
         .crossJoin(F.broadcast(tot))
@@ -11891,7 +11892,8 @@ def q_registrable_domain(spark, sf_dir):
     scan + broadcast probe + one exchange on the registrable key."""
     ev = _t(spark, sf_dir, "events")
     psl = F.broadcast(
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(s,) for s in _PSL_SUFFIXES], "suffix string"
         )
     )
@@ -12678,7 +12680,7 @@ def q_index_prune(spark, sf_dir):
     )
     qtok = bm25_query_terms(docs).select("w").distinct()
     nq = qtok.agg(F.count("*").cast("long").alias("n_query_terms"))
-    kdim = spark.createDataFrame([(1,), (2,), (4,), (8,), (16,)], "k long")
+    kdim = local_table(spark, [(1,), (2,), (4,), (8,), (16,)], "k long")
     saved = (
         F.broadcast(kdim)
         .join(top16, top16.rk <= F.col("k"))
@@ -15705,7 +15707,8 @@ def q_tracker_census(spark, sf_dir):
     aggregate on category with two distinct counts riding the same
     shuffle (expand mode) over the bounded category alphabet."""
     ev = _t(spark, sf_dir, "events")
-    trackers = spark.createDataFrame(
+    trackers = local_table(
+        spark,
         [
             ("analytics.example-metrics.com", "analytics"),
             ("pixel.socialgraph.example", "social"),
@@ -16774,9 +16777,7 @@ def q_robots_precedence(spark, sf_dir):
     per-url window, keyed on the url itself — maximally spread, no
     skew; the rollup collapses onto the bounded rule alphabet."""
     ev = _t(spark, sf_dir, "events")
-    rules = spark.createDataFrame(
-        ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA
-    )
+    rules = local_table(spark, ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA)
     m = F.col("event_id") % 6
     path = (
         F.when(m == 0, F.lit("/private/a"))
@@ -19511,10 +19512,11 @@ def q_robots_diff(spark, sf_dir):
         .otherwise(F.lit("/private"))
         .alias("path"),
     )
-    rules_before = spark.createDataFrame(
-        ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA
+    rules_before = local_table(
+        spark, ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA
     )
-    rules_after = spark.createDataFrame(
+    rules_after = local_table(
+        spark,
         [
             (0, "/private/", 0),
             (0, "/tmp", 0),
@@ -20750,7 +20752,8 @@ def q_typosquat(spark, sf_dir):
         .otherwise(F.lit("amazn"))
         .alias("label"),
     )
-    brands = spark.createDataFrame(
+    brands = local_table(
+        spark,
         [(b,) for b in TYPOSQUAT_BRANDS], "brand string"
     )
     dists = typosquat_min_dist_from(labels, brands)
@@ -20958,7 +20961,8 @@ def q_robots_wildcard(spark, sf_dir):
         .otherwise(F.lit("/index.html"))
         .alias("path"),
     )
-    rules = spark.createDataFrame(
+    rules = local_table(
+        spark,
         [
             (g, p, robots_pattern_to_regex(p), a)
             for (g, p, a) in ROBOTS_WILDCARD_RULES

@@ -81,6 +81,7 @@ def test_resume_no_recompute(spark, corpus):
         r2 = run_extract(spark, cfg)
         assert r2["rows_out"] == n1
         # metrics from run2 show zero rows processed
+        assert r2["rows_processed"] == 0
         pending = resume_filter(
             with_bucket(prefilter(read_pages(spark, corpus))),
             load_done_buckets(spark, str(Path(out) / "_checkpoint"), "rt"),
@@ -177,5 +178,25 @@ def test_checkpoint_marking_independent_of_output(spark, corpus):
             .select("url_bucket").distinct().collect()
         }
         assert set(pend2) == expect
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+
+
+def test_resubmit_at_lower_parallelism_counts_no_stale_metrics(spark, corpus):
+    """The metrics side-channel files are keyed by partition id. A
+    re-submission under the same run_id at lower parallelism writes
+    fewer of them, so the earlier call's higher-numbered files must not
+    be read back as this call's rows."""
+    out = tempfile.mkdtemp()
+    try:
+        cfg = RunConfig(pages_path=corpus, out_dir=out, run_id="rs", parallelism=8)
+        r1 = run_extract(spark, cfg)
+        assert r1["rows_processed"] == r1["rows_out"] > 0
+        cfg.parallelism = 4
+        r2 = run_extract(spark, cfg)
+        assert r2["rows_out"] == r1["rows_out"]
+        assert r2["rows_processed"] == 0
+        metrics = spark.read.parquet(str(Path(out) / "metrics"))
+        assert metrics.agg(F.sum("n_rows")).first()[0] == r1["rows_out"]
     finally:
         shutil.rmtree(out, ignore_errors=True)

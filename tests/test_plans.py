@@ -5,6 +5,8 @@ guarantees — a scan that reads all columns or a join that shuffles a
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -72,6 +74,129 @@ def test_single_python_boundary(spark, pages_path):
     # clustering requirement → the heavy html payload shuffles ONCE
     assert len(re.findall(r"\(\d+\) Exchange", plan)) == 1
     assert len(re.findall(r"\(\d+\) Window\b", plan)) == 1
+
+
+def _python_rdd_leaves(df) -> list[str]:
+    """LogicalRDD / ExistingRDD leaves: a table parallelized from Python
+    objects, whose every task starts a Python worker."""
+    qe = df._jdf.queryExecution()  # noqa: SLF001
+    plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    return [
+        ln.strip() for ln in plans.splitlines()
+        if "LogicalRDD" in ln or "ExistingRDD" in ln
+    ]
+
+
+def test_run_extract_python_only_in_extract_stage(spark, pages_path, tmp_path):
+    """Every DataFrame run_extract writes, collects or counts, on a first
+    run (no checkpoint on disk) and on a resumed one, is built without a
+    Python-RDD leaf; the extract DataFrame has exactly one MapInPandas.
+    The done-set, the checkpoint marks and the metrics table are local
+    tables, so a call runs Python tasks in its extract stage only."""
+    import re
+
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    import readembedability_spark.plans.pipeline as pl
+
+    seen = []
+    orig = {
+        "write": DataFrameWriter.parquet,
+        "collect": DataFrame.collect,
+        "count": DataFrame.count,
+    }
+
+    def writer_spy(w, path, *a, **kw):
+        seen.append(("write " + Path(path).name, w._df))  # noqa: SLF001
+        return orig["write"](w, path, *a, **kw)
+
+    def spy(kind):
+        def f(df, *a, **kw):
+            seen.append((kind, df))
+            return orig[kind](df, *a, **kw)
+        return f
+
+    cfg = pl.RunConfig(
+        pages_path=pages_path, out_dir=str(tmp_path / "out"), parallelism=4
+    )
+    DataFrameWriter.parquet = writer_spy
+    DataFrame.collect, DataFrame.count = spy("collect"), spy("count")
+    try:
+        for _ in range(2):  # no checkpoint on disk, then one
+            extract_df = pl.build_extract_df(spark, cfg)
+            plan = _plan(extract_df)
+            assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+            assert not _python_rdd_leaves(extract_df), plan
+            pl.run_extract(spark, cfg)
+    finally:
+        DataFrameWriter.parquet = orig["write"]
+        DataFrame.collect, DataFrame.count = orig["collect"], orig["count"]
+    kinds = [k for k, _ in seen]
+    for k in ("write extracted", "write _checkpoint", "write metrics",
+              "collect", "count"):
+        assert k in kinds, kinds
+    for kind, df in seen:
+        assert not _python_rdd_leaves(df), (kind, _python_rdd_leaves(df))
+
+
+def test_local_table_matches_create_dataframe(spark):
+    """local_table builds the same rows and schema (names, types,
+    nullability) as spark.createDataFrame, as a LocalTableScan."""
+    from readembedability_spark.schemas import (
+        CHECKPOINT_SCHEMA,
+        METRICS_SCHEMA,
+        local_table,
+    )
+
+    metric = {
+        "run_id": "r", "partition_id": 3, "n_rows": 10, "n_ok": 9,
+        "n_error": 1, "bytes_in": 4096, "wall_ms": 12,
+    }
+    cases = [
+        ([("r", 7, "done", 0), ("r", 255, "done", 0)], CHECKPOINT_SCHEMA),
+        ([metric, dict(metric, partition_id=0)], METRICS_SCHEMA),
+        ([("en", 0.5), ("de", 0.2)], "lang string, share double"),
+    ]
+    for rows, schema in cases:
+        for data in (rows, []):
+            got = local_table(spark, data, schema)
+            want = spark.createDataFrame(data, schema=schema)
+            assert got.schema == want.schema
+            assert [f.nullable for f in got.schema] == [
+                f.nullable for f in want.schema
+            ]
+            assert got.collect() == want.collect()
+            assert "LocalTableScan" in _plan(got)
+            assert not _python_rdd_leaves(got)
+
+
+def test_create_dataframe_only_in_local_table():
+    """One way to build a table from driver-side literals: every
+    createDataFrame call in the program is the one in
+    schemas.local_table."""
+    import ast
+
+    repo = Path(__file__).resolve().parent.parent
+    calls = []
+    for root in ("readembedability_spark", "jobs"):
+        for src in sorted((repo / root).rglob("*.py")):
+            tree = ast.parse(src.read_text(encoding="utf-8"))
+            funcs = [
+                n for n in ast.walk(tree)
+                if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+            ]
+            for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Attribute)
+                    and node.attr == "createDataFrame"
+                ):
+                    owner = [
+                        f.name for f in funcs
+                        if f.lineno <= node.lineno <= f.end_lineno
+                    ]
+                    calls.append((str(src.relative_to(repo)), owner))
+    assert calls == [("readembedability_spark/schemas.py", ["local_table"])]
 
 
 def test_broadcast_join_in_providers_pattern(spark):
