@@ -88,12 +88,15 @@ class Element:
     def iter(self):
         """Depth-first pre-order over elements (self included)."""
         stack = [self]
+        pop, push = stack.pop, stack.append
         while stack:
-            el = stack.pop()
+            el = pop()
             yield el
-            stack.extend(
-                c for c in reversed(el.children) if isinstance(c, Element)
-            )
+            # a plain loop: a generator expression per node costs more
+            # than the few children it filters
+            for c in reversed(el.children):
+                if isinstance(c, Element):
+                    push(c)
 
     def find_all(self, *tags: str):
         wanted = frozenset(tags)
@@ -167,9 +170,14 @@ class _TreeBuilder(HTMLParser):
 
     # -- HTMLParser callbacks ---------------------------------------------
 
-    def handle_starttag(self, tag: str, attrs) -> None:
+    def updatepos(self, i: int, j: int) -> int:
+        # the base class counts newlines here only to keep getpos()'s
+        # line/offset current; nothing reads them, so skip the count
+        return j
+
+    def _append(self, tag: str, attrs) -> Element | None:
         if self.n_nodes >= MAX_NODES:
-            return
+            return None
         self.n_nodes += 1
         self._close_implicit(tag)
         # first occurrence of an attribute wins; None value -> ""
@@ -180,21 +188,16 @@ class _TreeBuilder(HTMLParser):
         parent = self.stack[-1]
         el = Element(tag, adict, parent)
         parent.children.append(el)
-        if tag not in VOID_ELEMENTS:
+        return el
+
+    def handle_starttag(self, tag: str, attrs) -> None:
+        el = self._append(tag, attrs)
+        if el is not None and tag not in VOID_ELEMENTS:
             self.stack.append(el)
 
     def handle_startendtag(self, tag: str, attrs) -> None:
         # <tag/> — treat as immediately-closed (never pushes)
-        if self.n_nodes >= MAX_NODES:
-            return
-        self.n_nodes += 1
-        self._close_implicit(tag)
-        adict: dict[str, str] = {}
-        for k, v in attrs:
-            if k not in adict:
-                adict[k] = v if v is not None else ""
-        parent = self.stack[-1]
-        parent.children.append(Element(tag, adict, parent))
+        self._append(tag, attrs)
 
     def handle_endtag(self, tag: str) -> None:
         if tag in VOID_ELEMENTS:
@@ -241,12 +244,15 @@ def free_tree(root: Element) -> None:
     extract_page after each page.
     """
     stack = [root]
+    push = stack.append
     while stack:
         el = stack.pop()
         children = el.children
         el.parent = None
         el.children = []
-        stack.extend(c for c in children if isinstance(c, Element))
+        for c in children:
+            if isinstance(c, Element):
+                push(c)
 
 
 def find_first(root: Element, *tags: str) -> Element | None:

@@ -16,6 +16,8 @@ from __future__ import annotations
 
 import re
 from collections import Counter
+from collections.abc import Iterator
+from itertools import islice
 
 from readembedability_spark.extractor.stopwords import STOPWORDS
 
@@ -44,61 +46,61 @@ def keywords_from_meta(raw: str) -> list[str]:
 
 def keywords_from_text(text: str) -> list[str]:
     """Hot path — called for every page without meta keywords. The
-    filter loop keeps (global token index, lowered token) for tokens
-    passing the length/stopword/digit gates; counting then happens in
-    C (collections.Counter), first positions via a reversed dict-comp
-    (later, i.e. earlier-position, assignments win), and bigrams only
-    between kept tokens ADJACENT in the raw stream — semantics
-    identical to the original single-loop form (golden-locked)."""
+    keep/lowercase decision is made once per DISTINCT raw token (natural
+    text is Zipf-repetitive); unigrams and the bigrams of kept tokens
+    ADJACENT in the raw stream are counted in C (``Counter`` over the
+    raw tokens and over the token pairs), and first positions are found
+    only for the terms frequent enough to reach the top 10, by C-level
+    ``list.index`` scans that together read the text once. Ranking:
+    frequency desc, first position asc, then the term itself
+    (golden-locked)."""
+    tokens = _TOKEN_RE.findall(text)
+    term_of: dict[str, str | None] = {}  # raw token -> kept term, None = dropped
+    unigrams: dict[str, int] = {}
     stop = STOPWORDS
-    kept: list[tuple[int, str]] = []
-    push = kept.append
-    # per-document memo of raw token → lowered-if-kept (None = dropped):
-    # natural text is Zipf-repetitive, so most tokens hit the memo and
-    # skip the lower()+gates entirely (measured ~35% off this loop);
-    # pure memoization — decisions are identical per distinct raw token
-    memo: dict[str, str | None] = {}
-    miss = object()
-    get = memo.get
-    # bigrams fused into the same pass: a bigram exists between kept
-    # tokens ADJACENT in the raw stream (prev kept index == i-1)
-    bigs: list[tuple[int, str]] = []
-    push_big = bigs.append
-    prev_i = -2
-    prev_t = ""
-    for i, raw in enumerate(_TOKEN_RE.findall(text)):
-        t = get(raw, miss)
-        if t is miss:
-            tl = raw.lower()
-            t = (
-                tl
-                if (
-                    _MIN_TOKEN_LEN <= len(tl) <= _MAX_TOKEN_LEN
-                    and tl not in stop
-                    and not tl.isdigit()
-                )
-                else None
-            )
-            memo[raw] = t
-        if t is not None:
-            push((i, t))
-            if i == prev_i + 1:
-                push_big((prev_i, prev_t + " " + t))
-            prev_i = i
-            prev_t = t
-    counts: dict[str, int] = dict(Counter(t for _, t in kept))
-    first_pos = {t: i for i, t in reversed(kept)}
-    counts.update(Counter(bg for _, bg in bigs))
-    for pi, bg in reversed(bigs):
-        first_pos[bg] = pi
+    for raw, n in Counter(tokens).items():
+        t = raw.lower()
+        if (
+            _MIN_TOKEN_LEN <= len(t) <= _MAX_TOKEN_LEN
+            and t not in stop
+            and not t.isdigit()
+        ):
+            term_of[raw] = t
+            unigrams[t] = unigrams.get(t, 0) + n
+        else:
+            term_of[raw] = None
+    terms = list(map(term_of.__getitem__, tokens))
+    # pairs with a dropped (None) side are counted too, and skipped below
+    pairs = list(zip(terms, islice(terms, 1, None)))
+    bigrams = Counter(pairs)
     # a bigram must repeat to count; unigrams need freq >= 2 on long texts
-    items = [
-        (term, n)
-        for term, n in counts.items()
-        if n >= 2 or (len(counts) < 12 and " " not in term)
-    ]
-    items.sort(key=lambda kv: (-kv[1], first_pos[kv[0]], kv[0]))
-    return [term for term, _ in items[:_MAX_KEYWORDS]]
+    small = len(unigrams) < 12 and (
+        len(unigrams) + sum(None not in p for p in bigrams) < 12
+    )
+    uni = [(t, n) for t, n in unigrams.items() if n >= 2 or small]
+    big = [(p, n) for p, n in bigrams.items() if n >= 2 and None not in p]
+    if len(uni) + len(big) > _MAX_KEYWORDS:
+        # only terms as frequent as the 10th most frequent can rank
+        floor = sorted([n for _, n in uni + big], reverse=True)[_MAX_KEYWORDS - 1]
+        uni = [c for c in uni if c[1] >= floor]
+        big = [c for c in big if c[1] >= floor]
+    ranked = list(_ranked(terms, uni))
+    ranked += [(neg_n, i, " ".join(p)) for neg_n, i, p in _ranked(pairs, big)]
+    ranked.sort()
+    return [term for _, _, term in ranked[:_MAX_KEYWORDS]]
+
+
+def _ranked(seq: list, counted: list[tuple]) -> Iterator[tuple]:
+    """``(-count, first index in seq, key)`` per ``(key, count)``.
+
+    ``counted`` lists its keys in first-occurrence order — the insertion
+    order of the counting dicts above — so each ``seq.index`` scan
+    resumes where the previous one stopped: all of them together read
+    ``seq`` at most once, however many keys there are."""
+    i = -1
+    for key, n in counted:
+        i = seq.index(key, i + 1)
+        yield -n, i, key
 
 
 def extract_keywords(meta_keywords: str | None, content_text: str) -> list[str]:

@@ -65,20 +65,24 @@ def extract_anchors(
 ) -> list[tuple[str, str, bool]]:
     """Ordered, absolutized, deduped (link, anchor_text, nofollow)
     triples (rules L-1..L-8)."""
+    # one walk finds both the <a> candidates and the first <base href>,
+    # which applies to anchors before it too
+    base_href = ""
+    anchors: list[Element] = []
+    for el in root.iter():
+        if el.tag == "a":
+            anchors.append(el)
+        elif el.tag == "base" and not base_href:
+            base_href = (el.get("href") or "").strip()
     base = page_url
-    for base_el in root.find_all("base"):
-        bh = (base_el.get("href") or "").strip()
-        if bh:
-            try:
-                base = urljoin(page_url, bh)
-            except ValueError:
-                base = page_url
-            break
+    if base_href:
+        try:
+            base = urljoin(page_url, base_href)
+        except ValueError:
+            pass
     out: list[tuple[str, str, bool]] = []
     seen: set[str] = set()
-    for el in root.iter():
-        if el.tag != "a":
-            continue
+    for el in anchors:
         href = (el.get("href") or "").strip()
         if not href or href.startswith("#"):
             continue

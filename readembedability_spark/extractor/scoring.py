@@ -21,7 +21,11 @@ from __future__ import annotations
 
 import re
 
-from readembedability_spark.extractor.dom import Element, body_or_root
+from readembedability_spark.extractor.dom import (
+    BLOCK_ELEMENTS,
+    Element,
+    body_or_root,
+)
 
 POSITIVE_RE = re.compile(
     r"article|body|content|entry|hentry|h-entry|main|page|pagination|post|"
@@ -79,20 +83,36 @@ def _init_score(el: Element) -> float:
     return float(_TAG_WEIGHTS.get(el.tag, 0)) + class_weight(el)
 
 
-def link_density(el: Element) -> float:
-    total = len(el.text_content())
-    if total == 0:
-        return 0.0
-    link_chars = sum(len(a.text_content()) for a in el.find_all("a"))
-    return min(1.0, link_chars / total)
+def _link_densities(root: Element) -> dict[int, float]:
+    """Link density — link-text length / text length, capped at 1 — of
+    root and every element under it, keyed by id(), in ONE bottom-up
+    pass over text lengths rather than a walk per candidate (candidate
+    subtrees nest). An element's link-text length sums the text of
+    every <a> in its subtree, itself included, so a nested <a> counts
+    again inside its outer one."""
+    lens: dict[int, tuple[int, int]] = {}
+    for el in reversed(list(root.iter())):  # children before parents
+        total = links = 0
+        for c in el.children:
+            if isinstance(c, str):
+                total += len(c)
+            else:
+                t, n = lens[id(c)]
+                total += t
+                links += n
+        if el.tag == "a":
+            links += total
+        lens[id(el)] = (total, links)
+    return {
+        key: min(1.0, links / total) if total else 0.0
+        for key, (total, links) in lens.items()
+    }
 
 
 def _is_paragraph_div(el: Element) -> bool:
     """A div with no block element children acts as a paragraph."""
     if el.tag != "div":
         return False
-    from readembedability_spark.extractor.dom import BLOCK_ELEMENTS
-
     return not any(
         isinstance(c, Element) and c.tag in BLOCK_ELEMENTS for c in el.children
     )
@@ -126,7 +146,7 @@ def score_candidates(root: Element) -> dict[int, tuple[Element, float]]:
 
 def top_candidate(root: Element) -> tuple[Element | None, float]:
     """Best-scoring candidate after link-density scaling (ties: doc order)."""
-    top, score, _ = _top_with_candidates(root)
+    top, score, _, _ = _top_with_candidates(root)
     return top, score
 
 
@@ -138,15 +158,18 @@ def _top_with_candidates(root: Element):
     """
     body = body_or_root(root)
     candidates = score_candidates(body)
+    # a candidate may sit above <body> (a misnested body's parent), so
+    # densities cover the whole document
+    density = _link_densities(root) if candidates else {}
     best: Element | None = None
     best_score = 0.0
     for el, raw in candidates.values():
-        final = raw * (1.0 - link_density(el))
+        final = raw * (1.0 - density[id(el)])
         if final > best_score:
             best, best_score = el, final
     if best is None:
         best = body
-    return best, best_score, candidates
+    return best, best_score, candidates, density
 
 
 def select_content(root: Element) -> tuple[Element, list[Element]]:
@@ -155,7 +178,7 @@ def select_content(root: Element) -> tuple[Element, list[Element]]:
     Returns ``(top, members)`` where members includes top and merged
     siblings in document order.
     """
-    top, top_score, candidates = _top_with_candidates(root)
+    top, top_score, candidates, density = _top_with_candidates(root)
     members = [top]
     parent = top.parent
     if parent is not None and top_score > 0:
@@ -164,12 +187,12 @@ def select_content(root: Element) -> tuple[Element, list[Element]]:
             if not isinstance(sib, Element) or sib is top:
                 continue
             entry = candidates.get(id(sib))
-            sib_score = entry[1] * (1.0 - link_density(sib)) if entry else 0.0
+            sib_score = entry[1] * (1.0 - density[id(sib)]) if entry else 0.0
             if sib_score >= threshold:
                 members.append(sib)
             elif sib.tag == "p":
                 text = " ".join(sib.text_content().split())
-                if len(text) > 80 and link_density(sib) < 0.25:
+                if len(text) > 80 and density[id(sib)] < 0.25:
                     members.append(sib)
         # restore document order among parent's children
         order = {id(c): i for i, c in enumerate(parent.children)}

@@ -18,7 +18,9 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
+import zipimport
 from collections.abc import Iterator
 from pathlib import Path
 
@@ -139,8 +141,26 @@ def make_extract_batches(run_id: str, metrics_dir: str | None):
                     "wall_ms": int((time.monotonic() - t0) * 1000),
                 },
             )
+        evict_zip_finders()
 
     return extract_batches
+
+
+def evict_zip_finders() -> None:
+    """Drop every ``zipimporter`` from ``sys.path_importer_cache``.
+
+    A reused Python worker starts each task with
+    ``importlib.invalidate_caches()``, and a cached zipimporter answers
+    that by re-reading its whole archive directory: ~27k entries over
+    the pyspark.zip subpackages and the spark-core jar, ~0.25 CPU-s per
+    task before its first row (SCALE.md, "The Python stage"). With no
+    zipimporter cached, the next task has nothing to re-read; a later
+    import from a zip re-creates its finder from zipimport's own
+    directory cache, without reading the archive."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del cache[path]
 
 
 def _write_metrics(metrics_dir: str, record: dict) -> None:

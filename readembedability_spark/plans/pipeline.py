@@ -85,26 +85,39 @@ def run_extract(spark: SparkSession, cfg: RunConfig) -> dict:
     FileOutputCommitter it would fan every task into num_salts tiny
     files, which measurably serializes the job on file IO.
     """
-    extracted = build_extract_df(spark, cfg)
     out_path = str(Path(cfg.out_dir) / "extracted")
     # this batch's bucket set is known PRE-write from the (url-column-
     # only) input scan minus already-done buckets — never by re-scanning
     # the accumulated output, which costs O(total table) per incremental
     # run at 10^12 rows and would mark prior runs' buckets as this run's
     pending = _pending_buckets(spark, cfg) if cfg.resume else []
-    # the metrics files are keyed by partition id only: clear an earlier
-    # call's under this run_id, or a re-run at lower parallelism would
-    # read its higher-numbered parts back as this call's
-    shutil.rmtree(_metrics_dir(cfg), ignore_errors=True)
-    extracted.write.mode("append").parquet(out_path)
-    # checkpoint AFTER the output commit (crash before this line → re-run)
-    if cfg.resume:
-        mark_bucket_list_done(spark, pending, _ckpt_dir(cfg), cfg.run_id)
-    metrics = load_metrics(spark, _metrics_dir(cfg))
-    metrics_path = str(Path(cfg.out_dir) / "metrics")
-    metrics.write.mode("append").parquet(metrics_path)
-    # a local table: collected on the driver, no job
-    n_processed = sum(r["n_rows"] for r in metrics.collect())
+    n_processed = 0
+    # under resume, no pending bucket while this run_id has buckets done
+    # means an earlier call processed every page: the write would only
+    # start one Python task per empty partition and append zero rows to
+    # the metrics table. An empty input with no checkpoint still writes,
+    # so the call always leaves a readable (possibly empty) output
+    all_done = (
+        cfg.resume
+        and not pending
+        and not load_done_buckets(spark, _ckpt_dir(cfg), cfg.run_id).isEmpty()
+    )
+    if not all_done:
+        extracted = build_extract_df(spark, cfg)
+        # the metrics files are keyed by partition id only: clear an
+        # earlier call's under this run_id, or a re-run at lower
+        # parallelism would read its higher-numbered parts back as this
+        # call's
+        shutil.rmtree(_metrics_dir(cfg), ignore_errors=True)
+        extracted.write.mode("append").parquet(out_path)
+        # checkpoint AFTER the output commit (crash before this line → re-run)
+        if cfg.resume:
+            mark_bucket_list_done(spark, pending, _ckpt_dir(cfg), cfg.run_id)
+        metrics = load_metrics(spark, _metrics_dir(cfg))
+        metrics_path = str(Path(cfg.out_dir) / "metrics")
+        metrics.write.mode("append").parquet(metrics_path)
+        # a local table: collected on the driver, no job
+        n_processed = sum(r["n_rows"] for r in metrics.collect())
     # cumulative output count is metadata-only (parquet footer row
     # counts); the declared schema spares a schema-inference job
     n = spark.read.schema(EXTRACTED_SCHEMA).parquet(out_path).count()

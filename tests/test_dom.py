@@ -27,6 +27,10 @@ def test_attrs_first_wins_and_none_value():
     div = find_first(root, "div")
     assert div.attrs["id"] == "a"
     assert div.attrs["hidden"] == ""
+    assert list(div.attrs) == ["id", "hidden"]  # first-occurrence order
+    a = find_first(parse_html('<a rel="x" href="/h" Class="c">t</a>'), "a")
+    assert a.attrs == {"rel": "x", "href": "/h", "class": "c"}
+    assert list(a.attrs) == ["rel", "href", "class"]
 
 
 def test_void_elements_never_nest():

@@ -55,6 +55,23 @@ def test_link_density_penalizes_nav():
     assert top.attrs.get("class") == "a"
 
 
+def test_link_densities_one_pass_matches_per_element_walk():
+    """The one-pass densities equal text_content + find_all("a") per
+    element, with nested and text-less anchors included."""
+    from readembedability_spark.extractor.scoring import _link_densities
+
+    root = parse_html(
+        "<div>lead <a href=1>one</a><p>x<a>out<a>in</a></a>tail</p>"
+        "<p><a href=2></a></p><section><a>all link</a></section><p></p></div>"
+    )
+    got = _link_densities(root)
+    assert len(got) == sum(1 for _ in root.iter())
+    for el in root.iter():
+        total = len(el.text_content())
+        links = sum(len(a.text_content()) for a in el.find_all("a"))
+        assert got[id(el)] == (min(1.0, links / total) if total else 0.0)
+
+
 def test_sibling_merge_pulls_long_p():
     html = """
     <html><body><div>

@@ -200,3 +200,69 @@ def test_resubmit_at_lower_parallelism_counts_no_stale_metrics(spark, corpus):
         assert metrics.agg(F.sum("n_rows")).first()[0] == r1["rows_out"]
     finally:
         shutil.rmtree(out, ignore_errors=True)
+
+
+def test_resubmission_runs_no_extract_stage(spark, corpus, tmp_path):
+    """A re-submission under the same run_id, every bucket already done,
+    is a no-op: none of its writes, collects or counts plans the
+    MapInPandas extract stage, and it appends no metrics rows."""
+    from pyspark.sql import DataFrameWriter
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    cfg = RunConfig(
+        pages_path=corpus, out_dir=str(tmp_path / "out"), run_id="noop",
+        parallelism=4,
+    )
+    r1 = run_extract(spark, cfg)
+    metrics_path = str(tmp_path / "out" / "metrics")
+    n_metrics = spark.read.parquet(metrics_path).count()
+
+    planned = []
+    orig = {
+        "write": DataFrameWriter.parquet,
+        "collect": DataFrame.collect,
+        "count": DataFrame.count,
+    }
+
+    def plan_of(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()  # noqa: SLF001
+
+    def writer_spy(w, path, *a, **kw):
+        planned.append(plan_of(w._df))  # noqa: SLF001
+        return orig["write"](w, path, *a, **kw)
+
+    def spy(kind):
+        def f(df, *a, **kw):
+            planned.append(plan_of(df))
+            return orig[kind](df, *a, **kw)
+        return f
+
+    DataFrameWriter.parquet = writer_spy
+    DataFrame.collect, DataFrame.count = spy("collect"), spy("count")
+    try:
+        r2 = run_extract(spark, cfg)
+    finally:
+        DataFrameWriter.parquet = orig["write"]
+        DataFrame.collect, DataFrame.count = orig["collect"], orig["count"]
+    assert planned, "the re-submission ran no action at all"
+    assert not [p for p in planned if "MapInPandas" in p]
+    assert r2["rows_processed"] == 0
+    assert r2["rows_out"] == r1["rows_out"] > 0
+    assert spark.read.parquet(metrics_path).count() == n_metrics
+
+
+def test_empty_input_writes_readable_empty_output(spark, tmp_path):
+    """An input with no page has no pending bucket and no done bucket:
+    the call still writes its (empty) output, which reads back as zero
+    rows, and reports zero rows."""
+    import pyarrow.parquet as pq
+
+    from readembedability_spark.sources.synth import _ARROW_SCHEMA
+
+    pages = tmp_path / "empty.parquet"
+    pq.write_table(_ARROW_SCHEMA.empty_table(), pages)
+    cfg = RunConfig(pages_path=str(pages), out_dir=str(tmp_path / "out"),
+                    parallelism=4)
+    res = run_extract(spark, cfg)
+    assert res["rows_out"] == res["rows_processed"] == 0
+    assert spark.read.parquet(res["out_path"]).count() == 0
