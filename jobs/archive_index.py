@@ -25,17 +25,14 @@ Cluster (real pages table):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 
 def captures(pages):
@@ -80,24 +77,10 @@ def staleness(caps):
     return staleness_from(caps, tiebreak="digest")
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="pages parquet (url, warc_ts, html)")
-    src.add_argument(
-        "--pages",
-        type=int,
-        help="synthesize N recrawl-bearing pages (smoke/test path)",
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("archive-index", args.master)
+def run(spark, args) -> dict:
     from readembedability_spark.operators.salt import default_parts
-    from readembedability_spark.queries import _persist, release_caches
+    from readembedability_spark.queries import _persist
 
-    t0 = time.time()
     out = Path(args.output)
     if args.input:
         pages = spark.read.parquet(args.input)
@@ -137,9 +120,16 @@ def main() -> None:
     ).collect()[0]
     stats["hosts_estimated"] = counts["n"]
     stats["stale_hosts"] = counts["stale"]
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--pages",
+        input_help="pages parquet (url, warc_ts, html)",
+        synth_help="synthesize N recrawl-bearing pages (smoke/test path)",
+    )
+    run_job("archive-index", ap, run)
 
 
 if __name__ == "__main__":

@@ -33,17 +33,14 @@ Cluster (real capture table):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 from readembedability_spark.textops import (  # noqa: E402
     mojibake_class_from,
@@ -161,26 +158,7 @@ def verdicts_from(captures):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument(
-        "--input",
-        help="capture table parquet (doc_id, host, raw, text)",
-    )
-    src.add_argument(
-        "--docs",
-        type=int,
-        help="synthesize N defect-bearing captures (smoke/test path)",
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("capture-quality", args.master)
-    from readembedability_spark.queries import release_caches
-
-    t0 = time.time()
+def run(spark, args) -> dict:
     out = Path(args.output)
     if args.input:
         captures = spark.read.parquet(args.input)
@@ -243,9 +221,16 @@ def main() -> None:
     if worst:
         stats["worst_host"] = worst[0]["host"]
         stats["worst_keep_ppm"] = int(worst[0]["keep_ppm"])
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--docs",
+        input_help="capture table parquet (doc_id, host, raw, text)",
+        synth_help="synthesize N defect-bearing captures (smoke/test path)",
+    )
+    run_job("capture-quality", ap, run)
 
 
 if __name__ == "__main__":

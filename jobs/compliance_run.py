@@ -27,17 +27,14 @@ Cluster (real fetch log + robots dimension):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 
 def rulesets(spark):
@@ -97,30 +94,13 @@ def synth_fetch_log(spark, n):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument(
-        "--input", help="fetch log parquet (fetch_id, host, g, path, ts,"
-        " delay_us)"
-    )
-    src.add_argument(
-        "--fetches",
-        type=int,
-        help="synthesize N compliance-bearing fetches (smoke/test path)",
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("compliance-run", args.master)
-    from readembedability_spark.queries import _persist, release_caches
+def run(spark, args) -> dict:
+    from readembedability_spark.queries import _persist
     from readembedability_spark.textops import (
         politeness_from,
         robots_verdicts_from,
     )
 
-    t0 = time.time()
     out = Path(args.output)
     if args.input:
         fetches = spark.read.parquet(args.input)
@@ -186,9 +166,18 @@ def main() -> None:
     if top:
         stats["worst_host"] = top[0]["host"]
         stats["worst_debt"] = int(top[0]["debt"])
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--fetches",
+        input_help="fetch log parquet (fetch_id, host, g, path, ts,"
+        " delay_us)",
+        synth_help="synthesize N compliance-bearing fetches (smoke/test "
+        "path)",
+    )
+    run_job("compliance-run", ap, run)
 
 
 if __name__ == "__main__":

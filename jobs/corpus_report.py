@@ -24,17 +24,14 @@ Cluster:
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 
 def dedup_rates(spark, docs):
@@ -149,18 +146,10 @@ def length_distribution(docs):
     return row.select(*cols)
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("corpus-report", args.master)
-    from readembedability_spark.queries import _persist, release_caches
+def run(spark, args) -> dict:
+    from readembedability_spark.queries import _persist
     from readembedability_spark.textops import filter_funnel_from
 
-    t0 = time.time()
     docs = _persist(
         spark.read.parquet(args.input).select("doc_id", "text", "lang")
     )
@@ -191,10 +180,13 @@ def main() -> None:
             for r in mix.collect()
         },
         "lengths": lens.collect()[0].asDict(),
-        "wall_sec": round(time.time() - t0, 1),
     }
-    release_caches(spark)
-    print(json.dumps(summary))
+    return summary
+
+
+def main() -> None:
+    ap = job_parser()
+    run_job("corpus-report", ap, run)
 
 
 if __name__ == "__main__":

@@ -25,42 +25,44 @@ Cluster (real pages table):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
+from readembedability_spark.textops import (  # noqa: E402
+    HOST_RE,
+    frontier_counts_from,
+    frontier_schedule_from,
+    unseen_links_from,
+)
 
 
-#: generic host pattern (the registry queries use the synthesis-shaped
-#: variant; a production url table needs the general form)
-HOST_RE = r"https?://([^/?#]+)"
-
-
-def extract_link_table(spark, pages):
-    """(url, link) through the full salted mapInPandas extraction —
-    the links column rides the batch the extract stage already emits;
-    pages with no surviving links drop out here. rel-flagged
-    nofollow/sponsored/ugc links (L-8) are excluded: every consumer
-    of this table (authority edges, frontier, schedule) models
-    endorsement, which those links don't carry."""
-    from readembedability_spark.harness import salted_extract
-
+def link_table(extracted):
+    """(url, link) off an extraction result — pages with no surviving
+    links drop out here. rel-flagged nofollow/sponsored/ugc links (L-8)
+    are excluded: every consumer of this table (authority edges,
+    frontier, schedule) models endorsement, which those links don't
+    carry."""
     return (
-        salted_extract(pages)
-        .select(
+        extracted.select(
             "url",
             F.explode(F.arrays_zip("links", "link_nofollow")).alias("z"),
         )
         .filter(~F.col("z.link_nofollow"))
         .select("url", F.col("z.links").alias("link"))
     )
+
+
+def extract_link_table(spark, pages):
+    """link_table through the full salted mapInPandas extraction — the
+    links column rides the batch the extract stage already emits."""
+    from readembedability_spark.harness import salted_extract
+
+    return link_table(salted_extract(pages))
 
 
 def host_edges(links):
@@ -83,13 +85,10 @@ def host_edges(links):
 def unseen_links(links, pages):
     """Distinct outbound links not present as corpus urls — the ONE
     definition of 'unseen' shared by the frontier rollup and the
-    schedule (the q_crawl_frontier plan: url-keyed anti-join, no
-    broadcast assumption on either side). main() persists this so the
-    anti-join shuffle runs once across both consumers."""
-    return (
-        links.select("link").distinct()
-        .join(pages.select("url"), F.col("link") == F.col("url"), "left_anti")
-    )
+    schedule (textops.unseen_links_from, the q_crawl_frontier
+    anti-join). run() persists this so the anti-join shuffle runs once
+    across both consumers."""
+    return unseen_links_from(links, pages)
 
 
 def frontier(links, pages, unseen=None):
@@ -97,44 +96,18 @@ def frontier(links, pages, unseen=None):
     persisted `unseen` to share the anti-join with schedule())."""
     if unseen is None:
         unseen = unseen_links(links, pages)
-    return unseen.groupBy(
-        F.regexp_extract("link", HOST_RE, 1).alias("host")
-    ).agg(F.count("*").alias("n_unseen"))
+    return frontier_counts_from(unseen)
 
 
 def schedule(fr, ranks, unseen, k: int = 3):
-    """Authority-prioritized, politeness-capped crawl schedule (the
-    q_frontier_schedule composition, VERDICT r05 missing #3): each
-    frontier host's priority = its authority x unseen count; within a
-    host at most `k` urls are scheduled per round (ROW_NUMBER <= k —
-    a WindowGroupLimit, so hot frontier hosts pre-prune map-side).
-    `unseen` is the shared unseen_links table (same rows fr counted —
-    one definition, one anti-join); fr/ranks are host-cardinality
-    tables equi-joined on host with no forced broadcast (AQE
-    decides); hosts with no authority score schedule at priority 0 so
-    newly-discovered hosts still crawl."""
-    fh = unseen.select(
-        F.regexp_extract("link", HOST_RE, 1).alias("host"), "link"
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("host").orderBy("link")
-    ranked = fh.withColumn("slot", F.row_number().over(w)).filter(
-        F.col("slot") <= k
-    )
-    return (
-        ranked.join(fr, "host")
-        .join(ranks, "host", "left")
-        .select(
-            "host",
-            "slot",
-            "link",
-            "n_unseen",
-            F.round(
-                F.coalesce("authority", F.lit(0.0)) * F.col("n_unseen"), 6
-            ).alias("priority"),
-        )
-    )
+    """Authority-prioritized, politeness-capped crawl schedule — the
+    frontier half of q_frontier_schedule (textops.
+    frontier_schedule_from): at most `k` unseen urls per host, priority
+    = host authority x unseen count, hosts with no authority score at
+    priority 0 so newly-discovered hosts still crawl. `unseen` is the
+    shared unseen_links table, fr its per-host counts and ranks the
+    (host, authority) table."""
+    return frontier_schedule_from(unseen, fr, ranks, k)
 
 
 def annotate_pages(pages, ranks):
@@ -153,24 +126,10 @@ def annotate_pages(pages, ranks):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="pages parquet (url, warc_ts, html, ...)")
-    src.add_argument(
-        "--documents",
-        help="sf dir with documents.parquet — synthesize link-bearing "
-        "pages (smoke/test path)",
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("crawl-graph", args.master)
-    from readembedability_spark.queries import _persist, release_caches
+def run(spark, args) -> dict:
+    from readembedability_spark.queries import _persist
     from readembedability_spark.textops import _link_pages, _pagerank
 
-    t0 = time.time()
     if args.input:
         pages = spark.read.parquet(args.input)
     else:
@@ -208,9 +167,18 @@ def main() -> None:
     stats["hosts_ranked"] = ranks.count()
     stats["frontier_hosts"] = fr.count()
     stats["schedule_rows"] = sched.count()
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--documents",
+        synth_type=str,
+        input_help="pages parquet (url, warc_ts, html, ...)",
+        synth_help="sf dir with documents.parquet — synthesize "
+        "link-bearing pages (smoke/test path)",
+    )
+    run_job("crawl-graph", ap, run)
 
 
 if __name__ == "__main__":

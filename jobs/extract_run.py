@@ -18,41 +18,16 @@ clusters at N and 4N executors"):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import SparkSession  # noqa: E402
-
+from _session import job_parser, run_job  # noqa: E402
 from readembedability_spark.plans.pipeline import RunConfig, run_extract  # noqa: E402
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--run-id", default="run")
-    ap.add_argument("--parallelism", type=int, default=32)
-    ap.add_argument("--num-salts", type=int, default=64)
-    ap.add_argument("--langs", default=None, help="comma-separated allowlist")
-    ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    builder = SparkSession.builder.appName("readembedability-extract")
-    if args.master:
-        builder = builder.master(args.master)
-    spark = (
-        builder.config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.speculation", "true")  # straggler re-launch (§4)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "512")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+def run(spark, args) -> dict:
     cfg = RunConfig(
         pages_path=args.input,
         out_dir=args.output,
@@ -62,9 +37,17 @@ def main() -> None:
         langs=args.langs.split(",") if args.langs else None,
         resume=not args.no_resume,
     )
-    result = run_extract(spark, cfg)
-    print(json.dumps(result))
-    spark.stop()
+    return run_extract(spark, cfg)
+
+
+def main() -> None:
+    ap = job_parser()
+    ap.add_argument("--run-id", default="run")
+    ap.add_argument("--parallelism", type=int, default=32)
+    ap.add_argument("--num-salts", type=int, default=64)
+    ap.add_argument("--langs", default=None, help="comma-separated allowlist")
+    ap.add_argument("--no-resume", action="store_true")
+    run_job("readembedability-extract", ap, run)
 
 
 if __name__ == "__main__":

@@ -36,17 +36,14 @@ Cluster (real frontier):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 from readembedability_spark.schemas import local_table  # noqa: E402
 from readembedability_spark.textops import (  # noqa: E402
@@ -149,33 +146,9 @@ def verdicts_from(spark, frontier):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument(
-        "--input",
-        help="frontier parquet (url_id, registrable, subdomain,"
-        " label, g, path)",
-    )
-    src.add_argument(
-        "--urls",
-        type=int,
-        help="synthesize N hygiene-bearing frontier urls (smoke/test)",
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument(
-        "--farm-budget",
-        type=int,
-        default=100,
-        help="shared fetch budget per wildcard-farm registrable",
-    )
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
+def run(spark, args) -> dict:
+    from readembedability_spark.queries import _persist
 
-    spark = job_session("frontier-hygiene", args.master)
-    from readembedability_spark.queries import _persist, release_caches
-
-    t0 = time.time()
     out = Path(args.output)
     if args.input:
         frontier = spark.read.parquet(args.input)
@@ -227,9 +200,23 @@ def main() -> None:
     stats["blocked"] = (
         stats["urls"] - stats["admitted"] - stats["quarantined"]
     )
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--urls",
+        input_help="frontier parquet (url_id, registrable, subdomain,"
+        " label, g, path)",
+        synth_help="synthesize N hygiene-bearing frontier urls (smoke/test)",
+    )
+    ap.add_argument(
+        "--farm-budget",
+        type=int,
+        default=100,
+        help="shared fetch budget per wildcard-farm registrable",
+    )
+    run_job("frontier-hygiene", ap, run)
 
 
 if __name__ == "__main__":

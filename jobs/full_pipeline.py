@@ -31,21 +31,19 @@ Cluster:
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 from crawl_graph import (  # noqa: E402
     HOST_RE,
     frontier,
     host_edges,
+    link_table,
     schedule,
     unseen_links,
 )
@@ -73,21 +71,6 @@ def extracted_once(pages):
     from readembedability_spark.queries import _persist
 
     return _persist(salted_extract(pages))
-
-
-def link_table(extracted):
-    """(url, link) off the persisted extraction — the
-    crawl_graph.extract_link_table projection WITHOUT re-running the
-    extract stage; L-8 nofollow/sponsored links excluded (no
-    endorsement, no crawl budget)."""
-    return (
-        extracted.select(
-            "url",
-            F.explode(F.arrays_zip("links", "link_nofollow")).alias("z"),
-        )
-        .filter(~F.col("z.link_nofollow"))
-        .select("url", F.col("z.links").alias("link"))
-    )
 
 
 def curation_docs(extracted, pages):
@@ -170,28 +153,10 @@ def authority_blended_sample(docs, ranks):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="pages parquet (url, warc_ts, html, lang)")
-    src.add_argument(
-        "--documents",
-        help="sf dir with documents.parquet — synthesize link-bearing "
-        "pages (smoke/test path)",
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--min-tokens", type=int, default=5)
-    ap.add_argument("--eval-mod", type=int, default=20)
-    ap.add_argument("--seq-budget", type=int, default=1024)
-    ap.add_argument("--n-shards", type=int, default=8)
-    args = ap.parse_args()
-
-    spark = job_session("full-pipeline", args.master)
-    from readembedability_spark.queries import _persist, release_caches
+def run(spark, args) -> dict:
+    from readembedability_spark.queries import _persist
     from readembedability_spark.textops import _link_pages, _pagerank
 
-    t0 = time.time()
     out = Path(args.output)
     if args.input:
         pages = spark.read.parquet(args.input)
@@ -306,9 +271,22 @@ def main() -> None:
     )
     shards = shuffle_shards(packed, args.n_shards)
     write_shards(shards, str(out / "shards"), args.n_shards)
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--documents",
+        synth_type=str,
+        input_help="pages parquet (url, warc_ts, html, lang)",
+        synth_help="sf dir with documents.parquet — synthesize "
+        "link-bearing pages (smoke/test path)",
+    )
+    ap.add_argument("--min-tokens", type=int, default=5)
+    ap.add_argument("--eval-mod", type=int, default=20)
+    ap.add_argument("--seq-budget", type=int, default=1024)
+    ap.add_argument("--n-shards", type=int, default=8)
+    run_job("full-pipeline", ap, run)
 
 
 if __name__ == "__main__":

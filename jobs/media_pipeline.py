@@ -43,17 +43,14 @@ Cluster (real asset table):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 
 _MODALITIES = ("image", "video", "audio")
@@ -184,23 +181,7 @@ def build_manifest(spark, out: Path):
     return img.unionByName(vid).unionByName(aud)
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src_arg = ap.add_mutually_exclusive_group(required=True)
-    src_arg.add_argument(
-        "--input", help="asset parquet (doc_id, payload, modality)"
-    )
-    src_arg.add_argument(
-        "--assets", type=int, help="synthesize N assets (smoke/test path)"
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("media-pipeline", args.master)
-    from readembedability_spark.queries import release_caches
-
-    t0 = time.time()
+def run(spark, args) -> dict:
     out = Path(args.output)
     assets = (
         spark.read.parquet(args.input)
@@ -218,9 +199,16 @@ def main() -> None:
             "n_units": r["n_units"],
             "mass": r["mass"],
         }
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--assets",
+        input_help="asset parquet (doc_id, payload, modality)",
+        synth_help="synthesize N assets (smoke/test path)",
+    )
+    run_job("media-pipeline", ap, run)
 
 
 if __name__ == "__main__":

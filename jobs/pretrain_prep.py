@@ -28,10 +28,8 @@ Cluster:
 
 from __future__ import annotations
 
-import argparse
 import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -39,7 +37,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
+from readembedability_spark.textops import (  # noqa: E402
+    _bpe_train_docs,
+    bpe_doc_token_counts,
+    dup_substring_excised,
+    eval_gram_hits_from,
+    line_owner_flags_from,
+    near_dup_reps_from,
+    pack_seq_ids,
+    seq_shard_keys,
+)
 
 
 #: content blocklist — production supplies its own; the default
@@ -78,36 +86,22 @@ def gate(
 def dedup_lines_global(spark, docs):
     """Stage 2 — C4 cross-document line dedup, REMOVAL form: every
     line is kept once corpus-wide (owner = lexicographic-min
-    (doc_id, line_idx)); the CLEANED text flows to later stages.
-    Same plan as q_dedup_lines_global: md5 line keys map-side, one
-    combining groupBy(h) MIN, one h-keyed join, one doc rollup. The
-    owner key is a STRUCT min (field-by-field ordering), not the
-    registry query's doc_id*1e6+li arithmetic — so any 63-bit doc_id
-    works without ANSI overflow (ADVICE r07: the arithmetic key forced
-    a 40-bit id upstream, which collides at ~10^7 docs)."""
-    from readembedability_spark.textops import _ml_text_col
-
-    lx = (
-        docs.select("doc_id", F.posexplode(F.split(_ml_text_col(), "\n")))
-        .withColumnsRenamed({"pos": "li0", "col": "line"})
-        .select(
-            "doc_id",
-            (F.col("li0") + 1).alias("li"),
-            "line",
-            F.md5(F.encode("line", "UTF-8")).alias("h"),
+    (doc_id, line_idx), the q_dedup_lines_global core
+    textops.line_owner_flags_from); the CLEANED text flows to later
+    stages, rebuilt by one doc rollup in line order."""
+    cleaned = (
+        line_owner_flags_from(docs)
+        .filter(F.col("kept"))
+        .groupBy("doc_id")
+        .agg(
+            F.array_join(
+                F.transform(
+                    F.array_sort(F.collect_list(F.struct("li", "line"))),
+                    lambda s: s["line"],
+                ),
+                "\n",
+            ).alias("clean_text")
         )
-        .withColumn("k", F.struct("doc_id", "li"))
-    )
-    own = lx.groupBy("h").agg(F.min("k").alias("ok"))
-    kept = lx.join(own, "h").filter(F.col("k") == F.col("ok"))
-    cleaned = kept.groupBy("doc_id").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("li", "line"))),
-                lambda s: s["line"],
-            ),
-            "\n",
-        ).alias("clean_text")
     )
     return (
         docs.join(cleaned, "doc_id")
@@ -123,31 +117,19 @@ def dedup_lines_global(spark, docs):
 
 
 def near_dup_keep_best(spark, docs):
-    """Stage 4 — MinHash-LSH near-dup clustering with the
-    BEST-QUALITY keeper per cluster (longest cleaned doc, doc_id
-    tie-break) — the q_dedup_clusters_best rule on the job's cleaned
-    text."""
-    from readembedability_spark.textops import (
-        _connected_components,
-        _shingles_from,
-        _verified_pairs_from,
-    )
-
-    shingles = _shingles_from(docs.select("doc_id", "text"))
-    vpairs = _verified_pairs_from(shingles)
-    labels = _connected_components(spark, vpairs.select("a", "b"))
-    labeled = docs.join(
-        labels.select(F.col("node").alias("doc_id"), "label"),
-        "doc_id",
-        "left",
-    ).withColumn("rep", F.coalesce("label", "doc_id"))
+    """Stage 4 — MinHash-LSH near-dup clustering (textops.
+    near_dup_reps_from) with the BEST-QUALITY keeper per cluster:
+    longest cleaned doc, doc_id tie-break. q_dedup_clusters_best ranks
+    by the stored n_chars over edge nodes only; the job ranks the
+    cleaned text it carries and keeps singletons too."""
     w_best = (
         Window.partitionBy("rep")
         .orderBy(F.desc(F.length("text")), F.asc("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     return (
-        labeled.withColumn("keeper", F.first("doc_id").over(w_best))
+        near_dup_reps_from(spark, docs)
+        .withColumn("keeper", F.first("doc_id").over(w_best))
         .filter(F.col("doc_id") == F.col("keeper"))
         .select("doc_id", "lang", "text")
     )
@@ -155,13 +137,12 @@ def near_dup_keep_best(spark, docs):
 
 def decontaminate(docs, eval_docs, n: int = 13):
     """Stage 5 — drop training docs sharing any word n-gram with the
-    eval set (broadcast semi-join, the q_decontaminate plan)."""
-    from readembedability_spark.textops import _grams_from
-
-    egrams = _grams_from(eval_docs, n).select("g").distinct()
-    tgrams = _grams_from(docs.select("doc_id", "text"), n)
+    eval set (the q_decontaminate broadcast gram join,
+    textops.eval_gram_hits_from, as a left-anti join)."""
     contaminated = (
-        tgrams.join(F.broadcast(egrams), "g").select("doc_id").distinct()
+        eval_gram_hits_from(docs.select("doc_id", "text"), eval_docs, n)
+        .select("doc_id")
+        .distinct()
     )
     return docs.join(contaminated, "doc_id", "left_anti")
 
@@ -177,8 +158,6 @@ def remove_dup_substrings(docs, n: int = 8):
     kept to duplicated starts only, row-local indexed HOF excision).
     Returns (doc_id, lang, text) with the cleaned text flowing
     downstream."""
-    from readembedability_spark.textops import dup_substring_excised
-
     arrs = docs.select("doc_id", "lang", F.split("text", " ").alias("arr"))
     joined, kept = dup_substring_excised(arrs, n)
     return (
@@ -197,11 +176,6 @@ def bpe_token_counts(spark, docs, merges: int = 16):
     parallelism); the merged vocab then BROADCASTs back onto the
     corpus token stream and rolls up per doc — one explode + one
     doc-keyed combining shuffle, the q_bpe_tokenize shape."""
-    from readembedability_spark.textops import (
-        _bpe_train_docs,
-        bpe_doc_token_counts,
-    )
-
     _, final_words = _bpe_train_docs(
         spark, docs.select("doc_id", "text"), merges
     )
@@ -209,27 +183,16 @@ def bpe_token_counts(spark, docs, merges: int = 16):
 
 
 def pack_sequences(docs, budget: int = 1024, token_counts=None):
-    """Stage 6 — greedy streaming sequence packing, the exact
-    q_pack_sequences shape: per-LANGUAGE stream in doc_id order,
-    seq_id = floor(tokens-before / budget). The running sum is the
-    registry's _grouped_cumsum range-partitioned construction
-    (VERDICT r06 #1 — a partitionBy(lang) window is ONE task per
-    language, so the dominant language's 10^11-row stream would
-    serialize into a single executor at 100 TB; range slices + a
-    bounded offset collect keep it exchange-parallel). Bins TARGET
-    `budget` tokens and may overflow by less than one document
-    (running-sum semantics: the doc that crosses a bin boundary lands
-    in the bin where its preceding tokens ended); an oversized doc
-    spans bins rather than strictly getting one alone. seq_id is
-    unique per (lang, seq_id).
+    """Stage 6 — greedy streaming sequence packing, the q_pack_sequences
+    core (textops.pack_seq_ids): per-LANGUAGE stream in doc_id order,
+    seq_id = floor(tokens-before / budget), unique per (lang, seq_id).
 
     token_counts: optional (doc_id, n_tok) table — the TRAINER's
     tokenizer counts (bpe_token_counts) — joined in place of the
-    whitespace fallback so bins are sized by what the trainer sees.
-    Docs absent from token_counts (no tokens at all) drop out; every
-    gated doc has tokens, so the inner join is lossless here."""
-    from readembedability_spark.textops import _grouped_cumsum
-
+    whitespace fallback (non-empty space-split tokens) so bins are
+    sized by what the trainer sees. Docs absent from token_counts (no
+    tokens at all) drop out; every gated doc has tokens, so the inner
+    join is lossless here."""
     if token_counts is None:
         toks = docs.select(
             "doc_id",
@@ -240,29 +203,17 @@ def pack_sequences(docs, budget: int = 1024, token_counts=None):
         )
     else:
         toks = docs.select("doc_id", "lang").join(token_counts, "doc_id")
-    cs = _grouped_cumsum(toks, "lang", ["doc_id"], "n_tok")
-    return cs.withColumn(
-        "seq_id",
-        F.floor((F.col("cum") - F.col("n_tok")) / budget).cast("long"),
-    ).select("doc_id", "lang", "n_tok", "seq_id")
+    return pack_seq_ids(toks, "n_tok", budget)
 
 
 def shuffle_shards(packed, n_shards: int = 8, seed: str = "r5seed"):
     """Stage 7 — deterministic global training-order shuffle + shard
-    assignment (the q_shuffle_shards rule, VERDICT r04 #5): every
-    packed sequence gets the seeded hash key
-    k = md5(seed ‖ lang ‖ seq_id); shard = hex-prefix(k) mod
-    n_shards, within-shard read order = ascending k. Together these
-    realize a seeded global permutation of the training corpus with
-    NO global sort — the writer repartitions by shard and sorts
-    within partitions only. Returns packed rows + (k, shard)."""
-    sid = F.concat("lang", F.lit(":"), F.col("seq_id").cast("string"))
-    return packed.withColumn(
-        "k", F.md5(F.encode(F.concat(F.lit(seed), sid), "UTF-8"))
-    ).withColumn(
-        "shard",
-        (F.conv(F.substring("k", 1, 6), 16, 10).cast("long") % n_shards),
-    )
+    assignment, the q_shuffle_shards key (textops.seq_shard_keys):
+    k = md5(seed ‖ lang:seq_id), shard = hex-prefix(k) mod n_shards,
+    within-shard read order = ascending k. The writer repartitions by
+    shard and sorts within partitions only — no global sort. Returns
+    packed rows + (k, shard)."""
+    return seq_shard_keys(packed, n_shards, seed)
 
 
 def write_shards(shards, out_path: str, n_shards: int):
@@ -285,46 +236,11 @@ def write_shards(shards, out_path: str, n_shards: int):
     )
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True)
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    ap.add_argument("--min-tokens", type=int, default=20)
-    ap.add_argument("--seq-budget", type=int, default=1024)
-    ap.add_argument(
-        "--eval-mod", type=int, default=20,
-        help="doc_id %% MOD == 0 slice acts as the eval set",
-    )
-    ap.add_argument(
-        "--dup-substrings", action="store_true",
-        help="also excise cross-doc duplicated 8-gram spans "
-        "(q_dedup_substring_removed) after line dedup",
-    )
-    ap.add_argument("--n-shards", type=int, default=8)
-    ap.add_argument("--shuffle-seed", default="r5seed")
-    ap.add_argument(
-        "--resume", action="store_true",
-        help="skip the curation funnel if <output>/curated/_SUCCESS "
-        "exists AND the committed curated_meta.json fingerprint "
-        "matches the current input/funnel flags; recompute only the "
-        "packing/shuffle/shard stages from the checkpoint",
-    )
-    ap.add_argument(
-        "--pack-merges", type=int, default=16,
-        help="BPE merge count for the packing tokenizer (bins are "
-        "sized by trained-BPE token counts); 0 falls back to "
-        "whitespace token counts",
-    )
-    args = ap.parse_args()
+def run(spark, args) -> dict:
+    from readembedability_spark.queries import _persist
 
-    spark = job_session("pretrain-prep", args.master)
-    from readembedability_spark.queries import release_caches
-
-    t0 = time.time()
     out = Path(args.output)
     stats = {}
-    from readembedability_spark.queries import _persist
 
     # fingerprint of everything that shaped the curated table: a
     # resume is only valid when the committed checkpoint was produced
@@ -440,9 +356,38 @@ def main() -> None:
         .collect()
     }
     stats["shard_rows"] = dict(sorted(balance.items()))
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser()
+    ap.add_argument("--min-tokens", type=int, default=20)
+    ap.add_argument("--seq-budget", type=int, default=1024)
+    ap.add_argument(
+        "--eval-mod", type=int, default=20,
+        help="doc_id %% MOD == 0 slice acts as the eval set",
+    )
+    ap.add_argument(
+        "--dup-substrings", action="store_true",
+        help="also excise cross-doc duplicated 8-gram spans "
+        "(q_dedup_substring_removed) after line dedup",
+    )
+    ap.add_argument("--n-shards", type=int, default=8)
+    ap.add_argument("--shuffle-seed", default="r5seed")
+    ap.add_argument(
+        "--resume", action="store_true",
+        help="skip the curation funnel if <output>/curated/_SUCCESS "
+        "exists AND the committed curated_meta.json fingerprint "
+        "matches the current input/funnel flags; recompute only the "
+        "packing/shuffle/shard stages from the checkpoint",
+    )
+    ap.add_argument(
+        "--pack-merges", type=int, default=16,
+        help="BPE merge count for the packing tokenizer (bins are "
+        "sized by trained-BPE token counts); 0 falls back to "
+        "whitespace token counts",
+    )
+    run_job("pretrain-prep", ap, run)
 
 
 if __name__ == "__main__":

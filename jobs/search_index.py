@@ -36,10 +36,7 @@ Cluster (real documents table):
 
 from __future__ import annotations
 
-import argparse
-import json
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
@@ -47,7 +44,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from _session import job_session  # noqa: E402
+from _session import job_parser, run_job  # noqa: E402
 
 
 _WORDS = (
@@ -194,22 +191,9 @@ def query_set(docs):
     return bm25_query_terms(docs)
 
 
-def main() -> None:
-    ap = argparse.ArgumentParser()
-    src = ap.add_mutually_exclusive_group(required=True)
-    src.add_argument("--input", help="documents parquet (doc_id, text)")
-    src.add_argument(
-        "--docs", type=int, help="synthesize N documents (smoke/test path)"
-    )
-    ap.add_argument("--output", required=True)
-    ap.add_argument("--master", default=None)
-    args = ap.parse_args()
-
-    spark = job_session("search-index", args.master)
+def run(spark, args) -> dict:
     from readembedability_spark.operators.salt import default_parts
-    from readembedability_spark.queries import release_caches
 
-    t0 = time.time()
     out = Path(args.output)
     if args.input:
         docs = spark.read.parquet(args.input)
@@ -237,9 +221,16 @@ def main() -> None:
     ).collect()[0]["s"]
     stats["queries"] = nq
     stats["mrr_micro"] = int(mrr // nq) if nq else 0
-    stats["wall_sec"] = round(time.time() - t0, 1)
-    release_caches(spark)
-    print(json.dumps(stats))
+    return stats
+
+
+def main() -> None:
+    ap = job_parser(
+        "--docs",
+        input_help="documents parquet (doc_id, text)",
+        synth_help="synthesize N documents (smoke/test path)",
+    )
+    run_job("search-index", ap, run)
 
 
 if __name__ == "__main__":

@@ -14,7 +14,6 @@ import re
 from readembedability_spark.extractor.dom import Element
 from readembedability_spark.extractor.meta import PageMeta
 
-_BYLINE_RE = re.compile(r"byline|author|writer|submitted|contributor", re.IGNORECASE)
 _BY_PREFIX_RE = re.compile(r"^\s*(?:by|von|par|por)[\s:]+", re.IGNORECASE)
 _SPLIT_RE = re.compile(r",|\band\b|&|;", re.IGNORECASE)
 _JUNK_RE = re.compile(
@@ -66,26 +65,6 @@ def byline_authors_from(candidates: list[Element]) -> list[str]:
             if names:
                 return names
     return []
-
-
-def find_byline_authors(root: Element) -> list[str]:
-    """Tree-scanning convenience wrapper (tests / standalone use)."""
-    candidates = [
-        el for el in root.iter() if _BYLINE_RE.search(el.classes_and_id() or "")
-    ]
-    return byline_authors_from(candidates)
-
-
-def find_rel_author(root: Element) -> list[str]:
-    out: list[str] = []
-    for el in root.iter():
-        if el.tag == "a":
-            rel = (el.attrs.get("rel") or "").lower()
-            if "author" in rel.split():
-                text = " ".join(el.text_content().split())
-                if text:
-                    out.append(text)
-    return normalize_authors(out)
 
 
 def extract_authors(

@@ -65,15 +65,6 @@ def date_from_url(url: str) -> datetime | None:
         return None
 
 
-def find_time_datetime(root: Element) -> str | None:
-    for el in root.iter():
-        if el.tag == "time":
-            dt = el.attrs.get("datetime")
-            if dt:
-                return dt
-    return None
-
-
 def extract_published(
     pm: PageMeta, jsonld_date: str | None, root: Element, url: str
 ) -> list[tuple[datetime, float]]:

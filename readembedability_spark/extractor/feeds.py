@@ -37,10 +37,6 @@ from readembedability_spark.extractor.links import (
     _strip_fragment,
 )
 
-#: normalized media types that mark an alternate link as a feed (F-1)
-FEED_TYPES = frozenset({"application/rss+xml", "application/atom+xml"})
-
-
 def extract_feeds(pm, page_url: str) -> list[str]:
     """Ordered, absolutized, deduped feed urls (rules F-1..F-5) from
     the PageMeta ``feed_links`` candidates collected by collect_meta."""

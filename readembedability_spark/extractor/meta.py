@@ -10,7 +10,7 @@ from __future__ import annotations
 import re
 from urllib.parse import urlparse
 
-from readembedability_spark.extractor.dom import Element, find_first
+from readembedability_spark.extractor.dom import Element
 from readembedability_spark.extractor.sanitize import absolutize
 
 _TITLE_DELIMS = (" | ", " - ", " – ", " — ", " :: ", " » ")
@@ -211,15 +211,6 @@ def extract_description(pm: PageMeta) -> str | None:
         if cleaned:
             return cleaned
     return None
-
-
-def page_host(url: str) -> str:
-    return (urlparse(url).hostname or "").lower()
-
-
-def find_h1(root: Element) -> str | None:
-    el = find_first(root, "h1")
-    return _clean_ws(el.text_content()) if el is not None else None
 
 
 # -- client-side metadata (M-1/M-2): declared language + meta refresh ------

@@ -57,23 +57,6 @@ def provider_for_host(host: str) -> tuple[str, str] | None:
     return None
 
 
-def find_discovery_link(root: Element) -> str | None:
-    """In-page oEmbed discovery link (A-16a)."""
-    for el in root.iter():
-        if el.tag != "link":
-            continue
-        rel = (el.attrs.get("rel") or "").lower()
-        typ = (el.attrs.get("type") or "").lower()
-        if "alternate" in rel.split() and typ in (
-            "application/json+oembed",
-            "text/xml+oembed",
-        ):
-            href = el.attrs.get("href")
-            if href:
-                return href.strip()
-    return None
-
-
 def _dominant_iframe(iframes: list[dict]) -> bool:
     for attrs in iframes:
         src = (attrs.get("src") or "").lower()

@@ -2212,6 +2212,60 @@ def _extracted_links(spark, sf_dir):
     )
 
 
+#: generic url → host pattern of the frontier cores; on the synthetic
+#: link pages it yields the same hosts as the synthesis-shaped
+#: patterns the rank queries use.
+HOST_RE = r"https?://([^/?#]+)"
+
+
+def unseen_links_from(links, pages):
+    """Distinct outbound ``link``s of ``links`` that are not a page
+    ``url`` — a url-keyed anti-join with no broadcast assumption on
+    either side."""
+    return (
+        links.select("link")
+        .distinct()
+        .join(pages.select("url"), F.col("link") == F.col("url"), "left_anti")
+    )
+
+
+def frontier_counts_from(unseen):
+    """(host, n_unseen): the unseen links rolled up per target host."""
+    return unseen.groupBy(
+        F.regexp_extract("link", HOST_RE, 1).alias("host")
+    ).agg(F.count("*").cast("long").alias("n_unseen"))
+
+
+def frontier_schedule_from(unseen, counts, authority, k):
+    """Authority-prioritized, politeness-capped crawl schedule: at most
+    ``k`` unseen links per host (ROW_NUMBER <= k, planned as a
+    WindowGroupLimit that pre-prunes map-side), priority = host
+    authority x unseen count. ``counts`` is frontier_counts_from's
+    (host, n_unseen) and ``authority`` a (host, authority) table; both
+    are host-cardinality, equi-joined with no forced broadcast, and a
+    host with no authority schedules at priority 0."""
+    fh = unseen.select(
+        F.regexp_extract("link", HOST_RE, 1).alias("host"), "link"
+    )
+    w = Window.partitionBy("host").orderBy("link")
+    ranked = fh.withColumn(
+        "slot", F.row_number().over(w).cast("long")
+    ).filter(F.col("slot") <= k)
+    return (
+        ranked.join(counts, "host")
+        .join(authority, "host", "left")
+        .select(
+            "host",
+            "slot",
+            "link",
+            "n_unseen",
+            F.round(
+                F.coalesce("authority", F.lit(0.0)) * F.col("n_unseen"), 6
+            ).alias("priority"),
+        )
+    )
+
+
 @q(
     "q_extract_links",
     f"""
@@ -2362,21 +2416,12 @@ def q_crawl_frontier(spark, sf_dir):
     fixed point, and the last doc's successor). At 100 TB both sides
     are url-keyed: the anti-join shuffles on url and AQE handles the
     frontier's host skew; no broadcast assumption on either side."""
-    links = (
-        _extracted_links(spark, sf_dir)
-        .filter(~F.col("nofollow"))  # L-8: don't crawl paid links
-        .select("link")
-        .distinct()
+    links = _extracted_links(spark, sf_dir).filter(
+        ~F.col("nofollow")  # L-8: don't crawl paid links
     )
-    pages = _link_pages(spark, sf_dir).select("url")
-    frontier = links.join(
-        pages, links["link"] == pages["url"], "left_anti"
+    return frontier_counts_from(
+        unseen_links_from(links, _link_pages(spark, sf_dir))
     )
-    return frontier.groupBy(
-        F.regexp_extract(
-            "link", r"https://(h\d+\.example\.com)/", 1
-        ).alias("host")
-    ).agg(F.count("*").cast("long").alias("n_unseen"))
 
 
 @q(
@@ -2530,7 +2575,6 @@ def q_frontier_schedule(spark, sf_dir):
     rows. Hosts absent from the rank table (unlinked/new) schedule at
     priority 0 via the left join, so discovery never starves."""
     num_host_re = r"https://h(\d+)\.example\.com/"
-    full_host_re = r"https://(h\d+\.example\.com)/"
     # L-8: the schedule neither ranks authority over nofollow edges
     # nor spends crawl budget on paid links
     links = _persist(
@@ -2538,7 +2582,6 @@ def q_frontier_schedule(spark, sf_dir):
         .filter(~F.col("nofollow"))
         .select("url", "link")
     )
-    pages = _link_pages(spark, sf_dir).select("url")
     edges = (
         links.select(
             F.regexp_extract("url", num_host_re, 1).cast("long").alias("src"),
@@ -2551,35 +2594,11 @@ def q_frontier_schedule(spark, sf_dir):
         F.concat(
             F.lit("h"), F.col("node").cast("string"), F.lit(".example.com")
         ).alias("host"),
-        "pr",
+        F.col("pr").alias("authority"),
     )
-    frontier = (
-        links.select("link")
-        .distinct()
-        .join(pages, F.col("link") == F.col("url"), "left_anti")
-    )
-    fh = frontier.select(
-        F.regexp_extract("link", full_host_re, 1).alias("host"), "link"
-    )
-    counts = fh.groupBy("host").agg(
-        F.count("*").cast("long").alias("n_unseen")
-    )
-    w = Window.partitionBy("host").orderBy("link")
-    ranked = fh.withColumn(
-        "slot", F.row_number().over(w).cast("long")
-    ).filter(F.col("slot") <= _SCHEDULE_K)
-    return (
-        ranked.join(counts, "host")
-        .join(authority, "host", "left")
-        .select(
-            "host",
-            "slot",
-            "link",
-            "n_unseen",
-            F.round(
-                F.coalesce("pr", F.lit(0.0)) * F.col("n_unseen"), 6
-            ).alias("priority"),
-        )
+    unseen = unseen_links_from(links, _link_pages(spark, sf_dir))
+    return frontier_schedule_from(
+        unseen, frontier_counts_from(unseen), authority, _SCHEDULE_K
     )
 
 
@@ -3690,6 +3709,69 @@ def q_tfidf(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def curation_gated_from(docs, langs, min_tokens, min_alpha):
+    """(doc_id, lang, text, n_tokens) rows of ``docs`` that pass the
+    language allowlist (empty = every language) and the row-local
+    quality gates: space-split token count >= ``min_tokens`` and
+    alphabetic-character ratio >= ``min_alpha``. A pure map that
+    pushes into the scan."""
+    n_tokens = F.size(F.split("text", " "))
+    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
+        F.length("text").cast("double"), F.lit(0.0)
+    )
+    gated = docs.select(
+        "doc_id",
+        "lang",
+        "text",
+        n_tokens.alias("n_tokens"),
+        alpha.alias("alpha_ratio"),
+    )
+    if langs:
+        gated = gated.filter(F.col("lang").isin(*langs))
+    return gated.filter(
+        (F.col("n_tokens") >= min_tokens)
+        & (F.col("alpha_ratio") >= min_alpha)
+    ).drop("alpha_ratio")
+
+
+def near_dup_reps_from(spark, docs):
+    """``docs`` (doc_id, text, ...) plus ``rep``, the component-min
+    doc_id of its near-dup cluster: 3-gram shingles → capped
+    MinHash-LSH candidates → exact-Jaccard verify → connected
+    components. A doc with no near-dup edge is its own rep via the
+    left join."""
+    shingles = _shingles_from(docs.select("doc_id", "text"))
+    vpairs = _verified_pairs_from(shingles)
+    labels = _connected_components(spark, vpairs.select("a", "b"))
+    return (
+        docs.join(
+            labels.select(F.col("node").alias("doc_id"), "label"),
+            "doc_id",
+            "left",
+        )
+        .withColumn("rep", F.coalesce("label", "doc_id"))
+        .drop("label")
+    )
+
+
+def curated_clusters_from(spark, docs, langs, min_tokens, min_alpha):
+    """Gates → near-dup clusters → one representative per cluster:
+    curation_gated_from, then near_dup_reps_from over the GATED subset
+    only. Each cluster keeps its rep with the cluster multiplicity.
+    Returns (doc_id, lang, text, n_tokens, cluster_size); the gated
+    table is a tracked persist, so materialize the result before
+    release_caches."""
+    gated = _persist(curation_gated_from(docs, langs, min_tokens, min_alpha))
+    return (
+        near_dup_reps_from(spark, gated)
+        .withColumn(
+            "cluster_size", F.count("*").over(Window.partitionBy("rep"))
+        )
+        .filter(F.col("doc_id") == F.col("rep"))
+        .select("doc_id", "lang", "text", "n_tokens", "cluster_size")
+    )
+
+
 @q(
     "q_curation_pipeline",
     """
@@ -3725,22 +3807,9 @@ def q_curation_pipeline(spark, sf_dir):
     exact-dedup window for the MinHash-LSH → verify → cluster chain
     (q_minhash_lsh → q_dedup_lsh_verified → q_dedup_clusters) keyed by
     cluster rep instead of md5."""
-    docs = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " "))
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
-        F.length("text").cast("double"), F.lit(0.0)
-    )
-    gated = (
-        docs.select(
-            "doc_id",
-            "lang",
-            n_tokens.alias("n_tokens"),
-            alpha.alias("alpha_ratio"),
-            F.md5(F.encode("text", "UTF-8")).alias("h"),
-        )
-        .filter(F.col("lang").isin("en", "de", "fr"))
-        .filter((F.col("n_tokens") >= 30) & (F.col("alpha_ratio") >= 0.6))
-    )
+    gated = curation_gated_from(
+        _t(spark, sf_dir, "documents"), ("en", "de", "fr"), 30, 0.6
+    ).withColumn("h", F.md5(F.encode("text", "UTF-8")))
     w_keep = Window.partitionBy("h").orderBy("doc_id")
     w_cnt = Window.partitionBy("h")
     return (
@@ -3799,46 +3868,14 @@ def q_curation_pipeline_lsh(spark, sf_dir):
     cluster multiplicity. Ungated docs never reach the shingle stage;
     docs with no near-dup edge are their own singleton cluster via the
     left join. Oracle = the same gates + recursive-CTE reachability."""
-    docs = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " "))
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
-        F.length("text").cast("double"), F.lit(0.0)
+    curated = curated_clusters_from(
+        spark, _t(spark, sf_dir, "documents"), ("en", "de", "fr"), 30, 0.6
     )
-    gated = _persist(
-        docs.select(
-            "doc_id",
-            "lang",
-            "text",
-            n_tokens.alias("n_tokens"),
-            alpha.alias("alpha_ratio"),
-        )
-        .filter(F.col("lang").isin("en", "de", "fr"))
-        .filter((F.col("n_tokens") >= 30) & (F.col("alpha_ratio") >= 0.6))
-        .drop("alpha_ratio")
-    )
-    shingles = _shingles_from(gated.select("doc_id", "text"))
-    vpairs = _verified_pairs_from(shingles)
-    labels = _connected_components(spark, vpairs.select("a", "b"))
-    labeled = gated.join(
-        labels.select(F.col("node").alias("doc_id"), "label"),
-        "doc_id",
-        "left",
-    ).select(
+    return curated.select(
         "doc_id",
         "lang",
-        "n_tokens",
-        F.coalesce("label", "doc_id").alias("rep"),
-    )
-    w_sz = Window.partitionBy("rep")
-    return (
-        labeled.withColumn("cluster_size", F.count("*").over(w_sz))
-        .filter(F.col("doc_id") == F.col("rep"))
-        .select(
-            "doc_id",
-            "lang",
-            F.col("n_tokens").cast("long").alias("n_tokens"),
-            F.col("cluster_size").cast("long").alias("cluster_size"),
-        )
+        F.col("n_tokens").cast("long").alias("n_tokens"),
+        F.col("cluster_size").cast("long").alias("cluster_size"),
     )
 
 
@@ -4895,6 +4932,68 @@ def q_split_holdout(spark, sf_dir):
 _PACK_SEQ_TOKENS = 4096
 
 
+def pack_seq_ids(toks, n_col, budget):
+    """Greedy streaming sequence packing: per-LANGUAGE stream in doc_id
+    order, seq_id = floor(tokens-before / ``budget``). ``toks`` carries
+    (doc_id, lang, <n_col>), the caller's per-doc token count; returns
+    those columns plus seq_id. The running sum is the _grouped_cumsum
+    range-partitioned construction (VERDICT r06 #1): no per-lang
+    single-task window, so the dominant language's stream never
+    serializes into one task. Bins TARGET ``budget`` tokens and may
+    overflow by less than one document (the doc that crosses a bin
+    boundary lands in the bin where its preceding tokens ended);
+    seq_id is unique per (lang, seq_id)."""
+    cs = _grouped_cumsum(toks, "lang", ["doc_id"], n_col)
+    return cs.select(
+        "doc_id",
+        "lang",
+        n_col,
+        F.floor((F.col("cum") - F.col(n_col)) / budget)
+        .cast("long")
+        .alias("seq_id"),
+    )
+
+
+def _ws_token_counts(docs):
+    """(doc_id, lang, n_tokens): space-split token count per doc, the
+    unfiltered count the packing queries' oracles use."""
+    return docs.select(
+        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
+    )
+
+
+def _packed_seqs(toks, n_col):
+    """(lang, seq_id, n_docs, seq_tokens): the pack_seq_ids bins of
+    ``_PACK_SEQ_TOKENS`` tokens rolled up per sequence."""
+    return (
+        pack_seq_ids(toks, n_col, _PACK_SEQ_TOKENS)
+        .groupBy("lang", "seq_id")
+        .agg(
+            F.count("*").alias("n_docs"),
+            F.sum(n_col).cast("long").alias("seq_tokens"),
+        )
+    )
+
+
+def _seq_sid():
+    """'lang:seq_id', the packed-sequence id the shard key hashes."""
+    return F.concat("lang", F.lit(":"), F.col("seq_id").cast("string"))
+
+
+def seq_shard_keys(seqs, n_shards, seed):
+    """Seeded training-order key and shard of every packed sequence:
+    k = md5(seed ‖ lang:seq_id), shard = hex-prefix(k) mod
+    ``n_shards``. Shard assignment plus ascending k within a shard is
+    a seeded global permutation with no global sort. ``seqs`` carries
+    (lang, seq_id); returns its rows plus (k, shard)."""
+    return seqs.withColumn(
+        "k", F.md5(F.encode(F.concat(F.lit(seed), _seq_sid()), "UTF-8"))
+    ).withColumn(
+        "shard",
+        F.conv(F.substring("k", 1, 6), 16, 10).cast("long") % n_shards,
+    )
+
+
 @q(
     "q_pack_sequences",
     f"""
@@ -4926,21 +5025,7 @@ def q_pack_sequences(spark, sf_dir):
     serializes into one task at 100 TB. Packing is the last stage
     before tokenized shard writes."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    cs = _grouped_cumsum(toks, "lang", ["doc_id"], "n_tokens")
-    packed = cs.select(
-        "lang",
-        "n_tokens",
-        F.floor(
-            (F.col("cum") - F.col("n_tokens")) / _PACK_SEQ_TOKENS
-        ).alias("seq_id"),
-    )
-    return packed.groupBy("lang", "seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("bigint").alias("seq_tokens"),
-    )
+    return _packed_seqs(_ws_token_counts(docs), "n_tokens")
 
 
 _SHUFFLE_SHARDS = 8
@@ -5016,36 +5101,13 @@ def q_shuffle_shards(spark, sf_dir):
     sorts locally by k — per-shard sortWithinPartitions, never a
     single global window."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    cs = _grouped_cumsum(toks, "lang", ["doc_id"], "n_tokens")
-    packed = cs.select(
-        "lang",
-        "n_tokens",
-        F.floor(
-            (F.col("cum") - F.col("n_tokens")) / _PACK_SEQ_TOKENS
-        ).alias("seq_id"),
-    )
-    seqs = packed.groupBy("lang", "seq_id").agg(
-        F.sum("n_tokens").cast("long").alias("seq_tokens")
-    )
-    sid = F.concat("lang", F.lit(":"), F.col("seq_id").cast("string"))
-    keyed = seqs.select(
-        "seq_tokens",
-        sid.alias("sid"),
-        F.md5(F.encode(F.concat(F.lit(_SHUFFLE_SEED), sid), "UTF-8")).alias(
-            "k"
-        ),
-    )
+    seqs = _packed_seqs(_ws_token_counts(docs), "n_tokens")
     # sequence-cardinality (corpus/~4k rows) and consumed by BOTH the
     # head audit and the totals rollup — persisted so the corpus scan
     # + packing window run once, not per aggregation branch
     sharded = _persist(
-        keyed.withColumn(
-            "shard",
-            F.conv(F.substring("k", 1, 6), 16, 10).cast("long")
-            % _SHUFFLE_SHARDS,
+        seq_shard_keys(seqs, _SHUFFLE_SHARDS, _SHUFFLE_SEED).select(
+            "seq_tokens", _seq_sid().alias("sid"), "k", "shard"
         )
     )
     wk = Window.partitionBy("shard").orderBy("k", "sid")
@@ -5119,21 +5181,7 @@ def q_pack_efficiency(spark, sf_dir):
     stream as q_pack_sequences (no per-lang single-task window —
     VERDICT r06 #1), one extra tiny groupBy(lang) rollup."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tokens")
-    )
-    cs = _grouped_cumsum(toks, "lang", ["doc_id"], "n_tokens")
-    packed = cs.select(
-        "lang",
-        "n_tokens",
-        F.floor(
-            (F.col("cum") - F.col("n_tokens")) / _PACK_SEQ_TOKENS
-        ).alias("seq_id"),
-    )
-    seqs = packed.groupBy("lang", "seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_tokens").cast("long").alias("seq_tokens"),
-    )
+    seqs = _packed_seqs(_ws_token_counts(docs), "n_tokens")
     return seqs.groupBy("lang").agg(
         F.count("*").cast("long").alias("n_seqs"),
         F.sum("seq_tokens").cast("long").alias("total_tokens"),
@@ -5146,6 +5194,15 @@ def q_pack_efficiency(spark, sf_dir):
         F.max("seq_tokens").cast("long").alias("max_seq_tokens"),
         F.round(F.avg("n_docs"), 6).alias("avg_docs_per_seq"),
     )
+
+
+def eval_gram_hits_from(train, eval_docs, n):
+    """(doc_id, g): every distinct word ``n``-gram of a ``train``
+    (doc_id, text) doc that also occurs in ``eval_docs``. The eval gram
+    set is small next to the corpus, so it is BROADCAST to the
+    training-gram side."""
+    egrams = _grams_from(eval_docs, n).select("g").distinct()
+    return _grams_from(train, n).join(F.broadcast(egrams), "g")
 
 
 @q(
@@ -5178,16 +5235,13 @@ def q_decontaminate(spark, sf_dir):
     (doc_id, n_hits) for contaminated docs — the pipeline drops or
     audits them before training."""
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    egrams = (
-        _grams_from(docs.filter(F.col("doc_id") % 20 == 0), 13)
-        .select("g")
-        .distinct()
+    hits = eval_gram_hits_from(
+        docs.filter(F.col("doc_id") % 20 != 0),
+        docs.filter(F.col("doc_id") % 20 == 0),
+        13,
     )
-    tgrams = _grams_from(docs.filter(F.col("doc_id") % 20 != 0), 13)
-    return (
-        tgrams.join(F.broadcast(egrams), "g")
-        .groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("n_hits"))
+    return hits.groupBy("doc_id").agg(
+        F.count("*").cast("long").alias("n_hits")
     )
 
 
@@ -6217,18 +6271,7 @@ def q_pack_sequences_bpe(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     nb = bpe_doc_token_counts(docs, final_words)
     toks = docs.select("doc_id", "lang").join(nb, "doc_id")
-    cs = _grouped_cumsum(toks, "lang", ["doc_id"], "n_bpe")
-    packed = cs.select(
-        "lang",
-        "n_bpe",
-        F.floor(
-            (F.col("cum") - F.col("n_bpe")) / _PACK_SEQ_TOKENS
-        ).alias("seq_id"),
-    )
-    return packed.groupBy("lang", "seq_id").agg(
-        F.count("*").alias("n_docs"),
-        F.sum("n_bpe").cast("bigint").alias("seq_tokens"),
-    )
+    return _packed_seqs(toks, "n_bpe")
 
 
 @q(
@@ -6695,6 +6738,31 @@ def q_doc_repetition_lines_ml(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def line_owner_flags_from(docs):
+    """(doc_id, li, line, kept): every line of every doc of ``docs``
+    (doc_id, text), flagged kept when this occurrence is the line's
+    corpus-wide owner — the lexicographically first (doc_id, li). Line
+    keys are md5'd map-side, one combining groupBy(h) MIN finds each
+    owner, one h-keyed join flags the occurrences. The owner key is a
+    STRUCT min (field-by-field ordering), so any 63-bit doc_id works
+    with no arithmetic overflow."""
+    lx = (
+        docs.select("doc_id", F.posexplode(F.split(_ml_text_col(), "\n")))
+        .withColumnsRenamed({"pos": "li0", "col": "line"})
+        .select(
+            "doc_id",
+            (F.col("li0") + 1).alias("li"),
+            "line",
+            F.md5(F.encode("line", "UTF-8")).alias("h"),
+        )
+        .withColumn("k", F.struct("doc_id", "li"))
+    )
+    own = lx.groupBy("h").agg(F.min("k").alias("ok"))
+    return lx.join(own, "h").select(
+        "doc_id", "li", "line", (F.col("k") == F.col("ok")).alias("kept")
+    )
+
+
 @q(
     "q_dedup_lines_global",
     f"""
@@ -6733,22 +6801,7 @@ def q_dedup_lines_global(spark, sf_dir):
     Boilerplate-hot lines skew the h key at 100 TB — AQE skew-split
     covers the join, and the owner agg combines map-side by
     construction."""
-    docs = _t(spark, sf_dir, "documents")
-    lx = (
-        docs.select("doc_id", F.posexplode(F.split(_ml_text_col(), "\n")))
-        .withColumnsRenamed({"pos": "li0", "col": "line"})
-        .select(
-            "doc_id",
-            (F.col("li0") + 1).alias("li"),
-            "line",
-            F.md5(F.encode("line", "UTF-8")).alias("h"),
-        )
-        .withColumn("k", F.col("doc_id") * F.lit(1000000) + F.col("li"))
-    )
-    own = lx.groupBy("h").agg(F.min("k").alias("ok"))
-    flagged = lx.join(own, "h").select(
-        "doc_id", "li", "line", (F.col("k") == F.col("ok")).alias("kept")
-    )
+    flagged = line_owner_flags_from(_t(spark, sf_dir, "documents"))
     kept_lines = F.transform(
         F.array_sort(
             F.collect_list(
@@ -16666,7 +16719,9 @@ ROBOTS_RULES_SNAPSHOT = [
 ROBOTS_RULES_SCHEMA = "g long, pattern string, is_allow int"
 
 
-def robots_verdicts_from(urls, rules, uid="event_id"):
+def robots_verdicts_from(
+    urls, rules, uid="event_id", match="startswith(path, pattern)"
+):
     """Shared RFC 9309 longest-match core (q_robots_precedence's
     exact plan), reused by jobs/compliance_run.py over real fetch
     logs: ``urls`` carries (<uid>, g, path), ``rules`` is the
@@ -16674,11 +16729,13 @@ def robots_verdicts_from(urls, rules, uid="event_id"):
     rule per url is a row_number over (pattern length DESC, is_allow
     DESC, pattern) — longest match wins, Allow beats Disallow on
     ties; urls no rule mentions survive the LEFT join as
-    '(default)' allowed. The only exchange is the per-url winner
-    window, keyed on the url itself — maximally spread, no skew."""
+    '(default)' allowed. ``match`` is the url-vs-rule predicate (a
+    Column or SQL text): plain prefix by default, a pattern regex for
+    wildcard rules. The only exchange is the per-url winner window,
+    keyed on the url itself — maximally spread, no skew."""
     matched = (
         urls.join(F.broadcast(rules), "g")
-        .where(F.expr("startswith(path, pattern)"))
+        .where(match)
         .select(
             uid,
             "pattern",
@@ -20944,10 +21001,10 @@ def q_robots_wildcard(spark, sf_dir):
     through `robots_pattern_to_regex` — ONE python source, embedded
     verbatim in the oracle and pinned by a unit test.
 
-    Plan/scale: same shape as the shared prefix core — broadcast
-    rule dimension, per-url winner window keyed on the url itself
-    (maximally spread), LEFT join keeps default-allowed; the regex
-    match replaces startswith inside the same broadcast join."""
+    Plan/scale: the shared robots_verdicts_from core with the regex
+    match in place of startswith — broadcast rule dimension, per-url
+    winner window keyed on the url itself (maximally spread), LEFT
+    join keeps default-allowed."""
     ev = _t(spark, sf_dir, "events")
     m = F.col("event_id") % 6
     urls = ev.select(
@@ -20969,34 +21026,8 @@ def q_robots_wildcard(spark, sf_dir):
         ],
         "g long, pattern string, regex string, is_allow int",
     )
-    matched = (
-        urls.join(F.broadcast(rules), "g")
-        .where(F.expr("path RLIKE regex"))
-        .select(
-            "event_id",
-            "pattern",
-            "is_allow",
-            F.row_number()
-            .over(
-                Window.partitionBy("event_id").orderBy(
-                    F.length("pattern").desc(),
-                    F.col("is_allow").desc(),
-                    F.col("pattern"),
-                )
-            )
-            .alias("rk"),
-        )
-        .where(F.col("rk") == 1)
-    )
-    verdicts = urls.join(matched, "event_id", "left").select(
-        "g",
-        F.coalesce(F.col("pattern"), F.lit("(default)")).alias("rule"),
-        F.when(
-            F.col("pattern").isNull() | (F.col("is_allow") == 1),
-            "allowed",
-        )
-        .otherwise("blocked")
-        .alias("verdict"),
+    verdicts = robots_verdicts_from(
+        urls, rules, match=F.expr("path RLIKE regex")
     )
     return verdicts.groupBy("g", "verdict", "rule").agg(
         F.count("*").cast("long").alias("n_urls")

@@ -470,6 +470,47 @@ def test_dedup_lines_global_cross_doc_first_occurrence_wins(spark, tmp_path):
     release_caches(spark)
 
 
+def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
+    """doc_ids near 2**44 (a hashed 63-bit id space) order owners by
+    (doc_id, li) without arithmetic: an integer owner key
+    doc_id * 10**6 + li overflows BIGINT here."""
+    import hashlib
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    lo, hi = 2**44, 2**44 + 1
+    shared = "alpha beta gamma"
+    a = f"own words of lo\nmore of lo\n{shared}"
+    b = f"{shared}\nown words of hi"
+    pq.write_table(
+        pa.table(
+            {
+                "doc_id": pa.array([hi, lo], pa.int64()),
+                "text": pa.array([b, a]),
+            }
+        ),
+        tmp_path / "documents.parquet",
+    )
+    rows = {
+        r["doc_id"]: (r["n_lines"], r["n_removed"], r["clean_md5"])
+        for r in REGISTRY["q_dedup_lines_global"]
+        .spark(spark, str(tmp_path))
+        .collect()
+    }
+    release_caches(spark)
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    # the lower doc_id owns the shared line although it sits later in
+    # that doc (line 3) than in the higher-id doc (line 1)
+    assert rows == {
+        lo: (3, 0, md5(a)),
+        hi: (2, 1, md5("own words of hi")),
+    }
+
+
 def test_badwords_filter_flags_and_keeps(spark):
     rows = REGISTRY["q_badwords_filter"].spark(spark, SF_MED).collect()
     assert len(rows) == 500
