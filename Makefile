@@ -1,4 +1,4 @@
-.PHONY: test bench scaling dist clean
+.PHONY: test bench scaling loc dist clean
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -9,6 +9,9 @@ bench:
 
 scaling:
 	python bench/scaling.py
+
+loc:
+	python bench/loc.py
 
 dist:
 	mkdir -p dist

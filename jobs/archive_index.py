@@ -20,7 +20,7 @@ Cluster (real pages table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/archive_index.py --input lake.db.pages --output .../archive
+        jobs/archive_index.py --input s3://…/pages.parquet --output .../archive
 """
 
 from __future__ import annotations

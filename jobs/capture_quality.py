@@ -27,7 +27,7 @@ Cluster (real capture table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/capture_quality.py --input lake.db.captures \\
+        jobs/capture_quality.py --input s3://…/captures.parquet \\
         --output .../capture_quality
 """
 

@@ -21,7 +21,7 @@ Cluster (real fetch log + robots dimension):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/compliance_run.py --input lake.db.fetch_log \\
+        jobs/compliance_run.py --input s3://…/fetch_log.parquet \\
         --output .../compliance
 """
 

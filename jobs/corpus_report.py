@@ -19,7 +19,8 @@ Cluster:
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --conf spark.sql.adaptive.enabled=true \\
-        jobs/corpus_report.py --input lake.db.documents --output .../report
+        jobs/corpus_report.py --input s3://…/documents.parquet \\
+            --output .../report
 """
 
 from __future__ import annotations

@@ -20,7 +20,7 @@ Cluster (real pages table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/crawl_graph.py --input lake.db.pages --output .../graph
+        jobs/crawl_graph.py --input s3://…/pages.parquet --output .../graph
 """
 
 from __future__ import annotations

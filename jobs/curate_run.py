@@ -16,7 +16,8 @@ Cluster:
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --num-executors N --executor-cores 4 \\
         --conf spark.sql.adaptive.enabled=true \\
-        jobs/curate_run.py --input lake.db.documents --output .../curated
+        jobs/curate_run.py --input s3://…/documents.parquet \\
+            --output .../curated
 """
 
 from __future__ import annotations

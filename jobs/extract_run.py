@@ -12,7 +12,7 @@ clusters at N and 4N executors"):
         --conf spark.sql.adaptive.enabled=true \\
         --conf spark.sql.execution.arrow.maxRecordsPerBatch=512 \\
         --conf spark.speculation=true \\
-        jobs/extract_run.py --input lake.db.pages --output s3://…/out \\
+        jobs/extract_run.py --input s3://…/pages.parquet --output s3://…/out \\
         --run-id r1 --parallelism $((N * 4 * 3))
 """
 

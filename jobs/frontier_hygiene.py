@@ -30,7 +30,7 @@ Cluster (real frontier):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/frontier_hygiene.py --input lake.db.frontier \\
+        jobs/frontier_hygiene.py --input s3://…/frontier.parquet \\
         --output .../frontier_hygiene
 """
 

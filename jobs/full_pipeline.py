@@ -26,7 +26,7 @@ Cluster:
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/full_pipeline.py --input lake.db.pages --output .../full
+        jobs/full_pipeline.py --input s3://…/pages.parquet --output .../full
 """
 
 from __future__ import annotations
@@ -110,35 +110,21 @@ def authority_blended_sample(docs, ranks):
     state, reproducible across runs and cluster sizes. The max() is a
     1-row aggregate broadcast; the rank join is host-keyed with no
     forced broadcast (the crawl_graph annotate-stage rule)."""
+    from readembedability_spark.text_signals import (
+        alpha_ratio,
+        quality_blend,
+        seeded_uniform,
+    )
+
+    # the job's filtered token count (empty tokens dropped), not the
+    # registry's raw split size
     toks = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
-    n_tokens = F.size(toks)
-    alpha = F.length(
-        F.regexp_replace("text", "[^a-zA-Z]", "")
-    ) / F.nullif(F.length("text").cast("double"), F.lit(0.0))
-    quality = F.least(F.lit(1.0), n_tokens / 100.0) * 0.5 + alpha * 0.5
+    quality = quality_blend(F.size(toks), alpha_ratio())
     d = docs.withColumn(
         "host", F.regexp_extract("url", HOST_RE, 1)
     ).join(ranks, "host", "left")
     mx = ranks.agg(F.max("authority").alias("mx"))  # 1-row broadcast
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit("qs"), F.col("doc_id").cast("string")
-                        ),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(16777216.0)
-    )
+    u = seeded_uniform("qs", F.col("doc_id"))
     pr_norm = F.coalesce(
         F.col("authority") / F.nullif(F.col("mx"), F.lit(0.0)), F.lit(0.0)
     )

@@ -38,7 +38,7 @@ Cluster (real asset table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/media_pipeline.py --input lake.db.assets --output .../media
+        jobs/media_pipeline.py --input s3://…/assets.parquet --output .../media
 """
 
 from __future__ import annotations

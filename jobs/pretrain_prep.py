@@ -23,7 +23,8 @@ Cluster:
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --num-executors N --executor-cores 4 \\
         --conf spark.sql.adaptive.enabled=true \\
-        jobs/pretrain_prep.py --input lake.db.documents --output .../prep
+        jobs/pretrain_prep.py --input s3://…/documents.parquet \\
+            --output .../prep
 """
 
 from __future__ import annotations

@@ -31,7 +31,7 @@ Cluster (real documents table):
     make dist
     spark-submit --py-files dist/readembedability_spark.zip \\
         --master yarn --conf spark.sql.adaptive.enabled=true \\
-        jobs/search_index.py --input lake.db.documents --output .../idx
+        jobs/search_index.py --input s3://…/documents.parquet --output .../idx
 """
 
 from __future__ import annotations
@@ -85,10 +85,9 @@ def build_index(spark, docs, out: Path, parts: int):
     dictionary/doclens/corpus all ride the tf table). Writes only —
     the caller assembles its own stats from the written tables."""
     from readembedability_spark.queries import _persist
+    from readembedability_spark.text_signals import doc_tokens
 
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     tf = _persist(
         toks.groupBy("w", "doc_id").agg(
             F.count("*").cast("long").alias("tf")

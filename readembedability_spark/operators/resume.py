@@ -56,30 +56,6 @@ def resume_filter(pages: DataFrame, done: DataFrame) -> DataFrame:
     return pages.join(done_buckets, on="url_bucket", how="left_anti")
 
 
-def mark_buckets_done(
-    extracted: DataFrame, checkpoint_dir: str, run_id: str, n_buckets: int = N_BUCKETS
-) -> None:
-    """Append completed buckets derived from a DataFrame of urls (O-29).
-
-    Called only after the output write succeeds, so a crash mid-run
-    leaves the checkpoint without the failed buckets → they re-run.
-    NOTE: pass only THIS batch's rows — marking from the accumulated
-    output table costs O(total table) per incremental run; run_extract
-    uses :func:`mark_bucket_list_done` with the pre-write bucket set.
-    """
-    marks = (
-        extracted.select(bucket_col("url", n_buckets).alias("url_bucket"))
-        .distinct()
-        .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("url_bucket"),
-            F.lit("done").alias("status"),
-            F.lit(0).cast("long").alias("n_rows"),
-        )
-    )
-    marks.write.mode("append").parquet(checkpoint_dir)
-
-
 def mark_bucket_list_done(
     spark: SparkSession, buckets: list, checkpoint_dir: str, run_id: str
 ) -> None:

@@ -81,7 +81,7 @@ def run_extract(spark: SparkSession, cfg: RunConfig) -> dict:
 
     Write layout: flat parquet, one file per task — salt/url_bucket stay
     as COLUMNS (cheap row-level pruning on read). Directory-partitioning
-    by salt is an Iceberg-only concern (catalog.py): with a local
+    by salt is an Iceberg-only concern (README.md DDL): with a local
     FileOutputCommitter it would fan every task into num_salts tiny
     files, which measurably serializes the job on file IO.
     """

@@ -1,8 +1,8 @@
 """O-1/O-6: pages scan + pushed-down pre-filters.
 
 Production target is an Iceberg table partitioned by ``days(warc_ts)``
-(catalog.py); the sandbox has no Iceberg JARs (SURVEY.md §0) so the
-default path is parquet. Either way the *logical* plan is identical and
+(DDL in README.md); this PySpark carries no Iceberg JARs (SURVEY.md
+§0), so the read path is parquet. Either way the *logical* plan is identical and
 Catalyst pushes filters/pruning into the scan — verified by
 tests/test_plans.py (PushedFilters must include IsNotNull(html)).
 """

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from readembedability_spark.operators.extract import extract_stage
 from readembedability_spark.schemas import PAGES_SCHEMA
+from readembedability_spark.text_signals import feature_bucket
 
 
 def read_pages_stream(
@@ -279,7 +280,7 @@ def streaming_quality_filter(
         F.lit(0).cast("long"),
         lambda acc, w: acc
         + F.coalesce(
-            wmap[F.substring(F.md5(F.encode(w, "UTF-8")), 1, 2)],
+            wmap[feature_bucket(w)],
             F.lit(0).cast("long"),
         ),
     )

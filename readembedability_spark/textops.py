@@ -49,6 +49,17 @@ from readembedability_spark.queries import (
     q_baseline,
 )
 from readembedability_spark.schemas import local_table
+from readembedability_spark.text_signals import (
+    alpha_ratio,
+    doc_tokens,
+    feature_bucket,
+    gopher_labels,
+    head_split_join,
+    quality_blend,
+    seeded_hex6,
+    seeded_uniform,
+    synthetic_host,
+)
 
 # ---------------------------------------------------------------------------
 # Deduplication
@@ -83,12 +94,7 @@ def _words_df(spark, sf_dir):
     # NOTE: no _spread here — measured A/B (interleaved, warm): the extra
     # exchange costs more than parallelizing the explode saves; the
     # distinct() shuffle already spreads all downstream work.
-    return (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-        .filter(F.col("w") != "")
-        .distinct()
-    )
+    return doc_tokens(_t(spark, sf_dir, "documents"), "doc_id").distinct()
 
 
 @q_baseline(
@@ -138,12 +144,6 @@ def q_dedup_jaccard(spark, sf_dir):
 
 _N_MINHASH = 8
 _N_BANDS = 2  # 2 bands × 4 rows
-
-#: Perplexity-family de-skew: size of the broadcast frequency-table
-#: head. Every Zipf-hot token/bigram lives in the head by construction,
-#: so the tail shuffle join has a flat key distribution. At web scale
-#: ~100k entries (a few MB broadcast) cover most of the token mass.
-_PPLX_HEAD_K = 4096
 
 #: 3-gram shingles — the textbook MinHash unit. Shingle universe is
 #: |vocab|^3, so unrelated documents share almost none and LSH buckets
@@ -3330,16 +3330,12 @@ def q_quality_score(spark, sf_dir):
     into a [0,1] score (length/punct heuristics)."""
     docs = _t(spark, sf_dir, "documents")
     n_tokens = F.size(F.split("text", " "))
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
-        F.length("text").cast("double"), F.lit(0.0)
-    )
+    alpha = alpha_ratio()
     return docs.select(
         "doc_id",
         n_tokens.cast("long").alias("n_tokens"),
         F.round(alpha, 4).alias("alpha_ratio"),
-        F.round(
-            F.least(F.lit(1.0), n_tokens / 100.0) * 0.5 + alpha * 0.5, 4
-        ).alias("quality"),
+        F.round(quality_blend(n_tokens, alpha), 4).alias("quality"),
     )
 
 
@@ -3682,9 +3678,7 @@ def q_tfidf(spark, sf_dir):
     ROUND(tfidf, 6) then term so cross-engine ulp noise in ln() cannot
     flip ranks."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     # tf feeds both the df aggregation and the scored join — persist
     # so the (doc_id, w) aggregation happens once, not per reference
     tf = _persist(toks.groupBy("doc_id", "w").agg(F.count("*").alias("tf")))
@@ -3715,16 +3709,12 @@ def curation_gated_from(docs, langs, min_tokens, min_alpha):
     quality gates: space-split token count >= ``min_tokens`` and
     alphabetic-character ratio >= ``min_alpha``. A pure map that
     pushes into the scan."""
-    n_tokens = F.size(F.split("text", " "))
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
-        F.length("text").cast("double"), F.lit(0.0)
-    )
     gated = docs.select(
         "doc_id",
         "lang",
         "text",
-        n_tokens.alias("n_tokens"),
-        alpha.alias("alpha_ratio"),
+        F.size(F.split("text", " ")).alias("n_tokens"),
+        alpha_ratio().alias("alpha_ratio"),
     )
     if langs:
         gated = gated.filter(F.col("lang").isin(*langs))
@@ -3912,30 +3902,14 @@ def q_unigram_logloss(spark, sf_dir):
     (groupBy w, map-side combining), then the w-keyed join back and a
     doc_id rollup; the corpus total is a 1-row broadcast."""
     docs = _t(spark, sf_dir, "documents")
-    toks = _persist(
-        docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("w")
-        ).filter(F.col("w") != "")
-    )
+    toks = _persist(doc_tokens(docs, "doc_id"))
     cf = _persist(toks.groupBy("w").agg(F.count("*").alias("c")))
     tot = cf.agg(F.sum("c").alias("t"))
-    # The token→frequency join is keyed by Zipf-skewed words (VERDICT
-    # r03 #7): broadcast the top-K head of the frequency table — by
-    # construction it holds every hot key, and at web scale ~100k
-    # head tokens cover most of the mass — and send ONLY tail tokens
-    # through the shuffle join, whose key distribution is then flat.
-    # Values are identical whichever side a token lands on (same c/t),
-    # so the split is a pure plan change. head is persisted (it feeds
-    # three joins) and toks is persisted (hit + miss branches) so the
-    # sort and the corpus explode each run once.
-    head = _persist(cf.orderBy(F.desc("c"), F.asc("w")).limit(_PPLX_HEAD_K))
-    tail_cf = cf.join(F.broadcast(head.select("w")), "w", "left_anti")
-    hit = toks.join(F.broadcast(head), "w")
-    miss = toks.join(
-        F.broadcast(head.select("w")), "w", "left_anti"
-    ).join(tail_cf, "w")
+    # The token→frequency join is keyed by Zipf-skewed words, so it
+    # runs as head_split_join; toks is persisted (hit + miss branches)
+    # so the corpus explode runs once.
     scored = (
-        hit.unionByName(miss)
+        head_split_join(toks, cf, ["w"])
         .crossJoin(F.broadcast(tot))
         .select(
             "doc_id", (-F.log(F.col("c") / F.col("t"))).alias("nll")
@@ -4008,26 +3982,15 @@ def q_bigram_lm_bits(spark, sf_dir):
     # Fold both LM tables into one probability table p(w1,w2) → nll
     # (the c2⋈c1 join runs in count-table space — one row per DISTINCT
     # bigram — so corpus Zipf skew never touches it), then de-skew the
-    # corpus-sized scoring join the same way as q_unigram_logloss
-    # (VERDICT r03 #7): broadcast the top-K bigram head, shuffle-join
-    # only the tail, whose hot keys are gone by construction.
+    # corpus-sized scoring join with head_split_join, as
+    # q_unigram_logloss does.
     p = _persist(
         c2.join(c1, "w1").select(
             "w1", "w2", "c",
             (-F.log(F.col("c") / F.col("t"))).alias("nll"),
         )
     )
-    headp = _persist(
-        p.orderBy(F.desc("c"), F.asc("w1"), F.asc("w2")).limit(_PPLX_HEAD_K)
-    )
-    tail_p = p.join(
-        F.broadcast(headp.select("w1", "w2")), ["w1", "w2"], "left_anti"
-    )
-    hit = bg.join(F.broadcast(headp), ["w1", "w2"])
-    miss = bg.join(
-        F.broadcast(headp.select("w1", "w2")), ["w1", "w2"], "left_anti"
-    ).join(tail_p, ["w1", "w2"])
-    scored = hit.unionByName(miss).select("doc_id", "nll")
+    scored = head_split_join(bg, p, ["w1", "w2"]).select("doc_id", "nll")
     return scored.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_bigrams"),
         F.round(F.avg("nll") / F.log(F.lit(2.0)), 4).alias("bits_per_bigram"),
@@ -4112,30 +4075,12 @@ def dsir_weights_from(docs, toks=None):
     tokenization is the identical explode either way, so results and
     hashes cannot differ."""
     if toks is None:
-        toks = docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("w")
-        ).filter(F.col("w") != "")
+        toks = doc_tokens(docs, "doc_id")
     else:
         toks = toks.select("doc_id", "w")
-    lab = (
-        toks.groupBy("doc_id")
-        .agg(F.count("*").alias("n_tok"), F.avg(F.length("w")).alias("mwl"))
-        .select(
-            "doc_id",
-            "n_tok",
-            (
-                F.col("mwl").between(3, 10)
-                & F.col("n_tok").between(50, 100000)
-            )
-            .cast("int")
-            .alias("y"),
-        )
-    )
+    lab = gopher_labels(toks)
     bc = _persist(
-        toks.select(
-            "doc_id",
-            F.substring(F.md5(F.encode("w", "UTF-8")), 1, 2).alias("b"),
-        )
+        toks.select("doc_id", feature_bucket().alias("b"))
         .groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
     )
@@ -4363,9 +4308,7 @@ def q_vocab_coverage(spark, sf_dir):
     emitted for the gate; the full curve is the same query without the
     rank filter."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(F.split("text", " ")).alias("w")).filter(
-        F.col("w") != ""
-    )
+    toks = doc_tokens(docs)
     cf = toks.groupBy("w").agg(F.count("*").alias("c"))
     tot = cf.agg(F.sum("c").alias("t"))
     ranked = _ranked_cumsum(cf, [F.desc("c"), F.asc("w")])
@@ -4417,9 +4360,7 @@ def q_gopher_rules(spark, sf_dir):
     before training. All row-local or one groupBy(doc_id): map-side
     partial agg, no joins beyond the stats merge."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     stop = ("the", "and", "of", "to", "in", "is", "that", "it", "was", "for")
     tok_stats = toks.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
@@ -4825,30 +4766,10 @@ def q_sample_quality(spark, sf_dir):
     is the SAME blend q_quality_score publishes (rounded 4dp before
     the compare, so both engines threshold identical doubles)."""
     docs = _t(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " "))
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
-        F.length("text").cast("double"), F.lit(0.0)
-    )
     quality = F.round(
-        F.least(F.lit(1.0), n_tokens / 100.0) * 0.5 + alpha * 0.5, 4
+        quality_blend(F.size(F.split("text", " ")), alpha_ratio()), 4
     )
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(F.lit("qs"), F.col("doc_id").cast("string")),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        / F.lit(16777216.0)
-    )
+    u = seeded_uniform("qs", F.col("doc_id"))
     return (
         docs.select("doc_id", "lang", quality.alias("quality"), u.alias("u"))
         .filter(F.col("u") < F.col("quality"))
@@ -4891,25 +4812,7 @@ def q_split_holdout(spark, sf_dir):
     doc_id for a url/content fingerprint in production so re-crawled
     pages keep their split."""
     docs = _t(spark, sf_dir, "documents")
-    b = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.encode(
-                        F.concat(
-                            F.lit("split"), F.col("doc_id").cast("string")
-                        ),
-                        "UTF-8",
-                    )
-                ),
-                1,
-                6,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    b = seeded_hex6("split", F.col("doc_id")) % 100
     split = (
         F.when(b < _SPLIT_TRAIN_PCT, "train")
         .when(b < _SPLIT_VAL_PCT, "val")
@@ -5466,11 +5369,8 @@ def q_model_score(spark, sf_dir):
     trained classifier's weights — same plan: broadcast join + one
     groupBy(doc_id), no Python in the hot path."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
-    feats = toks.select(
-        "doc_id", F.substring(F.md5(F.encode("w", "UTF-8")), 1, 2).alias("b")
+    feats = doc_tokens(docs, "doc_id").select(
+        "doc_id", feature_bucket().alias("b")
     )
     weights = spark.range(256).select(
         F.lower(F.lpad(F.hex("id"), 2, "0")).alias("b"),
@@ -5605,11 +5505,7 @@ def q_host_diversity(spark, sf_dir):
     H = log2(T) - Σc·ln(c)/(T·ln2) identity as q_char_entropy so
     neither engine materializes probabilities."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
-    )
-    cnt = docs.select(host.alias("host")).groupBy("host").agg(
+    cnt = docs.select(synthetic_host().alias("host")).groupBy("host").agg(
         F.count("*").alias("c")
     )
     return cnt.agg(
@@ -5754,18 +5650,11 @@ def q_host_stats(spark, sf_dir):
     aggregate state is tiny (4 numbers/host). The derived blocklist is
     what q_resume_anti-style broadcast anti-joins consume upstream."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
-    )
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) / F.nullif(
-        F.length("text").cast("double"), F.lit(0.0)
-    )
     return (
         docs.select(
-            host.alias("host"),
+            synthetic_host().alias("host"),
             F.size(F.split("text", " ")).alias("n_tokens"),
-            alpha.alias("alpha_ratio"),
+            alpha_ratio().alias("alpha_ratio"),
         )
         .groupBy("host")
         .agg(
@@ -6004,9 +5893,7 @@ def _bpe_words_from(docs):
     """_bpe_words over any (…, text) DataFrame — the entry point jobs
     use to train on their own cleaned corpus instead of the raw
     documents table."""
-    toks = docs.select(
-        F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs)
     return (
         toks.groupBy("w")
         .agg(F.count("*").alias("freq"))
@@ -6207,9 +6094,7 @@ def bpe_doc_token_counts(docs, final_words, out_col: str = "n_bpe"):
     q_pack_sequences_bpe and jobs/pretrain_prep.bpe_token_counts so
     the packing rule cannot drift between registry and job. One
     explode + broadcast vocab join + doc-keyed combining shuffle."""
-    dw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    dw = doc_tokens(docs, "doc_id")
     n = (F.size(F.split("seq", _BPE_D)) - F.lit(2)).cast("long")
     return (
         dw.join(
@@ -6397,31 +6282,10 @@ def _lrn_feats_labels(spark, sf_dir):
     label. One explode + two groupBy(doc_id) shuffles, all map-side
     combinable."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
-    lab = (
-        toks.groupBy("doc_id")
-        .agg(
-            F.count("*").alias("n_tok"),
-            F.avg(F.length("w")).alias("mwl"),
-        )
-        .select(
-            "doc_id",
-            "n_tok",
-            (
-                F.col("mwl").between(3, 10)
-                & F.col("n_tok").between(50, 100000)
-            )
-            .cast("int")
-            .alias("y"),
-        )
-    )
+    toks = doc_tokens(docs, "doc_id")
+    lab = gopher_labels(toks)
     bf = (
-        toks.select(
-            "doc_id",
-            F.substring(F.md5(F.encode("w", "UTF-8")), 1, 2).alias("b"),
-        )
+        toks.select("doc_id", feature_bucket().alias("b"))
         .groupBy("doc_id", "b")
         .agg(F.count("*").alias("c"))
     )
@@ -6774,7 +6638,7 @@ def line_owner_flags_from(docs):
              unnest(lines) AS line
       FROM ml),
     lh AS (SELECT doc_id, li, line, md5(line) AS h,
-                  doc_id * 1000000 + li AS k FROM lx),
+                  (doc_id, li) AS k FROM lx),
     own AS (SELECT h, MIN(k) AS ok FROM lh GROUP BY h),
     flagged AS (
       SELECT lh.doc_id, lh.li, lh.line, lh.k = own.ok AS kept
@@ -6854,9 +6718,7 @@ def q_badwords_filter(spark, sf_dir):
     one explode + one map-side-combining groupBy(doc_id), no joins at
     all; at 100 TB this is a pure single-shuffle map."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     bad = F.when(F.col("w").isin(*_BADWORDS), 1).otherwise(0)
     return toks.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_tokens"),
@@ -6929,9 +6791,7 @@ def q_filter_funnel(spark, sf_dir):
 def filter_funnel_from(docs):
     """q_filter_funnel over any (doc_id, text) DataFrame — the entry
     point jobs (corpus_report) use on their own corpus."""
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     bad = F.when(F.col("w").isin(*_BADWORDS), 1).otherwise(0)
     tstats = toks.groupBy("doc_id").agg(
         F.count("*").alias("n_tokens"),
@@ -7002,11 +6862,7 @@ def q_host_quota(spark, sf_dir):
     return (
         docs.select(
             "doc_id",
-            F.concat(
-                F.lit("host"),
-                (F.col("doc_id") % 50).cast("string"),
-                F.lit(".example.com"),
-            ).alias("host"),
+            synthetic_host().alias("host"),
             F.row_number().over(w).cast("long").alias("rk"),
         )
         .filter(F.col("rk") <= _QUOTA_K)
@@ -7058,11 +6914,7 @@ def q_host_token_budget(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.concat(
-            F.lit("host"),
-            (F.col("doc_id") % 50).cast("string"),
-            F.lit(".example.com"),
-        ).alias("host"),
+        synthetic_host().alias("host"),
         F.size(F.split("text", " ")).alias("n_tokens"),
     )
     cs = _grouped_cumsum(toks, "host", ["doc_id"], "n_tokens")
@@ -7284,9 +7136,7 @@ def q_inverted_index(spark, sf_dir):
     flood the postings shuffle at 100 TB (full postings lists would
     instead be written partitioned-by-term-prefix, never collected)."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     tf = _persist(
         toks.groupBy("w", "doc_id").agg(F.count("*").alias("tf"))
     )
@@ -7655,11 +7505,9 @@ def q_host_quality_prior(spark, sf_dir):
     host-table map; the demote flag feeds the same broadcast anti-join
     that consumes q_host_stats' blocklist."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
+    return host_quality_prior_from(
+        docs.select(synthetic_host().alias("host"), "text")
     )
-    return host_quality_prior_from(docs.select(host.alias("host"), "text"))
 
 
 def host_quality_prior_from(docs):
@@ -7667,18 +7515,10 @@ def host_quality_prior_from(docs):
     entry point the admission-policy blend and jobs use on their own
     corpus (host from url there, the synthetic doc_id-derived host in
     the gate query)."""
-    alpha = F.coalesce(
-        F.length(F.regexp_replace("text", "[^a-zA-Z]", ""))
-        / F.nullif(F.length("text").cast("double"), F.lit(0.0)),
-        F.lit(0.0),
+    quality = quality_blend(
+        F.size(F.split("text", " ")), F.coalesce(alpha_ratio(), F.lit(0.0))
     )
-    q_micro = F.round(
-        (
-            F.least(F.lit(1.0), F.size(F.split("text", " ")) / 100.0) * 0.5
-            + alpha * 0.5
-        )
-        * F.lit(1000000.0)
-    ).cast("long")
+    q_micro = F.round(quality * F.lit(1000000.0)).cast("long")
     per_host = (
         docs.select("host", q_micro.alias("q_micro"))
         .groupBy("host")
@@ -7839,11 +7679,7 @@ def q_host_lang_entropy(spark, sf_dir):
     exchanges coalesce into one at execution; no joins, no broadcast,
     scales as a single host-keyed aggregation pass."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
-    )
-    hl = docs.select(host.alias("host"), "lang").groupBy(
+    hl = docs.select(synthetic_host().alias("host"), "lang").groupBy(
         "host", "lang"
     ).agg(F.count("*").alias("c"))
     w = Window.partitionBy("host").orderBy(F.desc("c"), F.asc("lang"))
@@ -7944,26 +7780,16 @@ def ccnet_buckets_from(docs, toks=None):
     corpus. Pass a pre-tokenized persisted (doc_id, lang, w) `toks`
     to share ONE corpus tokenize scan across signals."""
     if toks is None:
-        toks = _persist(
-            docs.select(
-                "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
-            ).filter(F.col("w") != "")
-        )
+        toks = _persist(doc_tokens(docs, "doc_id", "lang"))
     cf = _persist(toks.groupBy("w").agg(F.count("*").alias("c")))
     tot = cf.agg(F.sum("c").cast("long").alias("t"))
-    head = _persist(cf.orderBy(F.desc("c"), F.asc("w")).limit(_PPLX_HEAD_K))
-    tail_cf = cf.join(F.broadcast(head.select("w")), "w", "left_anti")
-    hit = toks.join(F.broadcast(head), "w")
-    miss = toks.join(
-        F.broadcast(head.select("w")), "w", "left_anti"
-    ).join(tail_cf, "w")
     nll_micro = F.round(
         -F.log(F.col("c") * F.lit(1.0) / F.col("t"))
         / F.log(F.lit(2.0))
         * F.lit(1000000.0)
     ).cast("long")
     perdoc = _persist(
-        hit.unionByName(miss)
+        head_split_join(toks, cf, ["w"])
         .crossJoin(F.broadcast(tot))
         .groupBy("doc_id", "lang")
         .agg(
@@ -8201,9 +8027,7 @@ def q_tokenizer_fertility(spark, sf_dir):
     new corpus-sized shuffles beyond the tokenization itself."""
     docs = _t(spark, sf_dir, "documents")
     _, final_words = _bpe_train(spark, sf_dir)
-    dw = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    dw = doc_tokens(docs, "doc_id")
     n = (F.size(F.split("seq", _BPE_D)) - F.lit(2)).cast("long")
     nb = (
         dw.join(
@@ -9172,9 +8996,7 @@ def _bm25_top5(spark, sf_dir):
     mirrors the `ranked` CTE of _BM25_SQL_BODY; consumed by
     q_bm25_rank and q_bm25_eval."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     tf = _persist(
         toks.groupBy("w", "doc_id").agg(F.count("*").cast("long").alias("tf"))
     )
@@ -9415,11 +9237,7 @@ def admission_flags_from(docs):
     signal; the host prior needs no token table (row-local
     size(split)). Zero-token docs carry no DSIR/CCNet row: f_dsir
     coalesces to True (COALESCE(score, 0) <= 0), f_ccnet to False."""
-    toks = _persist(
-        docs.select(
-            "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
-        ).filter(F.col("w") != "")
-    )
+    toks = _persist(doc_tokens(docs, "doc_id", "lang"))
     hq = F.broadcast(
         host_quality_prior_from(docs.select("host", "text")).select(
             "host", "demoted"
@@ -9608,12 +9426,8 @@ def q_admission_policy(spark, sf_dir):
     synthetic host is the q_host_quality_prior doc_id%50 convention so
     the host gate actually fires on the rule corpus."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
-    )
     return admission_policy_from(
-        docs.select("doc_id", host.alias("host"), "lang", "text")
+        docs.select("doc_id", synthetic_host().alias("host"), "lang", "text")
     )
 
 
@@ -9682,13 +9496,9 @@ def q_admission_marginal(spark, sf_dir):
     a row-local 3-row stack. No per-gate re-scan: naive composition
     would run the admission chain once per gate."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
-    )
     return admission_marginal_from_flags(
         admission_flags_from(
-            docs.select("doc_id", host.alias("host"), "lang", "text")
+            docs.select("doc_id", synthetic_host().alias("host"), "lang", "text")
         )
     )
 
@@ -9810,40 +9620,23 @@ def q_split_by_host(spark, sf_dir):
     no counters), and re-crawled pages keep their split because the
     key is the host, not the snapshot."""
     docs = _t(spark, sf_dir, "documents")
-    host = F.concat(
-        F.lit("host"), (F.col("doc_id") % 50).cast("string"),
-        F.lit(".example.com"),
-    )
     d = docs.select(
         "doc_id",
         "lang",
-        host.alias("host"),
+        synthetic_host().alias("host"),
         F.size(F.split("text", " ")).alias("n_tokens"),
     )
 
     def bucket(col):
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.encode(F.concat(F.lit("split"), col), "UTF-8")),
-                    1,
-                    6,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % 100
-        )
+        return seeded_hex6("split", col) % 100
 
     hb = d.select("host").distinct().select(
         "host", bucket(F.col("host")).alias("b")
     )
+    doc_b = bucket(F.col("doc_id"))
     doc_s = (
-        F.when(
-            bucket(F.col("doc_id").cast("string")) < _SPLIT_TRAIN_PCT,
-            "train",
-        )
-        .when(bucket(F.col("doc_id").cast("string")) < _SPLIT_VAL_PCT, "val")
+        F.when(doc_b < _SPLIT_TRAIN_PCT, "train")
+        .when(doc_b < _SPLIT_VAL_PCT, "val")
         .otherwise("test")
     )
     leak = (
@@ -11377,9 +11170,7 @@ def q_postings_compression(spark, sf_dir):
     one boundary gap per run. Two keyed aggregates after the window,
     the second over ≤64 class rows."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     post = toks.groupBy("w", "doc_id").agg(F.lit(1)).select("w", "doc_id")
     wnd = Window.partitionBy("w").orderBy(F.asc("doc_id"))
     g = post.select(
@@ -12712,9 +12503,7 @@ def q_index_prune(spark, sf_dir):
     BroadcastNestedLoopJoin over 16 × 5 rows; every remaining join is
     a broadcast dim or 1-row total."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     term = (
         toks.groupBy("w", "doc_id")
         .agg(F.lit(1))
@@ -12758,13 +12547,15 @@ def q_index_prune(spark, sf_dir):
         .select(
             F.col("k").cast("long").alias("k"),
             "postings_saved",
+            # NULLIF: DuckDB's // yields NULL on a zero divisor (no
+            # query-term doc, or an empty corpus); ANSI DIV would raise
             F.expr(
-                "postings_saved * 1000000 DIV total_postings"
+                "postings_saved * 1000000 DIV NULLIF(total_postings, 0)"
             ).alias("saved_ppm"),
             "n_query_terms",
             "query_terms_lost",
             F.expr(
-                "query_terms_lost * 1000000 DIV n_query_terms"
+                "query_terms_lost * 1000000 DIV NULLIF(n_query_terms, 0)"
             ).alias("query_loss_ppm"),
         )
     )
@@ -13120,31 +12911,19 @@ def q_index_merge(spark, sf_dir):
     segment axis is folded through conditional aggregation instead of
     a full-outer join of two inventories."""
     docs = _t(spark, sf_dir, "documents")
-    toks = (
+    is_delta = (F.col("doc_id") % 5 == 0).alias("is_delta")
+    toks = doc_tokens(docs, "doc_id", is_delta).unionAll(
         docs.select(
             "doc_id",
-            F.explode(F.split("text", " ")).alias("w"),
-            (F.col("doc_id") % 5 == 0).alias("is_delta"),
-        )
-        .filter(F.col("w") != "")
-        .unionAll(
-            docs.select(
-                "doc_id",
-                F.when(
-                    F.col("doc_id") % 5 == 0,
-                    F.concat(
-                        F.lit("xnew"), (F.col("doc_id") % 3).cast("string")
-                    ),
-                )
-                .otherwise(
-                    F.concat(
-                        F.lit("xbase"),
-                        (F.col("doc_id") % 3).cast("string"),
-                    )
-                )
-                .alias("w"),
-                (F.col("doc_id") % 5 == 0).alias("is_delta"),
+            is_delta,
+            F.when(
+                F.col("doc_id") % 5 == 0,
+                F.concat(F.lit("xnew"), (F.col("doc_id") % 3).cast("string")),
             )
+            .otherwise(
+                F.concat(F.lit("xbase"), (F.col("doc_id") % 3).cast("string"))
+            )
+            .alias("w"),
         )
     )
     seg = toks.groupBy("w", "is_delta").agg(
@@ -14486,10 +14265,7 @@ def q_zipf_fit(spark, sf_dir):
     ≤64-row-per-lang rollup. The corpus is touched once."""
     docs = _t(spark, sf_dir, "documents")
     tf = (
-        docs.select(
-            "lang", F.explode(F.split("text", " ")).alias("w")
-        )
-        .filter(F.col("w") != "")
+        doc_tokens(docs, "lang")
         .groupBy("lang", "w")
         .agg(F.count("*").cast("long").alias("c"))
     )
@@ -14711,9 +14487,7 @@ def q_readability(spark, sf_dir):
     joins, no windows, per-doc output inherits the agg partitioning.
     At 10^11 docs this is a single shuffle on the natural key."""
     docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).filter(F.col("w") != "")
+    toks = doc_tokens(docs, "doc_id")
     sylls = toks.select(
         "doc_id",
         F.greatest(
@@ -17464,8 +17238,7 @@ def q_countmin_sketch(spark, sf_dir):
     sketch."""
     docs = _t(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
-        .where(F.col("w") != "")
+        doc_tokens(docs)
         .groupBy("w")
         .agg(F.count("*").cast("long").alias("n"))
     )

@@ -101,14 +101,20 @@ def test_partial_run_then_resume_completes(spark, corpus):
         cfg = RunConfig(pages_path=corpus, out_dir=out, run_id="pp", parallelism=4)
         from readembedability_spark.operators.dedup import dedup_latest as dd
         from readembedability_spark.operators.extract import extract_stage
-        from readembedability_spark.operators.resume import mark_buckets_done
+        from readembedability_spark.operators.resume import (
+            mark_bucket_list_done,
+        )
 
         part = dd(pages.filter(F.col("url_bucket") < 128))
+        buckets = [
+            r["url_bucket"]
+            for r in part.select("url_bucket").distinct().collect()
+        ]
         extracted_part = extract_stage(salt_repartition(part, 4))
         out_path = str(Path(out) / "extracted")
         extracted_part.write.mode("append").parquet(out_path)
-        mark_buckets_done(
-            spark.read.parquet(out_path), str(Path(out) / "_checkpoint"), "pp"
+        mark_bucket_list_done(
+            spark, buckets, str(Path(out) / "_checkpoint"), "pp"
         )
         n_partial = spark.read.parquet(out_path).count()
         assert n_partial > 0

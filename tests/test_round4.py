@@ -470,32 +470,39 @@ def test_dedup_lines_global_cross_doc_first_occurrence_wins(spark, tmp_path):
     release_caches(spark)
 
 
-def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
-    """doc_ids near 2**44 (a hashed 63-bit id space) order owners by
-    (doc_id, li) without arithmetic: an integer owner key
-    doc_id * 10**6 + li overflows BIGINT here."""
-    import hashlib
+_LO, _HI = 2**44, 2**44 + 1
+_SHARED = "alpha beta gamma"
+_LO_TEXT = f"own words of lo\nmore of lo\n{_SHARED}"
+_HI_TEXT = f"{_SHARED}\nown words of hi"
 
+
+def _large_id_docs(tmp_path) -> str:
+    """Two docs with doc_ids near 2**44 (a hashed 63-bit id space)
+    sharing one line: an integer owner key doc_id * 10**6 + li
+    overflows BIGINT here."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    lo, hi = 2**44, 2**44 + 1
-    shared = "alpha beta gamma"
-    a = f"own words of lo\nmore of lo\n{shared}"
-    b = f"{shared}\nown words of hi"
     pq.write_table(
         pa.table(
             {
-                "doc_id": pa.array([hi, lo], pa.int64()),
-                "text": pa.array([b, a]),
+                "doc_id": pa.array([_HI, _LO], pa.int64()),
+                "text": pa.array([_HI_TEXT, _LO_TEXT]),
             }
         ),
         tmp_path / "documents.parquet",
     )
+    return str(tmp_path)
+
+
+def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
+    """Owners are ordered by (doc_id, li) without arithmetic."""
+    import hashlib
+
     rows = {
         r["doc_id"]: (r["n_lines"], r["n_removed"], r["clean_md5"])
         for r in REGISTRY["q_dedup_lines_global"]
-        .spark(spark, str(tmp_path))
+        .spark(spark, _large_id_docs(tmp_path))
         .collect()
     }
     release_caches(spark)
@@ -506,9 +513,39 @@ def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
     # the lower doc_id owns the shared line although it sits later in
     # that doc (line 3) than in the higher-id doc (line 1)
     assert rows == {
-        lo: (3, 0, md5(a)),
-        hi: (2, 1, md5("own words of hi")),
+        _LO: (3, 0, md5(_LO_TEXT)),
+        _HI: (2, 1, md5("own words of hi")),
     }
+
+
+def test_dedup_lines_global_large_doc_ids_oracle(spark, tmp_path):
+    """The DuckDB oracle orders owners by (doc_id, li) too, so both
+    engines agree at doc_ids near 2**44."""
+    import duckdb
+
+    sf = _large_id_docs(tmp_path)
+    spark_rows = sorted(
+        tuple(r)
+        for r in REGISTRY["q_dedup_lines_global"]
+        .spark(spark, sf)
+        .select("doc_id", "n_lines", "n_removed", "clean_md5")
+        .collect()
+    )
+    release_caches(spark)
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM "
+        f"read_parquet('{sf}/documents.parquet')"
+    )
+    oracle_rows = sorted(
+        con.execute(
+            "SELECT doc_id, n_lines, n_removed, clean_md5 FROM ("
+            + REGISTRY["q_dedup_lines_global"].sql
+            + ")"
+        ).fetchall()
+    )
+    assert oracle_rows == spark_rows
+    assert [r[:3] for r in oracle_rows] == [(_LO, 3, 0), (_HI, 2, 1)]
 
 
 def test_badwords_filter_flags_and_keeps(spark):
