@@ -41,6 +41,7 @@ def captures(pages):
     definition the gate query and the streaming maintainer use);
     digest = md5 prefix of the raw payload (the content identity the
     index versions on). Row-local string work only."""
+    from readembedability_spark.functions import capture_digest
     from readembedability_spark.textops import surt_key_expr
 
     host = F.lower(F.regexp_extract("url", r"^https?://([^/?#]+)", 1))
@@ -49,9 +50,7 @@ def captures(pages):
         host.alias("host"),
         "url",
         F.col("warc_ts").alias("ts"),
-        F.substring(
-            F.md5(F.coalesce("html", F.lit(b""))), 1, 8
-        ).alias("digest"),
+        capture_digest().alias("digest"),
     )
 
 

@@ -12,8 +12,6 @@ from __future__ import annotations
 import json
 from dataclasses import dataclass, field
 
-from readembedability_spark.extractor.dom import Element
-
 _ARTICLE_TYPES = frozenset(
     ["article", "newsarticle", "blogposting", "report", "scholarlyarticle",
      "webpage", "liveblogposting", "medicalscholarlyarticle"]
@@ -77,19 +75,6 @@ def _iter_nodes(doc):
             for item in graph:
                 yield from _iter_nodes(item)
         yield doc
-
-
-def parse_jsonld(root: Element) -> JsonLd:
-    """Convenience wrapper: scan the tree for ld+json scripts."""
-    texts = []
-    for el in root.iter():
-        if (
-            el.tag == "script"
-            and (el.attrs.get("type") or "").strip().lower()
-            == "application/ld+json"
-        ):
-            texts.append(el.text_content())
-    return parse_jsonld_texts(texts)
 
 
 def parse_jsonld_texts(texts: list[str]) -> JsonLd:

@@ -104,8 +104,3 @@ def extract_anchors(
             (resolved, " ".join(el.text_content().split()), nofollow)
         )
     return out
-
-
-def extract_links(root: Element, page_url: str) -> list[str]:
-    """Ordered, absolutized, deduped outbound links (rules L-1..L-6)."""
-    return [link for link, _, _ in extract_anchors(root, page_url)]

@@ -17,6 +17,21 @@ def host_col(url: Column | str = "url") -> Column:
     return F.lower(F.regexp_extract(url, r"^https?://([^/:?#]+)", 1))
 
 
+def epoch_us(ts: str) -> Column:
+    """Microseconds from 1970-01-01 00:00:00 to the timestamp column
+    ``ts``. timestampdiff accepts TIMESTAMP_NTZ, which unix_micros
+    rejects."""
+    return F.expr(
+        f"timestampdiff(MICROSECOND, timestamp'1970-01-01 00:00:00', {ts})"
+    )
+
+
+def capture_digest() -> Column:
+    """A capture's content identity: the first 8 hex chars of md5 over
+    the raw ``html`` payload, a NULL payload hashed as empty."""
+    return F.substring(F.md5(F.coalesce("html", F.lit(b""))), 1, 8)
+
+
 def url_hash_col(url: Column | str = "url") -> Column:
     """Stable 64-bit hash of the url (xxhash64 — JVM-side, seed 42)."""
     url = F.col(url) if isinstance(url, str) else url

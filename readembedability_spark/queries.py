@@ -2088,15 +2088,26 @@ def q_extract_pdf_tm(spark, sf_dir):
     return salted_extract(pages).select("url", "content_text", "status")
 
 
+#: An RE2 run of the characters Python's str.split() treats as
+#: whitespace — the extractor collapses each run to one space.
+_PY_WS_RUN = (
+    r"[\t-\r\x1c-\x20\x{85}\x{a0}\x{1680}\x{2000}-\x{200a}"
+    r"\x{2028}\x{2029}\x{202f}\x{205f}\x{3000}]+"
+)
+
+
 @q(
     "q_metrics_rollup",
-    """
+    f"""
     SELECT CASE WHEN doc_id % 13 = 0 THEN 'empty'
                 WHEN doc_id % 13 = 1 THEN 'non_html'
                 WHEN doc_id % 13 = 2 THEN 'pdf'
                 ELSE 'ok' END AS status,
            COUNT(*) AS n_pages,
-           CAST(SUM(CASE WHEN doc_id % 13 > 2 THEN length(text) ELSE 0 END)
+           CAST(SUM(CASE WHEN doc_id % 13 > 2
+                         THEN length(trim(regexp_replace(
+                                text, '{_PY_WS_RUN}', ' ', 'g')))
+                         ELSE 0 END)
                 AS BIGINT) AS total_chars
     FROM documents GROUP BY 1
     """,

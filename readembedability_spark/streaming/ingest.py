@@ -16,12 +16,14 @@ Design (maps 1:1 onto the batch plan, SURVEY.md §3.2):
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from readembedability_spark.functions import capture_digest, epoch_us, host_col
 from readembedability_spark.operators.extract import extract_stage
 from readembedability_spark.schemas import PAGES_SCHEMA
-from readembedability_spark.text_signals import feature_bucket
+from readembedability_spark.text_signals import feature_bucket, word_ngrams
 
 
 def read_pages_stream(
@@ -96,10 +98,7 @@ def streaming_host_sessions(pages_stream: DataFrame) -> DataFrame:
     off (crawl ledgers are long-lived); at 10^12 scale the key space is
     ~10^8 hosts, well within state-store reach when backed by RocksDB.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    from readembedability_spark.functions import host_col
 
     def update(key, pdfs, state: GroupState):
         n = 0
@@ -148,13 +147,9 @@ def streaming_near_dup_filter(
     an inline ingest filter, where a false drop is data loss but a
     missed near-dup is caught by the batch dedup downstream."""
     arr = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    shingles = F.when(
-        F.size(arr) >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - 2),
-            lambda k: F.concat_ws(" ", F.slice(arr, k, F.lit(3))),
-        ),
-    ).otherwise(F.array(F.concat_ws(" ", arr)))
+    shingles = F.when(F.size(arr) >= 3, word_ngrams(arr, 3)).otherwise(
+        F.array(F.concat_ws(" ", arr))
+    )
     sig = F.concat_ws(
         ",",
         *[
@@ -195,13 +190,9 @@ def streaming_contamination_flags(
     ingest pipeline routes them to quarantine instead of the training
     sink."""
     arr = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    grams = F.when(
-        F.size(arr) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(arr) - (n - 1)),
-            lambda k: F.concat_ws(" ", F.slice(arr, k, F.lit(n))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    grams = F.when(F.size(arr) >= n, word_ngrams(arr, n)).otherwise(
+        F.array().cast("array<string>")
+    )
     exploded = pages_stream.select(
         "url", "warc_ts", F.explode(grams).alias("g")
     )
@@ -226,8 +217,6 @@ def streaming_crawl_sessions(
     At 10^12 rows the shuffle key is (host, session) and hosts are
     ~10^8 — skew handled the same way as the batch path (hot hosts
     split across sessions over time)."""
-    from readembedability_spark.functions import host_col
-
     return (
         pages_stream.withWatermark("warc_ts", watermark)
         .groupBy(
@@ -355,7 +344,6 @@ def streaming_surt_index(
     universe — RocksDB-backed state at ~10^9-10^10 keys; the cap
     keeps per-key state O(max_versions) regardless of recrawl churn.
     """
-    import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def update(key, pdfs, state: GroupState):
@@ -397,13 +385,8 @@ def streaming_surt_index(
 
     keyed = pages_stream.select(
         surt_key_expr(F.col("url")).alias("surt_key"),
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " timestamp'1970-01-01 00:00:00', warc_ts)"
-        ).alias("ts_us"),
-        F.substring(F.md5(F.coalesce("html", F.lit(b""))), 1, 8).alias(
-            "digest"
-        ),
+        epoch_us("warc_ts").alias("ts_us"),
+        capture_digest().alias("digest"),
     )
     return keyed.groupBy("surt_key").applyInPandasWithState(
         update,
@@ -419,6 +402,54 @@ def streaming_surt_index(
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _ledger(keyed, keys, order, init, fold, emit, state_ddl, out_ddl):
+    """A per-key fold over a stream: an update-mode
+    ``applyInPandasWithState`` with no timeout (ledgers are long-lived).
+
+    ``keyed`` carries the ``keys``, the epoch-micros ``ts_us`` and the
+    columns ``fold`` reads. The state is one ``state_ddl`` row, ``init``
+    before a key's first batch, and holds ``last_us`` (the head: the
+    newest on-time ts_us) and ``n_late``. Each micro-batch concatenates
+    the key's Arrow chunks and sorts them once by ``order``, so
+    multi-chunk delivery replays like row-at-a-time. Per row a capture
+    behind the head is late and counts in n_late; ``fold(st, ts_us,
+    row, late)`` then sees the state as a dict, with the head still the
+    previous one, and decides what the row does; an on-time row moves
+    the head. ``emit(key, st, folded)`` turns the batch's final state
+    and the folds' return values into ``out_ddl`` rows."""
+    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+    fields = [f.split()[0] for f in state_ddl.split(",")]
+    columns = [f.split()[0] for f in out_ddl.split(",")]
+
+    def update(key, pdfs, state: GroupState):
+        st = dict(zip(fields, state.get if state.exists else init))
+        batch = pd.concat(list(pdfs), ignore_index=True).sort_values(order)
+        folded = []
+        for row in batch.itertuples(index=False):
+            ts_us = int(row.ts_us)
+            late = st["last_us"] is not None and ts_us < st["last_us"]
+            st["n_late"] += late
+            folded.append(fold(st, ts_us, row, late))
+            if not late:
+                st["last_us"] = ts_us
+        state.update(tuple(st[f] for f in fields))
+        yield pd.DataFrame(emit(key, st, folded), columns=columns)
+
+    return keyed.groupBy(*keys).applyInPandasWithState(
+        update,
+        outputStructType=out_ddl,
+        stateStructType=state_ddl,
+        outputMode="update",
+        timeoutConf=GroupStateTimeout.NoTimeout,
+    )
+
+
+def _last(values, default=None):
+    """The last non-None of ``values``, else ``default``."""
+    return next((v for v in reversed(values) if v is not None), default)
 
 
 def streaming_crawl_delta(pages_stream: DataFrame) -> DataFrame:
@@ -437,87 +468,58 @@ def streaming_crawl_delta(pages_stream: DataFrame) -> DataFrame:
     counters and the head timestamp; no capture history is retained
     (exactly why the stream can classify at 10^12-capture scale: the
     batch sibling's lag window re-reads two captures per url, the
-    stream remembers only the last one). Ordering: ALL of a group's
-    arrow chunks are concatenated and sorted once by (ts_us, digest)
-    before folding, so a multi-chunk micro-batch replays identically
-    to row-at-a-time delivery. LATE DATA: with O(1) state a capture
+    stream remembers only the last one). A micro-batch folds in
+    (ts_us, digest) order. LATE DATA: with O(1) state a capture
     older than the head cannot be spliced into history, so it is
     counted in ``n_late`` and never regresses the head
     (status/digest/last_ts unchanged; a batch carrying ONLY late
     captures emits status ``late``) — reconciliation of late captures
     is exactly what the batch sibling q_crawl_delta is for."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    def update(key, pdfs, state: GroupState):
-        n = 0
-        last_digest = None
-        n_changes = 0
-        last_us = None
-        n_late = 0
-        if state.exists:
-            n, last_digest, n_changes, last_us, n_late = state.get
-        status = None
-        applied = n - n_late  # captures that have moved the head so far
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts_us", "digest"])
-        for ts_us, digest in zip(batch["ts_us"], batch["digest"]):
-            ts_us = int(ts_us)
-            if last_us is not None and ts_us < last_us:
-                n_late += 1
-                continue
-            if applied == 0:
-                status = "new"
-            elif digest != last_digest:
-                status = "changed"
-                n_changes += 1
-            else:
-                status = "unchanged"
-            applied += 1
-            last_digest = digest
-            last_us = ts_us
-        n += len(batch)
-        if status is None:
-            status = "late"  # this batch carried only late captures
-        state.update((n, last_digest, n_changes, last_us, n_late))
-        yield pd.DataFrame(
-            {
-                "url": [key[0]],
-                "host": [key[1]],
-                "n_captures": [n],
-                "n_changes": [n_changes],
-                "n_late": [n_late],
-                "status": [status],
-                "last_ts": [pd.Timestamp(last_us, unit="us")],
-            }
-        )
+    def fold(st, ts_us, row, late):
+        st["n_captures"] += 1
+        if late:
+            return None
+        if st["last_us"] is None:
+            status = "new"
+        elif row.digest != st["last_digest"]:
+            status = "changed"
+            st["n_changes"] += 1
+        else:
+            status = "unchanged"
+        st["last_digest"] = row.digest
+        return status
 
-    from readembedability_spark.functions import host_col
+    def emit(key, st, statuses):
+        return [(
+            key[0],
+            key[1],
+            st["n_captures"],
+            st["n_changes"],
+            st["n_late"],
+            _last(statuses, "late"),
+            pd.Timestamp(st["last_us"], unit="us"),
+        )]
 
     keyed = pages_stream.select(
         "url",
         host_col("url").alias("host"),
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " timestamp'1970-01-01 00:00:00', warc_ts)"
-        ).alias("ts_us"),
-        F.substring(F.md5(F.coalesce("html", F.lit(b""))), 1, 8).alias(
-            "digest"
-        ),
+        epoch_us("warc_ts").alias("ts_us"),
+        capture_digest().alias("digest"),
     )
-    return keyed.groupBy("url", "host").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "url string, host string, n_captures long, n_changes long,"
-            " n_late long, status string, last_ts timestamp"
-        ),
-        stateStructType=(
-            "n_captures long, last_digest string, n_changes long,"
-            " last_us long, n_late long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _ledger(
+        keyed,
+        ["url", "host"],
+        ["ts_us", "digest"],
+        (0, None, 0, None, 0),
+        fold,
+        emit,
+        "n_captures long, last_digest string, n_changes long,"
+        " last_us long, n_late long",
+        "url string, host string, n_captures long, n_changes long,"
+        " n_late long, status string, last_ts timestamp",
     )
+
 
 def streaming_capture_diff(
     pages_stream: DataFrame, max_tokens: int = 4096
@@ -535,96 +537,65 @@ def streaming_capture_diff(
     entries in sorted order (deterministic truncation — a production
     deployment stores a MinHash signature at the same position, the
     capped set IS the exactness-first variant of that sketch); packed
-    as one unit-separator string because state columns are flat.
-    Ordering: each group's chunks are concatenated and sorted by
-    (ts_us, packed tokens) before folding, so multi-chunk batches
-    replay identically. LATE DATA follows the streaming_crawl_delta
-    contract: a capture older than the head counts in ``n_late`` and
-    never touches the comparison state — splicing it into history is
-    the batch sibling's job."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
+    JVM-side as one unit-separator string because state columns are
+    flat. A micro-batch folds in (ts_us, packed tokens) order. LATE
+    DATA follows the streaming_crawl_delta contract: a capture older
+    than the head counts in ``n_late`` and never touches the
+    comparison state — splicing it into history is the batch
+    sibling's job."""
     SEP = "\x1f"
 
-    def update(key, pdfs, state: GroupState):
-        n = 0
-        last_packed = None
-        n_pairs = 0
-        n_changed = 0
-        sim_total = 0
-        last_us = None
-        n_late = 0
-        if state.exists:
-            (n, last_packed, n_pairs, n_changed, sim_total, last_us,
-             n_late) = state.get
-        last_sim = None
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch["packed"] = [
-            SEP.join(sorted(set(t))[:max_tokens]) for t in batch["toks"]
-        ]
-        batch = batch.sort_values(["ts_us", "packed"])
-        for ts_us, packed in zip(batch["ts_us"], batch["packed"]):
-            ts_us = int(ts_us)
-            if last_us is not None and ts_us < last_us:
-                n_late += 1
-                continue
-            if last_packed is not None:
-                prev = set(last_packed.split(SEP)) if last_packed else set()
-                cur = set(packed.split(SEP)) if packed else set()
-                union = len(prev | cur)
-                sim = (
-                    len(prev & cur) * 1000000 // union if union else 1000000
-                )
-                n_pairs += 1
-                sim_total += sim
-                if sim < 1000000:
-                    n_changed += 1
-                last_sim = sim
-            last_packed = packed
-            last_us = ts_us
-        n += len(batch)
-        state.update(
-            (n, last_packed, n_pairs, n_changed, sim_total, last_us, n_late)
-        )
-        yield pd.DataFrame(
-            {
-                "url": [key[0]],
-                "n_captures": [n],
-                "n_pairs": [n_pairs],
-                "n_changed": [n_changed],
-                "sim_ppm_total": [sim_total],
-                "mean_sim_ppm": [
-                    sim_total // n_pairs if n_pairs else None
-                ],
-                "last_sim_ppm": [last_sim],
-                "n_late": [n_late],
-            }
-        )
+    def fold(st, ts_us, row, late):
+        st["n_captures"] += 1
+        if late:
+            return None
+        sim = None
+        if st["last_toks"] is not None:
+            prev = set(st["last_toks"].split(SEP)) if st["last_toks"] else set()
+            cur = set(row.packed.split(SEP)) if row.packed else set()
+            union = len(prev | cur)
+            sim = len(prev & cur) * 1000000 // union if union else 1000000
+            st["n_pairs"] += 1
+            st["sim_total"] += sim
+            st["n_changed"] += sim < 1000000
+        st["last_toks"] = row.packed
+        return sim
 
+    def emit(key, st, sims):
+        n_pairs = st["n_pairs"]
+        return [(
+            key[0],
+            st["n_captures"],
+            n_pairs,
+            st["n_changed"],
+            st["sim_total"],
+            st["sim_total"] // n_pairs if n_pairs else None,
+            _last(sims),
+            st["n_late"],
+        )]
+
+    toks = F.array_distinct(
+        F.filter(F.split(F.col("text"), " "), lambda x: x != "")
+    )
     keyed = pages_stream.select(
         "url",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " timestamp'1970-01-01 00:00:00', warc_ts)"
-        ).alias("ts_us"),
-        F.array_distinct(
-            F.filter(F.split(F.col("text"), " "), lambda x: x != "")
-        ).alias("toks"),
+        epoch_us("warc_ts").alias("ts_us"),
+        F.concat_ws(SEP, F.slice(F.array_sort(toks), 1, max_tokens)).alias(
+            "packed"
+        ),
     )
-    return keyed.groupBy("url").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "url string, n_captures long, n_pairs long, n_changed long,"
-            " sim_ppm_total long, mean_sim_ppm long, last_sim_ppm long,"
-            " n_late long"
-        ),
-        stateStructType=(
-            "n_captures long, last_toks string, n_pairs long,"
-            " n_changed long, sim_total long, last_us long, n_late long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _ledger(
+        keyed,
+        ["url"],
+        ["ts_us", "packed"],
+        (0, None, 0, 0, 0, None, 0),
+        fold,
+        emit,
+        "n_captures long, last_toks string, n_pairs long,"
+        " n_changed long, sim_total long, last_us long, n_late long",
+        "url string, n_captures long, n_pairs long, n_changed long,"
+        " sim_ppm_total long, mean_sim_ppm long, last_sim_ppm long,"
+        " n_late long",
     )
 
 
@@ -644,95 +615,53 @@ def streaming_admission(
     State is O(1) per host by construction — three counters, no page
     history — which is the whole point: the batch sibling needs the
     range-partitioned `_grouped_cumsum` to order 10^8 hosts' running
-    sums, while the stream pays one integer add per page. Ordering:
-    a micro-batch's arrow chunks are concatenated and sorted once by
-    (ts_us, url) before folding, so multi-chunk delivery replays
-    identically to row-at-a-time. ADMISSION ORDER IS INGEST ORDER:
-    a late-arriving page (older warc_ts than already-folded pages)
-    still consumes budget at its ARRIVAL position — with O(1) state
-    an earlier admission cannot be revoked; n_late counts them so
-    the batch sibling (which orders by doc_id, not arrival) can
-    reconcile offline. Tokens of REJECTED pages still advance the
-    seen-counter, mirroring the batch cumsum over all docs (the sum
-    is monotone, so rejection stays permanent in both engines)."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    sums, while the stream pays one integer add per page. A
+    micro-batch folds in (ts_us, url) order. ADMISSION ORDER IS
+    INGEST ORDER: a late-arriving page (older warc_ts than
+    already-folded pages) still consumes budget at its ARRIVAL
+    position — with O(1) state an earlier admission cannot be
+    revoked; n_late counts them so the batch sibling (which orders by
+    doc_id, not arrival) can reconcile offline. Tokens of REJECTED
+    pages still advance the seen-counter, mirroring the batch cumsum
+    over all docs (the sum is monotone, so rejection stays permanent
+    in both engines)."""
 
-    def update(key, pdfs, state: GroupState):
-        tokens_seen = 0
-        n_seen = 0
-        n_admitted = 0
-        last_us = None
-        n_late = 0
-        if state.exists:
-            tokens_seen, n_seen, n_admitted, last_us, n_late = state.get
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts_us", "url"])
-        out = {
-            "url": [],
-            "n_tokens": [],
-            "tokens_before": [],
-            "admitted": [],
-        }
-        for url, ts_us, n_tokens in zip(
-            batch["url"], batch["ts_us"], batch["n_tokens"]
-        ):
-            ts_us, n_tokens = int(ts_us), int(n_tokens)
-            if last_us is not None and ts_us < last_us:
-                n_late += 1
-            else:
-                last_us = ts_us
-            admitted = tokens_seen < budget
-            out["url"].append(url)
-            out["n_tokens"].append(n_tokens)
-            out["tokens_before"].append(tokens_seen)
-            out["admitted"].append(admitted)
-            tokens_seen += n_tokens
-            n_seen += 1
-            n_admitted += int(admitted)
-        state.update((tokens_seen, n_seen, n_admitted, last_us, n_late))
-        yield pd.DataFrame(
-            {
-                "host": key[0],
-                "url": out["url"],
-                "n_tokens": pd.Series(out["n_tokens"], dtype="int64"),
-                "tokens_before": pd.Series(
-                    out["tokens_before"], dtype="int64"
-                ),
-                "admitted": out["admitted"],
-                "host_tokens_seen": tokens_seen,
-                "host_n_seen": n_seen,
-                "host_n_admitted": n_admitted,
-                "host_n_late": n_late,
-            }
-        )
+    def fold(st, ts_us, row, late):
+        before = st["tokens_seen"]
+        admitted = before < budget
+        n_tokens = int(row.n_tokens)
+        st["tokens_seen"] += n_tokens
+        st["n_seen"] += 1
+        st["n_admitted"] += admitted
+        return row.url, n_tokens, before, admitted
 
-    from readembedability_spark.functions import host_col
+    def emit(key, st, pages):
+        return [
+            (key[0], *page, st["tokens_seen"], st["n_seen"],
+             st["n_admitted"], st["n_late"])
+            for page in pages
+        ]
 
     keyed = pages_stream.select(
         "url",
         host_col("url").alias("host"),
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " timestamp'1970-01-01 00:00:00', warc_ts)"
-        ).alias("ts_us"),
+        epoch_us("warc_ts").alias("ts_us"),
         F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
         .cast("long")
         .alias("n_tokens"),
     )
-    return keyed.groupBy("host").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "host string, url string, n_tokens long, tokens_before long,"
-            " admitted boolean, host_tokens_seen long, host_n_seen long,"
-            " host_n_admitted long, host_n_late long"
-        ),
-        stateStructType=(
-            "tokens_seen long, n_seen long, n_admitted long,"
-            " last_us long, n_late long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _ledger(
+        keyed,
+        ["host"],
+        ["ts_us", "url"],
+        (0, 0, 0, None, 0),
+        fold,
+        emit,
+        "tokens_seen long, n_seen long, n_admitted long,"
+        " last_us long, n_late long",
+        "host string, url string, n_tokens long, tokens_before long,"
+        " admitted boolean, host_tokens_seen long, host_n_seen long,"
+        " host_n_admitted long, host_n_late long",
     )
 
 
@@ -744,113 +673,65 @@ def streaming_politeness(
     stream in, each host's state carries the LAST applied fetch
     timestamp plus five counters, and every micro-batch emits the
     host's updated ledger — fetch/gap/violation counts, the worst
-    (minimum) observed gap, the violation rate in ppm, and the same
-    three-way verdict the batch audit computes (strict-majority
-    'rude', any-violation 'mixed', else 'polite'; a host that has
-    never shown a gap is 'unknown'). The delay is a single parameter
-    here; a production monitor would join the per-host robots
-    crawl-delay dimension (q_robots_crawl_debt's source) broadcast
-    onto the stream before keying.
+    (minimum) observed gap, and from those the batch audit's own
+    verdict columns (``politeness_verdict``: violation rate in ppm;
+    strict-majority 'rude', any-violation 'mixed', else 'polite'; a
+    host that has never shown a gap is 'unknown'). The delay is a
+    single parameter here; a production monitor would join the
+    per-host robots crawl-delay dimension (q_robots_crawl_debt's
+    source) broadcast onto the stream before keying.
 
     State is O(1) per host by construction — one timestamp and five
     longs, no fetch history — so the monitor holds 10^8 hosts in
     executor memory while the batch sibling re-sorts every fetch into
-    a lag window. Ordering: a micro-batch's arrow chunks are
-    concatenated and sorted once by (ts_us, url) before folding, so
-    multi-chunk delivery replays identically to row-at-a-time; a
+    a lag window. A micro-batch folds in (ts_us, url) order; a
     SAME-INSTANT pair is a zero gap (the maximal violation), exactly
     the batch rule's (ts, id)-tiebreak semantics. LATE DATA: with
     O(1) state a fetch older than the head cannot be spliced between
     two already-folded fetches, so it is counted in n_late and never
     contributes a gap — offline reconciliation is exactly what the
     batch sibling is for."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from readembedability_spark.textops import politeness_verdict
 
-    def update(key, pdfs, state: GroupState):
-        last_us = None
-        n_fetches = 0
-        n_gaps = 0
-        n_violations = 0
-        min_gap_us = None
-        n_late = 0
-        if state.exists:
-            (
-                last_us,
-                n_fetches,
-                n_gaps,
-                n_violations,
-                min_gap_us,
-                n_late,
-            ) = state.get
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts_us", "url"])
-        for ts_us in batch["ts_us"]:
-            ts_us = int(ts_us)
-            n_fetches += 1
-            if last_us is not None and ts_us < last_us:
-                n_late += 1
-                continue
-            if last_us is not None:
-                gap = ts_us - last_us
-                n_gaps += 1
-                if gap < delay_us:
-                    n_violations += 1
-                if min_gap_us is None or gap < min_gap_us:
-                    min_gap_us = gap
-            last_us = ts_us
-        state.update(
-            (last_us, n_fetches, n_gaps, n_violations, min_gap_us, n_late)
-        )
-        if n_gaps == 0:
-            verdict, ppm = "unknown", 0
-        else:
-            ppm = n_violations * 1000000 // n_gaps
-            if n_violations * 2 > n_gaps:
-                verdict = "rude"
-            elif n_violations > 0:
-                verdict = "mixed"
-            else:
-                verdict = "polite"
-        yield pd.DataFrame(
-            {
-                "host": [key[0]],
-                "n_fetches": [n_fetches],
-                "n_gaps": [n_gaps],
-                "n_violations": [n_violations],
-                "n_late": [n_late],
-                "min_gap_ms": [
-                    None if min_gap_us is None else min_gap_us // 1000
-                ],
-                "violation_ppm": [ppm],
-                "politeness": [verdict],
-            }
-        )
+    def fold(st, ts_us, row, late):
+        st["n_fetches"] += 1
+        if late or st["last_us"] is None:
+            return
+        gap = ts_us - st["last_us"]
+        st["n_gaps"] += 1
+        st["n_violations"] += gap < delay_us
+        if st["min_gap_us"] is None or gap < st["min_gap_us"]:
+            st["min_gap_us"] = gap
 
-    from readembedability_spark.functions import host_col
+    def emit(key, st, _):
+        min_gap_us = st["min_gap_us"]
+        return [(
+            key[0],
+            st["n_fetches"],
+            st["n_gaps"],
+            st["n_violations"],
+            st["n_late"],
+            None if min_gap_us is None else min_gap_us // 1000,
+        )]
 
     keyed = pages_stream.select(
         host_col("url").alias("host"),
         "url",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " timestamp'1970-01-01 00:00:00', warc_ts)"
-        ).alias("ts_us"),
+        epoch_us("warc_ts").alias("ts_us"),
     )
-    return keyed.groupBy("host").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "host string, n_fetches long, n_gaps long,"
-            " n_violations long, n_late long, min_gap_ms long,"
-            " violation_ppm long, politeness string"
-        ),
-        stateStructType=(
-            "last_us long, n_fetches long, n_gaps long,"
-            " n_violations long, min_gap_us long, n_late long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    ledger = _ledger(
+        keyed,
+        ["host"],
+        ["ts_us", "url"],
+        (None, 0, 0, 0, None, 0),
+        fold,
+        emit,
+        "last_us long, n_fetches long, n_gaps long,"
+        " n_violations long, min_gap_us long, n_late long",
+        "host string, n_fetches long, n_gaps long,"
+        " n_violations long, n_late long, min_gap_ms long",
     )
+    return ledger.select("*", *politeness_verdict())
 
 
 def streaming_retry_after(fetches_stream: DataFrame) -> DataFrame:
@@ -876,109 +757,62 @@ def streaming_retry_after(fetches_stream: DataFrame) -> DataFrame:
 
     State is O(1) per host: two timestamps and five longs, no fetch
     history — the batch sibling re-sorts every fetch into a lag
-    window instead. Ordering: each micro-batch's arrow chunks are
-    concatenated and sorted once by (ts_us, url), so multi-chunk
-    delivery replays identically. LATE DATA: a fetch behind the fold
-    head cannot be judged against the window that was active at its
-    true position, so it counts in n_late and is never judged —
-    offline reconciliation is the batch op's job. NOTE (ADVICE r08):
-    n_fetches counts every ARRIVAL, including those late unjudged
-    rows — a consumer computing a violation RATE over judged fetches
-    must use (n_fetches - n_late) as the denominator."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    window instead. A micro-batch folds in (ts_us, url) order. LATE
+    DATA: a fetch behind the fold head cannot be judged against the
+    window that was active at its true position, so it counts in
+    n_late and is never judged — offline reconciliation is the batch
+    op's job. NOTE (ADVICE r08): n_fetches counts every ARRIVAL,
+    including those late unjudged rows — a consumer computing a
+    violation RATE over judged fetches must use (n_fetches - n_late)
+    as the denominator."""
 
-    def update(key, pdfs, state: GroupState):
-        last_us = None
-        not_before_us = None
-        n_fetches = 0
-        n_throttled = 0
-        n_missing = 0
-        n_violations = 0
-        worst_deficit_us = 0
-        n_late = 0
-        if state.exists:
-            (
-                last_us,
-                not_before_us,
-                n_fetches,
-                n_throttled,
-                n_missing,
-                n_violations,
-                worst_deficit_us,
-                n_late,
-            ) = state.get
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        batch = batch.sort_values(["ts_us", "url"])
-        for ts_us, status, ra_s in zip(
-            batch["ts_us"], batch["status"], batch["retry_after_s"]
-        ):
-            ts_us = int(ts_us)
-            n_fetches += 1
-            if last_us is not None and ts_us < last_us:
-                n_late += 1
-                continue
-            if not_before_us is not None and ts_us < not_before_us:
-                n_violations += 1
-                deficit = not_before_us - ts_us
-                if deficit > worst_deficit_us:
-                    worst_deficit_us = deficit
-            if int(status) in (429, 503):
-                n_throttled += 1
-                if pd.isna(ra_s):
-                    n_missing += 1
-                else:
-                    not_before_us = ts_us + int(ra_s) * 1_000_000
-            last_us = ts_us
-        state.update(
-            (
-                last_us,
-                not_before_us,
-                n_fetches,
-                n_throttled,
-                n_missing,
-                n_violations,
-                worst_deficit_us,
-                n_late,
+    def fold(st, ts_us, row, late):
+        st["n_fetches"] += 1
+        if late:
+            return
+        not_before_us = st["not_before_us"]
+        if not_before_us is not None and ts_us < not_before_us:
+            st["n_violations"] += 1
+            st["worst_deficit_us"] = max(
+                st["worst_deficit_us"], not_before_us - ts_us
             )
-        )
-        yield pd.DataFrame(
-            {
-                "host": [key[0]],
-                "n_fetches": [n_fetches],
-                "n_throttled": [n_throttled],
-                "n_missing_header": [n_missing],
-                "n_violations": [n_violations],
-                "n_late": [n_late],
-                "worst_deficit_ms": [worst_deficit_us // 1000],
-                "compliant": [n_violations == 0],
-            }
-        )
+        if int(row.status) in (429, 503):
+            st["n_throttled"] += 1
+            if pd.isna(row.retry_after_s):
+                st["n_missing"] += 1
+            else:
+                st["not_before_us"] = ts_us + int(row.retry_after_s) * 1_000_000
 
-    from readembedability_spark.functions import host_col
+    def emit(key, st, _):
+        return [(
+            key[0],
+            st["n_fetches"],
+            st["n_throttled"],
+            st["n_missing"],
+            st["n_violations"],
+            st["n_late"],
+            st["worst_deficit_us"] // 1000,
+            st["n_violations"] == 0,
+        )]
 
     keyed = fetches_stream.select(
         host_col("url").alias("host"),
         "url",
-        F.expr(
-            "timestampdiff(MICROSECOND,"
-            " timestamp'1970-01-01 00:00:00', warc_ts)"
-        ).alias("ts_us"),
+        epoch_us("warc_ts").alias("ts_us"),
         "status",
         "retry_after_s",
     )
-    return keyed.groupBy("host").applyInPandasWithState(
-        update,
-        outputStructType=(
-            "host string, n_fetches long, n_throttled long,"
-            " n_missing_header long, n_violations long, n_late long,"
-            " worst_deficit_ms long, compliant boolean"
-        ),
-        stateStructType=(
-            "last_us long, not_before_us long, n_fetches long,"
-            " n_throttled long, n_missing long, n_violations long,"
-            " worst_deficit_us long, n_late long"
-        ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+    return _ledger(
+        keyed,
+        ["host"],
+        ["ts_us", "url"],
+        (None, None, 0, 0, 0, 0, 0, 0),
+        fold,
+        emit,
+        "last_us long, not_before_us long, n_fetches long,"
+        " n_throttled long, n_missing long, n_violations long,"
+        " worst_deficit_us long, n_late long",
+        "host string, n_fetches long, n_throttled long,"
+        " n_missing_header long, n_violations long, n_late long,"
+        " worst_deficit_ms long, compliant boolean",
     )

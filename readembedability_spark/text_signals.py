@@ -10,7 +10,8 @@ the streaming ingest call these instead of restating them:
 - ``feature_bucket``: the 256-way hashed token feature;
 - ``gopher_labels``: per-doc token count and the Gopher pass label;
 - ``synthetic_host``: the doc_id-derived host of the host-grain queries;
-- ``head_split_join``: the Zipf-head skew split of a token-count join.
+- ``head_split_join``: the Zipf-head skew split of a token-count join;
+- ``word_ngrams``: the sliding word n-grams of a token array.
 
 The DuckDB oracle texts keep their own SQL copy of each rule next to
 their queries; the oracle parity tests hold the two sides together.
@@ -38,6 +39,18 @@ def doc_tokens(docs: DataFrame, *keep) -> DataFrame:
     return docs.select(
         *keep, F.explode(F.split("text", " ")).alias("w")
     ).filter(F.col("w") != "")
+
+
+def word_ngrams(arr, n: int, each=lambda gram: gram) -> Column:
+    """The sliding word n-grams of the token array ``arr``, in order:
+    tokens k..k+n-1 joined by one space, mapped through ``each`` (a
+    per-gram hash keeps its one lambda). Defined for size(arr) >= n;
+    the caller guards shorter arrays, for which the sequence runs
+    backwards."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size(arr) - (n - 1)),
+        lambda k: each(F.concat_ws(" ", F.slice(arr, k, F.lit(n)))),
+    )
 
 
 def alpha_ratio() -> Column:

@@ -59,6 +59,7 @@ from readembedability_spark.text_signals import (
     seeded_hex6,
     seeded_uniform,
     synthetic_host,
+    word_ngrams,
 )
 
 # ---------------------------------------------------------------------------
@@ -171,13 +172,9 @@ _SHINGLES_SQL = _shingles_sql("documents")
 def _shingles_from(docs):
     """(doc_id, sh) distinct 3-gram shingles from any (doc_id, text) DF."""
     docs = docs.select("doc_id", F.split("text", " ").alias("arr"))
-    sh = F.when(
-        F.size("arr") >= 3,
-        F.transform(
-            F.sequence(F.lit(1), F.size("arr") - 2),
-            lambda k: F.concat_ws(" ", F.slice("arr", k, F.lit(3))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    sh = F.when(F.size("arr") >= 3, word_ngrams("arr", 3)).otherwise(
+        F.array().cast("array<string>")
+    )
     return (
         docs.select("doc_id", F.explode(sh).alias("sh"))
         .filter(F.col("sh") != "")
@@ -4469,10 +4466,7 @@ def _grams_from(docs, n: int):
     arrs = docs.select("doc_id", F.split("text", " ").alias("arr")).filter(
         F.size("arr") >= n
     )
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-        lambda k: F.concat_ws(" ", F.slice("arr", k, F.lit(n))),
-    )
+    grams = word_ngrams("arr", n)
     return arrs.select("doc_id", F.explode(grams).alias("g")).distinct()
 
 
@@ -4602,18 +4596,12 @@ def dup_substring_excised(arrs, n: int = 8):
     jobs/pretrain_prep.remove_dup_substrings — the _pagerank sharing
     pattern, so a future change to the span rule cannot diverge the
     two call sites."""
-    seq = F.sequence(F.lit(1), F.size("arr") - (n - 1))
     posg = (
         arrs.filter(F.size("arr") >= n)
         .select(
             "doc_id",
             F.posexplode(
-                F.transform(
-                    seq,
-                    lambda k: F.md5(
-                        F.encode(F.concat_ws(" ", F.slice("arr", k, n)), "UTF-8")
-                    ),
-                )
+                word_ngrams("arr", n, lambda g: F.md5(F.encode(g, "UTF-8")))
             ),
         )
         .select("doc_id", (F.col("pos") + 1).alias("k"), F.col("col").alias("gh"))
@@ -5309,13 +5297,10 @@ def q_winnow_fingerprints(spark, sf_dir):
         .select("doc_id", F.split("text", " ").alias("arr"))
         .filter(F.size("arr") >= _WINNOW_K + _WINNOW_W - 1)
     )
-    grams_arr = F.transform(
-        F.sequence(F.lit(1), F.size("arr") - (_WINNOW_K - 1)),
-        lambda i: F.substring(
-            F.md5(F.encode(F.concat_ws(" ", F.slice("arr", i, F.lit(_WINNOW_K))), "UTF-8")),
-            1,
-            8,
-        ),
+    grams_arr = word_ngrams(
+        "arr",
+        _WINNOW_K,
+        lambda g: F.substring(F.md5(F.encode(g, "UTF-8")), 1, 8),
     )
     grams = docs.select("doc_id", F.posexplode(grams_arr)).withColumnsRenamed(
         {"pos": "i0", "col": "h"}
@@ -5763,12 +5748,6 @@ def q_doc_repetition_ngrams(spark, sf_dir):
         .filter(F.size("arr") >= 4)
     )
 
-    def grams(n):
-        return F.transform(
-            F.sequence(F.lit(1), F.size("arr") - (n - 1)),
-            lambda k: F.concat_ws(" ", F.slice("arr", k, F.lit(n))),
-        )
-
     n_lines = F.ceil(F.size("arr") / F.lit(10.0)).cast("int")
     lines = F.transform(
         F.sequence(F.lit(0), n_lines - 1),
@@ -5789,7 +5768,11 @@ def q_doc_repetition_ngrams(spark, sf_dir):
     units = docs.select(
         "doc_id",
         F.explode(
-            F.concat(tagged("g3", grams(3)), tagged("g4", grams(4)), tagged("line", lines))
+            F.concat(
+                tagged("g3", word_ngrams("arr", 3)),
+                tagged("g4", word_ngrams("arr", 4)),
+                tagged("line", lines),
+            )
         ).alias("ku"),
     ).select("doc_id", F.col("ku.kind").alias("kind"), F.col("ku.unit").alias("unit"))
     cnt = units.groupBy("doc_id", "kind", "unit").agg(F.count("*").alias("c"))
@@ -10569,25 +10552,29 @@ def _redir_url_expr(idx):
 @q(
     "q_redirect_resolve",
     """
-    WITH urls AS (
-      SELECT doc_id,
-             'https://r' || CAST(doc_id % 97 AS VARCHAR)
-               || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url
-      FROM documents)
-    SELECT url,
-           CASE
-             WHEN doc_id % 64 IN (62, 63) THEN url
-             WHEN doc_id % 8 = 0 THEN url
-             ELSE 'https://r' || CAST((doc_id - doc_id % 8) % 97 AS VARCHAR)
-                    || '.example.com/p/'
-                    || CAST(doc_id - doc_id % 8 AS VARCHAR)
-           END AS final_url,
-           CAST(CASE
-             WHEN doc_id % 64 IN (62, 63) THEN 8
-             ELSE doc_id % 8
-           END AS BIGINT) AS hops,
-           doc_id % 64 NOT IN (62, 63) AS resolved
-    FROM urls
+    WITH RECURSIVE edges AS (
+      SELECT doc_id AS src,
+             CASE WHEN doc_id % 64 = 62 THEN doc_id + 1
+                  WHEN doc_id % 8 <> 0 THEN doc_id - 1 END AS dst
+      FROM documents),
+    walk AS (
+      SELECT doc_id, doc_id AS cur, 0 AS hops FROM documents
+      UNION ALL
+      SELECT w.doc_id, e.dst, w.hops + 1
+      FROM walk w JOIN edges e ON e.src = w.cur
+      WHERE e.dst IS NOT NULL AND w.hops < 8),
+    final AS (
+      SELECT doc_id, arg_max(cur, hops) AS cur, MAX(hops) AS hops
+      FROM walk GROUP BY doc_id)
+    SELECT 'https://r' || CAST(f.doc_id % 97 AS VARCHAR)
+             || '.example.com/p/' || CAST(f.doc_id AS VARCHAR) AS url,
+           'https://r' || CAST(f.cur % 97 AS VARCHAR)
+             || '.example.com/p/' || CAST(f.cur AS VARCHAR) AS final_url,
+           CAST(f.hops AS BIGINT) AS hops,
+           NOT EXISTS (SELECT 1 FROM edges e
+                       WHERE e.src = f.cur AND e.dst IS NOT NULL)
+             AS resolved
+    FROM final f
     """,
 )
 def q_redirect_resolve(spark, sf_dir):
@@ -10611,10 +10598,12 @@ def q_redirect_resolve(spark, sf_dir):
     (terminal), giving chains 0..7 hops long; pages with i ≡ 62
     (mod 64) instead redirect UP to i+1, planting a real 2-cycle
     (62↔63) whose members must come out resolved=false with hops
-    pinned at 2^3 = 8. The oracle states the closed form of that rule
-    — final landing page, exact hop count, cycle flag — so a resolver
-    that walks the wrong direction, miscounts hops, or fails to flag
-    loops hash-fails every affected row.
+    pinned at 2^3 = 8. A chain ends at the first target that is not a
+    page of the table. The oracle walks the same redirects one hop at
+    a time (a recursive CTE capped at 8 hops) — final landing page,
+    exact hop count, cycle flag — so a resolver that walks the wrong
+    direction, miscounts hops, or fails to flag loops hash-fails
+    every affected row.
 
     Plan/scale: 3 doubling rounds = 3 shuffle equi-joins on the url
     key (each side the successor table, partitioned identically — AQE
@@ -13121,14 +13110,24 @@ def q_feed_parse(spark, sf_dir):
 @q(
     "q_link_depth",
     """
-    WITH hosts AS (
-      SELECT DISTINCT doc_id % 100 AS h FROM documents)
-    SELECT h AS host_id,
-           CASE WHEN (h // 10) % 2 = 0
-                THEN (h % 10) // 3 + (h % 10) % 3
-                ELSE -1 END AS depth,
-           (h // 10) % 2 = 0 AS reachable
-    FROM hosts
+    WITH RECURSIVE hosts AS (
+      SELECT DISTINCT doc_id % 100 AS h FROM documents),
+    edges AS (
+      SELECT h AS src, h + 1 AS dst FROM hosts WHERE h % 10 < 9
+      UNION ALL
+      SELECT h, h + 3 FROM hosts WHERE h % 10 <= 6),
+    bfs AS (
+      SELECT h, 0 AS depth FROM hosts
+      WHERE (h // 10) % 2 = 0 AND h % 10 = 0
+      UNION ALL
+      SELECT e.dst, b.depth + 1
+      FROM bfs b JOIN edges e ON e.src = b.h
+      WHERE b.depth < 4)
+    SELECT hosts.h AS host_id,
+           CAST(COALESCE(MIN(bfs.depth), -1) AS BIGINT) AS depth,
+           MIN(bfs.depth) IS NOT NULL AS reachable
+    FROM hosts LEFT JOIN bfs ON bfs.h = hosts.h
+    GROUP BY hosts.h
     """,
 )
 def q_link_depth(spark, sf_dir):
@@ -13144,8 +13143,8 @@ def q_link_depth(spark, sf_dir):
     unreachable (depth -1) and the shortest path to r must mix +3 and
     +1 steps (min = r//3 + r%3, max 4 at r=8) — a BFS that expands
     only one edge type, walks the wrong direction, or keeps
-    first-visit instead of min depth hash-fails. The oracle states
-    that closed form.
+    first-visit instead of min depth hash-fails. The oracle runs the
+    same 4-round BFS as a recursive CTE over the hosts present.
 
     Plan/scale: 4 BFS rounds (= the planted graph's eccentricity
     bound), each ONE keyed equi-join frontier-expansion plus a
@@ -15094,6 +15093,29 @@ def q_wet_convert(spark, sf_dir):
     )
 
 
+def _class_census(pages, klass: str, count: str):
+    """(klass, count, n_hosts, share_ppm): rows and distinct hosts per
+    class of ``pages`` and the class's share of all rows in ppm
+    (integer DIV) — the census tail of the page-classifier audits."""
+    agg = pages.groupBy(klass).agg(
+        F.count("*").cast("long").alias(count),
+        F.countDistinct("host").cast("long").alias("n_hosts"),
+    )
+    w = Window.partitionBy()
+    return agg.select(
+        klass,
+        count,
+        "n_hosts",
+        F.expr(f"{count} * 1000000").alias("_num"),
+        F.sum(count).over(w).alias("_tot"),
+    ).select(
+        klass,
+        count,
+        "n_hosts",
+        F.expr("_num DIV _tot").cast("long").alias("share_ppm"),
+    )
+
+
 @q(
     "q_soft404_detect",
     """
@@ -15233,23 +15255,7 @@ def q_soft404_detect(spark, sf_dir):
         .otherwise("ok")
         .alias("page_class"),
     )
-    agg = cls.groupBy("page_class").agg(
-        F.count("*").cast("long").alias("n_pages"),
-        F.countDistinct("host").cast("long").alias("n_hosts"),
-    )
-    w = Window.partitionBy()
-    return agg.select(
-        "page_class",
-        "n_pages",
-        "n_hosts",
-        F.expr("n_pages * 1000000").alias("_num"),
-        F.sum("n_pages").over(w).alias("_tot"),
-    ).select(
-        "page_class",
-        "n_pages",
-        "n_hosts",
-        F.expr("_num DIV _tot").cast("long").alias("share_ppm"),
-    )
+    return _class_census(cls, "page_class", "n_pages")
 
 
 @q(
@@ -15393,6 +15399,16 @@ def politeness_from(fetches, tiebreak="event_id"):
         "n_gaps",
         "n_violations",
         "min_gap_ms",
+        *politeness_verdict(),
+    )
+
+
+def politeness_verdict():
+    """(violation_ppm, politeness) of a ledger's (n_gaps, n_violations):
+    the violating share of gaps in ppm (integer DIV), and 'rude' for a
+    strict majority of violating gaps, 'mixed' for any, else 'polite';
+    a host with no gap is 'unknown' at 0 ppm."""
+    return (
         F.when(F.col("n_gaps") == 0, F.lit(0))
         .otherwise(F.expr("n_violations * 1000000 DIV n_gaps"))
         .cast("long")
@@ -16329,23 +16345,7 @@ def q_image_alt_coverage(spark, sf_dir):
         .otherwise("alt-ok")
         .alias("alt_class"),
     )
-    agg = sig.groupBy("alt_class").agg(
-        F.count("*").cast("long").alias("n_pages"),
-        F.countDistinct("host").cast("long").alias("n_hosts"),
-    )
-    w = Window.partitionBy()
-    return agg.select(
-        "alt_class",
-        "n_pages",
-        "n_hosts",
-        F.expr("n_pages * 1000000").alias("_num"),
-        F.sum("n_pages").over(w).alias("_tot"),
-    ).select(
-        "alt_class",
-        "n_pages",
-        "n_hosts",
-        F.expr("_num DIV _tot").cast("long").alias("share_ppm"),
-    )
+    return _class_census(sig, "alt_class", "n_pages")
 
 
 @q(
@@ -16761,23 +16761,7 @@ def q_crawl_trap_detect(spark, sf_dir):
         .otherwise("clean")
         .alias("trap_class"),
     )
-    agg = cls.groupBy("trap_class").agg(
-        F.count("*").cast("long").alias("n_urls"),
-        F.countDistinct("host").cast("long").alias("n_hosts"),
-    )
-    w = Window.partitionBy()
-    return agg.select(
-        "trap_class",
-        "n_urls",
-        "n_hosts",
-        F.expr("n_urls * 1000000").alias("_num"),
-        F.sum("n_urls").over(w).alias("_tot"),
-    ).select(
-        "trap_class",
-        "n_urls",
-        "n_hosts",
-        F.expr("_num DIV _tot").cast("long").alias("share_ppm"),
-    )
+    return _class_census(cls, "trap_class", "n_urls")
 
 
 @q(
@@ -17411,23 +17395,7 @@ def q_paywall_detect(spark, sf_dir):
         .otherwise("free")
         .alias("access_class"),
     )
-    agg = cls.groupBy("access_class").agg(
-        F.count("*").cast("long").alias("n_pages"),
-        F.countDistinct("host").cast("long").alias("n_hosts"),
-    )
-    w = Window.partitionBy()
-    return agg.select(
-        "access_class",
-        "n_pages",
-        "n_hosts",
-        F.expr("n_pages * 1000000").alias("_num"),
-        F.sum("n_pages").over(w).alias("_tot"),
-    ).select(
-        "access_class",
-        "n_pages",
-        "n_hosts",
-        F.expr("_num DIV _tot").cast("long").alias("share_ppm"),
-    )
+    return _class_census(cls, "access_class", "n_pages")
 
 
 @q(

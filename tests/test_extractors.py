@@ -5,7 +5,7 @@ from datetime import datetime
 from readembedability_spark.extractor.authors import normalize_authors
 from readembedability_spark.extractor.dates import date_from_url, parse_date
 from readembedability_spark.extractor.dom import parse_html
-from readembedability_spark.extractor.jsonld import parse_jsonld
+from readembedability_spark.extractor.jsonld import parse_jsonld_texts
 from readembedability_spark.extractor.keywords import (
     extract_keywords,
     extract_summary,
@@ -156,7 +156,7 @@ def test_jsonld_graph_and_arrays():
         '"datePublished":"2024-01-02","image":["https://i.example/img.jpg"]}]}'
         "</script>"
     )
-    ld = parse_jsonld(root)
+    ld = parse_jsonld_texts(collect_meta(root).jsonld_texts)
     assert ld.headline == "H"
     assert ld.authors == ["Solo Author"]
     assert ld.date_published == "2024-01-02"
@@ -168,7 +168,7 @@ def test_jsonld_bad_json_skipped():
         '<script type="application/ld+json">{"@type":"NewsArticle","headline":"OK"}</script>'
         '<script type="application/ld+json">NOT JSON {{{</script>'
     )
-    assert parse_jsonld(root).headline == "OK"
+    assert parse_jsonld_texts(collect_meta(root).jsonld_texts).headline == "OK"
 
 
 # --- A-16/A-17 oembed ------------------------------------------------------

@@ -145,9 +145,15 @@ def test_lrn_feats_parallelism_derived_from_rows(spark, monkeypatch):
 # ---------------------------------------------------------------------------
 
 
+def _links(root, page_url):
+    """The link column of extract_anchors (rules L-1..L-6)."""
+    from readembedability_spark.extractor.links import extract_anchors
+
+    return [link for link, _, _ in extract_anchors(root, page_url)]
+
+
 def test_extract_links_rules():
     from readembedability_spark.extractor.dom import parse_html
-    from readembedability_spark.extractor.links import extract_links
 
     html = """<html><head><base href="/sub/"></head><body>
       <nav><a href="/">home</a></nav>
@@ -160,9 +166,7 @@ def test_extract_links_rules():
       <a name="anchor-no-href">skip</a>
       <a href="">empty</a>
     </body></html>"""
-    links = extract_links(
-        parse_html(html), "https://host.example.com/a/b.html"
-    )
+    links = _links(parse_html(html), "https://host.example.com/a/b.html")
     assert links == [
         # L-1 document order; L-3 base-href resolution
         "https://host.example.com/",
@@ -177,7 +181,6 @@ def test_extract_links_scheme_case_and_base_selection():
     is lowercased; L-3: the base is the first <base> WITH an href —
     an hrefless <base target=...> before it must not mask it."""
     from readembedability_spark.extractor.dom import parse_html
-    from readembedability_spark.extractor.links import extract_links
 
     html = """<html><head>
       <base target="_blank"><base href="/sub/"><base href="/ignored/">
@@ -185,7 +188,7 @@ def test_extract_links_scheme_case_and_base_selection():
       <a href="HTTP://Upper.example.com/X">u</a>
       <a href="rel.html">r</a>
     </body></html>"""
-    links = extract_links(parse_html(html), "https://h.example.com/a/b")
+    links = _links(parse_html(html), "https://h.example.com/a/b")
     assert links == [
         "http://Upper.example.com/X",  # scheme lowercased, rest intact
         "https://h.example.com/sub/rel.html",  # second base (with href) wins
@@ -213,10 +216,9 @@ def test_extract_anchors_text_rule():
 
 def test_extract_links_no_base_resolves_against_page_url():
     from readembedability_spark.extractor.dom import parse_html
-    from readembedability_spark.extractor.links import extract_links
 
     html = '<html><body><a href="c.html">x</a><a href="/r">y</a></body></html>'
-    links = extract_links(parse_html(html), "https://h.example.com/a/b.html")
+    links = _links(parse_html(html), "https://h.example.com/a/b.html")
     assert links == [
         "https://h.example.com/a/c.html",
         "https://h.example.com/r",
@@ -254,7 +256,6 @@ def test_extract_links_property_invariants():
     http(s)-only, fragment-free, duplicate-free, and bounded by the
     anchor count."""
     from readembedability_spark.extractor.dom import parse_html
-    from readembedability_spark.extractor.links import extract_links
 
     hrefs = [
         "a b c", "//proto.example.com/x", "HTTP://UPPER.example/x",
@@ -266,7 +267,7 @@ def test_extract_links_property_invariants():
     html = "<html><body>" + "".join(
         f'<a href="{h}">x</a>' for h in hrefs
     ) + "</body></html>"
-    out = extract_links(parse_html(html), "https://base.example.com/dir/page")
+    out = _links(parse_html(html), "https://base.example.com/dir/page")
     assert len(out) == len(set(out))
     assert len(out) <= len(hrefs)
     for u in out:

@@ -66,10 +66,15 @@ def test_edge_docs_cover_the_cases():
     assert any(len(t.split()) > 100 for t in texts)
 
 
-@pytest.fixture(scope="module")
-def edge_dir(tmp_path_factory):
-    d = tmp_path_factory.mktemp("edge_docs")
-    ids, texts, langs = zip(*EDGE_DOCS)
+#: the oracles that replay the extractor's whitespace collapse or walk
+#: only the doc_ids present, checked on the edge table plus one row of
+#: non-breaking spaces (Python's str.split() whitespace, not SQL's)
+SPARSE_AND_WHITESPACE = ["q_metrics_rollup", "q_redirect_resolve", "q_link_depth"]
+NBSP_DOC = (55, "\u00a0non\u00a0 breaking\u00a0\u00a0spaces here\u00a0", "en")
+
+
+def _write_docs(d, rows):
+    ids, texts, langs = zip(*rows)
     pq.write_table(
         pa.table(
             {
@@ -85,8 +90,19 @@ def edge_dir(tmp_path_factory):
     return str(d)
 
 
-@pytest.mark.parametrize("name", REROUTED)
-def test_rerouted_query_matches_oracle_on_edge_docs(spark, edge_dir, name):
+@pytest.fixture(scope="module")
+def edge_dir(tmp_path_factory):
+    return _write_docs(tmp_path_factory.mktemp("edge_docs"), EDGE_DOCS)
+
+
+@pytest.fixture(scope="module")
+def nbsp_dir(tmp_path_factory):
+    return _write_docs(
+        tmp_path_factory.mktemp("nbsp_docs"), EDGE_DOCS + [NBSP_DOC]
+    )
+
+
+def _assert_matches_oracle(spark, sf_dir, name):
     import readembedability_spark.textops  # noqa: F401 - registers entries
     from readembedability_spark.queries import (
         BASELINE_REGISTRY,
@@ -95,17 +111,27 @@ def test_rerouted_query_matches_oracle_on_edge_docs(spark, edge_dir, name):
     )
 
     qd = {**REGISTRY, **BASELINE_REGISTRY}[name]
-    sdf = qd.spark(spark, edge_dir)
+    sdf = qd.spark(spark, sf_dir)
     got = _canon(sdf.columns, [tuple(r) for r in sdf.collect()])
     release_caches(spark)
     con = duckdb.connect()
     con.execute(
         "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{edge_dir}/documents.parquet')"
+        f"read_parquet('{sf_dir}/documents.parquet')"
     )
     cur = con.execute(qd.sql)
     want = _canon([c[0] for c in cur.description], cur.fetchall())
     assert got == want
+
+
+@pytest.mark.parametrize("name", REROUTED)
+def test_rerouted_query_matches_oracle_on_edge_docs(spark, edge_dir, name):
+    _assert_matches_oracle(spark, edge_dir, name)
+
+
+@pytest.mark.parametrize("name", SPARSE_AND_WHITESPACE)
+def test_oracle_matches_on_sparse_ids_and_nbsp(spark, nbsp_dir, name):
+    _assert_matches_oracle(spark, nbsp_dir, name)
 
 
 def test_authority_blend_keep_probabilities_pinned(spark):
