@@ -34,277 +34,12 @@ def entry(spark: SparkSession) -> DataFrame:
     return flagship_extract(spark, "/root/testdata/sf0.001")
 
 
-#: The driver's correctness gate hash-checks the FIRST 50 registered
-#: queries (driver-side cap, observed in CORRECTNESS_r02); everything
-#: after slot 50 is judge-verified overflow. So registration order is
-#: deliberate (VERDICT r02 #1): extraction flagships, then the composed
-#: scale-path text/dedup/ANN operators and the curation/training ops.
-#: ROTATION (VERDICT r03 #4): each round, gate slots vacated by
-#: queries that already have driver-green CORRECTNESS rows from prior
-#: rounds are handed to entries that have only ever been
-#: judge-verified. Round 6 (VERDICT r05 next #1): after r05, lifetime
-#: driver coverage is 114/115 — the one gap is q_bpe_train64 (landed
-#: after the r5 gate ran), now in slot 6, which completes lifetime
-#: coverage and retires the rotation discipline. Also IN: the 5 NEW
-#: round-6 ops (frontier_schedule, pack_sequences_bpe, bpe_vocab,
-#: filter_funnel, ann_ivf_pq), and two REDEFINED queries keep their
-#: slots so the driver re-verifies the new definitions
-#: (shuffle_shards — the bounded head_md5+key_xor audit replacing the
-#: full-shard collect_list, VERDICT r05 wrong #2; ann_recall — now
-#: scoring four ANN methods including ivf_pq). Rotated OUT (driver-
-#: green r05, unchanged, still parity-tested every round):
-#: dedup_lines_global, badwords_filter, host_quota,
-#: decontaminate_bloom, bigram_pmi, inverted_index, profile_documents.
-#: Slots 5-10 are the NEW extraction archetypes q_extract_meta (the
-#: A-9..A-14/A-18 metadata chain), q_extract_jsonld (the A-15 JSON-LD
-#: chain), q_extract_embed (A-16/A-17 embed detection) and
-#: q_extract_keywords (the A-19/A-20 meta branches) and
-#: q_extract_keywords_text (the A-19 TEXT-MINING branch — the full
-#: stopword/bigram-adjacency/tie-break chain replayed in SQL) and
-#: q_extract_pdf (A-21 at declared scope: BT/ET + Tj/TJ over an
-#: uncompressed synthesized PDF), all hash-checked through the real
-#: extractor; q_sample_quality (new) also holds a slot. To stay at
-#: 50, dedup_lines_within, host_stats, hard_negatives,
-#: bigram_lm_bits, unigram_logloss and chunk_documents (driver-green
-#: lifetime, unchanged) also rotate out.
-#: Head-50 ordering, round 7: every query whose plan or rule CHANGED
-#: this round gates first — the new FlateDecode PDF archetype, the
-#: position-reordered uncompressed PDF archetype, the L-8
-#: nofollow-flagged link family, the _grouped_cumsum packing/stream
-#: family, the derived-probe dedup-recall gate, the new q_trustrank /
-#: q_model_calibration / q_dsir_weights operators, and q_pagerank
-#: (its oracle prelude was factored into _PR_GRAPH_SQL and the power
-#: loop gained the personalized-teleport branch) — followed by the
-#: established extraction tier. Rotated out to hold exactly 50
-#: (all unchanged + driver-green lifetime; the training math they
-#: anchor is still in-gate via q_model_pr_curve/q_model_calibration
-#: and q_pack_sequences_bpe, which re-run the same loops):
-#: q_mixture_temperature, q_model_score, q_mixture_weights,
-#: q_bpe_train, q_bpe_tokenize, q_model_train. Lifetime driver
-#: coverage is complete (127/127 as of r06); rotation now only
-#: prioritizes changed surfaces. Late round-7 additions
-#: (q_host_quality_prior, q_epoch_schedule, q_host_lang_entropy,
-#: q_ccnet_buckets, q_graph_reciprocity, q_novelty_curve,
-#: q_tokenizer_fertility, q_lsh_bucket_stats) take the slots of
-#: q_url_normalize, q_char_entropy, q_host_diversity,
-#: q_doc_repetition_lines_ml, q_approx_quantiles,
-#: q_contamination_report, q_split_holdout and q_paragraph_quality
-#: (unchanged, driver-green lifetime). The five final round-7
-#: operators (q_hits, q_dedup_containment, q_source_novelty,
-#: q_context_truncation, q_degree_distribution) take the slots of
-#: q_dedup_clusters_best, q_dedup_lines_within_ml,
-#: q_curation_pipeline_lsh, q_dedup_substring and
-#: q_dedup_substring_removed (all untouched this round and
-#: driver-green lifetime; the LSH/verify/CC machinery they compose
-#: stays in-gate via q_dedup_recall, q_lsh_bucket_stats and
-#: q_dedup_containment, which share its helpers). The three last
-#: additions (q_label_prop, q_length_drift, q_cluster_homogeneity)
-#: take the slots of q_bpe_train64, q_bpe_vocab and q_filter_funnel
-#: (untouched this round, driver-green lifetime; the BPE loop stays
-#: in-gate via q_pack_sequences_bpe and q_tokenizer_fertility, which
-#: train the same vocab). q_bigram_pmi re-enters the gate because its
-#: Spark plan changed (positional self-join → fused row-local bigram
-#: explode), taking q_ann_ivf_pq's slot (untouched, driver-green r06,
-#: still recall-gated inside q_ann_recall which stays in-gate).
-#: Round 8: q_minhash_calibration takes its promised slot (the r07
-#: post-freeze landing, q_extract_pdf r6→r7 precedent), completing
-#: 151/151 lifetime driver coverage; it replaces q_bigram_pmi
-#: (re-gated green r07 after the fused-plan change, untouched since).
-#: The packing/stream family (q_pack_sequences, q_pack_sequences_bpe,
-#: q_pack_efficiency, q_length_percentile, q_host_token_budget,
-#: q_vocab_coverage, q_shuffle_shards) stays in-gate: its cumsum
-#: backbone now derives range-partition count from the cluster
-#: (VERDICT r07 wrong #1), a physical-plan change the driver must
-#: re-hash. The 8 NEW round-8 operators gate first: q_extract_pdf_tm
-#: (Tm-translation layout, VERDICT r07 #4), q_bm25_rank + q_bm25_eval
-#: (retrieval ranking + its MRR gate, #5), q_pagerank_incremental
-#: (warm-start admission, #6), q_admission_policy (the composed
-#: host-prior x DSIR x CCNet keep decision, #7), q_split_by_host
-#: (leakage-free group split), q_recrawl_schedule (change-rate
-#: scheduling) and q_minhash_band_tuning (S-curve banding audit).
-#: q_extract_pdf_flate / q_extract_pdf_chain keep slots (their
-#: synthesis UDFs changed: literal escaping + errors=replace), as do
-#: q_pagerank / q_trustrank (power loop refactored into the shared
-#: _pagerank_loop) and q_host_quality_prior / q_dsir_weights /
-#: q_ccnet_buckets (factored into _from entry points the admission
-#: policy shares). Rotated out to hold 50 (all untouched this round +
-#: driver-green lifetime; their machinery remains in-gate via the
-#: named siblings): q_extract_links and q_extract_blocks /
-#: q_extract_table (the extract stage is gated by flagship + 3 PDF
-#: gates + archetypes + meta/jsonld/embed/keywords), q_pagerank_links
-#: (the shared loop is triple-gated via pagerank / trustrank /
-#: pagerank_incremental), q_crawl_frontier / q_anchor_text_index /
-#: q_frontier_schedule (frontier family; robots gate stays), and
-#: q_dedup_recall (the LSH candidate machinery is gated via
-#: band_tuning / calibration / bucket_stats / containment, and the
-#: recall criterion itself stays in-gate via q_ann_recall). The ninth
-#: round-8 operator q_crawl_plan (the crawl-half composition:
-#: authority x robots x recrawl cadence) takes q_model_pr_curve's
-#: slot (untouched, driver-green lifetime; the training loop it runs
-#: stays in-gate via q_model_calibration, which re-runs it). The two
-#: late round-8 operators q_admission_marginal (per-gate marginal
-#: attribution off the shared admission_flags_from substrate — the
-#: same refactor also reshapes q_admission_policy's plan+oracle, so
-#: that stays in-gate for a re-hash) and q_surt_index (CDX-style
-#: SURT-keyed capture index) take the slots of q_context_truncation
-#: and q_degree_distribution (untouched this round, driver-green r07;
-#: both are pure audits whose rollup machinery has no other consumer
-#: to break). q_stale_captures (digest-transition change rates feeding
-#: the Cho/Garcia-Molina interval + frontier-age staleness — the
-#: consumer composing q_surt_index's capture model with
-#: q_recrawl_schedule's estimator) and q_token_budget_mixture (budget
-#: x target-share allocation with the 4-epoch repetition cap, off the
-#: same _MIX_TARGETS dim as q_mixture_weights) take the slots of
-#: q_novelty_curve and q_graph_reciprocity (untouched, driver-green
-#: r07; novelty stays gated via q_source_novelty, the graph loops via
-#: pagerank/trustrank/hits/label_prop/pagerank_incremental). The two
-#: multimodal-plumbing additions q_image_resize (aspect-preserving
-#: 64-box thumbnail fit inside the Arrow batch) and
-#: q_video_frame_sample (stride sampling with in-batch row fan-out)
-#: take the slots of q_lsh_bucket_stats and q_host_lang_entropy
-#: (untouched, driver-green r07; the LSH audit family stays gated via
-#: band_tuning/calibration/containment, host rollups via
-#: host_quality_prior and host_token_budget). The four final round-8
-#: operators — q_extract_feeds (F-1..F-5 feed autodiscovery through
-#: the REAL extractor; also re-hashes the one-pass PageMeta link
-#: branch the oEmbed discovery rule now shares), q_redirect_resolve
-#: (pointer-jumping 3xx chain collapse with a planted 2-cycle),
-#: q_host_boilerplate (host-conditional document-frequency template
-#: detection) and q_mime_sniff (magic-byte vs claimed Content-Type
-#: confusion matrix over true binary payloads) — take the slots of
-#: q_cluster_homogeneity, q_hits, q_epoch_schedule and
-#: q_tokenizer_fertility (all untouched this round + driver-green
-#: r07: the candidates→verify→CC path stays gated via
-#: q_dedup_containment / q_minhash_calibration / q_minhash_band_tuning,
-#: the graph power loops via q_pagerank / q_trustrank /
-#: q_pagerank_incremental / q_label_prop, the mixture math via
-#: q_token_budget_mixture, and the BPE vocab loop via
-#: q_pack_sequences_bpe). q_extract_charset (the A-2 driver gate:
-#: latin-1/meta, BOM-beats-lying-meta precedence, UTF-16 BOM sniff +
-#: strip — true binary payloads through the real extractor; the
-#: decode path CHANGED this round, so it must gate) takes the slot of
-#: q_length_drift (untouched, driver-green r07; a pure audit rollup
-#: with no other consumer, the q_context_truncation precedent).
-#: q_graph_triangles (degree-oriented triangle counting + exact-ppm
-#: clustering coefficient — the static-graph join path none of the
-#: power loops exercise) takes the slot of q_label_prop (untouched,
-#: driver-green r07; the iterative-graph machinery stays gated via
-#: q_pagerank / q_trustrank / q_pagerank_incremental, which share its
-#: per-round checkpoint discipline). q_canonical_clusters (A-12's
-#: table-side consumer: rel=canonical alias families collapsed in one
-#: keyed aggregate with a conditional-MIN keeper election and planted
-#: missing-canonical fallbacks) takes the slot of q_dedup_containment
-#: (untouched, oracle-green since r07; its shared `_pair_intersections`
-#: candidate core stays double-gated via q_minhash_calibration and
-#: q_minhash_band_tuning). q_postings_compression (LEB128 delta-gap
-#: index-size audit per df power-of-two class — the shared
-#: `_varint_bytes_sql` ladder is new surface) takes the slot of
-#: q_frontier_robots (untouched, driver-green r07; its robots parser
-#: and host-keyed prefix match run in-gate verbatim inside
-#: q_crawl_plan, whose oracle nests the robots oracle). The two new
-#: SOURCE-FORMAT operators — q_warc_records (WARC record splitter:
-#: boundary split + Content-Length framing validation +
-#: order-independent content digest over synthesized archive blobs)
-#: and q_sitemap_parse (sitemap urlset parse: loc/lastmod/priority
-#: extraction + per-host freshness/duplicate audit) — take the slots
-#: of q_sample_quality and q_source_novelty (both untouched this
-#: round + driver-green r07; both are pure audit rollups in the
-#: context_truncation/degree_distribution precedent — sampling stays
-#: gated via q_split_by_host, novelty via the shingle machinery in
-#: q_minhash_calibration / q_minhash_band_tuning). The five remaining
-#: session-5 URL-space audits (q_url_templates, q_pagination_chains,
-#: q_registrable_domain, q_crawl_delta, q_syndication) land
-#: post-freeze with NO safe slot left to rotate (every other head-50
-#: entry is new-this-round or changed-surface that must re-hash);
-#: they are parity-tested every round by tests/test_oracle_parity.py
-#: and are PROMISED gate slots in round 9 — the q_minhash_calibration
-#: r7→r8 precedent. The same promise covers the final session-5
-#: additions q_embedding_drift, q_anchor_spam, q_hreflang_clusters,
-#: q_cdc_chunks, q_index_prune, q_robots_crawl_debt,
-#: q_span_corruption and q_index_merge — and the session-6 batch
-#: q_feed_parse (RSS/Atom wire-format parse), q_link_depth
-#: (multi-successor BFS min-distance), q_audio_chunks (3rd-modality
-#: plumbing), q_http_cache (RFC 9111 revalidation classes) and
-#: q_unicode_normalize (NFC audit, pandas-vs-utf8proc cross-check),
-#: q_lang_mismatch (declared-vs-detected confusion) and
-#: q_capture_diff (inter-capture token-Jaccard change magnitude),
-#: q_robots_sitemaps (Sitemap-directive discovery incl. cross-host),
-#: q_embedding_quantize (SQ8 audit on the integer lattice) and
-#: q_compression_ratio (zlib quality filter — rows-only, the one
-#: no-SQL-oracle text op, pinned by a python-zlib reference test).
-#: The 11th streaming pipeline streaming_capture_diff (the T-158
-#: change-magnitude maintainer) is test-verified, outside oracle
-#: scope like its ten siblings. q_extract_clientmeta (the M-1/M-2
-#: declared-lang + meta-refresh chain — NEW extractor surface, so it
-#: would gate first were the head not frozen) joins the same r9 slot
-#: promise, as does q_extract_robotsmeta (M-3/M-4: page-level robots
-#: directives + the rel=amphtml alternate). The session-7 trio —
-#: q_sitemap_coverage (declare-vs-fetch reconciliation),
-#: q_ip_colocation (/24 shared-hosting clusters) and
-#: q_freshness_weights (exact power-of-two temporal decay) — joins
-#: the same r9 promise, as do q_zipf_fit (integer-lattice rank-
-#: frequency fit) and q_entity_density (capitalization-proxy NER
-#: with the sentence-initial exclusion). The 12th streaming pipeline
-#: streaming_admission (T-171, the stateful host token-budget
-#: maintainer) is test-verified, outside oracle scope like its
-#: eleven siblings. The session-8 quality/source batch —
-#: q_readability (T-172, FORCAST reading grade on the quantized
-#: integer lattice), q_license_detect (T-173, precedence-ordered
-#: license classification + redistributable verdict) and
-#: q_code_detect (T-174, integer-signal code/mixed/prose
-#: classification) and q_tag_histogram (T-175, open/close/unclosed
-#: markup census) — joins the same r9 slot promise. The session-9
-#: web-ops batch — q_wet_convert (T-176 WARC→WET conversion),
-#: q_soft404_detect, q_heading_outline, q_politeness_audit
-#: (T-177..179), q_tracker_census, q_url_params_census,
-#: q_title_templates (T-180..182), q_gibberish_detect,
-#: q_citation_density, q_bandwidth_apportion (T-183..185),
-#: q_https_migration, q_image_alt_coverage, q_ndcg_eval
-#: (T-187..189), q_robots_precedence, q_crawl_trap_detect,
-#: q_warc_revisit (T-190..192) and q_content_length_audit,
-#: q_link_rot, q_cms_fingerprint (T-193..195) — is parity-tested
-#: every round by tests/test_oracle_parity.py plus per-op boundary
-#: probes in tests/test_round8.py and joins the same r9 promise;
-#: the 13th streaming pipeline streaming_politeness (T-186) and the
-#: compliance job (T-196) are test-verified outside oracle scope.
-#: The session-10 audit batch — q_countmin_sketch (T-197 fixed-memory
-#: heavy hitters), q_paywall_detect (T-198 access-rights gate),
-#: q_embedding_norm_audit (T-199 vector-health lattice) — and the
-#: session-11 census pair q_social_cards (T-200 share-preview bitmap)
-#: and q_anchor_rel_census (T-201 multi-valued rel qualifiers) join
-#: the same r9 promise under the same parity-test coverage, as does
-#: the security/markup audit batch — q_mixed_content (T-202),
-#: q_security_headers (T-203), q_cookie_attributes (T-204) and
-#: q_sri_coverage (T-205) — and the capture-quality batch:
-#: q_mojibake_detect (T-206), q_truncation_detect (T-207),
-#: q_date_sanity (T-208) and q_parked_domain (T-209), plus the
-#: structured-data batch: q_jsonld_types (T-210), q_resource_hints
-#: (T-211) and q_amp_pairing (T-212); the capture-quality job
-#: (T-213) is test-verified outside oracle scope like its siblings.
-#: The HTTP-economics batch — q_conditional_get (T-214),
-#: q_vary_audit (T-215) and q_retry_after (T-216, plan-pinned single
-#: host exchange) — joins the same r9 promise, as do q_robots_diff
-#: (T-217, before/after through the shared RFC 9309 core) and
-#: q_bitext_mine (T-218, integer length-ratio pairing). The 14th
-#: streaming pipeline streaming_retry_after (T-219, the stateful
-#: back-off-window enforcer) is test-verified outside oracle scope
-#: like its thirteen siblings. q_dom_nesting (T-220, peak running
-#: balance over the posexploded tag stream) joins the r9 promise,
-#: as do q_split_leakage (T-221, doc-hash vs host-hash contrast),
-#: q_instruction_detect (T-222, SFT-mining format census),
-#: q_script_mix (T-223, homoglyph adjacency), q_status_flap
-#: (T-224, transition-counting retry-policy selector),
-#: q_render_need (T-225, SPA-shell fork), q_hidden_text (T-226,
-#: keyword-stuffing gate), q_cdn_detect (T-227, edge-provider
-#: census with the chained marginal), q_typosquat (T-228,
-#: Levenshtein vs the broadcast brand dim) and
-#: q_subdomain_explosion (T-229, wildcard-farm fan-out classes),
-#: q_robots_wildcard (T-230, RFC 9309 §2.2.3 '*'/'$' patterns via
-#: the unit-pinned robots_pattern_to_regex) and q_etag_stability
-#: (T-231, validator-churn ledger); the frontier-hygiene job
-#: (T-232) is test-verified outside oracle scope like its job-tier
-#: siblings. q_csp_audit (T-233, directive-level CSP classes)
-#: closes the round's security family under the same r9 promise.
+#: The driver's correctness gate hash-checks only the FIRST 50 entries
+#: of queries() (a driver-side cap, seen in CORRECTNESS_r02); every
+#: later entry is parity-checked by tests/test_oracle_parity.py alone.
+#: _GATE_PRIORITY puts the extraction queries and the queries whose
+#: definitions changed most recently in those 50 slots, so the driver
+#: hash-checks them; the rest follow in registration order.
 _GATE_PRIORITY = [
     "q_extract_flagship",
     "q_extract_pdf_tm",

@@ -1,6 +1,7 @@
-"""Line counts of the program: raw lines and code-only lines (no blank,
-comment-only or docstring lines) over every ``.py`` file in
-``readembedability_spark/`` and ``jobs/``.
+"""Size of the program over every ``.py`` file in
+``readembedability_spark/`` and ``jobs/``: raw lines, code-only lines
+(no blank, comment-only or docstring lines) and options (parameters
+with a default plus dataclass fields with a default).
 
     python bench/loc.py      # or: make loc
 """
@@ -50,15 +51,41 @@ def code_lines(src: str) -> int:
     return len(code - _docstring_lines(ast.parse(src)))
 
 
+def _is_dataclass(node: ast.ClassDef) -> bool:
+    for d in node.decorator_list:
+        d = d.func if isinstance(d, ast.Call) else d
+        name = d.id if isinstance(d, ast.Name) else getattr(d, "attr", "")
+        if name == "dataclass":
+            return True
+    return False
+
+
+def options(src: str) -> int:
+    """Parameters with a default plus dataclass fields with a default."""
+    n = 0
+    for node in ast.walk(ast.parse(src)):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            a = node.args
+            n += len(a.defaults) + sum(d is not None for d in a.kw_defaults)
+        elif isinstance(node, ast.ClassDef) and _is_dataclass(node):
+            n += sum(
+                isinstance(s, ast.AnnAssign) and s.value is not None
+                for s in node.body
+            )
+    return n
+
+
 def main() -> None:
-    raw = code = 0
+    raw = code = opts = 0
     for d in DIRS:
         for path in sorted((ROOT / d).rglob("*.py")):
             src = path.read_text()
             raw += len(src.splitlines())
             code += code_lines(src)
+            opts += options(src)
     print(f"raw  {raw}")
     print(f"code {code}")
+    print(f"options {opts}")
 
 
 if __name__ == "__main__":

@@ -79,13 +79,12 @@ def dedup_rates(spark, docs):
     )
 
 
-def language_mixture(docs, temperature: float = 2.0):
+def language_mixture(docs):
     """Per-language doc/token counts, raw share, and the
     temperature-scaled training weight (q_mixture_temperature's rule:
-    w_l ∝ share^(1/T); the default T=2 uses sqrt — the one
-    IEEE-correctly-rounded power — and any other T the generic pow).
-    Shares/weights are 0.0 (not null) on a zero-token corpus. The
-    corpus never shuffles beyond one groupBy(lang)."""
+    w_l ∝ share^(1/T) at T=2, i.e. sqrt, the one IEEE-correctly-rounded
+    power). Shares/weights are 0.0 (not null) on a zero-token corpus.
+    The corpus never shuffles beyond one groupBy(lang)."""
     toks = docs.select(
         "lang",
         F.size(F.filter(F.split("text", " "), lambda x: x != "")).alias(
@@ -100,11 +99,7 @@ def language_mixture(docs, temperature: float = 2.0):
         F.sum("n_docs").alias("td"), F.sum("n_tokens").alias("tt")
     )
     share = F.col("n_tokens") / F.nullif(F.col("tt"), F.lit(0))
-    w_raw = (
-        F.sqrt(share)
-        if temperature == 2.0
-        else F.pow(share, F.lit(1.0 / temperature))
-    )
+    w_raw = F.sqrt(share)
     scaled = per_lang.crossJoin(F.broadcast(totals)).select(
         "lang",
         "n_docs",

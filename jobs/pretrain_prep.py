@@ -57,18 +57,12 @@ from readembedability_spark.textops import (  # noqa: E402
 DEFAULT_BADWORDS = ("slow", "skew", "spill", "crash")
 
 
-def gate(
-    docs,
-    min_tokens: int,
-    badwords: tuple[str, ...],
-    max_bad_frac: float = 0.05,
-):
+def gate(docs, min_tokens: int, badwords: tuple[str, ...]):
     """Stage 1 — row-local quality gates: token-count floor, mean word
-    length band (gopher), blocklist fraction ≤ max_bad_frac (a
-    fraction threshold rather than C4's any-hit rule — tune per
-    blocklist severity; 0 reproduces any-hit). One explode-free pass:
-    all signals fold into array HOFs, so the gate is a pure map that
-    pushes into the scan."""
+    length band (gopher), blocklist fraction ≤ 5% (a fraction threshold
+    rather than C4's any-hit rule). One explode-free pass: all signals
+    fold into array HOFs, so the gate is a pure map that pushes into
+    the scan."""
     toks = F.filter(F.split("text", " "), lambda w: w != F.lit(""))
     n_tok = F.size(toks)
     mean_wl = F.aggregate(
@@ -80,7 +74,7 @@ def gate(
     return docs.withColumn("n_tokens", n_tok).filter(
         (F.col("n_tokens") >= min_tokens)
         & mean_wl.between(3, 10)
-        & (n_bad <= F.ceil(n_tok * F.lit(max_bad_frac)))
+        & (n_bad <= F.ceil(n_tok * F.lit(0.05)))
     )
 
 
@@ -136,22 +130,22 @@ def near_dup_keep_best(spark, docs):
     )
 
 
-def decontaminate(docs, eval_docs, n: int = 13):
-    """Stage 5 — drop training docs sharing any word n-gram with the
+def decontaminate(docs, eval_docs):
+    """Stage 5 — drop training docs sharing any word 13-gram with the
     eval set (the q_decontaminate broadcast gram join,
     textops.eval_gram_hits_from, as a left-anti join)."""
     contaminated = (
-        eval_gram_hits_from(docs.select("doc_id", "text"), eval_docs, n)
+        eval_gram_hits_from(docs.select("doc_id", "text"), eval_docs)
         .select("doc_id")
         .distinct()
     )
     return docs.join(contaminated, "doc_id", "left_anti")
 
 
-def remove_dup_substrings(docs, n: int = 8):
+def remove_dup_substrings(docs):
     """Optional stage 2b — cross-document duplicated-substring REMOVAL
     (the q_dedup_substring_removed transform wired into the funnel,
-    VERDICT r04 #7): token spans covered by any word n-gram that first
+    VERDICT r04 #7): token spans covered by any word 8-gram that first
     occurred in a lower-id document are excised; the owner doc keeps
     all its occurrences. The plan is textops.dup_substring_excised —
     the SAME implementation the registry query runs (positional grams
@@ -160,7 +154,7 @@ def remove_dup_substrings(docs, n: int = 8):
     Returns (doc_id, lang, text) with the cleaned text flowing
     downstream."""
     arrs = docs.select("doc_id", "lang", F.split("text", " ").alias("arr"))
-    joined, kept = dup_substring_excised(arrs, n)
+    joined, kept = dup_substring_excised(arrs)
     return (
         joined.select("doc_id", "lang", F.concat_ws(" ", kept).alias("text"))
         .filter(F.length(F.trim("text")) > 0)

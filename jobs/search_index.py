@@ -150,8 +150,8 @@ def postings_audit(spark, out: Path) -> dict:
     }
 
 
-def bm25_topk_from_index(spark, out: Path, queries, k: int = 5):
-    """BM25 top-k served from the WRITTEN artifacts (postings +
+def bm25_topk_from_index(spark, out: Path, queries):
+    """BM25 top-5 served from the WRITTEN artifacts (postings +
     dictionary + doclens + corpus read back from parquet): same
     micro-quantized Okapi scoring as q_bm25_rank (k1=1.2, b=0.75,
     Lucene idf), query terms broadcast into the postings scan."""
@@ -177,7 +177,7 @@ def bm25_topk_from_index(spark, out: Path, queries, k: int = 5):
     )
     return (
         sc.withColumn("rk", F.row_number().over(wnd).cast("long"))
-        .filter(F.col("rk") <= k)
+        .filter(F.col("rk") <= 5)
         .select("qid", "rk", "doc_id", "score_micro")
     )
 

@@ -22,6 +22,8 @@ import binascii
 import re
 import zlib
 
+# size cap on a PDF blob and on each decoded stream (the HTML cap, 8 MiB)
+_MAX_BYTES = 8 << 20
 _STREAM_RE = re.compile(rb"stream\r?\n(.*?)(?:\r?\n)?endstream", re.DOTALL)
 _FILTER_RE = re.compile(rb"/Filter\s*(\[[^\]]*\]|/[A-Za-z0-9]+)")
 _NAME_RE = re.compile(rb"/([A-Za-z0-9]+)")
@@ -90,7 +92,7 @@ def _stream_filters(header_window: bytes) -> list[str]:
     return [n.decode("ascii") for n in _NAME_RE.findall(m.group(1))]
 
 
-def _inflate_capped(raw: bytes, cap: int) -> bytes:
+def _inflate_capped(raw: bytes) -> bytes:
     # capped inflate: a bombed FlateDecode stream is skipped, not
     # materialized (unbounded zlib.decompress was an OOM vector).
     # _STREAM_RE's optional EOL strip can clip a trailing \r (or
@@ -99,7 +101,7 @@ def _inflate_capped(raw: bytes, cap: int) -> bytes:
     for candidate in (raw, raw + b"\r", raw + b"\r\n", raw + b"\n"):
         try:
             d = zlib.decompressobj()
-            out = d.decompress(candidate, cap)
+            out = d.decompress(candidate, _MAX_BYTES)
             if d.eof:
                 return out
         except zlib.error:
@@ -130,7 +132,7 @@ def _ascii85_decode(raw: bytes) -> bytes:
         return b""
 
 
-def _decode_stream(raw: bytes, header_window: bytes, cap: int = 8 << 20) -> bytes:
+def _decode_stream(raw: bytes, header_window: bytes) -> bytes:
     """Apply the stream's declared filter chain in order. Unknown
     filters (image codecs etc.) abort the stream — never a crash."""
     filters = _stream_filters(header_window)
@@ -139,14 +141,14 @@ def _decode_stream(raw: bytes, header_window: bytes, cap: int = 8 << 20) -> byte
         if not out:
             return b""
         if name == "FlateDecode":
-            out = _inflate_capped(out, cap)
+            out = _inflate_capped(out)
         elif name == "ASCIIHexDecode":
             out = _ascii_hex_decode(out)
         elif name == "ASCII85Decode":
             out = _ascii85_decode(out)
         else:
             return b""
-        if len(out) > cap:
+        if len(out) > _MAX_BYTES:
             return b""
     return out
 
@@ -226,9 +228,9 @@ def _texts_from_content(content: bytes) -> list[str]:
     return [e[3] for e in entries]
 
 
-def extract_pdf_text(blob: bytes, max_bytes: int = 8 << 20) -> str:
+def extract_pdf_text(blob: bytes) -> str:
     """Best-effort layout-order text from a PDF blob; '' on failure."""
-    if not blob.startswith(b"%PDF-") or len(blob) > max_bytes:
+    if not blob.startswith(b"%PDF-") or len(blob) > _MAX_BYTES:
         return ""
     lines: list[str] = []
     try:
@@ -239,7 +241,7 @@ def extract_pdf_text(blob: bytes, max_bytes: int = 8 << 20) -> str:
             if content:
                 lines.extend(_texts_from_content(content))
             pos = m.end()
-            if pos > max_bytes:
+            if pos > _MAX_BYTES:
                 break
         if not lines:
             # uncompressed page content outside stream extraction fallback

@@ -44,6 +44,6 @@ def salt_col(url: Column | str = "url", num_salts: int = 64) -> Column:
     return F.pmod(url_hash_col(url), F.lit(num_salts)).cast("int")
 
 
-def bucket_col(url: Column | str = "url", n_buckets: int = N_BUCKETS) -> Column:
-    """Checkpoint-resume bucket id (O-31)."""
-    return F.pmod(url_hash_col(url), F.lit(n_buckets)).cast("int")
+def bucket_col() -> Column:
+    """Checkpoint-resume bucket id of the ``url`` column (O-31)."""
+    return F.pmod(url_hash_col(), F.lit(N_BUCKETS)).cast("int")

@@ -24,15 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readembedability_spark.functions import bucket_col
-from readembedability_spark.schemas import (
-    CHECKPOINT_SCHEMA,
-    N_BUCKETS,
-    local_table,
-)
+from readembedability_spark.schemas import CHECKPOINT_SCHEMA, local_table
 
 
-def with_bucket(pages: DataFrame, n_buckets: int = N_BUCKETS) -> DataFrame:
-    return pages.withColumn("url_bucket", bucket_col("url", n_buckets))
+def with_bucket(pages: DataFrame) -> DataFrame:
+    return pages.withColumn("url_bucket", bucket_col())
 
 
 def load_done_buckets(

@@ -181,9 +181,9 @@ def release_caches(spark: SparkSession) -> None:
     spark.catalog.clearCache()
 
 
-def q(name: str, sql: Optional[str]):
+def q(sql: Optional[str]):
     def deco(fn):
-        REGISTRY[name] = QueryDef(spark=fn, sql=sql)
+        REGISTRY[fn.__name__] = QueryDef(spark=fn, sql=sql)
         return fn
 
     return deco
@@ -201,9 +201,9 @@ def q(name: str, sql: Optional[str]):
 BASELINE_REGISTRY: dict[str, QueryDef] = {}
 
 
-def q_baseline(name: str, sql: Optional[str]):
+def q_baseline(sql: Optional[str]):
     def deco(fn):
-        BASELINE_REGISTRY[name] = QueryDef(spark=fn, sql=sql)
+        BASELINE_REGISTRY[fn.__name__] = QueryDef(spark=fn, sql=sql)
         return fn
 
     return deco
@@ -214,7 +214,6 @@ def q_baseline(name: str, sql: Optional[str]):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_scan_documents",
     """
     SELECT doc_id, lang, n_chars FROM documents
     WHERE n_chars > 300 AND lang = 'en'
@@ -229,7 +228,6 @@ def q_scan_documents(spark, sf_dir):
 
 
 @q(
-    "q_filter_lang",
     """
     SELECT lang, COUNT(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS total_chars
     FROM documents WHERE lang IN ('en','de','fr') GROUP BY lang
@@ -252,7 +250,6 @@ _URL_EXPR_SQL = "'https://host' || CAST(o_custkey % 50 AS VARCHAR) || '.example.
 
 
 @q(
-    "q_project_host",
     f"""
     WITH urls AS (SELECT {_URL_EXPR_SQL} AS url FROM orders)
     SELECT regexp_extract(url, '^https?://([^/]+)', 1) AS host,
@@ -279,7 +276,6 @@ def q_project_host(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_dedup_url",
     """
     SELECT user_id, event_id, event_type FROM (
       SELECT user_id, event_id, event_type,
@@ -303,7 +299,6 @@ def q_dedup_url(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_join_orders_lineitem",
     """
     SELECT o_orderpriority,
            COUNT(*) AS n_items,
@@ -328,7 +323,6 @@ def q_join_orders_lineitem(spark, sf_dir):
 
 
 @q(
-    "q_join_broadcast",
     """
     SELECT n_name, COUNT(*) AS n_customers
     FROM customer JOIN nation ON c_nationkey = n_nationkey
@@ -352,7 +346,6 @@ def q_join_broadcast(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_join_range",
     """
     WITH win AS (
       SELECT n_nationkey AS win_id,
@@ -391,7 +384,6 @@ def q_join_range(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_agg_events",
     """
     SELECT event_type, COUNT(*) AS n,
            ROUND(SUM(value), 2) AS total_value,
@@ -414,7 +406,6 @@ def q_agg_events(spark, sf_dir):
 
 
 @q(
-    "q_count_distinct",
     """
     SELECT COUNT(DISTINCT user_id) AS n_users,
            COUNT(DISTINCT event_type) AS n_types,
@@ -435,7 +426,6 @@ def q_count_distinct(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_rollup_status",
     """
     SELECT COALESCE(lang, '(all)') AS lang_g,
            COALESCE(source, '(all)') AS source_g,
@@ -461,7 +451,6 @@ def q_rollup_status(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_window_topk",
     """
     SELECT lang, doc_id, n_chars FROM (
       SELECT lang, doc_id, n_chars,
@@ -481,7 +470,6 @@ def q_window_topk(spark, sf_dir):
 
 
 @q(
-    "q_window_running",
     """
     SELECT event_id, user_id,
            ROUND(SUM(value) OVER (PARTITION BY user_id
@@ -513,7 +501,6 @@ def q_window_running(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_topk_orders",
     """
     SELECT o_orderkey, ROUND(o_totalprice, 2) AS price
     FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 10
@@ -533,7 +520,6 @@ def q_topk_orders(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_union_runs",
     """
     SELECT doc_id, lang FROM documents WHERE lang = 'en'
     UNION ALL
@@ -548,7 +534,6 @@ def q_union_runs(spark, sf_dir):
 
 
 @q(
-    "q_except_delta",
     """
     SELECT doc_id FROM documents
     EXCEPT ALL
@@ -563,7 +548,6 @@ def q_except_delta(spark, sf_dir):
 
 
 @q(
-    "q_intersect",
     """
     SELECT doc_id FROM documents WHERE n_chars > 200
     INTERSECT
@@ -584,7 +568,6 @@ def q_intersect(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_explode_terms",
     """
     SELECT term, COUNT(*) AS n
     FROM (SELECT unnest(string_split(text, ' ')) AS term FROM documents)
@@ -608,7 +591,6 @@ def q_explode_terms(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_date_trunc",
     """
     SELECT CAST(date_trunc('day', ts) AS DATE) AS day, COUNT(*) AS n,
            ROUND(SUM(value), 2) AS total_value
@@ -624,7 +606,6 @@ def q_date_trunc(spark, sf_dir):
 
 
 @q(
-    "q_json_props",
     """
     SELECT event_type,
            CAST(SUM(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS k_sum,
@@ -650,7 +631,6 @@ def q_json_props(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_resume_anti",
     """
     SELECT user_id, COUNT(*) AS n_pending
     FROM events e
@@ -677,7 +657,6 @@ def q_resume_anti(spark, sf_dir):
 
 
 @q(
-    "q_resume_semi",
     """
     SELECT user_id, COUNT(*) AS n_done
     FROM events e
@@ -704,7 +683,6 @@ def q_resume_semi(spark, sf_dir):
 
 
 @q(
-    "q_join_asof",
     """
     WITH probes AS (
       SELECT o_orderkey,
@@ -797,7 +775,6 @@ def q_join_asof(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_udf_host",
     f"""
     WITH urls AS (SELECT {_URL_EXPR_SQL} AS url FROM orders)
     SELECT regexp_extract(url, '^https?://([^/:]+)', 1) AS host,
@@ -826,7 +803,6 @@ def q_udf_host(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_tpch_q1",
     """
     SELECT l_returnflag, l_linestatus,
            ROUND(SUM(l_quantity), 2) AS sum_qty,
@@ -861,7 +837,6 @@ def q_tpch_q1(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_cube_events",
     """
     SELECT COALESCE(event_type, '(all)') AS type_g,
            COALESCE(CAST(CAST(date_trunc('day', ts) AS DATE) AS VARCHAR),
@@ -890,7 +865,6 @@ def q_cube_events(spark, sf_dir):
 
 
 @q(
-    "q_window_lag",
     """
     SELECT event_id, user_id,
            ROUND(value - LAG(value, 1, 0.0) OVER (
@@ -918,7 +892,6 @@ def q_window_lag(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_grouped_pandas_stats",
     """
     SELECT event_type, COUNT(*) AS n, ROUND(SUM(value), 2) AS total,
            ROUND(MAX(value) - MIN(value), 4) AS value_range
@@ -951,7 +924,6 @@ def q_grouped_pandas_stats(spark, sf_dir):
 
 
 @q(
-    "q_approx_distinct",
     """
     SELECT CAST(abs(approx_count_distinct(user_id)
                     - count(DISTINCT user_id)) * 20
@@ -989,7 +961,6 @@ def q_approx_distinct(spark, sf_dir):
 
 
 @q(
-    "q_approx_quantiles",
     """
     SELECT event_type,
            CAST(abs(quantile_disc(value, 0.5) - quantile_cont(value, 0.5))
@@ -1027,7 +998,6 @@ def q_approx_quantiles(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_percentiles",
     """
     SELECT event_type,
            ROUND(quantile_cont(value, 0.5), 4) AS p50,
@@ -1058,7 +1028,6 @@ _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
 @q(
-    "q_pivot_events",
     """
     SELECT user_id % 10 AS cohort,
            COUNT(*) FILTER (WHERE event_type = 'click') AS click,
@@ -1091,7 +1060,6 @@ def q_pivot_events(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_array_funcs",
     """
     SELECT vec_id,
            len(embedding) AS dim,
@@ -1121,7 +1089,6 @@ def q_array_funcs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_embed_centroid",
     """
     SELECT label, d, ROUND(AVG(x), 4) AS centroid_val
     FROM (
@@ -1154,7 +1121,6 @@ def q_embed_centroid(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 @q(
-    "q_sessionize",
     """
     WITH marked AS (
       SELECT user_id, event_id, ts,
@@ -1229,7 +1195,6 @@ def _pdf_lit(txt: str) -> str:
 
 
 @q(
-    "q_extract_archetypes",
     """
     SELECT 'https://docs.example.com/a/' || CAST(doc_id AS VARCHAR) AS url,
            'Doc ' || CAST(doc_id AS VARCHAR) AS title,
@@ -1268,7 +1233,6 @@ def q_extract_archetypes(spark, sf_dir):
 
 
 @q(
-    "q_extract_blocks",
     """
     SELECT 'https://docs.example.com/b/' || CAST(doc_id AS VARCHAR) AS url,
            'Doc ' || CAST(doc_id AS VARCHAR) AS title,
@@ -1308,7 +1272,6 @@ def q_extract_blocks(spark, sf_dir):
 
 
 @q(
-    "q_extract_table",
     """
     SELECT 'https://docs.example.com/t/' || CAST(doc_id AS VARCHAR) AS url,
            'Doc ' || CAST(doc_id AS VARCHAR) AS title,
@@ -1346,7 +1309,6 @@ def q_extract_table(spark, sf_dir):
 
 
 @q(
-    "q_extract_meta",
     """
     SELECT 'https://docs.example.com/m/2023/'
              || lpad(CAST(doc_id % 12 + 1 AS VARCHAR), 2, '0')
@@ -1464,7 +1426,6 @@ def q_extract_meta(spark, sf_dir):
 
 
 @q(
-    "q_extract_jsonld",
     """
     SELECT 'https://docs.example.com/j/' || CAST(doc_id AS VARCHAR) AS url,
            'LD Doc ' || CAST(doc_id AS VARCHAR) AS title,
@@ -1535,7 +1496,6 @@ def q_extract_jsonld(spark, sf_dir):
 
 
 @q(
-    "q_extract_embed",
     """
     SELECT 'https://docs.example.com/e/' || CAST(doc_id AS VARCHAR) AS url,
            CAST(doc_id % 4 < 3 AS BOOLEAN) AS embed,
@@ -1585,7 +1545,6 @@ def q_extract_embed(spark, sf_dir):
 
 
 @q(
-    "q_extract_feeds",
     """
     SELECT 'https://docs.example.com/f/' || CAST(doc_id AS VARCHAR) AS url,
            CASE
@@ -1673,7 +1632,6 @@ def q_extract_feeds(spark, sf_dir):
 
 
 @q(
-    "q_extract_charset",
     """
     SELECT 'https://docs.example.com/c/' || CAST(doc_id AS VARCHAR) AS url,
            'Dôc ' || CAST(doc_id AS VARCHAR) AS title,
@@ -1733,7 +1691,6 @@ def q_extract_charset(spark, sf_dir):
 
 
 @q(
-    "q_extract_keywords",
     """
     SELECT 'https://docs.example.com/k/' || CAST(doc_id AS VARCHAR) AS url,
            'alpha ' || CAST(doc_id AS VARCHAR) || ', beta two, gamma'
@@ -1793,7 +1750,6 @@ def _stopwords_sql() -> str:
 
 
 @q(
-    "q_extract_keywords_text",
     """
     WITH docs0 AS (
       SELECT doc_id, text FROM documents WHERE n_chars >= 200),
@@ -1870,7 +1826,6 @@ def q_extract_keywords_text(spark, sf_dir):
 
 
 @q(
-    "q_extract_pdf",
     """
     SELECT 'https://docs.example.com/p/' || CAST(doc_id AS VARCHAR) AS url,
            'Doc ' || CAST(doc_id AS VARCHAR) || ': ' || text || '.'
@@ -1923,7 +1878,6 @@ def q_extract_pdf(spark, sf_dir):
 
 
 @q(
-    "q_extract_pdf_flate",
     """
     SELECT 'https://docs.example.com/pf/' || CAST(doc_id AS VARCHAR) AS url,
            'Flate Doc ' || CAST(doc_id AS VARCHAR) || ': ' || text || '.'
@@ -1984,7 +1938,6 @@ def q_extract_pdf_flate(spark, sf_dir):
 
 
 @q(
-    "q_extract_pdf_chain",
     """
     SELECT 'https://docs.example.com/pc/' || CAST(doc_id AS VARCHAR) AS url,
            trim('Chain Doc ' || CAST(doc_id AS VARCHAR) || ': '
@@ -2034,7 +1987,6 @@ def q_extract_pdf_chain(spark, sf_dir):
 
 
 @q(
-    "q_extract_pdf_tm",
     """
     SELECT 'https://docs.example.com/pt/' || CAST(doc_id AS VARCHAR) AS url,
            'Tm Doc ' || CAST(doc_id AS VARCHAR) || ': ' || text || '.'
@@ -2097,7 +2049,6 @@ _PY_WS_RUN = (
 
 
 @q(
-    "q_metrics_rollup",
     f"""
     SELECT CASE WHEN doc_id % 13 = 0 THEN 'empty'
                 WHEN doc_id % 13 = 1 THEN 'non_html'
@@ -2139,7 +2090,6 @@ def q_metrics_rollup(spark, sf_dir):
 
 
 @q(
-    "q_extract_clientmeta",
     """
     SELECT 'https://docs.example.com/cm/d' || CAST(doc_id AS VARCHAR)
              AS url,
@@ -2229,7 +2179,6 @@ def q_extract_clientmeta(spark, sf_dir):
 
 
 @q(
-    "q_extract_robotsmeta",
     """
     SELECT 'https://docs.example.com/rm/d' || CAST(doc_id AS VARCHAR)
              AS url,

@@ -23,15 +23,11 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(PAGES_SCHEMA).parquet(path)
 
 
-def prefilter(
-    pages: DataFrame,
-    langs: list[str] | None = None,
-    max_bytes: int = MAX_HTML_BYTES,
-) -> DataFrame:
+def prefilter(pages: DataFrame, langs: list[str] | None = None) -> DataFrame:
     """O-6 pre-filters, all pushed to the scan by Catalyst:
     non-null html, sane size, optional language allowlist."""
     out = pages.filter(
-        F.col("html").isNotNull() & (F.length("html") <= F.lit(max_bytes))
+        F.col("html").isNotNull() & (F.length("html") <= F.lit(MAX_HTML_BYTES))
     )
     if langs:
         out = out.filter(F.col("lang").isin(langs) | F.col("lang").isNull())

@@ -20,6 +20,10 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 _BASE_TS = datetime(2025, 1, 1, 0, 0, 0)
+_SEED = 42
+# rows per pyarrow write; a corpus above _ROWS_PER_FILE is a directory
+_CHUNK_ROWS = 4096
+_ROWS_PER_FILE = 8192
 _N_HOSTS = 1000
 _TLDS = ("com", "org", "net")
 _LANGS = ("en", "en", "en", "en", "en", "en", "en", "en", "de", "fr", "es", None)
@@ -107,13 +111,7 @@ def _naive_text(html: bytes) -> str:
     return " ".join(s.split())[:2000]
 
 
-def generate_pages(
-    out_path: str | Path,
-    n_pages: int,
-    seed: int = 42,
-    chunk_rows: int = 4096,
-    rows_per_file: int = 8192,
-) -> Path:
+def generate_pages(out_path: str | Path, n_pages: int, seed: int = _SEED) -> Path:
     """Write a deterministic pages parquet at ``out_path``.
 
     Large corpora are written as a DIRECTORY of part files so Spark's
@@ -122,7 +120,7 @@ def generate_pages(
     """
     out_path = Path(out_path)
     out_path.parent.mkdir(parents=True, exist_ok=True)
-    multi = n_pages > rows_per_file
+    multi = n_pages > _ROWS_PER_FILE
     if multi:
         out_path.mkdir(parents=True, exist_ok=True)
 
@@ -142,7 +140,7 @@ def generate_pages(
             writer = open_writer()
         writer.write_table(_to_table(buf))
         rows_in_file += len(buf)
-        if multi and rows_in_file >= rows_per_file:
+        if multi and rows_in_file >= _ROWS_PER_FILE:
             writer.close()
             writer = None
             file_idx += 1
@@ -170,7 +168,7 @@ def generate_pages(
             # ~3% duplicated url with a later capture (dedup O-7)
             if rng.random() < 0.03 and html is not None:
                 buf.append((url, ts + timedelta(hours=7), html, text, lang))
-            if len(buf) >= chunk_rows:
+            if len(buf) >= _CHUNK_ROWS:
                 flush(buf)
                 buf = []
         if buf:
@@ -189,27 +187,25 @@ def _to_table(rows: list[tuple]) -> pa.Table:
     )
 
 
-def ensure_corpus(dir_path: str | Path, n_pages: int, seed: int = 42) -> Path:
+def ensure_corpus(dir_path: str | Path, n_pages: int) -> Path:
     """Idempotent cache: generate pages.parquet in dir if missing."""
-    path = Path(dir_path) / f"pages_{n_pages}_{seed}.parquet"
+    path = Path(dir_path) / f"pages_{n_pages}_{_SEED}.parquet"
     if not path.exists():
-        generate_pages(path, n_pages, seed)
+        generate_pages(path, n_pages)
     return path
 
 
-def generate_multiline_docs(
-    path: str | Path, n_docs: int = 60, seed: int = 7
-) -> Path:
-    """Newline-bearing `documents` fixture (DEVIATIONS D-14): each doc
-    is a genuine multi-line text (4-12 lines of 3-9 words joined by
-    '\\n'); ~40% of docs repeat one of their own lines 1-3 extra times
-    at deterministic positions, so within-doc line dedup has real work
-    to do. Seed-stable like generate_pages. Schema matches the driver's
-    documents table (doc_id, text, lang, source, n_chars)."""
-    rng = random.Random(seed)
+def generate_multiline_docs(path: str | Path) -> Path:
+    """Newline-bearing `documents` fixture (DEVIATIONS D-14): 60 docs
+    from seed 7, each a genuine multi-line text (4-12 lines of 3-9 words
+    joined by '\\n'); ~40% of docs repeat one of their own lines 1-3
+    extra times at deterministic positions, so within-doc line dedup has
+    real work to do. Schema matches the driver's documents table
+    (doc_id, text, lang, source, n_chars)."""
+    rng = random.Random(7)
     path = Path(path)
     doc_ids, texts, langs, sources, n_chars = [], [], [], [], []
-    for i in range(n_docs):
+    for i in range(60):
         n_lines = rng.randint(4, 12)
         lines = [
             " ".join(rng.choice(_WORDS) for _ in range(rng.randint(3, 9)))

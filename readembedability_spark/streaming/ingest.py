@@ -25,6 +25,9 @@ from readembedability_spark.operators.extract import extract_stage
 from readembedability_spark.schemas import PAGES_SCHEMA
 from readembedability_spark.text_signals import feature_bucket, word_ngrams
 
+# event-time watermark of every watermarked stream operator below
+_WATERMARK = "1 hour"
+
 
 def read_pages_stream(
     spark: SparkSession, path: str, max_files_per_trigger: int = 4
@@ -36,25 +39,20 @@ def read_pages_stream(
     )
 
 
-def streaming_extract(
-    pages_stream: DataFrame,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_extract(pages_stream: DataFrame) -> DataFrame:
     """Watermarked dedup → extract; returns the streaming extracted DF."""
     deduped = pages_stream.withWatermark(
-        "warc_ts", watermark
+        "warc_ts", _WATERMARK
     ).dropDuplicatesWithinWatermark(["url"])
     return extract_stage(deduped)
 
 
 def streaming_metrics(
-    pages_stream: DataFrame,
-    window: str = "10 minutes",
-    watermark: str = "1 hour",
+    pages_stream: DataFrame, window: str = "10 minutes"
 ) -> DataFrame:
     """Tumbling-window ingest metrics (rows + bytes per window)."""
     return (
-        pages_stream.withWatermark("warc_ts", watermark)
+        pages_stream.withWatermark("warc_ts", _WATERMARK)
         .groupBy(F.window("warc_ts", window).alias("win"))
         .agg(
             F.count("*").alias("n_rows"),
@@ -65,27 +63,22 @@ def streaming_metrics(
 
 
 def start_streaming_run(
-    spark: SparkSession,
-    in_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_once: bool = True,
+    spark: SparkSession, in_dir: str, out_dir: str, checkpoint_dir: str
 ):
     """Wire source → extract → parquet sink with exactly-once checkpointing.
 
-    ``trigger_once`` processes all available input then stops (the batch-
-    equivalent mode used in tests and backfills).
+    The ``availableNow`` trigger processes all available input then stops
+    (the batch-equivalent mode used in tests and backfills).
     """
     stream = streaming_extract(read_pages_stream(spark, in_dir))
-    writer = (
+    return (
         stream.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def streaming_host_sessions(pages_stream: DataFrame) -> DataFrame:
@@ -128,10 +121,7 @@ def streaming_host_sessions(pages_stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_near_dup_filter(
-    pages_stream: DataFrame,
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_near_dup_filter(pages_stream: DataFrame) -> DataFrame:
     """Streaming near-duplicate FILTER (O-28 × the batch MinHash path):
     keep the first page per MinHash(8) signature within the watermark.
 
@@ -166,19 +156,16 @@ def streaming_near_dup_filter(
     )
     return (
         pages_stream.withColumn("minhash_sig", sig)
-        .withWatermark("warc_ts", watermark)
+        .withWatermark("warc_ts", _WATERMARK)
         .dropDuplicatesWithinWatermark(["minhash_sig"])
     )
 
 
 def streaming_contamination_flags(
-    pages_stream: DataFrame,
-    eval_grams: DataFrame,
-    n: int = 13,
-    watermark: str = "1 hour",
+    pages_stream: DataFrame, eval_grams: DataFrame
 ) -> DataFrame:
     """Streaming benchmark decontamination (O-28 × q_decontaminate):
-    flag pages sharing any word n-gram with a STATIC eval-set gram
+    flag pages sharing any word 13-gram with a STATIC eval-set gram
     table as they arrive.
 
     Plan: explode the page's text into n-grams (stateless, same
@@ -189,39 +176,38 @@ def streaming_contamination_flags(
     (bounded state). Emits (url, warc_ts) of contaminated pages — the
     ingest pipeline routes them to quarantine instead of the training
     sink."""
+    from readembedability_spark.textops import DECON_N
+
     arr = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
-    grams = F.when(F.size(arr) >= n, word_ngrams(arr, n)).otherwise(
-        F.array().cast("array<string>")
-    )
+    grams = F.when(
+        F.size(arr) >= DECON_N, word_ngrams(arr, DECON_N)
+    ).otherwise(F.array().cast("array<string>"))
     exploded = pages_stream.select(
         "url", "warc_ts", F.explode(grams).alias("g")
     )
     hits = exploded.join(eval_grams.select("g"), "g", "left_semi")
     return (
-        hits.withWatermark("warc_ts", watermark)
+        hits.withWatermark("warc_ts", _WATERMARK)
         .dropDuplicatesWithinWatermark(["url"])
         .select("url", "warc_ts")
     )
 
 
-def streaming_crawl_sessions(
-    pages_stream: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
+def streaming_crawl_sessions(pages_stream: DataFrame) -> DataFrame:
     """Session-window crawl activity per host (O-28 extended): a
-    "session" = a burst of captures from one host separated by < gap —
-    the built-in streaming analogue of the batch q_sessionize
-    (gap-based sessionization). ``F.session_window`` keeps per-key
-    state bounded by the watermark; late rows beyond it are dropped.
+    "session" = a burst of captures from one host separated by gaps
+    under 30 minutes — the built-in streaming analogue of the batch
+    q_sessionize (gap-based sessionization). ``F.session_window``
+    keeps per-key state bounded by the watermark; late rows beyond it
+    are dropped.
     At 10^12 rows the shuffle key is (host, session) and hosts are
     ~10^8 — skew handled the same way as the batch path (hot hosts
     split across sessions over time)."""
     return (
-        pages_stream.withWatermark("warc_ts", watermark)
+        pages_stream.withWatermark("warc_ts", _WATERMARK)
         .groupBy(
             host_col("url").alias("host"),
-            F.session_window("warc_ts", gap).alias("sess"),
+            F.session_window("warc_ts", "30 minutes").alias("sess"),
         )
         .agg(
             F.count("*").alias("n_pages"),
@@ -232,9 +218,7 @@ def streaming_crawl_sessions(
 
 
 def streaming_quality_filter(
-    pages_stream: DataFrame,
-    weights: dict[str, int],
-    threshold: float = 0.5,
+    pages_stream: DataFrame, weights: dict[str, int]
 ) -> DataFrame:
     """Serve the TRAINED quality classifier online (O-28 ×
     q_model_train): score every arriving page with the weight table
@@ -283,7 +267,7 @@ def streaming_quality_filter(
     p = F.lit(0.5) + F.lit(0.5) * x / (F.lit(1.0) + F.abs(x))
     scored = pages_stream.withColumn("quality_score", F.round(p, 6))
     return scored.filter(
-        (F.col("quality_score") > threshold) & (n_tok > 0)
+        (F.col("quality_score") > 0.5) & (n_tok > 0)
     )
 
 
@@ -521,9 +505,7 @@ def streaming_crawl_delta(pages_stream: DataFrame) -> DataFrame:
     )
 
 
-def streaming_capture_diff(
-    pages_stream: DataFrame, max_tokens: int = 4096
-) -> DataFrame:
+def streaming_capture_diff(pages_stream: DataFrame) -> DataFrame:
     """Streaming change-MAGNITUDE maintainer (the streaming sibling of
     q_capture_diff, one level deeper than streaming_crawl_delta's
     binary digest transition): as captures stream in, state per url
@@ -533,7 +515,7 @@ def streaming_capture_diff(
     prices fetches with. Cumulative pair/change counts and similarity
     mass ride in state so the mean never needs history.
 
-    State is BOUNDED: the token set is capped at ``max_tokens``
+    State is BOUNDED: the token set is capped at its first 4096
     entries in sorted order (deterministic truncation — a production
     deployment stores a MinHash signature at the same position, the
     capped set IS the exactness-first variant of that sketch); packed
@@ -580,7 +562,7 @@ def streaming_capture_diff(
     keyed = pages_stream.select(
         "url",
         epoch_us("warc_ts").alias("ts_us"),
-        F.concat_ws(SEP, F.slice(F.array_sort(toks), 1, max_tokens)).alias(
+        F.concat_ws(SEP, F.slice(F.array_sort(toks), 1, 4096)).alias(
             "packed"
         ),
     )
@@ -599,9 +581,7 @@ def streaming_capture_diff(
     )
 
 
-def streaming_admission(
-    pages_stream: DataFrame, budget: int = 300
-) -> DataFrame:
+def streaming_admission(pages_stream: DataFrame) -> DataFrame:
     """Stateful host token-budget admission at ingest (the streaming
     maintainer of q_host_token_budget's anti-domination rule): as
     pages stream in, each host's state carries the cumulative token
@@ -625,10 +605,11 @@ def streaming_admission(
     pages still advance the seen-counter, mirroring the batch cumsum
     over all docs (the sum is monotone, so rejection stays permanent
     in both engines)."""
+    from readembedability_spark.textops import HOST_TOKEN_BUDGET
 
     def fold(st, ts_us, row, late):
         before = st["tokens_seen"]
-        admitted = before < budget
+        admitted = before < HOST_TOKEN_BUDGET
         n_tokens = int(row.n_tokens)
         st["tokens_seen"] += n_tokens
         st["n_seen"] += 1
@@ -665,9 +646,7 @@ def streaming_admission(
     )
 
 
-def streaming_politeness(
-    pages_stream: DataFrame, delay_us: int = 1_000_000
-) -> DataFrame:
+def streaming_politeness(pages_stream: DataFrame) -> DataFrame:
     """Stateful crawl-politeness monitor (the streaming maintainer of
     q_politeness_audit's per-host compliance ledger): as fetches
     stream in, each host's state carries the LAST applied fetch
@@ -676,8 +655,8 @@ def streaming_politeness(
     (minimum) observed gap, and from those the batch audit's own
     verdict columns (``politeness_verdict``: violation rate in ppm;
     strict-majority 'rude', any-violation 'mixed', else 'polite'; a
-    host that has never shown a gap is 'unknown'). The delay is a
-    single parameter here; a production monitor would join the
+    host that has never shown a gap is 'unknown'). The delay is one
+    second for every host here; a production monitor would join the
     per-host robots crawl-delay dimension (q_robots_crawl_debt's
     source) broadcast onto the stream before keying.
 
@@ -699,7 +678,7 @@ def streaming_politeness(
             return
         gap = ts_us - st["last_us"]
         st["n_gaps"] += 1
-        st["n_violations"] += gap < delay_us
+        st["n_violations"] += gap < 1_000_000
         if st["min_gap_us"] is None or gap < st["min_gap_us"]:
             st["min_gap_us"] = gap
 

@@ -68,7 +68,6 @@ from readembedability_spark.text_signals import (
 
 
 @q(
-    "q_dedup_exact",
     """
     SELECT md5(text) AS h, COUNT(*) AS n, MIN(doc_id) AS keeper
     FROM documents GROUP BY h
@@ -98,8 +97,28 @@ def _words_df(spark, sf_dir):
     return doc_tokens(_t(spark, sf_dir, "documents"), "doc_id").distinct()
 
 
+def _with_sizes(pairs, sizes):
+    """(a, b, …) pair rows with each side's set size from a (doc_id, sz)
+    table attached as sza and szb."""
+    for k in "ab":
+        side = sizes.select(
+            F.col("doc_id").alias(k), F.col("sz").alias(f"sz{k}")
+        )
+        pairs = pairs.join(side, k)
+    return pairs
+
+
+def _pair_union():
+    """|A ∪ B| of a pair row (i = |A ∩ B|, sza, szb)."""
+    return F.col("sza") + F.col("szb") - F.col("i")
+
+
+def _jaccard():
+    """|A ∩ B| / |A ∪ B| of a pair row (i, sza, szb)."""
+    return F.col("i") / _pair_union()
+
+
 @q_baseline(
-    "q_dedup_jaccard",
     f"""
     WITH {_WORDS_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM words GROUP BY doc_id),
@@ -132,12 +151,9 @@ def q_dedup_jaccard(spark, sf_dir):
         )
         .agg(F.count("*").alias("i"))
     )
-    sa = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
-    jac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
+    jac = _jaccard()
     return (
-        inter.join(sa, "a")
-        .join(sb, "b")
+        _with_sizes(inter, sizes)
         .filter(jac >= 0.8)
         .select("a", "b", F.round(jac, 4).alias("jaccard"))
     )
@@ -237,7 +253,6 @@ _MINHASH_CAND_SQL = _minhash_cand_sql("documents")
 
 
 @q(
-    "q_minhash_lsh",
     f"""
     WITH {_MINHASH_CAND_SQL}
     SELECT a, b FROM cand
@@ -394,7 +409,6 @@ _VERIFIED_PAIRS_SQL = _verified_pairs_sql("documents")
 
 
 @q(
-    "q_dedup_lsh_verified",
     f"""
     WITH {_VERIFIED_PAIRS_SQL}
     SELECT a, b, jaccard FROM vpairs
@@ -476,7 +490,7 @@ def _verified_pairs_from(shingles):
     """vpairs(a, b, jaccard ≥ 0.2) from a shingle DF: capped
     MinHash-LSH candidates → exact Jaccard on candidates only."""
     inter = _pair_intersections(_doc_profiles_from(shingles))
-    jac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
+    jac = _jaccard()
     return inter.filter(jac >= 0.2).select(
         "a", "b", F.round(jac, 4).alias("jaccard")
     )
@@ -503,7 +517,6 @@ def _dedup_recall_probe(n_docs: int) -> int:
 
 
 @q(
-    "q_dedup_recall",
     f"""
     WITH {_VERIFIED_PAIRS_SQL},
     pv AS (
@@ -571,12 +584,11 @@ def q_dedup_recall(spark, sf_dir):
     # doc sizes ride on the persisted verify-core profile — no second
     # corpus-sized sizes rollup (r9)
     prof = _doc_profiles_from(shingles)
-    sizes = prof.select("doc_id", "sz")
-    za = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    zb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
-    jac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
+    jac = _jaccard()
     exact = (
-        pint.join(za, "a").join(zb, "b").filter(jac >= 0.2).select("a", "b")
+        _with_sizes(pint, prof.select("doc_id", "sz"))
+        .filter(jac >= 0.2)
+        .select("a", "b")
     )
     lsh = (
         _pair_intersections(prof)
@@ -600,7 +612,6 @@ def q_dedup_recall(spark, sf_dir):
 
 
 @q(
-    "q_dedup_clusters",
     f"""
     WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
     edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
@@ -736,7 +747,6 @@ def _connected_components(spark, edges):
 
 
 @q(
-    "q_dedup_incremental",
     f"""
     WITH newdocs AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 10 = 9),
@@ -827,7 +837,6 @@ _SIMHASH_SQL = f"""
 
 
 @q(
-    "q_simhash",
     f"""
     WITH {_SIMHASH_SQL}
     SELECT doc_id, simhash FROM sigs
@@ -874,7 +883,6 @@ _N_SIMHASH_BANDS = 4  # 4 bands × 4 bits → 100% recall for hamming ≤ 3
 
 
 @q(
-    "q_simhash_pairs",
     f"""
     WITH {_SIMHASH_SQL},
     sub AS (SELECT * FROM sigs WHERE doc_id < 100),
@@ -1089,7 +1097,6 @@ def _mean_vectors(df, *keys, rounded=True):
 
 
 @q_baseline(
-    "q_ann_cosine",
     """
     WITH q AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qe
                FROM embeddings WHERE vec_id < 10),
@@ -1142,7 +1149,6 @@ _EMB_BUCKETS_SQL = f"""
 
 
 @q(
-    "q_ann_lsh",
     f"""
     WITH {_EMB_BUCKETS_SQL}
     SELECT bucket, COUNT(*) AS n_vectors,
@@ -1286,7 +1292,6 @@ def _emb_bands_df(spark, sf_dir):
 
 
 @q(
-    "q_ann_bucketed",
     f"""
     WITH {_EMB_BANDS_SQL},
     cand AS (
@@ -1373,7 +1378,6 @@ _EMB_VPAIRS_SQL = f"""
 
 
 @q(
-    "q_dedup_embedding_bucketed",
     f"""
     WITH {_EMB_VPAIRS_SQL}
     SELECT a, b, sim FROM epairs
@@ -1415,7 +1419,6 @@ def _emb_near_dups(pairs):
 
 
 @q(
-    "q_dedup_embedding_clusters",
     f"""
     WITH RECURSIVE {_EMB_VPAIRS_SQL},
     edges AS (SELECT a, b FROM epairs UNION SELECT b, a FROM epairs),
@@ -1456,7 +1459,6 @@ _IVF_COS = (
 
 
 @q(
-    "q_ann_ivf",
     f"""
     WITH dims AS (
       SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS d,
@@ -1545,7 +1547,6 @@ def _km_rounds_sql() -> str:
 
 
 @q(
-    "q_ann_ivf_kmeans",
     f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -1681,7 +1682,6 @@ def _km_train(emb):
 
 
 @q(
-    "q_length_percentile",
     """
     SELECT doc_id, lang,
            ROUND(pr, 4) AS length_pct,
@@ -1732,7 +1732,6 @@ def q_length_percentile(spark, sf_dir):
 
 
 @q(
-    "q_profile_documents",
     """
     SELECT COUNT(*) AS n_rows,
            CAST(COUNT(DISTINCT lang) AS BIGINT) AS n_langs,
@@ -1843,7 +1842,6 @@ _PR_GRAPH_SQL = """
 
 
 @q(
-    "q_pagerank",
     f"""
     WITH {_PR_GRAPH_SQL},
     r0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn),
@@ -2048,7 +2046,6 @@ _TR_ITER_SQL = """
 
 
 @q(
-    "q_trustrank",
     f"""
     WITH {_PR_GRAPH_SQL},
     r0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn),
@@ -2264,7 +2261,6 @@ def frontier_schedule_from(unseen, counts, authority, k):
 
 
 @q(
-    "q_extract_links",
     f"""
     WITH base AS (
       SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
@@ -2320,7 +2316,6 @@ def q_extract_links(spark, sf_dir):
 
 
 @q(
-    "q_pagerank_links",
     f"""
     WITH edges AS (
       SELECT DISTINCT src, dst FROM (
@@ -2373,7 +2368,6 @@ def q_pagerank_links(spark, sf_dir):
 
 
 @q(
-    "q_crawl_frontier",
     f"""
     WITH base AS (
       SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
@@ -2422,7 +2416,6 @@ def q_crawl_frontier(spark, sf_dir):
 
 
 @q(
-    "q_anchor_text_index",
     f"""
     WITH base AS (
       SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
@@ -2491,7 +2484,6 @@ _SCHEDULE_K = 3
 
 
 @q(
-    "q_frontier_schedule",
     f"""
     WITH base AS (
       SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
@@ -2600,7 +2592,6 @@ def q_frontier_schedule(spark, sf_dir):
 
 
 @q(
-    "q_frontier_robots",
     f"""
     WITH base AS (
       SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
@@ -2742,7 +2733,6 @@ _CHUNK_STRIDE = 80  # 20-token overlap between consecutive chunks
 
 
 @q(
-    "q_chunk_documents",
     f"""
     WITH arrs AS (
       SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
@@ -2907,7 +2897,6 @@ def _adc_shortlist(sub, codebook, coded, size: int):
 
 
 @q(
-    "q_ann_pq",
     f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -2998,7 +2987,6 @@ _IVFPQ_SHORTLIST = 30
 
 
 @q(
-    "q_ann_ivf_pq",
     f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
@@ -3160,7 +3148,6 @@ def _ann_recall_method_sql(method: str) -> str:
 
 
 @q(
-    "q_ann_recall",
     f"""
     WITH gt AS ({_ANN_EXACT_SQL}),
     m_ann_bucketed AS (
@@ -3259,7 +3246,6 @@ _LANG_VALUES_SQL = ", ".join(
 
 
 @q(
-    "q_langid",
     f"""
     WITH {_WORDS_SQL},
     langwords(lid, w) AS (VALUES {_LANG_VALUES_SQL}),
@@ -3307,7 +3293,6 @@ def q_langid(spark, sf_dir):
 
 
 @q(
-    "q_quality_score",
     """
     SELECT doc_id,
            n_tokens,
@@ -3337,7 +3322,6 @@ def q_quality_score(spark, sf_dir):
 
 
 @q(
-    "q_token_count",
     r"""
     SELECT doc_id,
            len(string_split_regex(trim(text), '\s+')) AS ws_tokens,
@@ -3364,7 +3348,6 @@ def q_token_count(spark, sf_dir):
 
 
 @q(
-    "q_fingerprint",
     """
     SELECT doc_id,
            md5(lower(text)) AS fp,
@@ -3391,7 +3374,6 @@ def q_fingerprint(spark, sf_dir):
 
 
 @q(
-    "q_multimodal_meta",
     """
     SELECT doc_id,
            octet_length(encode(text)) AS n_bytes,
@@ -3447,7 +3429,6 @@ def _providers_values_sql() -> str:
 
 
 @q(
-    "q_join_oembed_providers",
     f"""
     WITH urls AS (
       SELECT event_id,
@@ -3504,7 +3485,6 @@ def q_join_oembed_providers(spark, sf_dir):
 
 
 @q_baseline(
-    "q_dedup_ngram_jaccard",
     f"""
     WITH {_SHINGLES_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
@@ -3537,19 +3517,15 @@ def q_dedup_ngram_jaccard(spark, sf_dir):
         .groupBy(F.col("sa_.doc_id").alias("a"), F.col("sb_.doc_id").alias("b"))
         .agg(F.count("*").alias("i"))
     )
-    sza = sizes.select(F.col("doc_id").alias("a"), F.col("sz").alias("sza"))
-    szb = sizes.select(F.col("doc_id").alias("b"), F.col("sz").alias("szb"))
-    jac = F.col("i") / (F.col("sza") + F.col("szb") - F.col("i"))
+    jac = _jaccard()
     return (
-        inter.join(sza, "a")
-        .join(szb, "b")
+        _with_sizes(inter, sizes)
         .filter(jac >= 0.2)
         .select("a", "b", F.round(jac, 4).alias("jaccard"))
     )
 
 
 @q_baseline(
-    "q_dedup_embedding",
     """
     WITH c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
                       sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
@@ -3580,7 +3556,6 @@ def q_dedup_embedding(spark, sf_dir):
 
 
 @q(
-    "q_dedup_editdistance",
     """
     WITH heads AS (
       SELECT doc_id,
@@ -3648,7 +3623,6 @@ def q_dedup_editdistance(spark, sf_dir):
 
 
 @q(
-    "q_tfidf",
     """
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -3760,7 +3734,6 @@ def curated_clusters_from(spark, docs, langs, min_tokens, min_alpha):
 
 
 @q(
-    "q_curation_pipeline",
     """
     WITH scored AS (
       SELECT doc_id, lang, text,
@@ -3813,7 +3786,6 @@ def q_curation_pipeline(spark, sf_dir):
 
 
 @q(
-    "q_curation_pipeline_lsh",
     f"""
     WITH RECURSIVE gated AS (
       SELECT doc_id, lang, text,
@@ -3872,7 +3844,6 @@ def q_curation_pipeline_lsh(spark, sf_dir):
 
 
 @q(
-    "q_unigram_logloss",
     """
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -3919,7 +3890,6 @@ def q_unigram_logloss(spark, sf_dir):
 
 
 @q(
-    "q_bigram_lm_bits",
     """
     WITH toks AS (
       SELECT doc_id,
@@ -3995,7 +3965,6 @@ def q_bigram_lm_bits(spark, sf_dir):
 
 
 @q(
-    "q_dsir_weights",
     """
     WITH toks AS MATERIALIZED (
       SELECT doc_id, w FROM (
@@ -4151,59 +4120,17 @@ def _cumsum_parts(df, parts):
     return default_parts(df.sparkSession) if parts is None else parts
 
 
-def _ranked_cumsum(cf, order_cols, val_col="c", parts=None):
-    """Global (rnk, cum) over an arbitrarily large table with NO
-    single-partition window (VERDICT r03 #9): range-partition on the
-    total order, rank + running sum per partition in parallel, then
-    shift each partition by its predecessors' (row count, value sum)
-    offsets — a bounded collect of ≤``parts`` rows, folded back in as
-    a literal map. Exactly the global-window result, computed with two
-    distributed exchanges and zero single-node sorts. ``parts`` is
-    derived from the cluster by default (see _cumsum_parts)."""
-    parts = _cumsum_parts(cf, parts)
-    rp = _persist(
-        cf.repartitionByRange(parts, *order_cols).withColumn(
-            "_pid", F.spark_partition_id()
-        )
-    )
-    w = Window.partitionBy("_pid").orderBy(*order_cols)
-    w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    offs = sorted(
-        rp.groupBy("_pid")
-        .agg(F.count("*").alias("_n"), F.sum(val_col).alias("_s"))
-        .collect(),
-        key=lambda r: r["_pid"],
-    )  # bounded: one row per range partition
-    rn_off, cum_off, acc_n, acc_s = {}, {}, 0, 0
-    for o in offs:
-        rn_off[o["_pid"]], cum_off[o["_pid"]] = acc_n, acc_s
-        acc_n += o["_n"]
-        acc_s += o["_s"]
-    rn_map = F.create_map(
-        *[F.lit(x) for kv in rn_off.items() for x in kv]
-    )
-    cum_map = F.create_map(
-        *[F.lit(x) for kv in cum_off.items() for x in kv]
-    )
-    return rp.select(
-        "*",
-        (F.row_number().over(w) + rn_map[F.col("_pid")])
-        .cast("long")
-        .alias("rnk"),
-        (F.sum(val_col).over(w_cum) + cum_map[F.col("_pid")]).alias("cum"),
-    ).drop("_pid")
-
-
 def _grouped_cumsum(df, group_col, order_cols, val_col, parts=None):
-    """Per-GROUP ordered (rnk, cum) — the _ranked_cumsum construction
-    generalized to a grouped stream (VERDICT r06 wrong #1: a
+    """Per-GROUP ordered (rnk, cum) over an arbitrarily large table
+    with NO single-partition window (VERDICT r03 #9, r06 wrong #1: a
     ``Window.partitionBy(lang)`` running sum is ONE task per language,
     so at web scale the dominant language's 10^11-row stream serializes
-    into a single executor). Instead: range-partition on
-    (group, *order_cols) so every partition holds a contiguous slice of
-    one-or-more group streams, rank + running-sum per (partition, group)
-    slice in parallel, then shift each slice by its predecessors'
-    (row count, value sum) within the same group. Only groups that
+    into a single executor; a global stream is one constant group).
+    Instead: range-partition on (group, *order_cols) so every partition
+    holds a contiguous slice of one-or-more group streams, rank +
+    running-sum per (partition, group) slice in parallel, then shift
+    each slice by its predecessors' (row count, value sum) within the
+    same group. Only groups that
     STRADDLE a partition boundary need non-zero offsets, and a range
     partitioning has at most parts − 1 boundaries → at most parts − 1
     straddling groups → the offset collect is ≤ 2·(parts − 1) rows
@@ -4215,14 +4142,15 @@ def _grouped_cumsum(df, group_col, order_cols, val_col, parts=None):
     global-window result — integer-exact for integral val_col — with
     NO per-group single-task window anywhere.
 
-    ``order_cols`` must totally order rows within a group (include a
-    unique tie-break column); ``group_col`` must be a string column.
+    ``order_cols`` (names or sort Columns such as ``F.desc("c")``)
+    must totally order rows within a group (include a unique tie-break
+    column); ``group_col`` must be a string column.
     ``parts`` defaults to the cluster-derived count (_cumsum_parts)."""
     parts = _cumsum_parts(df, parts)
     rp = _persist(
-        df.repartitionByRange(
-            parts, F.col(group_col), *[F.col(c) for c in order_cols]
-        ).withColumn("_pid", F.spark_partition_id())
+        df.repartitionByRange(parts, group_col, *order_cols).withColumn(
+            "_pid", F.spark_partition_id()
+        )
     )
     w = Window.partitionBy("_pid", group_col).orderBy(*order_cols)
     w_cum = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -4273,7 +4201,6 @@ def _grouped_cumsum(df, group_col, order_cols, val_col, parts=None):
 
 
 @q(
-    "q_vocab_coverage",
     """
     WITH toks AS (
       SELECT unnest(string_split(text, ' ')) AS w FROM documents),
@@ -4299,16 +4226,19 @@ def q_vocab_coverage(spark, sf_dir):
     cum_coverage flattens) and the OOV rate of any cutoff. The
     corpus-sized work is one map-side-combining groupBy(w); the global
     rank/cumsum over the |vocab|-row table is the two-stage
-    range-partitioned plan of _ranked_cumsum — on a web-scale corpus a
-    space-split "vocab" is billions of junk tokens, so no
-    single-partition window ever sees it (VERDICT r03 #9). Top-20
+    range-partitioned plan of _grouped_cumsum over one constant group —
+    on a web-scale corpus a space-split "vocab" is billions of junk
+    tokens, so no single-partition window ever sees it (VERDICT r03
+    #9). Top-20
     emitted for the gate; the full curve is the same query without the
     rank filter."""
     docs = _t(spark, sf_dir, "documents")
     toks = doc_tokens(docs)
     cf = toks.groupBy("w").agg(F.count("*").alias("c"))
     tot = cf.agg(F.sum("c").alias("t"))
-    ranked = _ranked_cumsum(cf, [F.desc("c"), F.asc("w")])
+    ranked = _grouped_cumsum(
+        cf.withColumn("g", F.lit("")), "g", [F.desc("c"), F.asc("w")], "c"
+    )
     return (
         ranked.filter(F.col("rnk") <= 20)
         .crossJoin(F.broadcast(tot))
@@ -4322,7 +4252,6 @@ def q_vocab_coverage(spark, sf_dir):
 
 
 @q(
-    "q_gopher_rules",
     """
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -4393,7 +4322,6 @@ def q_gopher_rules(spark, sf_dir):
 
 
 @q(
-    "q_doc_repetition",
     """
     WITH toks AS (
       SELECT doc_id,
@@ -4471,7 +4399,6 @@ def _grams_from(docs, n: int):
 
 
 @q(
-    "q_dedup_substring",
     f"""
     WITH {_grams_sql("documents", 8)},
     gh AS (SELECT DISTINCT doc_id, substr(md5(g), 1, 8) AS g FROM grams),
@@ -4527,7 +4454,6 @@ def q_dedup_substring(spark, sf_dir):
 
 
 @q(
-    "q_dedup_substring_removed",
     """
     WITH arrs AS (
       SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
@@ -4586,7 +4512,11 @@ def q_dedup_substring_removed(spark, sf_dir):
     )
 
 
-def dup_substring_excised(arrs, n: int = 8):
+#: word n-gram length of the duplicated-substring span rule
+_SPAN_N = 8
+
+
+def dup_substring_excised(arrs):
     """(joined, kept): the cross-doc duplicated-substring excision
     plan over any (doc_id, arr, …) DF — owner = corpus-min doc_id per
     gram, duplicated starts per doc, row-local indexed HOF excision.
@@ -4597,11 +4527,13 @@ def dup_substring_excised(arrs, n: int = 8):
     pattern, so a future change to the span rule cannot diverge the
     two call sites."""
     posg = (
-        arrs.filter(F.size("arr") >= n)
+        arrs.filter(F.size("arr") >= _SPAN_N)
         .select(
             "doc_id",
             F.posexplode(
-                word_ngrams("arr", n, lambda g: F.md5(F.encode(g, "UTF-8")))
+                word_ngrams(
+                    "arr", _SPAN_N, lambda g: F.md5(F.encode(g, "UTF-8"))
+                )
             ),
         )
         .select("doc_id", (F.col("pos") + 1).alias("k"), F.col("col").alias("gh"))
@@ -4619,7 +4551,7 @@ def dup_substring_excised(arrs, n: int = 8):
     kept = F.filter(
         F.col("arr"),
         lambda w, i: ~F.exists(
-            st, lambda s: (s <= i + 1) & (i + 1 <= s + (n - 1))
+            st, lambda s: (s <= i + 1) & (i + 1 <= s + (_SPAN_N - 1))
         ),
     )
     return arrs.join(starts, "doc_id", "left"), kept
@@ -4630,7 +4562,6 @@ _URL_RE = r"https?://[^\s]+"
 
 
 @q(
-    "q_pii_scrub",
     f"""
     WITH enriched AS (
       SELECT doc_id,
@@ -4701,7 +4632,6 @@ _SAMPLE_CASE_SQL = (
 
 
 @q(
-    "q_sample_stratified",
     f"""
     SELECT doc_id, lang
     FROM documents
@@ -4728,7 +4658,6 @@ def q_sample_stratified(spark, sf_dir):
 
 
 @q(
-    "q_sample_quality",
     """
     WITH scored AS (
       SELECT doc_id, lang,
@@ -4772,7 +4701,6 @@ _SPLIT_VAL_PCT = 95
 
 
 @q(
-    "q_split_holdout",
     f"""
     WITH assigned AS (
       SELECT doc_id, lang,
@@ -4886,7 +4814,6 @@ def seq_shard_keys(seqs, n_shards, seed):
 
 
 @q(
-    "q_pack_sequences",
     f"""
     WITH toks AS (
       SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
@@ -4927,7 +4854,6 @@ _AUDIT_HEAD = 64
 
 
 @q(
-    "q_shuffle_shards",
     f"""
     WITH toks AS (
       SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
@@ -5036,7 +4962,6 @@ def q_shuffle_shards(spark, sf_dir):
 
 
 @q(
-    "q_pack_efficiency",
     f"""
     WITH toks AS (
       SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
@@ -5087,17 +5012,20 @@ def q_pack_efficiency(spark, sf_dir):
     )
 
 
-def eval_gram_hits_from(train, eval_docs, n):
-    """(doc_id, g): every distinct word ``n``-gram of a ``train``
+#: word n-gram length of the decontamination rule (GPT-3/Llama 13-gram)
+DECON_N = 13
+
+
+def eval_gram_hits_from(train, eval_docs):
+    """(doc_id, g): every distinct word ``DECON_N``-gram of a ``train``
     (doc_id, text) doc that also occurs in ``eval_docs``. The eval gram
     set is small next to the corpus, so it is BROADCAST to the
     training-gram side."""
-    egrams = _grams_from(eval_docs, n).select("g").distinct()
-    return _grams_from(train, n).join(F.broadcast(egrams), "g")
+    egrams = _grams_from(eval_docs, DECON_N).select("g").distinct()
+    return _grams_from(train, DECON_N).join(F.broadcast(egrams), "g")
 
 
 @q(
-    "q_decontaminate",
     f"""
     WITH evalset AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
@@ -5129,7 +5057,6 @@ def q_decontaminate(spark, sf_dir):
     hits = eval_gram_hits_from(
         docs.filter(F.col("doc_id") % 20 != 0),
         docs.filter(F.col("doc_id") % 20 == 0),
-        13,
     )
     return hits.groupBy("doc_id").agg(
         F.count("*").cast("long").alias("n_hits")
@@ -5137,7 +5064,6 @@ def q_decontaminate(spark, sf_dir):
 
 
 @q(
-    "q_contamination_report",
     f"""
     WITH evalset AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
@@ -5198,7 +5124,6 @@ def q_contamination_report(spark, sf_dir):
 
 
 @q(
-    "q_dedup_lines_within",
     """
     WITH arrs AS (
       SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
@@ -5256,7 +5181,6 @@ _WINNOW_W = 5  # winnowing window (guarantee: any match ≥ w+k-1 tokens shares 
 
 
 @q(
-    "q_winnow_fingerprints",
     f"""
     WITH arrs AS (
       SELECT doc_id, string_split(text, ' ') AS arr FROM documents
@@ -5326,7 +5250,6 @@ def q_winnow_fingerprints(spark, sf_dir):
 
 
 @q(
-    "q_model_score",
     """
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -5379,7 +5302,6 @@ _MIX_TARGETS_SQL = ", ".join(f"('{lang}', {s})" for lang, s in _MIX_TARGETS)
 
 
 @q(
-    "q_mixture_weights",
     f"""
     WITH counts AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
     tot AS (SELECT SUM(n) AS t FROM counts),
@@ -5421,7 +5343,6 @@ def q_mixture_weights(spark, sf_dir):
 
 
 @q(
-    "q_mixture_temperature",
     """
     WITH counts AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
     sq AS (
@@ -5466,7 +5387,6 @@ def q_mixture_temperature(spark, sf_dir):
 
 
 @q(
-    "q_host_diversity",
     """
     WITH hosts AS (
       SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com' AS host
@@ -5505,7 +5425,6 @@ def q_host_diversity(spark, sf_dir):
 
 
 @q(
-    "q_hard_negatives",
     f"""
     WITH {_EMB_BANDS_SQL},
     cand AS (
@@ -5548,7 +5467,6 @@ def q_hard_negatives(spark, sf_dir):
 
 
 @q(
-    "q_url_normalize",
     """
     WITH raw AS (
       SELECT event_id,
@@ -5611,7 +5529,6 @@ def q_url_normalize(spark, sf_dir):
 
 
 @q(
-    "q_host_stats",
     """
     WITH scored AS (
       SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com' AS host,
@@ -5652,7 +5569,6 @@ def q_host_stats(spark, sf_dir):
 
 
 @q(
-    "q_char_entropy",
     """
     WITH chars AS (
       SELECT doc_id, unnest(regexp_extract_all(text, '.')) AS ch
@@ -5693,7 +5609,6 @@ def q_char_entropy(spark, sf_dir):
 
 
 @q(
-    "q_doc_repetition_ngrams",
     """
     WITH arrs AS (
       SELECT doc_id, string_split(text, ' ') AS arr FROM documents
@@ -5976,7 +5891,7 @@ def _bpe_train_docs(spark, docs, merges: int = None):
     return merges, cur.select("word", "freq", "seq")
 
 
-@q("q_bpe_train", _bpe_train_sql(_BPE_MERGES))
+@q(_bpe_train_sql(_BPE_MERGES))
 def q_bpe_train(spark, sf_dir):
     """BPE merge-table training (see _bpe_train): the learned top-16
     merges with their pair frequencies. The oracle unrolls the same 16
@@ -5988,7 +5903,7 @@ def q_bpe_train(spark, sf_dir):
     )
 
 
-@q("q_bpe_train64", _bpe_train_sql(64))
+@q(_bpe_train_sql(64))
 def q_bpe_train64(spark, sf_dir):
     """BPE training at a REALISTIC merge count (64 rounds — 4x the
     gate query; VERDICT r04 missing #4): feasible only because the
@@ -6006,7 +5921,6 @@ def q_bpe_train64(spark, sf_dir):
 
 
 @q(
-    "q_bpe_tokenize",
     f"""
     WITH {_BPE_BASE_SQL},
     {_bpe_rounds_sql()},
@@ -6093,7 +6007,6 @@ def bpe_doc_token_counts(docs, final_words, out_col: str = "n_bpe"):
 
 
 @q(
-    "q_pack_sequences_bpe",
     f"""
     WITH {_BPE_BASE_SQL},
     {_bpe_rounds_sql()},
@@ -6143,7 +6056,6 @@ def q_pack_sequences_bpe(spark, sf_dir):
 
 
 @q(
-    "q_bpe_vocab",
     f"""
     WITH {_BPE_BASE_SQL},
     {_bpe_rounds_sql()},
@@ -6406,7 +6318,6 @@ def _lrn_train(spark, sf_dir):
 
 
 @q(
-    "q_model_train",
     f"""
     WITH {_LRN_BASE_SQL},
     {_lrn_rounds_sql()}
@@ -6425,7 +6336,6 @@ def q_model_train(spark, sf_dir):
 
 
 @q(
-    "q_model_score_trained",
     f"""
     WITH {_LRN_BASE_SQL},
     {_lrn_rounds_sql()},
@@ -6500,7 +6410,6 @@ def _ml_text_col():
 
 
 @q(
-    "q_dedup_lines_within_ml",
     f"""
     WITH ml AS (
       SELECT doc_id, string_split({_ML_TEXT_SQL}, chr(10)) AS lines
@@ -6545,7 +6454,6 @@ def q_dedup_lines_within_ml(spark, sf_dir):
 
 
 @q(
-    "q_doc_repetition_lines_ml",
     f"""
     WITH ml AS (
       SELECT doc_id, string_split({_ML_TEXT_SQL}, chr(10)) AS lines
@@ -6611,7 +6519,6 @@ def line_owner_flags_from(docs):
 
 
 @q(
-    "q_dedup_lines_global",
     f"""
     WITH ml AS (
       SELECT doc_id, string_split({_ML_TEXT_SQL}, chr(10)) AS lines
@@ -6677,7 +6584,6 @@ _BADWORDS_SQL = ", ".join(f"'{w}'" for w in _BADWORDS)
 
 
 @q(
-    "q_badwords_filter",
     f"""
     WITH toks AS (
       SELECT doc_id, w FROM (
@@ -6714,7 +6620,6 @@ def q_badwords_filter(spark, sf_dir):
 
 
 @q(
-    "q_filter_funnel",
     f"""
     WITH toks AS (
       SELECT doc_id, w FROM (
@@ -6816,7 +6721,6 @@ _QUOTA_K = 5
 
 
 @q(
-    "q_host_quota",
     f"""
     SELECT doc_id, host, CAST(rk AS BIGINT) AS rk
     FROM (
@@ -6855,11 +6759,10 @@ def q_host_quota(spark, sf_dir):
 #: per-host token budget for q_host_token_budget (anti-domination by
 #: TOKENS, not docs): a host stops contributing once the docs before
 #: the current one (in doc_id admission order) already spent this many
-_HOST_TOKEN_BUDGET = 300
+HOST_TOKEN_BUDGET = 300
 
 
 @q(
-    "q_host_token_budget",
     f"""
     WITH t AS (
       SELECT doc_id,
@@ -6875,7 +6778,7 @@ _HOST_TOKEN_BUDGET = 300
       FROM t)
     SELECT doc_id, host, CAST(n_tokens AS BIGINT) AS n_tokens,
            CAST(tokens_before AS BIGINT) AS tokens_before
-    FROM c WHERE tokens_before < {_HOST_TOKEN_BUDGET}
+    FROM c WHERE tokens_before < {HOST_TOKEN_BUDGET}
     """,
 )
 def q_host_token_budget(spark, sf_dir):
@@ -6884,7 +6787,7 @@ def q_host_token_budget(spark, sf_dir):
     TOKEN contribution (what actually skews a training mixture — one
     host's 10 giant pages outweigh another's 100 snippets). Admission
     order is ascending doc_id (first-crawled-first-kept, deterministic);
-    a doc is kept iff its host's tokens-before < {_HOST_TOKEN_BUDGET},
+    a doc is kept iff its host's tokens-before < {HOST_TOKEN_BUDGET},
     so the budget-crossing doc is kept (running-sum semantics, exactly
     the q_pack_sequences bin rule). The per-host running sum is
     _grouped_cumsum — and hosts are the HIGH-cardinality group case
@@ -6904,7 +6807,7 @@ def q_host_token_budget(spark, sf_dir):
     before = (F.col("cum") - F.col("n_tokens")).cast("long")
     return (
         cs.withColumn("tokens_before", before)
-        .filter(F.col("tokens_before") < _HOST_TOKEN_BUDGET)
+        .filter(F.col("tokens_before") < HOST_TOKEN_BUDGET)
         .select(
             "doc_id",
             "host",
@@ -6915,7 +6818,6 @@ def q_host_token_budget(spark, sf_dir):
 
 
 @q(
-    "q_decontaminate_bloom",
     f"""
     WITH evalset AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
@@ -6994,7 +6896,6 @@ _PMI_TOP = 20
 
 
 @q(
-    "q_bigram_pmi",
     f"""
     WITH toks AS (
       SELECT doc_id, i, w FROM (
@@ -7088,7 +6989,6 @@ def q_bigram_pmi(spark, sf_dir):
 
 
 @q(
-    "q_inverted_index",
     """
     WITH toks AS (
       SELECT doc_id, w FROM (
@@ -7156,7 +7056,6 @@ def q_inverted_index(spark, sf_dir):
 
 
 @q(
-    "q_paragraph_quality",
     f"""
     WITH ml AS (
       SELECT doc_id, string_split({_ML_TEXT_SQL}, chr(10)) AS lines
@@ -7225,7 +7124,6 @@ _PR_THRESHOLDS = [round(0.1 * i, 1) for i in range(1, 10)]
 
 
 @q(
-    "q_model_pr_curve",
     f"""
     WITH {_LRN_BASE_SQL},
     {_lrn_rounds_sql()},
@@ -7305,7 +7203,6 @@ def q_model_pr_curve(spark, sf_dir):
 
 
 @q(
-    "q_model_calibration",
     f"""
     WITH {_LRN_BASE_SQL},
     {_lrn_rounds_sql()},
@@ -7373,7 +7270,6 @@ def q_model_calibration(spark, sf_dir):
 
 
 @q(
-    "q_dedup_clusters_best",
     f"""
     WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
     edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
@@ -7432,7 +7328,6 @@ def q_dedup_clusters_best(spark, sf_dir):
 
 
 @q(
-    "q_host_quality_prior",
     """
     WITH perdoc AS (
       SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com' AS host,
@@ -7532,7 +7427,6 @@ def host_quality_prior_from(docs):
 
 
 @q(
-    "q_epoch_schedule",
     """
     WITH src AS (
       SELECT source,
@@ -7620,7 +7514,6 @@ def q_epoch_schedule(spark, sf_dir):
 
 
 @q(
-    "q_host_lang_entropy",
     """
     WITH hl AS (
       SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com' AS host,
@@ -7685,7 +7578,6 @@ def q_host_lang_entropy(spark, sf_dir):
 
 
 @q(
-    "q_ccnet_buckets",
     """
     WITH toks AS MATERIALIZED (
       SELECT doc_id, lang, w FROM (
@@ -7827,7 +7719,6 @@ def ccnet_buckets_from(docs, toks=None):
 
 
 @q(
-    "q_graph_reciprocity",
     f"""
     WITH {_PR_GRAPH_SQL},
     recip AS (
@@ -7889,7 +7780,6 @@ def q_graph_reciprocity(spark, sf_dir):
 
 
 @q(
-    "q_novelty_curve",
     f"""
     WITH {_SHINGLES_SQL},
     mx AS (SELECT MAX(doc_id) + 1 AS m FROM documents),
@@ -7966,7 +7856,6 @@ def q_novelty_curve(spark, sf_dir):
 
 
 @q(
-    "q_tokenizer_fertility",
     f"""
     WITH {_BPE_BASE_SQL},
     {_bpe_rounds_sql()},
@@ -8045,7 +7934,6 @@ def q_tokenizer_fertility(spark, sf_dir):
 
 
 @q(
-    "q_lsh_bucket_stats",
     f"""
     WITH {_SHINGLES_SQL},
     {_MINHASH_BANDS_SQL},
@@ -8119,7 +8007,6 @@ _CTX_LIST = ", ".join(str(c) for c in _CTX_WINDOWS)
 
 
 @q(
-    "q_context_truncation",
     rf"""
     WITH nt AS (
       SELECT doc_id,
@@ -8186,7 +8073,6 @@ def q_context_truncation(spark, sf_dir):
 
 
 @q(
-    "q_degree_distribution",
     f"""
     WITH {_PR_GRAPH_SQL},
     degs AS (
@@ -8267,7 +8153,6 @@ _HITS_ITER_SQL = """
 
 
 @q(
-    "q_hits",
     f"""
     WITH {_PR_GRAPH_SQL},
     h0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn),
@@ -8355,7 +8240,6 @@ def q_hits(spark, sf_dir):
 
 
 @q(
-    "q_dedup_containment",
     f"""
     WITH {_MINHASH_CAND_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
@@ -8404,14 +8288,14 @@ def q_dedup_containment(spark, sf_dir):
     prof = _doc_profiles_from(_shingles_df(spark, sf_dir))
     inter = _pair_intersections(prof)
     mn = F.least("sza", "szb")
-    uni = F.col("sza") + F.col("szb") - F.col("i")
+    uni = _pair_union()
     return (
         inter.filter(F.col("i") * 2 >= mn)
         .select(
             "a",
             "b",
             F.col("i").cast("long").alias("n_shared"),
-            F.round(F.col("i") / uni, 4).alias("jaccard"),
+            F.round(_jaccard(), 4).alias("jaccard"),
             F.round(F.col("i") / mn, 4).alias("containment"),
             (
                 (F.col("i") * 10 >= mn * 9) & (F.col("i") * 5 < uni)
@@ -8421,7 +8305,6 @@ def q_dedup_containment(spark, sf_dir):
 
 
 @q(
-    "q_source_novelty",
     f"""
     WITH {_SHINGLES_SQL},
     ds AS (
@@ -8506,7 +8389,6 @@ _LP_ITER_SQL = """
 
 
 @q(
-    "q_label_prop",
     f"""
     WITH {_PR_GRAPH_SQL},
     lp0 AS (
@@ -8576,7 +8458,6 @@ def q_label_prop(spark, sf_dir):
 
 
 @q(
-    "q_length_drift",
     """
     WITH mx AS (SELECT MAX(doc_id) + 1 AS m FROM documents),
     cl AS (
@@ -8655,7 +8536,6 @@ def q_length_drift(spark, sf_dir):
 
 
 @q(
-    "q_cluster_homogeneity",
     f"""
     WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
     edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
@@ -8743,7 +8623,6 @@ def q_cluster_homogeneity(spark, sf_dir):
 
 
 @q(
-    "q_minhash_calibration",
     f"""
     WITH {_MINHASH_CAND_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
@@ -8816,10 +8695,9 @@ def q_minhash_calibration(spark, sf_dir):
         (F.col(f"a{i}") == F.col(f"b{i}")).cast("int")
         for i in range(_N_MINHASH)
     ).cast("long")
-    i0 = F.col("i")
     pj = _pair_intersections(prof).select(
         est.alias("est_m"),
-        F.round(i0 * F.lit(1000000.0) / (F.col("sza") + F.col("szb") - i0))
+        F.round(F.col("i") * F.lit(1000000.0) / _pair_union())
         .cast("long")
         .alias("jac_micro"),
     )
@@ -8894,7 +8772,6 @@ _BM25_SQL_BODY = """toks AS (
 
 
 @q(
-    "q_bm25_rank",
     f"""
     WITH {_BM25_SQL_BODY}
     SELECT qid, rk, doc_id,
@@ -9012,7 +8889,6 @@ def _bm25_top5(spark, sf_dir):
 
 
 @q(
-    "q_bm25_eval",
     f"""
     WITH {_BM25_SQL_BODY},
     nq AS (SELECT CAST(COUNT(DISTINCT qid) AS BIGINT) AS n FROM qt),
@@ -9088,7 +8964,6 @@ _PR_INC_ITERS = 2
 
 
 @q(
-    "q_pagerank_incremental",
     f"""
     WITH oedges AS (
       SELECT DISTINCT src, dst FROM (
@@ -9379,7 +9254,6 @@ _ADMISSION_FLAGS_SQL = """toks AS MATERIALIZED (
 
 
 @q(
-    "q_admission_policy",
     f"""
     WITH {_ADMISSION_FLAGS_SQL},
     staged AS (
@@ -9415,7 +9289,6 @@ def q_admission_policy(spark, sf_dir):
 
 
 @q(
-    "q_admission_marginal",
     f"""
     WITH {_ADMISSION_FLAGS_SQL}
     SELECT 'host_demoted' AS gate,
@@ -9541,7 +9414,6 @@ def admission_marginal_from_flags(flags):
 
 
 @q(
-    "q_split_by_host",
     f"""
     WITH d AS (
       SELECT doc_id, lang,
@@ -9649,7 +9521,6 @@ def q_split_by_host(spark, sf_dir):
 
 
 @q(
-    "q_recrawl_schedule",
     """
     WITH f AS (
       SELECT user_id AS host, ts,
@@ -9781,7 +9652,6 @@ def _band_tuning_tail_sql() -> str:
 
 
 @q(
-    "q_minhash_band_tuning",
     f"""
     WITH {_MINHASH_CAND_SQL},
     sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
@@ -9832,13 +9702,9 @@ def q_minhash_band_tuning(spark, sf_dir):
     # oracle's LEFT JOIN + COALESCE produces) and both sizes in one pass
     prof = _doc_profiles_from(_shingles_df(spark, sf_dir))
     inter = _pair_intersections(prof)
-    i0 = F.col("i")
     ps = inter.select(
         (
-            F.round(
-                i0 * F.lit(1000000.0)
-                / (F.col("sza") + F.col("szb") - i0)
-            ).cast("long")
+            F.round(F.col("i") * F.lit(1000000.0) / _pair_union()).cast("long")
             / F.lit(1000000.0)
         ).alias("s")
     )
@@ -9876,7 +9742,6 @@ def q_minhash_band_tuning(spark, sf_dir):
 
 
 @q(
-    "q_crawl_plan",
     f"""
     WITH auth AS (SELECT node, pr FROM ({REGISTRY["q_pagerank_links"].sql})),
     rob AS (SELECT host, n_allowed, n_blocked
@@ -10004,7 +9869,6 @@ def surt_key_expr(url):
 
 
 @q(
-    "q_surt_index",
     """
     WITH cap AS (
       SELECT 'https://News' || CAST(event_id % 300 AS VARCHAR)
@@ -10079,7 +9943,6 @@ def q_surt_index(spark, sf_dir):
 
 
 @q(
-    "q_stale_captures",
     """
     WITH cap AS (
       SELECT 'https://News' || CAST(event_id % 300 AS VARCHAR)
@@ -10221,7 +10084,6 @@ def staleness_from(caps, tiebreak="digest"):
 
 
 @q(
-    "q_token_budget_mixture",
     f"""
     WITH tok AS (
       SELECT lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
@@ -10404,7 +10266,6 @@ def _audio_chunk_batches(batches):
 
 
 @q(
-    "q_image_resize",
     """
     WITH m AS (
       SELECT doc_id,
@@ -10470,7 +10331,6 @@ def q_image_resize(spark, sf_dir):
 
 
 @q(
-    "q_video_frame_sample",
     """
     WITH m AS (
       SELECT doc_id,
@@ -10550,7 +10410,6 @@ def _redir_url_expr(idx):
 
 
 @q(
-    "q_redirect_resolve",
     """
     WITH RECURSIVE edges AS (
       SELECT doc_id AS src,
@@ -10662,7 +10521,6 @@ def q_redirect_resolve(spark, sf_dir):
 
 
 @q(
-    "q_host_boilerplate",
     """
     WITH pages AS (
       SELECT doc_id,
@@ -10800,7 +10658,6 @@ _MAGIC_HEX = [
 
 
 @q(
-    "q_mime_sniff",
     """
     WITH k AS (
       SELECT doc_id % 6 AS kind,
@@ -10888,7 +10745,6 @@ def q_mime_sniff(spark, sf_dir):
 
 
 @q(
-    "q_graph_triangles",
     f"""
     WITH {_PR_GRAPH_SQL},
     und AS (
@@ -10998,7 +10854,6 @@ def q_graph_triangles(spark, sf_dir):
 
 
 @q(
-    "q_canonical_clusters",
     """
     WITH cap AS (
       SELECT doc_id,
@@ -11110,7 +10965,6 @@ def _varint_bytes_sql(v: str) -> str:
 
 
 @q(
-    "q_postings_compression",
     f"""
     WITH toks AS (
       SELECT doc_id, w FROM (
@@ -11195,7 +11049,6 @@ def q_postings_compression(spark, sf_dir):
 
 
 @q(
-    "q_sitemap_parse",
     """
     WITH ent AS (
       SELECT 'site' || CAST(event_id % 40 AS VARCHAR)
@@ -11311,7 +11164,6 @@ def q_sitemap_parse(spark, sf_dir):
 
 
 @q(
-    "q_warc_records",
     """
     WITH rec AS (
       SELECT doc_id // 25 AS file_id, doc_id,
@@ -11463,7 +11315,6 @@ def q_warc_records(spark, sf_dir):
 
 
 @q(
-    "q_url_templates",
     """
     WITH u AS (
       SELECT 'h' || CAST(event_id % 5 AS VARCHAR)
@@ -11569,7 +11420,6 @@ def q_url_templates(spark, sf_dir):
 
 
 @q(
-    "q_pagination_chains",
     """
     WITH u AS (
       SELECT 'h' || CAST(event_id % 6 AS VARCHAR)
@@ -11671,7 +11521,6 @@ _PSL_VALUES_SQL = ", ".join(f"('{s}')" for s in _PSL_SUFFIXES)
 
 
 @q(
-    "q_registrable_domain",
     f"""
     WITH psl(suffix) AS (VALUES {_PSL_VALUES_SQL}),
     hosts AS (
@@ -11778,7 +11627,6 @@ def q_registrable_domain(spark, sf_dir):
 
 
 @q(
-    "q_crawl_delta",
     """
     WITH cap AS (
       SELECT event_id % 180 AS url_id,
@@ -11907,7 +11755,6 @@ def q_crawl_delta(spark, sf_dir):
 
 
 @q(
-    "q_syndication",
     """
     WITH d AS (
       SELECT doc_id,
@@ -11983,7 +11830,6 @@ def q_syndication(spark, sf_dir):
 
 
 @q(
-    "q_embedding_drift",
     """
     WITH dims AS (
       SELECT label, vec_id % 2 AS batch,
@@ -12087,7 +11933,6 @@ def q_embedding_drift(spark, sf_dir):
 
 
 @q(
-    "q_anchor_spam",
     """
     WITH links AS (
       SELECT 't' || CAST(event_id % 20 AS VARCHAR)
@@ -12193,7 +12038,6 @@ def q_anchor_spam(spark, sf_dir):
 
 
 @q(
-    "q_hreflang_clusters",
     """
     WITH alt AS (
       SELECT event_id % 60 AS cluster_id,
@@ -12264,7 +12108,6 @@ def q_hreflang_clusters(spark, sf_dir):
 
 
 @q(
-    "q_cdc_chunks",
     """
     WITH base AS (
       SELECT a.doc_id,
@@ -12435,7 +12278,6 @@ def q_cdc_chunks(spark, sf_dir):
 
 
 @q(
-    "q_index_prune",
     """
     WITH toks AS (
       SELECT doc_id, w FROM (
@@ -12551,7 +12393,6 @@ def q_index_prune(spark, sf_dir):
 
 
 @q(
-    "q_robots_crawl_debt",
     """
     WITH cap AS (
       SELECT 'h' || CAST(event_id % 25 AS VARCHAR)
@@ -12704,7 +12545,6 @@ def q_robots_crawl_debt(spark, sf_dir):
 
 
 @q(
-    "q_span_corruption",
     """
     WITH arrs AS (
       SELECT doc_id, lang, string_split(text, ' ') AS arr,
@@ -12837,7 +12677,6 @@ def q_span_corruption(spark, sf_dir):
 
 
 @q(
-    "q_index_merge",
     """
     WITH toks AS (
       SELECT doc_id, w, doc_id % 5 = 0 AS is_delta FROM (
@@ -12956,7 +12795,6 @@ def q_index_merge(spark, sf_dir):
 
 
 @q(
-    "q_feed_parse",
     """
     WITH ent AS (
       SELECT event_id % 30 AS h,
@@ -13108,7 +12946,6 @@ def q_feed_parse(spark, sf_dir):
 
 
 @q(
-    "q_link_depth",
     """
     WITH RECURSIVE hosts AS (
       SELECT DISTINCT doc_id % 100 AS h FROM documents),
@@ -13191,7 +13028,6 @@ def q_link_depth(spark, sf_dir):
 
 
 @q(
-    "q_audio_chunks",
     """
     WITH m AS (
       SELECT doc_id,
@@ -13254,7 +13090,6 @@ def q_audio_chunks(spark, sf_dir):
 
 
 @q(
-    "q_http_cache",
     """
     WITH hdrs AS (
       SELECT doc_id,
@@ -13418,7 +13253,6 @@ def q_http_cache(spark, sf_dir):
 
 
 @q(
-    "q_unicode_normalize",
     """
     WITH aug AS (
       SELECT doc_id,
@@ -13521,7 +13355,6 @@ def q_unicode_normalize(spark, sf_dir):
 
 
 @q(
-    "q_lang_mismatch",
     f"""
     WITH {_WORDS_SQL},
     langwords(lid, w) AS (VALUES {_LANG_VALUES_SQL}),
@@ -13601,7 +13434,6 @@ def q_lang_mismatch(spark, sf_dir):
 
 
 @q(
-    "q_capture_diff",
     """
     WITH caps AS (
       SELECT event_id % 50 AS url_id,
@@ -13704,7 +13536,6 @@ def q_capture_diff(spark, sf_dir):
 
 
 @q(
-    "q_robots_sitemaps",
     """
     WITH hosts AS (
       SELECT DISTINCT event_id % 40 AS h FROM events),
@@ -13818,7 +13649,6 @@ def q_robots_sitemaps(spark, sf_dir):
 
 
 @q(
-    "q_embedding_quantize",
     """
     WITH dims AS (
       SELECT generate_subscripts(embedding, 1) AS d,
@@ -13906,7 +13736,7 @@ def q_embedding_quantize(spark, sf_dir):
     )
 
 
-@q("q_compression_ratio", None)
+@q(None)
 def q_compression_ratio(spark, sf_dir):
     """Compressibility quality filter — the Gopher/CCNet signal with
     no SQL equivalent (zlib is not expressible in DuckDB, so this is
@@ -13971,7 +13801,6 @@ def q_compression_ratio(spark, sf_dir):
 
 
 @q(
-    "q_sitemap_coverage",
     """
     WITH hosts AS (
       SELECT DISTINCT event_id % 40 AS h FROM events),
@@ -14053,7 +13882,6 @@ def q_sitemap_coverage(spark, sf_dir):
 
 
 @q(
-    "q_ip_colocation",
     """
     WITH hosts AS (
       SELECT DISTINCT event_id % 97 AS h FROM events),
@@ -14131,7 +13959,6 @@ def q_ip_colocation(spark, sf_dir):
 
 
 @q(
-    "q_freshness_weights",
     """
     WITH d AS (
       SELECT doc_id,
@@ -14206,7 +14033,6 @@ def q_freshness_weights(spark, sf_dir):
 
 
 @q(
-    "q_zipf_fit",
     """
     WITH tf AS (
       SELECT lang, w, CAST(COUNT(*) AS BIGINT) AS c FROM (
@@ -14313,7 +14139,6 @@ _ENTITY_CITIES = (
 
 
 @q(
-    "q_entity_density",
     """
     WITH names(nm, ni) AS (
       SELECT * FROM (VALUES
@@ -14431,7 +14256,6 @@ def q_entity_density(spark, sf_dir):
 
 
 @q(
-    "q_readability",
     """
     WITH toks AS (
       SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
@@ -14519,7 +14343,6 @@ def q_readability(spark, sf_dir):
 
 
 @q(
-    "q_license_detect",
     """
     WITH pages AS (
       SELECT event_id, event_id % 53 AS host,
@@ -14675,7 +14498,6 @@ def q_license_detect(spark, sf_dir):
 
 
 @q(
-    "q_code_detect",
     """
     WITH pages AS (
       SELECT event_id,
@@ -14844,7 +14666,6 @@ def q_code_detect(spark, sf_dir):
 
 
 @q(
-    "q_tag_histogram",
     """
     WITH pages AS (
       SELECT event_id,
@@ -14978,7 +14799,6 @@ def q_tag_histogram(spark, sf_dir):
 
 
 @q(
-    "q_wet_convert",
     """
     WITH html AS (
       SELECT doc_id, doc_id // 25 AS file_id,
@@ -15117,7 +14937,6 @@ def _class_census(pages, klass: str, count: str):
 
 
 @q(
-    "q_soft404_detect",
     """
     WITH pages AS (
       SELECT event_id, event_id % 13 AS host,
@@ -15259,7 +15078,6 @@ def q_soft404_detect(spark, sf_dir):
 
 
 @q(
-    "q_heading_outline",
     """
     WITH pages AS (
       SELECT doc_id,
@@ -15422,7 +15240,6 @@ def politeness_verdict():
 
 
 @q(
-    "q_politeness_audit",
     """
     WITH fetches AS (
       SELECT event_id % 13 AS host, ts, event_id,
@@ -15496,7 +15313,6 @@ def q_politeness_audit(spark, sf_dir):
 
 
 @q(
-    "q_tracker_census",
     """
     WITH trackers(script_host, category) AS (
       VALUES ('analytics.example-metrics.com', 'analytics'),
@@ -15596,7 +15412,6 @@ def q_tracker_census(spark, sf_dir):
 
 
 @q(
-    "q_url_params_census",
     """
     WITH urls AS (
       SELECT event_id,
@@ -15701,7 +15516,6 @@ def q_url_params_census(spark, sf_dir):
 
 
 @q(
-    "q_title_templates",
     """
     WITH pages AS (
       SELECT event_id, event_id % 13 AS host,
@@ -15796,7 +15610,6 @@ def q_title_templates(spark, sf_dir):
 
 
 @q(
-    "q_gibberish_detect",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -15923,7 +15736,6 @@ def q_gibberish_detect(spark, sf_dir):
 
 
 @q(
-    "q_citation_density",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -16022,7 +15834,6 @@ def q_citation_density(spark, sf_dir):
 
 
 @q(
-    "q_bandwidth_apportion",
     """
     WITH mass AS (
       SELECT event_id % 13 AS host,
@@ -16112,7 +15923,6 @@ def q_bandwidth_apportion(spark, sf_dir):
 
 
 @q(
-    "q_https_migration",
     """
     WITH caps AS (
       SELECT event_id, ts,
@@ -16261,7 +16071,6 @@ def q_https_migration(spark, sf_dir):
 
 
 @q(
-    "q_image_alt_coverage",
     """
     WITH pages AS (
       SELECT event_id, event_id % 11 AS host,
@@ -16349,7 +16158,6 @@ def q_image_alt_coverage(spark, sf_dir):
 
 
 @q(
-    "q_ndcg_eval",
     """
     WITH run AS (
       SELECT doc_id AS qid, unnest(generate_series(1, 5)) AS rk
@@ -16541,7 +16349,6 @@ def robots_verdicts_from(
 
 
 @q(
-    "q_robots_precedence",
     """
     WITH rules(g, pattern, is_allow) AS (
       VALUES (0, '/private/', 0),
@@ -16630,7 +16437,6 @@ def q_robots_precedence(spark, sf_dir):
 
 
 @q(
-    "q_crawl_trap_detect",
     """
     WITH urls AS (
       SELECT event_id, event_id % 11 AS host,
@@ -16765,7 +16571,6 @@ def q_crawl_trap_detect(spark, sf_dir):
 
 
 @q(
-    "q_warc_revisit",
     """
     WITH caps AS (
       SELECT event_id, event_id % 101 AS url_id,
@@ -16874,7 +16679,6 @@ def q_warc_revisit(spark, sf_dir):
 
 
 @q(
-    "q_content_length_audit",
     """
     WITH resp AS (
       SELECT event_id, event_id % 11 AS host,
@@ -16978,7 +16782,6 @@ def q_content_length_audit(spark, sf_dir):
 
 
 @q(
-    "q_link_rot",
     """
     WITH links AS (
       SELECT event_id % 23 AS src_host,
@@ -17052,7 +16855,6 @@ def q_link_rot(spark, sf_dir):
 
 
 @q(
-    "q_cms_fingerprint",
     """
     WITH pages AS (
       SELECT event_id, event_id % 11 AS host,
@@ -17167,7 +16969,6 @@ def q_cms_fingerprint(spark, sf_dir):
 
 
 @q(
-    "q_countmin_sketch",
     """
     WITH tok AS (
       SELECT unnest(string_split(text, ' ')) AS w FROM documents),
@@ -17272,7 +17073,6 @@ def q_countmin_sketch(spark, sf_dir):
 
 
 @q(
-    "q_paywall_detect",
     """
     WITH pages AS (
       SELECT event_id, event_id % 11 AS host,
@@ -17399,7 +17199,6 @@ def q_paywall_detect(spark, sf_dir):
 
 
 @q(
-    "q_embedding_norm_audit",
     """
     WITH lat AS (
       SELECT vec_id, label,
@@ -17503,7 +17302,6 @@ def q_embedding_norm_audit(spark, sf_dir):
 
 
 @q(
-    "q_social_cards",
     """
     WITH pages AS (
       SELECT event_id, event_id % 11 AS host,
@@ -17599,7 +17397,6 @@ def q_social_cards(spark, sf_dir):
 
 
 @q(
-    "q_anchor_rel_census",
     """
     WITH links AS (
       SELECT event_id % 13 AS host,
@@ -17715,7 +17512,6 @@ def q_anchor_rel_census(spark, sf_dir):
 
 
 @q(
-    "q_mixed_content",
     """
     WITH pages AS (
       SELECT event_id % 9 AS host,
@@ -17842,7 +17638,6 @@ def q_mixed_content(spark, sf_dir):
 
 
 @q(
-    "q_security_headers",
     """
     WITH pages AS (
       SELECT event_id % 5 AS host,
@@ -17955,7 +17750,6 @@ def q_security_headers(spark, sf_dir):
 
 
 @q(
-    "q_cookie_attributes",
     """
     WITH resp AS (
       SELECT event_id % 7 AS host,
@@ -18055,7 +17849,6 @@ def q_cookie_attributes(spark, sf_dir):
 
 
 @q(
-    "q_sri_coverage",
     """
     WITH tags AS (
       SELECT event_id % 11 AS host,
@@ -18186,7 +17979,6 @@ def mojibake_class_from(pages, body="body"):
 
 
 @q(
-    "q_mojibake_detect",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -18314,7 +18106,6 @@ def truncation_class_from(pages, body="body"):
 
 
 @q(
-    "q_truncation_detect",
     """
     WITH shaped AS (
       SELECT CASE doc_id % 4
@@ -18416,7 +18207,6 @@ def q_truncation_detect(spark, sf_dir):
 
 
 @q(
-    "q_date_sanity",
     """
     WITH pages AS (
       SELECT ts AS crawl_ts,
@@ -18521,7 +18311,6 @@ def parked_class_from(pages, body="body"):
 
 
 @q(
-    "q_parked_domain",
     """
     WITH shaped AS (
       SELECT doc_id % 13 AS host,
@@ -18608,7 +18397,6 @@ def q_parked_domain(spark, sf_dir):
 
 
 @q(
-    "q_jsonld_types",
     """
     WITH pages AS (
       SELECT event_id % 9 AS host,
@@ -18698,7 +18486,6 @@ def q_jsonld_types(spark, sf_dir):
 
 
 @q(
-    "q_resource_hints",
     """
     WITH pages AS (
       SELECT event_id % 7 AS host,
@@ -18858,7 +18645,6 @@ def q_resource_hints(spark, sf_dir):
 
 
 @q(
-    "q_amp_pairing",
     """
     WITH canon AS (
       SELECT event_id // 2 AS u,
@@ -18933,7 +18719,6 @@ def q_amp_pairing(spark, sf_dir):
 
 
 @q(
-    "q_conditional_get",
     """
     WITH fetches AS (
       SELECT event_id % 8 AS host,
@@ -19022,7 +18807,6 @@ def q_conditional_get(spark, sf_dir):
 
 
 @q(
-    "q_vary_audit",
     """
     WITH resp AS (
       SELECT event_id % 9 AS host,
@@ -19099,7 +18883,6 @@ def q_vary_audit(spark, sf_dir):
 
 
 @q(
-    "q_retry_after",
     """
     WITH fetches AS (
       SELECT event_id % 5 AS host,
@@ -19208,7 +18991,6 @@ def q_retry_after(spark, sf_dir):
 
 
 @q(
-    "q_robots_diff",
     """
     WITH rules_before(g, pattern, is_allow) AS (
       VALUES (0, '/private/', 0),
@@ -19358,7 +19140,6 @@ def q_robots_diff(spark, sf_dir):
 
 
 @q(
-    "q_bitext_mine",
     """
     WITH docs AS (
       SELECT doc_id // 4 AS cluster, doc_id % 4 AS p,
@@ -19463,7 +19244,6 @@ def q_bitext_mine(spark, sf_dir):
 
 
 @q(
-    "q_dom_nesting",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -19588,7 +19368,6 @@ def q_dom_nesting(spark, sf_dir):
 
 
 @q(
-    "q_split_leakage",
     """
     WITH docs AS (
       SELECT doc_id, doc_id % 50 AS host,
@@ -19688,7 +19467,6 @@ def q_split_leakage(spark, sf_dir):
 
 
 @q(
-    "q_instruction_detect",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -19813,7 +19591,6 @@ def q_instruction_detect(spark, sf_dir):
 
 
 @q(
-    "q_script_mix",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -19910,7 +19687,6 @@ def q_script_mix(spark, sf_dir):
 
 
 @q(
-    "q_status_flap",
     """
     WITH fetches AS (
       SELECT event_id % 6 AS host,
@@ -20044,7 +19820,6 @@ def q_status_flap(spark, sf_dir):
 
 
 @q(
-    "q_render_need",
     """
     WITH pages AS (
       SELECT event_id % 9 AS host,
@@ -20205,7 +19980,6 @@ def q_render_need(spark, sf_dir):
 
 
 @q(
-    "q_hidden_text",
     """
     WITH shaped AS (
       SELECT doc_id,
@@ -20316,7 +20090,6 @@ def q_hidden_text(spark, sf_dir):
 
 
 @q(
-    "q_cdn_detect",
     """
     WITH resp AS (
       SELECT event_id % 11 AS host,
@@ -20488,7 +20261,6 @@ def subdomain_fanout_from(hosts):
 
 
 @q(
-    "q_typosquat",
     """
     WITH brands(brand) AS (
       VALUES ('paypal'), ('google'), ('amazon'), ('github')),
@@ -20572,7 +20344,6 @@ def q_typosquat(spark, sf_dir):
 
 
 @q(
-    "q_subdomain_explosion",
     """
     WITH hosts AS (
       SELECT 'dom' || (event_id % 10) AS registrable,
@@ -20690,7 +20461,6 @@ ROBOTS_WILDCARD_RULES = [
 
 
 @q(
-    "q_robots_wildcard",
     """
     WITH rules(g, pattern, regex, is_allow) AS (
       VALUES
@@ -20776,7 +20546,6 @@ def q_robots_wildcard(spark, sf_dir):
 
 
 @q(
-    "q_etag_stability",
     """
     WITH captures AS (
       SELECT event_id % 12 AS url,
@@ -20878,7 +20647,6 @@ def q_etag_stability(spark, sf_dir):
 
 
 @q(
-    "q_csp_audit",
     """
     WITH resp AS (
       SELECT event_id % 7 AS host,

@@ -20,6 +20,7 @@ from readembedability_spark.operators.salt import salt_repartition
 from readembedability_spark.plans.pipeline import RunConfig, run_extract
 from readembedability_spark.sources.pages import prefilter, read_pages
 from readembedability_spark.sources.synth import generate_pages
+from helpers import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -149,9 +150,7 @@ def test_checkpoint_marking_independent_of_output(spark, corpus):
         pages = with_bucket(read_pages(spark, corpus).select("url"))
         done = load_done_buckets(spark, str(Path(out) / "_checkpoint"), "ia")
         pend_df = resume_filter(pages, done).select("url_bucket").distinct()
-        plan = pend_df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-            pend_df._jdf.queryExecution(), "formatted"
-        )
+        plan = formatted_plan(pend_df)
         read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
         assert read_schema and "url" in read_schema[0]
         assert "html" not in read_schema[0]  # heavy column never touched

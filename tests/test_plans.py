@@ -14,6 +14,7 @@ from readembedability_spark.operators.extract import extract_stage
 from readembedability_spark.operators.resume import resume_filter, with_bucket
 from readembedability_spark.sources.pages import prefilter, read_pages
 from readembedability_spark.sources.synth import generate_pages
+from helpers import formatted_plan
 
 
 @pytest.fixture(scope="module")
@@ -22,15 +23,9 @@ def pages_path(tmp_path_factory):
     return str(generate_pages(d / "pages.parquet", 100))
 
 
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_prefilter_pushed_to_scan(spark, pages_path):
     df = prefilter(read_pages(spark, pages_path))
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "PushedFilters:" in plan
     assert "IsNotNull(html)" in plan
 
@@ -38,7 +33,7 @@ def test_prefilter_pushed_to_scan(spark, pages_path):
 def test_column_pruning_excludes_text(spark, pages_path):
     """The extract stage must not read the (unused) text column."""
     df = extract_stage(prefilter(read_pages(spark, pages_path)))
-    plan = _plan(df)
+    plan = formatted_plan(df)
     scan_schema = [
         line for line in plan.splitlines() if "ReadSchema" in line
     ]
@@ -50,7 +45,7 @@ def test_column_pruning_excludes_text(spark, pages_path):
 def test_resume_antijoin_is_broadcast(spark, pages_path):
     done = spark.createDataFrame([(1,)], "url_bucket int")
     df = resume_filter(with_bucket(read_pages(spark, pages_path)), done)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     assert "LeftAnti" in plan
 
@@ -66,7 +61,7 @@ def test_single_python_boundary(spark, pages_path):
     import re
 
     df = extract_stage(pages)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     # exactly one MapInPandas node in the detail section
     assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
     assert "BatchEvalPython" not in plan  # no row-at-a-time Python anywhere
@@ -125,7 +120,7 @@ def test_run_extract_python_only_in_extract_stage(spark, pages_path, tmp_path):
     try:
         for _ in range(2):  # no checkpoint on disk, then one
             extract_df = pl.build_extract_df(spark, cfg)
-            plan = _plan(extract_df)
+            plan = formatted_plan(extract_df)
             assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
             assert not _python_rdd_leaves(extract_df), plan
             pl.run_extract(spark, cfg)
@@ -167,7 +162,7 @@ def test_local_table_matches_create_dataframe(spark):
                 f.nullable for f in want.schema
             ]
             assert got.collect() == want.collect()
-            assert "LocalTableScan" in _plan(got)
+            assert "LocalTableScan" in formatted_plan(got)
             assert not _python_rdd_leaves(got)
 
 
@@ -210,14 +205,14 @@ def test_broadcast_join_in_providers_pattern(spark):
         F.concat(F.lit("host"), F.col("id")).alias("host")
     )
     joined = big.join(F.broadcast(providers), "host", "left")
-    assert "BroadcastHashJoin" in _plan(joined)
+    assert "BroadcastHashJoin" in formatted_plan(joined)
 
 
 def test_whole_stage_codegen_on_relational_path(spark, pages_path):
     df = prefilter(read_pages(spark, pages_path)).select(
         F.length("html").alias("n")
     )
-    assert "codegen id" in _plan(df)  # scan/filter/project fused
+    assert "codegen id" in formatted_plan(df)  # scan/filter/project fused
 
 
 def test_multimodal_plumbing_zero_exchange_pruned_read(spark):
@@ -228,7 +223,7 @@ def test_multimodal_plumbing_zero_exchange_pruned_read(spark):
 
     for name in ("q_image_resize", "q_video_frame_sample"):
         df = REGISTRY[name].spark(spark, "/root/testdata/sf0.001")
-        plan = _plan(df)
+        plan = formatted_plan(df)
         assert "Exchange" not in plan, name
         reads = [
             line for line in plan.splitlines() if "ReadSchema" in line
@@ -247,7 +242,7 @@ def test_surt_index_single_keyed_aggregate(spark):
     from readembedability_spark.textops import REGISTRY
 
     df = REGISTRY["q_surt_index"].spark(spark, "/root/testdata/sf0.001")
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
     assert "Window" not in plan
     # operator-tree section: each Exchange appears once as "Exchange hashpartitioning"
@@ -284,7 +279,7 @@ def test_politeness_single_exchange(spark):
     df = REGISTRY["q_politeness_audit"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    c = _op_counts(_plan(df))
+    c = _op_counts(formatted_plan(df))
     assert c["Exchange"] == 1 and c["Window"] == 1
     assert c["SortMergeJoin"] == 0 and c["BroadcastHashJoin"] == 0
 
@@ -296,7 +291,7 @@ def test_link_rot_broadcasts_the_dim(spark):
     from readembedability_spark.textops import REGISTRY
 
     df = REGISTRY["q_link_rot"].spark(spark, "/root/testdata/sf0.001")
-    c = _op_counts(_plan(df))
+    c = _op_counts(formatted_plan(df))
     assert c["BroadcastHashJoin"] == 1 and c["SortMergeJoin"] == 0
     assert c["Exchange"] == 1  # per-host aggregate only
 
@@ -310,7 +305,7 @@ def test_robots_precedence_broadcasts_rules(spark):
     df = REGISTRY["q_robots_precedence"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    c = _op_counts(_plan(df))
+    c = _op_counts(formatted_plan(df))
     assert c["BroadcastHashJoin"] >= 1
     assert c["Window"] == 1
     assert c["Exchange"] <= 3
@@ -326,7 +321,7 @@ def test_https_migration_windows_share_partitioning(spark):
     df = REGISTRY["q_https_migration"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    p = _plan(df)
+    p = formatted_plan(df)
     c = _op_counts(p)
     assert c["Window"] == 2 and c["SortMergeJoin"] == 0
     assert c["Exchange"] == 3  # url_id once + 2-phase distinct rollup
@@ -351,7 +346,7 @@ def test_crawl_trap_detect_join_free(spark):
     df = REGISTRY["q_crawl_trap_detect"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    c = _op_counts(_plan(df))
+    c = _op_counts(formatted_plan(df))
     assert c["SortMergeJoin"] == 0 and c["BroadcastHashJoin"] == 0
 
 
@@ -364,7 +359,7 @@ def test_retry_after_single_exchange(spark):
     df = REGISTRY["q_retry_after"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    c = _op_counts(_plan(df))
+    c = _op_counts(formatted_plan(df))
     assert c["Exchange"] == 1 and c["Window"] == 1
     assert c["SortMergeJoin"] == 0 and c["BroadcastHashJoin"] == 0
 
@@ -380,7 +375,7 @@ def test_dom_nesting_shares_doc_exchange(spark):
     df = REGISTRY["q_dom_nesting"].spark(
         spark, "/root/testdata/sf0.001"
     )
-    c = _op_counts(_plan(df))
+    c = _op_counts(formatted_plan(df))
     assert c["Exchange"] == 2 and c["Window"] == 1
     assert c["SortMergeJoin"] == 0 and c["BroadcastHashJoin"] == 0
 
@@ -482,7 +477,7 @@ def test_embedding_family_plan_shape(spark, name):
     # a table an earlier query left cached would be substituted here
     release_caches(spark)
     df = {**REGISTRY, **BASELINE_REGISTRY}[name].spark(spark, SF_DIR)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     release_caches(spark)
     c = _op_counts(plan)
     got = (
@@ -546,7 +541,7 @@ def test_extraction_family_plan_shape(spark, name):
     )
     # a table an earlier query left cached would be substituted here
     release_caches(spark)
-    plan = _plan(build(spark, SF_DIR))
+    plan = formatted_plan(build(spark, SF_DIR))
     release_caches(spark)
     got = (
         _op_counts(plan)["Exchange"],
@@ -587,7 +582,7 @@ def test_loop_family_plan_shape(spark, name):
 
     # a table an earlier query left cached would be substituted here
     release_caches(spark)
-    plan = _plan(REGISTRY[name].spark(spark, SF_DIR))
+    plan = formatted_plan(REGISTRY[name].spark(spark, SF_DIR))
     release_caches(spark)
     got = (
         _op_counts(plan)["Exchange"],

@@ -23,15 +23,10 @@ from readembedability_spark.textops import (
     _ann_ivf_kmeans_df,
     _connected_components,
 )
+from helpers import formatted_plan
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -287,7 +282,7 @@ def test_editdistance_join_keyed_by_fingerprint(spark):
     """The blocking join is an equi-join on the md5 fingerprint column,
     so the fingerprint is the shuffle key (not the raw first word)."""
     df = REGISTRY["q_dedup_editdistance"].spark(spark, SF_MED)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     release_caches(spark)
     assert re.search(r"\[blk#\d+\]", plan), plan
 
@@ -325,12 +320,12 @@ _PINNING_QUERIES = [
 def test_pii_scrub_zero_shuffle(spark):
     """PII scrubbing is row-local: no Exchange in the plan — it rides
     the scan at any corpus size."""
-    plan = _plan(REGISTRY["q_pii_scrub"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_pii_scrub"].spark(spark, SF_MED))
     assert "Exchange" not in plan, plan
 
 
 def test_sample_stratified_zero_shuffle(spark):
-    plan = _plan(REGISTRY["q_sample_stratified"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_sample_stratified"].spark(spark, SF_MED))
     assert "Exchange" not in plan, plan
 
 
@@ -342,7 +337,7 @@ def test_pack_sequences_bounded_exchanges(spark):
     exchange, one rollup exchange — a fixed exchange budget
     independent of corpus size, with every window slice
     executor-sized."""
-    plan = _plan(REGISTRY["q_pack_sequences"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_pack_sequences"].spark(spark, SF_MED))
     release_caches(spark)
     assert "SinglePartition" not in plan, plan
     assert "rangepartitioning(lang" in plan, plan
@@ -354,7 +349,7 @@ def test_pack_sequences_bounded_exchanges(spark):
 def test_decontaminate_broadcasts_eval_grams(spark):
     """The eval-set 13-gram table is broadcast — the training-side gram
     stream never shuffles on the gram key."""
-    plan = _plan(REGISTRY["q_decontaminate"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_decontaminate"].spark(spark, SF_MED))
     assert "BroadcastHashJoin" in plan, plan
 
 
@@ -368,7 +363,7 @@ def test_decontaminate_flags_planted_overlap(spark):
 
 
 def test_dedup_substring_no_cross_join(spark):
-    plan = _plan(REGISTRY["q_dedup_substring"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_dedup_substring"].spark(spark, SF_MED))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -560,7 +555,7 @@ def test_join_asof_single_shuffle_no_range_join(spark):
     """The as-of join must be the union + carry-forward window — ONE
     exchange (keyed by the join key) and no nested-loop/cartesian range
     join anywhere in the plan."""
-    plan = _plan(REGISTRY["q_join_asof"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_join_asof"].spark(spark, SF_MED))
     release_caches(spark)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
@@ -573,6 +568,6 @@ def test_ann_pq_never_pairwise(spark):
     equi-joins and the broadcast LUT — never an all-pairs compare of
     the vector table against itself (no SortMergeJoin of two
     embeddings-derived sides keyed by nothing, no cartesian)."""
-    plan = _plan(REGISTRY["q_ann_pq"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_ann_pq"].spark(spark, SF_MED))
     release_caches(spark)
     assert "CartesianProduct" not in plan, plan

@@ -13,15 +13,10 @@ from pyspark.sql import functions as F
 
 import readembedability_spark.textops as textops
 from readembedability_spark.queries import REGISTRY, release_caches
+from helpers import formatted_plan
 
 SF_SMALL = "/root/testdata/sf0.001"
 SF_MED = "/root/testdata/sf0.01"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -42,7 +37,7 @@ def test_km_assign_nprobe1_has_no_window(spark):
         F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
     df = textops._km_assign(emb, cents, nprobe=1)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert not re.search(r"\n\(\d+\) Window", plan), plan
     assert not re.search(r"\n\(\d+\) Sort", plan), plan
     # exactly one exchange: the vec_id hash partitioning for the final
@@ -50,7 +45,7 @@ def test_km_assign_nprobe1_has_no_window(spark):
     n_exchange = len(re.findall(r"\n\(\d+\) Exchange", plan))
     assert n_exchange == 1, plan
     # and the multi-probe branch still uses the window top-p
-    plan2 = _plan(textops._km_assign(emb, cents, nprobe=2))
+    plan2 = formatted_plan(textops._km_assign(emb, cents, nprobe=2))
     assert re.search(r"\n\(\d+\) Window", plan2)
 
 
@@ -106,7 +101,7 @@ def test_perplexity_join_head_broadcast(spark, name):
     resolve through a BroadcastHashJoin against the top-K head; only
     anti-joined tail tokens reach a shuffle join, so its key
     distribution is flat by construction."""
-    plan = _plan(REGISTRY[name].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY[name].spark(spark, SF_MED))
     # the head join and the head-exclusion anti-join are broadcast
     assert "BroadcastHashJoin" in plan, plan
     assert "LeftAnti" in plan, plan
@@ -147,7 +142,7 @@ def test_vocab_coverage_no_single_partition_window(spark):
     """The rank/cumsum over the vocab table is range-partitioned: no
     Window may sit downstream of an Exchange SinglePartition (the only
     SinglePartition allowed is the 1-row scalar `tot` gather)."""
-    plan = _plan(REGISTRY["q_vocab_coverage"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_vocab_coverage"].spark(spark, SF_MED))
     assert "rangepartitioning" in plan, plan
     tree = plan.split("\n\n")[0].splitlines()
     # map exchange node id -> its Arguments line from the detail section
@@ -170,16 +165,21 @@ def test_vocab_coverage_no_single_partition_window(spark):
 
 
 def test_ranked_cumsum_matches_global_window(spark):
-    """_ranked_cumsum == the global-window result, across partition
-    boundaries (forced tiny partitions so offsets actually apply)."""
+    """_grouped_cumsum over one constant group == the global-window
+    result, across partition boundaries (forced tiny partitions so
+    offsets actually apply)."""
     from pyspark.sql import Window
 
     rows = [(f"w{i:03d}", (i * 37) % 101 + 1) for i in range(100)]
     cf = spark.createDataFrame(rows, "w string, c long")
     got = {
         r["w"]: (r["rnk"], r["cum"])
-        for r in textops._ranked_cumsum(
-            cf, [F.desc("c"), F.asc("w")], parts=7
+        for r in textops._grouped_cumsum(
+            cf.withColumn("g", F.lit("")),
+            "g",
+            [F.desc("c"), F.asc("w")],
+            "c",
+            parts=7,
         ).collect()
     }
     w = Window.orderBy(F.desc("c"), F.asc("w"))
@@ -423,7 +423,7 @@ def test_repetition_lines_ml_counts_real_lines(spark, tmp_path):
 
 def test_repetition_lines_ml_is_row_local(spark):
     """The dup-line fraction is a pure map: no Exchange in the plan."""
-    plan = _plan(REGISTRY["q_doc_repetition_lines_ml"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_doc_repetition_lines_ml"].spark(spark, SF_MED))
     assert "Exchange" not in plan, plan
 
 
@@ -561,7 +561,7 @@ def test_badwords_filter_flags_and_keeps(spark):
 
 
 def test_badwords_filter_single_exchange(spark):
-    plan = _plan(REGISTRY["q_badwords_filter"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_badwords_filter"].spark(spark, SF_MED))
     assert len(re.findall(r"\n\(\d+\) Exchange", plan)) == 1, plan
 
 
@@ -588,7 +588,7 @@ def test_host_quota_caps_and_keeps_largest(spark):
 
 
 def test_host_quota_plans_window_group_limit(spark):
-    plan = _plan(REGISTRY["q_host_quota"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_host_quota"].spark(spark, SF_MED))
     assert "WindowGroupLimit" in plan, plan
 
 
@@ -638,7 +638,7 @@ def test_inverted_index_postings_shape(spark):
 
 
 def test_inverted_index_plans_window_group_limit(spark):
-    plan = _plan(REGISTRY["q_inverted_index"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_inverted_index"].spark(spark, SF_MED))
     assert "WindowGroupLimit" in plan, plan
     release_caches(spark)
 
@@ -819,7 +819,7 @@ def test_pretrain_prep_stages_compose(spark):
     max_doc = max(r["n_tok"] for r in rows)
     assert all(s < 512 + max_doc for s in sums.values()), sums
     # no single-partition global window anywhere in the packing plan
-    plan = _plan(packed)
+    plan = formatted_plan(packed)
     assert "SinglePartition" not in plan, plan
     release_caches(spark)
 
@@ -827,7 +827,7 @@ def test_pretrain_prep_stages_compose(spark):
 def test_bigram_pmi_top_k_is_take_ordered(spark):
     """The global top-20 must plan as TakeOrderedAndProject (per-
     partition top-k + driver merge), never a full global Sort."""
-    plan = _plan(REGISTRY["q_bigram_pmi"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_bigram_pmi"].spark(spark, SF_MED))
     assert "TakeOrdered" in plan, plan
     release_caches(spark)
 
@@ -836,7 +836,7 @@ def test_dedup_lines_global_two_exchanges_no_cartesian(spark):
     """Owner agg + flag join + doc rollup collapse to two exchanges
     (AQE reuses the h-partitioning for the join); no cartesian or
     nested-loop join may appear."""
-    plan = _plan(REGISTRY["q_dedup_lines_global"].spark(spark, SF_MED))
+    plan = formatted_plan(REGISTRY["q_dedup_lines_global"].spark(spark, SF_MED))
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
     n_exchange = len(re.findall(r"\n\(\d+\) Exchange", plan))
     assert n_exchange <= 3, plan
@@ -855,7 +855,7 @@ def test_partitioned_sink_enables_partition_pruning(spark, tmp_path):
     out = str(tmp_path / "curated_by_lang")
     docs.repartition("lang").write.partitionBy("lang").parquet(out)
     rd = spark.read.parquet(out).filter(F.col("lang") == "en")
-    plan = _plan(rd)
+    plan = formatted_plan(rd)
     assert "PartitionFilters" in plan
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "lang" in m.group(1), plan

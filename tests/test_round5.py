@@ -17,6 +17,7 @@ from readembedability_spark.queries import (
     _resize,
     release_caches,
 )
+from helpers import formatted_plan, job_module
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -231,9 +232,7 @@ def test_crawl_frontier_plan_no_cartesian(spark):
     column must be the only extraction output consumed (column-pruned
     Python boundary)."""
     df = REGISTRY["q_crawl_frontier"].spark(spark, SF_SMALL)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Cartesian" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
     release_caches(spark)
@@ -244,9 +243,7 @@ def test_contamination_report_broadcasts_eval_side(spark):
     stream — never the reverse, and never a sort-merge join over the
     corpus gram table."""
     df = REGISTRY["q_contamination_report"].spark(spark, SF_SMALL)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan, plan
     release_caches(spark)
 
@@ -286,15 +283,6 @@ def test_pagerank_links_mass_conserved(spark):
     assert all(0 <= r["node"] < 20 for r in rows)
 
 
-def _job(name="pretrain_prep"):
-    import importlib
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
-    return importlib.import_module(name)
-
-
 # ---------------------------------------------------------------------------
 # VERDICT r04 #5 — seeded global shuffle + sharded write
 # ---------------------------------------------------------------------------
@@ -306,7 +294,7 @@ def test_shuffle_shards_deterministic_permutation(spark):
     seed yields a different permutation; shard ids stay in range."""
     import hashlib
 
-    pp = _job()
+    pp = job_module("pretrain_prep")
     docs = (
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         .select("doc_id", "text", "lang")
@@ -346,7 +334,7 @@ def test_written_shards_match_query_order_md5(spark, tmp_path):
 
     import readembedability_spark.textops as textops
 
-    pp = _job()
+    pp = job_module("pretrain_prep")
     docs = (
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         .select("doc_id", "text", "lang")
@@ -425,9 +413,7 @@ def test_q_shuffle_shards_no_single_partition_plan(spark):
     rollup is hash-keyed — the seeded permutation needs no global
     sort."""
     df = REGISTRY["q_shuffle_shards"].spark(spark, SF_SMALL)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "SinglePartition" not in plan, plan
     # the bounded head audit plans as a WindowGroupLimit (map-side
     # top-K pre-prune), not a full-shard sort feeding a collect_list
@@ -447,7 +433,7 @@ def test_q_shuffle_shards_no_single_partition_plan(spark):
 def test_prep_remove_dup_substrings_planted_span(spark):
     """Doc A (lower id) keeps the planted 8-gram span; doc B loses
     exactly that span; untouched docs pass through byte-identical."""
-    pp = _job()
+    pp = job_module("pretrain_prep")
     span = "alpha bravo charlie delta echo foxtrot golf hotel"
     docs = spark.createDataFrame(
         [
@@ -468,7 +454,7 @@ def test_pretrain_prep_substring_stage_composes(spark):
     """The optional stage slots between line dedup and exact dedup:
     output count is ≤ its input count and downstream stages still
     run on the cleaned text."""
-    pp = _job()
+    pp = job_module("pretrain_prep")
     docs = (
         spark.read.parquet(f"{SF_SMALL}/documents.parquet")
         .select("doc_id", "text", "lang")
@@ -561,7 +547,7 @@ def test_crawl_graph_job_composes(spark, tmp_path):
     from readembedability_spark.queries import _persist
     from readembedability_spark.textops import _link_pages, _pagerank
 
-    cg = _job("crawl_graph")
+    cg = job_module("crawl_graph")
     pages = _link_pages(spark, SF_SMALL)
     n_pages = pages.count()
     links = _persist(cg.extract_link_table(spark, pages))

@@ -10,23 +10,9 @@ from pyspark.sql import functions as F
 
 import readembedability_spark.textops  # noqa: F401 - registers entries
 from readembedability_spark.queries import REGISTRY, release_caches
+from helpers import formatted_plan, job_module
 
 SF_SMALL = "/root/testdata/sf0.001"
-
-
-def _job(name="crawl_graph"):
-    import importlib
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "jobs"))
-    return importlib.import_module(name)
-
-
-def _plan(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -40,7 +26,7 @@ def test_frontier_schedule_plan_and_cap(spark):
     product, and never forces a broadcast hint on the host-cardinality
     joins (counts/authority — VERDICT r05 wrong #1 class)."""
     df = REGISTRY["q_frontier_schedule"].spark(spark, SF_SMALL)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert "WindowGroupLimit" in plan, plan
     assert "CartesianProduct" not in plan, plan
     logical = str(df._jdf.queryExecution().logical())  # noqa: SLF001
@@ -93,7 +79,7 @@ def test_crawl_graph_annotate_no_forced_broadcast(spark):
     size check."""
     from readembedability_spark.textops import _link_pages
 
-    cg = _job()
+    cg = job_module("crawl_graph")
     pages = _link_pages(spark, SF_SMALL)
     ranks = spark.createDataFrame(
         [("h1.example.com", 0.5)], "host string, authority double"
@@ -121,7 +107,7 @@ def test_ann_ivf_pq_never_pairwise(spark):
     regression that nested-loops any OTHER pair of frames (e.g. the
     corpus against itself) raises the count and fails here."""
     df = REGISTRY["q_ann_ivf_pq"].spark(spark, "/root/testdata/sf0.01")
-    plan = _plan(df)
+    plan = formatted_plan(df)
     release_caches(spark)
     assert "CartesianProduct" not in plan, plan
     n_bnlj = plan.count("BroadcastNestedLoopJoin")
@@ -156,7 +142,7 @@ def test_sample_quality_zero_shuffle_and_rule(spark):
     import re
 
     df = REGISTRY["q_sample_quality"].spark(spark, SF_SMALL)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     assert not re.search(r"\n\(\d+\) Exchange", plan), plan
     kept = {r["doc_id"]: r["quality"] for r in df.collect()}
     quality = {
@@ -255,7 +241,7 @@ def test_corpus_report_sections_compose(spark):
     uniform while summing to 1."""
     import math
 
-    cr = _job("corpus_report")
+    cr = job_module("corpus_report")
     from readembedability_spark.textops import filter_funnel_from
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
@@ -299,7 +285,7 @@ def test_bpe_token_counts_match_registry_tokenizer(spark):
     """The job's bpe_token_counts (train-on-these-docs + broadcast
     apply) reproduces exactly the registry tokenizer's per-doc
     n_bpe_tokens when run over the same documents table."""
-    pp = _job("pretrain_prep")
+    pp = job_module("pretrain_prep")
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "text", "lang"
     )
@@ -318,7 +304,7 @@ def test_bpe_token_counts_match_registry_tokenizer(spark):
 def test_pack_sequences_bins_by_supplied_token_counts(spark):
     """pack_sequences with a token_counts table sizes bins by THOSE
     counts (recomputed in python), not whitespace counts."""
-    pp = _job("pretrain_prep")
+    pp = job_module("pretrain_prep")
     docs = spark.createDataFrame(
         [(i, "en", "w " * (i + 1)) for i in range(10)],
         "doc_id long, lang string, text string",
@@ -346,7 +332,7 @@ def test_crawl_graph_schedule_stage_composes(spark):
     from readembedability_spark.queries import _persist
     from readembedability_spark.textops import _link_pages, _pagerank
 
-    cg = _job()
+    cg = job_module("crawl_graph")
     pages = _link_pages(spark, SF_SMALL)
     links = _persist(cg.extract_link_table(spark, pages))
     ranks = _pagerank(spark, cg.host_edges(links)).withColumnsRenamed(

@@ -13,14 +13,9 @@ from pyspark.sql import functions as F
 import readembedability_spark.textops as textops  # noqa: F401
 from readembedability_spark.queries import REGISTRY, release_caches
 from readembedability_spark.textops import _grouped_cumsum
+from helpers import formatted_plan, job_module, pdf_blob, write_docs
 
 SF_SMALL = "/root/testdata/sf0.001"
-
-
-def _plan(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -51,7 +46,7 @@ def test_pack_family_no_per_lang_window(spark):
     WindowGroupLimit top-K, partitioned by the 8-way shard key)."""
     for name in _PACK_FAMILY:
         df = REGISTRY[name].spark(spark, SF_SMALL)
-        plan = _plan(df)
+        plan = formatted_plan(df)
         assert "SinglePartition" not in plan, (name, plan)
         specs = _window_specs(plan)
         assert specs, (name, "expected windowed plan")
@@ -135,17 +130,13 @@ def test_grouped_cumsum_high_cardinality_groups(spark):
 # ---------------------------------------------------------------------------
 
 
-def _pdf(body: bytes) -> bytes:
-    return b"%PDF-1.4\nstream\n" + body + b"\nendstream\n%%EOF"
-
-
 def test_pdf_layout_two_column_reads_column_major():
     """A stream that interleaves two columns row-by-row (real
     multi-column layout streams do) must emit column 1 top-to-bottom,
     then column 2 — not the interleaved stream order."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 50 700 Td (C1L1) Tj 250 0 Td (C2L1) Tj "
         b"-250 -20 Td (C1L2) Tj 250 0 Td (C2L2) Tj ET"
     )
@@ -156,7 +147,7 @@ def test_pdf_layout_reordered_blocks_sort_by_position():
     """BT blocks planted out of page order re-sort by Td position."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 72 600 Td (below) Tj ET\nBT 72 700 Td (above) Tj ET"
     )
     assert extract_pdf_text(blob) == "above\nbelow"
@@ -167,7 +158,7 @@ def test_pdf_layout_td_leading_and_quote():
     it — three lines in reading order."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 72 700 Td 0 -14 TD (first) Tj T* (second) Tj (third) ' ET"
     )
     assert extract_pdf_text(blob) == "first\nsecond\nthird"
@@ -179,7 +170,7 @@ def test_pdf_no_positioning_keeps_stream_order():
     sort is a no-op, so the layout change is backward-compatible."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT (Hello ) Tj (world.) Tj ET\n"
         b"BT [(Second) -250 ( line)] TJ ET"
     )
@@ -244,17 +235,6 @@ def test_extract_anchors_nofollow_rule():
 # ---------------------------------------------------------------------------
 
 
-def _job(name):
-    import importlib
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(
-        0, str(Path(__file__).resolve().parent.parent / "jobs")
-    )
-    return importlib.import_module(name)
-
-
 def test_full_pipeline_composes_both_halves(spark, tmp_path, monkeypatch,
                                             capsys):
     """The end-to-end program: ONE persisted extraction pass feeds the
@@ -270,7 +250,7 @@ def test_full_pipeline_composes_both_halves(spark, tmp_path, monkeypatch,
 
     import pyarrow.parquet as pq_
 
-    fp = _job("full_pipeline")
+    fp = job_module("full_pipeline")
     out = tmp_path / "full"
     monkeypatch.setattr(
         sys,
@@ -373,7 +353,7 @@ def test_corpus_report_written_sections_read_back(spark, tmp_path,
 
     import pyarrow.parquet as pq_
 
-    cr = _job("corpus_report")
+    cr = job_module("corpus_report")
     out = tmp_path / "report"
     monkeypatch.setattr(
         sys,
@@ -557,7 +537,7 @@ def test_host_quality_prior_shrinks_toward_global_mean(spark):
             r["shrunk_quality"] - 0.55
         ) < 1e-3  # flag computed pre-round; allow the boundary ulp
     # a 1-row prior must come in as a broadcast, not a shuffle join
-    plan = _plan(REGISTRY["q_host_quality_prior"].spark(spark, SF_SMALL))
+    plan = formatted_plan(REGISTRY["q_host_quality_prior"].spark(spark, SF_SMALL))
     release_caches(spark)
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan
@@ -906,28 +886,6 @@ def test_minhash_calibration_buckets_and_universe(spark):
 # ---------------------------------------------------------------------------
 
 import duckdb as _duckdb
-import pandas as _pd
-import pyarrow as _pa
-import pyarrow.parquet as _pq_mod
-
-
-def _write_docs(d, rows):
-    pdf = _pd.DataFrame(
-        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
-    )
-    tbl = _pa.Table.from_pandas(
-        pdf,
-        schema=_pa.schema(
-            [
-                ("doc_id", _pa.int64()),
-                ("text", _pa.string()),
-                ("lang", _pa.string()),
-                ("source", _pa.string()),
-                ("n_chars", _pa.int64()),
-            ]
-        ),
-    )
-    _pq_mod.write_table(tbl, str(d / "documents.parquet"))
 
 
 def _oracle_rows(sf_dir, name):
@@ -944,7 +902,7 @@ def test_length_drift_all_early_corpus_null_late_shares(spark, tmp_path):
     """A single-doc corpus puts every doc in the early half: late_n = 0
     and the late-share divisions are NULL in BOTH engines (no crash,
     no 0-divide) — the degenerate first crawl batch."""
-    _write_docs(tmp_path, [(0, "alpha beta gamma delta", "en", "s0", 22)])
+    write_docs(tmp_path, [(0, "alpha beta gamma delta", "en", "s0", 22)])
     s = sorted(
         tuple(r)
         for r in REGISTRY["q_length_drift"].spark(spark, str(tmp_path)).collect()
@@ -972,7 +930,7 @@ def test_containment_and_calibration_empty_on_all_unique(spark, tmp_path):
         )
         for i in range(6)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     for name in ("q_dedup_containment", "q_minhash_calibration"):
         s = sorted(
             tuple(r)
@@ -986,7 +944,7 @@ def test_context_truncation_empty_text_doc(spark, tmp_path):
     """Empty-string text still counts 1 whitespace token in BOTH
     engines (split('') = ['']) — the established q_token_count surface
     — so totals stay consistent instead of diverging on empties."""
-    _write_docs(tmp_path, [(0, "", "en", "s0", 0), (1, "a b", "en", "s0", 3)])
+    write_docs(tmp_path, [(0, "", "en", "s0", 0), (1, "a b", "en", "s0", 3)])
     s = sorted(
         tuple(r)
         for r in REGISTRY["q_context_truncation"]
@@ -1004,7 +962,7 @@ def test_source_novelty_drops_shingleless_sources(spark, tmp_path):
     shingles and is absent from the report in BOTH engines (a join
     semantics pin, so a refactor to outer joins can't silently change
     the contract)."""
-    _write_docs(
+    write_docs(
         tmp_path,
         [
             (0, "too short", "en", "tiny", 9),

@@ -9,11 +9,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from readembedability_spark.textops import (
-    _cumsum_parts,
-    _grouped_cumsum,
-    _ranked_cumsum,
-)
+from readembedability_spark.textops import _cumsum_parts, _grouped_cumsum
+from helpers import formatted_plan, pdf_blob, write_docs
 
 SF_SMALL = "/root/testdata/sf0.001"
 
@@ -35,18 +32,18 @@ def test_cumsum_parts_derived_from_cluster(spark):
 
 
 def test_ranked_cumsum_derived_parts_matches_window(spark):
-    """With DERIVED parts (no explicit override), _ranked_cumsum still
-    equals the global-window result exactly, and the physical plan
-    carries the derived range-partition count."""
+    """With DERIVED parts (no explicit override), _grouped_cumsum over
+    one constant group still equals the global-window result exactly,
+    and the physical plan carries the derived range-partition count."""
     rows = [(f"w{i:04d}", (i * 13) % 29 + 1) for i in range(500)]
     df = spark.createDataFrame(rows, "w string, c long")
-    out = _ranked_cumsum(df, [F.desc("c"), F.asc("w")])
+    out = _grouped_cumsum(
+        df.withColumn("g", F.lit("")), "g", [F.desc("c"), F.asc("w")], "c"
+    )
     derived = max(spark.sparkContext.defaultParallelism * 2, 16)
     # the range exchange the construction is built on carries the
     # derived count (the windows themselves re-shuffle on _pid)
-    plan = out._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        out._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(out)
     assert f"rangepartitioning" in plan and f", {derived})" in plan, plan
     got = {r["w"]: (r["rnk"], r["cum"]) for r in out.collect()}
     acc = 0
@@ -104,17 +101,13 @@ def test_grouped_cumsum_derived_parts_straddler_bound(spark):
 # ---------------------------------------------------------------------------
 
 
-def _pdf(body: bytes) -> bytes:
-    return b"%PDF-1.4\nstream\n" + body + b"\nendstream\n%%EOF"
-
-
 def test_pdf_tm_translation_orders_lines():
     """A stream positioning exclusively via Tm (generated reports) gets
     layout order: blocks planted bottom-first re-sort top-to-bottom by
     the Tm translation (e, f)."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 1 0 0 1 72 600 Tm (below) Tj ET\n"
         b"BT 1 0 0 1 72 700 Tm (above) Tj ET"
     )
@@ -126,7 +119,7 @@ def test_pdf_tm_mid_block_starts_new_line():
     absolute position — scale/rotation components are ignored (D-7)."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 2 0 0 2 72 650 Tm (second) Tj "
         b"0.5 0 0 0.5 72 700 Tm (first) Tj ET"
     )
@@ -138,7 +131,7 @@ def test_pdf_tm_then_td_moves_relative():
     Tm-anchored paragraph with Td line advances reads in order."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 1 0 0 1 100 500 Tm (para top) Tj 0 -14 Td (para next) Tj ET\n"
         b"BT 1 0 0 1 100 700 Tm (header) Tj ET"
     )
@@ -149,7 +142,7 @@ def test_pdf_tm_decimal_and_negative_components():
     """Tm components may be decimal/negative; only (e, f) position."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(
+    blob = pdf_blob(
         b"BT 1.0 0 0 -1.0 72.5 600.25 Tm (lo) Tj ET\n"
         b"BT -1 0.0 0 1 72.5 700.75 Tm (hi) Tj ET"
     )
@@ -161,7 +154,7 @@ def test_pdf_no_positioning_still_stream_order_after_tm_change():
     fallback: streams without any positioning ops keep stream order."""
     from readembedability_spark.extractor.pdftext import extract_pdf_text
 
-    blob = _pdf(b"BT (one ) Tj (two.) Tj ET\nBT (three) Tj ET")
+    blob = pdf_blob(b"BT (one ) Tj (two.) Tj ET\nBT (three) Tj ET")
     assert extract_pdf_text(blob) == "one two.\nthree"
 
 
@@ -209,25 +202,6 @@ import pyarrow as _pa
 import pyarrow.parquet as _pq_mod
 
 from readembedability_spark.queries import REGISTRY, release_caches
-
-
-def _write_docs(d, rows):
-    pdf = _pd.DataFrame(
-        rows, columns=["doc_id", "text", "lang", "source", "n_chars"]
-    )
-    tbl = _pa.Table.from_pandas(
-        pdf,
-        schema=_pa.schema(
-            [
-                ("doc_id", _pa.int64()),
-                ("text", _pa.string()),
-                ("lang", _pa.string()),
-                ("source", _pa.string()),
-                ("n_chars", _pa.int64()),
-            ]
-        ),
-    )
-    _pq_mod.write_table(tbl, str(d / "documents.parquet"))
 
 
 def _write_events(d, rows):
@@ -304,7 +278,7 @@ def test_bm25_eval_self_retrieval_and_empty_query_set(spark, tmp_path):
     rank 1 (mrr 1.0); a corpus whose query doc has < 3 tokens yields
     an EMPTY query set — n_queries 0 and mrr NULL in both engines,
     not a divide-by-zero."""
-    _write_docs(
+    write_docs(
         tmp_path,
         [
             (0, "alpha beta gamma delta epsilon zeta", "en", "s0", 36),
@@ -314,7 +288,7 @@ def test_bm25_eval_self_retrieval_and_empty_query_set(spark, tmp_path):
     s = _spark_rows(spark, tmp_path, "q_bm25_eval")
     assert s == _oracle_rows(tmp_path, "q_bm25_eval")
     assert s == [(1, 1, 1.0)]
-    _write_docs(tmp_path, [(0, "just two", "en", "s0", 8)])
+    write_docs(tmp_path, [(0, "just two", "en", "s0", 8)])
     s = _spark_rows(spark, tmp_path, "q_bm25_eval")
     assert s == _oracle_rows(tmp_path, "q_bm25_eval")
     assert s[0][0] == 0 and s[0][2] is None
@@ -330,7 +304,7 @@ def test_split_by_host_leak_audit_counts_straddled_hosts(spark, tmp_path):
         (i, "w" + str(i) + " lorem ipsum dolor sit amet", "en", "s0", 30)
         for i in range(120)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_split_by_host")
     assert s == _oracle_rows(tmp_path, "q_split_by_host")
 
@@ -365,7 +339,7 @@ def test_band_tuning_monotone_in_bands_and_shared_pairs(spark, tmp_path):
          "en", "s0", 100)
         for i in range(12)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_minhash_band_tuning")
     assert s == _oracle_rows(tmp_path, "q_minhash_band_tuning")
     assert len(s) == 4
@@ -414,7 +388,7 @@ def test_dedup_recall_null_not_crash_on_all_unique(spark, tmp_path):
     """An all-unique corpus has ZERO ground-truth near-dup pairs: the
     recall ratio must be NULL in both engines (SCALE.md round-7 note —
     Spark ANSI used to throw DIVIDE_BY_ZERO here)."""
-    _write_docs(
+    write_docs(
         tmp_path,
         [
             (i, " ".join(f"tok{i}x{j}" for j in range(30)), "en", "s0", 200)
@@ -679,7 +653,7 @@ def test_token_budget_mixture_epoch_cap(spark, tmp_path):
         rows.append((i, " ".join(["wort"] * 10), "de", "web", 10))
     # xx: not in _MIX_TARGETS -> no output row
     rows.append((62, " ".join(["zz"] * 5), "xx", "web", 5))
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_token_budget_mixture")
     assert s == _oracle_rows(tmp_path, "q_token_budget_mixture")
     by_lang = {r[0]: r for r in s}
@@ -789,12 +763,6 @@ def test_archive_index_job_composes(spark, tmp_path, monkeypatch, capsys):
 # ---------------------------------------------------------------------------
 
 
-def _fmt_plan(df):
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
-
-
 def test_redirect_resolve_closed_form_and_bounded_plan(spark, tmp_path):
     """Pointer jumping reaches every chain end in exactly 3 doubling
     rounds (chains ≤ 7 hops), planted 2-cycles come out resolved=false
@@ -807,7 +775,7 @@ def test_redirect_resolve_closed_form_and_bounded_plan(spark, tmp_path):
     import re as _re
 
     rows = [(i, "text " + str(i), "en", "s0", 20) for i in range(128)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_redirect_resolve")
     assert s == _oracle_rows(tmp_path, "q_redirect_resolve")
 
@@ -823,7 +791,7 @@ def test_redirect_resolve_closed_form_and_bounded_plan(spark, tmp_path):
         else:
             assert resolved and hops == i % 8 and final == u(i - i % 8)
 
-    plan = _fmt_plan(REGISTRY["q_redirect_resolve"].spark(spark, str(tmp_path)))
+    plan = formatted_plan(REGISTRY["q_redirect_resolve"].spark(spark, str(tmp_path)))
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
     joins = _re.findall(
@@ -840,7 +808,7 @@ def test_host_boilerplate_page_floor_boundary(spark, tmp_path):
     # host 1: ids 1,41,...,321 (9 pages, all odd → NAV only)
     ids = [40 * k for k in range(10)] + [40 * k + 1 for k in range(9)]
     rows = [(i, f"unique body text {i}", "en", "s0", 20) for i in ids]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_host_boilerplate")
     assert s == _oracle_rows(tmp_path, "q_host_boilerplate")
     by_host = {r[0]: r for r in s}
@@ -853,7 +821,7 @@ def test_host_boilerplate_page_floor_boundary(spark, tmp_path):
     # host 1: 9 pages < floor → zero boilerplate despite NAV at 100%
     assert h1[1] == 9 and h1[3] == 0 and h1[4] == 0 and h1[6] == 0
     # exactly one explode feeds the (host, line) aggregate
-    plan = _fmt_plan(REGISTRY["q_host_boilerplate"].spark(spark, str(tmp_path)))
+    plan = formatted_plan(REGISTRY["q_host_boilerplate"].spark(spark, str(tmp_path)))
     import re as _re
 
     assert len(_re.findall(r"\(\d+\) Generate", plan)) == 1, plan
@@ -865,7 +833,7 @@ def test_mime_sniff_matrix_and_joinless_plan(spark, tmp_path):
     masses add up to the corpus, and the plan is a scan + one pair-
     keyed aggregate — no join of any kind."""
     rows = [(i, "plain body " + str(i), "en", "s0", 20) for i in range(84)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_mime_sniff")
     assert s == _oracle_rows(tmp_path, "q_mime_sniff")
     assert sum(r[2] for r in s) == 84
@@ -878,7 +846,7 @@ def test_mime_sniff_matrix_and_joinless_plan(spark, tmp_path):
         "application/pdf", "application/gzip", "image/gif",
         "application/zip", "text/html", "text/plain",
     }
-    plan = _fmt_plan(REGISTRY["q_mime_sniff"].spark(spark, str(tmp_path)))
+    plan = formatted_plan(REGISTRY["q_mime_sniff"].spark(spark, str(tmp_path)))
     assert "Join" not in plan, plan
 
 
@@ -913,7 +881,7 @@ def test_canonical_clusters_single_aggregate_no_window(spark, tmp_path):
     import re as _re
 
     rows = [(i, "body " + str(i), "en", "s0", 100 + i) for i in range(40)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_canonical_clusters")
     assert s == _oracle_rows(tmp_path, "q_canonical_clusters")
     by_canon = {r[0]: r for r in s}
@@ -925,7 +893,7 @@ def test_canonical_clusters_single_aggregate_no_window(spark, tmp_path):
         else:
             assert captured and n == 4 and keeper == canon
         assert dup > 0
-    plan = _fmt_plan(
+    plan = formatted_plan(
         REGISTRY["q_canonical_clusters"].spark(spark, str(tmp_path))
     )
     assert "Join" not in plan and "Window" not in plan, plan
@@ -954,7 +922,7 @@ def test_postings_compression_varint_boundaries(spark, tmp_path):
         if i in edge_b:
             toks.append("edgeB")
         rows.append((i, " ".join(toks), "en", "s0", 20))
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_postings_compression")
     assert s == _oracle_rows(tmp_path, "q_postings_compression")
     by_class = {r[0]: r for r in s}
@@ -982,7 +950,7 @@ def test_warc_records_framing_and_plan(spark, tmp_path):
     rows = [(i, f"payload body {i}", "en", "s0", 20) for i in range(30)]
     rows[3] = (3, "", "en", "s0", 0)  # empty payload
     rows[5] = (5, "trap Content-Length: 999 inside", "en", "s0", 30)
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_warc_records")
     assert s == _oracle_rows(tmp_path, "q_warc_records")
     by_file = {r[0]: r for r in s}
@@ -991,7 +959,7 @@ def test_warc_records_framing_and_plan(spark, tmp_path):
     exp1 = sum(len(r[1]) for r in rows[25:])
     assert by_file[0][1:4] == (25, exp0, 25)  # n_records, bytes, n_ok
     assert by_file[1][1:4] == (5, exp1, 5)
-    plan = _fmt_plan(REGISTRY["q_warc_records"].spark(spark, str(tmp_path)))
+    plan = formatted_plan(REGISTRY["q_warc_records"].spark(spark, str(tmp_path)))
     assert "Window" not in plan and "Join" not in plan, plan
     aggs = _re.findall(
         r"\(\d+\) (?:HashAggregate|ObjectHashAggregate|SortAggregate)", plan
@@ -1030,7 +998,7 @@ def test_sitemap_parse_duplicates_and_plan(spark, tmp_path):
     assert by_host["site1.example.com"] == (
         "site1.example.com", 1, 1, "2024-03-01", 600000
     )
-    plan = _fmt_plan(REGISTRY["q_sitemap_parse"].spark(spark, str(tmp_path)))
+    plan = formatted_plan(REGISTRY["q_sitemap_parse"].spark(spark, str(tmp_path)))
     assert "Window" not in plan and "Join" not in plan, plan
     aggs = _re.findall(
         r"\(\d+\) (?:HashAggregate|ObjectHashAggregate|SortAggregate)", plan
@@ -1099,7 +1067,7 @@ def test_registrable_domain_psl_and_broadcast(spark, tmp_path):
     assert by_reg["s0.com"][1:] == ("com", 1, 1)
     assert by_reg["s3.github.io"][1:] == ("github.io", 1, 1)
     assert "co.uk" not in by_reg  # naive last-2 grouping would emit it
-    plan = _fmt_plan(
+    plan = formatted_plan(
         REGISTRY["q_registrable_domain"].spark(spark, str(tmp_path))
     )
     assert "BroadcastHashJoin" in plan, plan
@@ -1144,7 +1112,7 @@ def test_syndication_singletons_and_primary(spark, tmp_path):
     import re as _re
 
     rows = [(i, "body " + str(i), "en", "s0", 100) for i in range(20)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_syndication")
     assert s == _oracle_rows(tmp_path, "q_syndication")
     by_primary = {r[3]: r for r in s}
@@ -1157,7 +1125,7 @@ def test_syndication_singletons_and_primary(spark, tmp_path):
     assert by_primary[1][4] == "h1.example.com"
     assert by_primary[8][4] == "h8.example.com"
     assert by_primary[8][5] == 1000000  # 4 hosts / 4 copies
-    plan = _fmt_plan(REGISTRY["q_syndication"].spark(spark, str(tmp_path)))
+    plan = formatted_plan(REGISTRY["q_syndication"].spark(spark, str(tmp_path)))
     assert "Window" not in plan and "Join" not in plan, plan
     aggs = _re.findall(
         r"\(\d+\) (?:HashAggregate|ObjectHashAggregate|SortAggregate)", plan
@@ -1185,7 +1153,7 @@ def test_embedding_drift_identities(spark, tmp_path):
     by_label = {r[0]: r[1:] for r in s}
     assert by_label[0] == (1.0, 0.0)
     assert by_label[1][0] == 0.0
-    plan = _fmt_plan(
+    plan = formatted_plan(
         REGISTRY["q_embedding_drift"].spark(spark, str(tmp_path))
     )
     assert "Window" not in plan and "Join" not in plan, plan
@@ -1361,7 +1329,7 @@ def test_cdc_chunks_matches_python_reference(spark, tmp_path):
     for i in range(16):
         rows.append((i, base + f" suffix{i} end{i} tail{i}", "en",
                      "s0", 100))
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_cdc_chunks")
     assert s == _oracle_rows(tmp_path, "q_cdc_chunks")
     # effective texts after the family-share rule the query applies
@@ -1441,7 +1409,7 @@ def test_index_prune_monotone_and_top16_plan(spark):
     loss = [r[5] for r in rows]
     assert saved == sorted(saved) and loss == sorted(loss)
     assert all(r[3] == rows[0][3] for r in rows)  # shared query-term N
-    plan = _fmt_plan(
+    plan = formatted_plan(
         REGISTRY["q_index_prune"].spark(spark, SF_SMALL)
     )
     assert "TakeOrderedAndProject" in plan, plan
@@ -1490,7 +1458,7 @@ def test_robots_crawl_debt_regimes(spark, tmp_path):
     assert by_host["h2.example.com"] == (3, 3, 1000000, True)
     assert by_host["h3.example.com"] == (3, 0, 0, False)
     assert by_host["h4.example.com"] == (2, 0, 0, False)
-    plan = _fmt_plan(
+    plan = formatted_plan(
         REGISTRY["q_robots_crawl_debt"].spark(spark, str(tmp_path))
     )
     assert "Window" not in plan, plan
@@ -1503,7 +1471,7 @@ def test_span_corruption_exact_transform(spark, tmp_path):
     import hashlib as hl
 
     words = [f"t{i}" for i in range(1, 26)]
-    _write_docs(tmp_path, [(0, " ".join(words), "en", "s0", 100)])
+    write_docs(tmp_path, [(0, " ".join(words), "en", "s0", 100)])
     s = _spark_rows(spark, tmp_path, "q_span_corruption")
     assert s == _oracle_rows(tmp_path, "q_span_corruption")
     (lang, n_docs, toks, corrupted, ppm, spans, digest), = s
@@ -1525,7 +1493,7 @@ def test_index_merge_classes_and_identities(spark, tmp_path):
     postings exactly."""
     rows = [(i, "shared tok" + str(i % 2), "en", "s0", 30)
             for i in range(20)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_index_merge")
     assert s == _oracle_rows(tmp_path, "q_index_merge")
     by_class = {r[0]: r[1:] for r in s}
@@ -1574,7 +1542,7 @@ def test_link_depth_bfs_min_distance(spark, tmp_path):
     unreachable (-1), and a first-visit BFS that never re-relaxes a
     longer path would overstate depth for hosts reachable both ways."""
     rows = [(i, "t", "en", "s0", 1) for i in range(100)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_link_depth")
     assert s == _oracle_rows(tmp_path, "q_link_depth")
     depth = {r[0]: r[1] for r in s}
@@ -1593,11 +1561,9 @@ def test_audio_chunks_ragged_tail_and_batch_fanout(spark, tmp_path):
     and the fan-out happens inside the Arrow batch (no explode/Generate
     node in the plan)."""
     # n_bytes 3 -> n = 9 % 2000 + 400 = 409 -> chunks 400 + 9
-    _write_docs(tmp_path, [(7, "abc", "en", "s0", 3)])
+    write_docs(tmp_path, [(7, "abc", "en", "s0", 3)])
     df = REGISTRY["q_audio_chunks"].spark(spark, str(tmp_path))
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
+    plan = formatted_plan(df)
     assert "Generate" not in plan  # fan-out is in-batch, not explode
     s = _spark_rows(spark, tmp_path, "q_audio_chunks")
     assert s == _oracle_rows(tmp_path, "q_audio_chunks")
@@ -1614,7 +1580,7 @@ def test_http_cache_all_six_classes(spark, tmp_path):
     only in the max-age classes, and revalidatability follows the
     validator headers exactly."""
     rows = [(i, "t", "en", "s0", 1) for i in range(14)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_http_cache")
     assert s == _oracle_rows(tmp_path, "q_http_cache")
     by_cls = {r[0]: r for r in s}
@@ -1636,7 +1602,7 @@ def test_unicode_normalize_classes(spark, tmp_path):
     fixpoints — a normalizer that composes nothing (or re-encodes
     everything) fails one side or the other."""
     rows = [(i, "plain ascii text", "en", "s0", 16) for i in range(12)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_unicode_normalize")
     assert s == _oracle_rows(tmp_path, "q_unicode_normalize")
     by_cls = {r[0]: r for r in s}
@@ -1661,7 +1627,7 @@ def test_lang_mismatch_all_classes(spark, tmp_path):
         # declared en, no stopwords at all -> undetermined
         (4, "zz qq xx", "en", "s0", 8),
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_lang_mismatch")
     assert s == _oracle_rows(tmp_path, "q_lang_mismatch")
     cells = {(r[0], r[1]): r for r in s}
@@ -1823,7 +1789,7 @@ def test_compression_ratio_matches_zlib_reference(spark, tmp_path):
             for i in range(80)),
         3: "ham " * 300,                       # repetitive again
     }
-    _write_docs(
+    write_docs(
         tmp_path, [(k, v, "en", "s0", len(v)) for k, v in texts.items()]
     )
     s = _spark_rows(spark, tmp_path, "q_compression_ratio")
@@ -1895,7 +1861,7 @@ def test_freshness_weights_exact_decay_and_share(spark, tmp_path):
     rows = [
         (i, "w " * 4, "en", "s", 8) for i in range(400)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_freshness_weights")
     assert s == _oracle_rows(tmp_path, "q_freshness_weights")
     per_source = {}
@@ -1921,7 +1887,7 @@ def test_zipf_fit_matches_python_reference(spark, tmp_path):
     rows = []
     for i in range(0, len(words), 7):
         rows.append((i, " ".join(words[i : i + 7]), "en", "s", 1))
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_zipf_fit")
     assert s == _oracle_rows(tmp_path, "q_zipf_fit")
     (lang, n_ranks, top_mass, slope_micro, intercept_milli) = s[0]
@@ -1958,7 +1924,7 @@ def test_entity_density_closed_form(spark, tmp_path):
     'Later', all-caps 'NASA') never count; with doc_ids covering all
     residues the distinct-entity set is all 7 names + 11 cities."""
     rows = [(i, "x", "en", "s", 1) for i in range(77)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_entity_density")
     assert s == _oracle_rows(tmp_path, "q_entity_density")
     (source, n_docs, n_tokens, n_entities, ppm, n_distinct) = s[0]
@@ -1981,7 +1947,7 @@ def test_readability_forcast_closed_form(spark, tmp_path):
         (3, "zz qq window", "en", "s", 12),                    # vowelless=1
         (4, "operationally cat", "en", "s", 17),               # complex
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_readability")
     assert s == _oracle_rows(tmp_path, "q_readability")
     by_id = {r[0]: r for r in s}
@@ -2083,7 +2049,7 @@ def test_wet_convert_parity_and_script_ordering(spark, tmp_path):
         (i, f"alpha beta gamma {i}", "en", f"s{i % 3}", 17)
         for i in range(50)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_wet_convert")
     assert s == _oracle_rows(tmp_path, "q_wet_convert")
     assert [r[0] for r in s] == [0, 1]  # 50 docs / 25 per file
@@ -2124,7 +2090,7 @@ def test_heading_outline_classes(spark, tmp_path):
     count), a page with one h1 that jumps 2->4 is 'skip' not 'clean',
     a multi-h1 page wins over its own skip, and deep counts only h4+."""
     rows = [(i, f"t {i}", "en", "s", 3) for i in range(12)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_heading_outline")
     assert s == _oracle_rows(tmp_path, "q_heading_outline")
     got = {r[0]: r[1:] for r in s}  # class -> (pages, headings, h1, deep)
@@ -2249,7 +2215,7 @@ def test_gibberish_detect_classes(spark, tmp_path):
     empty page short-circuits every ratio."""
     clean = "the quick brown fox jumps over a lazy dog"
     rows = [(i, clean, "en", "s", len(clean)) for i in range(12)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_gibberish_detect")
     assert s == _oracle_rows(tmp_path, "q_gibberish_detect")
     got = {r[0]: r[1:] for r in s}  # class -> (docs, chars, vppm, run7)
@@ -2271,7 +2237,7 @@ def test_citation_density_classes(spark, tmp_path):
     'refs-only', and density is floor(total markers * 1e6 / chars)."""
     base = "plain body with no citations"
     rows = [(i, base, "en", "s", len(base)) for i in range(10)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_citation_density")
     assert s == _oracle_rows(tmp_path, "q_citation_density")
     got = {r[0]: r[1:] for r in s}
@@ -2368,7 +2334,7 @@ def test_ndcg_eval_rotation_lattice(spark, tmp_path):
     the perfectly-descending rotation scores exactly 1000000 ppm; the
     mean/min are the exact integer values recomputed in python."""
     rows = [(i, "t", "en", "s", 1) for i in range(50)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_ndcg_eval")
     assert s == _oracle_rows(tmp_path, "q_ndcg_eval")
     disc = {1: 1000, 2: 630, 3: 500, 4: 431, 5: 386}
@@ -2579,7 +2545,7 @@ def test_countmin_sketch_exact_recompute(spark, tmp_path):
     import hashlib as _hl
 
     rows = [(i, f"w{i:03d} common", "en", "s", 10) for i in range(300)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_countmin_sketch")
     assert s == _oracle_rows(tmp_path, "q_countmin_sketch")
     # python replica
@@ -2768,7 +2734,7 @@ def test_mojibake_classes(spark, tmp_path):
         (i, "plain ascii text long enough", "en", "s0", 29)
         for i in range(10)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_mojibake_detect")
     assert s == _oracle_rows(tmp_path, "q_mojibake_detect")
     got = {r[0]: r[1:3] for r in s}
@@ -2786,7 +2752,7 @@ def test_truncation_classes(spark, tmp_path):
     <div> with a proper close is unbalanced (deficit 1 each), and
     the complete page carries zero deficit."""
     rows = [(i, "body text", "en", "s0", 9) for i in range(8)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_truncation_detect")
     assert s == _oracle_rows(tmp_path, "q_truncation_detect")
     got = {r[0]: r[1:3] for r in s}
@@ -2822,7 +2788,7 @@ def test_parked_domain_classes(spark, tmp_path):
         (i, "substantial real content " * 3, "en", "s0", 75)
         for i in range(10)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_parked_domain")
     assert s == _oracle_rows(tmp_path, "q_parked_domain")
     got = {r[0]: r[1:3] for r in s}
@@ -3026,7 +2992,7 @@ def test_bitext_mine_ratio_gate(spark, tmp_path):
     5x-too-short fr stub is rejected, and usable char mass sums the
     accepted target lengths exactly."""
     rows = [(i, "t", "en", "s0", 1) for i in range(16)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_bitext_mine")
     assert s == _oracle_rows(tmp_path, "q_bitext_mine")
     got = {r[0]: r[1:] for r in s}
@@ -3041,7 +3007,7 @@ def test_dom_nesting_depths(spark, tmp_path):
     page that uses them still peaks at 3, with its tag count intact
     (opens without closes counted as tags, not as depth)."""
     rows = [(i, "t", "en", "s0", 1) for i in range(8)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_dom_nesting")
     assert s == _oracle_rows(tmp_path, "q_dom_nesting")
     got = {r[0]: (r[1], r[2]) for r in s}
@@ -3059,7 +3025,7 @@ def test_split_leakage_contrast(spark, tmp_path):
     leaks on ZERO hosts by construction — the contrast the audit
     exists to show."""
     rows = [(i, "t", "en", "s0", 1) for i in range(100)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_split_leakage")
     assert s == _oracle_rows(tmp_path, "q_split_leakage")
     got = {r[0]: r[1:4] for r in s}
@@ -3082,7 +3048,7 @@ def test_instruction_detect_classes(spark, tmp_path):
         (i, "plain prose long enough to matter", "en", "s0", 33)
         for i in range(10)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_instruction_detect")
     assert s == _oracle_rows(tmp_path, "q_instruction_detect")
     got = {r[0]: r[1:3] for r in s}
@@ -3101,7 +3067,7 @@ def test_script_mix_homoglyph(spark, tmp_path):
         (i, "plain latin corpus text", "en", "s0", 24)
         for i in range(10)
     ]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_script_mix")
     assert s == _oracle_rows(tmp_path, "q_script_mix")
     got = {r[0]: r[1] for r in s}
@@ -3155,7 +3121,7 @@ def test_hidden_text_stuffing(spark, tmp_path):
     hidden-minor (legitimate templates do this), clean pages carry
     zero hidden mass, and hidden_ppm is the poisoned share."""
     rows = [(i, "t", "en", "s0", 1) for i in range(8)]
-    _write_docs(tmp_path, rows)
+    write_docs(tmp_path, rows)
     s = _spark_rows(spark, tmp_path, "q_hidden_text")
     assert s == _oracle_rows(tmp_path, "q_hidden_text")
     got = {r[0]: r[1:3] for r in s}

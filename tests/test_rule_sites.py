@@ -37,6 +37,7 @@ RULES = {
     "ledger_batch": (r"pd\.concat\(list\(pdfs\)", 1),
     "ledger_wiring": (r"applyInPandasWithState\(", 3),
     # textops.py
+    "jaccard": (r'F\.col\("sza"\) \+ F\.col\("szb"\)', 1),
     "politeness_verdict": (r'"rude"', 1),
     "class_census": (r'"_num DIV _tot"', 1),
 }

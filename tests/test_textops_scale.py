@@ -19,14 +19,9 @@ from readembedability_spark.textops import (  # noqa: F401 - registers
     _MINHASH_CAND_SQL,
 )
 from readembedability_spark.queries import REGISTRY
+from helpers import formatted_plan
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _plan(df) -> str:
-    return df._sc._jvm.PythonSQLUtils.explainString(  # noqa: SLF001
-        df._jdf.queryExecution(), "formatted"
-    )
 
 
 def _no_cross_join(plan: str):
@@ -38,12 +33,12 @@ def test_ann_bucketed_no_full_cross_join(spark):
     """q_ann_bucketed's candidate join is an equi-join on bucket —
     never a cross join of the full embeddings table."""
     df = REGISTRY["q_ann_bucketed"].spark(spark, SF_DIR)
-    _no_cross_join(_plan(df))
+    _no_cross_join(formatted_plan(df))
 
 
 def test_dedup_embedding_bucketed_no_full_cross_join(spark):
     df = REGISTRY["q_dedup_embedding_bucketed"].spark(spark, SF_DIR)
-    _no_cross_join(_plan(df))
+    _no_cross_join(formatted_plan(df))
 
 
 def test_lsh_verified_candidate_keyed_rowlocal_verify(spark):
@@ -54,7 +49,7 @@ def test_lsh_verified_candidate_keyed_rowlocal_verify(spark):
     |pairs|×|shingles/doc| (a, b) re-aggregate (the pre-r9 shape whose
     (b, sh)-keyed join this test used to pin)."""
     df = REGISTRY["q_dedup_lsh_verified"].spark(spark, SF_DIR)
-    plan = _plan(df)
+    plan = formatted_plan(df)
     _no_cross_join(plan)
     # single-key equi-joins on each side of the candidate pair …
     assert re.search(r"keys \[1\]: \[a#\d+L?\]", plan), plan
