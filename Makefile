@@ -1,4 +1,4 @@
-.PHONY: test bench scaling loc dist clean
+.PHONY: test bench scaling loc plans dist clean
 
 test:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
@@ -12,6 +12,10 @@ scaling:
 
 loc:
 	python bench/loc.py
+
+# make plans SF=<sf dir> Q="<query names>"
+plans:
+	python bench/plans.py $(SF) $(Q)
 
 dist:
 	mkdir -p dist

@@ -5,12 +5,14 @@ RANGE-CLUSTERED by the index key — the archive's range-scan layout)
 intervals and a per-host staleness work-list, plus one JSON stats
 line.
 
-This composes the round-8 archive family (q_surt_index,
-q_stale_captures, q_recrawl_schedule's estimator) into the job an
-archive/recrawl team actually runs: the index serves replay and
-range scans, the staleness table is the priority queue the next
-crawl round drains. The streaming sibling
-(streaming_surt_index) maintains the same index incrementally.
+This composes the round-8 archive family into the job an
+archive/recrawl team actually runs, calling the registry's cores: the
+SURT key (textops.surt_key_expr), the CDX aggregate of q_surt_index
+(textops.surt_cdx_from) and the staleness plan of q_stale_captures
+(textops.staleness_from). The index serves replay and range scans,
+the staleness table is the priority queue the next crawl round
+drains. The streaming sibling (streaming_surt_index) maintains the
+same index incrementally.
 
 Local smoke (synthesizes a recrawl-bearing pages corpus):
     python jobs/archive_index.py --pages 200 \\
@@ -54,31 +56,10 @@ def captures(pages):
     )
 
 
-def surt_index(caps):
-    """The CDX table: one hash aggregate on the index key
-    (q_surt_index's plan over real captures)."""
-    return caps.groupBy("surt_key").agg(
-        F.count("*").alias("n_captures"),
-        F.min("ts").alias("first_ts"),
-        F.max("ts").alias("last_ts"),
-        F.countDistinct("digest").alias("n_versions"),
-    )
-
-
-def staleness(caps):
-    """Per-host staleness work-list via the SHARED staleness core
-    (q_stale_captures's exact plan: digest-transition lag window →
-    host rollup → Cho/Garcia-Molina interval → frontier-age
-    is_stale); equal-ts captures tie-break on digest here (real
-    capture tables carry no event_id)."""
-    from readembedability_spark.textops import staleness_from
-
-    return staleness_from(caps, tiebreak="digest")
-
-
 def run(spark, args) -> dict:
     from readembedability_spark.operators.salt import default_parts
     from readembedability_spark.queries import _persist
+    from readembedability_spark.textops import staleness_from, surt_cdx_from
 
     out = Path(args.output)
     if args.input:
@@ -96,7 +77,7 @@ def run(spark, args) -> dict:
     caps = _persist(captures(pages))
     stats["captures"] = caps.count()
 
-    idx = surt_index(caps)
+    idx = surt_cdx_from(caps)
     # the archive's range-scan layout: range-cluster by the index key
     # and sort within partitions — the sort rides the SAME exchange
     parts = default_parts(spark)
@@ -106,7 +87,11 @@ def run(spark, args) -> dict:
         .write.mode("overwrite")
         .parquet(str(out / "index"))
     )
-    staleness(caps).write.mode("overwrite").parquet(str(out / "stale"))
+    # equal-ts captures tie-break on digest (real capture tables carry
+    # no event_id)
+    staleness_from(caps, "digest").write.mode("overwrite").parquet(
+        str(out / "stale")
+    )
     # stats counters read BACK the written tables (parquet row counts
     # are metadata reads) instead of re-running either plan
     stats["index_keys"] = spark.read.parquet(str(out / "index")).count()

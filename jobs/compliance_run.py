@@ -59,17 +59,14 @@ def synth_fetch_log(spark, n):
     host key (coprime moduli — the dead-class guard), per-host fetch
     gaps of ~25 s with a deterministic jitter so every politeness
     verdict is reachable, and the ruleset group keyed off the host."""
+    from readembedability_spark.textops import (
+        ROBOTS_PROBE_PATHS,
+        robots_probe_path,
+    )
+
     ids = spark.range(0, n)
     host_id = F.col("id") % 25
-    m = F.col("id") % 6
-    path = (
-        F.when(m == 0, F.lit("/private/a"))
-        .when(m == 1, F.lit("/private/public/x"))
-        .when(m == 2, F.lit("/articles/2024/one"))
-        .when(m == 3, F.lit("/index.html"))
-        .when(m == 4, F.lit("/tmp/x"))
-        .otherwise(F.lit("/private"))
-    )
+    path = robots_probe_path(F.col("id") % 6, ROBOTS_PROBE_PATHS)
     tier = host_id % 3
     delay_s = F.when(tier == 0, 10).when(tier == 1, 28).otherwise(45)
     # per-host fetch cadence: consecutive same-host gaps alternate

@@ -47,9 +47,11 @@ from _session import job_parser, run_job  # noqa: E402
 
 from readembedability_spark.schemas import local_table  # noqa: E402
 from readembedability_spark.textops import (  # noqa: E402
+    ROBOTS_PROBE_PATHS,
     ROBOTS_RULES_SCHEMA,
     ROBOTS_RULES_SNAPSHOT,
     TYPOSQUAT_BRANDS,
+    robots_probe_path,
     robots_verdicts_from,
     subdomain_fanout_from,
     typosquat_min_dist_from,
@@ -90,13 +92,7 @@ def synth_frontier(spark, n):
         )
         .alias("subdomain"),
         F.expr("(id DIV 6) % 3").alias("g"),
-        F.when(m == 0, F.lit("/private/a"))
-        .when(m == 1, F.lit("/private/public/x"))
-        .when(m == 2, F.lit("/articles/2024/one"))
-        .when(m == 3, F.lit("/index.html"))
-        .when(m == 4, F.lit("/tmp/x"))
-        .otherwise(F.lit("/private"))
-        .alias("path"),
+        robots_probe_path(m, ROBOTS_PROBE_PATHS).alias("path"),
     )
 
 

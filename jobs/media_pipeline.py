@@ -1,12 +1,12 @@
 """spark-submit entry point for the multimodal media pipeline:
 an asset table (doc_id, payload, modality) → ONE persisted scan →
 three modality branches (image thumbnail-fit, video frame sampling,
-audio chunking) running the SAME Arrow batch bodies the driver gates
-hash-check (readembedability_spark.textops._image_resize_batches /
-_video_frame_batches / _audio_chunk_batches — a rule drift between
-the gate and the job is impossible by construction) → per-modality
-parquet artifacts → a manifest rolled up from the WRITTEN files (not
-the lineage) + one JSON stats line.
+audio chunking), each calling the registry's core for its modality
+(readembedability_spark.textops.image_thumbs_from / video_frames_from
+/ audio_chunks_from, which q_image_resize, q_video_frame_sample and
+q_audio_chunks return) → per-modality parquet artifacts → a manifest
+rolled up from the WRITTEN files (not the lineage) + one JSON stats
+line.
 
 This composes the multimodal plumbing family (q_image_resize,
 q_video_frame_sample, q_audio_chunks, q_multimodal_meta) into the job
@@ -81,66 +81,26 @@ def synth_assets(spark, n: int):
 
 def run_pipeline(spark, assets, out: Path) -> None:
     """assets → written images/frames/audio_chunks artifacts. Each
-    branch filters its modality before the Python stage and runs the
-    SHARED gate-tested batch body; digests are JVM-side post-UDF.
-    Writes only — the caller assembles stats from the written files."""
+    branch filters its modality before the Python stage and calls the
+    registry's core for it (textops.image_thumbs_from /
+    video_frames_from / audio_chunks_from). Writes only — the caller
+    assembles stats from the written files."""
     from readembedability_spark.queries import _persist
     from readembedability_spark.textops import (
-        _audio_chunk_batches,
-        _image_resize_batches,
-        _video_frame_batches,
+        audio_chunks_from,
+        image_thumbs_from,
+        video_frames_from,
     )
 
     src = _persist(assets.select("doc_id", "payload", "modality"))
-
-    dims = src.filter(F.col("modality") == "image").mapInPandas(
-        _image_resize_batches,
-        schema=(
-            "doc_id long, width long, height long,"
-            " thumb_w long, thumb_h long"
-        ),
-    )
-    img_digest = F.substring(
-        F.md5(
-            F.concat(
-                F.col("doc_id").cast("string"), F.lit(":"),
-                F.col("thumb_w").cast("string"), F.lit("x"),
-                F.col("thumb_h").cast("string"),
-            ).cast("binary")
-        ),
-        1, 8,
-    )
-    dims.select(
-        "doc_id", "width", "height", "thumb_w", "thumb_h",
-        img_digest.alias("thumb_digest"),
-    ).write.mode("overwrite").parquet(str(out / "images"))
-
-    frames = src.filter(F.col("modality") == "video").mapInPandas(
-        _video_frame_batches,
-        schema="doc_id long, n_frames long, frame_idx long",
-    )
-    frame_digest = F.substring(
-        F.md5(
-            F.concat(
-                F.col("doc_id").cast("string"), F.lit(":"),
-                F.col("frame_idx").cast("string"),
-            ).cast("binary")
-        ),
-        1, 8,
-    )
-    frames.select(
-        "doc_id", "n_frames", "frame_idx",
-        F.expr("frame_idx * 1000000 DIV 24").alias("ts_us"),
-        frame_digest.alias("frame_digest"),
-    ).write.mode("overwrite").parquet(str(out / "frames"))
-
-    src.filter(F.col("modality") == "audio").mapInPandas(
-        _audio_chunk_batches,
-        schema=(
-            "doc_id long, n_samples long, chunk_idx long,"
-            " chunk_n long, energy long, peak long"
-        ),
-    ).write.mode("overwrite").parquet(str(out / "audio_chunks"))
+    for table, modality, core in (
+        ("images", "image", image_thumbs_from),
+        ("frames", "video", video_frames_from),
+        ("audio_chunks", "audio", audio_chunks_from),
+    ):
+        core(src.filter(F.col("modality") == modality)).write.mode(
+            "overwrite"
+        ).parquet(str(out / table))
 
 
 def build_manifest(spark, out: Path):

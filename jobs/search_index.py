@@ -8,10 +8,12 @@ the writer's own sort — no extra exchange) → BM25 top-5 served from
 the READ-BACK artifacts with a self-retrieval MRR check, plus one
 JSON stats line.
 
-This composes the retrieval family (q_inverted_index's stats,
-q_postings_compression's layout audit, q_bm25_rank/q_bm25_eval's
-scoring) into the job a retrieval-training team actually runs: the
-postings/dictionary/corpus tables are the servable index, the MRR
+This composes the retrieval family into the job a retrieval-training
+team actually runs, calling the registry's cores: the tokenizer
+(text_signals.doc_tokens), the d-gap window of q_postings_compression
+(textops.postings_gaps) and the query set and top-5 ranking of
+q_bm25_rank/q_bm25_eval (textops.bm25_query_terms, bm25_top5_from).
+The postings/dictionary/corpus tables are the servable index, the MRR
 line is the smoke check that the WRITTEN index — not the in-memory
 lineage — answers queries.
 
@@ -41,7 +43,6 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from _session import job_parser, run_job  # noqa: E402
@@ -86,6 +87,7 @@ def build_index(spark, docs, out: Path, parts: int):
     the caller assembles its own stats from the written tables."""
     from readembedability_spark.queries import _persist
     from readembedability_spark.text_signals import doc_tokens
+    from readembedability_spark.textops import bm25_corpus
 
     toks = doc_tokens(docs, "doc_id")
     tf = _persist(
@@ -113,28 +115,18 @@ def build_index(spark, docs, out: Path, parts: int):
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
     dl.write.mode("overwrite").parquet(str(out / "doclens"))
-    corp = dl.agg(
-        F.count("*").cast("long").alias("n"),
-        (F.sum("dl") * F.lit(1.0) / F.count("*")).alias("avgdl"),
-    )
-    corp.write.mode("overwrite").parquet(str(out / "corpus"))
+    bm25_corpus(dl).write.mode("overwrite").parquet(str(out / "corpus"))
 
 
 def postings_audit(spark, out: Path) -> dict:
     """LEB128 varint vs fixed pricing computed ON the written postings
-    — the lag window's (w, doc_id) order is the file order, so the
-    window sort collapses onto the read layout."""
-    from readembedability_spark.textops import _varint_bytes_sql
+    through the registry's d-gap core, textops.postings_gaps (the
+    gaps q_postings_compression prices) — the lag window's
+    (w, doc_id) order is the file order, so the window sort collapses
+    onto the read layout."""
+    from readembedability_spark.textops import _varint_bytes_sql, postings_gaps
 
-    post = spark.read.parquet(str(out / "postings"))
-    wnd = Window.partitionBy("w").orderBy(F.asc("doc_id"))
-    g = post.select(
-        "w",
-        F.coalesce(
-            F.col("doc_id") - F.lag("doc_id").over(wnd),
-            F.col("doc_id") + 1,
-        ).alias("gap"),
-    )
+    g = postings_gaps(spark.read.parquet(str(out / "postings")))
     row = g.agg(
         F.count("*").cast("long").alias("n_postings"),
         F.sum(F.expr(_varint_bytes_sql("gap")))
@@ -152,46 +144,22 @@ def postings_audit(spark, out: Path) -> dict:
 
 def bm25_topk_from_index(spark, out: Path, queries):
     """BM25 top-5 served from the WRITTEN artifacts (postings +
-    dictionary + doclens + corpus read back from parquet): same
-    micro-quantized Okapi scoring as q_bm25_rank (k1=1.2, b=0.75,
-    Lucene idf), query terms broadcast into the postings scan."""
-    from readembedability_spark.textops import bm25_s_micro
+    dictionary + doclens + corpus read back from parquet) through the
+    registry's core, textops.bm25_top5_from (q_bm25_rank's ranking)."""
+    from readembedability_spark.textops import bm25_top5_from
 
-    post = spark.read.parquet(str(out / "postings"))
-    dic = spark.read.parquet(str(out / "dictionary"))
-    dl = spark.read.parquet(str(out / "doclens"))
-    corp = spark.read.parquet(str(out / "corpus"))
-    s_micro = bm25_s_micro()
-    term = (
-        post.join(F.broadcast(queries), "w")
-        .join(dic, "w")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(corp))
-        .select("qid", "doc_id", s_micro.alias("s_micro"))
-    )
-    sc = term.groupBy("qid", "doc_id").agg(
-        F.sum("s_micro").cast("long").alias("score_micro")
-    )
-    wnd = Window.partitionBy("qid").orderBy(
-        F.desc("score_micro"), F.asc("doc_id")
-    )
-    return (
-        sc.withColumn("rk", F.row_number().over(wnd).cast("long"))
-        .filter(F.col("rk") <= 5)
-        .select("qid", "rk", "doc_id", "score_micro")
-    )
+    def read(table):
+        return spark.read.parquet(str(out / table))
 
-
-def query_set(docs):
-    """The deterministic in-corpus query set — the SHARED gate rule
-    (readembedability_spark.textops.bm25_query_terms), not a copy."""
-    from readembedability_spark.textops import bm25_query_terms
-
-    return bm25_query_terms(docs)
+    return bm25_top5_from(
+        read("postings"), queries, read("dictionary"), read("doclens"),
+        read("corpus"),
+    )
 
 
 def run(spark, args) -> dict:
     from readembedability_spark.operators.salt import default_parts
+    from readembedability_spark.textops import bm25_query_terms
 
     out = Path(args.output)
     if args.input:
@@ -205,7 +173,7 @@ def run(spark, args) -> dict:
     stats["terms"] = spark.read.parquet(str(out / "dictionary")).count()
     stats.update(postings_audit(spark, out))
 
-    q = query_set(docs)
+    q = bm25_query_terms(docs)
     topk = bm25_topk_from_index(spark, out, q)
     topk.write.mode("overwrite").parquet(str(out / "topk"))
     served = spark.read.parquet(str(out / "topk"))

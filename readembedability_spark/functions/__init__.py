@@ -11,10 +11,9 @@ from pyspark.sql import functions as F
 from readembedability_spark.schemas import N_BUCKETS
 
 
-def host_col(url: Column | str = "url") -> Column:
-    """Hostname extracted from a url column (O-5), lowercased."""
-    url = F.col(url) if isinstance(url, str) else url
-    return F.lower(F.regexp_extract(url, r"^https?://([^/:?#]+)", 1))
+def host_col() -> Column:
+    """Hostname of the ``url`` column (O-5), lowercased."""
+    return F.lower(F.regexp_extract("url", r"^https?://([^/:?#]+)", 1))
 
 
 def epoch_us(ts: str) -> Column:
@@ -32,16 +31,16 @@ def capture_digest() -> Column:
     return F.substring(F.md5(F.coalesce("html", F.lit(b""))), 1, 8)
 
 
-def url_hash_col(url: Column | str = "url") -> Column:
-    """Stable 64-bit hash of the url (xxhash64 — JVM-side, seed 42)."""
-    url = F.col(url) if isinstance(url, str) else url
-    return F.xxhash64(url)
+def url_hash_col() -> Column:
+    """Stable 64-bit hash of the ``url`` column (xxhash64 — JVM-side,
+    seed 42)."""
+    return F.xxhash64("url")
 
 
-def salt_col(url: Column | str = "url", num_salts: int = 64) -> Column:
+def salt_col(num_salts: int = 64) -> Column:
     """Skew salt: pmod(xxhash64(url), num_salts) (O-8, BASELINE.json:6
     'explicit salting/repartitioning by url-hash')."""
-    return F.pmod(url_hash_col(url), F.lit(num_salts)).cast("int")
+    return F.pmod(url_hash_col(), F.lit(num_salts)).cast("int")
 
 
 def bucket_col() -> Column:

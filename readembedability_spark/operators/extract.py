@@ -179,7 +179,7 @@ def extract_stage(pages_df, run_id: str = "run", metrics_dir: str | None = None)
     if "salt" not in cols:
         from readembedability_spark.functions import salt_col
 
-        pages_df = pages_df.withColumn("salt", salt_col("url"))
+        pages_df = pages_df.withColumn("salt", salt_col())
     # column-prune the Python boundary: only what the extractor needs
     slim = pages_df.select("url", "warc_ts", "html", "salt")
     return slim.mapInPandas(

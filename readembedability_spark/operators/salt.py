@@ -33,5 +33,5 @@ def salt_repartition(
     pages: DataFrame, parallelism: int, num_salts: int = 64
 ) -> DataFrame:
     return pages.repartition(parallelism, "url").withColumn(
-        "salt", salt_col("url", num_salts)
+        "salt", salt_col(num_salts)
     )

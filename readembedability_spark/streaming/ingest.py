@@ -109,7 +109,7 @@ def streaming_host_sessions(pages_stream: DataFrame) -> DataFrame:
         )
 
     keyed = pages_stream.select(
-        host_col("url").alias("host"),
+        host_col().alias("host"),
         F.coalesce(F.length("html"), F.lit(0)).cast("long").alias("n_bytes"),
     )
     return keyed.groupBy("host").applyInPandasWithState(
@@ -206,7 +206,7 @@ def streaming_crawl_sessions(pages_stream: DataFrame) -> DataFrame:
     return (
         pages_stream.withWatermark("warc_ts", _WATERMARK)
         .groupBy(
-            host_col("url").alias("host"),
+            host_col().alias("host"),
             F.session_window("warc_ts", "30 minutes").alias("sess"),
         )
         .agg(
@@ -487,7 +487,7 @@ def streaming_crawl_delta(pages_stream: DataFrame) -> DataFrame:
 
     keyed = pages_stream.select(
         "url",
-        host_col("url").alias("host"),
+        host_col().alias("host"),
         epoch_us("warc_ts").alias("ts_us"),
         capture_digest().alias("digest"),
     )
@@ -625,7 +625,7 @@ def streaming_admission(pages_stream: DataFrame) -> DataFrame:
 
     keyed = pages_stream.select(
         "url",
-        host_col("url").alias("host"),
+        host_col().alias("host"),
         epoch_us("warc_ts").alias("ts_us"),
         F.size(F.split(F.coalesce(F.col("text"), F.lit("")), " "))
         .cast("long")
@@ -694,7 +694,7 @@ def streaming_politeness(pages_stream: DataFrame) -> DataFrame:
         )]
 
     keyed = pages_stream.select(
-        host_col("url").alias("host"),
+        host_col().alias("host"),
         "url",
         epoch_us("warc_ts").alias("ts_us"),
     )
@@ -775,7 +775,7 @@ def streaming_retry_after(fetches_stream: DataFrame) -> DataFrame:
         )]
 
     keyed = fetches_stream.select(
-        host_col("url").alias("host"),
+        host_col().alias("host"),
         "url",
         epoch_us("warc_ts").alias("ts_us"),
         "status",

@@ -2350,21 +2350,28 @@ def q_pagerank_links(spark, sf_dir):
     end-to-end pipeline a crawl-curation prior ships: extract →
     host-edge projection → power iteration, all driver-hash-checked
     against DuckDB replaying the synthesis arithmetic."""
-    host_re = r"https://h(\d+)\.example\.com/"
     # L-8: nofollow/sponsored edges carry no endorsement — excluded
     # from the authority graph (the ad anchor never becomes an edge)
     links = _extracted_links(spark, sf_dir).filter(~F.col("nofollow"))
-    edges = (
+    return _pagerank(spark, _host_edges(links))
+
+
+#: the numeric host id of a synthetic ``https://h<n>.example.com/`` url
+_NUM_HOST_RE = r"https://h(\d+)\.example\.com/"
+
+
+def _host_edges(links):
+    """Distinct (src, dst) host-id edges of a (url, link) table:
+    self-loops dropped and hosts ≡ 0 mod 7 kept as sinks (no out-edges).
+    The authority graph of q_pagerank_links and q_frontier_schedule."""
+    return (
         links.select(
-            F.regexp_extract("url", host_re, 1).cast("long").alias("src"),
-            F.regexp_extract("link", host_re, 1).cast("long").alias("dst"),
+            F.regexp_extract("url", _NUM_HOST_RE, 1).cast("long").alias("src"),
+            F.regexp_extract("link", _NUM_HOST_RE, 1).cast("long").alias("dst"),
         )
-        .filter(
-            (F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0)
-        )
+        .filter((F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0))
         .distinct()
     )
-    return _pagerank(spark, edges)
 
 
 @q(
@@ -2563,7 +2570,6 @@ def q_frontier_schedule(spark, sf_dir):
     r05 wrong #1); the slot cap bounds the schedule at K x hosts
     rows. Hosts absent from the rank table (unlinked/new) schedule at
     priority 0 via the left join, so discovery never starves."""
-    num_host_re = r"https://h(\d+)\.example\.com/"
     # L-8: the schedule neither ranks authority over nofollow edges
     # nor spends crawl budget on paid links
     links = _persist(
@@ -2571,15 +2577,7 @@ def q_frontier_schedule(spark, sf_dir):
         .filter(~F.col("nofollow"))
         .select("url", "link")
     )
-    edges = (
-        links.select(
-            F.regexp_extract("url", num_host_re, 1).cast("long").alias("src"),
-            F.regexp_extract("link", num_host_re, 1).cast("long").alias("dst"),
-        )
-        .filter((F.col("src") != F.col("dst")) & (F.col("src") % 7 != 0))
-        .distinct()
-    )
-    authority = _pagerank(spark, edges).select(
+    authority = _pagerank(spark, _host_edges(links)).select(
         F.concat(
             F.lit("h"), F.col("node").cast("string"), F.lit(".example.com")
         ).alias("host"),
@@ -2670,7 +2668,6 @@ def q_frontier_robots(spark, sf_dir):
     replays the same parse with DuckDB list lambdas over the SAME
     synthesized robots text, so the parse rule itself is
     cross-engine-locked."""
-    num_host_re = r"https://h(\d+)\.example\.com/"
     links = (
         _extracted_links(spark, sf_dir)
         .filter(~F.col("nofollow"))
@@ -2681,7 +2678,7 @@ def q_frontier_robots(spark, sf_dir):
     frontier = links.join(
         pages, F.col("link") == F.col("url"), "left_anti"
     ).select(
-        F.regexp_extract("link", num_host_re, 1).alias("hn"),
+        F.regexp_extract("link", _NUM_HOST_RE, 1).alias("hn"),
         F.regexp_replace("link", r"https://[^/]+", "").alias("path"),
     )
     hosts = frontier.select("hn").distinct()
@@ -2698,21 +2695,9 @@ def q_frontier_robots(spark, sf_dir):
         ).otherwise(F.lit("")),
         F.lit("Crawl-delay: 1"),
     )
-    rules = hosts.select(
-        "hn",
-        F.transform(
-            F.filter(
-                F.split(txt, nl),
-                lambda line: line.startswith("Disallow: "),
-            ),
-            lambda line: F.substring(line, 11, 2147483647),
-        ).alias("dis"),
-    )
+    rules = hosts.select("hn", _disallow_prefixes(txt).alias("dis"))
     marked = frontier.join(rules, "hn").select(
-        "hn",
-        F.exists(
-            "dis", lambda p: F.col("path").startswith(p)
-        ).alias("blocked"),
+        "hn", _disallowed("path", "dis").alias("blocked")
     )
     return marked.groupBy(
         F.concat(F.lit("h"), F.col("hn"), F.lit(".example.com")).alias(
@@ -2726,6 +2711,23 @@ def q_frontier_robots(spark, sf_dir):
         .cast("long")
         .alias("n_blocked"),
     )
+
+
+def _disallow_prefixes(txt):
+    """The `Disallow:` path prefixes of a robots.txt text column: its
+    lines, kept when they start with "Disallow: ", cut after that tag.
+    q_frontier_robots and q_robots_crawl_debt parse with this."""
+    return F.transform(
+        F.filter(
+            F.split(txt, "\n"), lambda line: line.startswith("Disallow: ")
+        ),
+        lambda line: F.substring(line, 11, 2147483647),
+    )
+
+
+def _disallowed(path, prefixes):
+    """True when the path column starts with any of the prefixes."""
+    return F.exists(prefixes, lambda p: F.col(path).startswith(p))
 
 
 _CHUNK_TOKENS = 100
@@ -3373,6 +3375,14 @@ def q_fingerprint(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _doc_payloads(spark, sf_dir):
+    """(doc_id, payload): each document's UTF-8 text as an opaque
+    binary media blob, the input of the multimodal plumbing queries."""
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id", F.encode("text", "UTF-8").alias("payload")
+    )
+
+
 @q(
     """
     SELECT doc_id,
@@ -3391,10 +3401,6 @@ def q_multimodal_meta(spark, sf_dir):
     UDF signature and batch shape are real and oracle-checked."""
     import pandas as pd
 
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-
     def meta_batches(batches):
         for pdf in batches:
             n_bytes = pdf["payload"].map(
@@ -3410,7 +3416,7 @@ def q_multimodal_meta(spark, sf_dir):
                 }
             )
 
-    return docs.mapInPandas(
+    return _doc_payloads(spark, sf_dir).mapInPandas(
         meta_batches,
         schema="doc_id long, n_bytes long, width long, height long, channels int",
     )
@@ -5163,7 +5169,14 @@ def q_dedup_lines_within(spark, sf_dir):
         F.sequence(F.lit(0), n_lines_expr - 1),
         lambda k: F.concat_ws(" ", F.slice("arr", k * 10 + 1, F.lit(10))),
     )
-    lined = docs.select("doc_id", lines.alias("lines"))
+    return _first_lines_kept(docs.select("doc_id", lines.alias("lines")))
+
+
+def _first_lines_kept(lined):
+    """(doc_id, n_lines, n_removed, cleaned_md5) of a (doc_id, lines)
+    table: each doc keeps the first occurrence of every line, and the
+    md5 is over the kept lines joined by newlines. The row-local rule
+    of q_dedup_lines_within and q_dedup_lines_within_ml."""
     kept = F.filter(
         F.col("lines"),
         lambda x, i: F.array_position(F.col("lines"), x) == i + 1,
@@ -5172,7 +5185,9 @@ def q_dedup_lines_within(spark, sf_dir):
         "doc_id",
         F.size("lines").cast("long").alias("n_lines"),
         (F.size("lines") - F.size(kept)).cast("long").alias("n_removed"),
-        F.md5(F.encode(F.concat_ws("\n", kept), "UTF-8")).alias("cleaned_md5"),
+        F.md5(F.encode(F.array_join(kept, "\n"), "UTF-8")).alias(
+            "cleaned_md5"
+        ),
     )
 
 
@@ -6356,20 +6371,28 @@ def q_model_score_trained(spark, sf_dir):
     score every doc with the learned model — same broadcast-join +
     one groupBy(doc_id) apply plan as q_model_score, but the weight
     table now comes out of _lrn_train instead of a fixed rule."""
-    feats, lab, w = _lrn_train(spark, sf_dir)
-    sc = (
-        feats.join(F.broadcast(w), "b")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("xq") * F.col("w")).alias("dot"))
-    )
     p = _lrn_p("dot")
-    return lab.join(sc, "doc_id").select(
+    return _lrn_scored(spark, sf_dir).select(
         "doc_id",
         F.round(p, 6).alias("score"),
         (p > F.lit(0.5)).alias("pred"),
         F.col("y").cast("boolean").alias("label"),
         ((p > F.lit(0.5)) == F.col("y").cast("boolean")).alias("correct"),
     )
+
+
+def _lrn_scored(spark, sf_dir):
+    """(doc_id, y, dot): every labeled doc with its dot product against
+    the trained weights — the feature rows broadcast-joined to the
+    weight table and rolled up per doc. The model-apply step of
+    q_model_score_trained, q_model_pr_curve and q_model_calibration."""
+    feats, lab, w = _lrn_train(spark, sf_dir)
+    sc = (
+        feats.join(F.broadcast(w), "b")
+        .groupBy("doc_id")
+        .agg(F.sum(F.col("xq") * F.col("w")).alias("dot"))
+    )
+    return lab.join(sc, "doc_id")
 
 
 # ---------------------------------------------------------------------------
@@ -6436,20 +6459,8 @@ def q_dedup_lines_within_ml(spark, sf_dir):
     q_dedup_lines_within shape) — zero shuffle, cleaned-bytes md5
     oracle."""
     docs = _t(spark, sf_dir, "documents")
-    lined = docs.select(
-        "doc_id", F.split(_ml_text_col(), "\n").alias("lines")
-    )
-    kept = F.filter(
-        F.col("lines"),
-        lambda x, i: F.array_position(F.col("lines"), x) == i + 1,
-    )
-    return lined.select(
-        "doc_id",
-        F.size("lines").cast("long").alias("n_lines"),
-        (F.size("lines") - F.size(kept)).cast("long").alias("n_removed"),
-        F.md5(F.encode(F.array_join(kept, "\n"), "UTF-8")).alias(
-            "cleaned_md5"
-        ),
+    return _first_lines_kept(
+        docs.select("doc_id", F.split(_ml_text_col(), "\n").alias("lines"))
     )
 
 
@@ -6703,6 +6714,14 @@ def filter_funnel_from(docs):
         .otherwise("5_kept")
         .alias("stage"),
     )
+    return _stage_funnel(staged)
+
+
+def _stage_funnel(staged):
+    """(stage, n_docs, n_tokens, frac) of a per-doc (stage, n_tokens)
+    table: docs and tokens per stage, and each stage's share of all
+    docs through a 1-row broadcast total. The rollup of
+    q_filter_funnel and q_admission_policy."""
     total = staged.agg(F.count("*").alias("n"))
     return (
         staged.crossJoin(F.broadcast(total))
@@ -7166,15 +7185,7 @@ def q_model_pr_curve(spark, sf_dir):
     empty prediction set is reported as 1.0 (the sklearn PR-curve
     convention; also keeps the result NULL-free for the hash
     compare)."""
-    feats, lab, w = _lrn_train(spark, sf_dir)
-    sc = (
-        feats.join(F.broadcast(w), "b")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("xq") * F.col("w")).alias("dot"))
-    )
-    scored = lab.join(sc, "doc_id").select(
-        "y", _lrn_p("dot").alias("p")
-    )
+    scored = _lrn_scored(spark, sf_dir).select("y", _lrn_p("dot").alias("p"))
     thresholds = F.array(*[F.lit(t) for t in _PR_THRESHOLDS])
     sweep = scored.select(
         "y", "p", F.explode(thresholds).alias("t")
@@ -7242,13 +7253,7 @@ def q_model_calibration(spark, sf_dir):
     until two final correctly-rounded double divisions, so both
     engines hash identically with no float-summation order
     dependence."""
-    feats, lab, w = _lrn_train(spark, sf_dir)
-    sc = (
-        feats.join(F.broadcast(w), "b")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("xq") * F.col("w")).alias("dot"))
-    )
-    scored = lab.join(sc, "doc_id").select("y", _lrn_p("dot").alias("p"))
+    scored = _lrn_scored(spark, sf_dir).select("y", _lrn_p("dot").alias("p"))
     binned = scored.select(
         F.least(
             F.floor(F.col("p") * 10).cast("long"), F.lit(9).cast("long")
@@ -8152,6 +8157,31 @@ _HITS_ITER_SQL = """
 """
 
 
+def _hits_half_step(nodes, edges, scores, frm, to, rank_parts):
+    """One L1-normalized HITS half-step: every node's new score is the
+    sum of ``scores`` over the edges whose ``to`` end it is, read at
+    their ``frm`` end (src → dst gives authorities from hubs, dst → src
+    hubs from authorities). The unnormalized table is read twice (its
+    L1 sum and the normalized projection), so it is the per-step
+    checkpoint; the normalized projection is a single-read broadcast
+    over it and is not materialized."""
+    flow = (
+        nodes.join(
+            edges.join(scores.select(F.col("v").alias(frm), "r"), frm)
+            .groupBy(F.col(to).alias("v"))
+            .agg(F.sum("r").alias("flow")),
+            "v",
+            "left",
+        )
+        .select("v", F.coalesce("flow", F.lit(0.0)).alias("r"))
+    )
+    flow = _local_checkpoint(_resize(flow, rank_parts), eager=False)
+    total = flow.agg(F.sum("r").alias("s"))
+    return flow.crossJoin(F.broadcast(total)).select(
+        "v", (F.col("r") / F.col("s")).alias("r")
+    )
+
+
 @q(
     f"""
     WITH {_PR_GRAPH_SQL},
@@ -8191,45 +8221,8 @@ def q_hits(spark, sf_dir):
     )
     a = None
     for _ in range(_PR_ITERS):
-        ap = (
-            nodes.join(
-                edges.join(
-                    h.select(F.col("v").alias("src"), "r"), "src"
-                )
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum("r").alias("inflow")),
-                "v",
-                "left",
-            )
-            .select("v", F.coalesce("inflow", F.lit(0.0)).alias("r"))
-        )
-        # ap/hp are each read twice (L1 sum + next half-step) so they
-        # are the per-round checkpoints; a and the loop-top h are
-        # single-read broadcast projections over an already-
-        # checkpointed parent — materializing them too would write two
-        # extra rank-table copies per round for no lineage benefit.
-        ap = _local_checkpoint(_resize(ap, rank_parts), eager=False)
-        asum = ap.agg(F.sum("r").alias("s"))
-        a = ap.crossJoin(F.broadcast(asum)).select(
-            "v", (F.col("r") / F.col("s")).alias("r")
-        )
-        hp = (
-            nodes.join(
-                edges.join(
-                    a.select(F.col("v").alias("dst"), "r"), "dst"
-                )
-                .groupBy(F.col("src").alias("v"))
-                .agg(F.sum("r").alias("outflow")),
-                "v",
-                "left",
-            )
-            .select("v", F.coalesce("outflow", F.lit(0.0)).alias("r"))
-        )
-        hp = _local_checkpoint(_resize(hp, rank_parts), eager=False)
-        hsum = hp.agg(F.sum("r").alias("s"))
-        h = hp.crossJoin(F.broadcast(hsum)).select(
-            "v", (F.col("r") / F.col("s")).alias("r")
-        )
+        a = _hits_half_step(nodes, edges, h, "src", "dst", rank_parts)
+        h = _hits_half_step(nodes, edges, a, "dst", "src", rank_parts)
     return (
         h.select(F.col("v"), F.round("r", 6).alias("hub"))
         .join(
@@ -8832,8 +8825,8 @@ def bm25_query_terms(docs):
 def bm25_s_micro():
     """The micro-quantized Okapi BM25 term contribution (k1 = 1.2,
     b = 0.75, Lucene idf) as a Column over (tf, df, dl, n, avgdl) —
-    the SINGLE definition of the scoring constants, shared by
-    _bm25_top5 and jobs/search_index.py's read-back scorer."""
+    the SINGLE definition of the scoring constants, used by
+    `bm25_top5_from`."""
     idf = F.log(
         (F.col("n") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -8862,18 +8855,34 @@ def _bm25_top5(spark, sf_dir):
     )
     dl = toks.groupBy("doc_id").agg(F.count("*").cast("long").alias("dl"))
     stats = tf.groupBy("w").agg(F.count("*").cast("long").alias("df"))
-    corp = dl.agg(
+    return bm25_top5_from(
+        tf, bm25_query_terms(docs), stats, dl, bm25_corpus(dl)
+    )
+
+
+def bm25_corpus(dl):
+    """The 1-row BM25 corpus table (n, avgdl) of a (doc_id, dl)
+    doc-length table."""
+    return dl.agg(
         F.count("*").cast("long").alias("n"),
         (F.sum("dl") * F.lit(1.0) / F.count("*")).alias("avgdl"),
     )
-    qt = bm25_query_terms(docs)
-    s_micro = bm25_s_micro()
+
+
+def bm25_top5_from(tf, qt, stats, dl, corp):
+    """The BM25 top-5 table (qid, rk, doc_id, score_micro) over an index:
+    term frequencies (w, doc_id, tf), query terms (qid, w), term stats
+    (w, df), doc lengths (doc_id, dl) and the 1-row corpus (n, avgdl).
+    The query terms and the corpus row are broadcast into the tf join;
+    per-term micro scores are summed per (qid, doc_id) and the top 5
+    kept per query. `_bm25_top5` and jobs/search_index.py's read-back
+    scorer both run this."""
     term = (
         tf.join(F.broadcast(qt), "w")
         .join(stats, "w")
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(corp))
-        .select("qid", "doc_id", s_micro.alias("s_micro"))
+        .select("qid", "doc_id", bm25_s_micro().alias("s_micro"))
     )
     sc = term.groupBy("qid", "doc_id").agg(
         F.sum("s_micro").cast("long").alias("score_micro")
@@ -8916,15 +8925,8 @@ def q_bm25_eval(spark, sf_dir):
     corpus. Plan: the shared `_bm25_top5` core plus a ≤|queries|-row
     rollup — same cost class as q_bm25_rank itself."""
     ranked = _bm25_top5(spark, sf_dir)
-    docs = _t(spark, sf_dir, "documents")
-    nq = (
-        docs.filter(F.col("doc_id") % 47 == 0)
-        .select(
-            F.col("doc_id").alias("qid"),
-            F.explode(F.slice(F.split("text", " "), 3, 3)).alias("w"),
-        )
-        .filter(F.col("w") != "")
-        .agg(F.count_distinct("qid").cast("long").alias("n"))
+    nq = bm25_query_terms(_t(spark, sf_dir, "documents")).agg(
+        F.count_distinct("qid").cast("long").alias("n")
     )
     hits = (
         ranked.filter(F.col("doc_id") == F.col("qid"))
@@ -9068,19 +9070,7 @@ def admission_policy_from(docs):
     # the total-count broadcast, so without an anchor the entire chain
     # is planned and run twice (r9 — measured: the composed plan halves
     # from ~2100 to ~1050 formatted lines once staged is persisted).
-    staged = _persist(admission_stages_from(docs))
-    total = staged.agg(F.count("*").alias("n"))
-    return (
-        staged.crossJoin(F.broadcast(total))
-        .groupBy("stage")
-        .agg(
-            F.count("*").cast("long").alias("n_docs"),
-            F.sum("n_tokens").cast("long").alias("n_tokens"),
-            F.round(F.count("*") * F.lit(1.0) / F.max("n"), 6).alias(
-                "frac"
-            ),
-        )
-    )
+    return _stage_funnel(_persist(admission_stages_from(docs)))
 
 
 def admission_flags_from(docs):
@@ -9912,29 +9902,39 @@ def q_surt_index(spark, sf_dir):
     this is a scan + one shuffle on the index key; writing the result
     sorted-by-key (the archive's range-scan layout) is a sortWithin-
     Partitions on the same exchange, not a second shuffle."""
-    ev = _t(spark, sf_dir, "events")
+    url, _, digest = _event_capture_cols()
+    return surt_cdx_from(
+        _t(spark, sf_dir, "events").select(
+            surt_key_expr(url).alias("surt_key"), "ts", digest.alias("digest")
+        )
+    )
+
+
+def surt_cdx_from(caps):
+    """The CDX table over any (surt_key, ts, digest) capture table: one
+    hash aggregate on the index key with capture count, first/last
+    capture time and distinct content versions. q_surt_index and
+    jobs/archive_index.py both run this."""
+    return caps.groupBy("surt_key").agg(
+        F.count("*").alias("n_captures"),
+        F.min("ts").alias("first_ts"),
+        F.max("ts").alias("last_ts"),
+        F.countDistinct("digest").alias("n_versions"),
+    )
+
+
+def _event_capture_cols():
+    """(url, host, digest) Columns of the synthetic captures over
+    events that q_surt_index and q_stale_captures audit: mixed-case raw
+    urls over 300 hosts x 40 paths, and a digest that varies with
+    event_type so a url has several content versions."""
     b = (F.col("event_id") % 300).cast("string")
     url = F.concat(
         F.lit("https://News"), b, F.lit(".Example.COM/item/"),
         (F.col("event_id") % 40).cast("string"),
     )
-    digest = F.substring(
-        F.md5(F.concat(url, F.col("event_type")).cast("binary")), 1, 8
-    )
-    return (
-        ev.select(
-            surt_key_expr(url).alias("surt_key"),
-            "ts",
-            digest.alias("digest"),
-        )
-        .groupBy("surt_key")
-        .agg(
-            F.count("*").alias("n_captures"),
-            F.min("ts").alias("first_ts"),
-            F.max("ts").alias("last_ts"),
-            F.countDistinct("digest").alias("n_versions"),
-        )
-    )
+    host = F.concat(F.lit("news"), b, F.lit(".example.com"))
+    return url, host, _hex8_md5(url, F.col("event_type"))
 
 
 # ---------------------------------------------------------------------------
@@ -10013,24 +10013,15 @@ def q_stale_captures(spark, sf_dir):
     state is four numbers, then row-local estimator math against a
     broadcast 1-row frontier. At 10^12 captures: one url-keyed
     exchange + one host-keyed exchange, both AQE-skew-splittable."""
-    ev = _t(spark, sf_dir, "events")
-    b = (F.col("event_id") % 300).cast("string")
-    url = F.concat(
-        F.lit("https://News"), b, F.lit(".Example.COM/item/"),
-        (F.col("event_id") % 40).cast("string"),
-    )
-    host = F.concat(F.lit("news"), b, F.lit(".example.com"))
-    digest = F.substring(
-        F.md5(F.concat(url, F.col("event_type")).cast("binary")), 1, 8
-    )
-    cap = ev.select(
+    url, host, digest = _event_capture_cols()
+    cap = _t(spark, sf_dir, "events").select(
         url.alias("url"), host.alias("host"), "ts", "event_id",
         digest.alias("digest"),
     )
-    return staleness_from(cap, tiebreak="event_id")
+    return staleness_from(cap, "event_id")
 
 
-def staleness_from(caps, tiebreak="digest"):
+def staleness_from(caps, tiebreak):
     """The staleness core over any (url, host, ts, digest[, tiebreak])
     capture table — the ONE implementation q_stale_captures and
     jobs/archive_index.py share: per-url lag window for the digest-
@@ -10173,9 +10164,8 @@ def q_token_budget_mixture(spark, sf_dir):
 
 
 def _image_resize_batches(batches):
-    """Stub decode + aspect-preserving 64-box thumbnail fit — the ONE
-    batch body q_image_resize and jobs/media_pipeline.py share (a rule
-    drift between the gate and the job is impossible by construction)."""
+    """Stub decode + aspect-preserving 64-box thumbnail fit — the batch
+    body of `image_thumbs_from`."""
     import numpy as np
     import pandas as pd
 
@@ -10197,8 +10187,8 @@ def _image_resize_batches(batches):
 
 
 def _video_frame_batches(batches):
-    """Stub decode + stride frame sampling with in-batch fan-out —
-    shared by q_video_frame_sample and jobs/media_pipeline.py."""
+    """Stub decode + stride frame sampling with in-batch fan-out — the
+    batch body of `video_frames_from`."""
     import numpy as np
     import pandas as pd
 
@@ -10224,7 +10214,7 @@ def _video_frame_batches(batches):
 
 def _audio_chunk_batches(batches):
     """Stub PCM decode + 400-sample window chunking with exact integer
-    energy/peak — shared by q_audio_chunks and jobs/media_pipeline.py."""
+    energy/peak — the batch body of `audio_chunks_from`."""
     import numpy as np
     import pandas as pd
 
@@ -10265,6 +10255,69 @@ def _audio_chunk_batches(batches):
         )
 
 
+def _hex8_md5(*parts):
+    """First 8 hex chars of md5 over the concatenated string parts."""
+    return F.substring(F.md5(F.concat(*parts).cast("binary")), 1, 8)
+
+
+def image_thumbs_from(assets):
+    """(doc_id, width, height, thumb_w, thumb_h, thumb_digest) for any
+    (doc_id, payload) asset table: the thumbnail-fit batch body, then a
+    JVM-side digest of doc_id:WxH. q_image_resize and
+    jobs/media_pipeline.py both run this."""
+    dims = assets.mapInPandas(
+        _image_resize_batches,
+        schema=(
+            "doc_id long, width long, height long,"
+            " thumb_w long, thumb_h long"
+        ),
+    )
+    digest = _hex8_md5(
+        F.col("doc_id").cast("string"), F.lit(":"),
+        F.col("thumb_w").cast("string"), F.lit("x"),
+        F.col("thumb_h").cast("string"),
+    )
+    return dims.select(
+        "doc_id", "width", "height", "thumb_w", "thumb_h",
+        digest.alias("thumb_digest"),
+    )
+
+
+def video_frames_from(assets):
+    """(doc_id, n_frames, frame_idx, ts_us, frame_digest) for any
+    (doc_id, payload) asset table: the frame-sampling batch body, the
+    24 fps timestamp and a JVM-side digest of doc_id:frame_idx.
+    q_video_frame_sample and jobs/media_pipeline.py both run this."""
+    frames = assets.mapInPandas(
+        _video_frame_batches,
+        schema="doc_id long, n_frames long, frame_idx long",
+    )
+    digest = _hex8_md5(
+        F.col("doc_id").cast("string"), F.lit(":"),
+        F.col("frame_idx").cast("string"),
+    )
+    return frames.select(
+        "doc_id",
+        "n_frames",
+        "frame_idx",
+        F.expr("frame_idx * 1000000 DIV 24").alias("ts_us"),
+        digest.alias("frame_digest"),
+    )
+
+
+def audio_chunks_from(assets):
+    """(doc_id, n_samples, chunk_idx, chunk_n, energy, peak) for any
+    (doc_id, payload) asset table: the 400-sample chunking batch body.
+    q_audio_chunks and jobs/media_pipeline.py both run this."""
+    return assets.mapInPandas(
+        _audio_chunk_batches,
+        schema=(
+            "doc_id long, n_samples long, chunk_idx long,"
+            " chunk_n long, energy long, peak long"
+        ),
+    )
+
+
 @q(
     """
     WITH m AS (
@@ -10303,31 +10356,7 @@ def q_image_resize(spark, sf_dir):
     per-row Python), then row-local JVM string/hash functions in
     whole-stage codegen. Nothing shuffles; partitioning is inherited
     from the scan, exactly like the extract stage."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-
-    dims = docs.mapInPandas(
-        _image_resize_batches,
-        schema=(
-            "doc_id long, width long, height long,"
-            " thumb_w long, thumb_h long"
-        ),
-    )
-    digest = F.substring(
-        F.md5(
-            F.concat(
-                F.col("doc_id").cast("string"), F.lit(":"),
-                F.col("thumb_w").cast("string"), F.lit("x"),
-                F.col("thumb_h").cast("string"),
-            ).cast("binary")
-        ),
-        1, 8,
-    )
-    return dims.select(
-        "doc_id", "width", "height", "thumb_w", "thumb_h",
-        digest.alias("thumb_digest"),
-    )
+    return image_thumbs_from(_doc_payloads(spark, sf_dir))
 
 
 @q(
@@ -10367,30 +10396,7 @@ def q_video_frame_sample(spark, sf_dir):
     row-local JVM hash/string work. Output is at most 8x the input
     row count and partitioning is inherited from the scan; downstream
     consumers (per-frame embedding, dedup) shuffle on their own keys."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-
-    frames = docs.mapInPandas(
-        _video_frame_batches,
-        schema="doc_id long, n_frames long, frame_idx long",
-    )
-    digest = F.substring(
-        F.md5(
-            F.concat(
-                F.col("doc_id").cast("string"), F.lit(":"),
-                F.col("frame_idx").cast("string"),
-            ).cast("binary")
-        ),
-        1, 8,
-    )
-    return frames.select(
-        "doc_id",
-        "n_frames",
-        "frame_idx",
-        F.expr("frame_idx * 1000000 DIV 24").alias("ts_us"),
-        digest.alias("frame_digest"),
-    )
+    return video_frames_from(_doc_payloads(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -10964,6 +10970,23 @@ def _varint_bytes_sql(v: str) -> str:
     )
 
 
+def postings_gaps(post):
+    """(w, gap) for any (w, doc_id) postings table: each posting's
+    d-gap from the term's previous doc_id, the first posting coded as
+    doc_id + 1 (the gap from a -1 sentinel). The lag window's
+    (w, doc_id) order is the index writer's file order.
+    q_postings_compression and jobs/search_index.py's postings audit
+    both run this."""
+    wnd = Window.partitionBy("w").orderBy(F.asc("doc_id"))
+    return post.select(
+        "w",
+        F.coalesce(
+            F.col("doc_id") - F.lag("doc_id").over(wnd),
+            F.col("doc_id") + 1,
+        ).alias("gap"),
+    )
+
+
 @q(
     f"""
     WITH toks AS (
@@ -11015,15 +11038,7 @@ def q_postings_compression(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     toks = doc_tokens(docs, "doc_id")
     post = toks.groupBy("w", "doc_id").agg(F.lit(1)).select("w", "doc_id")
-    wnd = Window.partitionBy("w").orderBy(F.asc("doc_id"))
-    g = post.select(
-        "w",
-        F.coalesce(
-            F.col("doc_id") - F.lag("doc_id").over(wnd),
-            F.col("doc_id") + 1,
-        ).alias("gap"),
-    )
-    term = g.groupBy("w").agg(
+    term = postings_gaps(post).groupBy("w").agg(
         F.count("*").cast("long").alias("df"),
         F.sum(F.expr(_varint_bytes_sql("gap"))).cast("long").alias("vbytes"),
     )
@@ -12508,27 +12523,10 @@ def q_robots_crawl_debt(spark, sf_dir):
         ).otherwise(F.lit("")),
         F.lit("Crawl-delay: 1"),
     )
-    rules = hosts.select(
-        "hn",
-        F.transform(
-            F.filter(
-                F.split(txt, nl),
-                lambda line: line.startswith("Disallow: "),
-            ),
-            lambda line: F.substring(line, 11, 10000),
-        ).alias("dis"),
-    )
+    rules = hosts.select("hn", _disallow_prefixes(txt).alias("dis"))
     marked = cap.join(rules, "hn").select(
         "host",
-        (
-            F.size(
-                F.filter(
-                    F.col("dis"),
-                    lambda p: F.col("path").startswith(p),
-                )
-            )
-            > 0
-        ).alias("blocked"),
+        _disallowed("path", "dis").alias("blocked"),
         F.array_contains("dis", "/").alias("full_block"),
     )
     return marked.groupBy("host").agg(
@@ -13076,17 +13074,7 @@ def q_audio_chunks(spark, sf_dir):
     fan-out inside the batch — no explode shuffle. Output inherits
     the scan partitioning; downstream per-chunk consumers (ASR
     embedding, dedup) shuffle on their own keys."""
-    docs = _t(spark, sf_dir, "documents").select(
-        "doc_id", F.encode("text", "UTF-8").alias("payload")
-    )
-
-    return docs.mapInPandas(
-        _audio_chunk_batches,
-        schema=(
-            "doc_id long, n_samples long, chunk_idx long,"
-            " chunk_n long, energy long, peak long"
-        ),
-    )
+    return audio_chunks_from(_doc_payloads(spark, sf_dir))
 
 
 @q(
@@ -16300,6 +16288,40 @@ ROBOTS_RULES_SNAPSHOT = [
 ]
 ROBOTS_RULES_SCHEMA = "g long, pattern string, is_allow int"
 
+#: the six url paths that probe ROBOTS_RULES_SNAPSHOT: an Allow
+#: override inside a disallowed subtree, the pierced blanket Disallow,
+#: a default-allowed page and the one-char-short prefix boundary (the
+#: oracles inline the same CASE)
+ROBOTS_PROBE_PATHS = (
+    "/private/a",
+    "/private/public/x",
+    "/articles/2024/one",
+    "/index.html",
+    "/tmp/x",
+    "/private",
+)
+
+
+def robots_probe_path(k, paths):
+    """``paths[k]`` for an integer Column ``k`` in 0..5: the probe url
+    path of q_robots_precedence, q_robots_diff, q_robots_wildcard and
+    the synthetic logs of jobs/compliance_run.py and
+    jobs/frontier_hygiene.py."""
+    path = F.when(k == 0, F.lit(paths[0]))
+    for i, p in enumerate(paths[1:-1], 1):
+        path = path.when(k == i, F.lit(p))
+    return path.otherwise(F.lit(paths[-1]))
+
+
+def _robots_probe_urls(spark, sf_dir, paths):
+    """(event_id, g, path): every event as one url probe, verdicted
+    under ruleset g = (event_id DIV 6) % 3 at path paths[event_id % 6]."""
+    return _t(spark, sf_dir, "events").select(
+        "event_id",
+        F.expr("(event_id DIV 6) % 3").alias("g"),
+        robots_probe_path(F.col("event_id") % 6, paths).alias("path"),
+    )
+
 
 def robots_verdicts_from(
     urls, rules, uid="event_id", match="startswith(path, pattern)"
@@ -16414,22 +16436,8 @@ def q_robots_precedence(spark, sf_dir):
     dimension-sized vs 10^12 urls); the only exchange is the
     per-url window, keyed on the url itself — maximally spread, no
     skew; the rollup collapses onto the bounded rule alphabet."""
-    ev = _t(spark, sf_dir, "events")
     rules = local_table(spark, ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA)
-    m = F.col("event_id") % 6
-    path = (
-        F.when(m == 0, F.lit("/private/a"))
-        .when(m == 1, F.lit("/private/public/x"))
-        .when(m == 2, F.lit("/articles/2024/one"))
-        .when(m == 3, F.lit("/index.html"))
-        .when(m == 4, F.lit("/tmp/x"))
-        .otherwise(F.lit("/private"))
-    )
-    urls = ev.select(
-        "event_id",
-        (F.expr("event_id DIV 6") % 3).alias("g"),
-        path.alias("path"),
-    )
+    urls = _robots_probe_urls(spark, sf_dir, ROBOTS_PROBE_PATHS)
     verdicts = robots_verdicts_from(urls, rules, uid="event_id")
     return verdicts.groupBy("g", "verdict", "rule").agg(
         F.count("*").cast("long").alias("n_urls")
@@ -19079,19 +19087,7 @@ def q_robots_diff(spark, sf_dir):
     url — maximally spread), then an equi-join of the two verdict
     streams on the SAME url key their windows already partitioned
     by; ONE hash aggregate on the 4-class transition key."""
-    ev = _t(spark, sf_dir, "events")
-    m = F.col("event_id") % 6
-    urls = ev.select(
-        "event_id",
-        F.expr("(event_id DIV 6) % 3").alias("g"),
-        F.when(m == 0, F.lit("/private/a"))
-        .when(m == 1, F.lit("/private/public/x"))
-        .when(m == 2, F.lit("/articles/2024/one"))
-        .when(m == 3, F.lit("/index.html"))
-        .when(m == 4, F.lit("/tmp/x"))
-        .otherwise(F.lit("/private"))
-        .alias("path"),
-    )
+    urls = _robots_probe_urls(spark, sf_dir, ROBOTS_PROBE_PATHS)
     rules_before = local_table(
         spark, ROBOTS_RULES_SNAPSHOT, ROBOTS_RULES_SCHEMA
     )
@@ -20516,18 +20512,17 @@ def q_robots_wildcard(spark, sf_dir):
     match in place of startswith — broadcast rule dimension, per-url
     winner window keyed on the url itself (maximally spread), LEFT
     join keeps default-allowed."""
-    ev = _t(spark, sf_dir, "events")
-    m = F.col("event_id") % 6
-    urls = ev.select(
-        "event_id",
-        F.expr("(event_id DIV 6) % 3").alias("g"),
-        F.when(m == 0, F.lit("/private/a.html"))
-        .when(m == 1, F.lit("/private/pub/x.html"))
-        .when(m == 2, F.lit("/downloads/file.pdf"))
-        .when(m == 3, F.lit("/downloads/page.html"))
-        .when(m == 4, F.lit("/downloads/page.html?sess=1"))
-        .otherwise(F.lit("/index.html"))
-        .alias("path"),
+    urls = _robots_probe_urls(
+        spark,
+        sf_dir,
+        (
+            "/private/a.html",
+            "/private/pub/x.html",
+            "/downloads/file.pdf",
+            "/downloads/page.html",
+            "/downloads/page.html?sess=1",
+            "/index.html",
+        ),
     )
     rules = local_table(
         spark,

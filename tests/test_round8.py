@@ -9,7 +9,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from readembedability_spark.textops import _cumsum_parts, _grouped_cumsum
+from readembedability_spark.textops import (
+    _cumsum_parts,
+    _grouped_cumsum,
+    surt_cdx_from,
+)
 from helpers import formatted_plan, pdf_blob, write_docs
 
 SF_SMALL = "/root/testdata/sf0.001"
@@ -740,7 +744,7 @@ def test_archive_index_job_composes(spark, tmp_path, monkeypatch, capsys):
     }
     exp = {
         r["surt_key"]: (r["n_captures"], r["n_versions"])
-        for r in aj.surt_index(
+        for r in surt_cdx_from(
             aj.captures(spark.read.parquet(str(out / "_synth")))
         ).collect()
     }

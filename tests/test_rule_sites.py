@@ -2,7 +2,8 @@
 
 The registry, the batch jobs and the stream call one core per rule
 (text_signals.py, functions/, the stream's ledger core, textops'
-politeness verdict and census tail). This counts the lines of
+politeness verdict, census tail, media, BM25, postings-gap and CDX
+cores, and the cores sibling queries share). This counts the lines of
 ``readembedability_spark/`` and ``jobs/`` that spell each rule out, so a
 restated copy fails here instead of drifting from the core. The DuckDB
 oracle texts are SQL and match none of these patterns.
@@ -40,6 +41,28 @@ RULES = {
     "jaccard": (r'F\.col\("sza"\) \+ F\.col\("szb"\)', 1),
     "politeness_verdict": (r'"rude"', 1),
     "class_census": (r'"_num DIV _tot"', 1),
+    # textops' media, BM25, postings-gap and CDX cores, which the media,
+    # search and archive jobs call
+    "image_thumbs": (r'F\.col\("thumb_w"\)\.cast\("string"\), F\.lit\("x"\)', 1),
+    "video_frames": (r'"frame_idx \* 1000000 DIV 24"', 1),
+    "audio_chunks": (r'"doc_id long, n_samples long, chunk_idx long,"', 1),
+    "bm25_term_join": (r"\.crossJoin\(F\.broadcast\(corp\)\)", 1),
+    "bm25_top5_window": (r'F\.desc\("score_micro"\), F\.asc\("doc_id"\)', 1),
+    "bm25_corpus": (r'F\.sum\("dl"\) \* F\.lit\(1\.0\) / F\.count\("\*"\)', 1),
+    "bm25_query_terms": (r'F\.slice\(F\.split\("text", " "\), 3, 3\)', 1),
+    "postings_gaps": (r'F\.col\("doc_id"\) - F\.lag\("doc_id"\)', 1),
+    "surt_cdx": (r'F\.countDistinct\("digest"\)\.alias\("n_versions"\)', 1),
+    # rules shared by sibling queries; the training round's dot product
+    # keeps its own max(y), so the model apply has two sites
+    "event_captures": (r'F\.lit\("\.Example\.COM/item/"\)', 1),
+    "model_apply": (r'F\.sum\(F\.col\("xq"\) \* F\.col\("w"\)\)', 2),
+    "disallow_parse": (r'startswith\("Disallow: "\)', 1),
+    "disallow_prefix_test": (r"\.startswith\(p\)", 1),
+    "robots_probe_path": (r'"/private/public/x"', 1),
+    "host_edges": (r'F\.regexp_extract\("link", \w+, 1\)\.cast\("long"\)', 1),
+    "first_lines_kept": (r'F\.array_position\(F\.col\("lines"\), x\)', 1),
+    "stage_funnel": (r'F\.count\("\*"\) \* F\.lit\(1\.0\) / F\.max\("n"\)', 1),
+    "hits_half_step": (r'\.agg\(F\.sum\("r"\)\.alias\("s"\)\)', 1),
 }
 
 

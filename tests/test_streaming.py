@@ -90,7 +90,7 @@ def test_streaming_stateful_host_sessions(spark, stream_dirs):
     expected = (
         spark.read.parquet(str(in_dir))
         .select(
-            host_col("url").alias("host"),
+            host_col().alias("host"),
             F.coalesce(F.length("html"), F.lit(0)).cast("long").alias("nb"),
         )
         .groupBy("host")
@@ -124,7 +124,7 @@ def test_streaming_session_windows(spark, stream_dirs, tmp_path):
     ).collect()
     raw = (
         spark.read.parquet(str(in_dir))
-        .groupBy(host_col("url").alias("host"))
+        .groupBy(host_col().alias("host"))
         .agg(F.count("*").alias("n"))
         .collect()
     )
@@ -889,7 +889,7 @@ def test_streaming_politeness_verdicts_and_late(spark, tmp_path):
     from readembedability_spark.functions import host_col
 
     caps = spark.read.parquet(str(in_dir)).select(
-        host_col("url").alias("host"), "url", "warc_ts"
+        host_col().alias("host"), "url", "warc_ts"
     )
     w = Window.partitionBy("host").orderBy("warc_ts", "url")
     gaps = caps.select(
