@@ -1,7 +1,8 @@
 """Size of the program over every ``.py`` file in
 ``readembedability_spark/`` and ``jobs/``: raw lines, code-only lines
 (no blank, comment-only or docstring lines) and options (parameters
-with a default plus dataclass fields with a default).
+with a default plus dataclass fields with a default). A last ``tests``
+line gives the raw and code-only lines of ``tests/*.py``.
 
     python bench/loc.py      # or: make loc
 """
@@ -86,6 +87,11 @@ def main() -> None:
     print(f"raw  {raw}")
     print(f"code {code}")
     print(f"options {opts}")
+    tests = [p.read_text() for p in sorted((ROOT / "tests").glob("*.py"))]
+    print(
+        f"tests raw {sum(len(s.splitlines()) for s in tests)} "
+        f"code {sum(code_lines(s) for s in tests)}"
+    )
 
 
 if __name__ == "__main__":

@@ -33,7 +33,11 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from _session import job_parser, run_job  # noqa: E402
+from readembedability_spark.operators.extract import (  # noqa: E402
+    endorsed_links,
+)
 from readembedability_spark.textops import (  # noqa: E402
+    _SCHEDULE_K,
     HOST_RE,
     frontier_counts_from,
     frontier_schedule_from,
@@ -41,28 +45,12 @@ from readembedability_spark.textops import (  # noqa: E402
 )
 
 
-def link_table(extracted):
-    """(url, link) off an extraction result — pages with no surviving
-    links drop out here. rel-flagged nofollow/sponsored/ugc links (L-8)
-    are excluded: every consumer of this table (authority edges,
-    frontier, schedule) models endorsement, which those links don't
-    carry."""
-    return (
-        extracted.select(
-            "url",
-            F.explode(F.arrays_zip("links", "link_nofollow")).alias("z"),
-        )
-        .filter(~F.col("z.link_nofollow"))
-        .select("url", F.col("z.links").alias("link"))
-    )
-
-
 def extract_link_table(spark, pages):
-    """link_table through the full salted mapInPandas extraction — the
-    links column rides the batch the extract stage already emits."""
+    """endorsed_links through the full salted mapInPandas extraction —
+    the links column rides the batch the extract stage already emits."""
     from readembedability_spark.harness import salted_extract
 
-    return link_table(salted_extract(pages))
+    return endorsed_links(salted_extract(pages))
 
 
 def host_edges(links):
@@ -82,32 +70,36 @@ def host_edges(links):
     )
 
 
-def unseen_links(links, pages):
-    """Distinct outbound links not present as corpus urls — the ONE
-    definition of 'unseen' shared by the frontier rollup and the
-    schedule (textops.unseen_links_from, the q_crawl_frontier
-    anti-join). run() persists this so the anti-join shuffle runs once
-    across both consumers."""
-    return unseen_links_from(links, pages)
+def crawl_half(spark, links, pages, out: Path):
+    """The crawl half over an endorsed-link table: host edges →
+    PageRank authority → unseen anti-join → per-host frontier →
+    authority-prioritized, politeness-capped schedule (the registry's
+    q_crawl_frontier / q_frontier_schedule cores). Writes
+    ``authority``, ``frontier`` and ``schedule`` under ``out`` and
+    returns the (host, authority) table with the stage's stats.
 
+    The ranks, the unseen links and the frontier each feed several
+    consumers (their own write, the schedule joins, the counts), so
+    each is persisted and PageRank and the anti-join run once."""
+    from readembedability_spark.queries import _persist
+    from readembedability_spark.textops import _pagerank
 
-def frontier(links, pages, unseen=None):
-    """Per-target-host unseen counts over unseen_links (pass a
-    persisted `unseen` to share the anti-join with schedule())."""
-    if unseen is None:
-        unseen = unseen_links(links, pages)
-    return frontier_counts_from(unseen)
-
-
-def schedule(fr, ranks, unseen, k: int = 3):
-    """Authority-prioritized, politeness-capped crawl schedule — the
-    frontier half of q_frontier_schedule (textops.
-    frontier_schedule_from): at most `k` unseen urls per host, priority
-    = host authority x unseen count, hosts with no authority score at
-    priority 0 so newly-discovered hosts still crawl. `unseen` is the
-    shared unseen_links table, fr its per-host counts and ranks the
-    (host, authority) table."""
-    return frontier_schedule_from(unseen, fr, ranks, k)
+    ranks = _persist(
+        _pagerank(spark, host_edges(links)).withColumnsRenamed(
+            {"node": "host", "pr": "authority"}
+        )
+    )
+    unseen = _persist(unseen_links_from(links, pages))
+    fr = _persist(frontier_counts_from(unseen))
+    ranks.write.mode("overwrite").parquet(str(out / "authority"))
+    fr.write.mode("overwrite").parquet(str(out / "frontier"))
+    sched = _persist(frontier_schedule_from(unseen, fr, ranks, _SCHEDULE_K))
+    sched.write.mode("overwrite").parquet(str(out / "schedule"))
+    return ranks, {
+        "hosts_ranked": ranks.count(),
+        "frontier_hosts": fr.count(),
+        "schedule_rows": sched.count(),
+    }
 
 
 def annotate_pages(pages, ranks):
@@ -128,7 +120,7 @@ def annotate_pages(pages, ranks):
 
 def run(spark, args) -> dict:
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _link_pages, _pagerank
+    from readembedability_spark.textops import _link_pages
 
     if args.input:
         pages = spark.read.parquet(args.input)
@@ -140,33 +132,11 @@ def run(spark, args) -> dict:
     links = _persist(extract_link_table(spark, pages))
     stats["links"] = links.count()
 
-    edges = host_edges(links)
-    ranks = _pagerank(spark, edges).withColumnsRenamed(
-        {"node": "host", "pr": "authority"}
-    )
-    # the anti-join feeds BOTH the frontier rollup and the schedule
-    unseen = _persist(unseen_links(links, pages))
-    fr = frontier(links, pages, unseen)
-
     out = Path(args.output)
-    # ranks/fr each feed two consumers (their own write + the
-    # schedule/annotate joins) — persisted so PageRank and the
-    # anti-join don't re-run per action
-    ranks = _persist(ranks)
-    fr = _persist(fr)
-    ranks.write.mode("overwrite").parquet(str(out / "authority"))
-    fr.write.mode("overwrite").parquet(str(out / "frontier"))
+    ranks, crawl_stats = crawl_half(spark, links, pages, out)
     annotated = annotate_pages(pages, ranks)
     annotated.write.mode("overwrite").parquet(str(out / "pages_authority"))
-    # persisted: the write and the stats count below each materialize
-    # the schedule — without this the anti-join + window + host joins
-    # would run twice
-    sched = _persist(schedule(fr, ranks, unseen))
-    sched.write.mode("overwrite").parquet(str(out / "schedule"))
-
-    stats["hosts_ranked"] = ranks.count()
-    stats["frontier_hosts"] = fr.count()
-    stats["schedule_rows"] = sched.count()
+    stats.update(crawl_stats)
     return stats
 
 

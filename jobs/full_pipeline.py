@@ -39,14 +39,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from pyspark.sql import functions as F  # noqa: E402
 
 from _session import job_parser, run_job  # noqa: E402
-from crawl_graph import (  # noqa: E402
-    HOST_RE,
-    frontier,
-    host_edges,
-    link_table,
-    schedule,
-    unseen_links,
-)
+from crawl_graph import HOST_RE, crawl_half  # noqa: E402
 from pretrain_prep import (  # noqa: E402
     DEFAULT_BADWORDS,
     dedup_lines_global,
@@ -140,8 +133,9 @@ def authority_blended_sample(docs, ranks):
 
 
 def run(spark, args) -> dict:
+    from readembedability_spark.operators.extract import endorsed_links
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _link_pages, _pagerank
+    from readembedability_spark.textops import _link_pages
 
     out = Path(args.output)
     if args.input:
@@ -155,22 +149,9 @@ def run(spark, args) -> dict:
     stats["extracted"] = extracted.count()
 
     # ---- crawl half ---------------------------------------------------
-    links = _persist(link_table(extracted))
-    edges = host_edges(links)
-    ranks = _persist(
-        _pagerank(spark, edges).withColumnsRenamed(
-            {"node": "host", "pr": "authority"}
-        )
-    )
-    unseen = _persist(unseen_links(links, pages))
-    fr = _persist(frontier(links, pages, unseen))
-    ranks.write.mode("overwrite").parquet(str(out / "authority"))
-    fr.write.mode("overwrite").parquet(str(out / "frontier"))
-    sched = _persist(schedule(fr, ranks, unseen))
-    sched.write.mode("overwrite").parquet(str(out / "schedule"))
-    stats["hosts_ranked"] = ranks.count()
-    stats["frontier_hosts"] = fr.count()
-    stats["schedule_rows"] = sched.count()
+    links = _persist(endorsed_links(extracted))
+    ranks, crawl_stats = crawl_half(spark, links, pages, out)
+    stats.update(crawl_stats)
 
     # ---- curation half (off the same persisted extraction) -----------
     docs = curation_docs(extracted, pages)

@@ -187,6 +187,23 @@ def extract_stage(pages_df, run_id: str = "run", metrics_dir: str | None = None)
     )
 
 
+def endorsed_links(extracted):
+    """(url, link) off an extraction result, one row per outbound link.
+    rel-flagged nofollow/sponsored/ugc links (L-8) are dropped: they
+    carry no endorsement, so no authority edge, frontier or schedule
+    reads them. Pages with no surviving link drop out."""
+    from pyspark.sql import functions as F
+
+    return (
+        extracted.select(
+            "url",
+            F.explode(F.arrays_zip("links", "link_nofollow")).alias("z"),
+        )
+        .filter(~F.col("z.link_nofollow"))
+        .select("url", F.col("z.links").alias("link"))
+    )
+
+
 def load_metrics(spark, metrics_dir: str):
     """Per-partition metrics JSON files → DataFrame (METRICS_SCHEMA)."""
     files = sorted(Path(metrics_dir).glob("part-*.json"))

@@ -21,7 +21,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from readembedability_spark.functions import capture_digest, epoch_us, host_col
-from readembedability_spark.operators.extract import extract_stage
+from readembedability_spark.operators.extract import (
+    endorsed_links,
+    extract_stage,
+)
 from readembedability_spark.schemas import PAGES_SCHEMA
 from readembedability_spark.text_signals import feature_bucket, word_ngrams
 
@@ -291,15 +294,7 @@ def streaming_link_frontier(
     is the DOWNSTREAM admission job's responsibility
     (q_dedup_incremental's O(batch) shape), keeping this operator a
     pure map + join at any ingest rate."""
-    links = (
-        extract_stage(pages_stream)
-        .select(
-            "url",
-            F.explode(F.arrays_zip("links", "link_nofollow")).alias("z"),
-        )
-        .filter(~F.col("z.link_nofollow"))  # L-8: don't crawl paid links
-        .select("url", F.col("z.links").alias("link"))
-    )
+    links = endorsed_links(extract_stage(pages_stream))
     return links.join(
         known_urls.select(F.col("url").alias("known_url")),
         F.col("link") == F.col("known_url"),

@@ -32,3 +32,19 @@ def spark():
     )
     yield spark
     spark.stop()
+
+
+@pytest.fixture(autouse=True)
+def _release_anchors(request):
+    """Free every anchor the registry queries tracked once a test that
+    uses the Spark session ends; a test without it starts no session."""
+    spark = (
+        request.getfixturevalue("spark")
+        if "spark" in request.fixturenames
+        else None
+    )
+    yield
+    if spark is not None:
+        from readembedability_spark.queries import release_caches
+
+        release_caches(spark)

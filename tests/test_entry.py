@@ -8,6 +8,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import __spark_entry__ as entrymod
+from helpers import SF_SMALL, planted_con
 
 
 def test_entry_smoke(spark):
@@ -26,16 +27,9 @@ def test_queries_and_oracles_consistent():
 
 
 def test_flagship_matches_oracle(spark):
-    import duckdb
-
-    sf = "/root/testdata/sf0.001"
-    sdf = entrymod.queries()["q_extract_flagship"](spark, sf)
+    sdf = entrymod.queries()["q_extract_flagship"](spark, SF_SMALL)
     rows = sorted(tuple(r) for r in sdf.collect())
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{sf}/documents.parquet')"
-    )
-    drows = sorted(tuple(r) for r in con.execute(
+    drows = sorted(tuple(r) for r in planted_con(SF_SMALL).execute(
         entrymod.oracle_sql()["q_extract_flagship"]
     ).fetchall())
     assert rows == drows

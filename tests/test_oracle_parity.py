@@ -72,15 +72,10 @@ def _all_names():
 
 @pytest.mark.parametrize("name", _all_names())
 def test_query_matches_oracle(spark, name):
-    from readembedability_spark.queries import release_caches
-
     qd = _registry()[name]
     sdf = qd.spark(spark, SF_DIR)
     s_cols = sdf.columns
     s_rows = [tuple(r) for r in sdf.collect()]
-    # caller contract: free the query's anchors once its result is
-    # materialized, so they do not pile up across the shared session
-    release_caches(spark)
     if qd.sql is None:
         assert len(s_rows) >= 0  # rows-only check
         return

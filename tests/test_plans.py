@@ -415,7 +415,6 @@ def test_minhash_core_single_hash_aggregate(spark, monkeypatch, name):
     import re
 
     from readembedability_spark import textops
-    from readembedability_spark.queries import release_caches
     from test_oracle_parity import SF_DIR
 
     # connected components runs eagerly; a lazy stand-in keeps the
@@ -427,12 +426,8 @@ def test_minhash_core_single_hash_aggregate(spark, monkeypatch, name):
             F.col("a").alias("node"), F.col("b").alias("label")
         ),
     )
-    # start from an empty cache: a table an earlier query left cached
-    # would be substituted into this plan
-    release_caches(spark)
     df = textops.REGISTRY[name].spark(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
-    release_caches(spark)
     assert "SortAggregate" not in plan
     folds = _doc_keyed_folds(plan)
     assert len(folds) == 1, folds
@@ -467,18 +462,11 @@ def test_embedding_family_plan_shape(spark, name):
     ceiling."""
     import re
 
-    from readembedability_spark.queries import (
-        BASELINE_REGISTRY,
-        REGISTRY,
-        release_caches,
-    )
+    from readembedability_spark.queries import BASELINE_REGISTRY, REGISTRY
     from test_oracle_parity import SF_DIR
 
-    # a table an earlier query left cached would be substituted here
-    release_caches(spark)
     df = {**REGISTRY, **BASELINE_REGISTRY}[name].spark(spark, SF_DIR)
     plan = formatted_plan(df)
-    release_caches(spark)
     c = _op_counts(plan)
     got = (
         c["Exchange"],
@@ -531,7 +519,7 @@ def test_extraction_family_plan_shape(spark, name):
     import re
 
     from readembedability_spark.flagship import flagship_extract
-    from readembedability_spark.queries import REGISTRY, release_caches
+    from readembedability_spark.queries import REGISTRY
     from test_oracle_parity import SF_DIR
 
     build = (
@@ -539,10 +527,7 @@ def test_extraction_family_plan_shape(spark, name):
         if name == "q_extract_flagship"
         else REGISTRY[name].spark
     )
-    # a table an earlier query left cached would be substituted here
-    release_caches(spark)
     plan = formatted_plan(build(spark, SF_DIR))
-    release_caches(spark)
     got = (
         _op_counts(plan)["Exchange"],
         len(re.findall(r"^\(\d+\) MapInPandas\s*$", plan, re.M)),
@@ -577,13 +562,10 @@ def test_loop_family_plan_shape(spark, name):
     its pinned ceiling."""
     import re
 
-    from readembedability_spark.queries import REGISTRY, release_caches
+    from readembedability_spark.queries import REGISTRY
     from test_oracle_parity import SF_DIR
 
-    # a table an earlier query left cached would be substituted here
-    release_caches(spark)
     plan = formatted_plan(REGISTRY[name].spark(spark, SF_DIR))
-    release_caches(spark)
     got = (
         _op_counts(plan)["Exchange"],
         len(re.findall(r"^\(\d+\) Scan ExistingRDD", plan, re.M)),

@@ -8,8 +8,6 @@ from __future__ import annotations
 
 import re
 
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 import readembedability_spark.textops as textops
@@ -23,10 +21,13 @@ from readembedability_spark.textops import (
     _ann_ivf_kmeans_df,
     _connected_components,
 )
-from helpers import formatted_plan
-
-SF_SMALL = "/root/testdata/sf0.001"
-SF_MED = "/root/testdata/sf0.01"
+from helpers import (
+    SF_MED,
+    SF_SMALL,
+    formatted_plan,
+    uf_labels,
+    write_docs,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +73,6 @@ def _recall(spark, sf_dir, truth, nprobe: int) -> float:
     got: dict[int, set] = {}
     for r in _ann_ivf_kmeans_df(spark, sf_dir, nprobe).collect():
         got.setdefault(r["qid"], set()).add(r["cid"])
-    release_caches(spark)
     hits = sum(len(got.get(q, set()) & t) for q, t in truth.items())
     return hits / sum(len(t) for t in truth.values())
 
@@ -93,23 +93,6 @@ def test_ivf_kmeans_multiprobe_beats_single_probe(spark):
 # ---------------------------------------------------------------------------
 
 
-def _uf_labels(edges):
-    parent: dict = {}
-
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
-
-
 def test_cc_matches_union_find_random_graphs(spark):
     import random
 
@@ -128,8 +111,7 @@ def test_cc_matches_union_find_random_graphs(spark):
             r["node"]: r["label"]
             for r in _connected_components(spark, df).collect()
         }
-        release_caches(spark)
-        assert got == _uf_labels(edges)
+        assert got == uf_labels(edges)
 
 
 def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
@@ -143,8 +125,7 @@ def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
     got = {
         r["node"]: r["label"] for r in _connected_components(spark, df).collect()
     }
-    release_caches(spark)
-    assert got == _uf_labels(chain)
+    assert got == uf_labels(chain)
     assert set(got.values()) == {0} and len(got) == 65
 
 
@@ -156,7 +137,6 @@ def test_cc_raises_on_round_exhaustion(spark, monkeypatch):
     df = spark.createDataFrame(chain, "a long, b long")
     with pytest.raises(RuntimeError, match="did not converge"):
         _connected_components(spark, df)
-    release_caches(spark)
 
 
 def test_cc_keeps_upstream_persist_anchor(spark):
@@ -239,19 +219,9 @@ def the_corpus(tmp_path_factory):
         texts.append(
             f"the pair{j // 2} alpha beta gamma delt{'a' if i % 2 else 'x'}"
         )
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(ids, pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(["en"] * len(ids)),
-                "source": pa.array(["synth"] * len(ids)),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        d / "documents.parquet",
+    return write_docs(
+        d, [(i, t, "en", "synth", len(t)) for i, t in zip(ids, texts)]
     )
-    return str(d)
 
 
 def test_editdistance_block_key_bounded_on_skew(spark, the_corpus):
@@ -273,7 +243,6 @@ def test_editdistance_block_key_bounded_on_skew(spark, the_corpus):
     assert max_block <= 2, max_block
 
     out = REGISTRY["q_dedup_editdistance"].spark(spark, the_corpus).collect()
-    release_caches(spark)
     got = sorted((r["a"], r["b"], r["dist"]) for r in out)
     assert got == [(200, 201, 1), (202, 203, 1), (204, 205, 1)], got
 
@@ -283,7 +252,6 @@ def test_editdistance_join_keyed_by_fingerprint(spark):
     so the fingerprint is the shuffle key (not the raw first word)."""
     df = REGISTRY["q_dedup_editdistance"].spark(spark, SF_MED)
     plan = formatted_plan(df)
-    release_caches(spark)
     assert re.search(r"\[blk#\d+\]", plan), plan
 
 
@@ -338,7 +306,6 @@ def test_pack_sequences_bounded_exchanges(spark):
     independent of corpus size, with every window slice
     executor-sized."""
     plan = formatted_plan(REGISTRY["q_pack_sequences"].spark(spark, SF_MED))
-    release_caches(spark)
     assert "SinglePartition" not in plan, plan
     assert "rangepartitioning(lang" in plan, plan
     # count Exchange NODES (the formatted plan renders each node once in
@@ -357,7 +324,6 @@ def test_decontaminate_flags_planted_overlap(spark):
     """The synthetic corpus's near-dup docs straddle the eval slice at
     sf0.01 — contamination must be detected, not vacuously empty."""
     rows = REGISTRY["q_decontaminate"].spark(spark, SF_MED).collect()
-    release_caches(spark)
     assert len(rows) >= 1
     assert all(r["n_hits"] >= 1 for r in rows)
 
@@ -391,9 +357,6 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
     """Schleimer et al.'s guarantee: two documents sharing a run of
     >= w+k-1 (= 8) tokens MUST share at least one fingerprint; docs
     with no shared 4-gram share none."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     shared = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
     texts = [
         f"one two three {shared} four five six",
@@ -402,18 +365,7 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
     ]
     d = tmp_path / "sf"
     d.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0, 1, 2], pa.int64()),
-                "text": texts,
-                "lang": ["en"] * 3,
-                "source": ["synth"] * 3,
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        d / "documents.parquet",
-    )
+    write_docs(d, [(i, t, "en", "synth", len(t)) for i, t in enumerate(texts)])
     # recompute the selected fingerprint SETS via the query's internals
     from pyspark.sql import functions as F
 
@@ -421,7 +373,6 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
 
     assert _WINNOW_K + _WINNOW_W - 1 == 8
     rows = REGISTRY["q_winnow_fingerprints"].spark(spark, str(d)).collect()
-    release_caches(spark)
     assert {r["doc_id"] for r in rows} == {0, 1, 2}
 
     docs = spark.read.parquet(f"{d}/documents.parquet").select(
@@ -454,7 +405,6 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
         .distinct()
         .collect()
     )
-    release_caches(spark)
     fps: dict[int, set] = {}
     for r in sel:
         fps.setdefault(r["doc_id"], set()).add(r["fp"])
@@ -467,7 +417,6 @@ def test_pack_sequences_invariant(spark):
     tokens before its final doc (the running-sum definition), and
     sequence ids are dense from 0."""
     rows = REGISTRY["q_pack_sequences"].spark(spark, SF_MED).collect()
-    release_caches(spark)
     by_lang: dict[str, list] = {}
     for r in rows:
         by_lang.setdefault(r["lang"], []).append(r)
@@ -487,28 +436,13 @@ def test_dedup_lines_within_removes_repeats(spark, tmp_path):
     expected cleaned text."""
     import hashlib
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     line_a = " ".join(f"a{i}" for i in range(10))
     line_b = " ".join(f"b{i}" for i in range(10))
     text = " ".join([line_a, line_a, line_b, line_a])
     d = tmp_path / "sf"
     d.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0], pa.int64()),
-                "text": [text],
-                "lang": ["en"],
-                "source": ["synth"],
-                "n_chars": pa.array([len(text)], pa.int64()),
-            }
-        ),
-        d / "documents.parquet",
-    )
+    write_docs(d, [(0, text, "en", "synth", len(text))])
     [r] = REGISTRY["q_dedup_lines_within"].spark(spark, str(d)).collect()
-    release_caches(spark)
     assert (r["n_lines"], r["n_removed"]) == (4, 2)
     expected = hashlib.md5(f"{line_a}\n{line_b}".encode()).hexdigest()
     assert r["cleaned_md5"] == expected
@@ -520,30 +454,15 @@ def test_chunk_documents_overlap_and_coverage(spark, tmp_path):
     overlap by 20 tokens, and every token is covered."""
     import hashlib
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     toks = [f"t{i}" for i in range(250)]
     text = " ".join(toks)
     d = tmp_path / "sf"
     d.mkdir()
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([0], pa.int64()),
-                "text": [text],
-                "lang": ["en"],
-                "source": ["synth"],
-                "n_chars": pa.array([len(text)], pa.int64()),
-            }
-        ),
-        d / "documents.parquet",
-    )
+    write_docs(d, [(0, text, "en", "synth", len(text))])
     rows = sorted(
         REGISTRY["q_chunk_documents"].spark(spark, str(d)).collect(),
         key=lambda r: r["chunk_id"],
     )
-    release_caches(spark)
     assert [r["chunk_id"] for r in rows] == [0, 1, 2]
     expected = [toks[0:100], toks[80:180], toks[160:250]]
     assert [r["chunk_tokens"] for r in rows] == [100, 100, 90]
@@ -556,7 +475,6 @@ def test_join_asof_single_shuffle_no_range_join(spark):
     exchange (keyed by the join key) and no nested-loop/cartesian range
     join anywhere in the plan."""
     plan = formatted_plan(REGISTRY["q_join_asof"].spark(spark, SF_MED))
-    release_caches(spark)
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
     assert len(re.findall(r"\n\(\d+\) Exchange", plan)) == 1, plan
@@ -569,5 +487,4 @@ def test_ann_pq_never_pairwise(spark):
     the vector table against itself (no SortMergeJoin of two
     embeddings-derived sides keyed by nothing, no cartesian)."""
     plan = formatted_plan(REGISTRY["q_ann_pq"].spark(spark, SF_MED))
-    release_caches(spark)
     assert "CartesianProduct" not in plan, plan

@@ -12,11 +12,8 @@ import pytest
 from pyspark.sql import functions as F
 
 import readembedability_spark.textops as textops
-from readembedability_spark.queries import REGISTRY, release_caches
-from helpers import formatted_plan
-
-SF_SMALL = "/root/testdata/sf0.001"
-SF_MED = "/root/testdata/sf0.01"
+from readembedability_spark.queries import REGISTRY
+from helpers import SF_MED, SF_SMALL, formatted_plan, planted_con, write_docs
 
 
 # ---------------------------------------------------------------------------
@@ -87,7 +84,6 @@ def test_km_assign_nprobe1_matches_window_branch(spark):
         .collect()
     }
     assert fast == top1
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -105,7 +101,6 @@ def test_perplexity_join_head_broadcast(spark, name):
     # the head join and the head-exclusion anti-join are broadcast
     assert "BroadcastHashJoin" in plan, plan
     assert "LeftAnti" in plan, plan
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -130,7 +125,6 @@ def test_pagerank_graph_has_sinks_and_conserves_mass(spark):
     assert all(
         r["pr"] > floor for r in res if r["node"] in sink_candidates
     ), res
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -161,7 +155,6 @@ def test_vocab_coverage_no_single_partition_window(spark):
             if em:
                 assert em.group(1) not in single_ids, plan
                 break
-    release_caches(spark)
 
 
 def test_ranked_cumsum_matches_global_window(spark):
@@ -193,7 +186,6 @@ def test_ranked_cumsum_matches_global_window(spark):
         ).collect()
     }
     assert got == want
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -204,16 +196,13 @@ def test_ranked_cumsum_matches_global_window(spark):
 def test_substring_removal_cuts_span_from_later_doc_only(spark, tmp_path):
     """A shared 8-gram run is kept in the first (lowest doc_id) doc and
     excised from the later one; the later doc's unique text survives."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     span = "alpha beta gamma delta epsilon zeta eta theta"  # 8 tokens
     a = f"unique one two three {span} four five six seven"
     b = f"tail nine ten eleven twelve {span} thirteen fourteen fifteen sixteen"
     c = "totally distinct words with no overlap at all here today"
-    pq.write_table(
-        pa.table({"doc_id": [1, 2, 3], "text": [a, b, c]}),
-        tmp_path / "documents.parquet",
+    write_docs(
+        tmp_path,
+        [(i, t, "en", "synth", len(t)) for i, t in enumerate([a, b, c], 1)],
     )
     rows = {
         r["doc_id"]: r
@@ -234,7 +223,6 @@ def test_substring_removal_cuts_span_from_later_doc_only(spark, tmp_path):
     # doc 3 untouched
     assert rows[3]["n_removed"] == 0
     assert rows[3]["clean_md5"] == md5(c)
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -256,7 +244,6 @@ def test_bpe_train_merge_table_shape(spark):
     freqs = [r["pair_freq"] for r in rows]
     assert freqs == sorted(freqs, reverse=True), freqs
     assert all(r["lhs"] and r["rhs"] for r in rows)
-    release_caches(spark)
 
 
 def test_bpe_seq_reassembles_word_and_shrinks(spark):
@@ -277,7 +264,6 @@ def test_bpe_seq_reassembles_word_and_shrinks(spark):
     total_syms = sum(r["n_syms"] * r["freq"] for r in rows)
     total_chars = sum(len(r["word"]) * r["freq"] for r in rows)
     assert total_syms < total_chars
-    release_caches(spark)
 
 
 def test_bpe_tokenize_counts_bounded_by_words_and_chars(spark):
@@ -297,7 +283,6 @@ def test_bpe_tokenize_counts_bounded_by_words_and_chars(spark):
     for did, n in got.items():
         nw, nc = bounds[did]
         assert nw <= n <= nc, (did, n, nw, nc)
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -319,7 +304,6 @@ def test_model_train_learns_the_label(spark):
     acc = sum(1 for r in rows if r["correct"]) / n
     assert acc >= 0.95, (acc, maj)
     assert acc > maj + 0.2, (acc, maj)
-    release_caches(spark)
 
 
 def test_model_train_weights_nontrivial_and_integer(spark):
@@ -335,7 +319,6 @@ def test_model_train_weights_nontrivial_and_integer(spark):
     # rule, so |w_len| should be the largest learned weight
     by = {r["bucket"]: r["weight_micro"] for r in rows}
     assert abs(by["len"]) == max(abs(v) for v in by.values())
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -394,7 +377,6 @@ def test_lines_within_ml_removes_planted_duplicate_lines(spark, tmp_path):
         want = hashlib.md5("\n".join(kept).encode()).hexdigest()
         assert r["cleaned_md5"] == want, did
     assert removed_any
-    release_caches(spark)
 
 
 def test_repetition_lines_ml_counts_real_lines(spark, tmp_path):
@@ -418,7 +400,6 @@ def test_repetition_lines_ml_counts_real_lines(spark, tmp_path):
         want_dup = len(lines) - len(set(lines))
         assert rows[did]["n_lines"] == len(lines)
         assert rows[did]["n_dup_lines"] == want_dup
-    release_caches(spark)
 
 
 def test_repetition_lines_ml_is_row_local(spark):
@@ -435,24 +416,13 @@ def test_repetition_lines_ml_is_row_local(spark):
 def test_dedup_lines_global_cross_doc_first_occurrence_wins(spark, tmp_path):
     import hashlib
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     shared = "alpha beta gamma"
     a = f"first unique line\n{shared}\nmore text here"
     b = f"{shared}\nsecond doc own words\n{shared}"
     c = "completely different content\nnothing shared at all"
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([1, 2, 3], pa.int64()),
-                "text": pa.array([a, b, c]),
-                "lang": pa.array(["en"] * 3),
-                "source": pa.array(["t"] * 3),
-                "n_chars": pa.array([len(a), len(b), len(c)], pa.int64()),
-            }
-        ),
-        tmp_path / "documents.parquet",
+    write_docs(
+        tmp_path,
+        [(i, t, "en", "t", len(t)) for i, t in enumerate([a, b, c], 1)],
     )
     rows = {
         r["doc_id"]: r
@@ -467,12 +437,17 @@ def test_dedup_lines_global_cross_doc_first_occurrence_wins(spark, tmp_path):
     assert rows[2]["n_removed"] == 2
     assert rows[2]["clean_md5"] == md5("second doc own words")
     assert rows[3]["n_removed"] == 0 and rows[3]["clean_md5"] == md5(c)
-    release_caches(spark)
 
 
 _LO, _HI = 2**44, 2**44 + 1
+
+
 _SHARED = "alpha beta gamma"
+
+
 _LO_TEXT = f"own words of lo\nmore of lo\n{_SHARED}"
+
+
 _HI_TEXT = f"{_SHARED}\nown words of hi"
 
 
@@ -480,19 +455,8 @@ def _large_id_docs(tmp_path) -> str:
     """Two docs with doc_ids near 2**44 (a hashed 63-bit id space)
     sharing one line: an integer owner key doc_id * 10**6 + li
     overflows BIGINT here."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([_HI, _LO], pa.int64()),
-                "text": pa.array([_HI_TEXT, _LO_TEXT]),
-            }
-        ),
-        tmp_path / "documents.parquet",
-    )
-    return str(tmp_path)
+    rows = [(d, t, "en", "t", len(t)) for d, t in ((_HI, _HI_TEXT), (_LO, _LO_TEXT))]
+    return write_docs(tmp_path, rows)
 
 
 def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
@@ -505,7 +469,6 @@ def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
         .spark(spark, _large_id_docs(tmp_path))
         .collect()
     }
-    release_caches(spark)
 
     def md5(s):
         return hashlib.md5(s.encode()).hexdigest()
@@ -521,8 +484,6 @@ def test_dedup_lines_global_large_doc_ids(spark, tmp_path):
 def test_dedup_lines_global_large_doc_ids_oracle(spark, tmp_path):
     """The DuckDB oracle orders owners by (doc_id, li) too, so both
     engines agree at doc_ids near 2**44."""
-    import duckdb
-
     sf = _large_id_docs(tmp_path)
     spark_rows = sorted(
         tuple(r)
@@ -531,14 +492,8 @@ def test_dedup_lines_global_large_doc_ids_oracle(spark, tmp_path):
         .select("doc_id", "n_lines", "n_removed", "clean_md5")
         .collect()
     )
-    release_caches(spark)
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf}/documents.parquet')"
-    )
     oracle_rows = sorted(
-        con.execute(
+        planted_con(sf).execute(
             "SELECT doc_id, n_lines, n_removed, clean_md5 FROM ("
             + REGISTRY["q_dedup_lines_global"].sql
             + ")"
@@ -557,7 +512,6 @@ def test_badwords_filter_flags_and_keeps(spark):
     for r in rows:
         assert r["keep"] == (r["n_bad"] == 0)
         assert 0 <= r["n_bad"] <= r["n_tokens"]
-    release_caches(spark)
 
 
 def test_badwords_filter_single_exchange(spark):
@@ -584,7 +538,6 @@ def test_host_quota_caps_and_keeps_largest(spark):
             key=lambda d: (-docs[d], d),
         )
         assert sorted(r["doc_id"] for r in kept) == sorted(pool[:5])
-    release_caches(spark)
 
 
 def test_host_quota_plans_window_group_limit(spark):
@@ -610,7 +563,6 @@ def test_bloom_decontamination_supersets_exact(spark):
     # false-positive overhead is bounded (tiny band collisions)
     extra_docs = len(set(bloom) - set(exact))
     assert extra_docs <= max(5, len(exact)), (extra_docs, len(exact))
-    release_caches(spark)
 
 
 def test_bigram_pmi_finds_collocations(spark):
@@ -621,7 +573,6 @@ def test_bigram_pmi_finds_collocations(spark):
     # PMI of a true collocation is positive; the top-20 should all be
     assert all(p > 0 for p in pmis), pmis
     assert all(r["cab"] >= 5 for r in rows)
-    release_caches(spark)
 
 
 def test_inverted_index_postings_shape(spark):
@@ -634,13 +585,11 @@ def test_inverted_index_postings_shape(spark):
         assert tfs == sorted(tfs, reverse=True)
         assert r["df"] >= len(posts)
         assert r["cf"] >= r["df"]
-    release_caches(spark)
 
 
 def test_inverted_index_plans_window_group_limit(spark):
     plan = formatted_plan(REGISTRY["q_inverted_index"].spark(spark, SF_MED))
     assert "WindowGroupLimit" in plan, plan
-    release_caches(spark)
 
 
 def test_paragraph_quality_bounds(spark):
@@ -649,7 +598,6 @@ def test_paragraph_quality_bounds(spark):
     for r in rows:
         assert r["min_line_bits"] <= r["mean_line_bits"] <= r["max_line_bits"]
         assert r["n_lines"] >= 1
-    release_caches(spark)
 
 
 def test_streaming_quality_filter_serves_trained_weights(spark, tmp_path):
@@ -671,14 +619,12 @@ def test_streaming_quality_filter_serves_trained_weights(spark, tmp_path):
         r["bucket"]: r["weight_micro"]
         for r in REGISTRY["q_model_train"].spark(spark, SF_MED).collect()
     }
-    release_caches(spark)
     batch_pred = {
         r["doc_id"]: r["pred"]
         for r in REGISTRY["q_model_score_trained"]
         .spark(spark, SF_MED)
         .collect()
     }
-    release_caches(spark)
     docs = (
         spark.read.parquet(f"{SF_MED}/documents.parquet")
         .select("doc_id", "text")
@@ -722,7 +668,6 @@ def test_streaming_quality_filter_serves_trained_weights(spark, tmp_path):
         len(sym_diff),
         len(batch_kept),
     )
-    release_caches(spark)
 
 
 def test_model_pr_curve_monotone_recall(spark):
@@ -743,14 +688,12 @@ def test_model_pr_curve_monotone_recall(spark):
     mid = next(r for r in rows if abs(r["threshold"] - 0.5) < 1e-9)
     assert mid["precision"] is not None and mid["precision"] > 0.9
     assert mid["recall"] > 0.9
-    release_caches(spark)
 
 
 def test_dedup_clusters_best_keeps_highest_quality(spark):
     """The keeper per component is its largest-n_chars member; exactly
     one kept per component; components match q_dedup_clusters."""
     rows = REGISTRY["q_dedup_clusters_best"].spark(spark, SF_MED).collect()
-    release_caches(spark)
     nchars = {
         r["doc_id"]: r["n_chars"]
         for r in spark.read.parquet(f"{SF_MED}/documents.parquet")
@@ -768,7 +711,6 @@ def test_dedup_clusters_best_keeps_highest_quality(spark):
         assert kept[0]["doc_id"] == best["doc_id"]
         assert all(m["keeper"] == kept[0]["doc_id"] for m in members)
         assert all(m["component_size"] == len(members) for m in members)
-    release_caches(spark)
 
 
 def test_pretrain_prep_stages_compose(spark):
@@ -821,7 +763,6 @@ def test_pretrain_prep_stages_compose(spark):
     # no single-partition global window anywhere in the packing plan
     plan = formatted_plan(packed)
     assert "SinglePartition" not in plan, plan
-    release_caches(spark)
 
 
 def test_bigram_pmi_top_k_is_take_ordered(spark):
@@ -829,7 +770,6 @@ def test_bigram_pmi_top_k_is_take_ordered(spark):
     partition top-k + driver merge), never a full global Sort."""
     plan = formatted_plan(REGISTRY["q_bigram_pmi"].spark(spark, SF_MED))
     assert "TakeOrdered" in plan, plan
-    release_caches(spark)
 
 
 def test_dedup_lines_global_two_exchanges_no_cartesian(spark):
@@ -840,7 +780,6 @@ def test_dedup_lines_global_two_exchanges_no_cartesian(spark):
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
     n_exchange = len(re.findall(r"\n\(\d+\) Exchange", plan))
     assert n_exchange <= 3, plan
-    release_caches(spark)
 
 
 def test_partitioned_sink_enables_partition_pruning(spark, tmp_path):
@@ -866,7 +805,6 @@ def test_partitioned_sink_enables_partition_pruning(spark, tmp_path):
     n = rd.count()
     want = docs.filter(F.col("lang") == "en").count()
     assert n == want
-    release_caches(spark)
 
 
 @pytest.mark.parametrize(
@@ -884,21 +822,6 @@ def test_new_ops_handle_empty_table(spark, tmp_path, name):
     """Zero-row input must yield zero rows (or an empty merge/weight
     table), never an exception — the resume/partial-run path replays
     queries over possibly-empty buckets."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array([], pa.int64()),
-                "text": pa.array([], pa.string()),
-                "lang": pa.array([], pa.string()),
-                "source": pa.array([], pa.string()),
-                "n_chars": pa.array([], pa.int64()),
-            }
-        ),
-        tmp_path / "documents.parquet",
-    )
+    write_docs(tmp_path, [])
     rows = REGISTRY[name].spark(spark, str(tmp_path)).collect()
     assert rows == []
-    release_caches(spark)

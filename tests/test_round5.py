@@ -6,20 +6,19 @@ classifier training, PageRank), per-round BPE vocab checkpointing
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 import readembedability_spark.queries as queries
 import readembedability_spark.textops as textops
 from readembedability_spark.queries import (
     REGISTRY,
     _parts_for,
-    _resize,
     release_caches,
+    _resize,
 )
-from helpers import formatted_plan, job_module
-
-SF_SMALL = "/root/testdata/sf0.001"
+from readembedability_spark.textops import (
+    frontier_counts_from,
+    unseen_links_from,
+)
+from helpers import SF_SMALL, formatted_plan, job_module, write_docs
 
 
 # ---------------------------------------------------------------------------
@@ -83,7 +82,6 @@ def test_bpe_vocab_parallelism_derived_from_rows(spark, monkeypatch):
     # and the fully-merged vocab matches row-for-row
     a = {r["word"]: r["seq"] for r in words_wide.collect()}
     assert a == b
-    release_caches(spark)
 
 
 def test_bpe_round_plan_stays_bounded(spark, monkeypatch):
@@ -100,7 +98,6 @@ def test_bpe_round_plan_stays_bounded(spark, monkeypatch):
     monkeypatch.setattr(textops, "_BPE_MERGES", 12)
     _, words12 = textops._bpe_train(spark, SF_SMALL)
     plan12 = words12._jdf.queryExecution().executedPlan().toString()
-    release_caches(spark)
 
     # a checkpoint scan plan: no replace chain survives into it, and
     # tripling the merge count must not grow the plan materially
@@ -133,7 +130,6 @@ def test_lrn_feats_parallelism_derived_from_rows(spark, monkeypatch):
     assert feats_w.rdd.getNumPartitions() == _parts_for(n_feats, 1000)
     assert feats_w.rdd.getNumPartitions() > 1
     assert {r["b"]: r["w"] for r in w_w.collect()} == w_default
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -235,7 +231,6 @@ def test_crawl_frontier_plan_no_cartesian(spark):
     plan = formatted_plan(df)
     assert "Cartesian" not in plan, plan
     assert "BroadcastNestedLoop" not in plan, plan
-    release_caches(spark)
 
 
 def test_contamination_report_broadcasts_eval_side(spark):
@@ -245,7 +240,6 @@ def test_contamination_report_broadcasts_eval_side(spark):
     df = REGISTRY["q_contamination_report"].spark(spark, SF_SMALL)
     plan = formatted_plan(df)
     assert "BroadcastHashJoin" in plan, plan
-    release_caches(spark)
 
 
 def test_extract_links_property_invariants():
@@ -277,7 +271,6 @@ def test_pagerank_links_mass_conserved(spark):
     dangling-mass term holds on host-level sinks) and every node is a
     host index in range."""
     rows = REGISTRY["q_pagerank_links"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     assert abs(sum(r["pr"] for r in rows) - 1.0) < 1e-3
     assert all(0 <= r["node"] < 20 for r in rows)
@@ -315,7 +308,6 @@ def test_shuffle_shards_deterministic_permutation(spark):
     m2 = {(r["lang"], r["seq_id"], r["doc_id"]): r["shard"] for r in rows2}
     assert set(m1) == set(m2)
     assert m1 != m2
-    release_caches(spark)
 
 
 def test_written_shards_match_query_order_md5(spark, tmp_path):
@@ -404,7 +396,6 @@ def test_written_shards_match_query_order_md5(spark, tmp_path):
             (len(stream), head, xor),
         )
     assert seen_shards == set(expected)
-    release_caches(spark)
 
 
 def test_q_shuffle_shards_no_single_partition_plan(spark):
@@ -422,7 +413,6 @@ def test_q_shuffle_shards_no_single_partition_plan(spark):
     rows = df.collect()
     assert sum(r["n_seqs"] for r in rows) > 0
     assert len({r["shard"] for r in rows}) == len(rows)
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -468,7 +458,6 @@ def test_pretrain_prep_substring_stage_composes(spark):
     # cleaned text flows on: packing still works over the scrubbed set
     packed = pp.pack_sequences(scrubbed, budget=512)
     assert packed.count() == n_after
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -492,27 +481,17 @@ def test_split_holdout_proportions_and_determinism(spark):
     assert 0.80 <= by_split["train"] / total <= 0.97
     assert 0 < by_split.get("val", 0) < 0.15 * total
     assert 0 < by_split.get("test", 0) < 0.15 * total
-    release_caches(spark)
 
 
 def test_contamination_report_planted_leak(spark, tmp_path):
     """An eval doc sharing a 13-gram with a train doc reports the
     leak; a clean eval doc reports 0."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
     leak = " ".join(f"w{i}" for i in range(13))
     clean = " ".join(f"c{i}" for i in range(14))
-    tbl = pa.table(
-        {
-            "doc_id": pa.array([20, 40, 7], type=pa.int64()),
-            "text": pa.array(
-                [f"{leak} tail", clean, f"head {leak} end"],
-            ),
-            "lang": pa.array(["en", "en", "en"]),
-        }
+    texts = {20: f"{leak} tail", 40: clean, 7: f"head {leak} end"}
+    write_docs(
+        tmp_path, [(d, t, "en", "synth", len(t)) for d, t in texts.items()]
     )
-    pq.write_table(tbl, str(tmp_path / "documents.parquet"))
     rows = {
         r["eval_doc_id"]: r
         for r in REGISTRY["q_contamination_report"]
@@ -524,7 +503,6 @@ def test_contamination_report_planted_leak(spark, tmp_path):
     assert rows[20]["n_leaked"] >= 1
     assert rows[20]["leak_frac"] > 0
     assert rows[40]["n_leaked"] == 0 and rows[40]["leak_frac"] == 0.0
-    release_caches(spark)
 
 
 def test_mixture_temperature_flattens_shares(spark):
@@ -532,7 +510,6 @@ def test_mixture_temperature_flattens_shares(spark):
     dominant lang's temp share is below its raw share, tail langs
     rise; shares still sum to ~1."""
     rows = REGISTRY["q_mixture_temperature"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert abs(sum(r["temp_share"] for r in rows) - 1.0) < 1e-4
     top = max(rows, key=lambda r: r["n_docs"])
     bottom = min(rows, key=lambda r: r["n_docs"])
@@ -555,7 +532,7 @@ def test_crawl_graph_job_composes(spark, tmp_path):
     ranks = _pagerank(spark, cg.host_edges(links))
     pr = {r["node"]: r["pr"] for r in ranks.collect()}
     assert abs(sum(pr.values()) - 1.0) < 1e-3
-    fr = cg.frontier(links, pages).collect()
+    fr = frontier_counts_from(unseen_links_from(links, pages)).collect()
     urls = {r["url"] for r in pages.select("url").collect()}
     # frontier is disjoint from the corpus by construction: re-derive
     unseen = {
@@ -564,7 +541,6 @@ def test_crawl_graph_job_composes(spark, tmp_path):
         if r["link"] not in urls
     }
     assert sum(r["n_unseen"] for r in fr) == len(unseen)
-    release_caches(spark)
 
 
 def test_pagerank_partitioning_invariant(spark, monkeypatch):
@@ -581,7 +557,6 @@ def test_pagerank_partitioning_invariant(spark, monkeypatch):
         r["node"]: r["pr"]
         for r in REGISTRY["q_pagerank"].spark(spark, SF_SMALL).collect()
     }
-    release_caches(spark)
     # tolerance, not ==: summation ORDER changes with partitioning, so
     # a rank sitting exactly on a round-6 boundary could legally flip
     # its last digit (ulp-level float association)

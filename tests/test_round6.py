@@ -8,11 +8,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-import readembedability_spark.textops  # noqa: F401 - registers entries
-from readembedability_spark.queries import REGISTRY, release_caches
-from helpers import formatted_plan, job_module
-
-SF_SMALL = "/root/testdata/sf0.001"
+from readembedability_spark.queries import REGISTRY
+from readembedability_spark.textops import (
+    frontier_counts_from,
+    frontier_schedule_from,
+    unseen_links_from,
+)
+from helpers import SF_MED, SF_SMALL, formatted_plan, job_module
 
 
 # ---------------------------------------------------------------------------
@@ -43,7 +45,6 @@ def test_frontier_schedule_plan_and_cap(spark):
     for h in per_host:
         slots = sorted(r["slot"] for r in rows if r["host"] == h)
         assert slots == list(range(1, len(slots) + 1))
-    release_caches(spark)
 
 
 def test_frontier_schedule_priority_is_authority_times_unseen(spark):
@@ -64,7 +65,6 @@ def test_frontier_schedule_priority_is_authority_times_unseen(spark):
         assert r["n_unseen"] == unseen[r["host"]]
         expect = round(pr.get(r["host"], 0.0) * r["n_unseen"], 6)
         assert abs(r["priority"] - expect) < 1e-9, (r, expect)
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -89,7 +89,6 @@ def test_crawl_graph_annotate_no_forced_broadcast(spark):
     assert "UnresolvedHint" not in logical
     assert "broadcast" not in logical.lower()
     assert df.count() == pages.count()
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -106,9 +105,8 @@ def test_ann_ivf_pq_never_pairwise(spark):
     2 Lloyd rounds + final cell assignment + query probe = 4. A
     regression that nested-loops any OTHER pair of frames (e.g. the
     corpus against itself) raises the count and fails here."""
-    df = REGISTRY["q_ann_ivf_pq"].spark(spark, "/root/testdata/sf0.01")
+    df = REGISTRY["q_ann_ivf_pq"].spark(spark, SF_MED)
     plan = formatted_plan(df)
-    release_caches(spark)
     assert "CartesianProduct" not in plan, plan
     n_bnlj = plan.count("BroadcastNestedLoopJoin")
     assert n_bnlj <= 4, (n_bnlj, plan)
@@ -120,10 +118,9 @@ def test_ann_recall_gate_includes_ivf_pq(spark):
     rows = {
         r["method"]: (r["recall"], r["passed"])
         for r in REGISTRY["q_ann_recall"]
-        .spark(spark, "/root/testdata/sf0.01")
+        .spark(spark, SF_MED)
         .collect()
     }
-    release_caches(spark)
     assert set(rows) == {
         "ann_bucketed",
         "ann_ivf_kmeans",
@@ -156,7 +153,6 @@ def test_sample_quality_zero_shuffle_and_rule(spark):
         assert (doc_id in kept) == (u < q), (doc_id, u, q)
         if doc_id in kept:
             assert kept[doc_id] == q
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -273,7 +269,6 @@ def test_corpus_report_sections_compose(spark):
     assert weights[lo] > shares[lo]
     lens = cr.length_distribution(docs).collect()[0]
     assert lens["min_tok"] <= lens["p50"] <= lens["max_tok"]
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -298,7 +293,6 @@ def test_bpe_token_counts_match_registry_tokenizer(spark):
         for r in REGISTRY["q_bpe_tokenize"].spark(spark, SF_SMALL).collect()
     }
     assert got == want
-    release_caches(spark)
 
 
 def test_pack_sequences_bins_by_supplied_token_counts(spark):
@@ -323,7 +317,6 @@ def test_pack_sequences_bins_by_supplied_token_counts(spark):
         assert r["n_tok"] == 40 * (r["doc_id"] % 3 + 1)  # BPE, not ws
         assert r["seq_id"] == running // budget
         running += r["n_tok"]
-    release_caches(spark)
 
 
 def test_crawl_graph_schedule_stage_composes(spark):
@@ -338,9 +331,9 @@ def test_crawl_graph_schedule_stage_composes(spark):
     ranks = _pagerank(spark, cg.host_edges(links)).withColumnsRenamed(
         {"node": "host", "pr": "authority"}
     )
-    unseen = cg.unseen_links(links, pages)
-    fr = cg.frontier(links, pages, unseen)
-    sched = cg.schedule(fr, ranks, unseen, k=2).collect()
+    unseen = unseen_links_from(links, pages)
+    fr = frontier_counts_from(unseen)
+    sched = frontier_schedule_from(unseen, fr, ranks, 2).collect()
     assert sched
     from collections import Counter
 
@@ -354,4 +347,3 @@ def test_crawl_graph_schedule_stage_composes(spark):
     # scheduled urls are genuinely unseen
     urls = {r["url"] for r in pages.select("url").collect()}
     assert all(r["link"] not in urls for r in sched)
-    release_caches(spark)

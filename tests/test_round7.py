@@ -10,12 +10,16 @@ import re
 
 from pyspark.sql import functions as F
 
-import readembedability_spark.textops as textops  # noqa: F401
 from readembedability_spark.queries import REGISTRY, release_caches
 from readembedability_spark.textops import _grouped_cumsum
-from helpers import formatted_plan, job_module, pdf_blob, write_docs
-
-SF_SMALL = "/root/testdata/sf0.001"
+from helpers import (
+    SF_SMALL,
+    formatted_plan,
+    job_module,
+    oracle_rows,
+    pdf_blob,
+    write_docs,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -81,7 +85,6 @@ def test_grouped_cumsum_matches_per_group_window(spark):
             acc += v
             exp[(g, i)] = (rnk, acc)
     assert got == exp
-    release_caches(spark)
 
 
 def test_grouped_cumsum_high_cardinality_groups(spark):
@@ -122,7 +125,6 @@ def test_grouped_cumsum_high_cardinality_groups(spark):
             acc += (i + g) % 7 + 1
             exp[(f"g{g:03d}", i)] = (rnk, acc)
     assert got == exp
-    release_caches(spark)
 
 
 # ---------------------------------------------------------------------------
@@ -258,7 +260,7 @@ def test_full_pipeline_composes_both_halves(spark, tmp_path, monkeypatch,
         [
             "full_pipeline.py",
             "--documents",
-            "/root/testdata/sf0.001",
+            SF_SMALL,
             "--output",
             str(out),
         ],
@@ -455,7 +457,6 @@ def test_worker_zip_ships_all_package_files(spark, tmp_path, monkeypatch):
 
 def test_trustrank_mass_and_seed_semantics(spark):
     rows = REGISTRY["q_trustrank"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     # both rank vectors are probability distributions (rounded to 6dp)
     assert abs(sum(r["pr"] for r in rows) - 1.0) < 1e-3
@@ -476,7 +477,6 @@ def test_trustrank_mass_and_seed_semantics(spark):
 
 def test_model_calibration_bin_invariants(spark):
     rows = REGISTRY["q_model_calibration"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         assert 0 <= r["bin"] <= 9
@@ -493,7 +493,6 @@ def test_model_calibration_bin_invariants(spark):
 def test_dsir_separates_target_from_raw(spark):
     out = REGISTRY["q_dsir_weights"].spark(spark, SF_SMALL)
     rows = out.collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         assert r["selected"] == (r["score_micro"] > 0)
@@ -522,7 +521,6 @@ def test_dsir_separates_target_from_raw(spark):
 
 def test_host_quality_prior_shrinks_toward_global_mean(spark):
     rows = REGISTRY["q_host_quality_prior"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     prior = rows[0]["prior_mean"]
     for r in rows:
@@ -538,14 +536,12 @@ def test_host_quality_prior_shrinks_toward_global_mean(spark):
         ) < 1e-3  # flag computed pre-round; allow the boundary ulp
     # a 1-row prior must come in as a broadcast, not a shuffle join
     plan = formatted_plan(REGISTRY["q_host_quality_prior"].spark(spark, SF_SMALL))
-    release_caches(spark)
     assert "BroadcastNestedLoopJoin" in plan
     assert "SortMergeJoin" not in plan
 
 
 def test_epoch_schedule_respects_budget_and_cap(spark):
     rows = REGISTRY["q_epoch_schedule"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     total = sum(r["uniq_tokens"] for r in rows)
     budget = 2 * total
@@ -563,7 +559,6 @@ def test_host_lang_entropy_matches_exact_recompute(spark):
     from collections import Counter
 
     rows = REGISTRY["q_host_lang_entropy"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").collect()
     by_host = {}
     for d in docs:
@@ -586,7 +581,6 @@ def test_host_lang_entropy_matches_exact_recompute(spark):
 
 def test_ccnet_buckets_terciles_and_histogram_bounds(spark):
     rows = REGISTRY["q_ccnet_buckets"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     from collections import Counter
 
@@ -624,7 +618,6 @@ def test_ccnet_buckets_terciles_and_histogram_bounds(spark):
 
 def test_graph_reciprocity_matches_exact_recompute(spark):
     rows = REGISTRY["q_graph_reciprocity"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     ev = spark.read.parquet(f"{SF_SMALL}/events.parquet").collect()
     edges = set()
@@ -652,7 +645,6 @@ def test_novelty_curve_is_monotone_and_exact(spark):
         REGISTRY["q_novelty_curve"].spark(spark, SF_SMALL).collect(),
         key=lambda r: r["batch"],
     )
-    release_caches(spark)
     assert [r["batch"] for r in rows] == list(range(len(rows)))
     assert rows[0]["novelty_rate"] == 1.0  # batch 0 is all-new
     cum = 0
@@ -674,7 +666,6 @@ def test_novelty_curve_is_monotone_and_exact(spark):
 
 def test_tokenizer_fertility_consistent_with_bpe_tokenize(spark):
     rows = REGISTRY["q_tokenizer_fertility"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     langs = {r["lang"] for r in rows}
     assert langs == {"en", "de", "es", "fr", "zh"}
@@ -686,14 +677,12 @@ def test_tokenizer_fertility_consistent_with_bpe_tokenize(spark):
         assert r["bpe_tokens"] >= r["ws_tokens"]
     # cross-check the total against q_bpe_tokenize's per-doc counts
     tok = REGISTRY["q_bpe_tokenize"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     total_bpe = sum(r["bpe_tokens"] for r in rows)
     assert total_bpe == sum(r["n_bpe_tokens"] for r in tok)
 
 
 def test_lsh_bucket_stats_consistent_with_pair_generator(spark):
     rows = REGISTRY["q_lsh_bucket_stats"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         assert r["n_buckets"] >= 1
@@ -704,13 +693,11 @@ def test_lsh_bucket_stats_consistent_with_pair_generator(spark):
     # the audit's emitted count bounds the actual (DISTINCT-deduped)
     # candidate set produced by the pair generator on the same corpus
     n_pairs = REGISTRY["q_minhash_lsh"].spark(spark, SF_SMALL).count()
-    release_caches(spark)
     assert sum(r["pairs_emitted"] for r in rows) >= n_pairs
 
 
 def test_hits_l1_normalized_and_on_graph_nodes(spark):
     rows = REGISTRY["q_hits"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     # both score vectors are L1-normalized at the final iteration
     assert abs(sum(r["hub"] for r in rows) - 1.0) < 1e-4
@@ -718,7 +705,6 @@ def test_hits_l1_normalized_and_on_graph_nodes(spark):
     assert all(r["hub"] >= 0 and r["auth"] >= 0 for r in rows)
     # node set == the rule graph's node set (same graph as pagerank)
     pr = REGISTRY["q_pagerank"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert {r["node"] for r in rows} == {r["node"] for r in pr}
     # rule-graph sinks (v % 11 == 0 have out-edges dropped) hold hub 0
     sinks = {r["node"] for r in rows if r["node"] % 11 == 0}
@@ -729,7 +715,6 @@ def test_hits_l1_normalized_and_on_graph_nodes(spark):
 
 def test_dedup_containment_superset_of_verified_pairs(spark):
     rows = REGISTRY["q_dedup_containment"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         assert r["containment"] >= 0.5
@@ -740,7 +725,6 @@ def test_dedup_containment_superset_of_verified_pairs(spark):
     # every high-jaccard verified pair with containment >= 1/2 must
     # appear here (same candidate universe, weaker filter)
     ver = REGISTRY["q_dedup_lsh_verified"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     got = {(r["a"], r["b"]) for r in rows}
     for v in ver:
         if v["jaccard"] >= 0.5:  # j >= 0.5 implies containment >= 0.5
@@ -749,7 +733,6 @@ def test_dedup_containment_superset_of_verified_pairs(spark):
 
 def test_source_novelty_bounds_and_coverage(spark):
     rows = REGISTRY["q_source_novelty"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert len(rows) == 20  # every synthetic source appears
     for r in rows:
         assert 0 <= r["exclusive_shingles"] <= r["distinct_shingles"]
@@ -761,7 +744,6 @@ def test_context_truncation_monotone_and_total_consistent(spark):
         REGISTRY["q_context_truncation"].spark(spark, SF_SMALL).collect(),
         key=lambda r: r["ctx"],
     )
-    release_caches(spark)
     assert [r["ctx"] for r in rows] == [256, 1024, 4096]
     # same doc universe per window; loss shrinks as the window grows
     assert len({r["n_docs"] for r in rows}) == 1
@@ -771,13 +753,11 @@ def test_context_truncation_monotone_and_total_consistent(spark):
         assert a["docs_over"] >= b["docs_over"]
     # token totals agree with q_token_count's surface
     tok = REGISTRY["q_token_count"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows[0]["tokens_total"] == sum(r["ws_tokens"] for r in tok)
 
 
 def test_degree_distribution_totals_match_edge_count(spark):
     rows = REGISTRY["q_degree_distribution"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     out_e = sum(r["n_edges"] for r in rows if r["direction"] == "out")
     in_e = sum(r["n_edges"] for r in rows if r["direction"] == "in")
@@ -791,7 +771,6 @@ def test_degree_distribution_totals_match_edge_count(spark):
 
 def test_label_prop_seeds_clamped_and_saturating(spark):
     rows = REGISTRY["q_label_prop"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         if r["is_seed"]:
@@ -807,13 +786,11 @@ def test_label_prop_seeds_clamped_and_saturating(spark):
     assert non_seed_labeled
     # same node universe as the other rule-graph walkers
     pr = REGISTRY["q_pagerank"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert {r["node"] for r in rows} == {r["node"] for r in pr}
 
 
 def test_length_drift_shares_and_tvd_identity(spark):
     rows = REGISTRY["q_length_drift"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     assert abs(sum(r["early_share"] for r in rows) - 1.0) < 1e-3
     assert abs(sum(r["late_share"] for r in rows) - 1.0) < 1e-3
@@ -830,7 +807,6 @@ def test_length_drift_shares_and_tvd_identity(spark):
 
 def test_cluster_homogeneity_consistent_with_clusters(spark):
     rows = REGISTRY["q_cluster_homogeneity"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         assert r["n_members"] >= 2  # only docs in >= 1 verified pair
@@ -840,7 +816,6 @@ def test_cluster_homogeneity_consistent_with_clusters(spark):
         assert r["syndication_suspect"] == (r["n_sources"] >= 3)
     # member totals and cluster ids agree with q_dedup_clusters
     cl = REGISTRY["q_dedup_clusters"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     by_rep = {}
     for c in cl:
         by_rep[c["rep"]] = by_rep.get(c["rep"], 0) + 1
@@ -855,7 +830,6 @@ def test_bigram_pmi_has_no_positional_self_join(spark):
     doc_id — the surviving joins are all word-keyed (uni/totals)."""
     df = REGISTRY["q_bigram_pmi"].spark(spark, SF_SMALL)
     analyzed = df._jdf.queryExecution().analyzed().toString()
-    release_caches(spark)
     for line in analyzed.splitlines():
         if "Join" in line:
             assert "doc_id" not in line, line
@@ -863,7 +837,6 @@ def test_bigram_pmi_has_no_positional_self_join(spark):
 
 def test_minhash_calibration_buckets_and_universe(spark):
     rows = REGISTRY["q_minhash_calibration"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert rows
     for r in rows:
         assert 0 <= r["est_m"] <= 8
@@ -873,29 +846,7 @@ def test_minhash_calibration_buckets_and_universe(spark):
         assert r["mae"] >= abs(r["est_jaccard"] - r["mean_jaccard"]) - 1e-3
     # every capped candidate pair lands in exactly one bucket
     cand = REGISTRY["q_minhash_lsh"].spark(spark, SF_SMALL).collect()
-    release_caches(spark)
     assert sum(r["n_pairs"] for r in rows) == len(cand)
-
-
-# ---------------------------------------------------------------------------
-# Boundary probes for the round-7 operators (tiny synthetic corpora,
-# the dup_corpus pattern from test_textops_scale) — each probe runs the
-# SPARK side and the DUCKDB oracle on the same degenerate input and
-# asserts they agree, so edge behavior is pinned cross-engine, not
-# just non-crashing.
-# ---------------------------------------------------------------------------
-
-import duckdb as _duckdb
-
-
-def _oracle_rows(sf_dir, name):
-    con = _duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    cur = con.execute(REGISTRY[name].sql)
-    return sorted(tuple(r) for r in cur.fetchall())
 
 
 def test_length_drift_all_early_corpus_null_late_shares(spark, tmp_path):
@@ -907,8 +858,7 @@ def test_length_drift_all_early_corpus_null_late_shares(spark, tmp_path):
         tuple(r)
         for r in REGISTRY["q_length_drift"].spark(spark, str(tmp_path)).collect()
     )
-    release_caches(spark)
-    d = _oracle_rows(str(tmp_path), "q_length_drift")
+    d = oracle_rows(str(tmp_path), "q_length_drift")
     assert s == d
     assert len(s) == 1
     row = s[0]
@@ -936,8 +886,7 @@ def test_containment_and_calibration_empty_on_all_unique(spark, tmp_path):
             tuple(r)
             for r in REGISTRY[name].spark(spark, str(tmp_path)).collect()
         )
-        release_caches(spark)
-        assert s == _oracle_rows(str(tmp_path), name) == []
+        assert s == oracle_rows(str(tmp_path), name) == []
 
 
 def test_context_truncation_empty_text_doc(spark, tmp_path):
@@ -951,8 +900,7 @@ def test_context_truncation_empty_text_doc(spark, tmp_path):
         .spark(spark, str(tmp_path))
         .collect()
     )
-    release_caches(spark)
-    d = _oracle_rows(str(tmp_path), "q_context_truncation")
+    d = oracle_rows(str(tmp_path), "q_context_truncation")
     assert s == d
     assert all(row[3] == 3 for row in s)  # tokens_total = 1 + 2
 
@@ -973,7 +921,6 @@ def test_source_novelty_drops_shingleless_sources(spark, tmp_path):
         tuple(r)
         for r in REGISTRY["q_source_novelty"].spark(spark, str(tmp_path)).collect()
     )
-    release_caches(spark)
-    d = _oracle_rows(str(tmp_path), "q_source_novelty")
+    d = oracle_rows(str(tmp_path), "q_source_novelty")
     assert s == d
     assert [row[0] for row in s] == ["big"]

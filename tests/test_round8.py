@@ -6,17 +6,30 @@ straddler-offset collect stays bounded by the partition count.
 
 from __future__ import annotations
 
+import datetime as _dt
+
+import pyarrow.parquet as _pq_mod
 import pytest
 from pyspark.sql import functions as F
 
+from readembedability_spark.queries import REGISTRY
 from readembedability_spark.textops import (
     _cumsum_parts,
     _grouped_cumsum,
     surt_cdx_from,
 )
-from helpers import formatted_plan, pdf_blob, write_docs
-
-SF_SMALL = "/root/testdata/sf0.001"
+from helpers import (
+    SF_MED,
+    SF_SMALL,
+    formatted_plan,
+    oracle_rows,
+    pdf_blob,
+    planted_con,
+    spark_rows,
+    write_docs,
+    write_embeddings,
+    write_events,
+)
 
 
 # ---------------------------------------------------------------------------
@@ -194,62 +207,6 @@ def test_pagerank_warm_start_converges_to_cold_fixpoint(spark):
     assert gap < 1e-6, gap
 
 
-# ---------------------------------------------------------------------------
-# Cross-engine boundary probes for the round-8 operators
-# ---------------------------------------------------------------------------
-
-import datetime as _dt
-
-import duckdb as _duckdb
-import pandas as _pd
-import pyarrow as _pa
-import pyarrow.parquet as _pq_mod
-
-from readembedability_spark.queries import REGISTRY, release_caches
-
-
-def _write_events(d, rows):
-    pdf = _pd.DataFrame(
-        rows,
-        columns=["event_id", "ts", "user_id", "event_type", "value", "props"],
-    )
-    tbl = _pa.Table.from_pandas(
-        pdf,
-        schema=_pa.schema(
-            [
-                ("event_id", _pa.int64()),
-                ("ts", _pa.timestamp("us")),
-                ("user_id", _pa.int64()),
-                ("event_type", _pa.string()),
-                ("value", _pa.float64()),
-                ("props", _pa.string()),
-            ]
-        ),
-    )
-    _pq_mod.write_table(tbl, str(d / "events.parquet"))
-
-
-def _oracle_rows(sf_dir, name):
-    con = _duckdb.connect()
-    for t in ("documents", "events", "embeddings"):
-        p = f"{sf_dir}/{t}.parquet"
-        import os as _os
-
-        if _os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-    return sorted(tuple(r) for r in con.execute(REGISTRY[name].sql).fetchall())
-
-
-def _spark_rows(spark, sf_dir, name):
-    rows = sorted(
-        tuple(r) for r in REGISTRY[name].spark(spark, str(sf_dir)).collect()
-    )
-    release_caches(spark)
-    return rows
-
-
 def test_recrawl_schedule_boundary_hosts(spark, tmp_path):
     """Hosts at the estimator's edges: all-changed (X = n — continuity
     correction keeps lambda finite), never-changed (X = 0 — interval
@@ -266,9 +223,9 @@ def test_recrawl_schedule_boundary_hosts(spark, tmp_path):
     rows += [(5, t0, 3, "view", 1.0, "{}")]
     # host 4: two fetches at the SAME instant — zero span, excluded
     rows += [(7, t0, 4, "view", 1.0, "{}"), (8, t0, 4, "view", 1.0, "{}")]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_recrawl_schedule")
-    assert s == _oracle_rows(tmp_path, "q_recrawl_schedule")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_recrawl_schedule")
+    assert s == oracle_rows(tmp_path, "q_recrawl_schedule")
     by_host = {r[0]: r for r in s}
     assert set(by_host) == {1, 2}  # hosts 3 and 4 excluded
     # all-changed: lambda finite and recrawl fast (< the 3 h span)
@@ -289,12 +246,12 @@ def test_bm25_eval_self_retrieval_and_empty_query_set(spark, tmp_path):
             (1, "totally different words here now ok", "en", "s0", 36),
         ],
     )
-    s = _spark_rows(spark, tmp_path, "q_bm25_eval")
-    assert s == _oracle_rows(tmp_path, "q_bm25_eval")
+    s = spark_rows(spark, tmp_path, "q_bm25_eval")
+    assert s == oracle_rows(tmp_path, "q_bm25_eval")
     assert s == [(1, 1, 1.0)]
     write_docs(tmp_path, [(0, "just two", "en", "s0", 8)])
-    s = _spark_rows(spark, tmp_path, "q_bm25_eval")
-    assert s == _oracle_rows(tmp_path, "q_bm25_eval")
+    s = spark_rows(spark, tmp_path, "q_bm25_eval")
+    assert s == oracle_rows(tmp_path, "q_bm25_eval")
     assert s[0][0] == 0 and s[0][2] is None
 
 
@@ -309,8 +266,8 @@ def test_split_by_host_leak_audit_counts_straddled_hosts(spark, tmp_path):
         for i in range(120)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_split_by_host")
-    assert s == _oracle_rows(tmp_path, "q_split_by_host")
+    s = spark_rows(spark, tmp_path, "q_split_by_host")
+    assert s == oracle_rows(tmp_path, "q_split_by_host")
 
     def bucket(key):
         return int(_hl.md5(f"split{key}".encode()).hexdigest()[:6], 16) % 100
@@ -344,8 +301,8 @@ def test_band_tuning_monotone_in_bands_and_shared_pairs(spark, tmp_path):
         for i in range(12)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_minhash_band_tuning")
-    assert s == _oracle_rows(tmp_path, "q_minhash_band_tuning")
+    s = spark_rows(spark, tmp_path, "q_minhash_band_tuning")
+    assert s == oracle_rows(tmp_path, "q_minhash_band_tuning")
     assert len(s) == 4
     by_bands = {r[0]: r for r in s}
     assert len({r[3] for r in s}) == 1  # same n_pairs everywhere
@@ -353,39 +310,6 @@ def test_band_tuning_monotone_in_bands_and_shared_pairs(spark, tmp_path):
         by_bands[1][4] <= by_bands[2][4] <= by_bands[4][4] <= by_bands[8][4]
     )
     assert by_bands[2][5] is True  # the production config is flagged
-
-
-def _write_embeddings(d, rows):
-    pdf = _pd.DataFrame(rows, columns=["vec_id", "embedding", "label"])
-    tbl = _pa.Table.from_pandas(
-        pdf,
-        schema=_pa.schema(
-            [
-                ("vec_id", _pa.int64()),
-                ("embedding", _pa.list_(_pa.float32())),
-                ("label", _pa.int32()),
-            ]
-        ),
-    )
-    _pq_mod.write_table(tbl, str(d / "embeddings.parquet"))
-
-
-def _emb_con(sf_dir):
-    con = _duckdb.connect()
-    import os as _os
-
-    for t in ("documents", "events", "embeddings"):
-        p = f"{sf_dir}/{t}.parquet"
-        if _os.path.exists(p):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')"
-            )
-    return con
-
-
-def _oracle_rows_emb(sf_dir, name):
-    con = _emb_con(sf_dir)
-    return sorted(tuple(r) for r in con.execute(REGISTRY[name].sql).fetchall())
 
 
 def test_dedup_recall_null_not_crash_on_all_unique(spark, tmp_path):
@@ -399,8 +323,8 @@ def test_dedup_recall_null_not_crash_on_all_unique(spark, tmp_path):
             for i in range(6)
         ],
     )
-    s = _spark_rows(spark, tmp_path, "q_dedup_recall")
-    assert s == _oracle_rows(tmp_path, "q_dedup_recall")
+    s = spark_rows(spark, tmp_path, "q_dedup_recall")
+    assert s == oracle_rows(tmp_path, "q_dedup_recall")
     assert len(s) == 1
     assert s[0][1] == 0 and s[0][3] is None and s[0][4] is None
 
@@ -409,9 +333,9 @@ def test_ann_recall_null_not_crash_on_single_embedding(spark, tmp_path):
     """A single-embedding corpus has an EMPTY ground-truth top-k (no
     candidate other than the query itself): every method's recall is
     NULL in both engines, not an ANSI divide-by-zero."""
-    _write_embeddings(tmp_path, [(0, [1.0, 0.0, 0.5, 0.25], 0)])
-    s = _spark_rows(spark, tmp_path, "q_ann_recall")
-    assert s == _oracle_rows_emb(tmp_path, "q_ann_recall")
+    write_embeddings(tmp_path, [(0, [1.0, 0.0, 0.5, 0.25], 0)])
+    s = spark_rows(spark, tmp_path, "q_ann_recall")
+    assert s == oracle_rows(tmp_path, "q_ann_recall")
     assert len(s) == 4
     assert all(r[1] is None and r[2] is None for r in s)
 
@@ -431,6 +355,7 @@ _EMB_COSINE_QUERIES = [
     "q_hard_negatives",
 ]
 
+
 _ZERO_VEC = 37
 
 
@@ -445,7 +370,7 @@ def planted_emb(tmp_path_factory):
     import numpy as np
 
     d = tmp_path_factory.mktemp("planted_emb")
-    tbl = _pq_mod.read_table("/root/testdata/sf0.01/embeddings.parquet")
+    tbl = _pq_mod.read_table(f"{SF_MED}/embeddings.parquet")
     ids = tbl.column("vec_id").to_pylist()
     vecs = [
         np.asarray(v, dtype=np.float32)
@@ -464,7 +389,7 @@ def planted_emb(tmp_path_factory):
     by_id[_ZERO_VEC] = np.zeros_like(by_id[_ZERO_VEC])
     by_id[copies[0]] = by_id[nn] * np.float32(2.0)
     by_id[copies[1]] = by_id[nn] * np.float32(4.0)
-    _write_embeddings(
+    write_embeddings(
         d, [(i, by_id[i].tolist(), lab) for i, lab in zip(ids, labels)]
     )
     return d, nn, copies
@@ -485,8 +410,7 @@ def test_emb_queries_zero_vector_and_exact_ties(spark, planted_emb, name):
     qd = {**REGISTRY, **BASELINE_REGISTRY}[name]
     d, nn, copies = planted_emb
     got = [tuple(r) for r in qd.spark(spark, str(d)).collect()]
-    release_caches(spark)
-    want = _emb_con(d).execute(qd.sql).fetchall()
+    want = planted_con(d).execute(qd.sql).fetchall()
     assert _canon_rows(got) == _canon_rows(want)
     if name == "q_ann_cosine":
         top = sorted((r for r in got if r[0] == 0), key=lambda r: r[1])
@@ -512,8 +436,7 @@ def test_km_train_matches_oracle_with_zero_vector(spark, planted_emb):
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     got = [(r["cid"], r["c"]) for r in _km_train(emb).collect()]
-    release_caches(spark)
-    want = _emb_con(d).execute(
+    want = planted_con(d).execute(
         f"""
         WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                    FROM embeddings),
@@ -544,8 +467,8 @@ def test_admission_marginal_consistent_with_funnel(spark):
         admission_flags_from,
     )
 
-    s = _spark_rows(spark, SF_SMALL, "q_admission_marginal")
-    assert s == _oracle_rows(SF_SMALL, "q_admission_marginal")
+    s = spark_rows(spark, SF_SMALL, "q_admission_marginal")
+    assert s == oracle_rows(SF_SMALL, "q_admission_marginal")
     marg = {r[0]: r for r in s}  # gate -> (gate, b, u, tokens)
     assert set(marg) == {"host_demoted", "dsir_offtarget", "ccnet_tail"}
     funnel = {
@@ -574,7 +497,6 @@ def test_admission_marginal_consistent_with_funnel(spark):
     no_host_admitted = flags.filter(
         ~F.col("f_dsir") & ~F.col("f_ccnet")
     ).count()
-    release_caches(spark)
     assert (
         no_host_admitted
         == funnel.get("4_admitted", 0) + marg["host_demoted"][2]
@@ -588,8 +510,8 @@ def test_surt_index_case_collapse_and_capture_mass(spark):
     bounded by captures, and the time range is ordered."""
     import re
 
-    s = _spark_rows(spark, SF_SMALL, "q_surt_index")
-    assert s == _oracle_rows(SF_SMALL, "q_surt_index")
+    s = spark_rows(spark, SF_SMALL, "q_surt_index")
+    assert s == oracle_rows(SF_SMALL, "q_surt_index")
     total = spark.read.parquet(f"{SF_SMALL}/events.parquet").count()
     pat = re.compile(r"^com,example,news\d+\)/item/\d+$")
     assert sum(r[1] for r in s) == total
@@ -622,9 +544,9 @@ def test_stale_captures_boundary_hosts(spark, tmp_path):
     # host news9: two captures, the later one IS the frontier
     rows.append((9, t0, 1, "view", 1.0, "{}"))
     rows.append((609, t0 + 500 * hr, 1, "click", 1.0, "{}"))
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_stale_captures")
-    assert s == _oracle_rows(tmp_path, "q_stale_captures")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_stale_captures")
+    assert s == oracle_rows(tmp_path, "q_stale_captures")
     by_host = {r[0]: r for r in s}
     assert set(by_host) == {
         "news7.example.com", "news8.example.com", "news9.example.com"
@@ -658,8 +580,8 @@ def test_token_budget_mixture_epoch_cap(spark, tmp_path):
     # xx: not in _MIX_TARGETS -> no output row
     rows.append((62, " ".join(["zz"] * 5), "xx", "web", 5))
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_token_budget_mixture")
-    assert s == _oracle_rows(tmp_path, "q_token_budget_mixture")
+    s = spark_rows(spark, tmp_path, "q_token_budget_mixture")
+    assert s == oracle_rows(tmp_path, "q_token_budget_mixture")
     by_lang = {r[0]: r for r in s}
     assert set(by_lang) == {"en", "de"}
     # columns: lang, n_docs, avail_tokens, requested_tokens,
@@ -677,8 +599,8 @@ def test_image_resize_fit_invariants(spark):
     the thumbnail digest is the JVM-side md5 of doc_id:WxH."""
     import hashlib
 
-    s = _spark_rows(spark, SF_SMALL, "q_image_resize")
-    assert s == _oracle_rows(SF_SMALL, "q_image_resize")
+    s = spark_rows(spark, SF_SMALL, "q_image_resize")
+    assert s == oracle_rows(SF_SMALL, "q_image_resize")
     for doc_id, w, h, tw, th, digest in s:
         assert max(tw, th) == 64 and 1 <= min(tw, th) <= 64
         assert (w >= h) == (tw >= th)
@@ -692,8 +614,8 @@ def test_video_frame_sample_stride_invariants(spark):
     is a stride multiple below n_frames, timestamps are the exact
     integer-microsecond 24 fps positions, and every document appears
     (the fan-out drops no inputs)."""
-    s = _spark_rows(spark, SF_SMALL, "q_video_frame_sample")
-    assert s == _oracle_rows(SF_SMALL, "q_video_frame_sample")
+    s = spark_rows(spark, SF_SMALL, "q_video_frame_sample")
+    assert s == oracle_rows(SF_SMALL, "q_video_frame_sample")
     per_doc: dict = {}
     for doc_id, n_frames, idx, ts_us, digest in s:
         stride = (n_frames + 7) // 8
@@ -780,8 +702,8 @@ def test_redirect_resolve_closed_form_and_bounded_plan(spark, tmp_path):
 
     rows = [(i, "text " + str(i), "en", "s0", 20) for i in range(128)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_redirect_resolve")
-    assert s == _oracle_rows(tmp_path, "q_redirect_resolve")
+    s = spark_rows(spark, tmp_path, "q_redirect_resolve")
+    assert s == oracle_rows(tmp_path, "q_redirect_resolve")
 
     def u(i):
         return f"https://r{i % 97}.example.com/p/{i}"
@@ -813,8 +735,8 @@ def test_host_boilerplate_page_floor_boundary(spark, tmp_path):
     ids = [40 * k for k in range(10)] + [40 * k + 1 for k in range(9)]
     rows = [(i, f"unique body text {i}", "en", "s0", 20) for i in ids]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_host_boilerplate")
-    assert s == _oracle_rows(tmp_path, "q_host_boilerplate")
+    s = spark_rows(spark, tmp_path, "q_host_boilerplate")
+    assert s == oracle_rows(tmp_path, "q_host_boilerplate")
     by_host = {r[0]: r for r in s}
     h0 = by_host["h0.example.com"]
     h1 = by_host["h1.example.com"]
@@ -838,8 +760,8 @@ def test_mime_sniff_matrix_and_joinless_plan(spark, tmp_path):
     keyed aggregate — no join of any kind."""
     rows = [(i, "plain body " + str(i), "en", "s0", 20) for i in range(84)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_mime_sniff")
-    assert s == _oracle_rows(tmp_path, "q_mime_sniff")
+    s = spark_rows(spark, tmp_path, "q_mime_sniff")
+    assert s == oracle_rows(tmp_path, "q_mime_sniff")
     assert sum(r[2] for r in s) == 84
     for claimed, sniffed, n, mismatch in s:
         assert mismatch == (claimed != sniffed)
@@ -863,9 +785,9 @@ def test_graph_triangles_identities(spark, tmp_path):
     rows = [
         (i, t0, 1, "view", 1.0, "{}") for i in range(200)
     ]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_graph_triangles")
-    assert s == _oracle_rows(tmp_path, "q_graph_triangles")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_graph_triangles")
+    assert s == oracle_rows(tmp_path, "q_graph_triangles")
     part_sum = sum(r[2] for r in s)
     assert part_sum > 0 and part_sum % 3 == 0
     for node, degree, t, ppm in s:
@@ -886,8 +808,8 @@ def test_canonical_clusters_single_aggregate_no_window(spark, tmp_path):
 
     rows = [(i, "body " + str(i), "en", "s0", 100 + i) for i in range(40)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_canonical_clusters")
-    assert s == _oracle_rows(tmp_path, "q_canonical_clusters")
+    s = spark_rows(spark, tmp_path, "q_canonical_clusters")
+    assert s == oracle_rows(tmp_path, "q_canonical_clusters")
     by_canon = {r[0]: r for r in s}
     assert len(by_canon) == 10  # 40 docs / 4 variants
     for canon, (_, n, captured, keeper, dup) in by_canon.items():
@@ -927,8 +849,8 @@ def test_postings_compression_varint_boundaries(spark, tmp_path):
             toks.append("edgeB")
         rows.append((i, " ".join(toks), "en", "s0", 20))
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_postings_compression")
-    assert s == _oracle_rows(tmp_path, "q_postings_compression")
+    s = spark_rows(spark, tmp_path, "q_postings_compression")
+    assert s == oracle_rows(tmp_path, "q_postings_compression")
     by_class = {r[0]: r for r in s}
     # class 1 = df in [2, 3]: edgeA (df 3, bytes 1+1+2) + edgeB (df 2,
     # bytes 1+3) -> 5 postings, 8 varint vs 40 fixed bytes
@@ -955,8 +877,8 @@ def test_warc_records_framing_and_plan(spark, tmp_path):
     rows[3] = (3, "", "en", "s0", 0)  # empty payload
     rows[5] = (5, "trap Content-Length: 999 inside", "en", "s0", 30)
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_warc_records")
-    assert s == _oracle_rows(tmp_path, "q_warc_records")
+    s = spark_rows(spark, tmp_path, "q_warc_records")
+    assert s == oracle_rows(tmp_path, "q_warc_records")
     by_file = {r[0]: r for r in s}
     assert set(by_file) == {0, 1}  # docs 0-24, 25-29
     exp0 = sum(len(r[1]) for r in rows[:25])
@@ -992,9 +914,9 @@ def test_sitemap_parse_duplicates_and_plan(spark, tmp_path):
         # id 41 -> host site1, item 16, priority (41%9)+1 = 6
         (41, t0, 1, "view", 1.0, "{}"),
     ]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_sitemap_parse")
-    assert s == _oracle_rows(tmp_path, "q_sitemap_parse")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_sitemap_parse")
+    assert s == oracle_rows(tmp_path, "q_sitemap_parse")
     by_host = {r[0]: r for r in s}
     assert by_host["site0.example.com"] == (
         "site0.example.com", 3, 1, "2024-03-06", 200000
@@ -1016,9 +938,9 @@ def test_url_templates_hex_rule_precedence(spark, tmp_path):
     {n}, and the static /about path survives untemplated."""
     rows = [(i, _dt.datetime(2024, 1, 1), 1, "view", 1.0, "{}")
             for i in range(20)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_url_templates")
-    assert s == _oracle_rows(tmp_path, "q_url_templates")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_url_templates")
+    assert s == oracle_rows(tmp_path, "q_url_templates")
     templates = {r[1] for r in s}
     assert templates == {
         "/post/{n}", "/tag/t{n}", "/obj/{h}", "/archive/{n}/{n}"
@@ -1043,9 +965,9 @@ def test_pagination_chains_gap_detection(spark, tmp_path):
     # sweeps all 13 residues -> complete
     for k in range(13):
         rows.append((1 + 24 * k, t0, 1, "view", 1.0, "{}"))
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_pagination_chains")
-    assert s == _oracle_rows(tmp_path, "q_pagination_chains")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_pagination_chains")
+    assert s == oracle_rows(tmp_path, "q_pagination_chains")
     by_key = {(r[0], r[1]): r for r in s}
     gapped = by_key[("h0.example.com", "/list/0")]
     assert gapped[2:] == (5, 4, 1, 10, 6, False)
@@ -1062,9 +984,9 @@ def test_registrable_domain_psl_and_broadcast(spark, tmp_path):
     # id 12: www.s12.co.uk; id 17: s17.co.uk (empty sub); id 0:
     # www.s0.com; id 3: www.s3.github.io
     rows = [(eid, t0, 1, "view", 1.0, "{}") for eid in (12, 17, 0, 3)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_registrable_domain")
-    assert s == _oracle_rows(tmp_path, "q_registrable_domain")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_registrable_domain")
+    assert s == oracle_rows(tmp_path, "q_registrable_domain")
     by_reg = {r[0]: r for r in s}
     assert by_reg["s12.co.uk"][1:] == ("co.uk", 1, 1)
     assert by_reg["s17.co.uk"][1:] == ("co.uk", 1, 1)
@@ -1096,9 +1018,9 @@ def test_crawl_delta_status_classes(spark, tmp_path):
         # residue but a single capture -> still 'new'
         (1, t0, 1, "view", 1.0, "{}"),          # url 1 (h1): single -> new
     ]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_crawl_delta")
-    assert s == _oracle_rows(tmp_path, "q_crawl_delta")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_crawl_delta")
+    assert s == oracle_rows(tmp_path, "q_crawl_delta")
     by_host = {r[0]: r[1:] for r in s}
     assert by_host["h3.example.com"] == (0, 1, 0, 1000000)
     assert by_host["h4.example.com"] == (0, 0, 1, 0)
@@ -1117,8 +1039,8 @@ def test_syndication_singletons_and_primary(spark, tmp_path):
 
     rows = [(i, "body " + str(i), "en", "s0", 100) for i in range(20)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_syndication")
-    assert s == _oracle_rows(tmp_path, "q_syndication")
+    s = spark_rows(spark, tmp_path, "q_syndication")
+    assert s == oracle_rows(tmp_path, "q_syndication")
     by_primary = {r[3]: r for r in s}
     # families (solo docs 0,7,14 carved out): fam0={1,2,3},
     # fam1={4,5,6}, fam2={8..11}, fam3={12,13,15}, fam4={16..19}
@@ -1151,9 +1073,9 @@ def test_embedding_drift_identities(spark, tmp_path):
     rows += [(2, [1.0, 0.0, 0.0], 0), (3, [1.0, 0.0, 0.0], 0)]
     # label 1: batch 0 = [1,0,0], batch 1 = [0,1,0] -> orthogonal
     rows += [(4, [1.0, 0.0, 0.0], 1), (5, [0.0, 1.0, 0.0], 1)]
-    _write_embeddings(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_embedding_drift")
-    assert s == _oracle_rows(tmp_path, "q_embedding_drift")
+    write_embeddings(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_embedding_drift")
+    assert s == oracle_rows(tmp_path, "q_embedding_drift")
     by_label = {r[0]: r[1:] for r in s}
     assert by_label[0] == (1.0, 0.0)
     assert by_label[1][0] == 0.0
@@ -1175,9 +1097,9 @@ def test_anchor_spam_planted_targets(spark, tmp_path):
     the per-anchor rollup, not raw links."""
     t0 = _dt.datetime(2024, 1, 1)
     rows = [(i, t0, 1, "view", 1.0, "{}") for i in range(400)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_anchor_spam")
-    assert s == _oracle_rows(tmp_path, "q_anchor_spam")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_anchor_spam")
+    assert s == oracle_rows(tmp_path, "q_anchor_spam")
     by_target = {r[0]: r for r in s}
     for tgt, (_, n_anchors, n_in, top, _hosts, share, spam) in (
         by_target.items()
@@ -1204,9 +1126,9 @@ def test_hreflang_incomplete_clusters(spark, tmp_path):
     for c in (0, 2, 3):
         for k in range(4):
             rows.append((c + 60 * k, t0, 1, "view", 1.0, "{}"))
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_hreflang_clusters")
-    assert s == _oracle_rows(tmp_path, "q_hreflang_clusters")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_hreflang_clusters")
+    assert s == oracle_rows(tmp_path, "q_hreflang_clusters")
     by_cluster = {r[0]: r[1:] for r in s}
     # cluster 0: id 0 -> x-default (0%11==0), ids 60/120 -> de/fr, and
     # 180 -> ja BUT 0 % 3 == 0 drops ja -> langs {de, fr} + x-default
@@ -1334,8 +1256,8 @@ def test_cdc_chunks_matches_python_reference(spark, tmp_path):
         rows.append((i, base + f" suffix{i} end{i} tail{i}", "en",
                      "s0", 100))
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_cdc_chunks")
-    assert s == _oracle_rows(tmp_path, "q_cdc_chunks")
+    s = spark_rows(spark, tmp_path, "q_cdc_chunks")
+    assert s == oracle_rows(tmp_path, "q_cdc_chunks")
     # effective texts after the family-share rule the query applies
     texts = {}
     for i in range(16):
@@ -1401,11 +1323,11 @@ def test_index_prune_monotone_and_top16_plan(spark):
     import re as _re
 
     rows = sorted(
-        _spark_rows(spark, SF_SMALL, "q_index_prune"),
+        spark_rows(spark, SF_SMALL, "q_index_prune"),
         key=lambda r: r[0],
     )
     assert rows == sorted(
-        _oracle_rows(SF_SMALL, "q_index_prune"), key=lambda r: r[0]
+        oracle_rows(SF_SMALL, "q_index_prune"), key=lambda r: r[0]
     )
     ks = [r[0] for r in rows]
     assert ks == [1, 2, 4, 8, 16]
@@ -1453,9 +1375,9 @@ def test_robots_crawl_debt_regimes(spark, tmp_path):
     # ids 4 (%3=1 → /d) and 29 (%3=2 → /a) — rule exists, never fires
     for eid in (4, 29):
         rows.append((eid, t0, 1, "view", 1.0, "{}"))
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_robots_crawl_debt")
-    assert s == _oracle_rows(tmp_path, "q_robots_crawl_debt")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_robots_crawl_debt")
+    assert s == oracle_rows(tmp_path, "q_robots_crawl_debt")
     by_host = {r[0]: r[1:] for r in s}
     assert by_host["h0.example.com"] == (3, 1, 333333, False)
     assert by_host["h1.example.com"] == (3, 1, 333333, False)
@@ -1476,8 +1398,8 @@ def test_span_corruption_exact_transform(spark, tmp_path):
 
     words = [f"t{i}" for i in range(1, 26)]
     write_docs(tmp_path, [(0, " ".join(words), "en", "s0", 100)])
-    s = _spark_rows(spark, tmp_path, "q_span_corruption")
-    assert s == _oracle_rows(tmp_path, "q_span_corruption")
+    s = spark_rows(spark, tmp_path, "q_span_corruption")
+    assert s == oracle_rows(tmp_path, "q_span_corruption")
     (lang, n_docs, toks, corrupted, ppm, spans, digest), = s
     assert (lang, n_docs, toks, corrupted, spans) == ("en", 1, 25, 6, 2)
     assert ppm == 6 * 1000000 // 25
@@ -1498,8 +1420,8 @@ def test_index_merge_classes_and_identities(spark, tmp_path):
     rows = [(i, "shared tok" + str(i % 2), "en", "s0", 30)
             for i in range(20)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_index_merge")
-    assert s == _oracle_rows(tmp_path, "q_index_merge")
+    s = spark_rows(spark, tmp_path, "q_index_merge")
+    assert s == oracle_rows(tmp_path, "q_index_merge")
     by_class = {r[0]: r[1:] for r in s}
     assert set(by_class) == {"new_term", "untouched", "updated"}
     assert by_class["new_term"][4] == 1000000
@@ -1526,9 +1448,9 @@ def test_feed_parse_formats_and_dup_ids(spark, tmp_path):
         (eid, t0 + k * hr, 1, "view", 1.0, "{}")
         for k, eid in enumerate([0, 3600, 60, 1, 31])
     ]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_feed_parse")
-    assert s == _oracle_rows(tmp_path, "q_feed_parse")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_feed_parse")
+    assert s == oracle_rows(tmp_path, "q_feed_parse")
     by_host = {r[0]: r for r in s}
     assert by_host["site0.example.com"][1] == "rss"
     assert by_host["site1.example.com"][1] == "atom"
@@ -1547,8 +1469,8 @@ def test_link_depth_bfs_min_distance(spark, tmp_path):
     longer path would overstate depth for hosts reachable both ways."""
     rows = [(i, "t", "en", "s0", 1) for i in range(100)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_link_depth")
-    assert s == _oracle_rows(tmp_path, "q_link_depth")
+    s = spark_rows(spark, tmp_path, "q_link_depth")
+    assert s == oracle_rows(tmp_path, "q_link_depth")
     depth = {r[0]: r[1] for r in s}
     assert len(depth) == 100
     assert depth[0] == 0 and depth[3] == 1 and depth[8] == 4
@@ -1569,8 +1491,8 @@ def test_audio_chunks_ragged_tail_and_batch_fanout(spark, tmp_path):
     df = REGISTRY["q_audio_chunks"].spark(spark, str(tmp_path))
     plan = formatted_plan(df)
     assert "Generate" not in plan  # fan-out is in-batch, not explode
-    s = _spark_rows(spark, tmp_path, "q_audio_chunks")
-    assert s == _oracle_rows(tmp_path, "q_audio_chunks")
+    s = spark_rows(spark, tmp_path, "q_audio_chunks")
+    assert s == oracle_rows(tmp_path, "q_audio_chunks")
     assert [r[3] for r in s] == [400, 9]
     assert all(r[1] == 409 for r in s)
     # exact integer stats for the ragged tail: samples 400..408 of doc 7
@@ -1585,8 +1507,8 @@ def test_http_cache_all_six_classes(spark, tmp_path):
     validator headers exactly."""
     rows = [(i, "t", "en", "s0", 1) for i in range(14)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_http_cache")
-    assert s == _oracle_rows(tmp_path, "q_http_cache")
+    s = spark_rows(spark, tmp_path, "q_http_cache")
+    assert s == oracle_rows(tmp_path, "q_http_cache")
     by_cls = {r[0]: r for r in s}
     assert set(by_cls) == {
         "no-store", "revalidate-always", "fresh-ttl", "fresh-ttl-swr",
@@ -1607,8 +1529,8 @@ def test_unicode_normalize_classes(spark, tmp_path):
     everything) fails one side or the other."""
     rows = [(i, "plain ascii text", "en", "s0", 16) for i in range(12)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_unicode_normalize")
-    assert s == _oracle_rows(tmp_path, "q_unicode_normalize")
+    s = spark_rows(spark, tmp_path, "q_unicode_normalize")
+    assert s == oracle_rows(tmp_path, "q_unicode_normalize")
     by_cls = {r[0]: r for r in s}
     assert set(by_cls) == {"decomposed", "precomposed", "ascii"}
     n, changed, chars, bts = by_cls["decomposed"][1:]
@@ -1632,8 +1554,8 @@ def test_lang_mismatch_all_classes(spark, tmp_path):
         (4, "zz qq xx", "en", "s0", 8),
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_lang_mismatch")
-    assert s == _oracle_rows(tmp_path, "q_lang_mismatch")
+    s = spark_rows(spark, tmp_path, "q_lang_mismatch")
+    assert s == oracle_rows(tmp_path, "q_lang_mismatch")
     cells = {(r[0], r[1]): r for r in s}
     assert cells[("de", "de")][3] == "agree"
     assert cells[("de", "en")][3] == "mismatch"
@@ -1655,9 +1577,9 @@ def test_capture_diff_rule_and_single_capture(spark, tmp_path):
         (50 * k, t0 + k * hr, 1, "view", 1.0, "{}") for k in range(5)
     ]  # url 0: versions 0..4
     rows += [(1, t0, 1, "view", 1.0, "{}")]  # url 1: single capture
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_capture_diff")
-    assert s == _oracle_rows(tmp_path, "q_capture_diff")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_capture_diff")
+    assert s == oracle_rows(tmp_path, "q_capture_diff")
     assert [r[0] for r in s] == [0]  # url 1 excluded both sides
     url0 = s[0]
     assert url0[1:4] == (5, 4, 2)
@@ -1743,9 +1665,9 @@ def test_robots_sitemaps_cross_host(spark, tmp_path):
     the right counts; same-host publishers never flag."""
     t0 = _dt.datetime(2024, 6, 1)
     rows = [(h, t0, 1, "view", 1.0, "{}") for h in (0, 1, 4, 5)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_robots_sitemaps")
-    assert s == _oracle_rows(tmp_path, "q_robots_sitemaps")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_robots_sitemaps")
+    assert s == oracle_rows(tmp_path, "q_robots_sitemaps")
     by_host = {r[0]: r for r in s}
     # h=0: 1 sitemap (0%3+1), all on the CDN host
     assert by_host["site0.example.com"][1:] == (1, 1, 1, True)
@@ -1760,7 +1682,7 @@ def test_embedding_quantize_grid_exactness(spark, tmp_path):
     """Grid endpoints reconstruct exactly (code 0 and 255 -> err 0),
     a midpoint lands on the floor grid with the closed-form error,
     and a constant dimension degenerates to one code with zero range."""
-    _write_embeddings(
+    write_embeddings(
         tmp_path,
         [
             (0, [0.0, 7.5], 0),
@@ -1768,8 +1690,8 @@ def test_embedding_quantize_grid_exactness(spark, tmp_path):
             (2, [0.5, 7.5], 0),
         ],
     )
-    s = _spark_rows(spark, tmp_path, "q_embedding_quantize")
-    assert s == _oracle_rows_emb(tmp_path, "q_embedding_quantize")
+    s = spark_rows(spark, tmp_path, "q_embedding_quantize")
+    assert s == oracle_rows(tmp_path, "q_embedding_quantize")
     by_dim = {r[0]: r for r in s}
     # dim 1: xq {0, 5000, 10000}; endpoints err 0; midpoint:
     # code = 5000*255//10000 = 127, recon = 127*10000//255 = 4980,
@@ -1796,7 +1718,7 @@ def test_compression_ratio_matches_zlib_reference(spark, tmp_path):
     write_docs(
         tmp_path, [(k, v, "en", "s0", len(v)) for k, v in texts.items()]
     )
-    s = _spark_rows(spark, tmp_path, "q_compression_ratio")
+    s = spark_rows(spark, tmp_path, "q_compression_ratio")
     exp = {}
     for t in texts.values():
         raw = t.encode()
@@ -1827,9 +1749,9 @@ def test_sitemap_coverage_both_defect_branches_live(spark, tmp_path):
     crawled hold exactly."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(80)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_sitemap_coverage")
-    assert s == _oracle_rows(tmp_path, "q_sitemap_coverage")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_sitemap_coverage")
+    assert s == oracle_rows(tmp_path, "q_sitemap_coverage")
     assert len(s) == 40
     for host, nd, nc, nm, nmiss, norph, cov in s:
         assert nm + nmiss == nd and nm + norph == nc
@@ -1845,9 +1767,9 @@ def test_ip_colocation_all_three_classes(spark, tmp_path):
     3-host sample never exceeds 3 entries."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(97)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_ip_colocation")
-    assert s == _oracle_rows(tmp_path, "q_ip_colocation")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_ip_colocation")
+    assert s == oracle_rows(tmp_path, "q_ip_colocation")
     by_class = {}
     for subnet, n, sample, cls in s:
         by_class.setdefault(cls, []).append((subnet, n))
@@ -1866,8 +1788,8 @@ def test_freshness_weights_exact_decay_and_share(spark, tmp_path):
         (i, "w " * 4, "en", "s", 8) for i in range(400)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_freshness_weights")
-    assert s == _oracle_rows(tmp_path, "q_freshness_weights")
+    s = spark_rows(spark, tmp_path, "q_freshness_weights")
+    assert s == oracle_rows(tmp_path, "q_freshness_weights")
     per_source = {}
     for source, k, n, w, mass, share in s:
         assert w == 1000000 >> k
@@ -1892,8 +1814,8 @@ def test_zipf_fit_matches_python_reference(spark, tmp_path):
     for i in range(0, len(words), 7):
         rows.append((i, " ".join(words[i : i + 7]), "en", "s", 1))
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_zipf_fit")
-    assert s == _oracle_rows(tmp_path, "q_zipf_fit")
+    s = spark_rows(spark, tmp_path, "q_zipf_fit")
+    assert s == oracle_rows(tmp_path, "q_zipf_fit")
     (lang, n_ranks, top_mass, slope_micro, intercept_milli) = s[0]
     assert lang == "en" and n_ranks == 30
     assert top_mass == sum(counts.values())
@@ -1929,8 +1851,8 @@ def test_entity_density_closed_form(spark, tmp_path):
     residues the distinct-entity set is all 7 names + 11 cities."""
     rows = [(i, "x", "en", "s", 1) for i in range(77)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_entity_density")
-    assert s == _oracle_rows(tmp_path, "q_entity_density")
+    s = spark_rows(spark, tmp_path, "q_entity_density")
+    assert s == oracle_rows(tmp_path, "q_entity_density")
     (source, n_docs, n_tokens, n_entities, ppm, n_distinct) = s[0]
     assert (source, n_docs) == ("s", 77)
     assert n_tokens == 77 * 12 and n_entities == 77 * 3
@@ -1952,8 +1874,8 @@ def test_readability_forcast_closed_form(spark, tmp_path):
         (4, "operationally cat", "en", "s", 17),               # complex
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_readability")
-    assert s == _oracle_rows(tmp_path, "q_readability")
+    s = spark_rows(spark, tmp_path, "q_readability")
+    assert s == oracle_rows(tmp_path, "q_readability")
     by_id = {r[0]: r for r in s}
     assert by_id[0] == (0, 6, 6, 0, 50000, "easy")
     assert by_id[1] == (1, 5, 0, 0, 200000, "advanced")
@@ -1971,9 +1893,9 @@ def test_license_detect_precedence_and_classes(spark, tmp_path):
     redistributable verdict covers exactly the open classes."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(33)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_license_detect")
-    assert s == _oracle_rows(tmp_path, "q_license_detect")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_license_detect")
+    assert s == oracle_rows(tmp_path, "q_license_detect")
     got = {(r[0], r[1]): r for r in s}
     assert set(r[0] for r in s) == {
         "cc-by-sa", "cc-by", "public-domain",
@@ -2002,9 +1924,9 @@ def test_code_detect_all_classes_closed_form(spark, tmp_path):
     signal sums."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_code_detect")
-    assert s == _oracle_rows(tmp_path, "q_code_detect")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_code_detect")
+    assert s == oracle_rows(tmp_path, "q_code_detect")
     got = {r[0]: r for r in s}
     assert set(got) == {"code", "mixed", "prose"}
     # py: 3kw+2ind=11, js: 3kw+2*(2br+3semi)=19, c: 4kw+2*(2br+2semi)=20
@@ -2023,9 +1945,9 @@ def test_tag_histogram_voids_and_malformed(spark, tmp_path):
     open."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(10)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_tag_histogram")
-    assert s == _oracle_rows(tmp_path, "q_tag_histogram")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_tag_histogram")
+    assert s == oracle_rows(tmp_path, "q_tag_histogram")
     got = {r[0]: r[1:] for r in s}  # tag -> (open, close, unclosed, pages)
     assert got["html"] == (10, 10, 0, 10)
     assert got["body"] == (10, 10, 0, 10)
@@ -2054,8 +1976,8 @@ def test_wet_convert_parity_and_script_ordering(spark, tmp_path):
         for i in range(50)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_wet_convert")
-    assert s == _oracle_rows(tmp_path, "q_wet_convert")
+    s = spark_rows(spark, tmp_path, "q_wet_convert")
+    assert s == oracle_rows(tmp_path, "q_wet_convert")
     assert [r[0] for r in s] == [0, 1]  # 50 docs / 25 per file
     for file_id, n, html_chars, text_chars, yield_ppm, digest in s:
         assert n == 25
@@ -2076,9 +1998,9 @@ def test_soft404_detect_class_precedence(spark, tmp_path):
     and share_ppm is the exact integer division of each class count."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(14)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_soft404_detect")
-    assert s == _oracle_rows(tmp_path, "q_soft404_detect")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_soft404_detect")
+    assert s == oracle_rows(tmp_path, "q_soft404_detect")
     got = {r[0]: r[1:] for r in s}
     # ids {0,6,7,13} are 4xx/410 (13 -> kind 6); hosts {0,6,7} (13%13=0)
     assert got["hard-error"] == (4, 3, 4 * 1000000 // 14)
@@ -2095,8 +2017,8 @@ def test_heading_outline_classes(spark, tmp_path):
     a multi-h1 page wins over its own skip, and deep counts only h4+."""
     rows = [(i, f"t {i}", "en", "s", 3) for i in range(12)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_heading_outline")
-    assert s == _oracle_rows(tmp_path, "q_heading_outline")
+    s = spark_rows(spark, tmp_path, "q_heading_outline")
+    assert s == oracle_rows(tmp_path, "q_heading_outline")
     got = {r[0]: r[1:] for r in s}  # class -> (pages, headings, h1, deep)
     assert got["clean"] == (2, 6, 2, 0)
     assert got["multi-h1"] == (2, 6, 4, 0)
@@ -2132,9 +2054,9 @@ def test_politeness_audit_boundaries(spark, tmp_path):
     # host 4, tier 1: two fetches at the SAME instant -> gap 0 -> rude
     rows += [(4, t0, 0, "view", 1.0, "{}"),
              (17, t0, 0, "view", 1.0, "{}")]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_politeness_audit")
-    assert s == _oracle_rows(tmp_path, "q_politeness_audit")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_politeness_audit")
+    assert s == oracle_rows(tmp_path, "q_politeness_audit")
     got = {r[0]: r[1:] for r in s}
     assert got[0] == (3, 2, 0, 2000 * 1000, 0, "polite")
     assert got[1] == (3, 2, 1, 1000 * 1000, 500000, "mixed")
@@ -2152,9 +2074,9 @@ def test_tracker_census_broadcast_classes(spark, tmp_path):
     counts once)."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(15)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_tracker_census")
-    assert s == _oracle_rows(tmp_path, "q_tracker_census")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_tracker_census")
+    assert s == oracle_rows(tmp_path, "q_tracker_census")
     got = {r[0]: r[1:] for r in s}  # category -> (scripts, pages, hosts)
     assert got["analytics"] == (8, 7, 7)
     assert got["social"] == (3, 3, 3)
@@ -2171,9 +2093,9 @@ def test_url_params_census_classes(spark, tmp_path):
     measured against ALL urls including query-less ones."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_url_params_census")
-    assert s == _oracle_rows(tmp_path, "q_url_params_census")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_url_params_census")
+    assert s == oracle_rows(tmp_path, "q_url_params_census")
     got = {(r[0], r[1]): (r[2], r[3]) for r in s}
     assert got[("utm_source", "tracking")] == (2, 2 * 1000000 // 12)
     assert got[("utm_medium", "tracking")] == (2, 2 * 1000000 // 12)
@@ -2200,9 +2122,9 @@ def test_title_templates_threshold(spark, tmp_path):
         + [4]                     # host 4, unique article
     )
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in ids]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_title_templates")
-    assert s == _oracle_rows(tmp_path, "q_title_templates")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_title_templates")
+    assert s == oracle_rows(tmp_path, "q_title_templates")
     got = {r[0]: r[1:] for r in s}
     assert got[0] == (6, 2, 1, 5, 5 * 1000000 // 6)
     assert got[1] == (2, 1, 0, 0, 0)
@@ -2220,8 +2142,8 @@ def test_gibberish_detect_classes(spark, tmp_path):
     clean = "the quick brown fox jumps over a lazy dog"
     rows = [(i, clean, "en", "s", len(clean)) for i in range(12)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_gibberish_detect")
-    assert s == _oracle_rows(tmp_path, "q_gibberish_detect")
+    s = spark_rows(spark, tmp_path, "q_gibberish_detect")
+    assert s == oracle_rows(tmp_path, "q_gibberish_detect")
     got = {r[0]: r[1:] for r in s}  # class -> (docs, chars, vppm, run7)
     letters = sum(c.isalpha() for c in clean)
     vowels = sum(c in "aeiou" for c in clean)
@@ -2242,8 +2164,8 @@ def test_citation_density_classes(spark, tmp_path):
     base = "plain body with no citations"
     rows = [(i, base, "en", "s", len(base)) for i in range(10)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_citation_density")
-    assert s == _oracle_rows(tmp_path, "q_citation_density")
+    s = spark_rows(spark, tmp_path, "q_citation_density")
+    assert s == oracle_rows(tmp_path, "q_citation_density")
     got = {r[0]: r[1:] for r in s}
     sch = ("As shown in [1] and [2], results improve with scale [3]. "
            "References: 1. Smith 2. Jones")
@@ -2267,9 +2189,9 @@ def test_bandwidth_apportion_sums_to_budget(spark, tmp_path):
     a, b = tmp_path / "a", tmp_path / "b"
     a.mkdir(); b.mkdir()
     # A: three equal hosts -> base 3333 each, one remainder slot
-    _write_events(a, [(i, t0, 0, "view", 1.0, "{}") for i in range(3)])
-    s = _spark_rows(spark, a, "q_bandwidth_apportion")
-    assert s == _oracle_rows(a, "q_bandwidth_apportion")
+    write_events(a, [(i, t0, 0, "view", 1.0, "{}") for i in range(3)])
+    s = spark_rows(spark, a, "q_bandwidth_apportion")
+    assert s == oracle_rows(a, "q_bandwidth_apportion")
     got = {r[0]: r[1:] for r in s}
     assert got[0] == (1, 3333, 1, 3334)   # tie on remainder -> host 0
     assert got[1] == (1, 3333, 0, 3333)
@@ -2277,9 +2199,9 @@ def test_bandwidth_apportion_sums_to_budget(spark, tmp_path):
     assert sum(r[4] for r in s) == 10000
     # B: masses 7/2/1 of 10 -> exact division, no extras
     ids = [0, 13, 26, 39, 52, 65, 78, 1, 14, 2]
-    _write_events(b, [(i, t0, 0, "view", 1.0, "{}") for i in ids])
-    s = _spark_rows(spark, b, "q_bandwidth_apportion")
-    assert s == _oracle_rows(b, "q_bandwidth_apportion")
+    write_events(b, [(i, t0, 0, "view", 1.0, "{}") for i in ids])
+    s = spark_rows(spark, b, "q_bandwidth_apportion")
+    assert s == oracle_rows(b, "q_bandwidth_apportion")
     got = {r[0]: r[1:] for r in s}
     assert got[0] == (7, 7000, 0, 7000)
     assert got[1] == (2, 2000, 0, 2000)
@@ -2301,9 +2223,9 @@ def test_https_migration_trajectories(spark, tmp_path):
            9, 110, 211,      # url 9: ck 4 -> 0,1,0 flapping
            997]              # singles arm: url 1098, one capture
     rows = [(i, t0 + i * sec, 0, "view", 1.0, "{}") for i in ids]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_https_migration")
-    assert s == _oracle_rows(tmp_path, "q_https_migration")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_https_migration")
+    assert s == oracle_rows(tmp_path, "q_https_migration")
     got = {r[0]: r[1:] for r in s}  # class -> (urls, caps, https, hosts)
     assert got["http-stable"] == (1, 3, 0, 1)
     assert got["https-stable"] == (1, 3, 3, 1)
@@ -2323,9 +2245,9 @@ def test_image_alt_coverage_classes(spark, tmp_path):
     no-image, and shares are exact integer ppm of all pages."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(10)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_image_alt_coverage")
-    assert s == _oracle_rows(tmp_path, "q_image_alt_coverage")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_image_alt_coverage")
+    assert s == oracle_rows(tmp_path, "q_image_alt_coverage")
     got = {r[0]: r[1:] for r in s}
     for cls in ("alt-ok", "alt-empty", "alt-missing",
                 "alt-placeholder", "no-image"):
@@ -2339,8 +2261,8 @@ def test_ndcg_eval_rotation_lattice(spark, tmp_path):
     mean/min are the exact integer values recomputed in python."""
     rows = [(i, "t", "en", "s", 1) for i in range(50)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_ndcg_eval")
-    assert s == _oracle_rows(tmp_path, "q_ndcg_eval")
+    s = spark_rows(spark, tmp_path, "q_ndcg_eval")
+    assert s == oracle_rows(tmp_path, "q_ndcg_eval")
     disc = {1: 1000, 2: 630, 3: 500, 4: 431, 5: 386}
     ppms = []
     for qp in range(5):  # qids 0,10,20,30,40 -> q' = 0..4
@@ -2369,9 +2291,9 @@ def test_robots_precedence_longest_match(spark, tmp_path):
     empty ruleset allows everything."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(18)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_robots_precedence")
-    assert s == _oracle_rows(tmp_path, "q_robots_precedence")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_robots_precedence")
+    assert s == oracle_rows(tmp_path, "q_robots_precedence")
     got = {(r[0], r[1], r[2]): r[3] for r in s}
     assert got[(0, "blocked", "/private/")] == 1
     assert got[(0, "allowed", "/private/public/")] == 1
@@ -2391,9 +2313,9 @@ def test_crawl_trap_detect_classes(spark, tmp_path):
     and page=250 crosses the deep-pagination floor."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_crawl_trap_detect")
-    assert s == _oracle_rows(tmp_path, "q_crawl_trap_detect")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_crawl_trap_detect")
+    assert s == oracle_rows(tmp_path, "q_crawl_trap_detect")
     got = {r[0]: r[1:] for r in s}
     assert got["calendar-trap"] == (2, 2, 2 * 1000000 // 12)
     assert got["depth-trap"] == (2, 2, 166666)
@@ -2411,9 +2333,9 @@ def test_warc_revisit_economics(spark, tmp_path):
     t0 = _dt.datetime(2026, 1, 1)
     ids = [4 + 101 * k for k in range(3)] + [5 + 101 * k for k in range(9)]
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in ids]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_warc_revisit")
-    assert s == _oracle_rows(tmp_path, "q_warc_revisit")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_warc_revisit")
+    assert s == oracle_rows(tmp_path, "q_warc_revisit")
     (n_urls, n_caps, n_stored, n_revisit, ppm, saved) = s[0]
     assert (n_urls, n_caps) == (2, 12)
     assert (n_stored, n_revisit) == (5, 7)   # 3 fresh + (1 + 1 slow)
@@ -2429,9 +2351,9 @@ def test_content_length_audit_classes(spark, tmp_path):
     deficit against truncation."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(10)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_content_length_audit")
-    assert s == _oracle_rows(tmp_path, "q_content_length_audit")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_content_length_audit")
+    assert s == oracle_rows(tmp_path, "q_content_length_audit")
     got = {r[0]: r[1:] for r in s}
     assert got["exact"] == (2, 2, 2400, 0)
     assert got["truncated"] == (2, 2, 1600, 800)
@@ -2450,9 +2372,9 @@ def test_link_rot_join_and_rate(spark, tmp_path):
     # 200 events all with event_id % 23 == 0 -> ids 23*k for k<200
     ids = [23 * k for k in range(200)]
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in ids]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_link_rot")
-    assert s == _oracle_rows(tmp_path, "q_link_rot")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_link_rot")
+    assert s == oracle_rows(tmp_path, "q_link_rot")
     got = {r[0]: r[1:] for r in s}
     # dst = (23k*7) % 200 = 161k % 200; gcd(161,200)=1 -> all targets
     assert got[0] == (200, 60, 60 * 1000000 // 200)
@@ -2466,9 +2388,9 @@ def test_cms_fingerprint_parsing(spark, tmp_path):
     first-class rows."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(7)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_cms_fingerprint")
-    assert s == _oracle_rows(tmp_path, "q_cms_fingerprint")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_cms_fingerprint")
+    assert s == oracle_rows(tmp_path, "q_cms_fingerprint")
     got = {(r[0], r[1]): r[2] for r in s}
     assert got[("WordPress", "6.4.2")] == 1
     assert got[("WordPress", "5.9")] == 1
@@ -2550,8 +2472,8 @@ def test_countmin_sketch_exact_recompute(spark, tmp_path):
 
     rows = [(i, f"w{i:03d} common", "en", "s", 10) for i in range(300)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_countmin_sketch")
-    assert s == _oracle_rows(tmp_path, "q_countmin_sketch")
+    s = spark_rows(spark, tmp_path, "q_countmin_sketch")
+    assert s == oracle_rows(tmp_path, "q_countmin_sketch")
     # python replica
     tf = {"common": 300}
     for i in range(300):
@@ -2586,9 +2508,9 @@ def test_paywall_detect_declaration_precedence(spark, tmp_path):
     paywall-phrase; the consent wall is its own remediation class."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_paywall_detect")
-    assert s == _oracle_rows(tmp_path, "q_paywall_detect")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_paywall_detect")
+    assert s == oracle_rows(tmp_path, "q_paywall_detect")
     got = {r[0]: r[1:] for r in s}
     assert got["paywall-declared"] == (2, 2, 166666)
     assert got["free-declared"] == (2, 2, 166666)
@@ -2611,9 +2533,9 @@ def test_embedding_norm_audit_lattice(spark, tmp_path):
         (3, [-0.5, -0.5, -0.5, -0.5], 3),   # normal, negative elems
         (4, [0.5, 0.5, 0.5, 0.5], 4),       # normal
     ]
-    _write_embeddings(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_embedding_norm_audit")
-    assert s == _oracle_rows(tmp_path, "q_embedding_norm_audit")
+    write_embeddings(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_embedding_norm_audit")
+    assert s == oracle_rows(tmp_path, "q_embedding_norm_audit")
     got = {r[0]: r[1:] for r in s}
     assert got["zero"] == (1, 1, 0, 0)
     # q = [-5500, 5000, 5000, 5000] -> abs//1000 = [5, 5, 5, 5]
@@ -2628,9 +2550,9 @@ def test_social_cards_bitmap(spark, tmp_path):
     and the empty head lands in the all-false row."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, i, "view", 1.0, "{}") for i in range(8)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_social_cards")
-    assert s == _oracle_rows(tmp_path, "q_social_cards")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_social_cards")
+    assert s == oracle_rows(tmp_path, "q_social_cards")
     got = {(r[0], r[1], r[2]): (r[3], r[4]) for r in s}
     assert len(got) == 8
     for (t, i, c), (comp, n) in got.items():
@@ -2646,9 +2568,9 @@ def test_anchor_rel_census_multivalued(spark, tmp_path):
     is nofollow AND sponsored."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(6)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_anchor_rel_census")
-    assert s == _oracle_rows(tmp_path, "q_anchor_rel_census")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_anchor_rel_census")
+    assert s == oracle_rows(tmp_path, "q_anchor_rel_census")
     got = {r[0]: r[1:] for r in s}
     assert got[0] == (1, 1, 0, 0, 0, 1000000)   # nofollow
     assert got[1] == (1, 0, 1, 0, 0, 0)         # sponsored
@@ -2665,9 +2587,9 @@ def test_mixed_content_classes(spark, tmp_path):
     is active -> exactly 1000000)."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(18)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_mixed_content")
-    assert s == _oracle_rows(tmp_path, "q_mixed_content")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_mixed_content")
+    assert s == oracle_rows(tmp_path, "q_mixed_content")
     # every class fires (dead-class sanity on the synthesis key)
     tot = [sum(r[k] for r in s) for k in range(1, 8)]
     n_pages, n_https, n_active, n_passive, n_clean, n_http, _ = tot
@@ -2683,9 +2605,9 @@ def test_security_headers_grades(spark, tmp_path):
     missing (every header appears exactly once in grade 1)."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(16)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_security_headers")
-    assert s == _oracle_rows(tmp_path, "q_security_headers")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_security_headers")
+    assert s == oracle_rows(tmp_path, "q_security_headers")
     got = {r[0]: r[1:] for r in s}
     assert [got[g][0] for g in range(5)] == [1, 4, 6, 4, 1]
     assert got[1][1:5] == (1, 1, 1, 1)
@@ -2701,9 +2623,9 @@ def test_cookie_attributes_rejection(spark, tmp_path):
     RFC 6265bis hard error)."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(16)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_cookie_attributes")
-    assert s == _oracle_rows(tmp_path, "q_cookie_attributes")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_cookie_attributes")
+    assert s == oracle_rows(tmp_path, "q_cookie_attributes")
     got = {r[0]: r[1:] for r in s}
     assert set(got) == {"(absent)", "Lax", "Strict", "None"}
     for cls in got:
@@ -2720,9 +2642,9 @@ def test_sri_coverage_cells(spark, tmp_path):
     classify as third-party."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(24)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_sri_coverage")
-    assert s == _oracle_rows(tmp_path, "q_sri_coverage")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_sri_coverage")
+    assert s == oracle_rows(tmp_path, "q_sri_coverage")
     got = {(r[0], r[1]): r[2] for r in s}
     assert got[(True, "(none)")] == 6 and got[(False, "(none)")] == 6
     for algo in ("sha256", "sha384", "sha512"):
@@ -2739,8 +2661,8 @@ def test_mojibake_classes(spark, tmp_path):
         for i in range(10)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_mojibake_detect")
-    assert s == _oracle_rows(tmp_path, "q_mojibake_detect")
+    s = spark_rows(spark, tmp_path, "q_mojibake_detect")
+    assert s == oracle_rows(tmp_path, "q_mojibake_detect")
     got = {r[0]: r[1:3] for r in s}
     assert set(got) == {"clean", "double-utf8", "nbsp-debris",
                         "replacement"}
@@ -2757,8 +2679,8 @@ def test_truncation_classes(spark, tmp_path):
     the complete page carries zero deficit."""
     rows = [(i, "body text", "en", "s0", 9) for i in range(8)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_truncation_detect")
-    assert s == _oracle_rows(tmp_path, "q_truncation_detect")
+    s = spark_rows(spark, tmp_path, "q_truncation_detect")
+    assert s == oracle_rows(tmp_path, "q_truncation_detect")
     got = {r[0]: r[1:3] for r in s}
     assert got["complete"] == (2, 0)
     assert got["no-close"] == (2, 0)
@@ -2773,9 +2695,9 @@ def test_date_sanity_classes(spark, tmp_path):
     ok arm keeps its exact day count."""
     t0 = _dt.datetime(2026, 1, 20, 12, 0, 0)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(8)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_date_sanity")
-    assert s == _oracle_rows(tmp_path, "q_date_sanity")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_date_sanity")
+    assert s == oracle_rows(tmp_path, "q_date_sanity")
     got = {r[0]: r[1:] for r in s}
     assert got["ok"] == (2, 10)
     assert got["future"] == (2, 3)
@@ -2793,8 +2715,8 @@ def test_parked_domain_classes(spark, tmp_path):
         for i in range(10)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_parked_domain")
-    assert s == _oracle_rows(tmp_path, "q_parked_domain")
+    s = spark_rows(spark, tmp_path, "q_parked_domain")
+    assert s == oracle_rows(tmp_path, "q_parked_domain")
     got = {r[0]: r[1:3] for r in s}
     assert set(got) == {"content", "parked", "suspended",
                         "placeholder", "thin"}
@@ -2809,9 +2731,9 @@ def test_jsonld_types_census(spark, tmp_path):
     fires only on the two article arms."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_jsonld_types")
-    assert s == _oracle_rows(tmp_path, "q_jsonld_types")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_jsonld_types")
+    assert s == oracle_rows(tmp_path, "q_jsonld_types")
     got = {r[0]: r[1:3] for r in s}
     assert set(got) == {"Article", "NewsArticle", "Product",
                         "FAQPage", "BreadcrumbList", "(none)"}
@@ -2828,9 +2750,9 @@ def test_resource_hints_missing_as(spark, tmp_path):
     zero for the other hints by construction."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(16)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_resource_hints")
-    assert s == _oracle_rows(tmp_path, "q_resource_hints")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_resource_hints")
+    assert s == oracle_rows(tmp_path, "q_resource_hints")
     got = {r[0]: r[1:4] for r in s}
     assert got["preconnect"] == (8, 8, 0)
     assert got["dns-prefetch"] == (8, 8, 0)
@@ -2844,9 +2766,9 @@ def test_amp_pairing_classes(spark, tmp_path):
     no-amp is the remainder."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(16)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_amp_pairing")
-    assert s == _oracle_rows(tmp_path, "q_amp_pairing")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_amp_pairing")
+    assert s == oracle_rows(tmp_path, "q_amp_pairing")
     got = {r[0]: r[1] for r in s}
     assert got == {"paired": 2, "dangling-pointer": 2,
                    "orphan-amp": 2, "no-amp": 2}
@@ -2906,9 +2828,9 @@ def test_conditional_get_ledger(spark, tmp_path):
     saved_ppm uses the would-have-shipped total as denominator."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(24)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_conditional_get")
-    assert s == _oracle_rows(tmp_path, "q_conditional_get")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_conditional_get")
+    assert s == oracle_rows(tmp_path, "q_conditional_get")
     exp = {}
     for i in range(24):
         h = i % 8
@@ -2934,9 +2856,9 @@ def test_vary_audit_precedence(spark, tmp_path):
     star and cookie are uncacheable, accept-encoding stays benign."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_vary_audit")
-    assert s == _oracle_rows(tmp_path, "q_vary_audit")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_vary_audit")
+    assert s == oracle_rows(tmp_path, "q_vary_audit")
     got = {r[0]: (r[1], r[2]) for r in s}
     assert got["(none)"] == (False, 2)
     assert got["accept-encoding"] == (False, 2)
@@ -2952,9 +2874,9 @@ def test_retry_after_compliance(spark, tmp_path):
     recomputes from the id lattice."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(60)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_retry_after")
-    assert s == _oracle_rows(tmp_path, "q_retry_after")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_retry_after")
+    assert s == oracle_rows(tmp_path, "q_retry_after")
     exp = {}
     for h in range(5):
         thr = miss = viol = 0
@@ -2980,9 +2902,9 @@ def test_robots_diff_transitions(spark, tmp_path):
     Disallow group, and the no-rules group stays allowed wholesale."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(18)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_robots_diff")
-    assert s == _oracle_rows(tmp_path, "q_robots_diff")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_robots_diff")
+    assert s == oracle_rows(tmp_path, "q_robots_diff")
     got = {r[0]: (r[1], r[2]) for r in s}
     assert got["purge"] == (1, 1)
     assert got["unlock"] == (1, 1)
@@ -2997,8 +2919,8 @@ def test_bitext_mine_ratio_gate(spark, tmp_path):
     accepted target lengths exactly."""
     rows = [(i, "t", "en", "s0", 1) for i in range(16)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_bitext_mine")
-    assert s == _oracle_rows(tmp_path, "q_bitext_mine")
+    s = spark_rows(spark, tmp_path, "q_bitext_mine")
+    assert s == oracle_rows(tmp_path, "q_bitext_mine")
     got = {r[0]: r[1:] for r in s}
     de_chars = sum(400 + (c % 7) * 10 + c % 9 for c in range(4))
     assert got["de"] == (4, 4, 0, de_chars)
@@ -3012,8 +2934,8 @@ def test_dom_nesting_depths(spark, tmp_path):
     (opens without closes counted as tags, not as depth)."""
     rows = [(i, "t", "en", "s0", 1) for i in range(8)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_dom_nesting")
-    assert s == _oracle_rows(tmp_path, "q_dom_nesting")
+    s = spark_rows(spark, tmp_path, "q_dom_nesting")
+    assert s == oracle_rows(tmp_path, "q_dom_nesting")
     got = {r[0]: (r[1], r[2]) for r in s}
     # arm0 depth 3 (6 tags), arm1 depth 5 (10), arm2 depth 2 (6),
     # arm3 depth 3 (8 tags incl. the 2 voids)
@@ -3030,8 +2952,8 @@ def test_split_leakage_contrast(spark, tmp_path):
     exists to show."""
     rows = [(i, "t", "en", "s0", 1) for i in range(100)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_split_leakage")
-    assert s == _oracle_rows(tmp_path, "q_split_leakage")
+    s = spark_rows(spark, tmp_path, "q_split_leakage")
+    assert s == oracle_rows(tmp_path, "q_split_leakage")
     got = {r[0]: r[1:4] for r in s}
     exp_leaky = sum(
         1 for h in range(50)
@@ -3053,8 +2975,8 @@ def test_instruction_detect_classes(spark, tmp_path):
         for i in range(10)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_instruction_detect")
-    assert s == _oracle_rows(tmp_path, "q_instruction_detect")
+    s = spark_rows(spark, tmp_path, "q_instruction_detect")
+    assert s == oracle_rows(tmp_path, "q_instruction_detect")
     got = {r[0]: r[1:3] for r in s}
     assert got["qa-format"] == (4, 6)   # 2x(2 Q:) + 2x(1 Q:)
     assert got["howto"] == (2, 0)
@@ -3072,8 +2994,8 @@ def test_script_mix_homoglyph(spark, tmp_path):
         for i in range(10)
     ]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_script_mix")
-    assert s == _oracle_rows(tmp_path, "q_script_mix")
+    s = spark_rows(spark, tmp_path, "q_script_mix")
+    assert s == oracle_rows(tmp_path, "q_script_mix")
     got = {r[0]: r[1] for r in s}
     assert got == {"latin": 2, "cjk": 2, "cyrillic": 2,
                    "mixed-homoglyph": 2, "other": 2}
@@ -3090,9 +3012,9 @@ def test_status_flap_classes(spark, tmp_path):
     would flip to flapping as n grows)."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(36)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_status_flap")
-    assert s == _oracle_rows(tmp_path, "q_status_flap")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_status_flap")
+    assert s == oracle_rows(tmp_path, "q_status_flap")
     got = {r[0]: r[1:] for r in s}
     assert got["healthy"] == (2, 0, 0)
     assert got["hard-down"] == (2, 0, 1000000)
@@ -3109,9 +3031,9 @@ def test_render_need_classes(spark, tmp_path):
     demote rich text), and script JS/src never counts as text."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(10)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_render_need")
-    assert s == _oracle_rows(tmp_path, "q_render_need")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_render_need")
+    assert s == oracle_rows(tmp_path, "q_render_need")
     got = {r[0]: r[1:4] for r in s}
     assert got["static"] == (2, 0, 500)
     assert got["spa-shell"] == (4, 2, 2 * 28)
@@ -3126,8 +3048,8 @@ def test_hidden_text_stuffing(spark, tmp_path):
     zero hidden mass, and hidden_ppm is the poisoned share."""
     rows = [(i, "t", "en", "s0", 1) for i in range(8)]
     write_docs(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_hidden_text")
-    assert s == _oracle_rows(tmp_path, "q_hidden_text")
+    s = spark_rows(spark, tmp_path, "q_hidden_text")
+    assert s == oracle_rows(tmp_path, "q_hidden_text")
     got = {r[0]: r[1:3] for r in s}
     assert got["stuffing"][0] == 4 and got["stuffing"][1] == 2 * (43 + 35)
     assert got["hidden-minor"] == (2, 2)
@@ -3141,9 +3063,9 @@ def test_cdn_detect_chaining(spark, tmp_path):
     chained marginal set."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_cdn_detect")
-    assert s == _oracle_rows(tmp_path, "q_cdn_detect")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_cdn_detect")
+    assert s == oracle_rows(tmp_path, "q_cdn_detect")
     got = {r[0]: r[1:3] for r in s}
     assert got["cloudflare"] == (4, 2)   # plain x2 + chained x2
     assert got["fastly"] == (2, 0)
@@ -3159,9 +3081,9 @@ def test_typosquat_distances(spark, tmp_path):
     brand in the dimension)."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(12)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_typosquat")
-    assert s == _oracle_rows(tmp_path, "q_typosquat")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_typosquat")
+    assert s == oracle_rows(tmp_path, "q_typosquat")
     got = {r[0]: r[1:] for r in s}
     assert got["brand"] == (4, 2, 0, 0)        # paypal x2, github x2
     assert got["typosquat"] == (6, 3, 1, 1)    # paypa1, gooogle, amazn
@@ -3175,9 +3097,9 @@ def test_subdomain_explosion_buckets(spark, tmp_path):
     (explosion), with page mass conserved per class."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(640)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_subdomain_explosion")
-    assert s == _oracle_rows(tmp_path, "q_subdomain_explosion")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_subdomain_explosion")
+    assert s == oracle_rows(tmp_path, "q_subdomain_explosion")
     got = {r[0]: r[1:] for r in s}
     assert got["single"] == (5, 1, 320)
     assert got["few"] == (3, 4, 192)
@@ -3223,9 +3145,9 @@ def test_robots_wildcard_verdicts(spark, tmp_path):
     with a query string, and the empty ruleset defaults allowed."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(18)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_robots_wildcard")
-    assert s == _oracle_rows(tmp_path, "q_robots_wildcard")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_robots_wildcard")
+    assert s == oracle_rows(tmp_path, "q_robots_wildcard")
     got = {(r[0], r[1], r[2]): r[3] for r in s}
     assert got[(0, "blocked", "/private/*.html")] == 2
     assert got[(1, "allowed", "/downloads/*.html$")] == 1
@@ -3242,9 +3164,9 @@ def test_etag_stability_classes(spark, tmp_path):
     validator is its own class regardless of stability."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(48)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_etag_stability")
-    assert s == _oracle_rows(tmp_path, "q_etag_stability")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_etag_stability")
+    assert s == oracle_rows(tmp_path, "q_etag_stability")
     got = {r[0]: r[1:] for r in s}
     assert got["consistent"] == (6, 0, 24)
     assert got["etag-churn"] == (3, 9, 12)
@@ -3319,9 +3241,9 @@ def test_csp_audit_classes(spark, tmp_path):
     empty header is missing."""
     t0 = _dt.datetime(2026, 1, 1)
     rows = [(i, t0, 0, "view", 1.0, "{}") for i in range(10)]
-    _write_events(tmp_path, rows)
-    s = _spark_rows(spark, tmp_path, "q_csp_audit")
-    assert s == _oracle_rows(tmp_path, "q_csp_audit")
+    write_events(tmp_path, rows)
+    s = spark_rows(spark, tmp_path, "q_csp_audit")
+    assert s == oracle_rows(tmp_path, "q_csp_audit")
     got = {r[0]: r[1:3] for r in s}
     assert got["strict"] == (2, 0)
     assert got["unsafe-inline"] == (2, 0)

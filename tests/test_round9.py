@@ -18,20 +18,11 @@ Covered internals:
 
 from __future__ import annotations
 
-import hashlib
-
 import pytest
-
 from pyspark.sql import functions as F
 
-from readembedability_spark import textops
-from readembedability_spark.queries import release_caches
-
-
-@pytest.fixture(autouse=True)
-def _release(spark):
-    yield
-    release_caches(spark)
+import readembedability_spark.textops as textops
+from helpers import planted_con, uf_labels, write_docs
 
 
 def test_minhash_long_min_equals_string_min(spark):
@@ -95,22 +86,6 @@ def test_lsh_candidates_lean_equals_profile(spark):
     assert lean & planted
 
 
-def _brute_cc(edges):
-    parent = {}
-
-    def find(x):
-        while parent.setdefault(x, x) != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    return {n: find(n) for n in parent}
-
-
 @pytest.mark.parametrize(
     "edges",
     [
@@ -128,30 +103,23 @@ def test_cc_star_forest_convergence_exact(spark, edges):
         r["node"]: r["label"]
         for r in textops._connected_components(spark, df).collect()
     }
-    assert got == _brute_cc(edges)
+    assert got == uf_labels(edges)
 
 
 def test_cdc_chunks_degenerate_docs(spark, tmp_path):
     """Docs shorter than the 4-gram window (single chunk) and empty
     text (one empty-string token) chunk identically to the oracle's
     window formulation: one chunk spanning the whole array."""
-    import duckdb
-
     docs = [
         (0, ""),  # split -> [""]
         (1, "a b"),  # below the p>=4 boundary window
         (4, "one two three four five six"),
         (7, "x " * 40),  # long enough to plant boundaries
     ]
-    pdf = spark.createDataFrame(docs, "doc_id long, text string").toPandas()
-    pdf.to_parquet(tmp_path / "documents.parquet")
+    write_docs(tmp_path, [(i, t, "en", "s0", len(t)) for i, t in docs])
     sdf = textops.REGISTRY["q_cdc_chunks"].spark(spark, str(tmp_path))
-    con = duckdb.connect()
-    con.execute(
-        f"CREATE VIEW documents AS SELECT * FROM"
-        f" read_parquet('{tmp_path}/documents.parquet')"
-    )
-    oracle = con.execute(textops.REGISTRY["q_cdc_chunks"].sql).fetchall()
+    sql = textops.REGISTRY["q_cdc_chunks"].sql
+    oracle = planted_con(tmp_path).execute(sql).fetchall()
 
     def canon(rows):
         return sorted(tuple(str(v) for v in r) for r in rows)

@@ -13,11 +13,9 @@ import importlib
 import sys
 from pathlib import Path
 
-import duckdb
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
+from helpers import planted_con, write_docs
 from test_oracle_parity import _canon
 
 _VOCAB = (
@@ -73,53 +71,34 @@ SPARSE_AND_WHITESPACE = ["q_metrics_rollup", "q_redirect_resolve", "q_link_depth
 NBSP_DOC = (55, "\u00a0non\u00a0 breaking\u00a0\u00a0spaces here\u00a0", "en")
 
 
-def _write_docs(d, rows):
-    ids, texts, langs = zip(*rows)
-    pq.write_table(
-        pa.table(
-            {
-                "doc_id": pa.array(ids, pa.int64()),
-                "text": pa.array(texts),
-                "lang": pa.array(langs),
-                "source": pa.array([f"src{i % 3}" for i in ids]),
-                "n_chars": pa.array([len(t) for t in texts], pa.int64()),
-            }
-        ),
-        d / "documents.parquet",
-    )
-    return str(d)
+def _doc_rows(rows):
+    """(doc_id, text, lang) rows as documents rows: source cycles over
+    three values, n_chars is the text length."""
+    return [(i, t, lang, f"src{i % 3}", len(t)) for i, t, lang in rows]
 
 
 @pytest.fixture(scope="module")
 def edge_dir(tmp_path_factory):
-    return _write_docs(tmp_path_factory.mktemp("edge_docs"), EDGE_DOCS)
+    return write_docs(
+        tmp_path_factory.mktemp("edge_docs"), _doc_rows(EDGE_DOCS)
+    )
 
 
 @pytest.fixture(scope="module")
 def nbsp_dir(tmp_path_factory):
-    return _write_docs(
-        tmp_path_factory.mktemp("nbsp_docs"), EDGE_DOCS + [NBSP_DOC]
+    return write_docs(
+        tmp_path_factory.mktemp("nbsp_docs"), _doc_rows(EDGE_DOCS + [NBSP_DOC])
     )
 
 
 def _assert_matches_oracle(spark, sf_dir, name):
     import readembedability_spark.textops  # noqa: F401 - registers entries
-    from readembedability_spark.queries import (
-        BASELINE_REGISTRY,
-        REGISTRY,
-        release_caches,
-    )
+    from readembedability_spark.queries import BASELINE_REGISTRY, REGISTRY
 
     qd = {**REGISTRY, **BASELINE_REGISTRY}[name]
     sdf = qd.spark(spark, sf_dir)
     got = _canon(sdf.columns, [tuple(r) for r in sdf.collect()])
-    release_caches(spark)
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{sf_dir}/documents.parquet')"
-    )
-    cur = con.execute(qd.sql)
+    cur = planted_con(sf_dir).execute(qd.sql)
     want = _canon([c[0] for c in cur.description], cur.fetchall())
     assert got == want
 

@@ -8,10 +8,6 @@ from __future__ import annotations
 
 import re
 
-import duckdb
-import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 import pytest
 
 from readembedability_spark.textops import (  # noqa: F401 - registers
@@ -19,9 +15,7 @@ from readembedability_spark.textops import (  # noqa: F401 - registers
     _MINHASH_CAND_SQL,
 )
 from readembedability_spark.queries import REGISTRY
-from helpers import formatted_plan
-
-SF_DIR = "/root/testdata/sf0.01"
+from helpers import SF_MED as SF_DIR, formatted_plan, planted_con, write_docs
 
 
 def _no_cross_join(plan: str):
@@ -71,13 +65,8 @@ def dup_corpus(tmp_path_factory):
             text = dup_text
         else:
             text = f"unique document {i} with words alpha{i} beta{i} gamma{i} delta{i}"
-        rows.append((i, text))
-    pdf = pd.DataFrame(rows, columns=["doc_id", "text"])
-    tbl = pa.Table.from_pandas(
-        pdf, schema=pa.schema([("doc_id", pa.int64()), ("text", pa.string())])
-    )
-    pq.write_table(tbl, str(d / "documents.parquet"))
-    return str(d)
+        rows.append((i, text, "en", "synth", len(text)))
+    return write_docs(d, rows)
 
 
 def test_minhash_degenerate_bucket_capped(spark, dup_corpus):
@@ -87,11 +76,7 @@ def test_minhash_degenerate_bucket_capped(spark, dup_corpus):
     sdf = REGISTRY["q_minhash_lsh"].spark(spark, dup_corpus)
     s_rows = sorted(tuple(r) for r in sdf.collect())
 
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW documents AS SELECT * FROM "
-        f"read_parquet('{dup_corpus}/documents.parquet')"
-    )
+    con = planted_con(dup_corpus)
     d_rows = sorted(
         con.execute(f"WITH {_MINHASH_CAND_SQL} SELECT a, b FROM cand").fetchall()
     )
