@@ -1,8 +1,9 @@
 """Size of the program over every ``.py`` file in
 ``readembedability_spark/`` and ``jobs/``: raw lines, code-only lines
 (no blank, comment-only or docstring lines) and options (parameters
-with a default plus dataclass fields with a default). A last ``tests``
-line gives the raw and code-only lines of ``tests/*.py``.
+with a default plus dataclass fields with a default), and the largest
+module with its raw lines. A last ``tests`` line gives the raw and
+code-only lines of ``tests/*.py``.
 
     python bench/loc.py      # or: make loc
 """
@@ -78,15 +79,19 @@ def options(src: str) -> int:
 
 def main() -> None:
     raw = code = opts = 0
+    largest = (0, "")
     for d in DIRS:
         for path in sorted((ROOT / d).rglob("*.py")):
             src = path.read_text()
-            raw += len(src.splitlines())
+            n = len(src.splitlines())
+            raw += n
+            largest = max(largest, (n, str(path.relative_to(ROOT))))
             code += code_lines(src)
             opts += options(src)
     print(f"raw  {raw}")
     print(f"code {code}")
     print(f"options {opts}")
+    print(f"largest {largest[1]} {largest[0]}")
     tests = [p.read_text() for p in sorted((ROOT / "tests").glob("*.py"))]
     print(
         f"tests raw {sum(len(s.splitlines()) for s in tests)} "

@@ -7,9 +7,9 @@ line.
 
 This composes the round-8 archive family into the job an
 archive/recrawl team actually runs, calling the registry's cores: the
-SURT key (textops.surt_key_expr), the CDX aggregate of q_surt_index
-(textops.surt_cdx_from) and the staleness plan of q_stale_captures
-(textops.staleness_from). The index serves replay and range scans,
+SURT key (textops.archive.surt_key_expr), the CDX aggregate of q_surt_index
+(textops.archive.surt_cdx_from) and the staleness plan of q_stale_captures
+(textops.archive.staleness_from). The index serves replay and range scans,
 the staleness table is the priority queue the next crawl round
 drains. The streaming sibling (streaming_surt_index) maintains the
 same index incrementally.
@@ -44,7 +44,7 @@ def captures(pages):
     digest = md5 prefix of the raw payload (the content identity the
     index versions on). Row-local string work only."""
     from readembedability_spark.functions import capture_digest
-    from readembedability_spark.textops import surt_key_expr
+    from readembedability_spark.textops.archive import surt_key_expr
 
     host = F.lower(F.regexp_extract("url", r"^https?://([^/?#]+)", 1))
     return pages.select(
@@ -59,7 +59,10 @@ def captures(pages):
 def run(spark, args) -> dict:
     from readembedability_spark.operators.salt import default_parts
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import staleness_from, surt_cdx_from
+    from readembedability_spark.textops.archive import (
+        staleness_from,
+        surt_cdx_from,
+    )
 
     out = Path(args.output)
     if args.input:

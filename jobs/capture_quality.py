@@ -42,7 +42,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from _session import job_parser, run_job  # noqa: E402
 
-from readembedability_spark.textops import (  # noqa: E402
+from readembedability_spark.textops.audits import (  # noqa: E402
     mojibake_class_from,
     parked_class_from,
     truncation_class_from,

@@ -45,7 +45,7 @@ def rulesets(spark):
     from the SHARED module-level snapshot so the gate query,
     q_robots_diff's before-set and this job can never drift."""
     from readembedability_spark.schemas import local_table
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.robots import (
         ROBOTS_RULES_SCHEMA,
         ROBOTS_RULES_SNAPSHOT,
     )
@@ -59,7 +59,7 @@ def synth_fetch_log(spark, n):
     host key (coprime moduli — the dead-class guard), per-host fetch
     gaps of ~25 s with a deterministic jitter so every politeness
     verdict is reachable, and the ruleset group keyed off the host."""
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.robots import (
         ROBOTS_PROBE_PATHS,
         robots_probe_path,
     )
@@ -93,7 +93,7 @@ def synth_fetch_log(spark, n):
 
 def run(spark, args) -> dict:
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.robots import (
         politeness_from,
         robots_verdicts_from,
     )

@@ -6,7 +6,7 @@ temperature-scaled training weights, and token-length distribution —
 written as one parquet table per section plus one JSON summary line.
 
 Every section reuses a registry operator's exact plan (q_filter_funnel
-via textops.filter_funnel_from, the MinHash-LSH→verify pair family,
+via textops.curation.filter_funnel_from, the MinHash-LSH→verify pair family,
 q_mixture_temperature's sqrt weighting, approx percentiles), so the
 datasheet numbers match what the driver-checked queries would report
 over the same corpus.
@@ -42,7 +42,7 @@ def dedup_rates(spark, docs):
     by >=1 verified pair count as near-dup). Returns a 1-row DF."""
     from readembedability_spark.queries import _persist
     from readembedability_spark.schemas import local_table
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.dedup import (
         _shingles_from,
         _verified_pairs_from,
     )
@@ -144,7 +144,7 @@ def length_distribution(docs):
 
 def run(spark, args) -> dict:
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import filter_funnel_from
+    from readembedability_spark.textops.curation import filter_funnel_from
 
     docs = _persist(
         spark.read.parquet(args.input).select("doc_id", "text", "lang")

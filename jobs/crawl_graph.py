@@ -36,9 +36,9 @@ from _session import job_parser, run_job  # noqa: E402
 from readembedability_spark.operators.extract import (  # noqa: E402
     endorsed_links,
 )
-from readembedability_spark.textops import (  # noqa: E402
-    _SCHEDULE_K,
+from readembedability_spark.textops.graph import (  # noqa: E402
     HOST_RE,
+    _SCHEDULE_K,
     frontier_counts_from,
     frontier_schedule_from,
     unseen_links_from,
@@ -82,7 +82,7 @@ def crawl_half(spark, links, pages, out: Path):
     consumers (their own write, the schedule joins, the counts), so
     each is persisted and PageRank and the anti-join run once."""
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _pagerank
+    from readembedability_spark.textops.graph import _pagerank
 
     ranks = _persist(
         _pagerank(spark, host_edges(links)).withColumnsRenamed(
@@ -120,7 +120,7 @@ def annotate_pages(pages, ranks):
 
 def run(spark, args) -> dict:
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _link_pages
+    from readembedability_spark.textops.graph import _link_pages
 
     if args.input:
         pages = spark.read.parquet(args.input)

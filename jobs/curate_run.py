@@ -3,7 +3,7 @@ quality/language gates → near-dup clustering (MinHash-LSH → Jaccard
 verify → connected components) → one representative per cluster,
 written as parquet with cluster multiplicity.
 
-This runs textops.curated_clusters_from, the core behind
+This runs textops.curation.curated_clusters_from, the core behind
 q_curation_pipeline_lsh, with its allowlist and gate thresholds as
 flags, over any (doc_id, text, lang) parquet table.
 
@@ -33,7 +33,7 @@ from _session import job_parser, run_job  # noqa: E402
 
 
 def run(spark, args) -> dict:
-    from readembedability_spark.textops import curated_clusters_from
+    from readembedability_spark.textops.curation import curated_clusters_from
 
     docs = spark.read.parquet(args.input)
     n_in = docs.count()

@@ -46,15 +46,17 @@ from pyspark.sql import functions as F  # noqa: E402
 from _session import job_parser, run_job  # noqa: E402
 
 from readembedability_spark.schemas import local_table  # noqa: E402
-from readembedability_spark.textops import (  # noqa: E402
+from readembedability_spark.textops.graph import (  # noqa: E402
+    TYPOSQUAT_BRANDS,
+    subdomain_fanout_from,
+    typosquat_min_dist_from,
+)
+from readembedability_spark.textops.robots import (  # noqa: E402
     ROBOTS_PROBE_PATHS,
     ROBOTS_RULES_SCHEMA,
     ROBOTS_RULES_SNAPSHOT,
-    TYPOSQUAT_BRANDS,
     robots_probe_path,
     robots_verdicts_from,
-    subdomain_fanout_from,
-    typosquat_min_dist_from,
 )
 
 

@@ -135,7 +135,7 @@ def authority_blended_sample(docs, ranks):
 def run(spark, args) -> dict:
     from readembedability_spark.operators.extract import endorsed_links
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _link_pages
+    from readembedability_spark.textops.graph import _link_pages
 
     out = Path(args.output)
     if args.input:
@@ -184,7 +184,7 @@ def run(spark, args) -> dict:
     # first — the stage counts in the run stats) and the marginal
     # attribution (what relaxing each gate would re-admit) — computing
     # them from separate calls would re-run the whole signal chain
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.curation import (
         admission_flags_from,
         admission_marginal_from_flags,
         admission_stages_from_flags,

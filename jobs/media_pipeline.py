@@ -2,7 +2,7 @@
 an asset table (doc_id, payload, modality) → ONE persisted scan →
 three modality branches (image thumbnail-fit, video frame sampling,
 audio chunking), each calling the registry's core for its modality
-(readembedability_spark.textops.image_thumbs_from / video_frames_from
+(readembedability_spark.textops.media.image_thumbs_from / video_frames_from
 / audio_chunks_from, which q_image_resize, q_video_frame_sample and
 q_audio_chunks return) → per-modality parquet artifacts → a manifest
 rolled up from the WRITTEN files (not the lineage) + one JSON stats
@@ -82,11 +82,11 @@ def synth_assets(spark, n: int):
 def run_pipeline(spark, assets, out: Path) -> None:
     """assets → written images/frames/audio_chunks artifacts. Each
     branch filters its modality before the Python stage and calls the
-    registry's core for it (textops.image_thumbs_from /
+    registry's core for it (textops.media.image_thumbs_from /
     video_frames_from / audio_chunks_from). Writes only — the caller
     assembles stats from the written files."""
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.media import (
         audio_chunks_from,
         image_thumbs_from,
         video_frames_from,

@@ -39,13 +39,17 @@ from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
 from _session import job_parser, run_job  # noqa: E402
-from readembedability_spark.textops import (  # noqa: E402
+from readembedability_spark.textops.curation import (  # noqa: E402
+    near_dup_reps_from,
+)
+from readembedability_spark.textops.dedup import (  # noqa: E402
+    dup_substring_excised,
+    line_owner_flags_from,
+)
+from readembedability_spark.textops.training import (  # noqa: E402
     _bpe_train_docs,
     bpe_doc_token_counts,
-    dup_substring_excised,
     eval_gram_hits_from,
-    line_owner_flags_from,
-    near_dup_reps_from,
     pack_seq_ids,
     seq_shard_keys,
 )
@@ -82,7 +86,7 @@ def dedup_lines_global(spark, docs):
     """Stage 2 — C4 cross-document line dedup, REMOVAL form: every
     line is kept once corpus-wide (owner = lexicographic-min
     (doc_id, line_idx), the q_dedup_lines_global core
-    textops.line_owner_flags_from); the CLEANED text flows to later
+    textops.dedup.line_owner_flags_from); the CLEANED text flows to later
     stages, rebuilt by one doc rollup in line order."""
     cleaned = (
         line_owner_flags_from(docs)
@@ -133,7 +137,7 @@ def near_dup_keep_best(spark, docs):
 def decontaminate(docs, eval_docs):
     """Stage 5 — drop training docs sharing any word 13-gram with the
     eval set (the q_decontaminate broadcast gram join,
-    textops.eval_gram_hits_from, as a left-anti join)."""
+    textops.training.eval_gram_hits_from, as a left-anti join)."""
     contaminated = (
         eval_gram_hits_from(docs.select("doc_id", "text"), eval_docs)
         .select("doc_id")
@@ -147,7 +151,7 @@ def remove_dup_substrings(docs):
     (the q_dedup_substring_removed transform wired into the funnel,
     VERDICT r04 #7): token spans covered by any word 8-gram that first
     occurred in a lower-id document are excised; the owner doc keeps
-    all its occurrences. The plan is textops.dup_substring_excised —
+    all its occurrences. The plan is textops.dedup.dup_substring_excised —
     the SAME implementation the registry query runs (positional grams
     md5'd map-side, combining groupBy(gh) MIN owner, gh-keyed join
     kept to duplicated starts only, row-local indexed HOF excision).
@@ -179,7 +183,7 @@ def bpe_token_counts(spark, docs, merges: int = 16):
 
 def pack_sequences(docs, budget: int = 1024, token_counts=None):
     """Stage 6 — greedy streaming sequence packing, the q_pack_sequences
-    core (textops.pack_seq_ids): per-LANGUAGE stream in doc_id order,
+    core (textops.training.pack_seq_ids): per-LANGUAGE stream in doc_id order,
     seq_id = floor(tokens-before / budget), unique per (lang, seq_id).
 
     token_counts: optional (doc_id, n_tok) table — the TRAINER's
@@ -203,7 +207,7 @@ def pack_sequences(docs, budget: int = 1024, token_counts=None):
 
 def shuffle_shards(packed, n_shards: int = 8, seed: str = "r5seed"):
     """Stage 7 — deterministic global training-order shuffle + shard
-    assignment, the q_shuffle_shards key (textops.seq_shard_keys):
+    assignment, the q_shuffle_shards key (textops.training.seq_shard_keys):
     k = md5(seed ‖ lang:seq_id), shard = hex-prefix(k) mod n_shards,
     within-shard read order = ascending k. The writer repartitions by
     shard and sorts within partitions only — no global sort. Returns

@@ -11,8 +11,8 @@ JSON stats line.
 This composes the retrieval family into the job a retrieval-training
 team actually runs, calling the registry's cores: the tokenizer
 (text_signals.doc_tokens), the d-gap window of q_postings_compression
-(textops.postings_gaps) and the query set and top-5 ranking of
-q_bm25_rank/q_bm25_eval (textops.bm25_query_terms, bm25_top5_from).
+(textops.search.postings_gaps) and the query set and top-5 ranking of
+q_bm25_rank/q_bm25_eval (textops.search.bm25_query_terms, bm25_top5_from).
 The postings/dictionary/corpus tables are the servable index, the MRR
 line is the smoke check that the WRITTEN index — not the in-memory
 lineage — answers queries.
@@ -87,7 +87,7 @@ def build_index(spark, docs, out: Path, parts: int):
     the caller assembles its own stats from the written tables."""
     from readembedability_spark.queries import _persist
     from readembedability_spark.text_signals import doc_tokens
-    from readembedability_spark.textops import bm25_corpus
+    from readembedability_spark.textops.search import bm25_corpus
 
     toks = doc_tokens(docs, "doc_id")
     tf = _persist(
@@ -120,11 +120,14 @@ def build_index(spark, docs, out: Path, parts: int):
 
 def postings_audit(spark, out: Path) -> dict:
     """LEB128 varint vs fixed pricing computed ON the written postings
-    through the registry's d-gap core, textops.postings_gaps (the
+    through the registry's d-gap core, textops.search.postings_gaps (the
     gaps q_postings_compression prices) — the lag window's
     (w, doc_id) order is the file order, so the window sort collapses
     onto the read layout."""
-    from readembedability_spark.textops import _varint_bytes_sql, postings_gaps
+    from readembedability_spark.textops.search import (
+        _varint_bytes_sql,
+        postings_gaps,
+    )
 
     g = postings_gaps(spark.read.parquet(str(out / "postings")))
     row = g.agg(
@@ -145,8 +148,8 @@ def postings_audit(spark, out: Path) -> dict:
 def bm25_topk_from_index(spark, out: Path, queries):
     """BM25 top-5 served from the WRITTEN artifacts (postings +
     dictionary + doclens + corpus read back from parquet) through the
-    registry's core, textops.bm25_top5_from (q_bm25_rank's ranking)."""
-    from readembedability_spark.textops import bm25_top5_from
+    registry's core, textops.search.bm25_top5_from (q_bm25_rank's ranking)."""
+    from readembedability_spark.textops.search import bm25_top5_from
 
     def read(table):
         return spark.read.parquet(str(out / table))
@@ -159,7 +162,7 @@ def bm25_topk_from_index(spark, out: Path, queries):
 
 def run(spark, args) -> dict:
     from readembedability_spark.operators.salt import default_parts
-    from readembedability_spark.textops import bm25_query_terms
+    from readembedability_spark.textops.search import bm25_query_terms
 
     out = Path(args.output)
     if args.input:

@@ -12,11 +12,13 @@ mapInPandas stage itself) → driver records rows-only.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Callable, Optional
 
 import pandas as pd
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -166,6 +168,19 @@ def _unroll(template: str, rounds: int, **fields) -> str:
     return ",".join(
         template.format(t=t, p=t - 1, **fields) for t in range(1, rounds + 1)
     )
+
+
+def _build_concurrently(spark: SparkSession, *builders: Callable) -> list:
+    """Run the zero-argument `builders` on one thread each and return
+    their results in submission order. Independent builders that run
+    eager jobs (a checkpoint, a training loop) overlap, so one
+    builder's straggling tail back-fills the executors another left
+    idle. Every thread inherits the caller's session tags and local
+    properties, so the jobs a builder runs carry them too."""
+    inherit = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
+        futs = [pool.submit(inherit(build)) for build in builders]
+        return [f.result() for f in futs]
 
 
 def release_caches(spark: SparkSession) -> None:

@@ -179,7 +179,7 @@ def streaming_contamination_flags(
     (bounded state). Emits (url, warc_ts) of contaminated pages — the
     ingest pipeline routes them to quarantine instead of the training
     sink."""
-    from readembedability_spark.textops import DECON_N
+    from readembedability_spark.textops.training import DECON_N
 
     arr = F.split(F.coalesce(F.col("text"), F.lit("")), " ")
     grams = F.when(
@@ -360,7 +360,7 @@ def streaming_surt_index(
             }
         )
 
-    from readembedability_spark.textops import surt_key_expr
+    from readembedability_spark.textops.archive import surt_key_expr
 
     keyed = pages_stream.select(
         surt_key_expr(F.col("url")).alias("surt_key"),
@@ -600,7 +600,7 @@ def streaming_admission(pages_stream: DataFrame) -> DataFrame:
     pages still advance the seen-counter, mirroring the batch cumsum
     over all docs (the sum is monotone, so rejection stays permanent
     in both engines)."""
-    from readembedability_spark.textops import HOST_TOKEN_BUDGET
+    from readembedability_spark.textops.training import HOST_TOKEN_BUDGET
 
     def fold(st, ts_us, row, late):
         before = st["tokens_seen"]
@@ -665,7 +665,7 @@ def streaming_politeness(pages_stream: DataFrame) -> DataFrame:
     two already-folded fetches, so it is counted in n_late and never
     contributes a gap — offline reconciliation is exactly what the
     batch sibling is for."""
-    from readembedability_spark.textops import politeness_verdict
+    from readembedability_spark.textops.robots import politeness_verdict
 
     def fold(st, ts_us, row, late):
         st["n_fetches"] += 1

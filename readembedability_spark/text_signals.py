@@ -1,6 +1,6 @@
 """Row-local text signals over a documents table, each rule written once.
 
-The registry queries (``textops.py``), the batch jobs (``jobs/``) and
+The registry queries (``textops/``), the batch jobs (``jobs/``) and
 the streaming ingest call these instead of restating them:
 
 - ``doc_tokens``: the space tokenizer with empty tokens dropped;

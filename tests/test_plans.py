@@ -219,7 +219,7 @@ def test_multimodal_plumbing_zero_exchange_pruned_read(spark):
     """The resize and frame-sample ops must stay shuffle-free (one
     mapInPandas pass inheriting scan partitioning) and must prune the
     documents read to exactly (doc_id, text)."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     for name in ("q_image_resize", "q_video_frame_sample"):
         df = REGISTRY[name].spark(spark, "/root/testdata/sf0.001")
@@ -239,7 +239,7 @@ def test_surt_index_single_keyed_aggregate(spark):
     """The CDX index is one hash aggregate on the SURT key: the only
     non-broadcast exchanges are the count-distinct pair (key+digest,
     then key) — no joins, no windows, pruned 3-column read."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_surt_index"].spark(spark, "/root/testdata/sf0.001")
     plan = formatted_plan(df)
@@ -274,7 +274,7 @@ def test_politeness_single_exchange(spark):
     window partitions on host and the final aggregate groups on the
     same key, so the aggregate rides the window's partitioning; no
     joins anywhere."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_politeness_audit"].spark(
         spark, "/root/testdata/sf0.001"
@@ -288,7 +288,7 @@ def test_link_rot_broadcasts_the_dim(spark):
     """The link-rot join must broadcast the status dimension — no
     shuffle on the 10^12-row link side for the join; the only
     hash exchange is the per-host rollup."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_link_rot"].spark(spark, "/root/testdata/sf0.001")
     c = _op_counts(formatted_plan(df))
@@ -300,7 +300,7 @@ def test_robots_precedence_broadcasts_rules(spark):
     """The ruleset dimension must broadcast (never shuffle the url
     side for it); the remaining exchanges serve the per-url winner
     window and the final rollup."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_robots_precedence"].spark(
         spark, "/root/testdata/sf0.001"
@@ -316,7 +316,7 @@ def test_https_migration_windows_share_partitioning(spark):
     on ONE url_id partitioning (a second url-keyed exchange would
     double the heavy shuffle); the remaining exchanges belong to the
     bounded class rollup's distinct-count expansion."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_https_migration"].spark(
         spark, "/root/testdata/sf0.001"
@@ -341,7 +341,7 @@ def test_crawl_trap_detect_join_free(spark):
     explode pipeline as widened keys instead of joining the
     multiplicity table back onto the urls (broadcast at test scale,
     a 10^12-row sort-merge at web scale)."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_crawl_trap_detect"].spark(
         spark, "/root/testdata/sf0.001"
@@ -354,7 +354,7 @@ def test_retry_after_single_exchange(spark):
     """The Retry-After ledger is ONE exchange end-to-end: the lead()
     window partitions on host and the final aggregate groups on the
     same key (same shape as the politeness ledger); no joins."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_retry_after"].spark(
         spark, "/root/testdata/sf0.001"
@@ -370,7 +370,7 @@ def test_dom_nesting_shares_doc_exchange(spark):
     groups on the same key (rides the window's partitioning); the
     final census aggregate is the only other exchange, bounded by
     the depth alphabet. No joins."""
-    from readembedability_spark.textops import REGISTRY
+    from readembedability_spark.queries import REGISTRY
 
     df = REGISTRY["q_dom_nesting"].spark(
         spark, "/root/testdata/sf0.001"
@@ -414,19 +414,20 @@ def test_minhash_core_single_hash_aggregate(spark, monkeypatch, name):
     (doc_id, sh) shingle table, whose only reader is that fold."""
     import re
 
-    from readembedability_spark import textops
+    from readembedability_spark.queries import REGISTRY
+    from readembedability_spark.textops import dedup
     from test_oracle_parity import SF_DIR
 
     # connected components runs eagerly; a lazy stand-in keeps the
     # verified-pair subtree in the returned plan
     monkeypatch.setattr(
-        textops,
+        dedup,
         "_connected_components",
         lambda spark, edges: edges.select(
             F.col("a").alias("node"), F.col("b").alias("label")
         ),
     )
-    df = textops.REGISTRY[name].spark(spark, SF_DIR)
+    df = REGISTRY[name].spark(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()  # noqa: SLF001
     assert "SortAggregate" not in plan
     folds = _doc_keyed_folds(plan)
@@ -436,7 +437,7 @@ def test_minhash_core_single_hash_aggregate(spark, monkeypatch, name):
 
 
 #: Plan-shape ceilings of the embedding-similarity family at sf0.01,
-#: pinned from the plans before its shared core (textops.py `_cosine`,
+#: pinned from the plans before its shared core (textops/ann.py `_cosine`,
 #: `_top_k`, `_rerank`, ...) replaced the per-query copies: shuffle
 #: Exchanges, nested-loop/cartesian joins, Windows, embeddings scans.
 _EMB_PLAN_CEILINGS = {

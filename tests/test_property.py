@@ -95,7 +95,10 @@ def test_capped_bucket_pairs_invariants(spark, buckets):
     per-bucket pair count at C(cap,2)+(k-cap), (2) keep every bucket
     member connected to the bucket minimum (directly or via head
     pairs), and (3) emit only a<b pairs from within one bucket."""
-    from readembedability_spark.textops import _MAX_BUCKET_IDS, _capped_bucket_pairs
+    from readembedability_spark.textops.dedup import (
+        _MAX_BUCKET_IDS,
+        _capped_bucket_pairs,
+    )
 
     rows = [(i, sorted(ids)) for i, ids in enumerate(buckets)]
     df = spark.createDataFrame(rows, "bucket int, ids array<bigint>")

@@ -10,17 +10,15 @@ import re
 
 import pytest
 
-import readembedability_spark.textops as textops
 from readembedability_spark.queries import (
     _PERSISTED,
     REGISTRY,
     _persist,
     release_caches,
 )
-from readembedability_spark.textops import (
-    _ann_ivf_kmeans_df,
-    _connected_components,
-)
+from readembedability_spark.textops import dedup
+from readembedability_spark.textops.ann import _ann_ivf_kmeans_df
+from readembedability_spark.textops.dedup import _connected_components
 from helpers import (
     SF_MED,
     SF_SMALL,
@@ -39,7 +37,7 @@ def _brute_force_top3(spark, sf_dir):
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
-    from readembedability_spark.textops import _dot
+    from readembedability_spark.textops.ann import _dot
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
@@ -119,7 +117,7 @@ def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
     diameter 64) converges in O(log n) star rounds, not O(n): with the
     round cap at 8 the loop still reaches its fixpoint instead of
     raising."""
-    monkeypatch.setattr(textops, "_CC_MAX_ROUNDS", 8)
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 8)
     chain = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(chain, "a long, b long")
     got = {
@@ -132,7 +130,7 @@ def test_cc_chain_converges_in_log_rounds(spark, monkeypatch):
 def test_cc_raises_on_round_exhaustion(spark, monkeypatch):
     """Non-convergence is LOUD (ADVICE r02): the loop raises instead of
     silently emitting wrong labels."""
-    monkeypatch.setattr(textops, "_CC_MAX_ROUNDS", 1)
+    monkeypatch.setattr(dedup, "_CC_MAX_ROUNDS", 1)
     chain = [(i, i + 1) for i in range(64)]
     df = spark.createDataFrame(chain, "a long, b long")
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -369,7 +367,7 @@ def test_winnowing_guarantee_shared_run(spark, tmp_path):
     # recompute the selected fingerprint SETS via the query's internals
     from pyspark.sql import functions as F
 
-    from readembedability_spark.textops import _WINNOW_K, _WINNOW_W
+    from readembedability_spark.textops.dedup import _WINNOW_K, _WINNOW_W
 
     assert _WINNOW_K + _WINNOW_W - 1 == 8
     rows = REGISTRY["q_winnow_fingerprints"].spark(spark, str(d)).collect()

@@ -11,8 +11,8 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-import readembedability_spark.textops as textops
 from readembedability_spark.queries import REGISTRY
+from readembedability_spark.textops import ann, training
 from helpers import SF_MED, SF_SMALL, formatted_plan, planted_con, write_docs
 
 
@@ -33,7 +33,7 @@ def test_km_assign_nprobe1_has_no_window(spark):
     cents = emb.filter(F.col("vec_id") < 4).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("c")
     )
-    df = textops._km_assign(emb, cents, nprobe=1)
+    df = ann._km_assign(emb, cents, nprobe=1)
     plan = formatted_plan(df)
     assert not re.search(r"\n\(\d+\) Window", plan), plan
     assert not re.search(r"\n\(\d+\) Sort", plan), plan
@@ -42,7 +42,7 @@ def test_km_assign_nprobe1_has_no_window(spark):
     n_exchange = len(re.findall(r"\n\(\d+\) Exchange", plan))
     assert n_exchange == 1, plan
     # and the multi-probe branch still uses the window top-p
-    plan2 = formatted_plan(textops._km_assign(emb, cents, nprobe=2))
+    plan2 = formatted_plan(ann._km_assign(emb, cents, nprobe=2))
     assert re.search(r"\n\(\d+\) Window", plan2)
 
 
@@ -59,7 +59,7 @@ def test_km_assign_nprobe1_matches_window_branch(spark):
     )
     fast = {
         r["vec_id"]: r["cell"]
-        for r in textops._km_assign(emb, cents, nprobe=1).collect()
+        for r in ann._km_assign(emb, cents, nprobe=1).collect()
     }
     # the window branch's ACTUAL top-1 (ADVICE r04: set membership in
     # the nprobe=2 pair was too weak — a tie-break or rounding
@@ -68,9 +68,9 @@ def test_km_assign_nprobe1_matches_window_branch(spark):
     # through): replicate the exact window ordering and take rn == 1.
     from pyspark.sql import Window
 
-    cos = textops._dot(F.col("v"), F.col("c")) / (
-        F.sqrt(textops._dot(F.col("v"), F.col("v")))
-        * F.sqrt(textops._dot(F.col("c"), F.col("c")))
+    cos = ann._dot(F.col("v"), F.col("c")) / (
+        F.sqrt(ann._dot(F.col("v"), F.col("v")))
+        * F.sqrt(ann._dot(F.col("c"), F.col("c")))
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.desc(F.round(cos, 6)), F.asc("cid")
@@ -167,7 +167,7 @@ def test_ranked_cumsum_matches_global_window(spark):
     cf = spark.createDataFrame(rows, "w string, c long")
     got = {
         r["w"]: (r["rnk"], r["cum"])
-        for r in textops._grouped_cumsum(
+        for r in training._grouped_cumsum(
             cf.withColumn("g", F.lit("")),
             "g",
             [F.desc("c"), F.asc("w")],
@@ -250,12 +250,12 @@ def test_bpe_seq_reassembles_word_and_shrinks(spark):
     """Invariant: concatenating a word's final symbols reproduces the
     word exactly; merges strictly shrink the corpus-wide symbol count
     vs character count."""
-    _, final_words = textops._bpe_train(spark, SF_MED)
+    _, final_words = training._bpe_train(spark, SF_MED)
     rows = final_words.select(
         "word",
         "freq",
-        F.replace("seq", F.lit(textops._BPE_D), F.lit("")).alias("joined"),
-        (F.size(F.split("seq", textops._BPE_D)) - 2).alias("n_syms"),
+        F.replace("seq", F.lit(training._BPE_D), F.lit("")).alias("joined"),
+        (F.size(F.split("seq", training._BPE_D)) - 2).alias("n_syms"),
     ).collect()
     assert rows
     for r in rows:

@@ -7,14 +7,14 @@ classifier training, PageRank), per-round BPE vocab checkpointing
 from __future__ import annotations
 
 import readembedability_spark.queries as queries
-import readembedability_spark.textops as textops
 from readembedability_spark.queries import (
     REGISTRY,
     _parts_for,
     release_caches,
     _resize,
 )
-from readembedability_spark.textops import (
+from readembedability_spark.textops import training
+from readembedability_spark.textops.graph import (
     frontier_counts_from,
     unseen_links_from,
 )
@@ -65,17 +65,17 @@ def test_bpe_vocab_parallelism_derived_from_rows(spark, monkeypatch):
     learned merge table must be IDENTICAL to the default-sizing run
     (training is partitioning-invariant: pair counts are exact
     integer sums)."""
-    merges_default, words_default = textops._bpe_train(spark, SF_SMALL)
+    merges_default, words_default = training._bpe_train(spark, SF_SMALL)
     # materialize BEFORE release_caches: the vocab is checkpoint-backed
     # and its truncated lineage cannot recompute after release
     b = {r["word"]: r["seq"] for r in words_default.collect()}
     release_caches(spark)
 
-    n_vocab = textops._bpe_words(spark, SF_SMALL).count()
+    n_vocab = training._bpe_words(spark, SF_SMALL).count()
     assert n_vocab > 8  # fixture sanity: density below forces >1 part
 
     monkeypatch.setattr(queries, "ITER_ROWS_PER_PART", 8)
-    merges_wide, words_wide = textops._bpe_train(spark, SF_SMALL)
+    merges_wide, words_wide = training._bpe_train(spark, SF_SMALL)
     assert words_wide.rdd.getNumPartitions() == _parts_for(n_vocab, 8)
     assert words_wide.rdd.getNumPartitions() > 1
     assert merges_wide == merges_default
@@ -90,13 +90,13 @@ def test_bpe_round_plan_stays_bounded(spark, monkeypatch):
     does NOT grow with the merge count (the old lazy replace-chain
     re-evaluated r stacked replaces at round r — O(R²) total work,
     unusable at realistic merge counts)."""
-    monkeypatch.setattr(textops, "_BPE_MERGES", 4)
-    _, words4 = textops._bpe_train(spark, SF_SMALL)
+    monkeypatch.setattr(training, "_BPE_MERGES", 4)
+    _, words4 = training._bpe_train(spark, SF_SMALL)
     plan4 = words4._jdf.queryExecution().executedPlan().toString()
     release_caches(spark)
 
-    monkeypatch.setattr(textops, "_BPE_MERGES", 12)
-    _, words12 = textops._bpe_train(spark, SF_SMALL)
+    monkeypatch.setattr(training, "_BPE_MERGES", 12)
+    _, words12 = training._bpe_train(spark, SF_SMALL)
     plan12 = words12._jdf.queryExecution().executedPlan().toString()
 
     # a checkpoint scan plan: no replace chain survives into it, and
@@ -118,13 +118,13 @@ def test_lrn_feats_parallelism_derived_from_rows(spark, monkeypatch):
     table's row count (the old coalesce(8) pinned 10 rounds × 2
     shuffles to parallelism 8 at any corpus size), and the trained
     weights are partitioning-invariant (exact fixed-point sums)."""
-    monkeypatch.setattr(textops, "_LRN_ROUNDS", 2)
-    feats_d, _, w_d = textops._lrn_train(spark, SF_SMALL)
+    monkeypatch.setattr(training, "_LRN_ROUNDS", 2)
+    feats_d, _, w_d = training._lrn_train(spark, SF_SMALL)
     w_default = {r["b"]: r["w"] for r in w_d.collect()}
     release_caches(spark)
 
     monkeypatch.setattr(queries, "ITER_ROWS_PER_PART", 1000)
-    feats_w, _, w_w = textops._lrn_train(spark, SF_SMALL)
+    feats_w, _, w_w = training._lrn_train(spark, SF_SMALL)
     n_feats = feats_w.count()
     assert n_feats > 1000
     assert feats_w.rdd.getNumPartitions() == _parts_for(n_feats, 1000)
@@ -324,7 +324,7 @@ def test_written_shards_match_query_order_md5(spark, tmp_path):
     import pyarrow.parquet as pq_
     from pyspark.sql import functions as F
 
-    import readembedability_spark.textops as textops
+    from readembedability_spark.textops import training
 
     pp = job_module("pretrain_prep")
     docs = (
@@ -332,9 +332,9 @@ def test_written_shards_match_query_order_md5(spark, tmp_path):
         .select("doc_id", "text", "lang")
     )
     # mirror the registered query's parameters exactly
-    budget = textops._PACK_SEQ_TOKENS
-    seed = textops._SHUFFLE_SEED
-    n_shards = textops._SHUFFLE_SHARDS
+    budget = training._PACK_SEQ_TOKENS
+    seed = training._SHUFFLE_SEED
+    n_shards = training._SHUFFLE_SHARDS
     toks = docs.select(
         "doc_id", "lang", F.size(F.split("text", " ")).alias("n_tok")
     )
@@ -359,7 +359,7 @@ def test_written_shards_match_query_order_md5(spark, tmp_path):
         r["shard"]: (r["n_seqs"], r["head_md5"], r["key_xor"])
         for r in REGISTRY["q_shuffle_shards"].spark(spark, SF_SMALL).collect()
     }
-    head_n = textops._AUDIT_HEAD
+    head_n = training._AUDIT_HEAD
     seen_shards = set()
     for d in sorted(out.glob("shard=*")):
         shard = int(d.name.split("=")[1])
@@ -522,7 +522,7 @@ def test_crawl_graph_job_composes(spark, tmp_path):
     per page, host authority sums to ~1, the frontier excludes every
     corpus url, and the authority prior joins back onto all pages."""
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _link_pages, _pagerank
+    from readembedability_spark.textops.graph import _link_pages, _pagerank
 
     cg = job_module("crawl_graph")
     pages = _link_pages(spark, SF_SMALL)

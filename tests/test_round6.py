@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from readembedability_spark.queries import REGISTRY
-from readembedability_spark.textops import (
+from readembedability_spark.textops.graph import (
     frontier_counts_from,
     frontier_schedule_from,
     unseen_links_from,
@@ -38,7 +38,7 @@ def test_frontier_schedule_plan_and_cap(spark):
     from collections import Counter
 
     per_host = Counter(r["host"] for r in rows)
-    from readembedability_spark.textops import _SCHEDULE_K
+    from readembedability_spark.textops.graph import _SCHEDULE_K
 
     assert max(per_host.values()) <= _SCHEDULE_K
     # slots are 1..min(K, n_unseen) per host, dense
@@ -77,7 +77,7 @@ def test_crawl_graph_annotate_no_forced_broadcast(spark):
     is host-count-sized (~1e8 rows at web scale) — AQE may still
     broadcast when it measures small, but nothing may override its
     size check."""
-    from readembedability_spark.textops import _link_pages
+    from readembedability_spark.textops.graph import _link_pages
 
     cg = job_module("crawl_graph")
     pages = _link_pages(spark, SF_SMALL)
@@ -238,7 +238,7 @@ def test_corpus_report_sections_compose(spark):
     import math
 
     cr = job_module("corpus_report")
-    from readembedability_spark.textops import filter_funnel_from
+    from readembedability_spark.textops.curation import filter_funnel_from
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet").select(
         "doc_id", "text", "lang"
@@ -323,7 +323,7 @@ def test_crawl_graph_schedule_stage_composes(spark):
     """The job's schedule stage caps per-host slots, scores priority
     as authority x unseen, and gives rank-less hosts priority 0."""
     from readembedability_spark.queries import _persist
-    from readembedability_spark.textops import _link_pages, _pagerank
+    from readembedability_spark.textops.graph import _link_pages, _pagerank
 
     cg = job_module("crawl_graph")
     pages = _link_pages(spark, SF_SMALL)

@@ -11,7 +11,7 @@ import re
 from pyspark.sql import functions as F
 
 from readembedability_spark.queries import REGISTRY, release_caches
-from readembedability_spark.textops import _grouped_cumsum
+from readembedability_spark.textops.training import _grouped_cumsum
 from helpers import (
     SF_SMALL,
     formatted_plan,

@@ -13,10 +13,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from readembedability_spark.queries import REGISTRY
-from readembedability_spark.textops import (
+from readembedability_spark.textops.archive import surt_cdx_from
+from readembedability_spark.textops.training import (
     _cumsum_parts,
     _grouped_cumsum,
-    surt_cdx_from,
 )
 from helpers import (
     SF_MED,
@@ -187,7 +187,7 @@ def test_pagerank_warm_start_converges_to_cold_fixpoint(spark):
     ranks — the affine contraction must land both at the SAME
     fixpoint, which is the correctness claim behind shipping only
     _PR_INC_ITERS incremental rounds per batch."""
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.graph import (
         _pagerank_loop,
         _rule_edges,
     )
@@ -424,7 +424,7 @@ def test_km_train_matches_oracle_with_zero_vector(spark, planted_emb):
     round: a zero vector (NULL cosine to every centroid) falls in the
     lowest cell id, as the oracle's NULLS LAST window puts it, instead
     of dropping out of every cell's mean."""
-    from readembedability_spark.textops import (
+    from readembedability_spark.textops.ann import (
         _KM_K,
         _KM_ROUNDS,
         _km_rounds_sql,
@@ -462,10 +462,8 @@ def test_admission_marginal_consistent_with_funnel(spark):
     bounds its unique count; and relaxing one gate re-admits exactly
     n_unique docs (recomputed independently from the flags table)."""
     from readembedability_spark.queries import release_caches
-    from readembedability_spark.textops import (
-        REGISTRY,
-        admission_flags_from,
-    )
+    from readembedability_spark.queries import REGISTRY
+    from readembedability_spark.textops.curation import admission_flags_from
 
     s = spark_rows(spark, SF_SMALL, "q_admission_marginal")
     assert s == oracle_rows(SF_SMALL, "q_admission_marginal")
@@ -1193,7 +1191,7 @@ def test_search_index_job_composes(spark, tmp_path, monkeypatch, capsys):
         pa_.Table.from_pandas(pdf, preserve_index=False),
         str(docs_dir / "documents.parquet"),
     )
-    from readembedability_spark.textops import _bm25_top5
+    from readembedability_spark.textops.search import _bm25_top5
 
     served = {
         (r["qid"], r["rk"]): (r["doc_id"], r["score_micro"])
@@ -2428,7 +2426,7 @@ def test_compliance_run_job_composes(spark, tmp_path, monkeypatch, capsys):
     assert stats["hosts"] == 25
     v = spark.read.parquet(str(out / "verdicts"))
     # written verdicts == independent recompute via the shared core
-    from readembedability_spark.textops import robots_verdicts_from
+    from readembedability_spark.textops.robots import robots_verdicts_from
 
     log = cj.synth_fetch_log(spark, 600)
     exp = {
@@ -3111,7 +3109,7 @@ def test_robots_pattern_to_regex():
     """The RFC 9309 translation is the single source the wildcard
     gate AND its oracle embed: '*' spans octets, trailing '$'
     anchors, dots are literal."""
-    from readembedability_spark.textops import robots_pattern_to_regex
+    from readembedability_spark.textops.robots import robots_pattern_to_regex
 
     assert robots_pattern_to_regex("/private/*.html") == \
         r"^/private/.*\.html"

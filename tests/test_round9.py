@@ -21,7 +21,8 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-import readembedability_spark.textops as textops
+from readembedability_spark.queries import REGISTRY
+from readembedability_spark.textops import dedup
 from helpers import planted_con, uf_labels, write_docs
 
 
@@ -32,25 +33,25 @@ def test_minhash_long_min_equals_string_min(spark):
         [(i, " ".join(f"w{i}x{j}" for j in range(12))) for i in range(30)],
         "doc_id long, text string",
     )
-    shingles = textops._shingles_from(docs)
-    fast = textops._lsh_bands(textops._minhash_minima(shingles))
+    shingles = dedup._shingles_from(docs)
+    fast = dedup._lsh_bands(dedup._minhash_minima(shingles))
     hashed = shingles.select(
         "doc_id", F.md5(F.encode("sh", "UTF-8")).alias("h")
     )
     naive = hashed.groupBy("doc_id").agg(
         *[
             F.min(F.substring("h", i * 4 + 1, 4)).alias(f"mh{i}")
-            for i in range(textops._N_MINHASH)
+            for i in range(dedup._N_MINHASH)
         ]
     )
-    rows = textops._N_MINHASH // textops._N_BANDS
+    rows = dedup._N_MINHASH // dedup._N_BANDS
     expected = {
         (r["doc_id"], b, ",".join(r[f"mh{b * rows + j}"] for j in range(rows)))
         for r in naive.collect()
-        for b in range(textops._N_BANDS)
+        for b in range(dedup._N_BANDS)
     }
     got = {tuple(r) for r in fast.select("doc_id", "band", "band_sig").collect()}
-    assert len(got) == 30 * textops._N_BANDS
+    assert len(got) == 30 * dedup._N_BANDS
     assert got == expected
 
 
@@ -59,7 +60,7 @@ def test_lsh_candidates_lean_equals_profile(spark):
     _lsh_candidates the same minima, so the capped pair sets are equal
     — including a bucket larger than _MAX_BUCKET_IDS (head pairs plus
     star pairs to the bucket minimum)."""
-    cap = textops._MAX_BUCKET_IDS
+    cap = dedup._MAX_BUCKET_IDS
     n_dup = cap + 6
     base = [f"tok{j}" for j in range(24)]
     texts = [(i, " ".join(["same"] + base)) for i in range(n_dup)]
@@ -71,13 +72,13 @@ def test_lsh_candidates_lean_equals_profile(spark):
     texts += [(2000 + i, " ".join(f"u{i}v{j}" for j in range(15)))
               for i in range(20)]
     docs = spark.createDataFrame(texts, "doc_id long, text string")
-    shingles = textops._shingles_from(docs)
+    shingles = dedup._shingles_from(docs)
 
     def pairs(df):
         return {(r["a"], r["b"]) for r in df.collect()}
 
-    lean = pairs(textops._lsh_candidates(textops._minhash_minima(shingles)))
-    prof = pairs(textops._lsh_candidates(textops._doc_profiles_from(shingles)))
+    lean = pairs(dedup._lsh_candidates(dedup._minhash_minima(shingles)))
+    prof = pairs(dedup._lsh_candidates(dedup._doc_profiles_from(shingles)))
     assert lean == prof
     head = [(a, b) for a in range(cap) for b in range(a + 1, cap)]
     star = [(0, t) for t in range(cap, n_dup)]
@@ -101,7 +102,7 @@ def test_cc_star_forest_convergence_exact(spark, edges):
     df = spark.createDataFrame(edges, "a long, b long")
     got = {
         r["node"]: r["label"]
-        for r in textops._connected_components(spark, df).collect()
+        for r in dedup._connected_components(spark, df).collect()
     }
     assert got == uf_labels(edges)
 
@@ -117,8 +118,8 @@ def test_cdc_chunks_degenerate_docs(spark, tmp_path):
         (7, "x " * 40),  # long enough to plant boundaries
     ]
     write_docs(tmp_path, [(i, t, "en", "s0", len(t)) for i, t in docs])
-    sdf = textops.REGISTRY["q_cdc_chunks"].spark(spark, str(tmp_path))
-    sql = textops.REGISTRY["q_cdc_chunks"].sql
+    sdf = REGISTRY["q_cdc_chunks"].spark(spark, str(tmp_path))
+    sql = REGISTRY["q_cdc_chunks"].sql
     oracle = planted_con(tmp_path).execute(sql).fetchall()
 
     def canon(rows):
@@ -138,8 +139,8 @@ def test_pair_intersections_match_join_form(spark):
     docs = spark.createDataFrame(
         list(texts.items()), "doc_id long, text string"
     )
-    shingles = textops._shingles_from(docs)
-    got = textops._pair_intersections(textops._doc_profiles_from(shingles))
+    shingles = dedup._shingles_from(docs)
+    got = dedup._pair_intersections(dedup._doc_profiles_from(shingles))
     rows = {(r["a"], r["b"]): (r["i"], r["sza"], r["szb"]) for r in got.collect()}
     sh = {
         d: {

@@ -1,22 +1,30 @@
-"""Each shared rule has one Spark-side site.
+"""Each shared rule has one Spark-side site, and each module stays
+small enough to read.
 
 The registry, the batch jobs and the stream call one core per rule
-(text_signals.py, functions/, the stream's ledger core, textops'
-politeness verdict, census tail, media, BM25, postings-gap and CDX
-cores, and the cores sibling queries share). This counts the lines of
-``readembedability_spark/`` and ``jobs/`` that spell each rule out, so a
-restated copy fails here instead of drifting from the core. The DuckDB
-oracle texts are SQL and match none of these patterns.
+(text_signals.py, functions/, the stream's ledger core, the textops
+families' politeness verdict, census tail, media, BM25, postings-gap
+and CDX cores, and the cores sibling queries share). This counts the
+lines of ``readembedability_spark/`` and ``jobs/`` that spell each rule
+out, so a restated copy fails here instead of drifting from the core.
+The DuckDB oracle texts are SQL and match none of these patterns.
+
+No module there is over MAX_MODULE_LINES raw lines, and the textops
+package's ``__init__`` only imports its family modules, so each name
+has one home to import and to monkeypatch.
 """
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
 import pytest
 
 REPO = Path(__file__).resolve().parent.parent
+SOURCE_ROOTS = ("readembedability_spark", "jobs")
+MAX_MODULE_LINES = 4000
 
 #: rule -> (regex over one source line, number of lines allowed)
 RULES = {
@@ -37,12 +45,13 @@ RULES = {
     # own wiring (no timestamp order or late rule to share)
     "ledger_batch": (r"pd\.concat\(list\(pdfs\)", 1),
     "ledger_wiring": (r"applyInPandasWithState\(", 3),
-    # textops.py
+    # textops/dedup.py, robots.py and audits.py
     "jaccard": (r'F\.col\("sza"\) \+ F\.col\("szb"\)', 1),
     "politeness_verdict": (r'"rude"', 1),
     "class_census": (r'"_num DIV _tot"', 1),
-    # textops' media, BM25, postings-gap and CDX cores, which the media,
-    # search and archive jobs call
+    # the media, BM25, postings-gap and CDX cores of textops/media.py,
+    # search.py and archive.py, which the media, search and archive
+    # jobs call
     "image_thumbs": (r'F\.col\("thumb_w"\)\.cast\("string"\), F\.lit\("x"\)', 1),
     "video_frames": (r'"frame_idx \* 1000000 DIV 24"', 1),
     "audio_chunks": (r'"doc_id long, n_samples long, chunk_idx long,"', 1),
@@ -66,11 +75,15 @@ RULES = {
 }
 
 
+def _source_files():
+    for root in SOURCE_ROOTS:
+        yield from sorted((REPO / root).rglob("*.py"))
+
+
 def _source_lines():
-    for root in ("readembedability_spark", "jobs"):
-        for path in sorted((REPO / root).rglob("*.py")):
-            for i, line in enumerate(path.read_text().splitlines(), 1):
-                yield f"{path.relative_to(REPO)}:{i}", line
+    for path in _source_files():
+        for i, line in enumerate(path.read_text().splitlines(), 1):
+            yield f"{path.relative_to(REPO)}:{i}", line
 
 
 @pytest.mark.parametrize("rule", sorted(RULES))
@@ -79,3 +92,21 @@ def test_rule_written_once(rule):
     rx = re.compile(pattern)
     sites = [where for where, line in _source_lines() if rx.search(line)]
     assert len(sites) == allowed, sites
+
+
+def test_no_module_over_max_lines():
+    sizes = {
+        str(path.relative_to(REPO)): len(path.read_text().splitlines())
+        for path in _source_files()
+    }
+    over = {p: n for p, n in sizes.items() if n > MAX_MODULE_LINES}
+    assert not over, over
+
+
+def test_textops_init_only_imports_families():
+    init = REPO / "readembedability_spark" / "textops" / "__init__.py"
+    doc, *rest = ast.parse(init.read_text()).body
+    assert isinstance(doc, ast.Expr) and isinstance(doc.value.value, str)
+    assert rest and all(
+        isinstance(node, (ast.Import, ast.ImportFrom)) for node in rest
+    )

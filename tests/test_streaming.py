@@ -329,7 +329,7 @@ def test_streaming_surt_index_matches_batch(spark, stream_dirs):
             F.max(F.col("versions_saturated").cast("int")).alias("sat"),
         )
     )
-    from readembedability_spark.textops import surt_key_expr
+    from readembedability_spark.textops.archive import surt_key_expr
 
     expected = (
         spark.read.parquet(str(in_dir))

@@ -10,7 +10,7 @@ import re
 
 import pytest
 
-from readembedability_spark.textops import (  # noqa: F401 - registers
+from readembedability_spark.textops.dedup import (  # noqa: F401 - registers
     _MAX_BUCKET_IDS,
     _MINHASH_CAND_SQL,
 )
