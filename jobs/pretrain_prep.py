@@ -116,7 +116,7 @@ def dedup_lines_global(spark, docs):
 
 
 def near_dup_keep_best(spark, docs):
-    """Stage 4 — MinHash-LSH near-dup clustering (textops.
+    """Stage 4 — MinHash-LSH near-dup clustering (textops.curation.
     near_dup_reps_from) with the BEST-QUALITY keeper per cluster:
     longest cleaned doc, doc_id tie-break. q_dedup_clusters_best ranks
     by the stored n_chars over edge nodes only; the job ranks the
