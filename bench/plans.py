@@ -10,8 +10,10 @@ Normalizing strips what differs between two runs of one commit on the
 same data: expression ids (``#12``), lambda-variable suffixes
 (``x_3``), adaptive query-stage and plan ids, and WholeStageCodegen
 ids; and it sorts the attribute order of a distinct aggregate's
-``Expand`` (columns, projections, grouping ids and the key lists that
-carry ``gid``), which the planner does not fix. What stays unstable is
+``Expand`` (columns, projections and the key lists that carry
+``gid``), which the planner does not fix. Each Expand projection's
+grouping-id literal is read as ``?``: the planner numbers the distinct
+groups of one aggregate differently between plannings. What stays unstable is
 a runtime choice of adaptive execution: which join becomes a broadcast,
 or on which side of a join an exchange lands, can depend on which query
 stage finishes first, so compare such a query by its optimized digest
@@ -74,8 +76,8 @@ def _top_level(s: str) -> list[str]:
 
 def _sort_expands(line: str) -> str:
     """An ``Expand`` with its columns ordered by output attribute and
-    its projections sorted (each one's trailing grouping id read as
-    ``?``)."""
+    its projections sorted (each one's trailing cell and its cell under
+    the grouping id ``gid`` read as ``?``)."""
     m = _EXPAND.search(line)
     if not m:
         return line
@@ -89,6 +91,7 @@ def _sort_expands(line: str) -> str:
     for r in _top_level(line[start + 1 : end - 1]):
         cells = _top_level(r[1:-1])
         cells[-1] = "?"
+        cells = ["?" if o == "gid" else c for c, o in zip(cells, outs)]
         rows.append("[" + ", ".join(cells[i] for i in order) + "]")
     rows.sort()
     return (

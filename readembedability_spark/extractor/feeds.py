@@ -30,12 +30,8 @@ seed discovery.
 
 from __future__ import annotations
 
-from urllib.parse import urljoin
+from readembedability_spark.extractor.links import resolve_url
 
-from readembedability_spark.extractor.links import (
-    _ALLOWED_PREFIXES,
-    _strip_fragment,
-)
 
 def extract_feeds(pm, page_url: str) -> list[str]:
     """Ordered, absolutized, deduped feed urls (rules F-1..F-5) from
@@ -46,14 +42,8 @@ def extract_feeds(pm, page_url: str) -> list[str]:
         href = href.strip()  # F-2
         if not href:
             continue
-        try:
-            resolved = _strip_fragment(urljoin(page_url, href))  # F-3/F-5
-        except ValueError:
-            continue
-        colon = resolved.find(":")
-        if colon > 0:  # F-4: lowercase the scheme before matching
-            resolved = resolved[:colon].lower() + resolved[colon:]
-        if not resolved.startswith(_ALLOWED_PREFIXES) or resolved in seen:
+        resolved = resolve_url(page_url, href)  # F-3..F-5
+        if resolved is None or resolved in seen:
             continue
         seen.add(resolved)
         out.append(resolved)

@@ -60,6 +60,22 @@ def _strip_fragment(url: str) -> str:
     return url if i < 0 else url[:i]
 
 
+def resolve_url(base: str, href: str) -> str | None:
+    """``href`` resolved against ``base`` with its fragment removed and
+    its scheme lowercased (L-3..L-5, F-3..F-5), or None when urljoin
+    rejects it or the scheme is not http/https."""
+    try:
+        resolved = _strip_fragment(urljoin(base, href))
+    except ValueError:
+        return None
+    # scheme match is case-insensitive; canonical output lowercases
+    # the scheme (RFC 3986 §6.2.2.1)
+    colon = resolved.find(":")
+    if colon > 0:
+        resolved = resolved[:colon].lower() + resolved[colon:]
+    return resolved if resolved.startswith(_ALLOWED_PREFIXES) else None
+
+
 def extract_anchors(
     root: Element, page_url: str
 ) -> list[tuple[str, str, bool]]:
@@ -86,16 +102,8 @@ def extract_anchors(
         href = (el.get("href") or "").strip()
         if not href or href.startswith("#"):
             continue
-        try:
-            resolved = _strip_fragment(urljoin(base, href))
-        except ValueError:
-            continue
-        # scheme match is case-insensitive; canonical output lowercases
-        # the scheme (RFC 3986 §6.2.2.1)
-        colon = resolved.find(":")
-        if colon > 0:
-            resolved = resolved[:colon].lower() + resolved[colon:]
-        if not resolved.startswith(_ALLOWED_PREFIXES) or resolved in seen:
+        resolved = resolve_url(base, href)
+        if resolved is None or resolved in seen:
             continue
         seen.add(resolved)
         rel_tokens = (el.get("rel") or "").lower().split()

@@ -264,6 +264,18 @@ def q_filter_lang(spark, sf_dir):
 _URL_EXPR_SQL = "'https://host' || CAST(o_custkey % 50 AS VARCHAR) || '.example.com/orders/' || CAST(o_orderkey AS VARCHAR)"
 
 
+def _order_urls(spark, sf_dir):
+    """(url) of every order, the url _URL_EXPR_SQL synthesizes."""
+    return _t(spark, sf_dir, "orders").select(
+        F.concat(
+            F.lit("https://host"),
+            (F.col("o_custkey") % 50).cast("string"),
+            F.lit(".example.com/orders/"),
+            F.col("o_orderkey").cast("string"),
+        ).alias("url")
+    )
+
+
 @q(
     f"""
     WITH urls AS (SELECT {_URL_EXPR_SQL} AS url FROM orders)
@@ -273,14 +285,7 @@ _URL_EXPR_SQL = "'https://host' || CAST(o_custkey % 50 AS VARCHAR) || '.example.
     """,
 )
 def q_project_host(spark, sf_dir):
-    urls = _t(spark, sf_dir, "orders").select(
-        F.concat(
-            F.lit("https://host"),
-            (F.col("o_custkey") % 50).cast("string"),
-            F.lit(".example.com/orders/"),
-            F.col("o_orderkey").cast("string"),
-        ).alias("url")
-    )
+    urls = _order_urls(spark, sf_dir)
     return urls.select(
         F.regexp_extract("url", r"^https?://([^/]+)", 1).alias("host")
     ).groupBy("host").agg(F.count("*").alias("n"))
@@ -645,6 +650,20 @@ def q_json_props(spark, sf_dir):
 # O-10/O-11: anti/semi joins (resume pattern on harness tables)
 # ---------------------------------------------------------------------------
 
+def _resume_join(spark, sf_dir, how):
+    """Events keyed by bucket = user_id % 25, joined (``how``) to the
+    broadcast done buckets: the nation keys of region 0."""
+    events = _t(spark, sf_dir, "events").withColumn(
+        "bucket", (F.col("user_id") % 25)
+    )
+    done = (
+        _t(spark, sf_dir, "nation")
+        .filter(F.col("n_regionkey") == 0)
+        .select(F.col("n_nationkey").alias("bucket"))
+    )
+    return events.join(F.broadcast(done), on="bucket", how=how)
+
+
 @q(
     """
     SELECT user_id, COUNT(*) AS n_pending
@@ -656,16 +675,8 @@ def q_json_props(spark, sf_dir):
     """,
 )
 def q_resume_anti(spark, sf_dir):
-    events = _t(spark, sf_dir, "events").withColumn(
-        "bucket", (F.col("user_id") % 25)
-    )
-    done = (
-        _t(spark, sf_dir, "nation")
-        .filter(F.col("n_regionkey") == 0)
-        .select(F.col("n_nationkey").alias("bucket"))
-    )
     return (
-        events.join(F.broadcast(done), on="bucket", how="left_anti")
+        _resume_join(spark, sf_dir, "left_anti")
         .groupBy("user_id")
         .agg(F.count("*").alias("n_pending"))
     )
@@ -682,16 +693,8 @@ def q_resume_anti(spark, sf_dir):
     """,
 )
 def q_resume_semi(spark, sf_dir):
-    events = _t(spark, sf_dir, "events").withColumn(
-        "bucket", (F.col("user_id") % 25)
-    )
-    done = (
-        _t(spark, sf_dir, "nation")
-        .filter(F.col("n_regionkey") == 0)
-        .select(F.col("n_nationkey").alias("bucket"))
-    )
     return (
-        events.join(F.broadcast(done), on="bucket", how="left_semi")
+        _resume_join(spark, sf_dir, "left_semi")
         .groupBy("user_id")
         .agg(F.count("*").alias("n_done"))
     )
@@ -800,14 +803,7 @@ def q_join_asof(spark, sf_dir):
 def q_udf_host(spark, sf_dir):
     from readembedability_spark.functions.pandas_udfs import host_of
 
-    urls = _t(spark, sf_dir, "orders").select(
-        F.concat(
-            F.lit("https://host"),
-            (F.col("o_custkey") % 50).cast("string"),
-            F.lit(".example.com/orders/"),
-            F.col("o_orderkey").cast("string"),
-        ).alias("url")
-    )
+    urls = _order_urls(spark, sf_dir)
     return urls.select(host_of("url").alias("host")).groupBy("host").agg(
         F.count("*").alias("n")
     )

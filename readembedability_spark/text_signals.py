@@ -13,8 +13,9 @@ the streaming ingest call these instead of restating them:
 - ``head_split_join``: the Zipf-head skew split of a token-count join;
 - ``word_ngrams``: the sliding word n-grams of a token array.
 
-The DuckDB oracle texts keep their own SQL copy of each rule next to
-their queries; the oracle parity tests hold the two sides together.
+The DuckDB oracle texts keep their own SQL copy of each rule, one
+fragment per rule in the textops family that uses it; the oracle
+parity tests hold the two sides together.
 Nothing here registers a query.
 """
 

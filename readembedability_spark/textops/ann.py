@@ -31,6 +31,7 @@ from readembedability_spark.queries import (
 from readembedability_spark.textops.dedup import (
     _MAX_BUCKET_IDS,
     _capped_bucket_pairs,
+    _cc_reps_sql,
     _connected_components,
 )
 
@@ -341,9 +342,10 @@ def _emb_bands_df(spark, sf_dir):
     )
 
 
-@q(
-    f"""
-    WITH {_EMB_BANDS_SQL},
+#: the probe vectors' band-sharing candidates `cand(qid, cid)` and
+#: their exact cosine `sims(qid, cid, sim)`, the oracle side of the
+#: banded candidate rerank (q_ann_bucketed, q_hard_negatives).
+_EMB_BAND_SIMS_SQL = f"""{_EMB_BANDS_SQL},
     cand AS (
       SELECT DISTINCT q.vec_id AS qid, t.vec_id AS cid
       FROM ebands q JOIN ebands t
@@ -358,7 +360,12 @@ def _emb_bands_df(spark, sf_dir):
              list_dot_product(cq.e, ct.e) / (cq.nrm * ct.nrm) AS sim
       FROM cand
       JOIN c cq ON cq.vec_id = qid
-      JOIN c ct ON ct.vec_id = cid)
+      JOIN c ct ON ct.vec_id = cid)"""
+
+
+@q(
+    f"""
+    WITH {_EMB_BAND_SIMS_SQL}
     SELECT qid, cid, ROUND(sim, 4) AS sim FROM (
       SELECT qid, cid, sim,
              ROW_NUMBER() OVER (PARTITION BY qid
@@ -471,12 +478,7 @@ def _emb_near_dups(pairs):
 @q(
     f"""
     WITH RECURSIVE {_EMB_VPAIRS_SQL},
-    edges AS (SELECT a, b FROM epairs UNION SELECT b, a FROM epairs),
-    walk(node, reach) AS (
-      SELECT a AS node, a AS reach FROM edges
-      UNION
-      SELECT w.node, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a),
-    creps AS (SELECT node, MIN(reach) AS rep FROM walk GROUP BY node)
+    {_cc_reps_sql("epairs", "creps")}
     SELECT node AS vec_id, rep,
            CAST(COUNT(*) OVER (PARTITION BY rep) AS BIGINT)
              AS component_size
@@ -596,9 +598,11 @@ def _km_rounds_sql() -> str:
     return _unroll(_KM_ROUND_SQL, _KM_ROUNDS, cos_vc=cos_vc)
 
 
-@q(
-    f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+def _km_cells_sql(nprobe: int) -> str:
+    """Oracle side of _km_train/_km_assign: the trained k-means cell
+    `fcells(vec_id, cell)` of every vector and the `nprobe` nearest
+    cells `qa(qid, cell)` of each probe vector `qv(qid, qe)`."""
+    return f"""e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                FROM embeddings),
     c0 AS (SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {_KM_K}),
     {_km_rounds_sql()},
@@ -616,7 +620,12 @@ def _km_rounds_sql() -> str:
                ROW_NUMBER() OVER (PARTITION BY qv.qid ORDER BY
                  ROUND({_IVF_COS.format(a='qv.qe', b='cp.c')}, 6) DESC,
                  cp.cid) AS rn
-        FROM qv CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn <= {_KM_NPROBE}),
+        FROM qv CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn <= {nprobe})"""
+
+
+@q(
+    f"""
+    WITH {_km_cells_sql(_KM_NPROBE)},
     cands AS (
       SELECT qa.qid, f.vec_id AS cid
       FROM qa JOIN fcells f ON f.cell = qa.cell
@@ -834,6 +843,24 @@ def _adc_shortlist(sub, codebook, coded, size: int):
     return _top_k(scored, size, "score").select("qid", "cid")
 
 
+#: the exact-cosine rerank of a `short(qid, cand)` shortlist and its
+#: top 3 per probe, the oracle side of the PQ rerank (q_ann_pq,
+#: q_ann_ivf_pq).
+_PQ_EXACT_TOP3_SQL = """exact AS (
+      SELECT short.qid, short.cand AS cid,
+             list_dot_product(eq.v, ec.v)
+               / (sqrt(list_dot_product(eq.v, eq.v))
+                  * sqrt(list_dot_product(ec.v, ec.v))) AS sim
+      FROM short
+      JOIN e eq ON eq.vec_id = short.qid
+      JOIN e ec ON ec.vec_id = short.cand)
+    SELECT qid, cid, ROUND(sim, 4) AS sim FROM (
+      SELECT qid, cid, sim,
+             ROW_NUMBER() OVER (PARTITION BY qid
+                                ORDER BY ROUND(sim, 6) DESC, cid) AS rn
+      FROM exact) WHERE rn <= 3"""
+
+
 @q(
     f"""
     WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
@@ -881,19 +908,7 @@ def _adc_shortlist(sub, codebook, coded, size: int):
                ROW_NUMBER() OVER (PARTITION BY qid
                                   ORDER BY ROUND(score, 6) DESC, cand) AS rn
         FROM scored WHERE cand <> qid) WHERE rn <= {{L}}),
-    exact AS (
-      SELECT short.qid, short.cand AS cid,
-             list_dot_product(eq.v, ec.v)
-               / (sqrt(list_dot_product(eq.v, eq.v))
-                  * sqrt(list_dot_product(ec.v, ec.v))) AS sim
-      FROM short
-      JOIN e eq ON eq.vec_id = short.qid
-      JOIN e ec ON ec.vec_id = short.cand)
-    SELECT qid, cid, ROUND(sim, 4) AS sim FROM (
-      SELECT qid, cid, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY ROUND(sim, 6) DESC, cid) AS rn
-      FROM exact) WHERE rn <= 3
+    {_PQ_EXACT_TOP3_SQL}
     """.replace("{L}", "50"),
 )
 def q_ann_pq(spark, sf_dir):
@@ -926,25 +941,7 @@ _IVFPQ_SHORTLIST = 30
 
 @q(
     f"""
-    WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-               FROM embeddings),
-    c0 AS (SELECT vec_id AS cid, v AS c FROM e WHERE vec_id < {_KM_K}),
-    {_km_rounds_sql()},
-    fcells AS (
-      SELECT vec_id, cell FROM (
-        SELECT e.vec_id, cp.cid AS cell,
-               ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-                 ROUND({_IVF_COS.format(a='e.v', b='cp.c')}, 6) DESC,
-                 cp.cid) AS rn
-        FROM e CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn = 1),
-    qv AS (SELECT vec_id AS qid, v AS qe FROM e WHERE vec_id < 10),
-    qa AS (
-      SELECT qid, cell FROM (
-        SELECT qv.qid, cp.cid AS cell,
-               ROW_NUMBER() OVER (PARTITION BY qv.qid ORDER BY
-                 ROUND({_IVF_COS.format(a='qv.qe', b='cp.c')}, 6) DESC,
-                 cp.cid) AS rn
-        FROM qv CROSS JOIN c{_KM_ROUNDS} cp) WHERE rn <= {_IVFPQ_NPROBE}),
+    WITH {_km_cells_sql(_IVFPQ_NPROBE)},
     sub AS (
       SELECT vec_id, s,
              list_slice(v, s * {_PQ_SUBDIM} + 1,
@@ -995,19 +992,7 @@ _IVFPQ_SHORTLIST = 30
                ROW_NUMBER() OVER (PARTITION BY qid
                                   ORDER BY ROUND(score, 6) DESC, cand) AS rn
         FROM scored) WHERE rn <= {_IVFPQ_SHORTLIST}),
-    exact AS (
-      SELECT short.qid, short.cand AS cid,
-             list_dot_product(eq.v, ec.v)
-               / (sqrt(list_dot_product(eq.v, eq.v))
-                  * sqrt(list_dot_product(ec.v, ec.v))) AS sim
-      FROM short
-      JOIN e eq ON eq.vec_id = short.qid
-      JOIN e ec ON ec.vec_id = short.cand)
-    SELECT qid, cid, ROUND(sim, 4) AS sim FROM (
-      SELECT qid, cid, sim,
-             ROW_NUMBER() OVER (PARTITION BY qid
-                                ORDER BY ROUND(sim, 6) DESC, cid) AS rn
-      FROM exact) WHERE rn <= 3
+    {_PQ_EXACT_TOP3_SQL}
     """,
 )
 def q_ann_ivf_pq(spark, sf_dir):
@@ -1176,22 +1161,7 @@ def q_dedup_embedding(spark, sf_dir):
 
 @q(
     f"""
-    WITH {_EMB_BANDS_SQL},
-    cand AS (
-      SELECT DISTINCT q.vec_id AS qid, t.vec_id AS cid
-      FROM ebands q JOIN ebands t
-        ON q.band = t.band AND q.bsig = t.bsig AND q.vec_id <> t.vec_id
-      WHERE q.vec_id < 10),
-    c AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e,
-                 sqrt(list_dot_product(CAST(embedding AS DOUBLE[]),
-                                       CAST(embedding AS DOUBLE[]))) AS nrm
-          FROM embeddings),
-    sims AS (
-      SELECT qid, cid,
-             list_dot_product(cq.e, ct.e) / (cq.nrm * ct.nrm) AS sim
-      FROM cand
-      JOIN c cq ON cq.vec_id = qid
-      JOIN c ct ON ct.vec_id = cid)
+    WITH {_EMB_BAND_SIMS_SQL}
     SELECT qid, cid, ROUND(sim, 4) AS sim FROM (
       SELECT qid, cid, sim,
              ROW_NUMBER() OVER (PARTITION BY qid

@@ -29,7 +29,9 @@ from readembedability_spark.text_signals import (
 )
 from readembedability_spark.textops.dedup import (
     _ML_TEXT_SQL,
+    _WORD_TOKS_SQL,
     _WORDS_SQL,
+    _cc_reps_sql,
     _connected_components,
     _ml_text_col,
     _shingles_from,
@@ -37,6 +39,7 @@ from readembedability_spark.textops.dedup import (
     _verified_pairs_sql,
     _words_df,
 )
+from readembedability_spark.textops.training import _GOPHER_LAB_SQL
 
 
 @q(
@@ -337,12 +340,7 @@ def q_curation_pipeline(spark, sf_dir):
         AND length(regexp_replace(text, '[^a-zA-Z]', '', 'g')) * 1.0
               / NULLIF(length(text), 0) >= 0.6),
     {_verified_pairs_sql("gated")},
-    edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
-    walk(node, reach) AS (
-      SELECT a AS node, a AS reach FROM edges
-      UNION
-      SELECT w.node, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a),
-    creps AS (SELECT node, MIN(reach) AS rep FROM walk GROUP BY node),
+    {_cc_reps_sql("vpairs", "creps")},
     labeled AS (
       SELECT g.doc_id, g.lang, g.n_tokens,
              COALESCE(r.rep, g.doc_id) AS rep
@@ -379,18 +377,11 @@ def q_curation_pipeline_lsh(spark, sf_dir):
     )
 
 
-@q(
-    """
-    WITH toks AS MATERIALIZED (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
-    lab AS (
-      SELECT doc_id, n_tok,
-             CAST(mwl BETWEEN 3 AND 10
-                  AND n_tok BETWEEN 50 AND 100000 AS INT) AS y
-      FROM (SELECT doc_id, COUNT(*) AS n_tok, AVG(length(w)) AS mwl
-            FROM toks GROUP BY doc_id)),
+#: the DSIR log-ratio chain over a `toks(doc_id, w)` CTE: Gopher labels,
+#: hashed-bucket counts and the quantized per-bucket target/raw
+#: log-ratio `ratio(b, lrq)`, the oracle side of dsir_weights_from.
+_DSIR_RATIO_SQL = f"""lab AS (
+      {_GOPHER_LAB_SQL}),
     bc AS MATERIALIZED (
       SELECT doc_id, substr(md5(w), 1, 2) AS b, COUNT(*) AS c
       FROM toks GROUP BY doc_id, b),
@@ -407,7 +398,14 @@ def q_curation_pipeline_lsh(spark, sf_dir):
                          - ln((raw.cr + 1) * 1.0 / (totr.t + 256)))
                         * 1000000.0) AS BIGINT) AS lrq
       FROM raw LEFT JOIN tgt ON tgt.b = raw.b
-      CROSS JOIN totr CROSS JOIN tott),
+      CROSS JOIN totr CROSS JOIN tott)"""
+
+
+@q(
+    f"""
+    WITH toks AS MATERIALIZED (
+      {_WORD_TOKS_SQL}),
+    {_DSIR_RATIO_SQL},
     sc AS (
       SELECT bc.doc_id,
              CAST(SUM(bc.c * ratio.lrq) AS BIGINT) AS score_micro
@@ -894,9 +892,7 @@ _BADWORDS_SQL = ", ".join(f"'{w}'" for w in _BADWORDS)
 @q(
     f"""
     WITH toks AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> '')
+      {_WORD_TOKS_SQL})
     SELECT doc_id,
            CAST(COUNT(*) AS BIGINT) AS n_tokens,
            CAST(SUM(CASE WHEN w IN ({_BADWORDS_SQL}) THEN 1 ELSE 0 END)
@@ -927,12 +923,20 @@ def q_badwords_filter(spark, sf_dir):
     )
 
 
+#: the oracle side of _stage_funnel: the per-stage rollup of a
+#: `staged(doc_id, n_tokens, stage)` CTE.
+_STAGE_FUNNEL_SQL = """total AS (SELECT COUNT(*) AS n FROM staged)
+    SELECT stage,
+           CAST(COUNT(*) AS BIGINT) AS n_docs,
+           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
+           ROUND(COUNT(*) * 1.0 / MAX(total.n), 6) AS frac
+    FROM staged CROSS JOIN total GROUP BY stage"""
+
+
 @q(
     f"""
     WITH toks AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+      {_WORD_TOKS_SQL}),
     tstats AS (
       SELECT doc_id, COUNT(*) AS n_tokens, AVG(length(w)) AS mean_wl,
              SUM(CASE WHEN w IN ({_BADWORDS_SQL}) THEN 1 ELSE 0 END)
@@ -957,12 +961,7 @@ def q_badwords_filter(spark, sf_dir):
                ELSE '5_kept'
              END AS stage
       FROM cstats c LEFT JOIN tstats t USING (doc_id)),
-    total AS (SELECT COUNT(*) AS n FROM staged)
-    SELECT stage,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           ROUND(COUNT(*) * 1.0 / MAX(total.n), 6) AS frac
-    FROM staged CROSS JOIN total GROUP BY stage
+    {_STAGE_FUNNEL_SQL}
     """,
 )
 def q_filter_funnel(spark, sf_dir):
@@ -1137,16 +1136,21 @@ def q_paragraph_quality(spark, sf_dir):
     )
 
 
-@q(
-    """
-    WITH perdoc AS (
-      SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com' AS host,
-             CAST(ROUND((LEAST(1.0, len(string_split(text, ' ')) / 100.0)
+#: the per-doc quality blend in micro units, the oracle side of
+#: text_signals.quality_blend as q_host_quality_prior rounds it.
+_QUALITY_MICRO_SQL = """CAST(ROUND((LEAST(1.0, len(string_split(text, ' ')) / 100.0)
                           * 0.5
                          + COALESCE(
                              length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
                                * 1.0 / NULLIF(length(text), 0), 0.0) * 0.5)
-                        * 1000000.0) AS BIGINT) AS q_micro
+                        * 1000000.0) AS BIGINT)"""
+
+
+@q(
+    f"""
+    WITH perdoc AS (
+      SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com' AS host,
+             {_QUALITY_MICRO_SQL} AS q_micro
       FROM documents),
     per_host AS (
       SELECT host, COUNT(*) AS n_docs,
@@ -1300,8 +1304,25 @@ def q_host_lang_entropy(spark, sf_dir):
     )
 
 
+#: the per-language tercile bounds `bounds(lang, t1_cb, t2_cb)` of a
+#: `cbd(doc_id, lang, cb)` bucket CTE, the oracle side of the CCNet
+#: buckets q_ccnet_buckets and the admission flags share.
+_CCNET_BOUNDS_SQL = """hist AS (SELECT lang, cb, COUNT(*) AS hc FROM cbd GROUP BY lang, cb),
+    cum AS (
+      SELECT lang, cb,
+             CAST(SUM(hc) OVER (PARTITION BY lang ORDER BY cb) AS BIGINT)
+               AS cum,
+             CAST(SUM(hc) OVER (PARTITION BY lang) AS BIGINT) AS n_l
+      FROM hist),
+    bounds AS (
+      SELECT lang,
+             MIN(CASE WHEN cum >= (n_l + 2) // 3 THEN cb END) AS t1_cb,
+             MIN(CASE WHEN cum >= (2 * n_l + 2) // 3 THEN cb END) AS t2_cb
+      FROM cum GROUP BY lang)"""
+
+
 @q(
-    """
+    f"""
     WITH toks AS MATERIALIZED (
       SELECT doc_id, lang, w FROM (
         SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
@@ -1320,18 +1341,7 @@ def q_host_lang_entropy(spark, sf_dir):
       SELECT doc_id, lang, n_tokens, sum_micro,
              sum_micro // (n_tokens * 10000) AS cb
       FROM perdoc),
-    hist AS (SELECT lang, cb, COUNT(*) AS hc FROM cbd GROUP BY lang, cb),
-    cum AS (
-      SELECT lang, cb,
-             CAST(SUM(hc) OVER (PARTITION BY lang ORDER BY cb) AS BIGINT)
-               AS cum,
-             CAST(SUM(hc) OVER (PARTITION BY lang) AS BIGINT) AS n_l
-      FROM hist),
-    bounds AS (
-      SELECT lang,
-             MIN(CASE WHEN cum >= (n_l + 2) // 3 THEN cb END) AS t1_cb,
-             MIN(CASE WHEN cum >= (2 * n_l + 2) // 3 THEN cb END) AS t2_cb
-      FROM cum GROUP BY lang)
+    {_CCNET_BOUNDS_SQL}
     SELECT cbd.doc_id, cbd.lang, cbd.n_tokens,
            (cbd.sum_micro * 10000) // (cbd.n_tokens * 1000000) / 10000.0
              AS bits_per_token,
@@ -1615,33 +1625,11 @@ def admission_stages_from_flags(flags):
 #: derives the first-gate stage from these flags; q_admission_marginal
 #: derives per-gate marginal attribution from the SAME flags — shared
 #: by construction in BOTH engines, like _BM25_SQL_BODY.
-_ADMISSION_FLAGS_SQL = """toks AS MATERIALIZED (
+_ADMISSION_FLAGS_SQL = f"""toks AS MATERIALIZED (
       SELECT doc_id, lang, w FROM (
         SELECT doc_id, lang, unnest(string_split(text, ' ')) AS w
         FROM documents) WHERE w <> ''),
-    lab AS (
-      SELECT doc_id, n_tok,
-             CAST(mwl BETWEEN 3 AND 10
-                  AND n_tok BETWEEN 50 AND 100000 AS INT) AS y
-      FROM (SELECT doc_id, COUNT(*) AS n_tok, AVG(length(w)) AS mwl
-            FROM toks GROUP BY doc_id)),
-    bc AS MATERIALIZED (
-      SELECT doc_id, substr(md5(w), 1, 2) AS b, COUNT(*) AS c
-      FROM toks GROUP BY doc_id, b),
-    raw AS (SELECT b, SUM(c) AS cr FROM bc GROUP BY b),
-    tgt AS (
-      SELECT bc.b, SUM(bc.c) AS ct
-      FROM bc JOIN lab USING (doc_id) WHERE lab.y = 1 GROUP BY bc.b),
-    totr AS (SELECT CAST(SUM(cr) AS BIGINT) AS t FROM raw),
-    tott AS (SELECT CAST(COALESCE(SUM(ct), 0) AS BIGINT) AS t FROM tgt),
-    ratio AS (
-      SELECT raw.b,
-             CAST(ROUND((ln((COALESCE(tgt.ct, 0) + 1) * 1.0
-                             / (tott.t + 256))
-                         - ln((raw.cr + 1) * 1.0 / (totr.t + 256)))
-                        * 1000000.0) AS BIGINT) AS lrq
-      FROM raw LEFT JOIN tgt ON tgt.b = raw.b
-      CROSS JOIN totr CROSS JOIN tott),
+    {_DSIR_RATIO_SQL},
     dsc AS (
       SELECT bc.doc_id,
              CAST(SUM(bc.c * ratio.lrq) AS BIGINT) AS score_micro
@@ -1660,18 +1648,7 @@ _ADMISSION_FLAGS_SQL = """toks AS MATERIALIZED (
       SELECT doc_id, lang, n_tokens, sum_micro,
              sum_micro // (n_tokens * 10000) AS cb
       FROM cperdoc),
-    hist AS (SELECT lang, cb, COUNT(*) AS hc FROM cbd GROUP BY lang, cb),
-    cum AS (
-      SELECT lang, cb,
-             CAST(SUM(hc) OVER (PARTITION BY lang ORDER BY cb) AS BIGINT)
-               AS cum,
-             CAST(SUM(hc) OVER (PARTITION BY lang) AS BIGINT) AS n_l
-      FROM hist),
-    bounds AS (
-      SELECT lang,
-             MIN(CASE WHEN cum >= (n_l + 2) // 3 THEN cb END) AS t1_cb,
-             MIN(CASE WHEN cum >= (2 * n_l + 2) // 3 THEN cb END) AS t2_cb
-      FROM cum GROUP BY lang),
+    {_CCNET_BOUNDS_SQL},
     cbuck AS (
       SELECT cbd.doc_id,
              CASE WHEN cbd.cb <= bounds.t1_cb THEN 'head'
@@ -1681,12 +1658,7 @@ _ADMISSION_FLAGS_SQL = """toks AS MATERIALIZED (
     hperdoc AS (
       SELECT 'host' || CAST(doc_id % 50 AS VARCHAR) || '.example.com'
                AS host,
-             CAST(ROUND((LEAST(1.0, len(string_split(text, ' ')) / 100.0)
-                          * 0.5
-                         + COALESCE(
-                             length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-                               * 1.0 / NULLIF(length(text), 0), 0.0) * 0.5)
-                        * 1000000.0) AS BIGINT) AS q_micro
+             {_QUALITY_MICRO_SQL} AS q_micro
       FROM documents),
     per_host AS (
       SELECT host, COUNT(*) AS n_docs,
@@ -1725,12 +1697,7 @@ _ADMISSION_FLAGS_SQL = """toks AS MATERIALIZED (
                   WHEN f_ccnet THEN '3_ccnet_tail'
                   ELSE '4_admitted' END AS stage
       FROM flags),
-    total AS (SELECT COUNT(*) AS n FROM staged)
-    SELECT stage,
-           CAST(COUNT(*) AS BIGINT) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS n_tokens,
-           ROUND(COUNT(*) * 1.0 / MAX(total.n), 6) AS frac
-    FROM staged CROSS JOIN total GROUP BY stage
+    {_STAGE_FUNNEL_SQL}
     """,
 )
 def q_admission_policy(spark, sf_dir):

@@ -53,6 +53,13 @@ _WORDS_SQL = """
 """
 
 
+#: the body of a `(doc_id, w)` token CTE: the space tokenizer with
+#: empty tokens dropped, the oracle side of text_signals.doc_tokens.
+_WORD_TOKS_SQL = """SELECT doc_id, w FROM (
+        SELECT doc_id, unnest(string_split(text, ' ')) AS w
+        FROM documents) WHERE w <> ''"""
+
+
 def _words_df(spark, sf_dir):
     # NOTE: no _spread here — measured A/B (interleaved, warm): the extra
     # exchange costs more than parallelizing the explode saves; the
@@ -346,19 +353,24 @@ def _capped_bucket_pairs(buckets):
     return pairs.select(F.col("p.a").alias("a"), F.col("p.b").alias("b")).distinct()
 
 
+#: doc shingle-set sizes and the exact shingle intersection of each
+#: `cand(a, b)` pair — the oracle side of _pair_intersections.
+_PAIR_INTER_SQL = """sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
+    inter AS (
+      SELECT c.a, c.b, COUNT(*) AS i
+      FROM cand c
+      JOIN shingles sa ON sa.doc_id = c.a
+      JOIN shingles sb ON sb.doc_id = c.b AND sb.sh = sa.sh
+      GROUP BY c.a, c.b)"""
+
+
 #: CTE chain ending in `vpairs(a, b, jaccard)` — the LSH-verified
 #: near-dup pairs, shared by q_dedup_lsh_verified, q_dedup_clusters and
 #: (over the gated subset) q_curation_pipeline_lsh.
 def _verified_pairs_sql(src: str) -> str:
     return f"""
     {_minhash_cand_sql(src)},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, COUNT(*) AS i
-      FROM cand c
-      JOIN shingles sa ON sa.doc_id = c.a
-      JOIN shingles sb ON sb.doc_id = c.b AND sb.sh = sa.sh
-      GROUP BY c.a, c.b),
+    {_PAIR_INTER_SQL},
     vpairs AS (
       SELECT a, b, ROUND(i * 1.0 / (za.sz + zb.sz - i), 4) AS jaccard
       FROM inter
@@ -574,15 +586,22 @@ def q_dedup_recall(spark, sf_dir):
     )
 
 
-@q(
-    f"""
-    WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
-    edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
+def _cc_reps_sql(pairs: str, reps: str) -> str:
+    """Oracle side of _connected_components: the symmetric `edges` of a
+    `pairs(a, b)` CTE, their reachability `walk` and the component
+    minimum `reps(node, rep)` under the given name."""
+    return f"""edges AS (SELECT a, b FROM {pairs} UNION SELECT b, a FROM {pairs}),
     walk(node, reach) AS (
       SELECT a AS node, a AS reach FROM edges
       UNION
       SELECT w.node, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a),
-    reps AS (SELECT node, MIN(reach) AS rep FROM walk GROUP BY node)
+    {reps} AS (SELECT node, MIN(reach) AS rep FROM walk GROUP BY node)"""
+
+
+@q(
+    f"""
+    WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
+    {_cc_reps_sql("vpairs", "reps")}
     SELECT node AS doc_id, rep,
            CAST(COUNT(*) OVER (PARTITION BY rep) AS BIGINT)
              AS component_size
@@ -1544,12 +1563,7 @@ def q_dedup_lines_global(spark, sf_dir):
 @q(
     f"""
     WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
-    edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
-    walk(node, reach) AS (
-      SELECT a AS node, a AS reach FROM edges
-      UNION
-      SELECT w.node, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a),
-    reps AS (SELECT node, MIN(reach) AS rep FROM walk GROUP BY node),
+    {_cc_reps_sql("vpairs", "reps")},
     quality AS (
       SELECT r.node, r.rep, d.n_chars
       FROM reps r JOIN documents d ON d.doc_id = r.node)
@@ -1742,13 +1756,7 @@ def q_lsh_bucket_stats(spark, sf_dir):
 @q(
     f"""
     WITH {_MINHASH_CAND_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, COUNT(*) AS i
-      FROM cand c
-      JOIN shingles sa ON sa.doc_id = c.a
-      JOIN shingles sb ON sb.doc_id = c.b AND sb.sh = sa.sh
-      GROUP BY c.a, c.b)
+    {_PAIR_INTER_SQL}
     SELECT a, b, CAST(i AS BIGINT) AS n_shared,
            ROUND(i * 1.0 / (za.sz + zb.sz - i), 4) AS jaccard,
            ROUND(i * 1.0 / LEAST(za.sz, zb.sz), 4) AS containment,
@@ -1864,12 +1872,7 @@ def q_source_novelty(spark, sf_dir):
 @q(
     f"""
     WITH RECURSIVE {_VERIFIED_PAIRS_SQL},
-    edges AS (SELECT a, b FROM vpairs UNION SELECT b, a FROM vpairs),
-    walk(node, reach) AS (
-      SELECT a AS node, a AS reach FROM edges
-      UNION
-      SELECT w.node, e.b AS reach FROM walk w JOIN edges e ON w.reach = e.a),
-    reps AS (SELECT node, MIN(reach) AS rep FROM walk GROUP BY node),
+    {_cc_reps_sql("vpairs", "reps")},
     mem AS (
       SELECT r.rep, r.node, d.source, d.lang
       FROM reps r JOIN documents d ON d.doc_id = r.node),
@@ -1951,13 +1954,7 @@ def q_cluster_homogeneity(spark, sf_dir):
 @q(
     f"""
     WITH {_MINHASH_CAND_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, COUNT(*) AS i
-      FROM cand c
-      JOIN shingles sa ON sa.doc_id = c.a
-      JOIN shingles sb ON sb.doc_id = c.b AND sb.sh = sa.sh
-      GROUP BY c.a, c.b),
+    {_PAIR_INTER_SQL},
     comp AS (
       SELECT c.a, c.b,
              CAST(SUM(CASE WHEN ha.mh = hb.mh THEN 1 ELSE 0 END)
@@ -2096,13 +2093,7 @@ def _band_tuning_tail_sql() -> str:
 @q(
     f"""
     WITH {_MINHASH_CAND_SQL},
-    sizes AS (SELECT doc_id, COUNT(*) AS sz FROM shingles GROUP BY doc_id),
-    inter AS (
-      SELECT c.a, c.b, COUNT(*) AS i
-      FROM cand c
-      JOIN shingles sa ON sa.doc_id = c.a
-      JOIN shingles sb ON sb.doc_id = c.b AND sb.sh = sa.sh
-      GROUP BY c.a, c.b),
+    {_PAIR_INTER_SQL},
     pj AS (
       SELECT CAST(ROUND(COALESCE(n.i, 0) * 1000000.0
                         / (za.sz + zb.sz - COALESCE(n.i, 0)))

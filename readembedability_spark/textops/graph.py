@@ -81,10 +81,21 @@ def _pr_iters_sql() -> str:
     )
 
 
+#: node set, node count, out-degrees and the sink set of an `edges(src,
+#: dst)` CTE — the oracle side of _graph_nodes.
+_GRAPH_NODES_SQL = """nodes AS (SELECT DISTINCT src AS v FROM edges
+              UNION SELECT DISTINCT dst FROM edges),
+    nn AS (SELECT COUNT(*) AS n FROM nodes),
+    deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
+    sinks AS (
+      SELECT nodes.v FROM nodes LEFT JOIN deg ON deg.src = nodes.v
+      WHERE deg.src IS NULL)"""
+
+
 #: shared oracle prelude for the synthetic rule graph: edge rules,
 #: node set, out-degrees and the sink set — reused verbatim by
 #: q_pagerank and q_trustrank so both oracles walk the SAME graph.
-_PR_GRAPH_SQL = """
+_PR_GRAPH_SQL = f"""
     edges AS (
       SELECT DISTINCT src, dst FROM (
         SELECT event_id % 50 AS src, (event_id * 7 + 3) % 50 AS dst
@@ -94,13 +105,7 @@ _PR_GRAPH_SQL = """
                (event_id % 50 * 3 + event_id % 7) % 50 AS dst
         FROM events)
       WHERE src <> dst AND src % 11 <> 0),
-    nodes AS (SELECT DISTINCT src AS v FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-    sinks AS (
-      SELECT nodes.v FROM nodes LEFT JOIN deg ON deg.src = nodes.v
-      WHERE deg.src IS NULL)"""
+    {_GRAPH_NODES_SQL}"""
 
 
 @q(
@@ -463,6 +468,47 @@ def _extracted_links(spark, sf_dir):
     )
 
 
+#: the oracle side of _link_pages/_extracted_links: the planted link
+#: synthesis ending in `frontier(link)`, the followed links whose
+#: target is not a corpus page (q_crawl_frontier, q_frontier_schedule,
+#: q_frontier_robots).
+_LINK_FRONTIER_SQL = f"""base AS (
+      SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
+             CAST((doc_id * 7 + 3) % {_LINK_HOSTS} AS VARCHAR) AS t,
+             CAST((doc_id + 1) % {_LINK_HOSTS} AS VARCHAR) AS u
+      FROM documents),
+    links AS (
+      SELECT 'https://h' || s || '.example.com/local/'
+               || CAST(doc_id AS VARCHAR) AS link FROM base
+      UNION ALL
+      SELECT 'https://h' || t || '.example.com/d/'
+               || CAST(doc_id AS VARCHAR) FROM base
+      UNION ALL
+      SELECT 'https://h' || u || '.example.com/d/'
+               || CAST(doc_id + 1 AS VARCHAR) FROM base),
+    pages AS (
+      SELECT 'https://h' || s || '.example.com/d/'
+               || CAST(doc_id AS VARCHAR) AS url FROM base),
+    frontier AS (
+      SELECT DISTINCT l.link FROM links l
+      LEFT JOIN pages p ON p.url = l.link
+      WHERE p.url IS NULL)"""
+
+#: the host-id graph of the followed planted links, the oracle side of
+#: _host_edges + _graph_nodes (q_pagerank_links, q_frontier_schedule).
+_LINK_GRAPH_SQL = f"""edges AS (
+      SELECT DISTINCT src, dst FROM (
+        SELECT doc_id % {_LINK_HOSTS} AS src,
+               (doc_id * 7 + 3) % {_LINK_HOSTS} AS dst
+        FROM documents
+        UNION ALL
+        SELECT doc_id % {_LINK_HOSTS} AS src,
+               (doc_id + 1) % {_LINK_HOSTS} AS dst
+        FROM documents)
+      WHERE src <> dst AND src % 7 <> 0),
+    {_GRAPH_NODES_SQL}"""
+
+
 #: generic url → host pattern of the frontier cores; on the synthetic
 #: link pages it yields the same hosts as the synthesis-shaped
 #: patterns the rank queries use.
@@ -574,23 +620,7 @@ def q_extract_links(spark, sf_dir):
 
 @q(
     f"""
-    WITH edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT doc_id % {_LINK_HOSTS} AS src,
-               (doc_id * 7 + 3) % {_LINK_HOSTS} AS dst
-        FROM documents
-        UNION ALL
-        SELECT doc_id % {_LINK_HOSTS} AS src,
-               (doc_id + 1) % {_LINK_HOSTS} AS dst
-        FROM documents)
-      WHERE src <> dst AND src % 7 <> 0),
-    nodes AS (SELECT DISTINCT src AS v FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-    sinks AS (
-      SELECT nodes.v FROM nodes LEFT JOIN deg ON deg.src = nodes.v
-      WHERE deg.src IS NULL),
+    WITH {_LINK_GRAPH_SQL},
     r0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn),
     {_pr_iters_sql()}
     SELECT v AS node, ROUND(r, 6) AS pr FROM r{_PR_ITERS}
@@ -633,27 +663,7 @@ def _host_edges(links):
 
 @q(
     f"""
-    WITH base AS (
-      SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
-             CAST((doc_id * 7 + 3) % {_LINK_HOSTS} AS VARCHAR) AS t,
-             CAST((doc_id + 1) % {_LINK_HOSTS} AS VARCHAR) AS u
-      FROM documents),
-    links AS (
-      SELECT 'https://h' || s || '.example.com/local/'
-               || CAST(doc_id AS VARCHAR) AS link FROM base
-      UNION ALL
-      SELECT 'https://h' || t || '.example.com/d/'
-               || CAST(doc_id AS VARCHAR) FROM base
-      UNION ALL
-      SELECT 'https://h' || u || '.example.com/d/'
-               || CAST(doc_id + 1 AS VARCHAR) FROM base),
-    pages AS (
-      SELECT 'https://h' || s || '.example.com/d/'
-               || CAST(doc_id AS VARCHAR) AS url FROM base),
-    frontier AS (
-      SELECT DISTINCT l.link FROM links l
-      LEFT JOIN pages p ON p.url = l.link
-      WHERE p.url IS NULL)
+    WITH {_LINK_FRONTIER_SQL}
     SELECT regexp_extract(link, 'https://(h[0-9]+\\.example\\.com)/', 1)
              AS host,
            CAST(COUNT(*) AS BIGINT) AS n_unseen
@@ -749,44 +759,8 @@ _SCHEDULE_K = 3
 
 @q(
     f"""
-    WITH base AS (
-      SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
-             CAST((doc_id * 7 + 3) % {_LINK_HOSTS} AS VARCHAR) AS t,
-             CAST((doc_id + 1) % {_LINK_HOSTS} AS VARCHAR) AS u
-      FROM documents),
-    links AS (
-      SELECT 'https://h' || s || '.example.com/local/'
-               || CAST(doc_id AS VARCHAR) AS link FROM base
-      UNION ALL
-      SELECT 'https://h' || t || '.example.com/d/'
-               || CAST(doc_id AS VARCHAR) FROM base
-      UNION ALL
-      SELECT 'https://h' || u || '.example.com/d/'
-               || CAST(doc_id + 1 AS VARCHAR) FROM base),
-    pages AS (
-      SELECT 'https://h' || s || '.example.com/d/'
-               || CAST(doc_id AS VARCHAR) AS url FROM base),
-    frontier AS (
-      SELECT DISTINCT l.link FROM links l
-      LEFT JOIN pages p ON p.url = l.link
-      WHERE p.url IS NULL),
-    edges AS (
-      SELECT DISTINCT src, dst FROM (
-        SELECT doc_id % {_LINK_HOSTS} AS src,
-               (doc_id * 7 + 3) % {_LINK_HOSTS} AS dst
-        FROM documents
-        UNION ALL
-        SELECT doc_id % {_LINK_HOSTS} AS src,
-               (doc_id + 1) % {_LINK_HOSTS} AS dst
-        FROM documents)
-      WHERE src <> dst AND src % 7 <> 0),
-    nodes AS (SELECT DISTINCT src AS v FROM edges
-              UNION SELECT DISTINCT dst FROM edges),
-    nn AS (SELECT COUNT(*) AS n FROM nodes),
-    deg AS (SELECT src, COUNT(*) AS d FROM edges GROUP BY src),
-    sinks AS (
-      SELECT nodes.v FROM nodes LEFT JOIN deg ON deg.src = nodes.v
-      WHERE deg.src IS NULL),
+    WITH {_LINK_FRONTIER_SQL},
+    {_LINK_GRAPH_SQL},
     r0 AS (SELECT v, 1.0 / nn.n AS r FROM nodes CROSS JOIN nn),
     {_pr_iters_sql()},
     authority AS (

@@ -21,7 +21,7 @@ from readembedability_spark.queries import (
 )
 from readembedability_spark.schemas import local_table
 from readembedability_spark.textops.graph import (
-    _LINK_HOSTS,
+    _LINK_FRONTIER_SQL,
     _NUM_HOST_RE,
     _extracted_links,
     _link_pages,
@@ -30,27 +30,7 @@ from readembedability_spark.textops.graph import (
 
 @q(
     f"""
-    WITH base AS (
-      SELECT doc_id, CAST(doc_id % {_LINK_HOSTS} AS VARCHAR) AS s,
-             CAST((doc_id * 7 + 3) % {_LINK_HOSTS} AS VARCHAR) AS t,
-             CAST((doc_id + 1) % {_LINK_HOSTS} AS VARCHAR) AS u
-      FROM documents),
-    links AS (
-      SELECT 'https://h' || s || '.example.com/local/'
-               || CAST(doc_id AS VARCHAR) AS link FROM base
-      UNION ALL
-      SELECT 'https://h' || t || '.example.com/d/'
-               || CAST(doc_id AS VARCHAR) FROM base
-      UNION ALL
-      SELECT 'https://h' || u || '.example.com/d/'
-               || CAST(doc_id + 1 AS VARCHAR) FROM base),
-    pages AS (
-      SELECT 'https://h' || s || '.example.com/d/'
-               || CAST(doc_id AS VARCHAR) AS url FROM base),
-    frontier AS (
-      SELECT DISTINCT l.link FROM links l
-      LEFT JOIN pages p ON p.url = l.link
-      WHERE p.url IS NULL),
+    WITH {_LINK_FRONTIER_SQL},
     hosts AS (
       SELECT DISTINCT
              regexp_extract(link,
@@ -782,6 +762,34 @@ def _robots_probe_urls(spark, sf_dir, paths):
     )
 
 
+#: the oracle side of ROBOTS_RULES_SNAPSHOT, ROBOTS_PROBE_PATHS and
+#: robots_verdicts_from: the ruleset rows, the `urls(event_id, g, path)`
+#: probe CTE, the longest-match winner window over a `u` url ⋈ `r` rule
+#: join, and the verdict of the winning rule `m` (q_robots_precedence,
+#: q_robots_diff, q_robots_wildcard).
+_ROBOTS_RULES_SQL = """VALUES (0, '/private/', 0),
+             (0, '/private/public/', 1),
+             (0, '/tmp', 0),
+             (1, '/', 0),
+             (1, '/articles/', 1)"""
+_ROBOTS_URLS_SQL = """urls AS (
+      SELECT event_id, (event_id // 6) % 3 AS g,
+             CASE event_id % 6
+               WHEN 0 THEN '/private/a'
+               WHEN 1 THEN '/private/public/x'
+               WHEN 2 THEN '/articles/2024/one'
+               WHEN 3 THEN '/index.html'
+               WHEN 4 THEN '/tmp/x'
+               ELSE '/private' END AS path
+      FROM events)"""
+_ROBOTS_WINNER_SQL = """ROW_NUMBER() OVER (
+               PARTITION BY u.event_id
+               ORDER BY length(r.pattern) DESC, r.is_allow DESC,
+                        r.pattern)"""
+_ROBOTS_VERDICT_SQL = """CASE WHEN m.pattern IS NULL OR m.is_allow = 1
+                  THEN 'allowed' ELSE 'blocked' END"""
+
+
 def robots_verdicts_from(
     urls, rules, uid="event_id", match="startswith(path, pattern)"
 ):
@@ -830,36 +838,19 @@ def robots_verdicts_from(
 
 
 @q(
-    """
+    f"""
     WITH rules(g, pattern, is_allow) AS (
-      VALUES (0, '/private/', 0),
-             (0, '/private/public/', 1),
-             (0, '/tmp', 0),
-             (1, '/', 0),
-             (1, '/articles/', 1)),
-    urls AS (
-      SELECT event_id, (event_id // 6) % 3 AS g,
-             CASE event_id % 6
-               WHEN 0 THEN '/private/a'
-               WHEN 1 THEN '/private/public/x'
-               WHEN 2 THEN '/articles/2024/one'
-               WHEN 3 THEN '/index.html'
-               WHEN 4 THEN '/tmp/x'
-               ELSE '/private' END AS path
-      FROM events),
+      {_ROBOTS_RULES_SQL}),
+    {_ROBOTS_URLS_SQL},
     matched AS (
       SELECT u.event_id, u.g, u.path, r.pattern, r.is_allow,
-             ROW_NUMBER() OVER (
-               PARTITION BY u.event_id
-               ORDER BY length(r.pattern) DESC, r.is_allow DESC,
-                        r.pattern) AS rk
+             {_ROBOTS_WINNER_SQL} AS rk
       FROM urls u JOIN rules r
         ON u.g = r.g AND starts_with(u.path, r.pattern)),
     verdicts AS (
       SELECT u.event_id, u.g,
              COALESCE(m.pattern, '(default)') AS rule,
-             CASE WHEN m.pattern IS NULL OR m.is_allow = 1
-                  THEN 'allowed' ELSE 'blocked' END AS verdict
+             {_ROBOTS_VERDICT_SQL} AS verdict
       FROM urls u LEFT JOIN matched m
         ON u.event_id = m.event_id AND m.rk = 1)
     SELECT g, verdict, rule,
@@ -1012,55 +1003,34 @@ def q_retry_after(spark, sf_dir):
 
 
 @q(
-    """
+    f"""
     WITH rules_before(g, pattern, is_allow) AS (
-      VALUES (0, '/private/', 0),
-             (0, '/private/public/', 1),
-             (0, '/tmp', 0),
-             (1, '/', 0),
-             (1, '/articles/', 1)),
+      {_ROBOTS_RULES_SQL}),
     rules_after(g, pattern, is_allow) AS (
       VALUES (0, '/private/', 0),
              (0, '/tmp', 0),
              (1, '/', 0),
              (1, '/articles/', 1),
              (1, '/index.html', 1)),
-    urls AS (
-      SELECT event_id, (event_id // 6) % 3 AS g,
-             CASE event_id % 6
-               WHEN 0 THEN '/private/a'
-               WHEN 1 THEN '/private/public/x'
-               WHEN 2 THEN '/articles/2024/one'
-               WHEN 3 THEN '/index.html'
-               WHEN 4 THEN '/tmp/x'
-               ELSE '/private' END AS path
-      FROM events),
+    {_ROBOTS_URLS_SQL},
     m_before AS (
       SELECT u.event_id, r.pattern, r.is_allow,
-             ROW_NUMBER() OVER (
-               PARTITION BY u.event_id
-               ORDER BY length(r.pattern) DESC, r.is_allow DESC,
-                        r.pattern) AS rk
+             {_ROBOTS_WINNER_SQL} AS rk
       FROM urls u JOIN rules_before r
         ON u.g = r.g AND starts_with(u.path, r.pattern)),
     v_before AS (
       SELECT u.event_id,
-             CASE WHEN m.pattern IS NULL OR m.is_allow = 1
-                  THEN 'allowed' ELSE 'blocked' END AS verdict
+             {_ROBOTS_VERDICT_SQL} AS verdict
       FROM urls u LEFT JOIN m_before m
         ON u.event_id = m.event_id AND m.rk = 1),
     m_after AS (
       SELECT u.event_id, r.pattern, r.is_allow,
-             ROW_NUMBER() OVER (
-               PARTITION BY u.event_id
-               ORDER BY length(r.pattern) DESC, r.is_allow DESC,
-                        r.pattern) AS rk
+             {_ROBOTS_WINNER_SQL} AS rk
       FROM urls u JOIN rules_after r
         ON u.g = r.g AND starts_with(u.path, r.pattern)),
     v_after AS (
       SELECT u.event_id,
-             CASE WHEN m.pattern IS NULL OR m.is_allow = 1
-                  THEN 'allowed' ELSE 'blocked' END AS verdict
+             {_ROBOTS_VERDICT_SQL} AS verdict
       FROM urls u LEFT JOIN m_after m
         ON u.event_id = m.event_id AND m.rk = 1),
     trans AS (
@@ -1181,7 +1151,7 @@ ROBOTS_WILDCARD_RULES = [
 
 
 @q(
-    """
+    f"""
     WITH rules(g, pattern, regex, is_allow) AS (
       VALUES
         (0, '/private/*.html', '^/private/.*\\.html', 0),
@@ -1200,17 +1170,13 @@ ROBOTS_WILDCARD_RULES = [
       FROM events),
     matched AS (
       SELECT u.event_id, r.pattern, r.is_allow,
-             ROW_NUMBER() OVER (
-               PARTITION BY u.event_id
-               ORDER BY length(r.pattern) DESC, r.is_allow DESC,
-                        r.pattern) AS rk
+             {_ROBOTS_WINNER_SQL} AS rk
       FROM urls u JOIN rules r
         ON u.g = r.g AND regexp_matches(u.path, r.regex)),
     verdicts AS (
       SELECT u.g,
              COALESCE(m.pattern, '(default)') AS rule,
-             CASE WHEN m.pattern IS NULL OR m.is_allow = 1
-                  THEN 'allowed' ELSE 'blocked' END AS verdict
+             {_ROBOTS_VERDICT_SQL} AS verdict
       FROM urls u LEFT JOIN matched m
         ON u.event_id = m.event_id AND m.rk = 1)
     SELECT g, verdict, rule,

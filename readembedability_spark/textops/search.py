@@ -16,6 +16,7 @@ from readembedability_spark.queries import (
 from readembedability_spark.schemas import local_table
 from readembedability_spark.text_signals import doc_tokens
 from readembedability_spark.textops.ann import _top_k
+from readembedability_spark.textops.dedup import _WORD_TOKS_SQL
 
 
 @q(
@@ -163,11 +164,9 @@ def q_bigram_pmi(spark, sf_dir):
 
 
 @q(
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+      {_WORD_TOKS_SQL}),
     tf AS (SELECT w, doc_id, COUNT(*) AS tf FROM toks GROUP BY w, doc_id),
     stats AS (SELECT w, COUNT(*) AS df, SUM(tf) AS cf FROM tf GROUP BY w),
     top3 AS (
@@ -232,10 +231,8 @@ def q_inverted_index(spark, sf_dir):
 #: shared BM25 CTE body (ends at `ranked`, the top-5 table) — reused
 #: verbatim by q_bm25_rank (the ranking itself) and q_bm25_eval (the
 #: MRR regression gate over the same ranking).
-_BM25_SQL_BODY = """toks AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+_BM25_SQL_BODY = f"""toks AS (
+      {_WORD_TOKS_SQL}),
     tf AS (SELECT w, doc_id, CAST(COUNT(*) AS BIGINT) AS tf
            FROM toks GROUP BY w, doc_id),
     dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl
@@ -498,9 +495,7 @@ def postings_gaps(post):
 @q(
     f"""
     WITH toks AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+      {_WORD_TOKS_SQL}),
     post AS (SELECT w, doc_id FROM toks GROUP BY w, doc_id),
     g AS (
       SELECT w,
@@ -567,11 +562,9 @@ def q_postings_compression(spark, sf_dir):
 
 
 @q(
-    """
+    f"""
     WITH toks AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+      {_WORD_TOKS_SQL}),
     term AS (
       SELECT w, CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS df
       FROM toks GROUP BY w),

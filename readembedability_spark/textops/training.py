@@ -38,6 +38,7 @@ from readembedability_spark.text_signals import (
     synthetic_host,
 )
 from readembedability_spark.textops.dedup import (
+    _WORD_TOKS_SQL,
     _grams_from,
     _grams_sql,
 )
@@ -624,18 +625,25 @@ def seq_shard_keys(seqs, n_shards, seed):
     )
 
 
-@q(
-    f"""
-    WITH toks AS (
+def _packed_sql(cols: str) -> str:
+    """Oracle side of _ws_token_counts + pack_seq_ids: whitespace token
+    counts `toks` and their per-lang running-sum sequence ids, selected
+    as `packed(<cols>, seq_id)`."""
+    return f"""toks AS (
       SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
       FROM documents),
     packed AS (
-      SELECT doc_id, lang, n_tokens,
+      SELECT {cols},
              CAST((SUM(n_tokens) OVER (PARTITION BY lang
                      ORDER BY doc_id
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                    - n_tokens) // {_PACK_SEQ_TOKENS} AS BIGINT) AS seq_id
-      FROM toks)
+      FROM toks)"""
+
+
+@q(
+    f"""
+    WITH {_packed_sql("doc_id, lang, n_tokens")}
     SELECT lang, seq_id, COUNT(*) AS n_docs,
            CAST(SUM(n_tokens) AS BIGINT) AS seq_tokens
     FROM packed GROUP BY lang, seq_id
@@ -666,16 +674,7 @@ _AUDIT_HEAD = 64
 
 @q(
     f"""
-    WITH toks AS (
-      SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
-      FROM documents),
-    packed AS (
-      SELECT lang, n_tokens,
-             CAST((SUM(n_tokens) OVER (PARTITION BY lang
-                     ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens) // {_PACK_SEQ_TOKENS} AS BIGINT) AS seq_id
-      FROM toks),
+    WITH {_packed_sql("lang, n_tokens")},
     seqs AS (
       SELECT lang, seq_id, CAST(SUM(n_tokens) AS BIGINT) AS seq_tokens
       FROM packed GROUP BY lang, seq_id),
@@ -774,16 +773,7 @@ def q_shuffle_shards(spark, sf_dir):
 
 @q(
     f"""
-    WITH toks AS (
-      SELECT doc_id, lang, len(string_split(text, ' ')) AS n_tokens
-      FROM documents),
-    packed AS (
-      SELECT lang, n_tokens,
-             CAST((SUM(n_tokens) OVER (PARTITION BY lang
-                     ORDER BY doc_id
-                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-                   - n_tokens) // {_PACK_SEQ_TOKENS} AS BIGINT) AS seq_id
-      FROM toks),
+    WITH {_packed_sql("lang, n_tokens")},
     seqs AS (
       SELECT lang, seq_id, COUNT(*) AS n_docs,
              CAST(SUM(n_tokens) AS BIGINT) AS seq_tokens
@@ -836,20 +826,32 @@ def eval_gram_hits_from(train, eval_docs):
     return _grams_from(train, DECON_N).join(F.broadcast(egrams), "g")
 
 
-@q(
-    f"""
-    WITH evalset AS (
+#: the oracle side of eval_gram_hits_from: the held-out eval docs and
+#: their 13-grams `grams(doc_id, g)`.
+_DECON_EVAL_GRAMS_SQL = f"""evalset AS (
       SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-    {_grams_sql("evalset", 13)},
-    egrams AS (SELECT DISTINCT g FROM grams),
-    train AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
+    {_grams_sql("evalset", 13)}"""
+
+
+def _decon_train_grams_sql(select: str) -> str:
+    """Oracle side of eval_gram_hits_from's training side: the training
+    docs, their word arrays and their 13-grams `tgrams(..., g)`, whose
+    select list opens with `select`."""
+    return f"""train AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
     tarr AS (SELECT doc_id, string_split(text, ' ') AS arr FROM train),
     tgrams AS (
-      SELECT DISTINCT doc_id,
+      SELECT {select}
              unnest(list_transform(range(1, len(arr) - 11),
                     k -> array_to_string(list_slice(arr, k, k + 12), ' ')))
                AS g
-      FROM tarr WHERE len(arr) >= 13)
+      FROM tarr WHERE len(arr) >= 13)"""
+
+
+@q(
+    f"""
+    WITH {_DECON_EVAL_GRAMS_SQL},
+    egrams AS (SELECT DISTINCT g FROM grams),
+    {_decon_train_grams_sql("DISTINCT doc_id,")}
     SELECT t.doc_id, CAST(COUNT(*) AS BIGINT) AS n_hits
     FROM tgrams t JOIN egrams e ON t.g = e.g
     GROUP BY t.doc_id
@@ -876,18 +878,9 @@ def q_decontaminate(spark, sf_dir):
 
 @q(
     f"""
-    WITH evalset AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-    {_grams_sql("evalset", 13)},
+    WITH {_DECON_EVAL_GRAMS_SQL},
     egrams AS (SELECT DISTINCT doc_id, g FROM grams),
-    train AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
-    tarr AS (SELECT doc_id, string_split(text, ' ') AS arr FROM train),
-    tgrams AS (
-      SELECT DISTINCT
-             unnest(list_transform(range(1, len(arr) - 11),
-                    k -> array_to_string(list_slice(arr, k, k + 12), ' ')))
-               AS g
-      FROM tarr WHERE len(arr) >= 13),
+    {_decon_train_grams_sql("DISTINCT")},
     hits AS (
       SELECT e.doc_id, COUNT(*) AS n_hit
       FROM egrams e JOIN tgrams t ON e.g = t.g GROUP BY e.doc_id),
@@ -1365,9 +1358,7 @@ def bpe_doc_token_counts(docs, final_words, out_col: str = "n_bpe"):
     WITH {_BPE_BASE_SQL},
     {_bpe_rounds_sql()},
     dw AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+      {_WORD_TOKS_SQL}),
     nb AS (
       SELECT dw.doc_id,
              CAST(SUM(len(string_split(wn.seq, chr(1))) - 2) AS BIGINT)
@@ -1486,20 +1477,23 @@ _LRN_ROUND_SQL = """
       FROM w{p} w JOIN g{t} g USING (b))"""
 
 
-#: shared oracle prelude: labels (the gopher pass rule — an existing
-#: deterministic green query — as supervision), hashed-bucket features
-#: normalized per doc in fixed point, plus bias and doc-length columns.
-_LRN_BASE_SQL = """
-    toks AS MATERIALIZED (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
-    lab AS MATERIALIZED (
-      SELECT doc_id, n_tok,
+#: the body of the Gopher pass-label CTE `lab(doc_id, n_tok, y)` over a
+#: `toks(doc_id, w)` CTE, the oracle side of text_signals.gopher_labels.
+_GOPHER_LAB_SQL = """SELECT doc_id, n_tok,
              CAST(mwl BETWEEN 3 AND 10
                   AND n_tok BETWEEN 50 AND 100000 AS INT) AS y
       FROM (SELECT doc_id, COUNT(*) AS n_tok, AVG(length(w)) AS mwl
-            FROM toks GROUP BY doc_id)),
+            FROM toks GROUP BY doc_id)"""
+
+
+#: shared oracle prelude: labels (the gopher pass rule — an existing
+#: deterministic green query — as supervision), hashed-bucket features
+#: normalized per doc in fixed point, plus bias and doc-length columns.
+_LRN_BASE_SQL = f"""
+    toks AS MATERIALIZED (
+      {_WORD_TOKS_SQL}),
+    lab AS MATERIALIZED (
+      {_GOPHER_LAB_SQL}),
     feats AS MATERIALIZED (
       SELECT f.doc_id, f.b,
              CAST(ROUND(f.c * 1000000.0 / l.n_tok) AS BIGINT) AS xq
@@ -1684,13 +1678,24 @@ def q_model_train(spark, sf_dir):
     )
 
 
-@q(
-    f"""
-    WITH {_LRN_BASE_SQL},
+#: the oracle side of _lrn_scored: the trained model's fixed-point dot
+#: product `sc(doc_id, dot)` per doc, and its probability `scored(doc_id,
+#: y, p)` beside the Gopher label.
+_LRN_DOT_SQL = f"""{_LRN_BASE_SQL},
     {_lrn_rounds_sql()},
     sc AS (
       SELECT f.doc_id, CAST(SUM(f.xq * w.w) AS BIGINT) AS dot
-      FROM feats f JOIN w{_LRN_ROUNDS} w USING (b) GROUP BY f.doc_id)
+      FROM feats f JOIN w{_LRN_ROUNDS} w USING (b) GROUP BY f.doc_id)"""
+_LRN_SCORED_SQL = f"""{_LRN_DOT_SQL},
+    scored AS (
+      SELECT l.doc_id, l.y,
+             {_LRN_P.format(x=_LRN_X.format(dot="sc.dot"))} AS p
+      FROM lab l JOIN sc USING (doc_id))"""
+
+
+@q(
+    f"""
+    WITH {_LRN_DOT_SQL}
     SELECT l.doc_id,
            ROUND({_LRN_P.format(x=_LRN_X.format(dot="sc.dot"))}, 6) AS score,
            {_LRN_P.format(x=_LRN_X.format(dot="sc.dot"))} > 0.5 AS pred,
@@ -1792,20 +1797,11 @@ def q_host_token_budget(spark, sf_dir):
 
 @q(
     f"""
-    WITH evalset AS (
-      SELECT doc_id, text FROM documents WHERE doc_id % 20 = 0),
-    {_grams_sql("evalset", 13)},
+    WITH {_DECON_EVAL_GRAMS_SQL},
     epos AS (
       SELECT DISTINCT j, substr(md5(g), j * 4 + 1, 4) AS pos
       FROM grams, unnest([0, 1, 2, 3]) AS t(j)),
-    train AS (SELECT doc_id, text FROM documents WHERE doc_id % 20 <> 0),
-    tarr AS (SELECT doc_id, string_split(text, ' ') AS arr FROM train),
-    tgrams AS (
-      SELECT DISTINCT doc_id,
-             unnest(list_transform(range(1, len(arr) - 11),
-                    k -> array_to_string(list_slice(arr, k, k + 12), ' ')))
-               AS g
-      FROM tarr WHERE len(arr) >= 13),
+    {_decon_train_grams_sql("DISTINCT doc_id,")},
     tpos AS (
       SELECT doc_id, g, j, substr(md5(g), j * 4 + 1, 4) AS pos
       FROM tgrams, unnest([0, 1, 2, 3]) AS t(j)),
@@ -1869,15 +1865,7 @@ _PR_THRESHOLDS = [round(0.1 * i, 1) for i in range(1, 10)]
 
 @q(
     f"""
-    WITH {_LRN_BASE_SQL},
-    {_lrn_rounds_sql()},
-    sc AS (
-      SELECT f.doc_id, CAST(SUM(f.xq * w.w) AS BIGINT) AS dot
-      FROM feats f JOIN w{_LRN_ROUNDS} w USING (b) GROUP BY f.doc_id),
-    scored AS (
-      SELECT l.doc_id, l.y,
-             {_LRN_P.format(x=_LRN_X.format(dot="sc.dot"))} AS p
-      FROM lab l JOIN sc USING (doc_id)),
+    WITH {_LRN_SCORED_SQL},
     sweep AS (
       SELECT t, y, p FROM scored,
             unnest([{", ".join(str(t) for t in _PR_THRESHOLDS)}]) AS u(t))
@@ -1940,15 +1928,7 @@ def q_model_pr_curve(spark, sf_dir):
 
 @q(
     f"""
-    WITH {_LRN_BASE_SQL},
-    {_lrn_rounds_sql()},
-    sc AS (
-      SELECT f.doc_id, CAST(SUM(f.xq * w.w) AS BIGINT) AS dot
-      FROM feats f JOIN w{_LRN_ROUNDS} w USING (b) GROUP BY f.doc_id),
-    scored AS (
-      SELECT l.doc_id, l.y,
-             {_LRN_P.format(x=_LRN_X.format(dot="sc.dot"))} AS p
-      FROM lab l JOIN sc USING (doc_id)),
+    WITH {_LRN_SCORED_SQL},
     binned AS (
       SELECT LEAST(CAST(FLOOR(p * 10) AS BIGINT), 9) AS bin, y,
              CAST(ROUND(p * 1000000.0) AS BIGINT) AS pq
@@ -2091,9 +2071,7 @@ def q_epoch_schedule(spark, sf_dir):
     WITH {_BPE_BASE_SQL},
     {_bpe_rounds_sql()},
     dw AS (
-      SELECT doc_id, w FROM (
-        SELECT doc_id, unnest(string_split(text, ' ')) AS w
-        FROM documents) WHERE w <> ''),
+      {_WORD_TOKS_SQL}),
     nb AS (
       SELECT dw.doc_id,
              CAST(SUM(len(string_split(wn.seq, chr(1))) - 2) AS BIGINT)

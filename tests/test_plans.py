@@ -573,3 +573,30 @@ def test_loop_family_plan_shape(spark, name):
     )
     ceiling = _LOOP_PLAN_CEILINGS[name]
     assert all(g <= m for g, m in zip(got, ceiling)), (got, ceiling)
+
+
+def test_plan_digest_reads_expand_group_ids_as_unknown():
+    """Two optimized plannings of q_approx_distinct in one session
+    (sf0.01) whose Expand differs only in how the distinct groups are
+    numbered normalize to one string."""
+    import importlib.util
+
+    path = Path(__file__).resolve().parent.parent / "bench" / "plans.py"
+    spec = importlib.util.spec_from_file_location("bench_plans", path)
+    plans = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(plans)
+    a = (
+        "   +- Expand [[null, null, 0, user_id#337L, event_id#335L], "
+        "[user_id#337L, null, 1, null, null], "
+        "[null, event_id#335L, 2, null, null]], "
+        "[user_id#3637L, event_id#3638L, gid#3636, user_id#3639L, "
+        "event_id#3640L]"
+    )
+    b = (
+        "   +- Expand [[null, null, 0, user_id#11877L, event_id#11875L], "
+        "[event_id#11875L, null, 1, null, null], "
+        "[null, user_id#11877L, 2, null, null]], "
+        "[event_id#15177L, user_id#15178L, gid#15176, user_id#15179L, "
+        "event_id#15180L]"
+    )
+    assert plans.normalize(a) == plans.normalize(b)

@@ -1,5 +1,5 @@
-"""Each shared rule has one Spark-side site, and each module stays
-small enough to read.
+"""Each shared rule is written once on each engine's side, and each
+module stays small enough to read.
 
 The registry, the batch jobs and the stream call one core per rule
 (text_signals.py, functions/, the stream's ledger core, the textops
@@ -7,7 +7,9 @@ families' politeness verdict, census tail, media, BM25, postings-gap
 and CDX cores, and the cores sibling queries share). This counts the
 lines of ``readembedability_spark/`` and ``jobs/`` that spell each rule
 out, so a restated copy fails here instead of drifting from the core.
-The DuckDB oracle texts are SQL and match none of these patterns.
+The DuckDB oracle side has one SQL fragment per rule that sibling
+oracles share (the ``sql_`` entries), in the family module that owns
+the rule's Spark core, and each of those is counted the same way.
 
 No module there is over MAX_MODULE_LINES raw lines, and the textops
 package's ``__init__`` only imports its family modules, so each name
@@ -72,6 +74,35 @@ RULES = {
     "first_lines_kept": (r'F\.array_position\(F\.col\("lines"\), x\)', 1),
     "stage_funnel": (r'F\.count\("\*"\) \* F\.lit\(1\.0\) / F\.max\("n"\)', 1),
     "hits_half_step": (r'\.agg\(F\.sum\("r"\)\.alias\("s"\)\)', 1),
+    # the DuckDB oracle fragments (one per rule, in the family module
+    # that owns the Spark core)
+    "sql_link_frontier": (r"LEFT JOIN pages p ON p\.url = l\.link", 1),
+    "sql_link_graph": (r"\(doc_id \+ 1\) % \{_LINK_HOSTS\} AS dst", 1),
+    "sql_graph_nodes": (r"SELECT nodes\.v FROM nodes LEFT JOIN deg ON deg\.src", 1),
+    "sql_cc_walk": (r"SELECT w\.node, e\.b AS reach FROM walk w JOIN edges e", 1),
+    "sql_pair_inter": (r"JOIN shingles sb ON sb\.doc_id = c\.b AND sb\.sh = sa\.sh", 1),
+    "sql_word_toks": (r"SELECT doc_id, w FROM \($", 1),
+    "sql_gopher_label": (r"AND n_tok BETWEEN 50 AND 100000 AS INT\) AS y", 1),
+    "sql_dsir_ratio": (r"- ln\(\(raw\.cr \+ 1\) \* 1\.0 / \(totr\.t \+ 256\)\)", 1),
+    "sql_ccnet_bounds": (r"MIN\(CASE WHEN cum >= \(2 \* n_l \+ 2\) // 3", 1),
+    "sql_quality_micro": (r"\* 1\.0 / NULLIF\(length\(text\), 0\), 0\.0\) \* 0\.5\)", 1),
+    "sql_stage_funnel": (r"ROUND\(COUNT\(\*\) \* 1\.0 / MAX\(total\.n\), 6\) AS frac", 1),
+    "sql_emb_band_sims": (r"ON q\.band = t\.band AND q\.bsig = t\.bsig", 1),
+    "sql_km_cells": (r"FROM e CROSS JOIN c\{_KM_ROUNDS\} cp\) WHERE rn = 1\)", 1),
+    "sql_pq_exact": (r"JOIN e ec ON ec\.vec_id = short\.cand\)", 1),
+    "sql_packed": (r"- n_tokens\) // \{_PACK_SEQ_TOKENS\} AS BIGINT\) AS seq_id", 1),
+    "sql_robots_rules": (r"\(0, '/private/public/', 1\)", 1),
+    "sql_robots_urls": (r"WHEN 1 THEN '/private/public/x'", 1),
+    "sql_robots_winner": (r"ORDER BY length\(r\.pattern\) DESC, r\.is_allow DESC", 1),
+    "sql_robots_verdict": (r"THEN 'allowed' ELSE 'blocked' END", 1),
+    "sql_model_dot": (r"FROM feats f JOIN w\{_LRN_ROUNDS\} w USING \(b\)", 1),
+    "sql_model_scored": (r'\{_LRN_P\.format\(x=_LRN_X\.format\(dot="sc\.dot"\)\)\} AS p$', 1),
+    "sql_decon_eval": (r"FROM documents WHERE doc_id % 20 = 0\)", 1),
+    "sql_decon_train": (r"list_slice\(arr, k, k \+ 12\)", 1),
+    # extractor/links.py; the Spark-side twins of queries.py
+    "url_resolution": (r"resolved\[:colon\]\.lower\(\)", 1),
+    "order_urls": (r'F\.lit\("\.example\.com/orders/"\)', 1),
+    "resume_done_buckets": (r'F\.col\("n_nationkey"\)\.alias\("bucket"\)', 1),
 }
 
 
